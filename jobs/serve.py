@@ -23,6 +23,9 @@ startup.
   GET /         → the search form page (reference index.html analogue)
   GET /logo.svg → the logo (MagicPath parity, RootPlugin.h:41-43)
   GET /healthz  → {"status": "ok", "n_docs": N}
+
+An engine error answers 500 with the fixed body {"error": "internal
+error"}; the exception is logged on the server ("serve" logger).
 """
 
 from __future__ import annotations
@@ -30,12 +33,15 @@ from __future__ import annotations
 import argparse
 import html as _html
 import json
+import logging
 import sys
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+log = logging.getLogger("serve")
 
 # Page styling shared by the home and results pages, condensed from the
 # reference's inline CSS (index.html / RootPlugin.h:126-195): centered
@@ -186,8 +192,11 @@ def make_handler(engine, n_docs: int):
                                    render_results_html(results))
                 else:
                     self._send(200, {"query": query, "results": results})
-            except Exception as exc:  # engine errors → 500 with message
-                self._send(500, {"error": f"{type(exc).__name__}: {exc}"})
+            except Exception:
+                # engine errors → a generic 500; the exception text (plans,
+                # paths, internals) goes to the server log, never the client
+                log.exception("search failed: %r", query)
+                self._send(500, {"error": "internal error"})
 
     return Handler
 
@@ -214,6 +223,8 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--port", type=int, default=8080)
     args = ap.parse_args()
+    logging.basicConfig(
+        format="%(asctime)s %(name)s %(levelname)s %(message)s")
     httpd = serve(args.warehouse, args.port)
     print(json.dumps({"job": "serve", "port": args.port, "status": "ready"}),
           flush=True)

@@ -100,8 +100,10 @@ class QueryEngine:
         self.num_shards = num_shards
 
     @classmethod
-    def from_catalog(cls, cat) -> "QueryEngine":
-        stats = cat.read("index_stats").collect()[0]
+    def from_catalog(cls, cat, stats=None) -> "QueryEngine":
+        """``stats``: the index_stats row, when the caller already read it."""
+        if stats is None:
+            stats = cat.read("index_stats").collect()[0]
         ns = cat.get_prop("postings_num_shards")
         postings, docmeta = cat.read("postings"), cat.read("docmeta")
         if cat.exists("tombstones"):

@@ -3,28 +3,28 @@ every query shape the exhaustive executor supports — served from the
 varbyte/block-header physical layout with shard pruning, instead of falling
 back to the row-per-posting logical postings scan.
 
-How it works (one Spark job + the top-k, like the flat WAND path):
+How it works (batch_general_candidates; ``PackedQueryEngine.search`` runs
+a single non-flat query as a batch of one):
 
-* The AST is compiled to a SLOT SPEC.  Maximal phrase-free subtrees become
-  *word slots*: the kernel evaluates them to a final float per doc (the
-  exact same ≤2-addend combine structure as plans/executor.py, so scores
-  match the logical path bit-for-bit up to libm ulps).  Phrase leaves
-  become *ptf slot pairs* (body, '@'-title): their per-doc phrase term
-  frequency is bucket-computable, but their BM25 idf needs the GLOBAL
+* Each AST is compiled to a SLOT SPEC.  Maximal phrase-free subtrees
+  become *word slots*: the kernel evaluates them to a final float per doc
+  (the exact same ≤2-addend combine structure as plans/executor.py, so
+  scores match the logical path bit-for-bit up to libm ulps).  Phrase
+  leaves become *ptf slot pairs* (body, '@'-title): their per-doc phrase
+  term frequency is bucket-computable, but their BM25 idf needs the GLOBAL
   phrase df — which no single bucket knows.
-* The per-bucket kernel (mapInPandas, one doc bucket per task — reusing
-  the flat path's range partitioning) emits one row per doc that matches
-  the whole tree: (doc_id, dl, word-slot values, ptf-slot values), plus —
-  only when phrase slots exist — one stats row per bucket carrying the
-  bucket's per-variant phrase match counts (counted over ALL docs matching
-  the phrase, not just tree survivors, mirroring the executor where a
-  phrase leaf's df is computed before the tree joins filter it).
-* Finalization is declarative: global phrase dfs = sum of the stats rows,
-  broadcast to the doc rows, and the final score is a JVM column
-  expression that re-creates the executor's exact addition tree —
-  word-slot values enter as computed floats, phrase contributions as
-  idf_col(df) * weight_col(ptf, dl) (the identical expressions the
-  executor builds), `Or` absences as 0.0 coalesce, `Not` as score-0.
+* The kernel (mapInPandas over the engine's bucket rows — one shuffle on
+  ``bucket``, shared with the flat kernels, see plans/wand.py
+  _bucket_rows) emits per (query, doc) matching the whole tree the summed
+  word-slot score plus sparse (phrase slot, ptf) pairs.
+* When phrase slots exist, a count kernel over the same bucket rows (the
+  exchange is reused) counts each phrase variant's matches per bucket —
+  over ALL docs matching the phrase, not just tree survivors, mirroring
+  the executor where a phrase leaf's df is computed before the tree joins
+  filter it.
+* Finalization is declarative: global phrase dfs = the summed counts,
+  broadcast as one row, and each phrase contribution is the JVM
+  expression idf_col(df) * weight_col(ptf, dl) the executor builds.
 
 Membership is fully bucket-local (every posting of a doc lives in the
 doc's bucket), which is what makes NOT (complement within the bucket's
@@ -47,7 +47,9 @@ from search_engine_spark.plans import bm25
 from search_engine_spark.plans.query_ast import (
     And, Expr, Not, Or, OrSyn, Phrase, Word,
 )
-from search_engine_spark.plans.wand import _weights
+from search_engine_spark.plans.wand import (
+    _bucket_allow, _bucket_tombs, _weights,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -386,28 +388,6 @@ class _BucketEval:
 # Spark plan assembly (driver side)
 # ---------------------------------------------------------------------------
 
-_OUT_SCHEMA = "doc_id long, dl long, w array<double>, p array<long>"
-
-
-def _row_tombs(brow) -> np.ndarray | None:
-    """Bucket row's tombstoned doc ids or None — shared contract with
-    plans.wand._bucket_tombs (doclens rows carry a ``tombs`` array column
-    when the warehouse has deletions; absent/NULL otherwise)."""
-    t = getattr(brow, "tombs", None)
-    if t is None or len(t) == 0:
-        return None
-    return np.asarray(t, dtype=np.int64)
-
-
-def _row_allow(brow) -> np.ndarray | None:
-    """Bucket row's ALLOWED doc ids (site-scoped search) or None — the
-    allow-list twin of _row_tombs (plans.wand._site_scoped)."""
-    a = getattr(brow, "allow", None)
-    if a is None:
-        return None
-    return np.asarray(a, dtype=np.int64)
-
-
 def _decode_rows(trows, need_pos: bool, tombs=None,
                  allow=None) -> dict[str, dict]:
     from search_engine_spark.operators import codec
@@ -441,133 +421,9 @@ def _decode_rows(trows, need_pos: bool, tombs=None,
     return decoded
 
 
-def _bucket_rows_for(engine, keys: list[str], cols: list[str], outer: bool,
-                     unscoped: bool = False):
-    """Shard-pruned packed rows for ``keys``, one self-contained row per doc
-    bucket (same shape as the flat WAND path's _bucket_rows; outer keeps
-    term-less buckets for Not complements).  ``unscoped=True`` reads the
-    UNfiltered doclens on a site-scoped engine clone — phrase dfs are
-    corpus-level statistics and must ignore the per-query allow-list
-    (Lucene-filter semantics: the filter restricts candidates, never
-    scores)."""
-    from search_engine_spark.functions.hashing import term_shard
-
-    doclens = (getattr(engine, "doclens_unscoped", None) or engine.doclens
-               ) if unscoped else engine.doclens
-    shards = sorted({term_shard(key, engine.num_shards) for key in keys})
-    rows = engine.packed.filter(
-        F.col("shard").isin(shards) & F.col("term").isin(keys)
-    ).select("bucket", *cols)
-    grouped = rows.groupBy("bucket").agg(
-        F.collect_list(F.struct(*cols)).alias("trows")
-    )
-    joined = (doclens.join(grouped, "bucket", "left") if outer
-              else grouped.join(doclens, "bucket"))
-    return joined.repartitionByRange(engine._n_buckets(), "bucket")
-
-
-def search_packed(engine, ast: Expr, k: int = 10) -> DataFrame:
-    """Top-k (doc_id, score) for an arbitrary AST over the packed index.
-    ``engine`` is a plans.wand.PackedQueryEngine (duck-typed: packed,
-    doclens, n_docs, avgdl, num_shards, k1, b, _n_buckets())."""
-    from search_engine_spark.plans.executor import _collect_keys
-
-    spec = Spec(ast)
-    keys = sorted(_collect_keys(ast))
-    need_pos = _tree_has_phrase_anywhere(ast)
-    cols = ["term", "df", "doc_ids", "tfs"] + (["pos"] if need_pos else [])
-    per_bucket_rows = _bucket_rows_for(engine, keys, cols, spec.zero_match)
-
-    wslots, root, pslots = spec.wslots, spec.root, spec.pslots
-    n_w, n_p = len(spec.wslots), len(spec.pslots)
-    n_docs, avgdl = engine.n_docs, engine.avgdl
-    k1, b = engine.k1, engine.b
-    zero_ok = spec.zero_match
-
-    kk = k
-
-    def kernel(batches):
-        for pdf in batches:
-            out_id, out_dl, out_w, out_p = [], [], [], []
-            for brow in pdf.itertuples(index=False):
-                start = int(brow.start)
-                dls = np.asarray(brow.dls, dtype=np.float64)
-                tombs = _row_tombs(brow)
-                allow = _row_allow(brow)
-                decoded = _decode_rows(brow.trows, need_pos, tombs, allow)
-                if not decoded and not zero_ok:
-                    continue
-                ev = _BucketEval(decoded, start, dls.size, dls, n_docs,
-                                 avgdl, k1, b, tombs, allow)
-                ev.seval_slot = lambda i, _ev=ev: _ev.seval(wslots[i])
-                ids, wmat, pmat = ev.keval(root, n_w, n_p)
-                if n_p == 0 and ids.size > kk:
-                    # no phrase slots ⇒ the tree is ONE word slot and its
-                    # value IS the final score, so the bucket's exact top-k
-                    # suffices — a bare-NOT complement then emits k rows per
-                    # bucket instead of (almost) the whole bucket
-                    order = np.lexsort((ids, -wmat[:, 0]))[:kk]
-                    order.sort()  # keep doc_id-ascending emit order
-                    ids, wmat, pmat = ids[order], wmat[order], pmat[order]
-                out_id.extend(ids.tolist())
-                out_dl.extend(dls[ids - start].astype(np.int64).tolist())
-                out_w.extend(wmat.tolist())
-                out_p.extend(pmat.tolist())
-            # explicit dtypes: an empty batch must still carry list-typed
-            # columns through Arrow (float64-inferred empties don't convert)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out_id, dtype="int64"),
-                "dl": pd.Series(out_dl, dtype="int64"),
-                "w": pd.Series(out_w, dtype="object"),
-                "p": pd.Series(out_p, dtype="object"),
-            })
-
-    docs = per_bucket_rows.mapInPandas(kernel, schema=_OUT_SCHEMA)
-
-    if n_p:
-        # Global phrase dfs via a SEPARATE lightweight subplan over only the
-        # phrase stems' rows (a strict subset of the main scan): counting
-        # matches per bucket needs positions but no tree evaluation, and
-        # broadcasting its 1-row aggregate keeps the main kernel single-pass
-        # (no self-referencing plan branch that would re-run it).  This is
-        # the executor's window-count trick, bucket-distributed.
-        pkeys = sorted({("@" + s if deco else s)
-                        for stems, deco, _w in pslots for s in stems})
-        pcols = ["term", "df", "doc_ids", "tfs", "pos"]
-        prows = _bucket_rows_for(engine, pkeys, pcols, outer=False,
-                                 unscoped=True)
-        pslots_ = list(pslots)
-
-        def count_kernel(batches):
-            for pdf in batches:
-                out = []
-                for brow in pdf.itertuples(index=False):
-                    dls = np.asarray(brow.dls, dtype=np.float64)
-                    tombs = _row_tombs(brow)
-                    decoded = _decode_rows(brow.trows, True, tombs)
-                    ev = _BucketEval(decoded, int(brow.start), dls.size, dls,
-                                     n_docs, avgdl, k1, b, tombs)
-                    out.append([int(ev.phrase_match(stems, deco, w)[0].size)
-                                for stems, deco, w in pslots_])
-                yield pd.DataFrame({"c": pd.Series(out, dtype="object")})
-
-        counts = (
-            prows.mapInPandas(count_kernel, schema="c array<long>")
-            .agg(*[F.sum(F.element_at("c", j + 1)).alias(f"_pdf{j}")
-                   for j in range(n_p)])
-        )
-        docs = docs.crossJoin(F.broadcast(counts))
-
-    score = _score_expr(root, n_docs, avgdl, k1, b)
-    return (
-        docs.select("doc_id", score.alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
 def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
-                             k: int = 10) -> DataFrame:
+                             k: int = 10, rows: DataFrame | None = None
+                             ) -> DataFrame:
     """(query, doc_id, score) candidate rows for MANY arbitrary ASTs —
     phrases, NOT, synonyms, mixed — in ONE kernel pass over the packed
     index, the general-AST twin of search_batch's flat dense kernel.
@@ -588,16 +444,25 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
     the final score), so a bare-NOT query emits k rows per bucket, not the
     bucket's complement.
 
+    ``engine`` is a plans.wand.PackedQueryEngine; ``rows`` are its bucket
+    rows (_bucket_rows) when the caller shares them with another kernel —
+    they must hold every key of ``items``, with ``pos`` if a tree has a
+    phrase and every bucket if a tree matches zero-posting docs.  Both the
+    main kernel and the phrase-df subplan read the one shuffle (the second
+    read reuses the exchange).
+
     Rows still need the caller's per-query global rank window — this
     returns candidates, exactly like the flat kernel path."""
     from search_engine_spark.plans.executor import _collect_keys
 
     specs = [Spec(ast) for _, ast in items]
     need_pos = any(_tree_has_phrase_anywhere(ast) for _, ast in items)
-    outer = any(sp.zero_match for sp in specs)
-    all_keys = sorted({key for _, ast in items for key in _collect_keys(ast)})
-    cols = ["term", "df", "doc_ids", "tfs"] + (["pos"] if need_pos else [])
-    per_bucket_rows = _bucket_rows_for(engine, all_keys, cols, outer)
+    if rows is None:
+        rows = engine._bucket_rows(
+            sorted({key for _, ast in items for key in _collect_keys(ast)}),
+            ["term", "df", "doc_ids", "tfs"] + (["pos"] if need_pos else []),
+            outer=any(sp.zero_match for sp in specs),
+        )
 
     # global df-slot table: one entry per distinct (stems, decorated)
     # phrase variant across the WHOLE batch; per-query local slot j maps to
@@ -623,8 +488,8 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
             for brow in pdf.itertuples(index=False):
                 start = int(brow.start)
                 dls = np.asarray(brow.dls, dtype=np.float64)
-                tombs = _row_tombs(brow)
-                allow = _row_allow(brow)
+                tombs = _bucket_tombs(brow)
+                allow = _bucket_allow(brow)
                 decoded = _decode_rows(brow.trows, need_pos, tombs, allow)
                 ev = _BucketEval(decoded, start, dls.size, dls, n_docs,
                                  avgdl, k1, b, tombs, allow)
@@ -668,7 +533,7 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                 "ptf": pd.Series(o_pt, dtype="object"),
             })
 
-    docs = per_bucket_rows.mapInPandas(
+    docs = engine._in_scope(rows).mapInPandas(
         kernel,
         schema=("qi int, doc_id long, dl long, ws double, "
                 "pidx array<int>, ptf array<long>"),
@@ -680,19 +545,18 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
         gs_list: list[tuple] = [None] * n_g
         for ps, g in gslots.items():
             gs_list[g] = ps
-        pkeys = sorted({("@" + s if deco else s)
-                        for stems, deco, _w in gs_list for s in stems})
-        pcols = ["term", "df", "doc_ids", "tfs", "pos"]
-        prows = _bucket_rows_for(engine, pkeys, pcols, outer=False,
-                                 unscoped=True)
+        pkeys = {("@" + s if deco else s)
+                 for stems, deco, _w in gs_list for s in stems}
 
         def count_kernel(batches):
             for pdf in batches:
                 out = []
                 for brow in pdf.itertuples(index=False):
                     dls = np.asarray(brow.dls, dtype=np.float64)
-                    tombs = _row_tombs(brow)
-                    decoded = _decode_rows(brow.trows, True, tombs)
+                    tombs = _bucket_tombs(brow)
+                    decoded = _decode_rows(
+                        [r for r in brow.trows if r["term"] in pkeys],
+                        True, tombs)
                     ev = _BucketEval(decoded, int(brow.start), dls.size, dls,
                                      n_docs, avgdl, k1, b, tombs)
                     out.append([int(ev.phrase_match(stems, deco, w)[0].size)
@@ -700,9 +564,12 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                 yield pd.DataFrame({"c": pd.Series(out, dtype="object")})
 
         # ONE shared count subplan for every phrase in the batch, folded to
-        # a single broadcast row carrying the global dfs as an array
+        # a single broadcast row carrying the global dfs as an array.  It
+        # reads the UNSCOPED bucket rows and ignores their allow-lists:
+        # phrase dfs are corpus-level statistics (Lucene-filter semantics —
+        # a site filter restricts candidates, never scores)
         counts = (
-            prows.mapInPandas(count_kernel, schema="c array<long>")
+            rows.mapInPandas(count_kernel, schema="c array<long>")
             .agg(*[F.sum(F.element_at("c", j + 1)).alias(f"_pdf{j}")
                    for j in range(n_g)])
             .select(F.array(*[F.col(f"_pdf{j}").cast("double")
@@ -747,30 +614,3 @@ def _tree_has_phrase_anywhere(e: Expr) -> bool:
         return (_tree_has_phrase_anywhere(e.original)
                 or any(_tree_has_phrase_anywhere(s) for s in e.synonyms))
     raise TypeError(type(e))
-
-
-def _score_expr(spec, n_docs: int, avgdl: float, k1: float, b: float):
-    """Rebuild the executor's exact addition tree as ONE column expression;
-    word-slot values are the kernel's floats, phrase contributions are the
-    identical idf_col/weight_col JVM expressions the executor uses."""
-    op = spec["op"]
-    if op == "w":
-        return F.element_at("w", spec["i"] + 1)
-    if op == "p":
-        def variant(j: int):
-            ptf = F.element_at("p", j + 1)
-            sc = (
-                bm25.idf_col(F.col(f"_pdf{j}").cast("double"), n_docs)
-                * bm25.weight_col(ptf.cast("double"), F.col("dl").cast("double"),
-                                  avgdl, k1, b)
-            )
-            return F.when(ptf > 0, sc).otherwise(F.lit(0.0))
-        return variant(spec["b"]) + variant(spec["t"])
-    if op == "andnot":
-        return _score_expr(spec["keep"], n_docs, avgdl, k1, b)
-    if op in ("and", "or"):
-        return (_score_expr(spec["l"], n_docs, avgdl, k1, b)
-                + _score_expr(spec["r"], n_docs, avgdl, k1, b))
-    if op == "not":
-        return F.lit(0.0)
-    raise ValueError(op)

@@ -85,6 +85,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        # workers import pyspark from the interpreter instead of Spark's
+        # archives, which every task would otherwise re-read (see the module)
+        .config("spark.python.daemon.module",
+                "search_engine_spark.worker_daemon")
+        # no Python call-site capture per DataFrame/Column call: it costs
+        # ~5 py4j round trips each, about 60 ms of driver time per query
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -9,7 +9,9 @@ N_TINY = 400  # tiny corpus size: covers dup urls, overlong titles, all langs
 def spark():
     from search_engine_spark.session import get_spark
 
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    # local[SPARK_GRAFT_CPUS] (the host's cores when unset), not more
+    # task threads than the host has
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()
 

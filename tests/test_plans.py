@@ -18,6 +18,15 @@ def _explain(df) -> str:
     return buf.getvalue()
 
 
+def _topk_plan(eng, query: str, synonyms: bool = False) -> str:
+    """The plan search() collects for ``query`` (its result is a local
+    relation, so the Spark plan is read from the top-k stage)."""
+    from search_engine_spark.plans.query_ast import compile_query
+
+    return _explain(
+        eng._topk(query, compile_query(query, synonyms=synonyms), 10))
+
+
 def test_packed_scan_prunes_shard_partitions(catalog, packed_engine):
     eng = packed_engine
     from search_engine_spark.operators.merge import shard_col
@@ -64,7 +73,8 @@ def test_bm25_packed_query_never_reads_pos_column(packed_engine):
     """SURVEY §7.2 'positions in separate storage', realized as parquet
     column pruning: a flat BM25 query over the packed layout must not read
     the ``pos`` byte streams (only phrase plans project that column)."""
-    plan = _explain(packed_engine.search("search engine", k=10))
+    plan = _topk_plan(packed_engine, "search engine")
+    assert "ReadSchema" in plan
     for rs_part in plan.split("ReadSchema")[1:]:
         rs = rs_part.splitlines()[0]
         assert "pos:" not in rs and "pos," not in rs, rs
@@ -88,8 +98,7 @@ def test_phrase_query_runs_on_packed_not_logical(catalog, packed_engine):
     """Phrases are first-class on the physical path: the plan must scan
     postings_packed (with shard partition pruning) and must NOT touch the
     logical postings table at all."""
-    df = packed_engine.search('"search engine"', k=10)
-    plan = _explain(df)
+    plan = _topk_plan(packed_engine, '"search engine"')
     packed_path = str(catalog.path("postings_packed"))
     logical_path = str(catalog.path("postings"))
     assert packed_path in plan
@@ -102,15 +111,23 @@ def test_phrase_query_runs_on_packed_not_logical(catalog, packed_engine):
 def test_not_and_synonym_queries_run_on_packed(catalog, packed_engine):
     logical_path = str(catalog.path("postings"))
     for q, syn in (("search - engine", False), ("connection", True)):
-        plan = _explain(packed_engine.search(q, k=10, synonyms=syn))
+        plan = _topk_plan(packed_engine, q, synonyms=syn)
         assert logical_path + "]" not in plan \
             and logical_path + "/" not in plan \
             and logical_path + "," not in plan, q
 
 
-def test_topk_docmeta_join_is_broadcast(packed_engine):
-    plan = _explain(packed_engine.search("search engine", k=10))
-    assert "BroadcastHashJoin" in plan
+def test_topk_docmeta_lookup_is_pushed_filter(packed_engine):
+    """url/title come from ONE docmeta lookup of the k winners' ids, pushed
+    to the parquet scan — no join, broadcast or shuffle — and search()
+    hands back a driver-local relation."""
+    plan = _explain(packed_engine._meta_lookup([3, 1, 2]))
+    pushed = plan.split("PushedFilters")[1].splitlines()[0]
+    assert "In(doc_id" in pushed, pushed
+    for op in ("Join", "Exchange", "Broadcast"):
+        assert op not in plan, op
+    result = _explain(packed_engine.search("search engine", k=10))
+    assert "LocalTableScan" in result and "FileScan" not in result
 
 
 def test_phrase_fallback_prunes_shard_partitions(engine):

@@ -53,6 +53,19 @@ def test_prefix_equals_explicit_or(pfx_engine):
     assert got
 
 
+def test_prefix_scan_pushes_the_term_range(pfx_engine):
+    """Prefix expansion is bounded by a range predicate on the dictionary
+    scan: ``word <= term < worf`` reaches parquet as pushed filters, and
+    the lookup runs no join, window or shuffle."""
+    plan = (pfx_engine._prefix_rows(["word"])
+            ._jdf.queryExecution().executedPlan().toString())
+    pushed = plan[plan.index("PushedFilters:"):].split("]")[0]
+    for f in ("GreaterThanOrEqual(term,word)", "LessThan(term,wore)"):
+        assert f in pushed, (f, pushed)
+    for op in ("Exchange", "Join", "Window", "StartsWith"):
+        assert op not in plan, (op, plan)
+
+
 def test_prefix_expansion_cap_picks_highest_df(pfx_engine):
     full = pfx_engine._prefix_table(["word"])["word"]
     capped = pfx_engine._prefix_table(["word"], max_expansions=2)["word"]
@@ -106,3 +119,12 @@ def test_substitute_builds_or_tree():
     ast = _substitute_prefixes(Prefix("wo"), {"wo": ["word1", "word2"]})
     assert isinstance(ast, Or)
     assert {ast.left.stem, ast.right.stem} == {"word1", "word2"}
+
+
+def test_successor_bounds_every_extension():
+    from search_engine_spark.plans.wand import _successor
+
+    assert _successor("word") == "wore"
+    assert _successor("a\U0010ffff") == "b"
+    assert _successor("\U0010ffff") is None
+    assert _successor("x\ud7ff") == "x\ue000"  # no surrogate bound

@@ -141,3 +141,29 @@ def test_html_escaping():
     assert "<script>" not in html
     assert "&lt;script&gt;alert(1)&lt;/script&gt; &amp; co" in html
     assert 'href="http://x/?a=1&amp;b=&quot;&lt;script&gt;"' in html
+
+
+def test_engine_error_body_is_generic(caplog):
+    """A failing engine answers 500 with a fixed body: the exception text
+    is logged on the server and never reaches the client."""
+    from http.server import ThreadingHTTPServer
+
+    from jobs.serve import make_handler
+
+    class Broken:
+        def search(self, query, **kw):
+            raise RuntimeError("secret: /warehouse/postings_packed broke")
+
+    httpd = ThreadingHTTPServer(("127.0.0.1", 0), make_handler(Broken(), 0))
+    t = threading.Thread(target=httpd.serve_forever, daemon=True)
+    t.start()
+    try:
+        with caplog.at_level("ERROR", logger="serve"):
+            code, body = _get(
+                f"http://127.0.0.1:{httpd.server_address[1]}/search?q=x")
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+    assert code == 500 and body == {"error": "internal error"}
+    assert any(r.exc_info and "secret" in str(r.exc_info[1])
+               for r in caplog.records)

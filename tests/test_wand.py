@@ -167,7 +167,6 @@ def test_search_batch_job_count_is_constant_in_queries(packed_engine):
     phrase-df subplan, instead of one job per query (the round-3
     driver-side bottleneck)."""
     spark = packed_engine.spark
-    packed_engine._n_buckets()          # warm the cached count job
 
     def mixed(n: int) -> list[str]:
         base = [
@@ -188,7 +187,58 @@ def test_search_batch_job_count_is_constant_in_queries(packed_engine):
         lambda: packed_engine.search_batch(mixed(40), k=5).count(),
     )
     assert large == small, (small, large)
-    # a fixed handful (kernel + phrase-df subplan + range samplings +
-    # broadcasts), NOT O(|queries|): 40 mixed queries at ~3 jobs each
+    # a fixed handful (bucket shuffle + phrase-df aggregate + broadcast +
+    # rank window), NOT O(|queries|): 40 mixed queries at ~3 jobs each
     # would be 100+
     assert small <= 20, small
+
+
+# Spark jobs one served query may launch, per query class: the bucket-row
+# shuffle and the kernel + top-k stage (two jobs under AQE) and the docmeta
+# lookup, plus the dictionary range scan for a prefix and the phrase-df
+# aggregate and its broadcast for a phrase.
+JOB_BUDGETS = [
+    ("search", {}, 3),                      # word
+    ("search engine", {}, 3),               # AND
+    ("crawler | parser", {}, 3),            # OR
+    ("search - engine", {}, 3),             # NOT
+    ("connection", {"synonyms": True}, 3),  # synonym
+    ("sear*", {}, 4),                       # prefix
+    ('"index the documents"', {}, 5),       # phrase
+]
+
+
+@pytest.mark.parametrize("query,kw,budget", JOB_BUDGETS)
+def test_search_job_count_per_class(packed_engine, query, kw, budget):
+    rows = []
+    jobs = _jobs_for(
+        packed_engine.spark, f"class-{query}",
+        lambda: rows.extend(packed_engine.search(query, k=10, **kw).collect()),
+    )
+    assert rows, query
+    assert jobs <= budget, (query, jobs)
+
+
+def test_site_search_job_count(packed_engine):
+    url = packed_engine.docmeta.select("url").first()["url"]
+    site = url.split("/")[2]
+    rows = []
+    jobs = _jobs_for(
+        packed_engine.spark, "class-site",
+        lambda: rows.extend(
+            packed_engine.search("search | w0", k=10, site=site).collect()),
+    )
+    assert rows and all(site in r["url"] for r in rows)
+    assert jobs <= 4, jobs
+
+
+@pytest.mark.parametrize("query", ["", "the of and"])
+def test_empty_query_launches_no_job(packed_engine, query):
+    """An empty or stopword-only query answers from a driver-local
+    relation: no Spark job, not even to collect nothing."""
+    out = []
+    jobs = _jobs_for(
+        packed_engine.spark, f"empty-{query}",
+        lambda: out.extend(packed_engine.search(query, k=10).collect()),
+    )
+    assert out == [] and jobs == 0
