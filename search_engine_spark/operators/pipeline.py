@@ -110,7 +110,7 @@ def run_build(
 
     if not cat.exists("postings"):
         # Hive-partitioned by term shard so every term-filtered read of the
-        # logical postings (the phrase/NOT fallback path, positions lookups)
+        # logical postings (the parity modes' executor, positions lookups)
         # prunes to the query terms' shard directories instead of scanning
         # the whole table — the same pruning the packed layout gets.
         #

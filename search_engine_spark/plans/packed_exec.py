@@ -456,7 +456,7 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
     from search_engine_spark.plans.executor import _collect_keys
 
     specs = [Spec(ast) for _, ast in items]
-    need_pos = any(_tree_has_phrase_anywhere(ast) for _, ast in items)
+    need_pos = any(has_phrase(ast) for _, ast in items)
     if rows is None:
         rows = engine._bucket_rows(
             sorted({key for _, ast in items for key in _collect_keys(ast)}),
@@ -597,20 +597,3 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
         "doc_id", score.alias("score"),
     )
 
-
-def _tree_has_phrase_anywhere(e: Expr) -> bool:
-    """Unlike has_phrase (score positions), this also sees phrases under
-    Not children, which need positions for membership."""
-    if isinstance(e, Word):
-        return False
-    if isinstance(e, Phrase):
-        return True
-    if isinstance(e, (And, Or)):
-        return (_tree_has_phrase_anywhere(e.left)
-                or _tree_has_phrase_anywhere(e.right))
-    if isinstance(e, Not):
-        return _tree_has_phrase_anywhere(e.child)
-    if isinstance(e, OrSyn):
-        return (_tree_has_phrase_anywhere(e.original)
-                or any(_tree_has_phrase_anywhere(s) for s in e.synonyms))
-    raise TypeError(type(e))

@@ -38,8 +38,8 @@ from the packed ``pos`` column), NOT (bucket-local complements), synonym
 trees (weighted OR folds) — runs on the packed GENERAL kernel
 (plans/packed_exec.py): same bucket rows, exhaustive within the bucket;
 ``search`` runs such a tree as a batch of one.  Only the heuristic parity
-modes (static/dynamic) and pre-``pos`` v2 warehouses fall back to the
-logical-postings executor (plans/executor.py).
+modes (static/dynamic) run on the logical-postings executor
+(plans/executor.py).
 """
 
 from __future__ import annotations
@@ -316,7 +316,8 @@ def topk_and_dense(stems: list[str], by_key: dict[str, dict], start: int,
 # ---------------------------------------------------------------------------
 
 def route(ast: Expr | None) -> tuple[str, list[str]] | None:
-    """('and'|'or', stems) for flat word-only trees, else None (fallback)."""
+    """('and'|'or', stems) for flat word-only trees, else None (general
+    kernel)."""
     if ast is None:
         return None
     if isinstance(ast, Word):
@@ -382,9 +383,8 @@ def _successor(prefix: str) -> str | None:
 
 
 class PackedQueryEngine:
-    """BM25 top-k over postings_packed; falls back to the exhaustive
-    executor only for the heuristic parity modes and pre-``pos``
-    warehouses."""
+    """BM25 top-k over postings_packed; hands only the heuristic parity
+    modes to the exhaustive executor (``fallback``)."""
 
     MAX_PREFIX_EXPANSIONS = 32
 
@@ -600,9 +600,8 @@ class PackedQueryEngine:
         kernel, and ALL non-flat queries (phrases/NOT/synonyms) share ONE
         general-kernel pass (packed_exec.batch_general_candidates — with
         its one phrase-df subplan); both read the same bucket rows, so the
-        batch shuffles the packed rows once.  Only pre-``pos``-warehouse
-        phrase queries fall back to the logical executor per query.  The
-        batch is total, nothing is silently dropped.
+        batch shuffles the packed rows once.  The batch is total, nothing
+        is silently dropped.
         """
         from search_engine_spark.plans import packed_exec
         from search_engine_spark.plans.executor import _collect_keys
@@ -635,14 +634,6 @@ class PackedQueryEngine:
                 plans.append((q, r[0], r[1]))
             else:
                 nonflat.append((q, ast))
-        general = [(q, ast) for q, ast in nonflat if self._can_general(ast)]
-        unservable = [(q, ast) for q, ast in nonflat
-                      if not self._can_general(ast)]
-        if unservable and self.fallback is None:
-            raise ValueError(
-                f"phrase queries {[q for q, _ in unservable]!r} need packed "
-                f"positions or the fallback engine"
-            )
         if not plans and not nonflat:
             return _local_frame(self.spark, _BATCH_FIELDS)
 
@@ -652,15 +643,12 @@ class PackedQueryEngine:
             key for _, _, stems in plans for s in stems for key in (s, "@" + s)
         }
         parts: list[DataFrame] = []
-        if plans or general:
-            need_pos = any(packed_exec._tree_has_phrase_anywhere(a)
-                           for _, a in general)
-            rows = self._bucket_rows(
-                sorted(flat_keys.union(*(_collect_keys(a)
-                                         for _, a in general))),
-                _SCORE_COLS + (["pos"] if need_pos else []),
-                outer=any(packed_exec.zero_match(a) for _, a in general),
-            )
+        need_pos = any(packed_exec.has_phrase(a) for _, a in nonflat)
+        rows = self._bucket_rows(
+            sorted(flat_keys.union(*(_collect_keys(a) for _, a in nonflat))),
+            _SCORE_COLS + (["pos"] if need_pos else []),
+            outer=any(packed_exec.zero_match(a) for _, a in nonflat),
+        )
 
         n_docs = self.n_docs
         avgdl, k1, b, kk = self.avgdl, self.k1, self.b, k
@@ -733,15 +721,9 @@ class PackedQueryEngine:
         # the packed path can serve (phrases/NOT/synonyms), over the same
         # bucket rows (one exchange); unioned pre-rank so the whole batch
         # ranks through one window
-        if general:
+        if nonflat:
             parts.append(
-                packed_exec.batch_general_candidates(self, general, k, rows)
-            )
-        for q, ast in unservable:
-            # pre-pos warehouse phrase query: logical-executor fallback
-            parts.append(
-                self.fallback.search_ast(ast, k=k)
-                .select(F.lit(q).alias("query"), "doc_id", "score")
+                packed_exec.batch_general_candidates(self, nonflat, k, rows)
             )
         candidates = functools.reduce(DataFrame.unionByName, parts)
         w = Window.partitionBy("query").orderBy(
@@ -776,15 +758,6 @@ class PackedQueryEngine:
         return (self.docmeta.filter(F.col("doc_id").isin(ids))
                 .select("doc_id", "url", "title"))
 
-    def _can_general(self, ast) -> bool:
-        """The packed general kernel serves every AST; phrase-bearing trees
-        additionally need the ``pos`` column (absent in pre-v3 warehouses,
-        where phrases fall back to the logical executor)."""
-        from search_engine_spark.plans import packed_exec
-
-        return ("pos" in self.packed.columns
-                or not packed_exec._tree_has_phrase_anywhere(ast))
-
     def _site_scoped(self, site: str) -> "PackedQueryEngine":
         """A shallow clone whose bucket rows carry per-bucket ALLOW arrays
         (doc ids whose url contains ``site``) — the Lucene-filter
@@ -810,9 +783,6 @@ class PackedQueryEngine:
             self.docmeta.filter(F.col("url").contains(site)), self.mwidth,
             "allow",
         )
-        # the logical fallback would silently IGNORE the filter — better a
-        # loud error on the rare pre-pos-warehouse path than wrong results
-        clone.fallback = None
         return clone
 
     def search(self, query: str, k: int = 10, synonyms: bool = False,
@@ -846,14 +816,6 @@ class PackedQueryEngine:
             return self.fallback.search_ast(ast, k=k, static_mode=True)
         if ast is None:
             return self._empty()
-        if not self._can_general(ast):
-            if self.fallback is None:
-                raise ValueError(
-                    "phrase query on a pre-pos packed warehouse and no "
-                    "fallback engine; rebuild the index to get packed "
-                    "positions"
-                )
-            return self.fallback.search_ast(ast, k=k)
         return self._with_meta(self._topk(query, ast, k).collect())
 
     def _topk(self, query: str, ast: Expr, k: int) -> DataFrame:

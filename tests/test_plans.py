@@ -146,7 +146,7 @@ def test_phrase_fallback_prunes_shard_partitions(engine):
 def test_logical_postings_term_sorted_for_rowgroup_pruning(catalog):
     """Within each shard file the logical postings must be term-sorted, so
     parquet row-group min/max stats prune single-term reads (the dynamic
-    parity mode and pre-pos warehouses read this table term-filtered)."""
+    parity mode reads this table term-filtered)."""
     import glob
 
     import pyarrow.parquet as pq

@@ -127,8 +127,8 @@ def test_search_batch_is_total_over_mixed_queries(packed_engine):
     mixed = [
         "search engine",               # flat AND
         "crawler | parser",            # flat OR
-        '"search engine"',             # phrase → fallback
-        "search - engine",             # NOT → fallback
+        '"search engine"',             # phrase → general kernel
+        "search - engine",             # NOT → general kernel
         "the of and",                  # stopword-only → defined-empty
     ]
     batch = packed_engine.search_batch(mixed, k=10).collect()
