@@ -806,7 +806,6 @@ SELECT n_true, n_cand, n_hit,
 FROM counts"""
 
 
-
 _EN_STOPS = "('the','a','an','and','or','of','to','in','is','it','for','on')"
 
 
@@ -2618,299 +2617,6 @@ ORDER BY logw DESC, doc_id ASC LIMIT {_DSIR_K}"""
 
 
 # ---------------------------------------------------------------------------
-# tf-idf keyword extraction (top-k terms per document)
-# ---------------------------------------------------------------------------
-
-_KEYWORDS_K = 3
-
-
-def q_tfidf_keywords(spark, sf_dir):
-    """Per-document keyword extraction: the top-_KEYWORDS_K terms of each
-    document by tf·idf (idf = ln(n_docs / df)) — the classic summary
-    feature for corpus exploration and weak labeling.
-
-    Shape at scale: the df table joins UNHINTED — its cardinality is the
-    corpus vocabulary, which is unbounded on raw web text (ids, typos,
-    hashes), so a forced broadcast would OOM the driver at 100 TB; the
-    planner/AQE broadcasts it only when its measured size allows and
-    falls back to a hash join otherwise.  n_docs is a 1-row broadcast,
-    and the rank is a window PARTITIONED BY doc_id — a hash shuffle on
-    the doc key, never a global sort; ranking compares the ROUNDED score
-    (then term) so mathematically-tied keywords order identically across
-    engines."""
-    from pyspark.sql import Window
-
-    tf = _tf(spark, sf_dir)
-    ndocs = _docs(spark, sf_dir).agg(F.count("*").alias("_n"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        tf.join(df, "term")
-        .crossJoin(F.broadcast(ndocs))
-        .withColumn("tfidf", _r4(F.col("tf") * F.log(F.col("_n") / F.col("df"))))
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _KEYWORDS_K)
-        .select("doc_id", "term", "rank", "tfidf")
-    )
-
-
-SQL_TFIDF_KEYWORDS = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id, count(*) AS tf FROM toks GROUP BY term, doc_id),
-nd AS (SELECT count(*) AS n FROM documents),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id, tf.term,
-         round(tf.tf * ln(nd.n / df.df), 4) AS tfidf
-  FROM tf JOIN df ON tf.term = df.term CROSS JOIN nd
-),
-ranked AS (
-  SELECT doc_id, term, tfidf,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY tfidf DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, term, CAST(rank AS BIGINT) AS rank, tfidf
-FROM ranked WHERE rank <= {_KEYWORDS_K}"""
-
-
-# ---------------------------------------------------------------------------
-# incremental dedup: a delta crawl batch against an existing base corpus
-# ---------------------------------------------------------------------------
-
-def q_dedup_incremental(spark, sf_dir):
-    """Crawl-refresh dedup: treat even doc_ids as the BASE corpus already
-    indexed and odd doc_ids as the incoming DELTA batch, and give every
-    delta doc a verdict — 'dup_base' (exact text already in the base),
-    'dup_delta' (a lower-id delta doc has the same text), or 'new'.
-    This is the corpus-level twin of the engine's incremental append
-    (pipeline.run_append): only 'new' docs would be extracted and merged.
-
-    Shape at scale: base membership is a vocab-of-hashes LEFT join on
-    md5 (map-side-aggregated to distinct hashes first, so the join side
-    is |unique base texts|, not |base|); within-delta first-wins is a
-    min() window over the same md5 shuffle — no self-join, no sort."""
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.md5("text").alias("h"), (F.col("doc_id") % 2).alias("_odd")
-    )
-    base_h = d.filter(F.col("_odd") == 0).select("h").distinct()
-    delta = d.filter(F.col("_odd") == 1)
-    first = F.min("doc_id").over(Window.partitionBy("h"))
-    return (
-        delta.join(base_h.withColumn("_in_base", F.lit(1)), "h", "left")
-        .withColumn("_first", first)
-        .select(
-            "doc_id",
-            F.when(F.col("_in_base") == 1, F.lit("dup_base"))
-            .when(F.col("_first") < F.col("doc_id"), F.lit("dup_delta"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-        )
-    )
-
-
-SQL_DEDUP_INCREMENTAL = """WITH d AS (
-  SELECT doc_id, md5(text) AS h, doc_id % 2 AS odd FROM documents
-),
-base_h AS (SELECT DISTINCT h FROM d WHERE odd = 0),
-delta AS (
-  SELECT doc_id, h, min(doc_id) OVER (PARTITION BY h) AS first
-  FROM d WHERE odd = 1
-)
-SELECT delta.doc_id AS doc_id,
-       CASE WHEN base_h.h IS NOT NULL THEN 'dup_base'
-            WHEN delta.first < delta.doc_id THEN 'dup_delta'
-            ELSE 'new' END AS verdict
-FROM delta LEFT JOIN base_h ON delta.h = base_h.h"""
-
-
-# ---------------------------------------------------------------------------
-# int8 embedding quantization (ANN compression path)
-# ---------------------------------------------------------------------------
-
-def q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 quantization of the embedding column — the memory
-    move that makes 10^12-vector ANN affordable (4x smaller, SIMD int8
-    dot products) — with its per-vector reconstruction error so the
-    recall cost is measurable before committing the index.
-
-    Per vector: scale = max|x| / 127, code_i = floor(x_i / scale)
-    (floor, not round: round-half ties break differently across engines),
-    rmse = sqrt(mean((x_i - code_i*scale)^2)).  Everything is JVM array
-    expressions over one narrow pass — no shuffle at all; the oracle is
-    the same arithmetic in DuckDB list lambdas."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    m = F.array_max(F.transform("e", lambda x: F.abs(x)))
-    staged = emb.withColumn(
-        "_sc", F.greatest(m, F.lit(1e-12)) / F.lit(127.0)
-    )
-    err2 = F.aggregate(
-        F.transform(
-            "e",
-            lambda x: F.pow(
-                x - F.floor(x / F.col("_sc")) * F.col("_sc"), F.lit(2.0)
-            ),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return staged.select(
-        "vec_id",
-        F.round("_sc", 6).alias("qscale"),
-        F.round(F.sqrt(err2 / F.size("e")), 6).alias("rmse"),
-    )
-
-
-SQL_EMBEDDING_QUANTIZE = """WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-staged AS (
-  SELECT vec_id, e,
-         greatest(list_aggregate(list_transform(e, x -> abs(x)), 'max'),
-                  1e-12) / 127.0 AS sc
-  FROM emb
-)
-SELECT vec_id, round(sc, 6) AS qscale,
-       round(sqrt(list_aggregate(
-                    list_transform(e, x -> pow(x - floor(x / sc) * sc, 2.0)),
-                    'sum') / len(e)), 6) AS rmse
-FROM staged"""
-
-
-def q_ann_quantized_recall(spark, sf_dir):
-    """recall@_RECALL_K of similarity search over the int8-QUANTIZED
-    index against the exact float top-K — the measured accuracy cost of
-    `embedding_quantize`'s 4x memory cut, the number an ANN user needs
-    before committing the compressed index.  Asymmetric distance (ADC,
-    the standard trick): the query stays float, only the database side
-    is dequantized codes.
-
-    Scale shape mirrors ivf_recall: _RECALL_NQ query vectors broadcast,
-    one narrow pass computes the dequantized vector + both norms per
-    candidate, both top-K ranks are windows PARTITIONED BY query — no
-    global sort; exact brute force is the ground truth by definition and
-    runs over a query sample."""
-    from pyspark.sql import Window
-
-    def nrm(c):
-        return F.sqrt(
-            F.aggregate(F.col(c), F.lit(0.0), lambda a, x: a + x * x)
-        )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    sc = F.greatest(
-        F.array_max(F.transform("e", lambda x: F.abs(x))), F.lit(1e-12)
-    ) / F.lit(127.0)
-    base = (
-        emb.withColumn("_sc", sc)
-        .withColumn(
-            "dq",
-            F.transform(
-                "e", lambda x: F.floor(x / F.col("_sc")) * F.col("_sc")
-            ),
-        )
-        .withColumn("nrm", nrm("e"))
-        .withColumn("dnrm", F.greatest(nrm("dq"), F.lit(1e-12)))
-    )
-    qs = base.filter(F.col("vec_id") < _RECALL_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("_cos").desc(), F.col("vec_id").asc()
-    )
-
-    def topk(vec_col, nrm_col):
-        dot = F.aggregate(
-            F.zip_with(vec_col, "qv", lambda a, b: a * b), F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return (
-            base.crossJoin(F.broadcast(qs))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .withColumn(
-                "_cos", F.round(dot / (F.col(nrm_col) * F.col("qnrm")), 4)
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= _RECALL_K)
-            .select("qid", "vec_id")
-        )
-
-    exact, quant = topk("e", "nrm"), topk("dq", "dnrm")
-    hits = (
-        quant.join(exact, ["qid", "vec_id"])
-        .groupBy("qid").agg(F.count("*").alias("_h"))
-    )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.round(F.coalesce(F.col("_h"), F.lit(0)).cast("double")
-                    / _RECALL_K, 4).alias("recall"),
-        )
-        .orderBy("qid")
-    )
-
-
-SQL_ANN_QUANTIZED_RECALL = f"""WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-st AS (
-  SELECT vec_id, e,
-         greatest(list_aggregate(list_transform(e, x -> abs(x)), 'max'),
-                  1e-12) / 127.0 AS sc
-  FROM emb
-),
-base AS (
-  SELECT vec_id, e, list_transform(e, x -> floor(x / sc) * sc) AS dq
-  FROM st
-),
-n AS (
-  SELECT vec_id, e, dq,
-         sqrt(list_dot_product(e, e)) AS nrm,
-         greatest(sqrt(list_dot_product(dq, dq)), 1e-12) AS dnrm
-  FROM base
-),
-qs AS (SELECT vec_id AS qid, e AS qv, nrm AS qnrm
-       FROM n WHERE vec_id < {_RECALL_NQ}),
-exact AS (
-  SELECT q.qid, f.vec_id, row_number() OVER (PARTITION BY q.qid
-    ORDER BY round(list_dot_product(f.e, q.qv) / (f.nrm * q.qnrm), 4) DESC,
-             f.vec_id ASC) AS rn
-  FROM n f CROSS JOIN qs q WHERE f.vec_id <> q.qid
-),
-quant AS (
-  SELECT q.qid, f.vec_id, row_number() OVER (PARTITION BY q.qid
-    ORDER BY round(list_dot_product(f.dq, q.qv) / (f.dnrm * q.qnrm), 4) DESC,
-             f.vec_id ASC) AS rn
-  FROM n f CROSS JOIN qs q WHERE f.vec_id <> q.qid
-),
-hits AS (
-  SELECT e.qid, count(*) AS h
-  FROM (SELECT qid, vec_id FROM exact WHERE rn <= {_RECALL_K}) e
-  JOIN (SELECT qid, vec_id FROM quant WHERE rn <= {_RECALL_K}) i
-    ON e.qid = i.qid AND e.vec_id = i.vec_id
-  GROUP BY e.qid
-)
-SELECT q.qid AS qid,
-       round(coalesce(h, 0)::DOUBLE / {_RECALL_K}, 4) AS recall
-FROM qs q LEFT JOIN hits ON q.qid = hits.qid
-ORDER BY qid"""
-
-
-# ---------------------------------------------------------------------------
 # fused IVF × int8 ANN: ADC scoring restricted to the query's nprobe cells
 # ---------------------------------------------------------------------------
 
@@ -3280,90 +2986,6 @@ SQL_HITS = _hits_sql()
 
 
 # ---------------------------------------------------------------------------
-# Spelling correction: edit-distance suggestion against the term dictionary
-# ---------------------------------------------------------------------------
-
-_SPELL_MIN_LEN = 5   # source terms for the synthetic misspelling set
-_SPELL_NQ = 10       # number of misspelled queries
-_SPELL_LEN_BAND = 2  # candidate pruning: |len(q) - len(v)| <= band
-
-
-def q_spell_correct(spark, sf_dir):
-    """Did-you-mean: for each misspelled query term, the vocabulary term
-    with minimum Levenshtein distance (ties: higher df, then lexicographic).
-
-    The misspelling set is derived deterministically from the corpus (top
-    _SPELL_NQ terms of length >= _SPELL_MIN_LEN by df, 3rd character
-    deleted) so the oracle can rebuild it.  Candidate generation is the
-    scale story: a naive all-pairs edit distance against a billion-term
-    vocabulary is quadratic, so candidates are pruned to same-first-char
-    AND length within +/-_SPELL_LEN_BAND before any distance is computed
-    (the classic dictionary-correction band; Levenshtein >= length
-    difference, and a first-char typo is rare).  The tiny query set is
-    broadcast against the df table, so the vocabulary is never shuffled.
-    Serving-path analogue of the reference's query normalization surface
-    (SURVEY §2 Q1-Q4).
-    """
-    from pyspark.sql import Window
-
-    df = _tf(spark, sf_dir).groupBy("term").agg(F.count("*").alias("df"))
-    qs = (
-        df.where(F.length("term") >= _SPELL_MIN_LEN)
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(_SPELL_NQ)
-        .select(
-            F.concat(
-                F.expr("substring(term, 1, 2)"), F.expr("substring(term, 4)")
-            ).alias("miss")
-        )
-        .distinct()
-    )
-    cand = (
-        F.broadcast(qs)
-        .join(
-            df,
-            (F.expr("substring(miss, 1, 1) = substring(term, 1, 1)"))
-            & (
-                F.abs(F.length("miss") - F.length("term"))
-                <= _SPELL_LEN_BAND
-            ),
-        )
-        .withColumn("dist", F.levenshtein("miss", "term"))
-    )
-    w = Window.partitionBy("miss").orderBy(
-        F.asc("dist"), F.desc("df"), F.asc("term")
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("miss", F.col("term").alias("suggestion"), "dist", "df")
-    )
-
-
-SQL_SPELL_CORRECT = f"""WITH {_TOKS_SQL.strip()},
-tf AS (SELECT term, doc_id FROM toks GROUP BY term, doc_id),
-df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-qs AS (
-  SELECT DISTINCT substr(term, 1, 2) || substr(term, 4) AS miss FROM (
-    SELECT term, row_number() OVER (ORDER BY df DESC, term ASC) AS rn
-    FROM df WHERE length(term) >= {_SPELL_MIN_LEN}
-  ) WHERE rn <= {_SPELL_NQ}
-),
-cand AS (
-  SELECT q.miss, d.term, d.df, levenshtein(q.miss, d.term) AS dist
-  FROM qs q JOIN df d
-    ON substr(q.miss, 1, 1) = substr(d.term, 1, 1)
-   AND abs(length(q.miss) - length(d.term)) <= {_SPELL_LEN_BAND}
-)
-SELECT miss, term AS suggestion, dist, df FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY miss ORDER BY dist ASC, df DESC, term ASC) AS rn
-  FROM cand
-) WHERE rn = 1
-ORDER BY miss"""
-
-
-# ---------------------------------------------------------------------------
 # CCNet-style paragraph-level exact dedup (aligned chunk hashing)
 # ---------------------------------------------------------------------------
 
@@ -3426,50 +3048,6 @@ flagged AS (
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_par,
        CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
 FROM flagged GROUP BY doc_id ORDER BY doc_id"""
-
-
-# ---------------------------------------------------------------------------
-# Query autocomplete: per-prefix top-k completions by document frequency
-# ---------------------------------------------------------------------------
-
-_PFX_LEN = 1  # prefix length (tiny synthetic vocab; real deploys use 1..6)
-_PFX_K = 3    # completions per prefix
-
-
-def q_prefix_suggest(spark, sf_dir):
-    """Autocomplete table: for every _PFX_LEN-char prefix in the term
-    dictionary, the top-_PFX_K completions by df (ties lexicographic).
-
-    This is the offline build of a suggestion index — at scale the df
-    aggregation is the standard term shuffle and the per-prefix top-k is
-    a window over the (small) vocabulary keyed by prefix; the serving
-    side would range-scan the materialized (prefix, rnk) table.  Pairs
-    with the reference's search-entry surface (Q9): real engines serve
-    suggestions from exactly this precomputed shape.
-    """
-    from pyspark.sql import Window
-
-    df = _tf(spark, sf_dir).groupBy("term").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("prefix").orderBy(F.desc("df"), F.asc("term"))
-    return (
-        df.withColumn("prefix", F.substring("term", 1, _PFX_LEN))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= _PFX_K)
-        .select("prefix", "term", "df", "rnk")
-    )
-
-
-SQL_PREFIX_SUGGEST = f"""WITH {_TOKS_SQL.strip()},
-tf AS (SELECT term, doc_id FROM toks GROUP BY term, doc_id),
-df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term)
-SELECT prefix, term, df, rnk FROM (
-  SELECT substr(term, 1, {_PFX_LEN}) AS prefix, term, df,
-         row_number() OVER (
-           PARTITION BY substr(term, 1, {_PFX_LEN})
-           ORDER BY df DESC, term ASC) AS rnk
-  FROM df
-) WHERE rnk <= {_PFX_K}
-ORDER BY prefix, rnk"""
 
 
 # ---------------------------------------------------------------------------
@@ -3656,81 +3234,6 @@ ORDER BY iv.interval_id"""
 
 
 # ---------------------------------------------------------------------------
-# Count-min sketch heavy hitters (deterministic, oracle-mirrored)
-# ---------------------------------------------------------------------------
-
-_CMS_D = 4    # sketch depth (independent hash rows)
-_CMS_W = 64   # sketch width (counters per row)
-_CMS_DEN = 200  # heavy-hitter threshold: est >= total_tokens / _CMS_DEN
-
-
-def q_cms_heavy_hitters(spark, sf_dir):
-    """Heavy hitters from a count-min sketch (Cormode-Muthukrishnan):
-    terms whose CMS count estimate clears total/_CMS_DEN, with the
-    (over-)estimate and the true count side by side.
-
-    The point at 10^12 docs: the sketch is _CMS_D x _CMS_W counters of
-    FIXED size regardless of vocabulary — each hash row is a groupBy on
-    bucket (map-side combinable to _CMS_W partials per task), versus the
-    vocabulary-sized state of an exact count.  The sketch is fully
-    deterministic (md5-prefix bucket hashing, integer counters), so the
-    DuckDB oracle reproduces it counter-for-counter — the estimate
-    itself is compared, not just the survivor set.  est >= true always
-    (CMS never undercounts); the threshold compare stays in integers
-    (est * _CMS_DEN >= total).
-    """
-    ct = _tokens(spark, sf_dir).groupBy("term").agg(
-        F.count("*").alias("ct")
-    )
-    total = ct.agg(F.sum("ct").alias("total"))
-    rows = ct.withColumn(
-        "d", F.explode(F.array(*[F.lit(i) for i in range(_CMS_D)]))
-    ).withColumn(
-        "bucket",
-        F.conv(
-            F.substring(
-                F.md5(F.concat("term", F.lit("#"), F.col("d"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _CMS_W,
-    )
-    sketch = rows.groupBy("d", "bucket").agg(F.sum("ct").alias("c"))
-    return (
-        rows.join(sketch, ["d", "bucket"])
-        .groupBy("term", "ct")
-        .agg(F.min("c").alias("est"))
-        .crossJoin(F.broadcast(total))
-        .where(F.col("est") * _CMS_DEN >= F.col("total"))
-        .select("term", "ct", "est")
-    )
-
-
-SQL_CMS_HEAVY_HITTERS = f"""WITH {_TOKS_SQL.strip()},
-ct AS (SELECT term, CAST(count(*) AS BIGINT) AS ct FROM toks GROUP BY term),
-total AS (SELECT sum(ct) AS total FROM ct),
-rows_ AS (
-  SELECT term, ct, d,
-         CAST(('0x' || substr(md5(term || '#' || d), 1, 8))::UBIGINT
-              % {_CMS_W} AS BIGINT) AS bucket
-  FROM ct CROSS JOIN (SELECT unnest(range({_CMS_D})) AS d)
-),
-sketch AS (
-  SELECT d, bucket, CAST(sum(ct) AS BIGINT) AS c
-  FROM rows_ GROUP BY d, bucket
-),
-est AS (
-  SELECT r.term, r.ct, CAST(min(s.c) AS BIGINT) AS est
-  FROM rows_ r JOIN sketch s ON r.d = s.d AND r.bucket = s.bucket
-  GROUP BY r.term, r.ct
-)
-SELECT term, ct, est FROM est CROSS JOIN total
-WHERE est * {_CMS_DEN} >= total
-ORDER BY term"""
-
-
-# ---------------------------------------------------------------------------
 # Zone-weighted BM25 (BM25F-lite): title positions boost term frequency
 # ---------------------------------------------------------------------------
 
@@ -3814,361 +3317,6 @@ scored AS (
 )
 {_topk_sql("SELECT doc_id, round(sum(score), 4) AS score"
            " FROM scored GROUP BY doc_id")}"""
-
-
-# ---------------------------------------------------------------------------
-# URL canonicalization (crawler frontier dedup key)
-# ---------------------------------------------------------------------------
-
-_URL_RE = (
-    r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/:?#]+)(?::([0-9]+))?"
-    r"([^?#]*)(?:\?([^#]*))?(?:#(.*))?$"
-)
-
-
-def q_url_normalize(spark, sf_dir):
-    """URL canonicalization — the normalization a crawl frontier applies
-    before URL-dedup (SURVEY §2 S2; the reference dedups exact url
-    strings, so equivalent-but-differently-written URLs crawl twice):
-    lowercase scheme+host, strip a leading www., drop the default port
-    for the scheme, drop the fragment, and sort query parameters.  Path
-    case is preserved (paths are case-sensitive).
-
-    The messy input URL is synthesized deterministically from doc_id in
-    BOTH engines (mixed-case scheme/host, default and non-default ports,
-    unsorted params, fragments), then parsed back with one RFC-3986-ish
-    regex that means the same thing in Java regex and RE2.  Pure
-    string/array built-ins per row — no UDF, no shuffle at all: at
-    10^12 URLs this runs entirely inside the scan stage.
-    """
-    d = _docs(spark, sf_dir).select("doc_id")
-    messy = d.select(
-        "doc_id",
-        F.concat(
-            F.when(F.col("doc_id") % 2 == 0, F.lit("HTTP")).otherwise(
-                F.lit("https")
-            ),
-            F.lit("://WWW.Site"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit(".Example.COM"),
-            F.when(F.col("doc_id") % 3 == 0, F.lit(":80"))
-            .when(F.col("doc_id") % 3 == 1, F.lit(":443"))
-            .otherwise(F.lit(":8080")),
-            F.lit("/Path/"),
-            F.col("doc_id").cast("string"),
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(
-                    F.lit("?z=1&a=2&m="), (F.col("doc_id") % 5).cast("string")
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 2 == 0,
-                F.concat(F.lit("#sec"), (F.col("doc_id") % 4).cast("string")),
-            ).otherwise(F.lit("")),
-        ).alias("url"),
-    )
-    scheme = F.lower(F.regexp_extract("url", _URL_RE, 1))
-    host0 = F.lower(F.regexp_extract("url", _URL_RE, 2))
-    host = F.regexp_replace(host0, r"^www\.", "")
-    port = F.regexp_extract("url", _URL_RE, 3)
-    path = F.regexp_extract("url", _URL_RE, 4)
-    q = F.regexp_extract("url", _URL_RE, 5)
-    default_port = (
-        (scheme == "http") & (port == "80")
-    ) | ((scheme == "https") & (port == "443"))
-    return messy.select(
-        "doc_id",
-        "url",
-        F.concat(
-            scheme,
-            F.lit("://"),
-            host,
-            F.when(
-                (port == "") | default_port, F.lit("")
-            ).otherwise(F.concat(F.lit(":"), port)),
-            path,
-            F.when(q == "", F.lit("")).otherwise(
-                F.concat(
-                    F.lit("?"), F.array_join(F.sort_array(F.split(q, "&")), "&")
-                )
-            ),
-        ).alias("norm"),
-    )
-
-
-SQL_URL_NORMALIZE = f"""WITH messy AS (
-  SELECT doc_id,
-         (CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'https' END)
-         || '://WWW.Site' || (doc_id % 7) || '.Example.COM'
-         || (CASE doc_id % 3 WHEN 0 THEN ':80' WHEN 1 THEN ':443'
-             ELSE ':8080' END)
-         || '/Path/' || doc_id
-         || (CASE WHEN doc_id % 3 = 0
-             THEN '?z=1&a=2&m=' || (doc_id % 5) ELSE '' END)
-         || (CASE WHEN doc_id % 2 = 0
-             THEN '#sec' || (doc_id % 4) ELSE '' END) AS url
-  FROM documents
-),
-parsed AS (
-  SELECT doc_id, url,
-         lower(regexp_extract(url, '{_URL_RE}', 1)) AS scheme,
-         lower(regexp_extract(url, '{_URL_RE}', 2)) AS host0,
-         regexp_extract(url, '{_URL_RE}', 3) AS port,
-         regexp_extract(url, '{_URL_RE}', 4) AS path,
-         regexp_extract(url, '{_URL_RE}', 5) AS q
-  FROM messy
-)
-SELECT doc_id, url,
-       scheme || '://'
-       || (CASE WHEN host0 LIKE 'www.%' THEN substr(host0, 5) ELSE host0 END)
-       || (CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
-                 OR (scheme = 'https' AND port = '443')
-           THEN '' ELSE ':' || port END)
-       || path
-       || (CASE WHEN q = '' THEN ''
-           ELSE '?' || array_to_string(list_sort(str_split(q, '&')), '&')
-           END) AS norm
-FROM parsed ORDER BY doc_id"""
-
-
-# ---------------------------------------------------------------------------
-# RM1 pseudo-relevance-feedback query expansion (two-pass retrieval)
-# ---------------------------------------------------------------------------
-
-_RM1_Q = "merge"   # seed query term
-_RM1_FB = 10       # feedback depth (top docs of pass 1)
-_RM1_K = 3         # expansion terms
-_RM1_W = 0.4       # expansion-term weight in the final mix
-
-
-def q_rm1_expansion(spark, sf_dir):
-    """Pseudo-relevance-feedback expansion (RM1 shape, Lavrenko-Croft):
-    retrieve top-_RM1_FB docs for the seed term, pick the _RM1_K
-    strongest non-seed terms of that feedback set by feedback-tf x idf,
-    then rescore the corpus with the seed at weight 1.0 and the
-    expansion terms at _RM1_W — the reference's synonym fallback
-    (SURVEY §2 R6, weight 0.4) generalized to corpus-derived synonyms.
-
-    Two-pass shape at scale: pass 1 touches only the seed term's
-    postings; the feedback set (10 doc ids) and the candidate vocabulary
-    (terms of 10 docs) broadcast, so expansion-term selection never
-    shuffles the corpus; pass 2 touches only the <=1+_RM1_K selected
-    terms' postings via a broadcast term-list join (the term list is
-    data-dependent, so it is a join, not an IN-filter — same pruning
-    either way).  Every ranking cutoff compares ROUNDED scores with id/
-    term tiebreaks so the fb set and expansion picks are identical
-    across engines.
-    """
-    tf_all = _tf(spark, sf_dir)
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(
-        F.count("*").alias("_n_docs"), F.avg("dl").alias("_avgdl")
-    )
-    s0 = _scored(spark, sf_dir, [_RM1_Q]).filter(F.col("term") == _RM1_Q)
-    fb = (
-        s0.select("doc_id", _r4("score").alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_RM1_FB)
-        .select("doc_id")
-    )
-    cand = (
-        tf_all.join(F.broadcast(fb), "doc_id")
-        .where(F.col("term") != _RM1_Q)
-        .groupBy("term")
-        .agg(F.sum("tf").alias("ftf"))
-    )
-    df_cand = (
-        tf_all.join(F.broadcast(cand.select("term")), "term")
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-    )
-    exp = (
-        cand.join(df_cand, "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "term",
-            _r4(
-                F.col("ftf") * F.log(F.col("_n_docs") / F.col("df"))
-            ).alias("wgt"),
-        )
-        .orderBy(F.col("wgt").desc(), F.col("term").asc())
-        .limit(_RM1_K)
-        .select("term", F.lit(_RM1_W).alias("qw"))
-    )
-    qterms = exp.unionByName(
-        spark.createDataFrame([(_RM1_Q, 1.0)], "term string, qw double")
-    )
-    tf_sel = tf_all.join(F.broadcast(qterms), "term")
-    df_sel = tf_sel.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        tf_sel.join(F.broadcast(df_sel), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "score",
-            bm25.idf_col(F.col("df"), F.col("_n_docs").cast("double"))
-            * bm25.weight_col(F.col("tf"), F.col("dl"), F.col("_avgdl")),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(_r4(F.sum(F.col("qw") * F.col("score"))).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_RM1_EXPANSION = f"""WITH {_BM25_CORE_SQL},
-fb AS (
-  SELECT doc_id FROM (
-    SELECT doc_id, round(score, 4) AS s FROM scored
-    WHERE term = '{_RM1_Q}'
-    ORDER BY s DESC, doc_id ASC LIMIT {_RM1_FB})
-),
-cand AS (
-  SELECT tf.term, sum(tf.tf) AS ftf
-  FROM tf JOIN fb ON tf.doc_id = fb.doc_id
-  WHERE tf.term <> '{_RM1_Q}' GROUP BY tf.term
-),
-wgt AS (
-  SELECT c.term, round(c.ftf * ln(stats.n_docs / df.df), 4) AS wgt
-  FROM cand c JOIN df ON c.term = df.term CROSS JOIN stats
-),
-exp AS (
-  SELECT term, {_RM1_W} AS qw FROM (
-    SELECT term, wgt FROM wgt ORDER BY wgt DESC, term ASC LIMIT {_RM1_K})
-),
-qterms AS (SELECT * FROM exp UNION ALL SELECT '{_RM1_Q}', 1.0)
-{_topk_sql(
-    "SELECT s.doc_id, round(sum(q.qw * s.score), 4) AS score "
-    "FROM scored s JOIN qterms q ON s.term = q.term GROUP BY s.doc_id")}"""
-
-
-# ---------------------------------------------------------------------------
-# HyperLogLog distinct-count sketch (deterministic, oracle-mirrored)
-# ---------------------------------------------------------------------------
-
-_HLL_B = 6                  # register-index bits
-_HLL_M = 1 << _HLL_B        # 64 registers
-_HLL_HASH_BITS = 60         # 15 md5 hex chars -> fits signed 64-bit
-_HLL_REST_BITS = _HLL_HASH_BITS - _HLL_B
-
-
-def q_hll_distinct(spark, sf_dir):
-    """HyperLogLog distinct count (Flajolet et al.) of the corpus's
-    (term, doc_id) posting keys, next to the exact count.
-
-    The 100 TB point: distinct-counting with a groupBy needs state
-    proportional to the key cardinality; HLL needs _HLL_M integer
-    registers TOTAL, and each register is a max-aggregation — map-side
-    combinable to _HLL_M rows per task, then one tiny reduce (this is
-    exactly what approx_count_distinct does inside Spark; building it
-    from relational ops makes the state/shuffle shape visible and gives
-    the oracle something to reproduce).  Everything before the final
-    estimate is INTEGER-exact in both engines: the 60-bit hash comes
-    from 15 md5 hex chars, the register is the low _HLL_B bits, and the
-    leading-zero rank is derived from length(bin(rest)) — both engines'
-    bin() renders without leading zeros, so no float log enters.  The
-    register sum adds dyadic rationals (2^-rho), and the one estimate
-    division is rounded to 4 decimals.  Small-range (linear counting)
-    correction applies when registers are empty; the 32-bit large-range
-    correction is irrelevant at a 60-bit hash and is omitted.
-    """
-    tf = _tf(spark, sf_dir)
-    hashed = tf.select(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        "term", F.lit("|"), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h")
-    )
-    parts = hashed.select(
-        (F.col("h") % _HLL_M).alias("reg"),
-        F.shiftright("h", _HLL_B).alias("rest"),
-    )
-    rho = F.when(
-        F.col("rest") == 0, F.lit(_HLL_REST_BITS + 1)
-    ).otherwise(_HLL_REST_BITS + 1 - F.length(F.bin("rest")))
-    regs = (
-        parts.withColumn("rho", rho)
-        .groupBy("reg")
-        .agg(F.max("rho").alias("maxrho"))
-    )
-    allregs = (
-        spark.range(_HLL_M)
-        .select(F.col("id").alias("reg"))
-        .join(regs, "reg", "left")
-        .select(F.coalesce("maxrho", F.lit(0)).alias("maxrho"))
-    )
-    n_exact = tf.agg(F.count("*").alias("n_exact"))
-    agg = allregs.agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("maxrho"))).alias("s"),
-        F.sum(F.when(F.col("maxrho") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("zeros"),
-    )
-    alpha = 0.7213 / (1.0 + 1.079 / _HLL_M)
-    raw = F.lit(alpha * _HLL_M * _HLL_M) / F.col("s")
-    est = F.when(
-        (raw <= 2.5 * _HLL_M) & (F.col("zeros") > 0),
-        F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / F.col("zeros")),
-    ).otherwise(raw)
-    return (
-        agg.crossJoin(F.broadcast(n_exact))
-        .select("n_exact", F.round(est, 4).alias("est"), "zeros")
-    )
-
-
-SQL_HLL_DISTINCT = f"""WITH {_TOKS_SQL.strip()},
-tf AS (SELECT term, doc_id FROM toks GROUP BY term, doc_id),
-hashed AS (
-  SELECT CAST(('0x' || substr(md5(term || '|' || doc_id), 1, 15))::UBIGINT
-              AS BIGINT) AS h
-  FROM tf
-),
-parts AS (
-  SELECT h % {_HLL_M} AS reg, h // {_HLL_M} AS rest FROM hashed
-),
-regs AS (
-  SELECT reg,
-         max(CASE WHEN rest = 0 THEN {_HLL_REST_BITS + 1}
-             ELSE {_HLL_REST_BITS + 1} - length(bin(rest)) END) AS maxrho
-  FROM parts GROUP BY reg
-),
-allregs AS (
-  SELECT coalesce(regs.maxrho, 0) AS maxrho
-  FROM range({_HLL_M}) t(reg) LEFT JOIN regs ON t.reg = regs.reg
-),
-agg AS (
-  SELECT sum(pow(2.0, -maxrho)) AS s,
-         CAST(sum(CASE WHEN maxrho = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS zeros
-  FROM allregs
-),
-ne AS (SELECT CAST(count(*) AS BIGINT) AS n_exact FROM tf),
-raw AS (
-  SELECT s, zeros,
-         CAST('{0.7213 / (1.0 + 1.079 / _HLL_M) * _HLL_M * _HLL_M!r}'
-              AS DOUBLE) / s AS est_raw
-  FROM agg
-)
-SELECT ne.n_exact,
-       round(CASE WHEN est_raw <= {2.5 * _HLL_M} AND zeros > 0
-              THEN {float(_HLL_M)} * ln({float(_HLL_M)} / zeros)
-              ELSE est_raw END, 4) AS est,
-       zeros
-FROM raw CROSS JOIN ne"""
 
 
 # ---------------------------------------------------------------------------
@@ -4407,130 +3555,6 @@ SELECT CAST((SELECT count(*) FROM tri) AS BIGINT) AS n_triangles,
 
 
 SQL_TRIANGLE_COUNT = _triangle_sql()
-
-
-# ---------------------------------------------------------------------------
-# TextRank keywords (PageRank over the word co-occurrence graph)
-# ---------------------------------------------------------------------------
-
-_TR_W = 2        # co-occurrence window (positions within distance <= 2)
-_TR_ITERS = 8
-_TR_DAMP = 0.85
-_TR_K = 10
-
-
-def q_textrank_keywords(spark, sf_dir):
-    """TextRank (Mihalcea-Tarau): corpus-level keyword ranking as damped
-    PageRank over the word co-occurrence graph — terms are nodes, an
-    undirected edge links terms that appear within _TR_W positions of
-    each other in any document.
-
-    The graph build is the interesting shuffle: a per-doc positional
-    self-join banded by |delta pos| <= _TR_W (each token joins at most
-    2*_TR_W others — linear in corpus size, co-partitioned by doc_id),
-    then DISTINCT canonical pairs keyed by term.  The iteration reuses
-    the q_pagerank shape: symmetrized edges mean every node has
-    out-degree >= 1 (no dangling-mass branch), so each round is one
-    join + one aggregation and lineage stays linear.  Top-_TR_K by
-    ROUNDED rank (term tiebreak) so both engines pick identical
-    keywords.  Complements q_tfidf_keywords: frequency-free, purely
-    structural importance.
-    """
-    toks = _tokens(spark, sf_dir)
-    t2 = toks.select(
-        F.col("doc_id").alias("d2"),
-        F.col("term").alias("term2"),
-        F.col("pos").alias("pos2"),
-    )
-    pairs = (
-        toks.join(
-            t2,
-            (F.col("doc_id") == F.col("d2"))
-            & (F.col("pos2") > F.col("pos"))
-            & (F.col("pos2") <= F.col("pos") + _TR_W)
-            & (F.col("term") != F.col("term2")),
-        )
-        .select(
-            F.least("term", "term2").alias("lo"),
-            F.greatest("term", "term2").alias("hi"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("lo").alias("src"), F.col("hi").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
-    )
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    n1 = nodes.agg(F.count("*").alias("n"))
-    with_n = nodes.crossJoin(F.broadcast(n1))
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    e = edges.join(deg, "src")
-    ranks = with_n.select("id", (F.lit(1.0) / F.col("n")).alias("r"))
-    for _ in range(_TR_ITERS):
-        contribs = (
-            ranks.join(e, ranks["id"] == e["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") / F.col("deg")).alias("c"))
-        )
-        ranks = with_n.join(
-            contribs, with_n["id"] == contribs["dst"], "left"
-        ).select(
-            "id",
-            (
-                F.lit(1.0 - _TR_DAMP) / F.col("n")
-                + F.lit(_TR_DAMP) * F.coalesce(F.col("c"), F.lit(0.0))
-            ).alias("r"),
-        )
-    return (
-        ranks.select(
-            F.col("id").alias("term"), F.round("r", 8).alias("rank")
-        )
-        .orderBy(F.col("rank").desc(), F.col("term").asc())
-        .limit(_TR_K)
-    )
-
-
-def _textrank_sql() -> str:
-    parts = [
-        f"""WITH {_TOKS_SQL.strip()},
-pairs AS (
-  SELECT DISTINCT least(a.term, b.term) AS lo,
-                  greatest(a.term, b.term) AS hi
-  FROM toks a JOIN toks b
-    ON a.doc_id = b.doc_id
-   AND b.pos > a.pos AND b.pos <= a.pos + {_TR_W}
-   AND a.term <> b.term
-),
-edges AS (
-  SELECT lo AS src, hi AS dst FROM pairs
-  UNION ALL SELECT hi AS src, lo AS dst FROM pairs
-),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-nn AS (SELECT count(*) AS n FROM nodes),
-deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-e AS (SELECT edges.src, edges.dst, deg.deg FROM edges JOIN deg USING (src)),
-r0 AS (SELECT id, CAST(1 AS DOUBLE) / nn.n AS r FROM nodes CROSS JOIN nn)"""
-    ]
-    for t in range(1, _TR_ITERS + 1):
-        parts.append(
-            f""",
-c{t} AS (SELECT e.dst AS id, sum(r.r / e.deg) AS c
-         FROM r{t - 1} r JOIN e ON r.id = e.src GROUP BY e.dst),
-r{t} AS (SELECT nodes.id,
-                CAST({1.0 - _TR_DAMP} AS DOUBLE) / nn.n
-                + CAST({_TR_DAMP} AS DOUBLE) * coalesce(c{t}.c, 0) AS r
-         FROM nodes CROSS JOIN nn LEFT JOIN c{t} ON nodes.id = c{t}.id)"""
-        )
-    parts.append(
-        f"""
-SELECT id AS term, round(r, 8) AS rank FROM r{_TR_ITERS}
-ORDER BY rank DESC, term ASC LIMIT {_TR_K}"""
-    )
-    return "".join(parts)
-
-
-SQL_TEXTRANK_KEYWORDS = _textrank_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -4900,103 +3924,6 @@ SELECT id AS doc_id, CAST(lbl AS BIGINT) AS community FROM l{_LPA_ITERS}""")
 SQL_LABEL_PROPAGATION = _lpa_sql()
 
 
-_FRONTIER_DELAY_S = 5
-_FRONTIER_K = 100
-
-
-def q_crawl_frontier(spark, sf_dir):
-    """Politeness-scheduled crawl frontier: the reference's crawler
-    rate-limits per host (one in-flight fetch per host, see SURVEY §2
-    S1); modeled here as per-host serialization — within each `source`
-    host, urls are ordered by priority (n_chars DESC, the 'longer page
-    = richer hub' heuristic, id tie-break) and the i-th url of a host
-    becomes fetchable at slot i*_FRONTIER_DELAY_S seconds.  Returns the
-    next _FRONTIER_K fetches across all hosts, earliest slot first.
-
-    Scale shape: the per-host ranking is a window partitioned BY HOST —
-    hosts hash-distribute across executors and no host's url list is
-    web-scale, so the sort is bounded per partition; the final next-K is
-    a distributed TakeOrdered, never a global sort.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc()
-    )
-    sched = _docs(spark, sf_dir).select(
-        "doc_id",
-        "source",
-        "n_chars",
-        ((F.row_number().over(w) - F.lit(1)) * F.lit(_FRONTIER_DELAY_S))
-        .cast("long")
-        .alias("slot_s"),
-    )
-    return (
-        sched.orderBy(
-            F.col("slot_s").asc(), F.col("n_chars").desc(), F.col("doc_id").asc()
-        )
-        .limit(_FRONTIER_K)
-        .select("doc_id", "source", "slot_s")
-    )
-
-
-SQL_CRAWL_FRONTIER = f"""WITH sched AS (
-  SELECT doc_id, source, n_chars,
-         CAST((row_number() OVER (PARTITION BY source
-                                  ORDER BY n_chars DESC, doc_id ASC) - 1)
-              * {_FRONTIER_DELAY_S} AS BIGINT) AS slot_s
-  FROM documents
-)
-SELECT doc_id, source, slot_s FROM sched
-ORDER BY slot_s ASC, n_chars DESC, doc_id ASC LIMIT {_FRONTIER_K}"""
-
-
-_SNIPPET_TERM = "merge"
-_SNIPPET_CTX = 30    # chars of context before the hit
-_SNIPPET_LEN = 60    # total snippet length
-
-
-def q_snippet_extract(spark, sf_dir):
-    """Query-biased result snippets: for documents containing the query
-    term, extract a _SNIPPET_LEN-char window starting _SNIPPET_CTX chars
-    before the first (case-insensitive) occurrence — the result-page
-    snippet the reference's BuildSearchHTML would show next to each hit.
-
-    Scale shape: one narrow projection over the documents scan (locate +
-    substring are JVM string expressions inside whole-stage codegen; no
-    shuffle until the final TakeOrdered-10), and only the first 60+30
-    chars around the hit ever leave the scan — never the full text.
-    """
-    p = F.locate(_SNIPPET_TERM, F.lower(F.col("text")))
-    hit = (
-        _docs(spark, sf_dir)
-        .select("doc_id", p.alias("pos"), "text")
-        .filter(F.col("pos") > 0)
-    )
-    start = F.greatest(F.lit(1), F.col("pos") - F.lit(_SNIPPET_CTX))
-    return (
-        hit.select(
-            "doc_id",
-            F.col("pos").cast("long").alias("pos"),
-            F.col("text").substr(start, F.lit(_SNIPPET_LEN)).alias("snippet"),
-        )
-        .orderBy(F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_SNIPPET_EXTRACT = f"""WITH hit AS (
-  SELECT doc_id,
-         CAST(strpos(lower(text), '{_SNIPPET_TERM}') AS BIGINT) AS pos,
-         text
-  FROM documents WHERE strpos(lower(text), '{_SNIPPET_TERM}') > 0
-)
-SELECT doc_id, pos,
-       substr(text, CAST(greatest(1, pos - {_SNIPPET_CTX}) AS INTEGER),
-              {_SNIPPET_LEN}) AS snippet
-FROM hit ORDER BY doc_id ASC LIMIT 10"""
-
-
 def q_anchor_text(spark, sf_dir):
     """Anchor-text aggregation per link target — the classic web-search
     signal (the reference's LinkEmitter S6 emits (url, anchor) pairs for
@@ -5058,167 +3985,6 @@ inl AS (SELECT dst, CAST(count(*) AS BIGINT) AS n_inlinks FROM ea GROUP BY dst)
 SELECT i.dst AS doc_id, i.n_inlinks, t.anchor AS top_anchor,
        CAST(t.c AS BIGINT) AS anchor_n
 FROM inl i JOIN top t ON i.dst = t.dst"""
-
-
-_CROWD_PER_HOST = 2
-
-
-def q_host_crowding(spark, sf_dir):
-    """Result diversification by host-crowding (the classic web-SERP rule:
-    at most _CROWD_PER_HOST results per host): BM25 candidates for
-    'merge' are ranked within their host, hosts keep their best 2, then
-    the global top-10 is taken from the survivors.
-
-    Scale shape: the per-host cap is a window partitioned by host over
-    ONLY the term's scored postings (the query-term filter is already
-    below the tf agg in _scored), and the final cut is a distributed
-    TakeOrdered — so diversification adds one bounded window, never a
-    global sort.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, ["merge"]).select(
-        "doc_id", _r4("score").alias("score")
-    )
-    hosts = _docs(spark, sf_dir).select("doc_id", "source")
-    w = Window.partitionBy("source").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        s.join(hosts, "doc_id")
-        .select(
-            "doc_id", "source", "score", F.row_number().over(w).alias("rn")
-        )
-        .filter(F.col("rn") <= _CROWD_PER_HOST)
-        .select("doc_id", "source", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_HOST_CROWDING = f"""WITH {_BM25_CORE_SQL},
-cand AS (
-  SELECT s.doc_id, d.source, round(s.score, 4) AS score
-  FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-  WHERE s.term = 'merge'
-),
-ranked AS (
-  SELECT doc_id, source, score,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY score DESC, doc_id ASC) AS rn
-  FROM cand
-)
-SELECT doc_id, source, score FROM ranked WHERE rn <= {_CROWD_PER_HOST}
-ORDER BY score DESC, doc_id ASC LIMIT 10"""
-
-
-_QUANTILES = (0.5, 0.95, 0.99)
-
-
-def q_latency_quantiles(spark, sf_dir):
-    """Exact interpolated quantiles (p50/p95/p99) of event value per event
-    type — the per-partition metrics-table surface the north rule asks
-    for, computed with the engines' EXACT percentile (linear
-    interpolation, identical definition in Spark and DuckDB), not a
-    sketch: the sketch twins (hll_distinct, cms_heavy_hitters) cover the
-    approximate path.
-
-    Scale shape: exact percentile needs the group's values together —
-    one hash shuffle on event_type; groups are event types (bounded
-    cardinality), values stream through the aggregator.  For unbounded
-    group counts the approx_percentile sketch is the drop-in.
-    """
-    ps = ", ".join(str(p) for p in _QUANTILES)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    q = ev.groupBy("event_type").agg(
-        F.expr(f"percentile(value, array({ps}))").alias("qs")
-    )
-    return q.select(
-        "event_type",
-        _r4(F.col("qs")[0]).alias("p50"),
-        _r4(F.col("qs")[1]).alias("p95"),
-        _r4(F.col("qs")[2]).alias("p99"),
-    )
-
-
-SQL_LATENCY_QUANTILES = """SELECT event_type,
-       round(quantile_cont(value, 0.5), 4) AS p50,
-       round(quantile_cont(value, 0.95), 4) AS p95,
-       round(quantile_cont(value, 0.99), 4) AS p99
-FROM events GROUP BY event_type"""
-
-
-def q_docid_remap(spark, sf_dir):
-    """Document-identifier reordering for index compression (Silvestri's
-    docid reassignment): renumber docs by a static order (n_chars DESC —
-    a quality proxy; real systems use URL sort or click impact) and
-    measure the posting-list delta-gap cost before vs after as total
-    bits = Σ bitlength(gap) over every posting gap.  Impact-ordered ids
-    cluster similar docs, shrinking gaps — this entry MEASURES that
-    effect rather than asserting it.
-
-    Scale shape: gap costs are per-term lag windows over the postings
-    (term-partitioned, the index's own sharding); bitlength(gap) is an
-    exact integer both engines compute as length(bin(gap)), so the
-    compare is float-free.  The global renumbering here is a row_number
-    window for oracle parity; the production path for the same
-    renumbering is operators/docids.stamp_doc_ids (range-partitioned
-    sort + per-partition offsets from parquet footers, no single-task
-    sort) — see the index build's p2b phase.
-    """
-    from pyspark.sql import Window
-
-    posts = _tf(spark, sf_dir).select("term", "doc_id")
-    wmap = Window.orderBy(F.col("n_chars").desc(), F.col("doc_id").asc())
-    remap = _docs(spark, sf_dir).select(
-        "doc_id", (F.row_number().over(wmap) - 1).alias("new_id")
-    )
-    wt_old = Window.partitionBy("term").orderBy("doc_id")
-    wt_new = Window.partitionBy("term").orderBy("new_id")
-    gaps = (
-        posts.join(remap, "doc_id")
-        .select(
-            "term",
-            (
-                F.col("doc_id")
-                - F.coalesce(F.lag("doc_id").over(wt_old), F.lit(-1))
-            ).alias("gap_old"),
-            (
-                F.col("new_id")
-                - F.coalesce(F.lag("new_id").over(wt_new), F.lit(-1))
-            ).alias("gap_new"),
-        )
-    )
-    return gaps.agg(
-        F.sum(F.length(F.bin("gap_old"))).cast("long").alias("bits_old"),
-        F.sum(F.length(F.bin("gap_new"))).cast("long").alias("bits_new"),
-        _r4(
-            F.sum(F.length(F.bin("gap_new")))
-            / F.sum(F.length(F.bin("gap_old")))
-        ).alias("ratio"),
-    )
-
-
-SQL_DOCID_REMAP = f"""WITH {_TOKS_SQL},
-posts AS (SELECT DISTINCT term, doc_id FROM toks),
-remap AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY n_chars DESC, doc_id ASC) - 1 AS new_id
-  FROM documents
-),
-gaps AS (
-  SELECT p.term,
-         p.doc_id - coalesce(lag(p.doc_id) OVER (
-           PARTITION BY p.term ORDER BY p.doc_id), -1) AS gap_old,
-         r.new_id - coalesce(lag(r.new_id) OVER (
-           PARTITION BY p.term ORDER BY r.new_id), -1) AS gap_new
-  FROM posts p JOIN remap r ON p.doc_id = r.doc_id
-)
-SELECT CAST(sum(length(bin(gap_old))) AS BIGINT) AS bits_old,
-       CAST(sum(length(bin(gap_new))) AS BIGINT) AS bits_new,
-       round(CAST(sum(length(bin(gap_new))) AS DOUBLE)
-             / sum(length(bin(gap_old))), 4) AS ratio
-FROM gaps"""
 
 
 def q_trustrank(spark, sf_dir):
@@ -5489,173 +4255,6 @@ FROM hits h JOIN dl ON h.doc_id = dl.doc_id CROSS JOIN stats CROSS JOIN ndf''')}
 
 
 # ---------------------------------------------------------------------------
-# Flesch reading-ease (classic readability quality signal)
-# ---------------------------------------------------------------------------
-
-def q_readability(spark, sf_dir):
-    """Per-language Flesch reading-ease: FRE = 206.835 - 1.015*(words/
-    sentences) - 84.6*(syllables/words), with sentences counted as
-    [.!?]+ runs (min 1) and syllables approximated as [aeiouy]+ vowel
-    groups per token (min 1 per word) — the standard dictionary-free
-    approximation.  A readability band is one of the quality columns
-    every curation recipe (C4, Gopher rules) keys on.
-
-    Scale shape: syllable and word counts are narrow per-token
-    expressions aggregated map-side per doc; the sentence count is one
-    regexp over the raw text (no second tokenize pass); the final
-    rollup is |langs| groups.  Nothing shuffles more than one row per
-    document.
-    """
-    syl = F.greatest(
-        F.lit(1),
-        F.size(F.expr("regexp_extract_all(term, '[aeiouy]+', 0)")),
-    )
-    per_doc = (
-        _tokens(spark, sf_dir)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("words"),
-            F.sum(syl).alias("sylls"),
-        )
-    )
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        "lang",
-        F.greatest(
-            F.lit(1),
-            F.size(F.expr("regexp_extract_all(text, '[.!?]+', 0)")),
-        ).alias("sents"),
-    )
-    fre = (
-        F.lit(206.835)
-        - F.lit(1.015) * (F.col("words") / F.col("sents"))
-        - F.lit(84.6) * (F.col("sylls") / F.col("words"))
-    )
-    return (
-        per_doc.join(docs, "doc_id")
-        .select("lang", fre.alias("fre"), (F.col("words") / F.col("sents")).alias("wps"))
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            _r4(F.avg("fre")).alias("avg_fre"),
-            _r4(F.avg("wps")).alias("avg_wps"),
-        )
-    )
-
-
-SQL_READABILITY = f"""WITH {_TOKS_SQL},
-per_doc AS (
-  SELECT doc_id, count(*) AS words,
-         sum(greatest(1, len(regexp_extract_all(term, '[aeiouy]+')))) AS sylls
-  FROM toks GROUP BY doc_id
-),
-sents AS (
-  SELECT doc_id, lang,
-         greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS sents
-  FROM documents
-)
-SELECT s.lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       round(avg(206.835 - 1.015 * (p.words / CAST(s.sents AS DOUBLE))
-                 - 84.6 * (p.sylls / CAST(p.words AS DOUBLE))), 4) AS avg_fre,
-       round(avg(p.words / CAST(s.sents AS DOUBLE)), 4) AS avg_wps
-FROM per_doc p JOIN sents s ON p.doc_id = s.doc_id
-GROUP BY s.lang"""
-
-
-# ---------------------------------------------------------------------------
-# item co-occurrence similarity (collaborative filtering over event logs)
-# ---------------------------------------------------------------------------
-
-_COOC_CAP = 64   # per-user item-history cap (most-viewed first)
-
-
-def q_cooccur_items(spark, sf_dir):
-    """Item-item co-occurrence similarity from the event log: items (the
-    `k` prop of 'view' events) that the same users view, ranked by
-    cosine over user co-occurrence counts — the related-items /
-    related-queries construction behind every search-engine suggestion
-    panel.  Top-20 pairs by cosine (r4), pair-id tiebreak.
-
-    Scale shape: the self-join that produces pairs is the classic
-    quadratic hazard, so each user's history is CAPPED first at
-    _COOC_CAP items (row_number by view count desc, item asc — fully
-    deterministic), exactly the hot-key bound the LSH band join uses;
-    after the cap a user contributes at most C(_COOC_CAP, 2) pairs
-    regardless of corpus size, item counts are computed over the SAME
-    capped universe so the cosine is internally consistent, and the
-    join key is user_id (hash-distributed, no skew beyond the cap).
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "view")
-        .select(
-            "user_id",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-    )
-    per = ev.groupBy("user_id", "item").agg(F.count("*").alias("v"))
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("v").desc(), F.col("item").asc()
-    )
-    capped = (
-        per.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= _COOC_CAP)
-        .select("user_id", "item")
-    )
-    ci = capped.groupBy("item").agg(F.count("*").alias("c"))
-    pairs = (
-        capped.alias("a")
-        .join(capped.alias("b"), "user_id")
-        .filter(F.col("a.item") < F.col("b.item"))
-        .groupBy(F.col("a.item").alias("item_a"), F.col("b.item").alias("item_b"))
-        .agg(F.count("*").cast("long").alias("cab"))
-    )
-    return (
-        pairs.join(ci.select(F.col("item").alias("item_a"), F.col("c").alias("ca")), "item_a")
-        .join(ci.select(F.col("item").alias("item_b"), F.col("c").alias("cb")), "item_b")
-        .select(
-            "item_a",
-            "item_b",
-            "cab",
-            _r4(F.col("cab") / F.sqrt(F.col("ca") * F.col("cb"))).alias("cosine"),
-        )
-        .orderBy(
-            F.col("cosine").desc(), F.col("item_a").asc(), F.col("item_b").asc()
-        )
-        .limit(20)
-    )
-
-
-SQL_COOCCUR_ITEMS = f"""WITH ev AS (
-  SELECT user_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type = 'view'
-),
-per AS (SELECT user_id, item, count(*) AS v FROM ev GROUP BY user_id, item),
-capped AS (
-  SELECT user_id, item FROM (
-    SELECT user_id, item,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY v DESC, item ASC) AS rn
-    FROM per) WHERE rn <= {_COOC_CAP}
-),
-ci AS (SELECT item, count(*) AS c FROM capped GROUP BY item),
-pairs AS (
-  SELECT a.item AS item_a, b.item AS item_b, count(*) AS cab
-  FROM capped a JOIN capped b ON a.user_id = b.user_id AND a.item < b.item
-  GROUP BY a.item, b.item
-)
-SELECT p.item_a, p.item_b, CAST(p.cab AS BIGINT) AS cab,
-       round(p.cab / sqrt(ca.c * cb.c), 4) AS cosine
-FROM pairs p
-JOIN ci ca ON p.item_a = ca.item
-JOIN ci cb ON p.item_b = cb.item
-ORDER BY cosine DESC, p.item_a ASC, p.item_b ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
 # BPE merge-pair statistics (tokenizer training, iteration-1 inner loop)
 # ---------------------------------------------------------------------------
 
@@ -5715,173 +4314,6 @@ pairs AS (
 )
 SELECT pair, CAST(sum(freq) AS BIGINT) AS cnt FROM pairs
 GROUP BY pair ORDER BY cnt DESC, pair ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# learning-to-rank feature export
-# ---------------------------------------------------------------------------
-
-_LTR_TERMS = ["merge", "join"]
-_LTR_K = 50
-
-
-def q_ltr_features(spark, sf_dir):
-    """Learning-to-rank feature export: for the 2-term query, emit the
-    per-candidate feature vector a reranker trains on — BM25 sum, raw tf
-    sum, matched-term coverage, doc length, and earliest query-term
-    position — for the top-_LTR_K stage-1 candidates.  This is the
-    candidate-generation → feature-join shape of every LTR pipeline:
-    features are computed only for retrieved candidates, never the
-    corpus.
-
-    Scale shape: the _scored leaf touches only the query terms' postings
-    (filter below the tf agg); positions join the SAME filtered token
-    slice; the final cutoff is a distributed TakeOrdered, so no global
-    sort materializes.  At 10^12 docs the cost is two posting lists +
-    a k-row result.
-    """
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(_LTR_TERMS))
-    s = _scored(spark, sf_dir, _LTR_TERMS)
-    feat = (
-        s.groupBy("doc_id")
-        .agg(
-            F.sum("score").alias("_bm25"),
-            F.count("*").cast("long").alias("n_match"),
-        )
-    )
-    tfpos = toks.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("tf_sum"),
-        F.min("pos").cast("long").alias("first_pos"),
-    )
-    dl = _dl(spark, sf_dir)
-    return (
-        feat.join(tfpos, "doc_id")
-        .join(dl, "doc_id")
-        .select(
-            "doc_id",
-            _r4("_bm25").alias("bm25"),
-            "n_match",
-            "tf_sum",
-            F.col("dl").cast("long").alias("dl"),
-            "first_pos",
-        )
-        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(_LTR_K)
-    )
-
-
-SQL_LTR_FEATURES = f"""WITH {_BM25_CORE_SQL},
-feat AS (
-  SELECT doc_id, round(sum(score), 4) AS bm25, count(*) AS n_match
-  FROM scored WHERE term IN ('merge', 'join') GROUP BY doc_id
-),
-tfpos AS (
-  SELECT doc_id, count(*) AS tf_sum, min(pos) AS first_pos
-  FROM toks WHERE term IN ('merge', 'join') GROUP BY doc_id
-)
-SELECT f.doc_id, f.bm25, f.n_match, t.tf_sum, dl.dl, t.first_pos
-FROM feat f JOIN tfpos t ON f.doc_id = t.doc_id
-JOIN dl ON f.doc_id = dl.doc_id
-ORDER BY f.bm25 DESC, f.doc_id ASC LIMIT {_LTR_K}"""
-
-
-# ---------------------------------------------------------------------------
-# robots.txt disallow filtering (crawl-frontier politeness, S1/S2 adjunct)
-# ---------------------------------------------------------------------------
-
-def q_robots_filter(spark, sf_dir):
-    """robots.txt disallow-prefix filtering of the crawl frontier: each
-    URL is allowed iff its path starts with none of its host's
-    disallowed prefixes (the longest-used robots.txt rule form; REP
-    RFC 9309 prefix semantics).  Hosts and paths are synthesized
-    deterministically from doc_id like q_url_normalize; each host's
-    rule set is derived from the host index (1-2 disallow prefixes).
-    Output: per-host URL / blocked / allowed counts.
-
-    Scale shape: the rules side is per-host tiny (robots files are KBs)
-    and broadcast; the prefix test is a narrow starts_with after an
-    equi-join on host, aggregated per URL then per host — at 10^12 URLs
-    this is one broadcast-join stage over the frontier scan, no
-    corpus-wide shuffle (the per-host rollup moves |hosts| rows).
-    """
-    d = _docs(spark, sf_dir).select("doc_id")
-    urls = d.select(
-        "doc_id",
-        F.concat(F.lit("site"), (F.col("doc_id") % 7).cast("string"),
-                 F.lit(".example.com")).alias("host"),
-        F.concat(F.lit("/sec"), (F.col("doc_id") % 5).cast("string"),
-                 F.lit("/page"), F.col("doc_id").cast("string")).alias("path"),
-    )
-    hosts = spark.range(7).select(
-        F.concat(F.lit("site"), F.col("id").cast("string"),
-                 F.lit(".example.com")).alias("host"),
-        F.col("id").alias("h"),
-    )
-    rules = hosts.select(
-        "host",
-        F.explode(
-            F.when(
-                F.col("h") % 2 == 0,
-                F.array(
-                    F.concat(F.lit("/sec"), (F.col("h") % 5).cast("string"), F.lit("/")),
-                    F.concat(F.lit("/sec"), ((F.col("h") + 2) % 5).cast("string"), F.lit("/")),
-                ),
-            ).otherwise(
-                F.array(
-                    F.concat(F.lit("/sec"), (F.col("h") % 5).cast("string"), F.lit("/"))
-                )
-            )
-        ).alias("prefix"),
-    )
-    per_url = (
-        urls.join(F.broadcast(rules), "host", "left")
-        .groupBy("doc_id", "host")
-        .agg(
-            F.max(
-                F.when(F.col("path").startswith(F.col("prefix")), 1).otherwise(0)
-            ).alias("blocked")
-        )
-    )
-    return (
-        per_url.groupBy("host")
-        .agg(
-            F.count("*").cast("long").alias("n_urls"),
-            F.sum("blocked").cast("long").alias("n_blocked"),
-            F.sum(1 - F.col("blocked")).cast("long").alias("n_allowed"),
-        )
-    )
-
-
-SQL_ROBOTS_FILTER = """WITH urls AS (
-  SELECT doc_id,
-         'site' || CAST(doc_id % 7 AS VARCHAR) || '.example.com' AS host,
-         '/sec' || CAST(doc_id % 5 AS VARCHAR) || '/page'
-           || CAST(doc_id AS VARCHAR) AS path
-  FROM documents
-),
-hosts AS (
-  SELECT 'site' || CAST(h AS VARCHAR) || '.example.com' AS host, h
-  FROM (SELECT unnest(range(0, 7)) AS h)
-),
-rules AS (
-  SELECT host,
-         unnest(CASE WHEN h % 2 = 0
-                THEN ['/sec' || CAST(h % 5 AS VARCHAR) || '/',
-                      '/sec' || CAST((h + 2) % 5 AS VARCHAR) || '/']
-                ELSE ['/sec' || CAST(h % 5 AS VARCHAR) || '/'] END) AS prefix
-  FROM hosts
-),
-per_url AS (
-  SELECT u.doc_id, u.host,
-         max(CASE WHEN starts_with(u.path, r.prefix) THEN 1 ELSE 0 END)
-           AS blocked
-  FROM urls u LEFT JOIN rules r ON u.host = r.host
-  GROUP BY u.doc_id, u.host
-)
-SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
-       CAST(sum(blocked) AS BIGINT) AS n_blocked,
-       CAST(sum(1 - blocked) AS BIGINT) AS n_allowed
-FROM per_url GROUP BY host"""
 
 
 # ---------------------------------------------------------------------------
@@ -6121,669 +4553,6 @@ ORDER BY qid"""
 
 
 # ---------------------------------------------------------------------------
-# query-likelihood retrieval (Dirichlet-smoothed LM, the BM25 alternative)
-# ---------------------------------------------------------------------------
-
-_QL_MU = 200.0   # Dirichlet pseudo-count
-_QL_TERMS = ["merge", "join"]
-
-
-def q_query_likelihood(spark, sf_dir):
-    """Query-likelihood retrieval with Dirichlet smoothing (Ponte-Croft /
-    Zhai-Lafferty): score(d) = Σ_q log((tf + μ·cf/T) / (dl + μ)) over the
-    query terms, including the smoothed mass for terms the doc lacks —
-    the standard LM alternative to BM25, and the second scorer every IR
-    stack A/B-tests.  Top-10.
-
-    Scale shape mirrors _scored: only the query terms' postings reach
-    the tf shuffle; the collection LM (cf/T per query term) is a
-    |q|-row broadcast; the missing-term smoothing is reshaped so the
-    corpus is never outer-joined — score(d) = Σ_q log(μ·p_q / (dl+μ))
-    + Σ_{q∈d} [log(tf + μ·p_q) - log(μ·p_q)], where the first sum is a
-    per-doc expression over dl and the second touches only matching
-    postings.  That identity (smooth-all + matched correction) is what
-    makes LM scoring WAND-able at 10^12 docs.
-    """
-    toks = _tokens(spark, sf_dir)
-    dl = _dl(spark, sf_dir)
-    total = toks.agg(F.count("*").alias("_t"))
-    cf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("cf"))
-        .crossJoin(F.broadcast(total))
-        .select("term", (F.col("cf") / F.col("_t")).alias("p"))
-    )
-    tf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    # matched correction per doc: Σ log(tf + μ·p) − log(μ·p)
-    corr = (
-        tf.join(F.broadcast(cf), "term")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.log(F.col("tf") + F.lit(_QL_MU) * F.col("p"))
-                - F.log(F.lit(_QL_MU) * F.col("p"))
-            ).alias("_corr")
-        )
-    )
-    # base per doc: Σ_q log(μ·p_q) − |q|·log(dl + μ)
-    base_const = cf.agg(
-        F.sum(F.log(F.lit(_QL_MU) * F.col("p"))).alias("_b"),
-        F.count("*").alias("_nq"),
-    )
-    return (
-        dl.crossJoin(F.broadcast(base_const))
-        .join(corr, "doc_id", "left")
-        .select(
-            "doc_id",
-            _r4(
-                F.col("_b")
-                - F.col("_nq") * F.log(F.col("dl") + F.lit(_QL_MU))
-                + F.coalesce(F.col("_corr"), F.lit(0.0))
-            ).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_QUERY_LIKELIHOOD = f"""WITH {_TOKS_SQL},
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-total AS (SELECT count(*) AS t FROM toks),
-cf AS (
-  SELECT term, count(*)::DOUBLE / (SELECT t FROM total) AS p
-  FROM toks WHERE term IN ('merge', 'join') GROUP BY term
-),
-tf AS (
-  SELECT term, doc_id, count(*) AS tf FROM toks
-  WHERE term IN ('merge', 'join') GROUP BY term, doc_id
-),
-corr AS (
-  SELECT tf.doc_id,
-         sum(ln(tf.tf + {_QL_MU} * cf.p) - ln({_QL_MU} * cf.p)) AS corr
-  FROM tf JOIN cf ON tf.term = cf.term GROUP BY tf.doc_id
-),
-bc AS (SELECT sum(ln({_QL_MU} * p)) AS b, count(*) AS nq FROM cf)
-{_topk_sql(f'''SELECT dl.doc_id AS doc_id,
-       round(bc.b - bc.nq * ln(dl.dl + {_QL_MU})
-             + coalesce(corr.corr, 0.0), 4) AS score
-FROM dl CROSS JOIN bc LEFT JOIN corr ON dl.doc_id = corr.doc_id''')}"""
-
-
-# ---------------------------------------------------------------------------
-# related terms via posting-set Jaccard (term clustering signal)
-# ---------------------------------------------------------------------------
-
-_RT_MIN_DF = 20    # both bounds keep the self-join off the head AND the tail
-_RT_MAX_DF = 400   # (wide here: the synthetic vocab is 31 near-ubiquitous
-                   # terms; at web scale the band is ~[1e3, 1e5] — the
-                   # MECHANISM under test is banding before the pair join)
-
-
-def q_related_terms(spark, sf_dir):
-    """Related-term mining: term pairs whose POSTING SETS overlap, ranked
-    by Jaccard of their doc sets — the doc-level companion to the
-    positional pmi_bigrams, and the signal behind 'related searches'
-    term clustering.  Top-20 pairs by Jaccard (r4), pair tiebreak.
-
-    Scale shape: the posting self-join is bounded on BOTH ends before
-    any pair forms — df < _RT_MAX_DF kills head terms (a stopword's
-    posting list would square), df ≥ _RT_MIN_DF kills the long tail
-    (typos/ids that only add noise and rows); what remains joins on
-    doc_id where each doc contributes C(terms_in_band, 2) pairs, and
-    the band is enforceable per doc.  Same philosophy as the LSH band
-    cap: bound the quadratic BEFORE it happens, deterministically.
-    """
-    tf = _tf(spark, sf_dir).select("term", "doc_id")
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    band = df.filter(
-        (F.col("df") >= _RT_MIN_DF) & (F.col("df") < _RT_MAX_DF)
-    )
-    sel = tf.join(band, "term")
-    inter = (
-        sel.alias("a")
-        .join(sel.alias("b"), "doc_id")
-        .filter(F.col("a.term") < F.col("b.term"))
-        .groupBy(
-            F.col("a.term").alias("term_a"),
-            F.col("b.term").alias("term_b"),
-        )
-        .agg(
-            F.count("*").cast("long").alias("inter"),
-            F.first("a.df").alias("dfa"),
-            F.first("b.df").alias("dfb"),
-        )
-    )
-    return (
-        inter.select(
-            "term_a",
-            "term_b",
-            "inter",
-            _r4(
-                F.col("inter")
-                / (F.col("dfa") + F.col("dfb") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-        .orderBy(
-            F.col("jaccard").desc(),
-            F.col("term_a").asc(),
-            F.col("term_b").asc(),
-        )
-        .limit(20)
-    )
-
-
-SQL_RELATED_TERMS = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id FROM toks GROUP BY term, doc_id),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-band AS (SELECT term, df FROM df
-         WHERE df >= {_RT_MIN_DF} AND df < {_RT_MAX_DF}),
-sel AS (SELECT tf.term, tf.doc_id, band.df
-        FROM tf JOIN band ON tf.term = band.term),
-inter AS (
-  SELECT a.term AS term_a, b.term AS term_b, count(*) AS inter,
-         any_value(a.df) AS dfa, any_value(b.df) AS dfb
-  FROM sel a JOIN sel b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-)
-SELECT term_a, term_b, CAST(inter AS BIGINT) AS inter,
-       round(inter::DOUBLE / (dfa + dfb - inter), 4) AS jaccard
-FROM inter
-ORDER BY jaccard DESC, term_a ASC, term_b ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# smoothed click-through-rate model (ranking signal from the event log)
-# ---------------------------------------------------------------------------
-
-_CTR_A = 2.0    # Beta prior pseudo-clicks
-_CTR_B = 10.0   # Beta prior pseudo-views
-
-
-def q_ctr_model(spark, sf_dir):
-    """Click model: per item (the `k` prop), impressions ('view' events),
-    clicks ('click' events), and the Beta-smoothed CTR
-    (clicks + α) / (views + α + β) — the posterior-mean shrinkage that
-    keeps low-traffic items from dominating a ranking signal on noise.
-    All items, ordered by smoothed CTR.
-
-    Scale shape: two filtered scans aggregate map-side to one row per
-    (item, type) before the join; the output is |items| rows.  At
-    10^12 events the per-item partial counts are the only shuffle —
-    this is the textbook pre-aggregate-then-join shape.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        F.get_json_object("props", "$.k").cast("long").alias("item"),
-    )
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("item")
-        .agg(F.count("*").cast("long").alias("views"))
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("item")
-        .agg(F.count("*").cast("long").alias("clicks"))
-    )
-    return (
-        views.join(clicks, "item", "left")
-        .select(
-            "item",
-            "views",
-            F.coalesce(F.col("clicks"), F.lit(0)).cast("long").alias("clicks"),
-            _r4(
-                (F.coalesce(F.col("clicks"), F.lit(0)) + F.lit(_CTR_A))
-                / (F.col("views") + F.lit(_CTR_A) + F.lit(_CTR_B))
-            ).alias("ctr"),
-        )
-        .orderBy(F.col("ctr").desc(), F.col("item").asc())
-    )
-
-
-SQL_CTR_MODEL = f"""WITH ev AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events
-),
-views AS (SELECT item, count(*) AS views FROM ev
-          WHERE event_type = 'view' GROUP BY item),
-clicks AS (SELECT item, count(*) AS clicks FROM ev
-           WHERE event_type = 'click' GROUP BY item)
-SELECT v.item, CAST(v.views AS BIGINT) AS views,
-       CAST(coalesce(c.clicks, 0) AS BIGINT) AS clicks,
-       round((coalesce(c.clicks, 0) + {_CTR_A})
-             / (v.views + {_CTR_A} + {_CTR_B}), 4) AS ctr
-FROM views v LEFT JOIN clicks c ON v.item = c.item
-ORDER BY ctr DESC, v.item ASC"""
-
-
-# ---------------------------------------------------------------------------
-# per-source distribution drift (KL divergence of unigram LMs)
-# ---------------------------------------------------------------------------
-
-_KL_ALPHA = 1.0   # add-one smoothing over the corpus vocabulary
-
-
-def q_kl_drift(spark, sf_dir):
-    """Corpus-drift sheet: per source, the KL divergence of its smoothed
-    unigram distribution from the whole-corpus distribution — the
-    monitoring number that flags a crawl slice (or a new dump) whose
-    language shifted before it contaminates a training mix.  Both
-    distributions are add-α smoothed over the SAME corpus vocabulary so
-    support matches and KL is finite.
-
-    Scale shape: per-(source, term) counts aggregate map-side; the
-    corpus LM joins by term (no broadcast hint — vocab cardinality is
-    corpus-dependent, the dsir lesson); the vocab-size and per-source
-    totals are small broadcast side plans.  Terms a source lacks
-    contribute ONLY through the smoothing mass, folded in closed form
-    (α-only terms share one log), so the plan never outer-joins
-    source × vocab.
-    """
-    toks = _tokens(spark, sf_dir).select("doc_id", "term")
-    src = _docs(spark, sf_dir).select("doc_id", "source")
-    st = toks.join(src, "doc_id").select("source", "term")
-    # per-source term counts and totals
-    sc = st.groupBy("source", "term").agg(F.count("*").alias("c"))
-    stot = sc.groupBy("source").agg(F.sum("c").alias("n"))
-    # corpus counts, total, vocab size
-    cc = st.groupBy("term").agg(F.count("*").alias("cc"))
-    ctot = cc.agg(
-        F.sum("cc").alias("t"), F.count("*").alias("v")
-    )
-    # p_s(w) = (c + α)/(n + αV), q(w) = (cc + α)/(t + αV)
-    # KL = Σ_vocab p log(p/q); terms with c=0 have p = α/(n+αV) —
-    # their Σ is  α/(n+αV) · Σ_{c=0} log(p/q), folded via
-    # Σ_{c=0} log q  =  Σ_all log q − Σ_{c>0} log q  (all computed on
-    # matched rows; Σ_all log q is one corpus-wide aggregate)
-    j = sc.join(cc, "term").join(F.broadcast(stot), "source").crossJoin(
-        F.broadcast(ctot)
-    )
-    a = F.lit(_KL_ALPHA)
-    p = (F.col("c") + a) / (F.col("n") + a * F.col("v"))
-    q = (F.col("cc") + a) / (F.col("t") + a * F.col("v"))
-    matched = j.groupBy("source").agg(
-        F.sum(p * F.log(p / q)).alias("_kl_pos"),
-        F.sum(F.log(q)).alias("_logq_pos"),
-        F.count("*").alias("_nterms"),
-        F.first("n").alias("_n"),
-        F.first("v").alias("_v"),
-        F.first("t").alias("_t"),
-    )
-    logq_all = cc.crossJoin(F.broadcast(ctot)).agg(
-        F.sum(
-            F.log((F.col("cc") + a) / (F.col("t") + a * F.col("v")))
-        ).alias("_logq_all")
-    )
-    p0 = a / (F.col("_n") + a * F.col("_v"))
-    kl = (
-        F.col("_kl_pos")
-        + p0
-        * (
-            (F.col("_v") - F.col("_nterms")) * F.log(p0)
-            - (F.col("_logq_all") - F.col("_logq_pos"))
-        )
-    )
-    return (
-        matched.crossJoin(F.broadcast(logq_all))
-        .select(
-            "source",
-            F.col("_n").cast("long").alias("n_tokens"),
-            _r4(kl).alias("kl"),
-        )
-        .orderBy(F.col("kl").desc(), F.col("source").asc())
-    )
-
-
-SQL_KL_DRIFT = f"""WITH {_TOKS_SQL},
-st AS (
-  SELECT d.source, t.term FROM toks t
-  JOIN documents d ON t.doc_id = d.doc_id
-),
-sc AS (SELECT source, term, count(*) AS c FROM st GROUP BY source, term),
-stot AS (SELECT source, sum(c) AS n FROM sc GROUP BY source),
-cc AS (SELECT term, count(*) AS cc FROM st GROUP BY term),
-ctot AS (SELECT sum(cc) AS t, count(*) AS v FROM cc),
-logq_all AS (
-  SELECT sum(ln((cc + {_KL_ALPHA}) / (t + {_KL_ALPHA} * v))) AS logq_all
-  FROM cc CROSS JOIN ctot
-),
-matched AS (
-  SELECT sc.source,
-         sum(((sc.c + {_KL_ALPHA}) / (stot.n + {_KL_ALPHA} * ctot.v))
-             * ln(((sc.c + {_KL_ALPHA}) / (stot.n + {_KL_ALPHA} * ctot.v))
-                  / ((cc.cc + {_KL_ALPHA}) / (ctot.t + {_KL_ALPHA} * ctot.v))))
-           AS kl_pos,
-         sum(ln((cc.cc + {_KL_ALPHA}) / (ctot.t + {_KL_ALPHA} * ctot.v)))
-           AS logq_pos,
-         count(*) AS nterms,
-         any_value(stot.n) AS n, any_value(ctot.v) AS v
-  FROM sc JOIN cc ON sc.term = cc.term
-  JOIN stot ON sc.source = stot.source
-  CROSS JOIN ctot
-  GROUP BY sc.source
-)
-SELECT m.source, CAST(m.n AS BIGINT) AS n_tokens,
-       round(m.kl_pos
-             + ({_KL_ALPHA} / (m.n + {_KL_ALPHA} * m.v))
-               * ((m.v - m.nterms)
-                    * ln({_KL_ALPHA} / (m.n + {_KL_ALPHA} * m.v))
-                  - (l.logq_all - m.logq_pos)), 4) AS kl
-FROM matched m CROSS JOIN logq_all l
-ORDER BY kl DESC, m.source ASC"""
-
-
-# ---------------------------------------------------------------------------
-# asymmetric shingle containment (subset-duplication detector)
-# ---------------------------------------------------------------------------
-
-_CONTAIN_MIN = 0.4   # report pairs where |A∩B| / |A| ≥ this
-
-
-def q_containment(spark, sf_dir):
-    """Asymmetric near-dup: shingle CONTAINMENT |A∩B| / |A| (Broder's
-    second resemblance measure) — catches a short doc swallowed by a
-    longer one (quotes, wrapped reposts, boilerplate shells), which
-    symmetric Jaccard under-scores because the union is large.  Reports
-    ordered pairs (contained, container) at containment ≥ _CONTAIN_MIN.
-
-    Scale shape: identical to ngram_jaccard — shared-shingle equi-join
-    with the head-shingle df cap bounding hot keys; containment just
-    divides by ONE side's size, so no new shuffle.  Both directions of
-    a pair come from the same joined row (a<b once, then both ratios),
-    not a second join.
-    """
-    sh = _shingles(spark, sf_dir)
-    df_ok = (
-        sh.groupBy("sh").agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= _SHINGLE_DF_CAP)
-        .select("sh")
-    )
-    sh = sh.join(df_ok, "sh", "left_semi")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("doc_id").alias("da"), "sh")
-    b = sh.select(F.col("doc_id").alias("db"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("da") < F.col("db"))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("inter"))
-        .join(sizes.select(F.col("doc_id").alias("da"),
-                           F.col("sz").alias("sza")), "da")
-        .join(sizes.select(F.col("doc_id").alias("db"),
-                           F.col("sz").alias("szb")), "db")
-    )
-    fwd = inter.select(
-        F.col("da").alias("contained"), F.col("db").alias("container"),
-        _r4(F.col("inter") / F.col("sza")).alias("containment"),
-    )
-    rev = inter.select(
-        F.col("db").alias("contained"), F.col("da").alias("container"),
-        _r4(F.col("inter") / F.col("szb")).alias("containment"),
-    )
-    return (
-        fwd.unionByName(rev)
-        .filter(F.col("containment") >= _CONTAIN_MIN)
-        .orderBy(
-            F.col("containment").desc(),
-            F.col("contained").asc(),
-            F.col("container").asc(),
-        )
-        .limit(20)
-    )
-
-
-SQL_CONTAINMENT = f"""WITH {_SHINGLES_SQL},
-capped AS (
-  SELECT s.doc_id, s.sh FROM shingles s
-  JOIN (SELECT sh FROM shingles GROUP BY sh
-        HAVING count(*) <= {_SHINGLE_DF_CAP}) ok ON s.sh = ok.sh
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM capped GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS inter
-  FROM capped a JOIN capped b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sized AS (
-  SELECT i.da, i.db, i.inter, sa.sz AS sza, sb.sz AS szb
-  FROM inter i JOIN sizes sa ON sa.doc_id = i.da
-  JOIN sizes sb ON sb.doc_id = i.db
-),
-dirs AS (
-  SELECT da AS contained, db AS container,
-         round(inter * 1.0 / sza, 4) AS containment FROM sized
-  UNION ALL
-  SELECT db AS contained, da AS container,
-         round(inter * 1.0 / szb, 4) AS containment FROM sized
-)
-SELECT contained, container, containment FROM dirs
-WHERE containment >= {_CONTAIN_MIN}
-ORDER BY containment DESC, contained ASC, container ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# freshness-decayed ranking (time-aware retrieval)
-# ---------------------------------------------------------------------------
-
-_FRESH_TAU = 90.0   # e-folding age, days
-
-
-def q_freshness_rank(spark, sf_dir):
-    """Time-decayed retrieval: BM25 for 'merge' multiplied by
-    exp(-age_days/τ) — the standard freshness prior for news-ish
-    verticals.  Crawl ages are synthesized deterministically from doc_id
-    (doc_id % 365 days old, like q_url_normalize's synthetic URLs) so
-    both engines see identical inputs.  Top-10 by decayed score.
-
-    Scale shape: the decay is a narrow per-row expression on top of the
-    same pruned _scored plan (only the query term's postings shuffle);
-    freshness changes the ORDER, not the plan.  In the packed engine
-    the same factor folds into the WAND upper bound (w · max-decay of a
-    bucket) without breaking pruning.
-    """
-    s = _scored(spark, sf_dir, ["merge"]).filter(F.col("term") == "merge")
-    age = (F.col("doc_id") % 365).cast("double")
-    return (
-        s.select(
-            "doc_id",
-            age.cast("long").alias("age_days"),
-            _r4(F.col("score") * F.exp(-age / F.lit(_FRESH_TAU))).alias(
-                "score"
-            ),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_FRESHNESS_RANK = f"""WITH {_BM25_CORE_SQL}
-{_topk_sql(f'''SELECT doc_id, CAST(doc_id % 365 AS BIGINT) AS age_days,
-       round(score * exp(-(doc_id % 365) / {_FRESH_TAU}), 4) AS score
-FROM scored WHERE term = 'merge' ''')}"""
-
-
-# ---------------------------------------------------------------------------
-# NDCG@10 ranking-quality evaluation
-# ---------------------------------------------------------------------------
-
-_NDCG_K = 10
-_NDCG_QS = ["merge", "join", "scan"]
-
-
-def q_ndcg_eval(spark, sf_dir):
-    """Offline ranking evaluation: NDCG@_NDCG_K of the BM25 ranking per
-    query, against deterministic synthetic graded labels (rel ∈ 0..3 from
-    a multiplicative hash of doc_id — the stand-in for editorial
-    judgments, identical in both engines).  DCG uses the standard
-    (2^rel − 1)/log2(rank+1) gain; IDCG re-ranks the SAME top-K pool by
-    label (the 'local ideal' convention for pooled judgments).
-
-    Scale shape: ranking cutoffs are per-query rank windows over the
-    pruned _scored plan (only the 3 query terms' postings shuffle); the
-    eval aggregate is |queries| rows.  This is the operator an IR stack
-    runs on every ranker change — measurement as a first-class plan.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(
-        F.col("term").isin(_NDCG_QS)
-    )
-    w = Window.partitionBy("term").orderBy(
-        F.round("score", 4).desc(), F.col("doc_id").asc()
-    )
-    top = (
-        s.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _NDCG_K)
-        .withColumn(
-            "rel",
-            F.pmod(
-                (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761),
-                F.lit(4),
-            ).cast("double"),
-        )
-        .withColumn(
-            "gain",
-            (F.pow(F.lit(2.0), F.col("rel")) - 1.0)
-            / (F.log(F.col("rank") + 1.0) / F.log(F.lit(2.0))),
-        )
-    )
-    iw = Window.partitionBy("term").orderBy(
-        F.col("rel").desc(), F.col("doc_id").asc()
-    )
-    ideal = top.withColumn("irank", F.row_number().over(iw)).withColumn(
-        "igain",
-        (F.pow(F.lit(2.0), F.col("rel")) - 1.0)
-        / (F.log(F.col("irank") + 1.0) / F.log(F.lit(2.0))),
-    )
-    return (
-        ideal.groupBy("term")
-        .agg(
-            _r4(
-                F.sum("gain") / F.greatest(F.sum("igain"), F.lit(1e-12))
-            ).alias("ndcg"),
-            F.count("*").cast("long").alias("judged"),
-        )
-        .orderBy("term")
-    )
-
-
-SQL_NDCG_EVAL = f"""WITH {_BM25_CORE_SQL},
-top AS (
-  SELECT term, doc_id, rank,
-         CAST(((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 AS DOUBLE) AS rel
-  FROM (
-    SELECT term, doc_id, row_number() OVER (
-      PARTITION BY term ORDER BY round(score, 4) DESC, doc_id ASC) AS rank
-    FROM scored WHERE term IN ('merge', 'join', 'scan'))
-  WHERE rank <= {_NDCG_K}
-),
-gains AS (
-  SELECT term, doc_id, rel,
-         (pow(2.0, rel) - 1.0) / (ln(rank + 1.0) / ln(2.0)) AS gain,
-         row_number() OVER (PARTITION BY term
-                            ORDER BY rel DESC, doc_id ASC) AS irank
-  FROM top
-)
-SELECT term,
-       round(sum(gain)
-             / greatest(sum((pow(2.0, rel) - 1.0)
-                            / (ln(irank + 1.0) / ln(2.0))), 1e-12), 4)
-         AS ndcg,
-       count(*) AS judged
-FROM gains GROUP BY term ORDER BY term"""
-
-
-# ---------------------------------------------------------------------------
-# percolation / reverse search (stored-query alerting)
-# ---------------------------------------------------------------------------
-
-_PERC_QUERIES = [
-    # (qid, mode, terms) — the stored alert table (Elasticsearch
-    # percolator shape); terms drawn from the synthetic vocabulary
-    (1, "and", ["merge", "join"]),
-    (2, "and", ["hash", "join", "spark"]),
-    (3, "or", ["vector", "window"]),
-    (4, "and", ["scan", "filter"]),
-    (5, "or", ["dup", "stream"]),
-    (6, "and", ["merge", "sort", "batch"]),
-]
-
-
-def q_percolate(spark, sf_dir):
-    """Reverse search (percolation): match every document against a STORED
-    query table — the alerting/subscription primitive (saved searches,
-    brand monitoring) where the queries are the index and the doc is the
-    probe.  AND queries need every term present, OR queries any.  Output:
-    per stored query, how many docs fire it.
-
-    Scale shape: the stored-query term table is tiny and broadcast (an
-    alert table is KB-MB even with millions of alerts after term
-    sharding); one pass over DISTINCT (doc, term) pairs joins it, the
-    per-(doc, query) coverage count is map-side combinable, and the AND
-    threshold is a join-free post-filter.  The corpus is scanned ONCE no
-    matter how many stored queries — the whole point of percolation.
-    """
-    qrows = [
-        (qid, mode, t, len(terms))
-        for qid, mode, terms in _PERC_QUERIES
-        for t in terms
-    ]
-    qtab = spark.createDataFrame(
-        qrows, "qid int, mode string, term string, n_terms int"
-    )
-    dt = _tf(spark, sf_dir).select("doc_id", "term")
-    cov = (
-        dt.join(F.broadcast(qtab), "term")
-        .groupBy("doc_id", "qid")
-        .agg(
-            F.count("*").alias("hit"),
-            F.first("mode").alias("mode"),
-            F.first("n_terms").alias("n_terms"),
-        )
-    )
-    fired = cov.filter(
-        (F.col("mode") == "or") | (F.col("hit") == F.col("n_terms"))
-    )
-    return (
-        fired.groupBy("qid")
-        .agg(
-            F.first("mode").alias("mode"),
-            F.count("*").cast("long").alias("n_docs"),
-        )
-        .orderBy("qid")
-    )
-
-
-def _percolate_sql() -> str:
-    vals = ", ".join(
-        f"({qid}, '{mode}', '{t}', {len(terms)})"
-        for qid, mode, terms in _PERC_QUERIES
-        for t in terms
-    )
-    return f"""WITH {_TOKS_SQL},
-dt AS (SELECT DISTINCT doc_id, term FROM toks),
-qtab(qid, mode, term, n_terms) AS (VALUES {vals}),
-cov AS (
-  SELECT d.doc_id, q.qid, count(*) AS hit,
-         any_value(q.mode) AS mode, any_value(q.n_terms) AS n_terms
-  FROM dt d JOIN qtab q ON d.term = q.term
-  GROUP BY d.doc_id, q.qid
-)
-SELECT qid, any_value(mode) AS mode, CAST(count(*) AS BIGINT) AS n_docs
-FROM cov WHERE mode = 'or' OR hit = n_terms
-GROUP BY qid ORDER BY qid"""
-
-
-SQL_PERCOLATE = _percolate_sql()
-
-
-# ---------------------------------------------------------------------------
 # character-entropy quality signal (Gopher-style repetition/garbage rule)
 # ---------------------------------------------------------------------------
 
@@ -6867,464 +4636,6 @@ FROM ent GROUP BY lang ORDER BY lang"""
 
 
 # ---------------------------------------------------------------------------
-# ordered conversion funnel over the event log
-# ---------------------------------------------------------------------------
-
-_FUNNEL = ["view", "click", "purchase"]
-
-
-def q_event_funnel(spark, sf_dir):
-    """Strict ordered funnel (the product-analytics primitive): per user,
-    step i counts only if its FIRST occurrence happens strictly after
-    step i-1's first occurrence.  Reports per-step user counts and the
-    conversion rate from the previous step.
-
-    Scale shape: one filtered scan aggregates to min-ts per (user, step)
-    map-side (3 rows per user max); the step ordering is a per-user
-    width-3 pivot — no self-join, no window over raw events.  At 10^12
-    events the only shuffle is the per-user 3-row aggregate.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
-        F.col("event_type").isin(_FUNNEL)
-    )
-    firsts = (
-        ev.groupBy("user_id")
-        .pivot("event_type", _FUNNEL)
-        .agg(F.min("ts"))
-    )
-    s1 = F.col("view").isNotNull()
-    s2 = s1 & F.col("click").isNotNull() & (F.col("click") > F.col("view"))
-    s3 = s2 & F.col("purchase").isNotNull() & (
-        F.col("purchase") > F.col("click")
-    )
-    agg = firsts.agg(
-        F.sum(s1.cast("long")).alias("n1"),
-        F.sum(s2.cast("long")).alias("n2"),
-        F.sum(s3.cast("long")).alias("n3"),
-    )
-    steps = agg.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(1).alias("step"), F.lit("view").alias("name"),
-                    F.col("n1").alias("users"),
-                    F.col("n1").cast("double").alias("_prev"),
-                    F.col("n1").cast("double").alias("_cur0"),
-                ),
-                F.struct(
-                    F.lit(2).alias("step"), F.lit("click").alias("name"),
-                    F.col("n2").alias("users"),
-                    F.col("n1").cast("double").alias("_prev"),
-                    F.col("n2").cast("double").alias("_cur0"),
-                ),
-                F.struct(
-                    F.lit(3).alias("step"), F.lit("purchase").alias("name"),
-                    F.col("n3").alias("users"),
-                    F.col("n2").cast("double").alias("_prev"),
-                    F.col("n3").cast("double").alias("_cur0"),
-                ),
-            )
-        ).alias("s")
-    )
-    return steps.select(
-        F.col("s.step").alias("step"),
-        F.col("s.name").alias("name"),
-        F.col("s.users").cast("long").alias("users"),
-        _r4(
-            F.col("s._cur0") / F.greatest(F.col("s._prev"), F.lit(1.0))
-        ).alias("conv"),
-    ).orderBy("step")
-
-
-SQL_EVENT_FUNNEL = """WITH firsts AS (
-  SELECT user_id,
-         min(CASE WHEN event_type = 'view' THEN ts END) AS v,
-         min(CASE WHEN event_type = 'click' THEN ts END) AS c,
-         min(CASE WHEN event_type = 'purchase' THEN ts END) AS p
-  FROM events WHERE event_type IN ('view', 'click', 'purchase')
-  GROUP BY user_id
-),
-agg AS (
-  SELECT sum(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END) AS n1,
-         sum(CASE WHEN v IS NOT NULL AND c IS NOT NULL AND c > v
-                  THEN 1 ELSE 0 END) AS n2,
-         sum(CASE WHEN v IS NOT NULL AND c IS NOT NULL AND c > v
-                   AND p IS NOT NULL AND p > c THEN 1 ELSE 0 END) AS n3
-  FROM firsts
-)
-SELECT 1 AS step, 'view' AS name, CAST(n1 AS BIGINT) AS users,
-       round(n1 / greatest(n1 * 1.0, 1.0), 4) AS conv FROM agg
-UNION ALL
-SELECT 2, 'click', CAST(n2 AS BIGINT),
-       round(n2 / greatest(n1 * 1.0, 1.0), 4) FROM agg
-UNION ALL
-SELECT 3, 'purchase', CAST(n3 AS BIGINT),
-       round(n3 / greatest(n2 * 1.0, 1.0), 4) FROM agg
-ORDER BY step"""
-
-
-# ---------------------------------------------------------------------------
-# MRR / MAP ranking evaluation (binary-relevance companion to ndcg_eval)
-# ---------------------------------------------------------------------------
-
-def q_mrr_map_eval(spark, sf_dir):
-    """Reciprocal rank and average precision of the BM25 top-K per query,
-    under a binary cut (grade >= 2) of the same deterministic synthetic
-    labels ndcg_eval uses.  RR = 1/rank of the first relevant result
-    (0.0 when none lands in the pool); AP follows the pooled convention:
-    precision@k summed at relevant ranks, normalised by the number of
-    relevant docs IN the pool.  Together with ndcg_eval this is the
-    standard offline eval triple an IR stack reruns on every ranker
-    change.
-
-    Scale shape: identical to ndcg_eval — per-query rank windows over the
-    term-pruned _scored plan (only the |queries| terms' postings
-    shuffle), then window sums over the <=K-row pool and a |queries|-row
-    aggregate.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(
-        F.col("term").isin(_NDCG_QS)
-    )
-    w = Window.partitionBy("term").orderBy(
-        F.round("score", 4).desc(), F.col("doc_id").asc()
-    )
-    top = (
-        s.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _NDCG_K)
-        .withColumn(
-            "rel",
-            F.when(
-                F.pmod(
-                    (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761),
-                    F.lit(4),
-                )
-                >= 2,
-                F.lit(1.0),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    cw = (
-        Window.partitionBy("term")
-        .orderBy("rank")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = top.withColumn("cum_rel", F.sum("rel").over(cw))
-    return (
-        cum.groupBy("term")
-        .agg(
-            _r4(F.max(F.col("rel") / F.col("rank"))).alias("rr"),
-            _r4(
-                F.sum(F.col("rel") * F.col("cum_rel") / F.col("rank"))
-                / F.greatest(F.sum("rel"), F.lit(1.0))
-            ).alias("ap"),
-            F.sum("rel").cast("long").alias("n_rel"),
-        )
-        .orderBy("term")
-    )
-
-
-SQL_MRR_MAP_EVAL = f"""WITH {_BM25_CORE_SQL},
-top AS (
-  SELECT term, doc_id, rank,
-         CASE WHEN ((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 >= 2
-              THEN 1.0 ELSE 0.0 END AS rel
-  FROM (
-    SELECT term, doc_id, row_number() OVER (
-      PARTITION BY term ORDER BY round(score, 4) DESC, doc_id ASC) AS rank
-    FROM scored WHERE term IN ('merge', 'join', 'scan'))
-  WHERE rank <= {_NDCG_K}
-),
-cums AS (
-  SELECT term, rank, rel,
-         sum(rel) OVER (PARTITION BY term ORDER BY rank
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum_rel
-  FROM top
-)
-SELECT term,
-       round(max(rel / rank), 4) AS rr,
-       round(sum(rel * cum_rel / rank) / greatest(sum(rel), 1.0), 4) AS ap,
-       CAST(sum(rel) AS BIGINT) AS n_rel
-FROM cums GROUP BY term ORDER BY term"""
-
-
-# ---------------------------------------------------------------------------
-# traffic-spike detection over the event stream (z-score vs trailing window)
-# ---------------------------------------------------------------------------
-
-def q_spike_detect(spark, sf_dir):
-    """Burst detection: per event type, flag the hours whose count most
-    exceeds the trailing 24h mean, scored as a z-score against the
-    trailing standard deviation (the monitoring primitive behind
-    trending-query and abuse alarms).  The stddev floor of 0.5 keeps z
-    bounded on near-constant series (counts are integers, so sd < 0.5
-    means the history is essentially flat).  Top-20 by z with full
-    deterministic tie-break.
-
-    Scale shape: raw events aggregate map-side to |types| x |hours| rows
-    FIRST; the trailing-stats windows and the top-20 run over that
-    bounded pre-aggregate only (the final cut is TakeOrderedAndProject,
-    not a global sort).  At 10^12 events the one shuffle is the
-    hour-bucket aggregate.
-    """
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    agg = ev.groupBy(
-        F.window("ts", "1 hour").getField("start").alias("win"),
-        "event_type",
-    ).agg(F.count("*").cast("long").alias("n"))
-    w = Window.partitionBy("event_type").orderBy("win").rowsBetween(-24, -1)
-    scored = (
-        agg.withColumn("mu", F.avg("n").over(w))
-        .withColumn("sd", F.stddev_samp("n").over(w))
-        .withColumn("n_hist", F.count("n").over(w))
-        .filter(F.col("n_hist") >= 12)
-        .withColumn(
-            "z",
-            _r4(
-                (F.col("n") - F.col("mu"))
-                / F.greatest(F.col("sd"), F.lit(0.5))
-            ),
-        )
-    )
-    return (
-        scored.select("event_type", "win", "n", "z")
-        .orderBy(F.col("z").desc(), "event_type", "win")
-        .limit(20)
-    )
-
-
-SQL_SPIKE_DETECT = """WITH agg AS (
-  SELECT time_bucket(INTERVAL '1 hour', ts) AS win, event_type,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-scored AS (
-  SELECT event_type, win, n,
-         avg(n) OVER w AS mu,
-         stddev_samp(n) OVER w AS sd,
-         count(n) OVER w AS n_hist
-  FROM agg
-  WINDOW w AS (PARTITION BY event_type ORDER BY win
-               ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
-)
-SELECT event_type, win, n,
-       round((n - mu) / greatest(sd, 0.5), 4) AS z
-FROM scored WHERE n_hist >= 12
-ORDER BY z DESC, event_type, win
-LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# posting-list length histogram (index sizing / codec selection surface)
-# ---------------------------------------------------------------------------
-
-def q_posting_histogram(spark, sf_dir):
-    """Distribution of posting-list lengths (document frequency per term)
-    in power-of-two buckets — the statistic that sizes skip blocks,
-    picks codecs (varbyte vs bitpack vs bitmap), and predicts WAND
-    effectiveness for an index build.  Bucket = bit_length(df) - 1,
-    computed with integer string arithmetic on both sides so no
-    floating log2 sits on a power-of-two boundary.
-
-    Scale shape: tf dedup and the df count are the same two map-side
-    combining aggregates the index build itself runs; the histogram is
-    a <=64-row rollup.
-    """
-    df = (
-        _tf(spark, sf_dir)
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-    )
-    bucket = (F.length(F.bin(F.col("df"))) - 1).cast("long").alias("bucket")
-    return (
-        df.groupBy(bucket)
-        .agg(
-            F.count("*").cast("long").alias("n_terms"),
-            F.sum("df").cast("long").alias("n_postings"),
-            F.min("df").cast("long").alias("min_df"),
-            F.max("df").cast("long").alias("max_df"),
-        )
-        .orderBy("bucket")
-    )
-
-
-SQL_POSTING_HISTOGRAM = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id FROM toks GROUP BY term, doc_id),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-SELECT CAST(length(bin(df)) - 1 AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_terms,
-       CAST(sum(df) AS BIGINT) AS n_postings,
-       CAST(min(df) AS BIGINT) AS min_df,
-       CAST(max(df) AS BIGINT) AS max_df
-FROM df GROUP BY 1 ORDER BY bucket"""
-
-
-# ---------------------------------------------------------------------------
-# Rocchio pseudo-relevance feedback over the embedding space
-# ---------------------------------------------------------------------------
-
-_ROCCHIO_POOL = 20
-_ROCCHIO_A, _ROCCHIO_B, _ROCCHIO_G = 1.0, 0.75, 0.15
-
-
-def q_rocchio_feedback(spark, sf_dir):
-    """Rocchio relevance feedback (the vector-space sibling of rm1_expand):
-    retrieve a cosine top-20 pool for query vec 0, split it by the same
-    deterministic synthetic judgments the eval operators use, move the
-    query toward the relevant centroid and away from the non-relevant one
-    (q' = a*q + b*c_rel - g*c_nonrel), and re-rank everything against q'.
-
-    The centroids are CONDITIONAL per-position aggregates over the
-    exploded pool (sum(v*rel)/max(n_rel,1)) rather than per-class joins,
-    so an empty class degrades to a zero vector instead of killing rows.
-
-    Scale shape: the pool cut is TakeOrderedAndProject over one broadcast
-    crossJoin pass; centroid assembly touches pool_size x dim rows (a
-    constant); the re-rank is a second broadcast pass — no shuffle ever
-    carries more than the corpus scan itself.
-    """
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias(
-            "embedding"
-        ),
-    )
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
-    cand = emb.filter(F.col("vec_id") != 0)
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    pool = (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "embedding",
-            _r4(dot / (nrm("embedding") * nrm("qv"))).alias("cos0"),
-        )
-        .orderBy(F.col("cos0").desc(), F.col("vec_id").asc())
-        .limit(_ROCCHIO_POOL)
-        .withColumn(
-            "rel",
-            F.when(
-                F.pmod(
-                    (F.col("vec_id") % _SPLIT_PRIME) * F.lit(2654435761),
-                    F.lit(4),
-                )
-                >= 2,
-                F.lit(1.0),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    ex = pool.select(
-        "rel", F.posexplode("embedding").alias("pos", "v")
-    )
-    cent = ex.groupBy("pos").agg(
-        (
-            F.sum(F.col("v") * F.col("rel"))
-            / F.greatest(F.sum("rel"), F.lit(1.0))
-        ).alias("cr"),
-        (
-            F.sum(F.col("v") * (1.0 - F.col("rel")))
-            / F.greatest(F.sum(1.0 - F.col("rel")), F.lit(1.0))
-        ).alias("cn"),
-    )
-    cents = cent.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cr"))),
-            lambda s: s.getField("cr"),
-        ).alias("crel"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cn"))),
-            lambda s: s.getField("cn"),
-        ).alias("cnrel"),
-    )
-    qprime = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            F.zip_with(
-                F.zip_with(
-                    "qv",
-                    "crel",
-                    lambda a, b: a * _ROCCHIO_A + b * _ROCCHIO_B,
-                ),
-                "cnrel",
-                lambda a, b: a - b * _ROCCHIO_G,
-            ).alias("qp")
-        )
-    )
-    dot2 = F.aggregate(
-        F.zip_with("embedding", "qp", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        cand.crossJoin(F.broadcast(qprime))
-        .select(
-            "vec_id",
-            _r4(dot2 / (nrm("embedding") * nrm("qp"))).alias("cos"),
-        )
-        .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
-
-
-SQL_ROCCHIO_FEEDBACK = f"""WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS embedding FROM embeddings
-), q AS (SELECT embedding AS qv FROM emb WHERE vec_id = 0),
-pool AS (
-  SELECT e.vec_id, e.embedding,
-         CASE WHEN ((e.vec_id % {_SPLIT_PRIME}) * 2654435761) % 4 >= 2
-              THEN 1.0 ELSE 0.0 END AS rel
-  FROM emb e CROSS JOIN q
-  WHERE e.vec_id <> 0
-  ORDER BY round(list_dot_product(e.embedding, q.qv)
-                 / (sqrt(list_dot_product(e.embedding, e.embedding))
-                    * sqrt(list_dot_product(q.qv, q.qv))), 4) DESC,
-           e.vec_id ASC
-  LIMIT {_ROCCHIO_POOL}
-),
-ex AS (
-  SELECT rel, unnest(embedding) AS v,
-         generate_subscripts(embedding, 1) AS pos
-  FROM pool
-),
-cent AS (
-  SELECT pos,
-         sum(v * rel) / greatest(sum(rel), 1.0) AS cr,
-         sum(v * (1.0 - rel)) / greatest(sum(1.0 - rel), 1.0) AS cn
-  FROM ex GROUP BY pos
-),
-cents AS (
-  SELECT list(cr ORDER BY pos) AS crel, list(cn ORDER BY pos) AS cnrel
-  FROM cent
-),
-qp AS (
-  SELECT list_transform(
-           list_zip(q.qv, c.crel, c.cnrel),
-           s -> s[1] * {_ROCCHIO_A} + s[2] * {_ROCCHIO_B}
-                - s[3] * {_ROCCHIO_G}) AS qp
-  FROM q CROSS JOIN cents c
-)
-SELECT e.vec_id AS vec_id,
-       round(list_dot_product(e.embedding, qp.qp)
-             / (sqrt(list_dot_product(e.embedding, e.embedding))
-                * sqrt(list_dot_product(qp.qp, qp.qp))), 4) AS cos
-FROM emb e CROSS JOIN qp WHERE e.vec_id <> 0
-ORDER BY cos DESC, vec_id ASC LIMIT 10"""
-
-
-# ---------------------------------------------------------------------------
 # weighted sampling without replacement (Efraimidis-Spirakis one-pass)
 # ---------------------------------------------------------------------------
 
@@ -7379,198 +4690,6 @@ SQL_WEIGHTED_SAMPLE = f"""SELECT doc_id,
              / greatest(n_chars, 1), 6) AS key
 FROM documents
 ORDER BY key DESC, doc_id ASC LIMIT {_WSAMPLE_K}"""
-
-
-_CHAMPION_C = 32
-_CHAMPION_TERMS = ["merge", "sort"]
-
-
-def q_champion_topk(spark, sf_dir):
-    """Impact-ordered champion lists (static index pruning, Manning IR
-    §7.1.3): each query term's posting list is cut to its _CHAMPION_C
-    highest-tf docs BEFORE scoring, and the top-10 is answered from the
-    champions only — the classic early-termination serving shape the
-    reference's exhaustive ISR scan (isr.cpp) cannot express.
-
-    df is the TRUE document frequency (computed before the champion
-    cut), so champion BM25 scores equal the exhaustive engine's scores
-    for every doc that survives the cut; only the candidate SET is
-    pruned.  Ties in the cut break by doc_id so the champion set is
-    deterministic across engines.
-
-    Scale shape: the query-term filter sits below the tf aggregation,
-    so only |terms| posting lists reach the shuffle; the champion cut is
-    a window partitioned by term over those lists alone (never the
-    vocabulary); and at serving time the scan cost per term is C docs,
-    not df — at 10^12 docs champion lists are what makes head terms
-    (df ~ 10^10) answerable at interactive latency.  The lists would be
-    precomputed at index-build time; this entry derives them inline so
-    the oracle can mirror it."""
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(_CHAMPION_TERMS))
-    tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(F.count("*").alias("_n_docs"), F.avg("dl").alias("_avgdl"))
-    w = Window.partitionBy("term").orderBy(
-        F.col("tf").desc(), F.col("doc_id").asc()
-    )
-    champ = (
-        tf.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _CHAMPION_C)
-        .drop("rn")
-    )
-    scored = (
-        champ.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "score",
-            bm25.idf_col(F.col("df"), F.col("_n_docs").cast("double"))
-            * bm25.weight_col(F.col("tf"), F.col("dl"), F.col("_avgdl")),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(_r4(F.sum("score")).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_CHAMPION_TOPK = f"""WITH {_TOKS_SQL},
-tfq AS (SELECT term, doc_id, count(*) AS tf FROM toks
-        WHERE term IN ('merge', 'sort') GROUP BY term, doc_id),
-dfq AS (SELECT term, count(*) AS df FROM tfq GROUP BY term),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-champ AS (
-  SELECT term, doc_id, tf,
-         row_number() OVER (PARTITION BY term
-                            ORDER BY tf DESC, doc_id ASC) AS rn
-  FROM tfq
-),
-scored AS (
-  SELECT c.doc_id,
-         ln((stats.n_docs - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0)
-         * (c.tf * (1.2 + 1.0))
-         / (c.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl)) AS score
-  FROM champ c
-  JOIN dfq ON c.term = dfq.term
-  JOIN dl ON c.doc_id = dl.doc_id
-  CROSS JOIN stats
-  WHERE c.rn <= {_CHAMPION_C}
-)
-SELECT doc_id, round(sum(score), 4) AS score FROM scored
-GROUP BY doc_id ORDER BY score DESC, doc_id ASC LIMIT 10"""
-
-
-_MIRROR_W = 4            # shingle width (words)
-_MIRROR_SRC_CAP = 16     # drop shingles present on more hosts (boilerplate)
-
-
-def q_mirror_sources(spark, sf_dir):
-    """Host-level mirror detection (Bharat & Broder, WWW 1999): two
-    sources are mirror candidates when their sampled 4-word shingle sets
-    overlap heavily.  Pipeline: per-host distinct shingles → a
-    deterministic 1-in-4 sample by md5 prefix (the paper's hash-mod
-    shingle sampling, identical in both engines) → boilerplate cap
-    (shingles on more than _MIRROR_SRC_CAP hosts are dropped before the
-    pair join) → shared-shingle self-join → overlap = shared /
-    min(|A|, |B|) over the sampled sets.
-
-    Scale shape: shingling is a NARROW array transform per doc (no
-    positional self-join — contrast _shingles' 3-way join, which this
-    entry deliberately avoids); the sample keeps a fixed fraction of
-    shingle mass independent of corpus size; and the src-cap bounds the
-    per-shingle fanout so the pair join is linear in sampled shingle
-    occurrences, never quadratic in hot-shingle df.  At 10^8 hosts the
-    pair list is sparse because only co-occurring sampled shingles pair."""
-    arr = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    d = _docs(spark, sf_dir).select("source", arr.alias("a"))
-    sh = (
-        d.filter(F.size("a") >= _MIRROR_W)
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(a) - {_MIRROR_W - 1}), "
-                    "i -> concat_ws(' ', a[i-1], a[i], a[i+1], a[i+2]))"
-                )
-            ).alias("s"),
-        )
-        .distinct()
-        .filter(F.substring(F.md5("s"), 1, 1).isin("0", "1", "2", "3"))
-    )
-    sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
-    ok = (
-        sh.groupBy("s").agg(F.count("*").alias("_nf"))
-        .filter(F.col("_nf") <= _MIRROR_SRC_CAP)
-        .select("s")
-    )
-    sh = sh.join(ok, "s", "left_semi")
-    a = sh.select(F.col("source").alias("src_a"), "s")
-    b = sh.select(F.col("source").alias("src_b"), "s")
-    pairs = (
-        a.join(b, "s")
-        .filter(F.col("src_a") < F.col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(F.count("*").alias("shared"))
-    )
-    return (
-        pairs.join(
-            sizes.select(F.col("source").alias("src_a"), F.col("n").alias("na")),
-            "src_a",
-        )
-        .join(
-            sizes.select(F.col("source").alias("src_b"), F.col("n").alias("nb")),
-            "src_b",
-        )
-        .select(
-            "src_a", "src_b", "shared",
-            _r4(F.col("shared") / F.least("na", "nb")).alias("overlap"),
-        )
-        .orderBy(F.col("shared").desc(), "src_a", "src_b")
-        .limit(10)
-    )
-
-
-SQL_MIRROR_SOURCES = f"""WITH toks AS (
-  SELECT source,
-         unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                            x -> x <> '')) AS term,
-         generate_subscripts(list_filter(regexp_split_to_array(lower(text),
-                            '[^a-z0-9]+'), x -> x <> ''), 1) AS pos,
-         doc_id
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT t1.source,
-         t1.term || ' ' || t2.term || ' ' || t3.term || ' ' || t4.term AS s
-  FROM toks t1
-  JOIN toks t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-  JOIN toks t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2
-  JOIN toks t4 ON t1.doc_id = t4.doc_id AND t4.pos = t1.pos + 3
-),
-samp AS (SELECT source, s FROM sh WHERE substring(md5(s), 1, 1) IN
-         ('0', '1', '2', '3')),
-sizes AS (SELECT source, count(*) AS n FROM samp GROUP BY source),
-ok AS (SELECT s FROM samp GROUP BY s HAVING count(*) <= {_MIRROR_SRC_CAP}),
-pairs AS (
-  SELECT a.source AS src_a, b.source AS src_b, count(*) AS shared
-  FROM samp a JOIN ok ON a.s = ok.s
-  JOIN samp b ON a.s = b.s AND a.source < b.source
-  GROUP BY a.source, b.source
-)
-SELECT src_a, src_b, shared,
-       round(shared / least(x.n, y.n), 4) AS overlap
-FROM pairs
-JOIN sizes x ON src_a = x.source
-JOIN sizes y ON src_b = y.source
-ORDER BY shared DESC, src_a ASC, src_b ASC LIMIT 10"""
 
 
 def q_lang_consistency(spark, sf_dir):
@@ -7633,552 +4752,6 @@ JOIN maj m ON d.source = m.source
 JOIN tot t ON d.source = t.source
 WHERE d.lang <> m.majority_lang
 ORDER BY d.source ASC, d.doc_id ASC"""
-
-
-_BOILER_W = 5          # template shingle width (words)
-_BOILER_MIN_DOCS = 10  # ignore hosts too small to show templates
-_BOILER_TOPK = 3       # template candidates reported per host
-
-
-def q_boilerplate_shingles(spark, sf_dir):
-    """Per-host template (boilerplate) candidates: for each source with
-    at least _BOILER_MIN_DOCS docs, the _BOILER_TOPK 5-word shingles
-    covering the most of that host's documents, with the coverage ratio
-    — the CCNet/trafilatura-style signal for navigation bars, footers,
-    and cookie banners that repeat across a host's pages and should be
-    stripped before LM training.
-
-    Scale shape: shingling is the same NARROW per-doc array transform as
-    mirror_sources (one scan, no positional self-join); presence
-    de-dups to (source, doc_id, shingle) before counting; and the
-    top-k window runs only over shingles REPEATED on the host
-    (docs >= 2 pre-filter) — true boilerplate repeats by definition, and
-    the filter keeps the per-source sort off the ~unique shingle tail,
-    which is the overwhelming mass at web scale.  Ties break by shingle
-    text so both engines pick the same candidates."""
-    from pyspark.sql import Window
-
-    arr = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    d = _docs(spark, sf_dir).select("doc_id", "source", arr.alias("a"))
-    sh = (
-        d.filter(F.size("a") >= _BOILER_W)
-        .select(
-            "source", "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(a) - {_BOILER_W - 1}), "
-                    "i -> concat_ws(' ', a[i-1], a[i], a[i+1], a[i+2], a[i+3]))"
-                )
-            ).alias("s"),
-        )
-        .distinct()
-    )
-    hosts = (
-        d.groupBy("source")
-        .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") >= _BOILER_MIN_DOCS)
-    )
-    cov = (
-        sh.groupBy("source", "s")
-        .agg(F.count("*").alias("docs"))
-        .filter(F.col("docs") >= 2)
-        .join(F.broadcast(hosts), "source")
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.col("docs").desc(), F.col("s").asc()
-    )
-    return (
-        cov.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _BOILER_TOPK)
-        .select(
-            "source",
-            F.col("s").alias("shingle"),
-            "docs",
-            _r4(F.col("docs") / F.col("n_docs")).alias("coverage"),
-        )
-        .orderBy("source", F.col("docs").desc(), "shingle")
-    )
-
-
-SQL_BOILERPLATE_SHINGLES = f"""WITH t AS (
-  SELECT doc_id, source,
-         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                     x -> x <> '') AS a
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT source, doc_id,
-         unnest(list_transform(range(1, len(a) - {_BOILER_W - 2}),
-           i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2] || ' ' || a[i+3]
-                || ' ' || a[i+4])) AS s
-  FROM t WHERE len(a) >= {_BOILER_W}
-),
-hosts AS (SELECT source, count(*) AS n_docs FROM documents
-          GROUP BY source HAVING count(*) >= {_BOILER_MIN_DOCS}),
-cov AS (
-  SELECT sh.source, sh.s, count(*) AS docs
-  FROM sh JOIN hosts ON sh.source = hosts.source
-  GROUP BY sh.source, sh.s HAVING count(*) >= 2
-),
-ranked AS (
-  SELECT source, s, docs,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY docs DESC, s ASC) AS rn
-  FROM cov
-)
-SELECT r.source, r.s AS shingle, r.docs,
-       round(r.docs / h.n_docs, 4) AS coverage
-FROM ranked r JOIN hosts h ON r.source = h.source
-WHERE r.rn <= {_BOILER_TOPK}
-ORDER BY r.source ASC, r.docs DESC, shingle ASC"""
-
-
-_HEAPS_POINTS = 8  # geometric doc-id checkpoints for the growth curve
-
-
-def q_heaps_law(spark, sf_dir):
-    """Heaps'-law fit of vocabulary growth, V(n) = k * n^beta over token
-    count n — the index-sizing statistic that says how the term
-    dictionary (and every vocab-keyed structure: df table, WAND bounds,
-    dictionary shards) grows as the crawl scales from 10^9 to 10^12
-    tokens.  Checkpoints are _HEAPS_POINTS integer-exact cuts of the
-    doc_id VALUE range (never a global row_number — no total sort);
-    vocab at a cut counts terms whose FIRST occurrence (min doc_id,
-    one vocab-sized aggregate) falls at or below it, tokens at a cut
-    sum doc lengths below it.  Both per-cut counts are broadcast theta
-    joins against the tiny checkpoint table, map-side combinable to
-    |checkpoints| rows.  The log-log least-squares fold is one 8-row
-    aggregate; both engines run the identical formula on identical
-    integer pairs.
-
-    Returns one row: beta (the Heaps exponent, ~0.5 for natural text),
-    k (the coefficient), and the checkpoint count."""
-    toks = _tokens(spark, sf_dir)
-    bounds = _docs(spark, sf_dir).agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    )
-    cps = (
-        spark.range(1, _HEAPS_POINTS + 1)
-        .withColumnRenamed("id", "i")
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            (
-                F.col("lo")
-                + F.floor(
-                    (F.col("i") * (F.col("hi") - F.col("lo"))
-                     + F.lit(_HEAPS_POINTS - 1))
-                    / F.lit(_HEAPS_POINTS)
-                )
-            ).cast("long").alias("cp")
-        )
-    )
-    first = toks.groupBy("term").agg(F.min("doc_id").alias("fd"))
-    vocab = (
-        first.join(F.broadcast(cps), F.col("fd") <= F.col("cp"))
-        .groupBy("cp").agg(F.count("*").alias("vocab"))
-    )
-    tokens = (
-        _dl(spark, sf_dir)
-        .join(F.broadcast(cps), F.col("doc_id") <= F.col("cp"))
-        .groupBy("cp").agg(F.sum("dl").alias("tokens"))
-    )
-    pts = vocab.join(tokens, "cp").select(
-        F.log(F.col("tokens").cast("double")).alias("x"),
-        F.log(F.col("vocab").cast("double")).alias("y"),
-    )
-    fit = pts.agg(
-        F.count("*").alias("n"),
-        F.avg("x").alias("mx"),
-        F.avg("y").alias("my"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    beta = (F.col("sxy") - F.col("n") * F.col("mx") * F.col("my")) / (
-        F.col("sxx") - F.col("n") * F.col("mx") * F.col("mx")
-    )
-    return fit.select(
-        _r4(beta).alias("beta"),
-        _r4(F.exp(F.col("my") - beta * F.col("mx"))).alias("k"),
-        F.col("n").cast("long").alias("n_points"),
-    )
-
-
-SQL_HEAPS_LAW = f"""WITH {_TOKS_SQL},
-bounds AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-cps AS (
-  SELECT lo + (i * (hi - lo) + {_HEAPS_POINTS - 1}) // {_HEAPS_POINTS} AS cp
-  FROM bounds, range(1, {_HEAPS_POINTS + 1}) r(i)
-),
-first AS (SELECT term, min(doc_id) AS fd FROM toks GROUP BY term),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-vocab AS (SELECT cp, count(*) AS vocab FROM first JOIN cps ON fd <= cp
-          GROUP BY cp),
-tokens AS (SELECT cp, sum(dl) AS tokens FROM dl JOIN cps ON doc_id <= cp
-           GROUP BY cp),
-pts AS (SELECT ln(CAST(tokens AS DOUBLE)) AS x, ln(CAST(vocab AS DOUBLE)) AS y
-        FROM vocab JOIN tokens USING (cp)),
-fit AS (SELECT count(*) AS n, avg(x) AS mx, avg(y) AS my,
-               sum(x * y) AS sxy, sum(x * x) AS sxx FROM pts)
-SELECT round((sxy - n * mx * my) / (sxx - n * mx * mx), 4) AS beta,
-       round(exp(my - (sxy - n * mx * my) / (sxx - n * mx * mx) * mx), 4)
-         AS k,
-       CAST(n AS BIGINT) AS n_points
-FROM fit"""
-
-
-_ZIPF_K = 1000  # head terms used for the rank-frequency fit
-
-
-def q_zipf_fit(spark, sf_dir):
-    """Zipf's-law fit of the term rank-frequency curve: slope and
-    intercept of ln(freq) over ln(rank) for the _ZIPF_K most frequent
-    terms — the skew statistic that sizes posting-list caching, WAND
-    block budgets, and hot-shard salting (slope ~ -1 means the head
-    term's list is ~K× the rank-K list).
-
-    Scale shape: the head cut is a distributed TakeOrdered over the
-    term-frequency aggregate (count desc, term asc — deterministic at
-    the boundary); the rank window and the regression fold then touch
-    only those _ZIPF_K rows.  No global sort of the vocabulary."""
-    from pyspark.sql import Window
-
-    head = (
-        _tokens(spark, sf_dir)
-        .groupBy("term").agg(F.count("*").alias("freq"))
-        .orderBy(F.col("freq").desc(), F.col("term").asc())
-        .limit(_ZIPF_K)
-    )
-    w = Window.orderBy(F.col("freq").desc(), F.col("term").asc())
-    pts = head.withColumn("rank", F.row_number().over(w)).select(
-        F.log(F.col("rank").cast("double")).alias("x"),
-        F.log(F.col("freq").cast("double")).alias("y"),
-    )
-    fit = pts.agg(
-        F.count("*").alias("n"),
-        F.avg("x").alias("mx"),
-        F.avg("y").alias("my"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    slope = (F.col("sxy") - F.col("n") * F.col("mx") * F.col("my")) / (
-        F.col("sxx") - F.col("n") * F.col("mx") * F.col("mx")
-    )
-    return fit.select(
-        _r4(slope).alias("slope"),
-        _r4(F.col("my") - slope * F.col("mx")).alias("intercept"),
-        F.col("n").cast("long").alias("n_terms"),
-    )
-
-
-SQL_ZIPF_FIT = f"""WITH {_TOKS_SQL},
-head AS (SELECT term, count(*) AS freq FROM toks GROUP BY term
-         ORDER BY freq DESC, term ASC LIMIT {_ZIPF_K}),
-pts AS (
-  SELECT ln(CAST(row_number() OVER (ORDER BY freq DESC, term ASC)
-                 AS DOUBLE)) AS x,
-         ln(CAST(freq AS DOUBLE)) AS y
-  FROM head
-),
-fit AS (SELECT count(*) AS n, avg(x) AS mx, avg(y) AS my,
-               sum(x * y) AS sxy, sum(x * x) AS sxx FROM pts)
-SELECT round((sxy - n * mx * my) / (sxx - n * mx * mx), 4) AS slope,
-       round(my - (sxy - n * mx * my) / (sxx - n * mx * mx) * mx, 4)
-         AS intercept,
-       CAST(n AS BIGINT) AS n_terms
-FROM fit"""
-
-
-# ---------------------------------------------------------------------------
-# COEC position-normalized click model
-# ---------------------------------------------------------------------------
-
-# The synthetic event log carries no SERP rank, so the presentation
-# position is DERIVED deterministically from the event id (pmod 10 + 1 —
-# ten result slots).  Both the Spark plan and the DuckDB oracle compute
-# the same derivation, so the model's arithmetic is fully exercised even
-# though the position itself is synthetic.
-_COEC_SLOTS = 10
-
-
-def q_coec_model(spark, sf_dir):
-    """COEC click model (clicks over expected clicks — the standard
-    position-bias correction for ranking feedback): a global
-    position-CTR prior ctr[p] = clicks_at_p / views_at_p, then per item
-    expected = sum of ctr[p] over the item's view impressions and
-    coec = clicks / expected.  COEC > 1 means the item out-performs an
-    average item shown at the same positions — the de-biased relevance
-    signal CTR alone can't give.  All items with positive expectation,
-    ordered by COEC.
-
-    Scale shape: the prior is a ≤10-row aggregate (one map-side pass
-    over the filtered log) joined back by BROADCAST; the per-item
-    expectation and click counts are map-side-combinable aggregates
-    keyed on item — the only real shuffle.  At 10^12 events nothing
-    here exceeds per-item cardinality.
-    """
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("view", "click"))
-        .select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-            (F.pmod(F.col("event_id"), F.lit(_COEC_SLOTS)) + 1)
-            .cast("long").alias("pos"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    prior = (
-        ev.groupBy("pos")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            .alias("v"),
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .alias("c"),
-        )
-        .filter(F.col("v") > 0)
-        .select("pos", (F.col("c") / F.col("v")).alias("pctr"))
-    )
-    expected = (
-        ev.filter(F.col("event_type") == "view")
-        .join(F.broadcast(prior), "pos")
-        .groupBy("item")
-        .agg(F.sum("pctr").alias("expected"))
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("item")
-        .agg(F.count("*").cast("long").alias("clicks"))
-    )
-    return (
-        expected.join(clicks, "item", "left")
-        .filter(F.col("expected") > 0)
-        .select(
-            "item",
-            F.coalesce(F.col("clicks"), F.lit(0)).cast("long").alias("clicks"),
-            _r4("expected").alias("expected"),
-            _r4(
-                F.coalesce(F.col("clicks"), F.lit(0)) / F.col("expected")
-            ).alias("coec"),
-        )
-        .orderBy(F.col("coec").desc(), F.col("item").asc())
-    )
-
-
-SQL_COEC_MODEL = f"""WITH ev AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item,
-         CAST(event_id % {_COEC_SLOTS} + 1 AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('view', 'click')
-),
-ev2 AS (SELECT * FROM ev WHERE item IS NOT NULL),
-prior AS (
-  SELECT pos,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-           / CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS pctr
-  FROM ev2 GROUP BY pos
-  HAVING sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) > 0
-),
-expected AS (
-  SELECT e.item, sum(p.pctr) AS expected
-  FROM ev2 e JOIN prior p ON e.pos = p.pos
-  WHERE e.event_type = 'view' GROUP BY e.item
-),
-clicks AS (SELECT item, count(*) AS clicks FROM ev2
-           WHERE event_type = 'click' GROUP BY item)
-SELECT x.item, CAST(coalesce(c.clicks, 0) AS BIGINT) AS clicks,
-       round(x.expected, 4) AS expected,
-       round(coalesce(c.clicks, 0) / x.expected, 4) AS coec
-FROM expected x LEFT JOIN clicks c ON x.item = c.item
-WHERE x.expected > 0
-ORDER BY coec DESC, x.item ASC"""
-
-
-# ---------------------------------------------------------------------------
-# Adamic–Adar link prediction over the user–item view graph
-# ---------------------------------------------------------------------------
-
-
-def q_adamic_adar(spark, sf_dir):
-    """Adamic–Adar link prediction (Adamic & Adar 2003): for item pairs
-    sharing viewers, AA(i,j) = Σ_u 1/ln(deg(u)) over common users u —
-    a shared low-degree user is strong evidence the items are related,
-    a shared power-user is weak evidence.  Top-20 predicted links by AA
-    score, pair-id tiebreak; `common` = number of shared users.
-
-    Scale shape: identical hot-key bound to cooccur_items — each user's
-    history is capped at _COOC_CAP items (row_number by view count
-    desc, item asc) BEFORE the self-join, so a user contributes at most
-    C(cap, 2) pairs; degrees are computed over the same capped universe
-    (internally consistent weights) and attached to the LEFT side of
-    the self-join on user_id, reusing the same hash exchange the
-    self-join needs — no extra shuffle, no unbounded broadcast.
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "view")
-        .select(
-            "user_id",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    per = ev.groupBy("user_id", "item").agg(F.count("*").alias("v"))
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("v").desc(), F.col("item").asc()
-    )
-    capped = (
-        per.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= _COOC_CAP)
-        .select("user_id", "item")
-    )
-    deg = capped.groupBy("user_id").agg(F.count("*").alias("deg"))
-    weighted = (
-        capped.join(deg.filter(F.col("deg") >= 2), "user_id")
-        .withColumn("w", F.lit(1.0) / F.log(F.col("deg")))
-    )
-    return (
-        weighted.alias("a")
-        .join(capped.alias("b"), "user_id")
-        .filter(F.col("a.item") < F.col("b.item"))
-        .groupBy(
-            F.col("a.item").alias("item_a"), F.col("b.item").alias("item_b")
-        )
-        .agg(
-            F.count("*").cast("long").alias("common"),
-            _r4(F.sum("w")).alias("aa"),
-        )
-        .orderBy(
-            F.col("aa").desc(), F.col("item_a").asc(), F.col("item_b").asc()
-        )
-        .limit(20)
-    )
-
-
-SQL_ADAMIC_ADAR = f"""WITH ev AS (
-  SELECT user_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type = 'view'
-    AND json_extract_string(props, '$.k') IS NOT NULL
-),
-per AS (SELECT user_id, item, count(*) AS v FROM ev GROUP BY user_id, item),
-capped AS (
-  SELECT user_id, item FROM (
-    SELECT user_id, item,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY v DESC, item ASC) AS rn
-    FROM per) WHERE rn <= {_COOC_CAP}
-),
-deg AS (SELECT user_id, count(*) AS deg FROM capped GROUP BY user_id),
-weighted AS (
-  SELECT c.user_id, c.item, 1.0 / ln(d.deg) AS w
-  FROM capped c JOIN deg d ON c.user_id = d.user_id AND d.deg >= 2
-)
-SELECT a.item AS item_a, b.item AS item_b,
-       CAST(count(*) AS BIGINT) AS common, round(sum(a.w), 4) AS aa
-FROM weighted a JOIN capped b
-  ON a.user_id = b.user_id AND a.item < b.item
-GROUP BY a.item, b.item
-ORDER BY aa DESC, item_a ASC, item_b ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# BM25-MaxP passage retrieval
-# ---------------------------------------------------------------------------
-
-_MAXP_W = 50   # passage width in tokens (disjoint windows)
-
-
-def q_bm25_maxp(spark, sf_dir):
-    """BM25-MaxP passage retrieval (Callan 1994; Dai & Callan 2019's
-    baseline): chop every document into disjoint _MAXP_W-token
-    passages, score each passage with BM25 computed over PASSAGE-level
-    statistics (passage df, passage count, average passage length —
-    long documents no longer hide a relevant paragraph behind a huge
-    dl normalizer), and score the document as its best passage.
-    Query 'merge join' (sum over terms per passage), top-10 docs with
-    the winning passage index.
-
-    Scale shape: the query-term filter is pushed below the tf
-    aggregate (only matching tokens shuffle); the per-term passage df
-    is a ≤|query|-row broadcast; passage stats are a 1-row broadcast
-    side plan; best-passage is a window partitioned BY DOC over the
-    per-passage sums (no global sort), and the final cut is top-k.
-    """
-    from pyspark.sql import Window
-
-    terms = ["merge", "join"]
-    ptok = _tokens(spark, sf_dir).select(
-        "doc_id",
-        "term",
-        F.floor((F.col("pos") - 1) / _MAXP_W).cast("long").alias("pid"),
-    )
-    pl = ptok.groupBy("doc_id", "pid").agg(F.count("*").alias("pl"))
-    stats = pl.agg(
-        F.count("*").alias("n_pass"), F.avg("pl").alias("avgpl")
-    )
-    tf = (
-        ptok.filter(F.col("term").isin(terms))
-        .groupBy("term", "doc_id", "pid")
-        .agg(F.count("*").alias("tf"))
-    )
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log(
-        (F.col("n_pass") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    score = idf * (F.col("tf") * (1.2 + 1.0)) / (
-        F.col("tf") + 1.2 * (1.0 - 0.75 + 0.75 * F.col("pl") / F.col("avgpl"))
-    )
-    scored = (
-        tf.join(pl, ["doc_id", "pid"])
-        .join(F.broadcast(df), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "pid", score.alias("s"))
-    )
-    psum = scored.groupBy("doc_id", "pid").agg(F.sum("s").alias("s"))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("s").desc(), F.col("pid").asc()
-    )
-    return (
-        psum.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", F.col("pid").alias("passage"), _r4("s").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_BM25_MAXP = f"""WITH {_TOKS_SQL},
-ptok AS (SELECT doc_id, term,
-                CAST((pos - 1) // {_MAXP_W} AS BIGINT) AS pid FROM toks),
-pl AS (SELECT doc_id, pid, count(*) AS pl FROM ptok GROUP BY doc_id, pid),
-stats AS (SELECT count(*) AS n_pass, avg(pl) AS avgpl FROM pl),
-tf AS (SELECT term, doc_id, pid, count(*) AS tf FROM ptok
-       WHERE term IN ('merge', 'join') GROUP BY term, doc_id, pid),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id, tf.pid,
-         ln((stats.n_pass - df.df + 0.5) / (df.df + 0.5) + 1.0)
-         * (tf.tf * (1.2 + 1.0))
-         / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * pl.pl / stats.avgpl)) AS s
-  FROM tf
-  JOIN df ON tf.term = df.term
-  JOIN pl ON tf.doc_id = pl.doc_id AND tf.pid = pl.pid
-  CROSS JOIN stats
-),
-psum AS (SELECT doc_id, pid, sum(s) AS s FROM scored GROUP BY doc_id, pid),
-best AS (
-  SELECT doc_id, pid, s,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY s DESC, pid ASC) AS rn
-  FROM psum
-)
-SELECT doc_id, pid AS passage, round(s, 4) AS score
-FROM best WHERE rn = 1
-ORDER BY score DESC, doc_id ASC LIMIT 10"""
 
 
 # ---------------------------------------------------------------------------
@@ -8265,158 +4838,6 @@ SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
 FROM cum CROSS JOIN tot
 WHERE cum_tokens <= CAST(floor({_CURR_FRAC} * tot.t) AS BIGINT)
 ORDER BY cum_tokens ASC"""
-
-
-# ---------------------------------------------------------------------------
-# MMR result diversification
-# ---------------------------------------------------------------------------
-
-_MMR_LAMBDA = 0.7   # relevance weight (1-λ penalizes redundancy)
-_MMR_CAND = 50      # candidate pool (distributed TakeOrdered cut)
-_MMR_K = 10         # results returned
-
-
-def q_mmr_diversify(spark, sf_dir):
-    """Maximal Marginal Relevance reranking (Carbonell & Goldstein 1998)
-    — the classic SERP diversification: from the top-_MMR_CAND
-    candidates by cosine relevance to the query vector (vec 0), greedily
-    select _MMR_K results maximizing λ·rel − (1−λ)·max-similarity to the
-    already-selected set; near-duplicates of an already-chosen result
-    get demoted even when highly relevant.
-
-    Scale shape: candidate generation is the distributed part (cosine
-    scan + TakeOrderedAndProject, or the IVF/int8 path at 10^12
-    vectors); the greedy selection is inherently SEQUENTIAL over a
-    BOUNDED 50-row pool, so it runs as one applyInPandas group on an
-    executor — the standard head-node rerank shape, never a driver
-    collect, never an unbounded group.  Dot products accumulate
-    left-to-right in float64 on both engines (plain loop here,
-    list_dot_product in the oracle).
-    """
-    import pandas as pd
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("e").alias("qv"))
-    dot = F.aggregate(
-        F.zip_with("e", "qv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    cand = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "e", (dot / (nrm("e") * nrm("qv"))).alias("rel"))
-        .orderBy(F.col("rel").desc(), F.col("vec_id").asc())
-        .limit(_MMR_CAND)
-    )
-
-    def _greedy(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        rows = [
-            (int(r.vec_id), [float(x) for x in r.e], float(r.rel))
-            for r in pdf.itertuples()
-        ]
-
-        def _dot(a, b):
-            s = 0.0
-            for x, y in zip(a, b):
-                s += x * y
-            return s
-
-        norms = {v: _dot(e, e) ** 0.5 for v, e, _r in rows}
-        cos = {}
-        for i, (va, ea, _ra) in enumerate(rows):
-            for vb, eb, _rb in rows[i + 1:]:
-                c = _dot(ea, eb) / (norms[va] * norms[vb])
-                cos[(va, vb)] = cos[(vb, va)] = c
-        selected, out = [], []
-        pool = {v: r for v, _e, r in rows}
-        while pool and len(selected) < _MMR_K:
-            best = None
-            for v, r in pool.items():
-                pen = max((cos[(v, s)] for s in selected), default=0.0)
-                score = _MMR_LAMBDA * r - (1 - _MMR_LAMBDA) * pen
-                # ties break toward the smaller vec_id (same as the oracle)
-                if best is None or score > best[0] or (
-                    score == best[0] and v < best[1]
-                ):
-                    best = (score, v)
-            score, v = best
-            selected.append(v)
-            out.append((len(selected), v, round(pool.pop(v), 4),
-                        round(score, 4)))
-        return pd.DataFrame(
-            out, columns=["rank", "vec_id", "rel", "mmr"]
-        )
-
-    return (
-        cand.groupBy(F.lit(1).alias("_g"))
-        .applyInPandas(
-            lambda _k, pdf: _greedy(pdf),
-            "rank long, vec_id long, rel double, mmr double",
-        )
-        .orderBy("rank")
-    )
-
-
-def _mmr_sql() -> str:
-    """Unrolled greedy MMR (the pagerank/hits unrolled-CTE idiom): sel_i
-    holds the first i+1 picks; each pick is an argmax over the
-    remaining candidates with max-similarity-to-selected from the
-    pairwise sims CTE."""
-    lam, mu = _MMR_LAMBDA, 1 - _MMR_LAMBDA
-    steps = []
-    for i in range(1, _MMR_K):
-        steps.append(f"""pick{i} AS MATERIALIZED (
-  SELECT c.vec_id, c.rel, {i + 1} AS rank,
-         {lam} * c.rel - {mu} * (
-           SELECT max(s.sim) FROM sims s
-           JOIN sel{i - 1} t ON s.bv = t.vec_id
-           WHERE s.av = c.vec_id) AS mmr
-  FROM cand c WHERE c.vec_id NOT IN (SELECT vec_id FROM sel{i - 1})
-  ORDER BY mmr DESC, c.vec_id ASC LIMIT 1
-),
-sel{i} AS MATERIALIZED (SELECT * FROM sel{i - 1}
-  UNION ALL SELECT * FROM pick{i})""")
-    body = ",\n".join(steps)
-    # MATERIALIZED: the unrolled picks reference cand/sims ~2x per step;
-    # without it DuckDB inlines the CTEs and re-opens the parquet scan
-    # once per reference (FD exhaustion + quadratic rescans).
-    return f"""WITH emb AS MATERIALIZED (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-q AS (SELECT e AS qv FROM emb WHERE vec_id = 0),
-cand AS MATERIALIZED (
-  SELECT v.vec_id, v.e,
-         list_dot_product(v.e, q.qv)
-         / (sqrt(list_dot_product(v.e, v.e))
-            * sqrt(list_dot_product(q.qv, q.qv))) AS rel
-  FROM emb v CROSS JOIN q WHERE v.vec_id <> 0
-  ORDER BY rel DESC, v.vec_id ASC LIMIT {_MMR_CAND}
-),
-sims AS MATERIALIZED (
-  SELECT a.vec_id AS av, b.vec_id AS bv,
-         list_dot_product(a.e, b.e)
-         / (sqrt(list_dot_product(a.e, a.e))
-            * sqrt(list_dot_product(b.e, b.e))) AS sim
-  FROM cand a JOIN cand b ON a.vec_id <> b.vec_id
-),
-sel0 AS MATERIALIZED (
-  SELECT vec_id, rel, 1 AS rank, {lam} * rel AS mmr
-  FROM cand ORDER BY rel DESC, vec_id ASC LIMIT 1
-),
-{body}
-SELECT CAST(rank AS BIGINT) AS rank, vec_id,
-       round(rel, 4) AS rel, round(mmr, 4) AS mmr
-FROM sel{_MMR_K - 1} ORDER BY rank ASC"""
-
-
-SQL_MMR_DIVERSIFY = _mmr_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -8572,574 +4993,6 @@ FROM per ORDER BY shard ASC"""
 
 
 # ---------------------------------------------------------------------------
-# Query clarity score (query performance prediction)
-# ---------------------------------------------------------------------------
-
-_CLARITY_SEEDS = ["data", "join", "merge", "query", "spark"]
-_CLARITY_FB = 10
-
-
-def q_clarity_score(spark, sf_dir):
-    """Query clarity score (Cronen-Townsend, Zhai & Croft 2002) — the
-    classic pre-retrieval-free query performance predictor: build the
-    query's feedback language model P(w|Q) as the uniform mixture of
-    the top-_CLARITY_FB BM25 docs' MLE models, then
-    clarity = Σ_w P(w|Q)·ln(P(w|Q)/P(w|C)) — the KL divergence from the
-    corpus model.  High clarity = focused result set (the engine can
-    trust the ranking); low clarity = the query retrieves
-    corpus-looking noise and deserves reformulation/expansion.  One row
-    per seed query.
-
-    Feedback-set determinism: docs rank by ROUNDED score with doc_id
-    tiebreak (the rm1_expansion trick) so both engines pick identical
-    feedback sets.  Scale shape: only the |seeds| posting lists reach
-    the BM25 pass (_scored pushes the term filter below tf); the
-    feedback set (≤ seeds×FB rows) and its bounded vocabulary
-    BROADCAST; the corpus LM joins the small side by broadcast, so the
-    vocabulary-sized ctf table is never shuffled wholesale and never
-    broadcast itself (the dsir lesson).
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _CLARITY_SEEDS).filter(
-        F.col("term").isin(_CLARITY_SEEDS)
-    )
-    w = Window.partitionBy("seed").orderBy(
-        F.col("s").desc(), F.col("doc_id").asc()
-    )
-    fb = (
-        s.select(F.col("term").alias("seed"), "doc_id", _r4("score").alias("s"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= _CLARITY_FB)
-        .select("seed", "doc_id")
-    )
-    nfb = fb.groupBy("seed").agg(F.count("*").alias("n_fb"))
-    tf_all = _tf(spark, sf_dir)
-    dl = _dl(spark, sf_dir)
-    pwd = (
-        tf_all.join(F.broadcast(fb), "doc_id")
-        .join(dl, "doc_id")
-        .select("seed", "term", (F.col("tf") / F.col("dl")).alias("p"))
-    )
-    pwq = pwd.groupBy("seed", "term").agg(F.sum("p").alias("sp"))
-    ctf = _tokens(spark, sf_dir).groupBy("term").agg(
-        F.count("*").alias("ctf")
-    )
-    tot = _dl(spark, sf_dir).agg(F.sum("dl").alias("t"))
-    pq = F.col("sp") / F.col("n_fb")
-    pc = F.col("ctf") / F.col("t")
-    return (
-        ctf.join(F.broadcast(pwq), "term")
-        .join(F.broadcast(nfb), "seed")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("seed", "n_fb")
-        .agg(
-            F.count("*").cast("long").alias("n_terms"),
-            _r4(F.sum(pq * F.log(pq / pc))).alias("clarity"),
-        )
-        .orderBy(F.col("seed").asc())
-    )
-
-
-SQL_CLARITY_SCORE = f"""WITH {_BM25_CORE_SQL},
-fb AS (
-  SELECT seed, doc_id FROM (
-    SELECT term AS seed, doc_id,
-           row_number() OVER (PARTITION BY term
-                              ORDER BY round(score, 4) DESC,
-                                       doc_id ASC) AS rn
-    FROM scored
-    WHERE term IN ('data', 'join', 'merge', 'query', 'spark'))
-  WHERE rn <= {_CLARITY_FB}
-),
-nfb AS (SELECT seed, count(*) AS n_fb FROM fb GROUP BY seed),
-pwd AS (
-  SELECT f.seed, t.term, CAST(t.tf AS DOUBLE) / d.dl AS p
-  FROM tf t JOIN fb f ON t.doc_id = f.doc_id
-  JOIN dl d ON t.doc_id = d.doc_id
-),
-pwq AS (SELECT seed, term, sum(p) AS sp FROM pwd GROUP BY seed, term),
-ctf AS (SELECT term, count(*) AS ctf FROM toks GROUP BY term),
-tot AS (SELECT sum(dl) AS t FROM dl)
-SELECT p.seed, CAST(n.n_fb AS BIGINT) AS n_fb,
-       CAST(count(*) AS BIGINT) AS n_terms,
-       round(sum((p.sp / n.n_fb)
-                 * ln((p.sp / n.n_fb) / (c.ctf / tot.t))), 4) AS clarity
-FROM pwq p
-JOIN nfb n ON p.seed = n.seed
-JOIN ctf c ON p.term = c.term
-CROSS JOIN tot
-GROUP BY p.seed, n.n_fb
-ORDER BY p.seed ASC"""
-
-
-# ---------------------------------------------------------------------------
-# Term burstiness (keyword-stuffing / spam lexical signal)
-# ---------------------------------------------------------------------------
-
-_BURST_MIN_DF = 5
-
-
-def q_term_burstiness(spark, sf_dir):
-    """Term burstiness (Church & Gale; Katz's K-mixture observation that
-    content words repeat within a document far more than Poisson
-    predicts): per term with df ≥ _BURST_MIN_DF, the within-document
-    repeat rate b = ctf/df, and the Poisson check df_poisson =
-    N·(1−e^(−ctf/N)) — a term whose observed df falls well below
-    df_poisson concentrates its mass in few docs (df_ratio < 1 =
-    bursty).  Extreme b with low df is the keyword-stuffing /
-    spam-page lexical signature the static ranker demotes.  Top-20 by
-    b, term tiebreak.
-
-    Scale shape: one map-side-combinable groupBy over the tf table (the
-    same aggregate the dictionary build runs), a 1-row doc-count
-    broadcast, and a top-k cut — no joins against the vocabulary, no
-    window over it.
-    """
-    agg = _tf(spark, sf_dir).groupBy("term").agg(
-        F.count("*").cast("long").alias("df"),
-        F.sum("tf").cast("long").alias("ctf"),
-        F.max("tf").cast("long").alias("max_tf"),
-    ).filter(F.col("df") >= _BURST_MIN_DF)
-    n = _dl(spark, sf_dir).agg(F.count("*").alias("n_docs"))
-    lam = F.col("ctf") / F.col("n_docs")
-    df_pois = F.col("n_docs") * (F.lit(1.0) - F.exp(-lam))
-    return (
-        agg.crossJoin(F.broadcast(n))
-        .select(
-            "term", "df", "ctf", "max_tf",
-            _r4(F.col("ctf") / F.col("df")).alias("b"),
-            _r4(F.col("df") / df_pois).alias("df_ratio"),
-        )
-        .orderBy(F.col("b").desc(), F.col("term").asc())
-        .limit(20)
-    )
-
-
-SQL_TERM_BURSTINESS = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id, count(*) AS tf FROM toks GROUP BY term, doc_id),
-agg AS (
-  SELECT term, count(*) AS df, sum(tf) AS ctf, max(tf) AS max_tf
-  FROM tf GROUP BY term HAVING count(*) >= {_BURST_MIN_DF}
-),
-n AS (SELECT count(*) AS n_docs FROM (SELECT DISTINCT doc_id FROM toks))
-SELECT term, CAST(df AS BIGINT) AS df, CAST(ctf AS BIGINT) AS ctf,
-       CAST(max_tf AS BIGINT) AS max_tf,
-       round(CAST(ctf AS DOUBLE) / df, 4) AS b,
-       round(df / (n_docs * (1.0 - exp(-(CAST(ctf AS DOUBLE) / n_docs)))),
-             4) AS df_ratio
-FROM agg CROSS JOIN n
-ORDER BY b DESC, term ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# Interleaved ranker evaluation (online A/B, Joachims-style)
-# ---------------------------------------------------------------------------
-
-_IL_SEEDS = ["data", "join", "merge", "query", "spark"]
-_IL_K = 10       # per-ranker candidate depth and interleaved list length
-_IL_SCAN = 5     # cascade user scans this many interleaved positions
-_IL_MU = 200.0   # Dirichlet pseudo-count for ranker B
-
-
-def q_interleaved_eval(spark, sf_dir):
-    """Interleaved ranker evaluation (Joachims 2002 / the online-eval
-    primitive behind team-draft A/B tests): per seed query, ranker A
-    (BM25) and ranker B (Dirichlet query-likelihood, mu=200) each
-    produce a top-10; the two lists interleave deterministically — A's
-    rank-r entry lands at position 2r-1, B's at 2r, a document shown by
-    both keeps its earliest position and credits that team (the
-    deterministic twin of team-draft's coin, so the oracle can mirror
-    it).  A cascade user scans the first 5 interleaved positions and
-    clicks every consensus-relevant doc (one appearing in BOTH top-10
-    lists); the team with more credited clicks wins the query.  One row
-    per seed: clicks_a, clicks_b, winner.
-
-    Determinism: both rankers order by ROUNDED (4dp) score with doc_id
-    tiebreak, so both engines draft identical lists.  Scale shape: only
-    the |seeds| posting lists reach either scorer (term filter below the
-    tf agg); every window partitions by seed over ≤2k rows per seed; the
-    corpus LM for ranker B is a 1-row broadcast total plus per-seed ctf
-    — nothing vocabulary-sized shuffles or broadcasts.
-    """
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(_IL_SEEDS))
-    tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = _dl(spark, sf_dir)
-    tot = dl.agg(F.sum("dl").alias("_t"))
-    ctf = tf.groupBy("term").agg(F.sum("tf").alias("ctf"))
-
-    a = _scored(spark, sf_dir, _IL_SEEDS).select(
-        F.col("term").alias("seed"), "doc_id", _r4("score").alias("s")
-    )
-    wa = Window.partitionBy("seed").orderBy(
-        F.col("s").desc(), F.col("doc_id").asc()
-    )
-    a = (
-        a.withColumn("r", F.row_number().over(wa))
-        .filter(F.col("r") <= _IL_K)
-        .select("seed", "doc_id", (2 * F.col("r") - 1).alias("ipos"))
-    )
-
-    p = F.col("ctf") / F.col("_t")
-    b = (
-        tf.join(F.broadcast(ctf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("term").alias("seed"),
-            "doc_id",
-            _r4(
-                F.log(
-                    (F.col("tf") + F.lit(_IL_MU) * p)
-                    / (F.col("dl") + F.lit(_IL_MU))
-                )
-            ).alias("s"),
-        )
-    )
-    b = (
-        b.withColumn("r", F.row_number().over(wa))
-        .filter(F.col("r") <= _IL_K)
-        .select("seed", "doc_id", (2 * F.col("r")).alias("ipos"))
-    )
-
-    both = a.unionByName(b)
-    merged = both.groupBy("seed", "doc_id").agg(
-        F.min("ipos").alias("ipos"), F.count("*").alias("n_lists")
-    )
-    wr = Window.partitionBy("seed").orderBy(F.col("ipos").asc())
-    shown = (
-        merged.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= _IL_K)
-    )
-    click = (F.col("rank") <= _IL_SCAN) & (F.col("n_lists") == 2)
-    team_a = F.col("ipos") % 2 == 1
-    out = shown.groupBy("seed").agg(
-        F.count("*").cast("long").alias("n_shown"),
-        F.sum(F.when(click & team_a, 1).otherwise(0))
-        .cast("long").alias("clicks_a"),
-        F.sum(F.when(click & ~team_a, 1).otherwise(0))
-        .cast("long").alias("clicks_b"),
-    )
-    winner = (
-        F.when(F.col("clicks_a") > F.col("clicks_b"), F.lit("A"))
-        .when(F.col("clicks_b") > F.col("clicks_a"), F.lit("B"))
-        .otherwise(F.lit("tie"))
-    )
-    return out.select(
-        "seed", "n_shown", "clicks_a", "clicks_b", winner.alias("winner")
-    ).orderBy("seed")
-
-
-SQL_INTERLEAVED_EVAL = f"""WITH {_BM25_CORE_SQL},
-seeds AS (SELECT unnest(['data','join','merge','query','spark']) AS seed),
-tot AS (SELECT sum(dl) AS t FROM dl),
-ctf AS (SELECT tf.term, sum(tf.tf) AS ctf FROM tf
-        JOIN seeds ON tf.term = seeds.seed GROUP BY tf.term),
-ranked_a AS (
-  SELECT term AS seed, doc_id,
-         row_number() OVER (PARTITION BY term
-                            ORDER BY round(score, 4) DESC, doc_id ASC) AS r
-  FROM scored JOIN seeds ON scored.term = seeds.seed
-),
-list_a AS (SELECT seed, doc_id, 2 * r - 1 AS ipos
-           FROM ranked_a WHERE r <= {_IL_K}),
-ranked_b AS (
-  SELECT tf.term AS seed, tf.doc_id,
-         row_number() OVER (
-           PARTITION BY tf.term
-           ORDER BY round(ln((tf.tf + {_IL_MU} * ctf.ctf / tot.t)
-                             / (dl.dl + {_IL_MU})), 4) DESC,
-                    tf.doc_id ASC) AS r
-  FROM tf
-  JOIN ctf ON tf.term = ctf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN tot
-),
-list_b AS (SELECT seed, doc_id, 2 * r AS ipos
-           FROM ranked_b WHERE r <= {_IL_K}),
-merged AS (
-  SELECT seed, doc_id, min(ipos) AS ipos, count(*) AS n_lists
-  FROM (SELECT * FROM list_a UNION ALL SELECT * FROM list_b)
-  GROUP BY seed, doc_id
-),
-shown AS (
-  SELECT seed, ipos, n_lists,
-         row_number() OVER (PARTITION BY seed ORDER BY ipos ASC) AS rank
-  FROM merged
-  QUALIFY rank <= {_IL_K}
-),
-agg AS (
-  SELECT seed, CAST(count(*) AS BIGINT) AS n_shown,
-         CAST(sum(CASE WHEN rank <= {_IL_SCAN} AND n_lists = 2
-                        AND ipos % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS clicks_a,
-         CAST(sum(CASE WHEN rank <= {_IL_SCAN} AND n_lists = 2
-                        AND ipos % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS clicks_b
-  FROM shown GROUP BY seed
-)
-SELECT seed, n_shown, clicks_a, clicks_b,
-       CASE WHEN clicks_a > clicks_b THEN 'A'
-            WHEN clicks_b > clicks_a THEN 'B'
-            ELSE 'tie' END AS winner
-FROM agg ORDER BY seed"""
-
-
-# ---------------------------------------------------------------------------
-# Recrawl scheduling (Cho & Garcia-Molina change-rate estimation)
-# ---------------------------------------------------------------------------
-
-_RECRAWL_MIN_POLLS = 5
-_RECRAWL_CHANGE_TYPES = ["click", "purchase"]
-
-
-def q_recrawl_priority(spark, sf_dir):
-    """Recrawl scheduling via Poisson change-rate estimation (Cho &
-    Garcia-Molina, "Estimating Frequency of Change", TOIT 2003): each
-    page (events.user_id) is polled at every event; a poll detects a
-    change when event_type is click/purchase.  With n polls, x detected
-    changes, and mean poll interval tau, the bias-corrected estimator
-    is lambda_hat = -ln((n - x + 0.5)/(n + 0.5)) / tau — the change
-    rate a crawler cannot observe directly because multiple changes
-    between polls collapse into one detection.  Suggested recrawl
-    interval = 1/lambda_hat.  Top-20 hottest pages by lambda_hat.
-
-    Scale shape: one map-side-combinable groupBy over the event log
-    (count / conditional count / min / max all partial-aggregate), then
-    arithmetic on the |pages| aggregate and a TakeOrderedAndProject
-    top-20 — no window over the raw log, no join.  At 10^12 events the
-    only shuffle is the per-page aggregate.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # parquet ts is TIMESTAMP_NTZ; the cast's implied zone cancels in t1-t0
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    agg = (
-        ev.groupBy(F.col("user_id").alias("page"))
-        .agg(
-            F.count("*").cast("long").alias("n_polls"),
-            F.sum(
-                F.when(
-                    F.col("event_type").isin(_RECRAWL_CHANGE_TYPES), 1
-                ).otherwise(0)
-            ).cast("long").alias("n_changed"),
-            F.min(us).alias("_t0"),
-            F.max(us).alias("_t1"),
-        )
-        .filter(
-            (F.col("n_polls") >= _RECRAWL_MIN_POLLS)
-            & (F.col("_t1") > F.col("_t0"))
-        )
-    )
-    tau_h = (
-        (F.col("_t1") - F.col("_t0"))
-        / F.lit(1e6) / (F.col("n_polls") - 1) / F.lit(3600.0)
-    )
-    lam = -F.log(
-        (F.col("n_polls") - F.col("n_changed") + 0.5)
-        / (F.col("n_polls") + 0.5)
-    ) / tau_h
-    return (
-        agg.select(
-            "page", "n_polls", "n_changed",
-            _r4(tau_h).alias("tau_hours"),
-            _r4(lam).alias("lambda_hat"),
-            _r4(F.when(lam > 0, 1.0 / lam)).alias("recrawl_hours"),
-        )
-        .orderBy(F.col("lambda_hat").desc(), F.col("page").asc())
-        .limit(20)
-    )
-
-
-SQL_RECRAWL_PRIORITY = f"""WITH agg AS (
-  SELECT user_id AS page, CAST(count(*) AS BIGINT) AS n_polls,
-         CAST(sum(CASE WHEN event_type IN ('click', 'purchase')
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-         min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
-  FROM events GROUP BY user_id
-  HAVING count(*) >= {_RECRAWL_MIN_POLLS} AND max(epoch_us(ts)) > min(epoch_us(ts))
-),
-est AS (
-  SELECT page, n_polls, n_changed,
-         (t1 - t0) / 1e6 / (n_polls - 1) / 3600.0 AS tau_h,
-         -ln((n_polls - n_changed + 0.5) / (n_polls + 0.5))
-           / ((t1 - t0) / 1e6 / (n_polls - 1) / 3600.0) AS lam
-  FROM agg
-)
-SELECT page, n_polls, n_changed, round(tau_h, 4) AS tau_hours,
-       round(lam, 4) AS lambda_hat,
-       round(CASE WHEN lam > 0 THEN 1.0 / lam END, 4) AS recrawl_hours
-FROM est
-ORDER BY round(lam, 4) DESC, page ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# CORI shard selection (distributed-search query routing)
-# ---------------------------------------------------------------------------
-
-_CORI_B = 0.4
-_CORI_TOPN = 3
-
-
-def q_cori_shards(spark, sf_dir):
-    """CORI resource/shard selection (Callan, Lu & Croft, SIGIR 1995) —
-    the query-routing step a federated 10^12-doc deployment runs BEFORE
-    any posting list is touched: rank index shards (documents.source)
-    by the collection-level belief that they hold relevant docs, then
-    fan the query out to the top shards only.  Per seed term t and
-    shard s:  T = df_st / (df_st + 50 + 150*cw_s/avg_cw),
-    I = ln((|S|+0.5)/cf_t) / ln(|S|+1), belief = 0.4 + 0.6*T*I — the
-    df.icf analogue of tf.idf with shards as "documents".  Top-3 shards
-    per seed.
-
-    Scale shape: everything downstream of the per-(shard, term) df
-    aggregate is |shards| x |seeds| sized — the shard statistics table
-    IS the entire working set (that is the point of CORI: route from a
-    kilobyte-scale summary, not the index).  The term filter sits below
-    the df agg, shard sizes are a |shards|-row broadcast, and cf_t /
-    avg_cw are tiny side rollups.
-    """
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir)
-    src = _docs(spark, sf_dir).select("doc_id", "source")
-    seed_toks = toks.filter(F.col("term").isin(_IL_SEEDS)).join(src, "doc_id")
-    dfst = seed_toks.groupBy("source", "term").agg(
-        F.count_distinct("doc_id").alias("df_st")
-    )
-    cw = toks.join(src, "doc_id").groupBy("source").agg(
-        F.count("*").alias("cw")
-    )
-    avgcw = cw.agg(F.avg("cw").alias("_avg_cw"), F.count("*").alias("_n_s"))
-    cf = dfst.groupBy("term").agg(F.count("*").alias("cf_t"))
-    t_part = F.col("df_st") / (
-        F.col("df_st") + 50.0 + 150.0 * F.col("cw") / F.col("_avg_cw")
-    )
-    i_part = F.log((F.col("_n_s") + 0.5) / F.col("cf_t")) / F.log(
-        F.col("_n_s") + 1.0
-    )
-    w = Window.partitionBy("term").orderBy(
-        F.col("belief").desc(), F.col("source").asc()
-    )
-    return (
-        dfst.join(F.broadcast(cw), "source")
-        .join(F.broadcast(cf), "term")
-        .crossJoin(F.broadcast(avgcw))
-        .withColumn(
-            "belief", _r4(_CORI_B + (1.0 - _CORI_B) * t_part * i_part)
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _CORI_TOPN)
-        .select(
-            F.col("term").alias("seed"), F.col("source").alias("shard"),
-            "df_st", "belief", "rank",
-        )
-        .orderBy("seed", "rank")
-    )
-
-
-SQL_CORI_SHARDS = f"""WITH {_TOKS_SQL},
-src AS (SELECT doc_id, source FROM documents),
-dfst AS (
-  SELECT s.source, t.term, count(DISTINCT t.doc_id) AS df_st
-  FROM toks t JOIN src s ON t.doc_id = s.doc_id
-  WHERE t.term IN ('data', 'join', 'merge', 'query', 'spark')
-  GROUP BY s.source, t.term
-),
-cw AS (
-  SELECT s.source, count(*) AS cw
-  FROM toks t JOIN src s ON t.doc_id = s.doc_id GROUP BY s.source
-),
-avgcw AS (SELECT avg(cw) AS avg_cw, count(*) AS n_s FROM cw),
-cf AS (SELECT term, count(*) AS cf_t FROM dfst GROUP BY term),
-belief AS (
-  SELECT d.term AS seed, d.source AS shard, d.df_st,
-         round({_CORI_B} + {1.0 - _CORI_B}
-               * (d.df_st / (d.df_st + 50.0 + 150.0 * c.cw / a.avg_cw))
-               * (ln((a.n_s + 0.5) / f.cf_t) / ln(a.n_s + 1.0)),
-               4) AS belief
-  FROM dfst d
-  JOIN cw c ON d.source = c.source
-  JOIN cf f ON d.term = f.term
-  CROSS JOIN avgcw a
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY seed
-                               ORDER BY belief DESC, shard ASC) AS rank
-  FROM belief
-)
-SELECT seed, shard, CAST(df_st AS BIGINT) AS df_st, belief,
-       CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_CORI_TOPN} ORDER BY seed, rank"""
-
-
-# ---------------------------------------------------------------------------
-# Pivoted-normalization vector-space retrieval (Singhal et al. 1996)
-# ---------------------------------------------------------------------------
-
-_PIV_S = 0.2
-_PIV_TERMS = ["merge", "join"]
-
-
-def q_pivoted_vsm(spark, sf_dir):
-    """Pivoted length normalization VSM (Singhal, Buckley & Mitra,
-    SIGIR 1996) — the pre-BM25 classic the reference era's Smart system
-    shipped, kept in the catalog as the third scorer family next to
-    BM25 and Dirichlet-QL: score(d) = sum over matched query terms of
-    (1 + ln(1 + ln(tf))) / ((1-s) + s*dl/avgdl) * ln((N+1)/df) with the
-    pivot slope s=0.2.  Top-10 docs, rounded-score doc_id-tiebreak
-    ranking.
-
-    Scale shape: identical to _scored — the query-term filter is pushed
-    below the tf aggregate so only |terms| posting lists shuffle; df
-    and the 1-row (N, avgdl) stats broadcast; the cut is a distributed
-    TakeOrderedAndProject.
-    """
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(_PIV_TERMS))
-    tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    part = (
-        (1.0 + F.log(1.0 + F.log(F.col("tf"))))
-        / ((1.0 - _PIV_S) + _PIV_S * F.col("dl") / F.col("_avgdl"))
-        * F.log((F.col("_n") + 1.0) / F.col("df"))
-    )
-    return (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            _r4(F.sum(part)).alias("score"),
-            F.count("*").cast("long").alias("n_terms"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_PIVOTED_VSM = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id, count(*) AS tf FROM toks
-       WHERE term IN ('merge', 'join') GROUP BY term, doc_id),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-SELECT tf.doc_id,
-       round(sum((1.0 + ln(1.0 + ln(tf.tf)))
-                 / ((1.0 - {_PIV_S}) + {_PIV_S} * dl.dl / stats.avgdl)
-                 * ln((stats.n + 1.0) / df.df)), 4) AS score,
-       CAST(count(*) AS BIGINT) AS n_terms
-FROM tf
-JOIN df ON tf.term = df.term
-JOIN dl ON tf.doc_id = dl.doc_id
-CROSS JOIN stats
-GROUP BY tf.doc_id
-ORDER BY score DESC, tf.doc_id ASC LIMIT 10"""
-
-
-# ---------------------------------------------------------------------------
 # Block-max WAND pruning statistics (index-efficiency measurement)
 # ---------------------------------------------------------------------------
 
@@ -9254,238 +5107,6 @@ ORDER BY d.pair"""
 
 
 # ---------------------------------------------------------------------------
-# WIG post-retrieval query-performance prediction (Zhou & Croft 2007)
-# ---------------------------------------------------------------------------
-
-_WIG_K = 5
-
-
-def q_wig_qpp(spark, sf_dir):
-    """WIG — Weighted Information Gain query-performance prediction
-    (Zhou & Croft, SIGIR 2007), the post-retrieval companion to
-    clarity_score: how far the top-k scores stand above the average
-    matching document's score.  A high gap means the head of the
-    ranking separates cleanly from the background (the ranking is
-    trustworthy); a gap near zero means the top-k looks like every
-    other match and the query deserves reformulation.  Per seed:
-    wig = mean(top-k score) - mean(all candidate scores) (|q|=1 seeds,
-    so the 1/sqrt(|q|) factor is 1).
-
-    Determinism: the top-k picks by ROUNDED score with doc_id tiebreak
-    and both means run over the rounded scores, so both engines average
-    identical values.  Scale shape: only the |seeds| posting lists are
-    scored (_scored pushes the term filter below the tf agg); the
-    per-seed mean is one map-side-combinable aggregate and the top-k
-    mean runs over k rows from a rank window per seed.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _IL_SEEDS).select(
-        F.col("term").alias("seed"), "doc_id", _r4("score").alias("s")
-    )
-    w = Window.partitionBy("seed").orderBy(
-        F.col("s").desc(), F.col("doc_id").asc()
-    )
-    ranked = s.withColumn("_r", F.row_number().over(w))
-    all_mean = ranked.groupBy("seed").agg(
-        F.count("*").cast("long").alias("n_cand"),
-        F.avg("s").alias("_ma"),
-    )
-    top_mean = (
-        ranked.filter(F.col("_r") <= _WIG_K)
-        .groupBy("seed")
-        .agg(F.avg("s").alias("_mt"))
-    )
-    return (
-        all_mean.join(top_mean, "seed")
-        .select(
-            "seed", "n_cand",
-            _r4("_mt").alias("mean_top"),
-            _r4("_ma").alias("mean_all"),
-            _r4(F.col("_mt") - F.col("_ma")).alias("wig"),
-        )
-        .orderBy("seed")
-    )
-
-
-SQL_WIG_QPP = f"""WITH {_BM25_CORE_SQL},
-ranked AS (
-  SELECT term AS seed, doc_id, round(score, 4) AS s,
-         row_number() OVER (PARTITION BY term
-                            ORDER BY round(score, 4) DESC, doc_id ASC) AS r
-  FROM scored
-  WHERE term IN ('data', 'join', 'merge', 'query', 'spark')
-),
-am AS (SELECT seed, CAST(count(*) AS BIGINT) AS n_cand, avg(s) AS ma
-       FROM ranked GROUP BY seed),
-tm AS (SELECT seed, avg(s) AS mt FROM ranked WHERE r <= {_WIG_K}
-       GROUP BY seed)
-SELECT am.seed, am.n_cand, round(tm.mt, 4) AS mean_top,
-       round(am.ma, 4) AS mean_all, round(tm.mt - am.ma, 4) AS wig
-FROM am JOIN tm ON am.seed = tm.seed ORDER BY am.seed"""
-
-
-# ---------------------------------------------------------------------------
-# Sequential dependence model retrieval (Metzler & Croft 2005)
-# ---------------------------------------------------------------------------
-
-_SDM_A, _SDM_B = "merge", "join"
-_SDM_MU = 200.0
-_SDM_W = 8                        # unordered co-occurrence window
-_SDM_WT, _SDM_WO, _SDM_WU = 0.85, 0.10, 0.05
-
-
-def q_sdm_retrieval(spark, sf_dir):
-    """Sequential Dependence Model retrieval (Metzler & Croft, SIGIR
-    2005) — the term-dependence upgrade over bag-of-words LM scoring
-    that positional indexes exist to serve: for the query "merge join",
-    score = 0.85*f_T + 0.10*f_O + 0.05*f_U where f_T is the
-    Dirichlet-smoothed unigram log-likelihood of both terms, f_O the
-    same for the ORDERED bigram (#1: 'join' immediately after 'merge' —
-    the phrase ISR X7 feature), and f_U for UNORDERED co-occurrence
-    within an 8-token window (the NEAR/k X7-extension feature).
-    Candidates = docs containing both terms; bigram/window collection
-    priors get +0.5 so an absent feature still smooths.  Top-10.
-
-    Scale shape: only the two terms' postings reach any join; the
-    positional pair counts run per doc over those two lists (the same
-    bounded per-doc positional intersection the packed phrase kernel
-    does); collection stats are 1-row broadcasts; the cut is
-    distributed TakeOrdered.
-    """
-    toks = _tokens(spark, sf_dir).filter(
-        F.col("term").isin([_SDM_A, _SDM_B])
-    )
-    tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    cand = (
-        tf.groupBy("doc_id")
-        .agg(F.count_distinct("term").alias("_nt"))
-        .filter(F.col("_nt") == 2)
-        .select("doc_id")
-    )
-    dl = _dl(spark, sf_dir)
-    tot = dl.agg(F.sum("dl").alias("_t"))
-    ctf = _tokens(spark, sf_dir).filter(
-        F.col("term").isin([_SDM_A, _SDM_B])
-    ).groupBy("term").agg(F.count("*").alias("ctf"))
-
-    pa = toks.filter(F.col("term") == _SDM_A).select(
-        "doc_id", F.col("pos").alias("pa")
-    ).join(F.broadcast(cand), "doc_id")
-    pb = toks.filter(F.col("term") == _SDM_B).select(
-        "doc_id", F.col("pos").alias("pb")
-    ).join(F.broadcast(cand), "doc_id")
-    pairs = pa.join(pb, "doc_id")
-    tf_o = pairs.filter(F.col("pb") == F.col("pa") + 1).groupBy(
-        "doc_id"
-    ).agg(F.count("*").alias("tf_o"))
-    tf_u = pairs.filter(
-        F.abs(F.col("pb") - F.col("pa")) <= _SDM_W
-    ).groupBy("doc_id").agg(F.count("*").alias("tf_u"))
-    ctf_o = tf_o.agg(F.sum("tf_o").alias("_co"))
-    ctf_u = tf_u.agg(F.sum("tf_u").alias("_cu"))
-
-    p_t = F.col("ctf") / F.col("_t")
-    f_t_rows = (
-        tf.join(F.broadcast(cand), "doc_id")
-        .join(F.broadcast(ctf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.log(
-                    (F.col("tf") + F.lit(_SDM_MU) * p_t)
-                    / (F.col("dl") + F.lit(_SDM_MU))
-                )
-            ).alias("f_t"),
-            F.first("dl").alias("dl"),
-        )
-    )
-    p_o = (F.col("_co") + 0.5) / F.col("_t")
-    p_u = (F.col("_cu") + 0.5) / F.col("_t")
-    return (
-        f_t_rows.join(tf_o, "doc_id", "left")
-        .join(tf_u, "doc_id", "left")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(ctf_o))
-        .crossJoin(F.broadcast(ctf_u))
-        .select(
-            "doc_id",
-            F.coalesce(F.col("tf_o"), F.lit(0)).cast("long").alias("tf_o"),
-            F.coalesce(F.col("tf_u"), F.lit(0)).cast("long").alias("tf_u"),
-            _r4(
-                F.lit(_SDM_WT) * F.col("f_t")
-                + F.lit(_SDM_WO)
-                * F.log(
-                    (F.coalesce(F.col("tf_o"), F.lit(0)) + _SDM_MU * p_o)
-                    / (F.col("dl") + _SDM_MU)
-                )
-                + F.lit(_SDM_WU)
-                * F.log(
-                    (F.coalesce(F.col("tf_u"), F.lit(0)) + _SDM_MU * p_u)
-                    / (F.col("dl") + _SDM_MU)
-                )
-            ).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_SDM_RETRIEVAL = f"""WITH {_TOKS_SQL},
-qt AS (SELECT doc_id, term, pos FROM toks
-       WHERE term IN ('{_SDM_A}', '{_SDM_B}')),
-tf AS (SELECT term, doc_id, count(*) AS tf FROM qt GROUP BY term, doc_id),
-cand AS (SELECT doc_id FROM tf GROUP BY doc_id
-         HAVING count(DISTINCT term) = 2),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-tot AS (SELECT sum(dl) AS t FROM dl),
-ctf AS (SELECT term, count(*) AS ctf FROM qt GROUP BY term),
-pairs AS (
-  SELECT a.doc_id, a.pos AS pa, b.pos AS pb
-  FROM (SELECT doc_id, pos FROM qt WHERE term = '{_SDM_A}'
-        AND doc_id IN (SELECT doc_id FROM cand)) a
-  JOIN (SELECT doc_id, pos FROM qt WHERE term = '{_SDM_B}'
-        AND doc_id IN (SELECT doc_id FROM cand)) b
-  ON a.doc_id = b.doc_id
-),
-tfo AS (SELECT doc_id, count(*) AS tf_o FROM pairs
-        WHERE pb = pa + 1 GROUP BY doc_id),
-tfu AS (SELECT doc_id, count(*) AS tf_u FROM pairs
-        WHERE abs(pb - pa) <= {_SDM_W} GROUP BY doc_id),
-co AS (SELECT coalesce(sum(tf_o), 0) AS co FROM tfo),
-cu AS (SELECT coalesce(sum(tf_u), 0) AS cu FROM tfu),
-ft AS (
-  SELECT tf.doc_id,
-         sum(ln((tf.tf + {_SDM_MU} * ctf.ctf / tot.t)
-                / (dl.dl + {_SDM_MU}))) AS f_t,
-         min(dl.dl) AS dl
-  FROM tf
-  JOIN cand ON tf.doc_id = cand.doc_id
-  JOIN ctf ON tf.term = ctf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN tot
-  GROUP BY tf.doc_id
-)
-SELECT ft.doc_id,
-       CAST(coalesce(tfo.tf_o, 0) AS BIGINT) AS tf_o,
-       CAST(coalesce(tfu.tf_u, 0) AS BIGINT) AS tf_u,
-       round({_SDM_WT} * ft.f_t
-             + {_SDM_WO} * ln((coalesce(tfo.tf_o, 0)
-                               + {_SDM_MU} * (co.co + 0.5) / tot.t)
-                              / (ft.dl + {_SDM_MU}))
-             + {_SDM_WU} * ln((coalesce(tfu.tf_u, 0)
-                               + {_SDM_MU} * (cu.cu + 0.5) / tot.t)
-                              / (ft.dl + {_SDM_MU})), 4) AS score
-FROM ft
-LEFT JOIN tfo ON ft.doc_id = tfo.doc_id
-LEFT JOIN tfu ON ft.doc_id = tfu.doc_id
-CROSS JOIN tot CROSS JOIN co CROSS JOIN cu
-ORDER BY score DESC, ft.doc_id ASC LIMIT 10"""
-
-
-# ---------------------------------------------------------------------------
 # Posting-list codec cost model (varbyte vs Elias-gamma, A2 sizing)
 # ---------------------------------------------------------------------------
 
@@ -9579,2638 +5200,6 @@ SELECT CAST(length(bin(df)) - 1 AS BIGINT) AS bucket,
        round(sum(g_bytes) / CAST(sum(vb_bytes) AS DOUBLE), 4)
          AS gamma_vs_varbyte
 FROM per_term GROUP BY 1 ORDER BY bucket"""
-
-
-# ---------------------------------------------------------------------------
-# ERR ranking evaluation (Chapelle et al., CIKM 2009)
-# ---------------------------------------------------------------------------
-
-_ERR_K = 10
-
-
-def q_err_eval(spark, sf_dir):
-    """ERR@10 — Expected Reciprocal Rank (Chapelle, Metzler, Zhang &
-    Grinspan, CIKM 2009), completing the offline eval family next to
-    ndcg_eval / mrr_map_eval: the cascade-model metric where a user
-    scans down the ranking and stops at rank r with probability
-    R_r = (2^rel − 1)/2^g_max, so ERR = Σ_r (1/r)·R_r·Π_{i<r}(1−R_i).
-    Uses the same deterministic synthetic grades (rel ∈ 0..3 from a
-    multiplicative hash of doc_id) as ndcg_eval, so the two metrics are
-    directly comparable per query.
-
-    Determinism: with g_max = 3 every stop probability is an exact
-    /16 rational, so the cascade product is computed as an INTEGER
-    numerator product (≤ 16⁹ < 2⁵³, exact in doubles) via a
-    cumulative-product window over the preceding ranks, divided by the
-    exact power 16^(r−1) — no exp(Σ ln) drift between engines.
-    Scale shape: per-query rank windows over the pruned _scored plan
-    (only the 3 query terms' postings shuffle); output is |queries|
-    rows.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(F.col("term").isin(_NDCG_QS))
-    w = Window.partitionBy("term").orderBy(
-        F.round("score", 4).desc(), F.col("doc_id").asc()
-    )
-    top = (
-        s.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _ERR_K)
-        .withColumn(
-            "rel",
-            F.pmod(
-                (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761),
-                F.lit(4),
-            ).cast("int"),
-        )
-        # stop probability R = num_stop/16; survival 1-R = num_pass/16
-        .withColumn("num_stop", F.pow(F.lit(2.0), F.col("rel")) - 1.0)
-        .withColumn("num_pass", F.lit(16.0) - F.col("num_stop"))
-    )
-    cw = (
-        Window.partitionBy("term")
-        .orderBy("rank")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    contrib = top.withColumn(
-        "cum_pass", F.coalesce(F.product("num_pass").over(cw), F.lit(1.0))
-    ).withColumn(
-        "c",
-        (F.lit(1.0) / F.col("rank"))
-        * (F.col("num_stop") / 16.0)
-        * (F.col("cum_pass") / F.pow(F.lit(16.0), F.col("rank") - 1)),
-    )
-    return (
-        contrib.groupBy("term")
-        .agg(
-            _r4(F.sum("c")).alias("err"),
-            F.count("*").cast("long").alias("judged"),
-        )
-        .orderBy("term")
-    )
-
-
-SQL_ERR_EVAL = f"""WITH {_BM25_CORE_SQL},
-top AS (
-  SELECT term, doc_id, rank,
-         CAST(((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 AS INT) AS rel
-  FROM (
-    SELECT term, doc_id, row_number() OVER (
-      PARTITION BY term ORDER BY round(score, 4) DESC, doc_id ASC) AS rank
-    FROM scored WHERE term IN ('merge', 'join', 'scan'))
-  WHERE rank <= {_ERR_K}
-),
-probs AS (
-  SELECT term, rank, pow(2.0, rel) - 1.0 AS num_stop,
-         16.0 - (pow(2.0, rel) - 1.0) AS num_pass
-  FROM top
-),
-casc AS (
-  SELECT term, rank, num_stop,
-         coalesce(product(num_pass) OVER (
-           PARTITION BY term ORDER BY rank
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 1.0)
-           AS cum_pass
-  FROM probs
-)
-SELECT term,
-       round(sum((1.0 / rank) * (num_stop / 16.0)
-                 * (cum_pass / pow(16.0, rank - 1))), 4) AS err,
-       CAST(count(*) AS BIGINT) AS judged
-FROM casc GROUP BY term ORDER BY term"""
-
-
-# ---------------------------------------------------------------------------
-# Impact-ordered posting quantization (Anh & Moffat, SIGIR 2001/2006)
-# ---------------------------------------------------------------------------
-
-_IMP_BITS = 5                     # 2^5 = 32 impact buckets
-
-
-def q_impact_quantize(spark, sf_dir):
-    """Impact quantization for an impact-ordered index (Anh & Moffat):
-    map every posting's exact BM25 contribution onto 2^5 = 32 uniform
-    buckets between the global min/max impact, the transform that lets
-    an index store one small integer per posting (sorted by impact, so
-    query evaluation can early-terminate) instead of a float.  Per seed
-    term this measures exactly what the transform costs: `overlap10` =
-    |exact top-10 ∩ quantized top-10| (quantized ranking orders by
-    bucket then doc_id — ties inside a bucket are the information the
-    quantizer destroyed) and `mae` = mean |reconstructed − exact| over
-    the list (reconstruction = bucket midpoint).
-
-    Determinism: quantization runs on round(score,4) values, so both
-    engines bucket identical doubles with identical IEEE subtract/
-    divide/floor.  Scale shape: only the |seeds| posting lists are
-    scored; min/max is a 1-row broadcast side plan; rankings are
-    per-seed rank windows; output is |seeds| rows.
-    """
-    from pyspark.sql import Window
-
-    n_b = 1 << _IMP_BITS
-    s = _scored(spark, sf_dir, _IL_SEEDS).select(
-        F.col("term").alias("seed"), "doc_id", _r4("score").alias("s")
-    )
-    ext = s.agg(F.min("s").alias("_mn"), F.max("s").alias("_mx"))
-    q = s.crossJoin(F.broadcast(ext)).withColumn(
-        "q",
-        F.least(
-            F.floor(
-                (F.col("s") - F.col("_mn"))
-                / (F.col("_mx") - F.col("_mn"))
-                * n_b
-            ),
-            F.lit(n_b - 1),
-        ).cast("long"),
-    ).withColumn(
-        "imp",
-        F.col("_mn")
-        + (F.col("q") + 0.5) * (F.col("_mx") - F.col("_mn")) / n_b,
-    )
-    we = Window.partitionBy("seed").orderBy(
-        F.col("s").desc(), F.col("doc_id").asc()
-    )
-    wq = Window.partitionBy("seed").orderBy(
-        F.col("q").desc(), F.col("doc_id").asc()
-    )
-    ranked = q.withColumn("re", F.row_number().over(we)).withColumn(
-        "rq", F.row_number().over(wq)
-    )
-    return (
-        ranked.groupBy("seed")
-        .agg(
-            F.count("*").cast("long").alias("n_postings"),
-            F.sum(
-                F.when(
-                    (F.col("re") <= 10) & (F.col("rq") <= 10), 1
-                ).otherwise(0)
-            ).cast("long").alias("overlap10"),
-            _r4(F.avg(F.abs(F.col("imp") - F.col("s")))).alias("mae"),
-        )
-        .orderBy("seed")
-    )
-
-
-SQL_IMPACT_QUANTIZE = f"""WITH {_BM25_CORE_SQL},
-sl AS (
-  SELECT term AS seed, doc_id, round(score, 4) AS s FROM scored
-  WHERE term IN ('data', 'join', 'merge', 'query', 'spark')
-),
-ext AS (SELECT min(s) AS mn, max(s) AS mx FROM sl),
-qz AS (
-  SELECT seed, doc_id, s,
-         least(CAST(floor((s - ext.mn) / (ext.mx - ext.mn)
-                          * {1 << _IMP_BITS}) AS BIGINT),
-               {(1 << _IMP_BITS) - 1}) AS q,
-         ext.mn AS mn, ext.mx AS mx
-  FROM sl CROSS JOIN ext
-),
-ranked AS (
-  SELECT seed, doc_id, s,
-         mn + (q + 0.5) * (mx - mn) / {1 << _IMP_BITS} AS imp,
-         row_number() OVER (PARTITION BY seed
-                            ORDER BY s DESC, doc_id ASC) AS re,
-         row_number() OVER (PARTITION BY seed
-                            ORDER BY q DESC, doc_id ASC) AS rq
-  FROM qz
-)
-SELECT seed, CAST(count(*) AS BIGINT) AS n_postings,
-       CAST(sum(CASE WHEN re <= 10 AND rq <= 10 THEN 1 ELSE 0 END)
-            AS BIGINT) AS overlap10,
-       round(avg(abs(imp - s)), 4) AS mae
-FROM ranked GROUP BY seed ORDER BY seed"""
-
-
-# ---------------------------------------------------------------------------
-# DFR PL2 retrieval (Amati & van Rijsbergen, TOIS 2002)
-# ---------------------------------------------------------------------------
-
-_PL2_TERMS = ["merge", "join"]
-_PL2_C = 1.0
-_PL2_LOG2E = 1.4426950408889634      # 1/ln 2, inlined so both engines
-_PL2_2PI = 6.283185307179586         # share the exact same doubles
-
-
-def q_dfr_pl2(spark, sf_dir):
-    """PL2 retrieval from the Divergence-From-Randomness framework
-    (Amati & van Rijsbergen, TOIS 2002) — the third ranking family in
-    the catalog next to BM25 (bm25_*) and Dirichlet QL
-    (query_likelihood), i.e. the model-swap experiment an IR stack runs
-    on the SAME postings: Poisson randomness model, Laplace
-    after-effect, H2 length normalization.  Per matching (term, doc):
-    tfn = tf·log2(1 + c·avgdl/dl), λ = ctf/N, and the weight is
-    (tfn·log2(tfn/λ) + (λ − tfn)·log2 e + 0.5·log2(2π·tfn)) / (tfn+1),
-    summed over query terms (OR semantics, qtf = 1); top-10.
-
-    Determinism: log2 e and 2π are inlined as identical double
-    literals in both engines; everything else is ln/arithmetic under
-    the suite-wide round-4 contract.  Scale shape: only the two query
-    terms' postings pass the term filter below the tf aggregation;
-    collection stats (N, avgdl, per-term ctf) are 1-row/|q|-row
-    broadcast side plans; the cut is a distributed TakeOrdered.
-    """
-    toks = _tokens(spark, sf_dir)
-    tf = (
-        toks.filter(F.col("term").isin(_PL2_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    ctf = (
-        toks.filter(F.col("term").isin(_PL2_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("ctf"))
-    )
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(
-        F.count("*").alias("_n"), F.avg("dl").alias("_avgdl")
-    )
-    log2 = lambda c: F.log(c) * _PL2_LOG2E
-    tfn = F.col("tf") * log2(
-        1.0 + F.lit(_PL2_C) * F.col("_avgdl") / F.col("dl")
-    )
-    lam = F.col("ctf") / F.col("_n")
-    wexpr = (
-        tfn * log2(tfn / lam)
-        + (lam - tfn) * F.lit(_PL2_LOG2E)
-        + 0.5 * log2(F.lit(_PL2_2PI) * tfn)
-    ) / (tfn + 1.0)
-    return (
-        tf.join(F.broadcast(ctf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(_r4(F.sum(wexpr)).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_DFR_PL2 = f"""WITH {_TOKS_SQL},
-qt AS (SELECT doc_id, term FROM toks
-       WHERE term IN ('merge', 'join')),
-tf AS (SELECT term, doc_id, count(*) AS tf FROM qt GROUP BY term, doc_id),
-ctf AS (SELECT term, count(*) AS ctf FROM qt GROUP BY term),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-w AS (
-  SELECT tf.doc_id,
-         (tfn * (ln(tfn / lam) * {_PL2_LOG2E})
-          + (lam - tfn) * {_PL2_LOG2E}
-          + 0.5 * (ln({_PL2_2PI} * tfn) * {_PL2_LOG2E})) / (tfn + 1.0)
-           AS wgt
-  FROM (
-    SELECT tf.doc_id, tf.term,
-           tf.tf * (ln(1.0 + {_PL2_C} * stats.avgdl / dl.dl)
-                    * {_PL2_LOG2E}) AS tfn,
-           CAST(ctf.ctf AS DOUBLE) / stats.n AS lam
-    FROM tf
-    JOIN ctf ON tf.term = ctf.term
-    JOIN dl ON tf.doc_id = dl.doc_id
-    CROSS JOIN stats
-  ) tf
-)
-SELECT doc_id, round(sum(wgt), 4) AS score
-FROM w GROUP BY doc_id
-ORDER BY score DESC, doc_id ASC LIMIT 10"""
-
-
-# ---------------------------------------------------------------------------
-# Tiered-index fidelity (Carmel et al. 2001 / Strohman-Croft tiering)
-# ---------------------------------------------------------------------------
-
-_TIER_PAIRS = [(1, "merge", "join"), (2, "data", "query"), (3, "scan", "filter")]
-_TIER_FRAC = 0.2
-
-
-def q_tier_split(spark, sf_dir):
-    """Tiered-index fidelity measurement (static index pruning, Carmel
-    et al. SIGIR 2001; two-tier serving, Strohman & Croft): keep only
-    tier 1 = the top ceil(0.2·df) postings of each query term's list by
-    per-term impact, answer the OR query from tier 1 alone, and count
-    how many of the full-index top-10 survive.  This is the fidelity
-    check a serving stack runs before routing queries to a pruned
-    first-tier shard — single-term top-k is trivially preserved by
-    impact tiering, so the interesting (and measured) case is
-    multi-term queries where a winner can be assembled from middling
-    per-term impacts that pruning discards.
-
-    Scale shape: only the 6 query terms' postings are scored; tier
-    membership is a per-(pair,term) rank window (the lists' own
-    sharding); both rankings are per-pair top-10 windows; output is
-    |pairs| rows.
-    """
-    from pyspark.sql import Window
-
-    terms = sorted({t for p in _TIER_PAIRS for t in p[1:]})
-    pairs = spark.createDataFrame(
-        [(p, t) for p, a, b in _TIER_PAIRS for t in (a, b)],
-        "pair int, term string",
-    )
-    s = (
-        _scored(spark, sf_dir, terms)
-        .select("term", "doc_id", _r4("score").alias("s"))
-        .join(F.broadcast(pairs), "term")
-    )
-    wl = Window.partitionBy("pair", "term").orderBy(
-        F.col("s").desc(), F.col("doc_id").asc()
-    )
-    wdf = Window.partitionBy("pair", "term")
-    tiered = s.withColumn(
-        "t1",
-        F.row_number().over(wl)
-        <= F.ceil(F.count("*").over(wdf) * _TIER_FRAC),
-    )
-    docs = tiered.groupBy("pair", "doc_id").agg(
-        _r4(F.sum("s")).alias("fs"),
-        _r4(F.sum(F.when(F.col("t1"), F.col("s")))).alias("ts"),
-        F.sum(F.when(F.col("t1"), 1).otherwise(0)).alias("_n1"),
-    )
-    wf = Window.partitionBy("pair").orderBy(
-        F.col("fs").desc(), F.col("doc_id").asc()
-    )
-    wt = Window.partitionBy("pair").orderBy(
-        F.col("ts").desc(), F.col("doc_id").asc()
-    )
-    ranked = docs.withColumn("rf", F.row_number().over(wf))
-    # the tiered ranking covers ONLY tier-1-reachable docs (that is the
-    # point of the measurement: pruned-away docs cannot be retrieved)
-    t1docs = docs.filter(F.col("_n1") > 0).withColumn(
-        "rt", F.row_number().over(wt)
-    ).select("pair", "doc_id", "rt")
-    full10 = ranked.filter(F.col("rf") <= 10).select("pair", "doc_id")
-    tier10 = t1docs.filter(F.col("rt") <= 10).select("pair", "doc_id")
-    overlap = (
-        full10.join(tier10, ["pair", "doc_id"])
-        .groupBy("pair")
-        .agg(F.count("*").cast("long").alias("overlap10"))
-    )
-    sizes = tiered.groupBy("pair").agg(
-        F.count("*").cast("long").alias("n_postings"),
-        F.sum(F.when(F.col("t1"), 1).otherwise(0)).cast("long").alias("n_tier1"),
-    )
-    return (
-        sizes.join(overlap, "pair", "left")
-        .select(
-            "pair", "n_postings", "n_tier1",
-            F.coalesce("overlap10", F.lit(0)).cast("long").alias("overlap10"),
-        )
-        .orderBy("pair")
-    )
-
-
-_TIER_PAIRS_SQL = ", ".join(
-    f"({p}, '{a}'), ({p}, '{b}')" for p, a, b in _TIER_PAIRS
-)
-
-SQL_TIER_SPLIT = f"""WITH {_BM25_CORE_SQL},
-pairs(pair, term) AS (VALUES {_TIER_PAIRS_SQL}),
-sl AS (
-  SELECT pairs.pair, scored.term, scored.doc_id,
-         round(scored.score, 4) AS s
-  FROM scored JOIN pairs ON scored.term = pairs.term
-),
-tiered AS (
-  SELECT pair, term, doc_id, s,
-         row_number() OVER (PARTITION BY pair, term
-                            ORDER BY s DESC, doc_id ASC)
-           <= ceil(count(*) OVER (PARTITION BY pair, term)
-                   * {_TIER_FRAC}) AS t1
-  FROM sl
-),
-docs AS (
-  SELECT pair, doc_id, round(sum(s), 4) AS fs,
-         round(sum(CASE WHEN t1 THEN s END), 4) AS ts,
-         sum(CASE WHEN t1 THEN 1 ELSE 0 END) AS n1
-  FROM tiered GROUP BY pair, doc_id
-),
-full10 AS (
-  SELECT pair, doc_id FROM (
-    SELECT pair, doc_id, row_number() OVER (
-      PARTITION BY pair ORDER BY fs DESC, doc_id ASC) AS rf
-    FROM docs) WHERE rf <= 10
-),
-tier10 AS (
-  SELECT pair, doc_id FROM (
-    SELECT pair, doc_id, row_number() OVER (
-      PARTITION BY pair ORDER BY ts DESC, doc_id ASC) AS rt
-    FROM docs WHERE n1 > 0) WHERE rt <= 10
-),
-ov AS (
-  SELECT full10.pair, count(*) AS overlap10
-  FROM full10 JOIN tier10
-    ON full10.pair = tier10.pair AND full10.doc_id = tier10.doc_id
-  GROUP BY full10.pair
-)
-SELECT t.pair, CAST(count(*) AS BIGINT) AS n_postings,
-       CAST(sum(CASE WHEN t1 THEN 1 ELSE 0 END) AS BIGINT) AS n_tier1,
-       CAST(coalesce(any_value(ov.overlap10), 0) AS BIGINT) AS overlap10
-FROM tiered t LEFT JOIN ov ON t.pair = ov.pair
-GROUP BY t.pair ORDER BY t.pair"""
-
-
-# ---------------------------------------------------------------------------
-# LM smoothing sweep (Zhai & Lafferty, SIGIR 2001)
-# ---------------------------------------------------------------------------
-
-_SW_SETTINGS = [("dirichlet", 200.0), ("dirichlet", 2000.0),
-                ("jm", 0.2), ("jm", 0.8)]
-
-
-def q_smoothing_sweep(spark, sf_dir):
-    """The Zhai-Lafferty smoothing study (SIGIR 2001) as one plan: rank
-    the OR candidates of query {merge, join} under four LM smoothing
-    settings — Dirichlet μ ∈ {200, 2000} and Jelinek-Mercer
-    λ ∈ {0.2, 0.8} — and report, per setting, the top-10 overlap with
-    the BM25 ranking of the same candidates plus the rank-1 doc.  This
-    is the parameter-sensitivity experiment run before picking a
-    production scorer; overlap@10 is the integer, engine-agnostic way
-    to compare rankings.
-
-    Scale shape: candidates × |q|=2 query terms (left join tf) is the
-    only non-k-row relation; the collection LM (p_q) and doc lengths
-    join narrowly; the 4-setting axis is a broadcast literal cross
-    join, so the scoring pass is shared across settings; rankings are
-    per-setting windows; output is 4 rows.
-    """
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir)
-    total = toks.agg(F.count("*").alias("_t"))
-    p = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("cf"))
-        .crossJoin(F.broadcast(total))
-        .select("term", (F.col("cf") / F.col("_t")).alias("p"))
-    )
-    tf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    cand = tf.select("doc_id").distinct()
-    grid = cand.crossJoin(F.broadcast(p)).join(
-        tf, ["term", "doc_id"], "left"
-    ).join(_dl(spark, sf_dir), "doc_id").select(
-        "doc_id", "term",
-        F.coalesce("tf", F.lit(0)).alias("tf"), "p", "dl",
-    )
-    settings = spark.createDataFrame(
-        _SW_SETTINGS, "method string, param double"
-    )
-    scored = grid.crossJoin(F.broadcast(settings)).withColumn(
-        "w",
-        F.when(
-            F.col("method") == "dirichlet",
-            F.log(
-                (F.col("tf") + F.col("param") * F.col("p"))
-                / (F.col("dl") + F.col("param"))
-            ),
-        ).otherwise(
-            F.log(
-                (1.0 - F.col("param")) * F.col("tf") / F.col("dl")
-                + F.col("param") * F.col("p")
-            )
-        ),
-    ).groupBy("method", "param", "doc_id").agg(_r4(F.sum("w")).alias("s"))
-    ws = Window.partitionBy("method", "param").orderBy(
-        F.col("s").desc(), F.col("doc_id").asc()
-    )
-    lm10 = scored.withColumn("r", F.row_number().over(ws)).filter(
-        F.col("r") <= 10
-    )
-    bm = (
-        _scored(spark, sf_dir, _QL_TERMS)
-        .groupBy("doc_id")
-        .agg(_r4(F.sum(_r4("score"))).alias("bs"))
-    )
-    wb = Window.orderBy(F.col("bs").desc(), F.col("doc_id").asc())
-    bm10 = (
-        bm.withColumn("rb", F.row_number().over(wb))
-        .filter(F.col("rb") <= 10)
-        .select("doc_id")
-    )
-    return (
-        lm10.join(F.broadcast(bm10), "doc_id", "left_semi")
-        .groupBy("method", "param")
-        .agg(F.count("*").cast("long").alias("overlap10"))
-        .join(
-            lm10.filter(F.col("r") == 1).select(
-                "method", "param", F.col("doc_id").alias("top1")
-            ),
-            ["method", "param"],
-        )
-        .orderBy("method", "param")
-    )
-
-
-_SW_SETTINGS_SQL = ", ".join(f"('{m}', {v})" for m, v in _SW_SETTINGS)
-
-SQL_SMOOTHING_SWEEP = f"""WITH {_BM25_CORE_SQL},
-qt AS (SELECT term, doc_id, tf FROM tf WHERE term IN ('merge', 'join')),
-tot AS (SELECT count(*) AS t FROM toks),
-p AS (SELECT term, CAST(count(*) AS DOUBLE) / any_value(tot.t) AS p
-      FROM toks CROSS JOIN tot
-      WHERE term IN ('merge', 'join') GROUP BY term),
-cand AS (SELECT DISTINCT doc_id FROM qt),
-grid AS (
-  SELECT cand.doc_id, p.term, coalesce(qt.tf, 0) AS tf, p.p, dl.dl
-  FROM cand CROSS JOIN p
-  LEFT JOIN qt ON qt.term = p.term AND qt.doc_id = cand.doc_id
-  JOIN dl ON dl.doc_id = cand.doc_id
-),
-settings(method, param) AS (VALUES {_SW_SETTINGS_SQL}),
-lm AS (
-  SELECT method, param, doc_id,
-         round(sum(CASE WHEN method = 'dirichlet'
-                   THEN ln((tf + param * p) / (dl + param))
-                   ELSE ln((1.0 - param) * tf / dl + param * p)
-                   END), 4) AS s
-  FROM grid CROSS JOIN settings
-  GROUP BY method, param, doc_id
-),
-lm10 AS (
-  SELECT method, param, doc_id, r FROM (
-    SELECT method, param, doc_id, row_number() OVER (
-      PARTITION BY method, param ORDER BY s DESC, doc_id ASC) AS r
-    FROM lm) WHERE r <= 10
-),
-bm10 AS (
-  SELECT doc_id FROM (
-    SELECT doc_id, row_number() OVER (ORDER BY bs DESC, doc_id ASC) AS rb
-    FROM (SELECT doc_id, round(sum(round(score, 4)), 4) AS bs
-          FROM scored WHERE term IN ('merge', 'join')
-          GROUP BY doc_id)) WHERE rb <= 10
-)
-SELECT lm10.method, lm10.param,
-       CAST(sum(CASE WHEN bm10.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS overlap10,
-       any_value(CASE WHEN lm10.r = 1 THEN lm10.doc_id END) AS top1
-FROM lm10 LEFT JOIN bm10 ON lm10.doc_id = bm10.doc_id
-GROUP BY lm10.method, lm10.param ORDER BY lm10.method, lm10.param"""
-
-
-# ---------------------------------------------------------------------------
-# CombSUM / CombMNZ run fusion (Fox & Shaw, TREC-2 1994)
-# ---------------------------------------------------------------------------
-
-_COMB_DEPTH = 20
-_COMB_MU = 1000.0
-
-
-def q_combsum_fusion(spark, sf_dir):
-    """Score-based run fusion (Fox & Shaw, TREC-2): fuse the BM25 run
-    and the Dirichlet-QL run (μ=1000) for query {merge, join}, each cut
-    to its top-20, by min-max normalizing scores WITHIN each run and
-    summing — CombSUM = Σ norm(s), CombMNZ = CombSUM × (#runs that
-    retrieved the doc).  The score-based counterpart to rrf_fusion
-    (rank-based); MNZ's multiply-by-hits is the classic consensus
-    boost.  Top-10 by CombMNZ.
-
-    Scale shape: each run is cut to k=20 FIRST by a distributed
-    TakeOrdered, so normalization (per-run 1-row min/max over 20 rows)
-    and the full-outer fusion join touch O(k) rows; all corpus-scale
-    work stays inside the two retrieval plans (term-filtered postings,
-    broadcast collection stats).  Output ≤ 10 rows.
-    """
-    from pyspark.sql import Window
-
-    bm = (
-        _scored(spark, sf_dir, _QL_TERMS)
-        .groupBy("doc_id")
-        .agg(_r4(F.sum(_r4("score"))).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_COMB_DEPTH)
-    )
-    toks = _tokens(spark, sf_dir)
-    total = toks.agg(F.count("*").alias("_t"))
-    p = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("cf"))
-        .crossJoin(F.broadcast(total))
-        .select("term", (F.col("cf") / F.col("_t")).alias("p"))
-    )
-    tf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    ql = (
-        tf.select("doc_id").distinct()
-        .crossJoin(F.broadcast(p))
-        .join(tf, ["term", "doc_id"], "left")
-        .join(_dl(spark, sf_dir), "doc_id")
-        .withColumn(
-            "w",
-            F.log(
-                (F.coalesce("tf", F.lit(0)) + _COMB_MU * F.col("p"))
-                / (F.col("dl") + _COMB_MU)
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(_r4(F.sum("w")).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_COMB_DEPTH)
-    )
-
-    def norm(run):
-        ext = run.agg(F.min("s").alias("_mn"), F.max("s").alias("_mx"))
-        return run.crossJoin(F.broadcast(ext)).select(
-            "doc_id",
-            (
-                (F.col("s") - F.col("_mn"))
-                / (F.col("_mx") - F.col("_mn"))
-            ).alias("ns"),
-        )
-
-    fused = (
-        norm(bm).select("doc_id", F.col("ns").alias("ns_bm"))
-        .join(
-            norm(ql).select("doc_id", F.col("ns").alias("ns_ql")),
-            "doc_id",
-            "full_outer",
-        )
-        .select(
-            "doc_id",
-            (
-                F.when(F.col("ns_bm").isNotNull(), 1).otherwise(0)
-                + F.when(F.col("ns_ql").isNotNull(), 1).otherwise(0)
-            ).cast("long").alias("n_sys"),
-            (
-                F.coalesce("ns_bm", F.lit(0.0))
-                + F.coalesce("ns_ql", F.lit(0.0))
-            ).alias("_cs"),
-        )
-    )
-    return (
-        fused.select(
-            "doc_id", "n_sys",
-            _r4("_cs").alias("combsum"),
-            _r4(F.col("_cs") * F.col("n_sys")).alias("combmnz"),
-        )
-        .orderBy(F.col("combmnz").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_COMBSUM_FUSION = f"""WITH {_BM25_CORE_SQL},
-bm AS (
-  SELECT doc_id, round(sum(round(score, 4)), 4) AS s
-  FROM scored WHERE term IN ('merge', 'join')
-  GROUP BY doc_id ORDER BY s DESC, doc_id ASC LIMIT {_COMB_DEPTH}
-),
-qt AS (SELECT term, doc_id, tf FROM tf WHERE term IN ('merge', 'join')),
-tot AS (SELECT count(*) AS t FROM toks),
-p AS (SELECT term, CAST(count(*) AS DOUBLE) / any_value(tot.t) AS p
-      FROM toks CROSS JOIN tot
-      WHERE term IN ('merge', 'join') GROUP BY term),
-ql AS (
-  SELECT doc_id, round(sum(w), 4) AS s FROM (
-    SELECT cand.doc_id,
-           ln((coalesce(qt.tf, 0) + {_COMB_MU} * p.p)
-              / (dl.dl + {_COMB_MU})) AS w
-    FROM (SELECT DISTINCT doc_id FROM qt) cand
-    CROSS JOIN p
-    LEFT JOIN qt ON qt.term = p.term AND qt.doc_id = cand.doc_id
-    JOIN dl ON dl.doc_id = cand.doc_id)
-  GROUP BY doc_id ORDER BY s DESC, doc_id ASC LIMIT {_COMB_DEPTH}
-),
-nbm AS (SELECT doc_id, (s - min(s) OVER ()) / (max(s) OVER ()
-               - min(s) OVER ()) AS ns FROM bm),
-nql AS (SELECT doc_id, (s - min(s) OVER ()) / (max(s) OVER ()
-               - min(s) OVER ()) AS ns FROM ql),
-fused AS (
-  SELECT coalesce(nbm.doc_id, nql.doc_id) AS doc_id,
-         (CASE WHEN nbm.ns IS NOT NULL THEN 1 ELSE 0 END
-          + CASE WHEN nql.ns IS NOT NULL THEN 1 ELSE 0 END) AS n_sys,
-         coalesce(nbm.ns, 0.0) + coalesce(nql.ns, 0.0) AS cs
-  FROM nbm FULL OUTER JOIN nql ON nbm.doc_id = nql.doc_id
-)
-SELECT doc_id, CAST(n_sys AS BIGINT) AS n_sys, round(cs, 4) AS combsum,
-       round(cs * n_sys, 4) AS combmnz
-FROM fused ORDER BY combmnz DESC, doc_id ASC LIMIT 10"""
-
-
-# ---------------------------------------------------------------------------
-# ranker-agreement metrics (Kendall tau, RBO) and sample-based shard routing
-# ---------------------------------------------------------------------------
-
-_AGREE_DEPTH = 10
-_RBO_P = 0.9
-_REDDE_MOD = 8       # deterministic 1/8 centralized sample: doc_id % 8 == 0
-_REDDE_N = 40        # sample-retrieval depth the shard estimate sums over
-
-
-def _rank_pair(spark, sf_dir):
-    """The two rankings the agreement metrics compare: BM25 and
-    Dirichlet-QL (mu = `_COMB_MU`, the same second run combsum_fusion
-    fuses — both scorers share the candidate pool, so the truncated
-    lists overlap enough for agreement metrics to be informative; PL2
-    at this corpus size retrieves a near-disjoint set), each cut to
-    top-`_AGREE_DEPTH`, inner-joined on doc_id -> (doc_id, ra, rb).
-    Both ranks are dense 1..k with rounded-score ordering and doc_id
-    tie-break so the pair table is identical in both engines.  All
-    corpus-scale work lives inside the two retrieval plans (term filter
-    below the tf agg, broadcast stats); the windows rank <= k rows
-    post-limit."""
-    from pyspark.sql import Window
-
-    bm = (
-        _scored(spark, sf_dir, _QL_TERMS)
-        .groupBy("doc_id")
-        .agg(_r4(F.sum(_r4("score"))).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_AGREE_DEPTH)
-    )
-    toks = _tokens(spark, sf_dir)
-    total = toks.agg(F.count("*").alias("_t"))
-    p = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term")
-        .agg(F.count("*").alias("cf"))
-        .crossJoin(F.broadcast(total))
-        .select("term", (F.col("cf") / F.col("_t")).alias("p"))
-    )
-    tf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    ql = (
-        tf.select("doc_id").distinct()
-        .crossJoin(F.broadcast(p))
-        .join(tf, ["term", "doc_id"], "left")
-        .join(_dl(spark, sf_dir), "doc_id")
-        .withColumn(
-            "w",
-            F.log(
-                (F.coalesce("tf", F.lit(0)) + _COMB_MU * F.col("p"))
-                / (F.col("dl") + _COMB_MU)
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(_r4(F.sum("w")).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_AGREE_DEPTH)
-    )
-    wa = Window.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-    a = bm.select("doc_id", F.row_number().over(wa).alias("ra"))
-    b = ql.select("doc_id", F.row_number().over(wa).alias("rb"))
-    return a.join(b, "doc_id")
-
-
-_RANK_PAIR_SQL = f"""{_BM25_CORE_SQL},
-bm AS (
-  SELECT doc_id, round(sum(round(score, 4)), 4) AS s
-  FROM scored WHERE term IN ('merge', 'join')
-  GROUP BY doc_id ORDER BY s DESC, doc_id ASC LIMIT {_AGREE_DEPTH}
-),
-qt AS (SELECT term, doc_id, tf FROM tf WHERE term IN ('merge', 'join')),
-tot AS (SELECT count(*) AS t FROM toks),
-p AS (SELECT term, CAST(count(*) AS DOUBLE) / any_value(tot.t) AS p
-      FROM toks CROSS JOIN tot
-      WHERE term IN ('merge', 'join') GROUP BY term),
-ql AS (
-  SELECT doc_id, round(sum(w), 4) AS s FROM (
-    SELECT cand.doc_id,
-           ln((coalesce(qt.tf, 0) + {_COMB_MU} * p.p)
-              / (dl.dl + {_COMB_MU})) AS w
-    FROM (SELECT DISTINCT doc_id FROM qt) cand
-    CROSS JOIN p
-    LEFT JOIN qt ON qt.term = p.term AND qt.doc_id = cand.doc_id
-    JOIN dl ON dl.doc_id = cand.doc_id)
-  GROUP BY doc_id ORDER BY s DESC, doc_id ASC LIMIT {_AGREE_DEPTH}
-),
-ra AS (SELECT doc_id, row_number() OVER (ORDER BY s DESC, doc_id ASC) AS ra
-       FROM bm),
-rb AS (SELECT doc_id, row_number() OVER (ORDER BY s DESC, doc_id ASC) AS rb
-       FROM ql),
-pair AS (SELECT ra.doc_id, ra.ra, rb.rb
-         FROM ra JOIN rb ON ra.doc_id = rb.doc_id)"""
-
-
-def q_kendall_tau(spark, sf_dir):
-    """Kendall's tau-a rank correlation between the BM25 top-10 and the
-    Dirichlet-QL top-10 for the same query — the standard "did the model swap
-    reorder results?" check an IR stack runs before switching scorers
-    (Voorhees, SIGIR 1998 ties system-agreement to tau).  Truncated-list
-    form: tau over the docs BOTH lists retrieved, by their two rank
-    orders; C/D counted over all unordered pairs, tau = (C-D)/(n(n-1)/2).
-
-    Scale shape: corpus-scale work is confined to the two retrieval
-    plans; the pair table is <= 10 rows, so the O(k^2) concordance
-    self-join is 45 comparisons.  Output is 1 row.
-    """
-    pair = _rank_pair(spark, sf_dir)
-    i = pair.select(
-        F.col("ra").alias("ra_i"), F.col("rb").alias("rb_i")
-    )
-    j = pair.select(
-        F.col("ra").alias("ra_j"), F.col("rb").alias("rb_j")
-    )
-    pairs = i.crossJoin(j).filter(F.col("ra_i") < F.col("ra_j"))
-    return pairs.agg(
-        F.count("*").alias("_np"),
-        F.sum(
-            F.when(F.col("rb_i") < F.col("rb_j"), 1).otherwise(0)
-        ).cast("long").alias("concordant"),
-        F.sum(
-            F.when(F.col("rb_i") > F.col("rb_j"), 1).otherwise(0)
-        ).cast("long").alias("discordant"),
-    ).select(
-        "concordant",
-        "discordant",
-        _r4(
-            (F.col("concordant") - F.col("discordant")) / F.col("_np")
-        ).alias("tau"),
-    )
-
-
-SQL_KENDALL_TAU = f"""WITH {_RANK_PAIR_SQL}
-SELECT CAST(sum(CASE WHEN i.rb < j.rb THEN 1 ELSE 0 END) AS BIGINT)
-         AS concordant,
-       CAST(sum(CASE WHEN i.rb > j.rb THEN 1 ELSE 0 END) AS BIGINT)
-         AS discordant,
-       round((sum(CASE WHEN i.rb < j.rb THEN 1 ELSE 0 END)
-              - sum(CASE WHEN i.rb > j.rb THEN 1 ELSE 0 END))
-             / CAST(count(*) AS DOUBLE), 4) AS tau
-FROM pair i JOIN pair j ON i.ra < j.ra"""
-
-
-def q_rbo_overlap(spark, sf_dir):
-    """Rank-Biased Overlap (Webber, Moffat & Zobel, TOIS 2010) between
-    the same BM25 / Dirichlet-QL top-10 pair — the top-weighted agreement metric
-    that, unlike Kendall's tau, rewards agreement at rank 1 more than at
-    rank 10 and is defined on non-conjoint lists.  Truncated RBO at
-    p={_RBO_P}, depth {_AGREE_DEPTH}:
-    RBO = sum over d=1..k of (1-p) * p^(d-1) * |A_1..d n B_1..d| / d.
-    A doc common to both lists with ranks (ra, rb) contributes to every
-    depth d >= max(ra, rb), so the sum is driven per-doc from max(ra,rb).
-
-    Scale shape: identical to kendall_tau — retrieval plans carry the
-    corpus work, then <= 10 common docs x <= 10 depths = 100 rows.
-    Output is 1 row (overlap@k and rbo).
-    """
-    pair = _rank_pair(spark, sf_dir).select(
-        "doc_id", F.greatest("ra", "rb").alias("m")
-    )
-    depths = pair.select(
-        "doc_id",
-        F.explode(F.sequence(F.col("m"), F.lit(_AGREE_DEPTH))).alias("d"),
-    )
-    contrib = (
-        (1.0 - _RBO_P)
-        * F.pow(F.lit(_RBO_P), F.col("d") - 1)
-        / F.col("d")
-    )
-    return depths.agg(
-        F.count_distinct("doc_id").cast("long").alias("overlap_k"),
-        _r4(F.sum(contrib)).alias("rbo"),
-    )
-
-
-SQL_RBO_OVERLAP = f"""WITH {_RANK_PAIR_SQL},
-m AS (SELECT doc_id, greatest(ra, rb) AS m FROM pair),
-contrib AS (
-  SELECT m.doc_id,
-         (1.0 - {_RBO_P}) * power({_RBO_P}, d.d - 1) / d.d AS c
-  FROM m JOIN (SELECT unnest(range(1, {_AGREE_DEPTH} + 1)) AS d) d
-    ON d.d >= m.m
-)
-SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS overlap_k,
-       round(sum(c), 4) AS rbo
-FROM contrib"""
-
-
-def q_redde_selection(spark, sf_dir):
-    """ReDDE resource selection (Si & Callan, SIGIR 2003) — the
-    sample-based alternative to cori_shards: retrieve from a small
-    CENTRALIZED SAMPLE of all shards, then estimate each shard's
-    relevant-document count by scaling its sample hits back up.  The
-    sample is deterministic (doc_id % {_REDDE_MOD} == 0, ~1/{_REDDE_MOD}
-    of the corpus); BM25 over the sample's OWN statistics retrieves the
-    top {_REDDE_N} sample docs, and shard s (documents.source) scores
-    sum(hits_in_top_n) * |s| / |sample_s|.  Shards ranked by the
-    estimate — the query only fans out to the winners.
-
-    Scale shape: this is the point of ReDDE at 10^12 docs — retrieval
-    runs against the 1/{_REDDE_MOD} sample index only (term filter below
-    the tf agg, sample-scoped broadcast stats), and everything after the
-    top-{_REDDE_N} cut is |shards|-sized: shard totals and sample counts
-    are |shards|-row broadcast rollups.
-    """
-    from pyspark.sql import Window
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    sample_ids = docs.filter(F.col("doc_id") % _REDDE_MOD == 0)
-    toks = _tokens(spark, sf_dir).join(
-        sample_ids.select("doc_id"), "doc_id"
-    )
-    tf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = dl.agg(F.count("*").alias("_n_docs"), F.avg("dl").alias("_avgdl"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    top = (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "score",
-            bm25.idf_col(F.col("df"), F.col("_n_docs").cast("double"))
-            * bm25.weight_col(F.col("tf"), F.col("dl"), F.col("_avgdl")),
-        )
-        .groupBy("doc_id")
-        .agg(_r4(F.sum(_r4("score"))).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_REDDE_N)
-    )
-    shard_total = docs.groupBy("source").agg(F.count("*").alias("n_total"))
-    shard_sample = sample_ids.groupBy("source").agg(
-        F.count("*").alias("n_sample")
-    )
-    w = Window.orderBy(F.col("redde_score").desc(), F.col("shard").asc())
-    return (
-        top.join(docs, "doc_id")
-        .groupBy("source")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-        .join(F.broadcast(shard_total), "source")
-        .join(F.broadcast(shard_sample), "source")
-        .select(
-            F.col("source").alias("shard"),
-            "n_hits",
-            _r4(F.col("n_total") / F.col("n_sample")).alias("scale"),
-            _r4(
-                F.col("n_hits") * F.col("n_total") / F.col("n_sample")
-            ).alias("redde_score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .orderBy("rank")
-    )
-
-
-SQL_REDDE_SELECTION = f"""WITH
-docs AS (SELECT doc_id, source FROM documents),
-sample_ids AS (SELECT doc_id, source FROM docs
-               WHERE doc_id % {_REDDE_MOD} = 0),
-stoks AS (
-  SELECT t.doc_id, t.term FROM (
-    SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(text),
-                              '[^a-z0-9]+'), x -> x <> '')) AS term
-    FROM documents WHERE doc_id % {_REDDE_MOD} = 0) t
-),
-tf AS (SELECT term, doc_id, count(*) AS tf FROM stoks
-       WHERE term IN ('merge', 'join') GROUP BY term, doc_id),
-dl AS (SELECT doc_id, count(*) AS dl FROM stoks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-top AS (
-  SELECT doc_id, round(sum(round(score, 4)), 4) AS s FROM (
-    SELECT tf.doc_id,
-           ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-           * (tf.tf * (1.2 + 1.0))
-           / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl))
-             AS score
-    FROM tf JOIN df ON tf.term = df.term
-    JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN stats)
-  GROUP BY doc_id ORDER BY s DESC, doc_id ASC LIMIT {_REDDE_N}
-),
-shard_total AS (SELECT source, count(*) AS n_total FROM docs GROUP BY source),
-shard_sample AS (SELECT source, count(*) AS n_sample FROM sample_ids
-                 GROUP BY source),
-hits AS (
-  SELECT d.source, count(*) AS n_hits
-  FROM top JOIN docs d ON top.doc_id = d.doc_id GROUP BY d.source
-)
-SELECT h.source AS shard, CAST(h.n_hits AS BIGINT) AS n_hits,
-       round(CAST(st.n_total AS DOUBLE) / ss.n_sample, 4) AS scale,
-       round(h.n_hits * CAST(st.n_total AS DOUBLE) / ss.n_sample, 4)
-         AS redde_score,
-       CAST(row_number() OVER (
-         ORDER BY h.n_hits * CAST(st.n_total AS DOUBLE) / ss.n_sample DESC,
-                  h.source ASC) AS BIGINT) AS rank
-FROM hits h JOIN shard_total st ON h.source = st.source
-JOIN shard_sample ss ON h.source = ss.source
-ORDER BY rank"""
-
-
-# ---------------------------------------------------------------------------
-# query-log mining: co-click similarity, static cache admission, abandonment
-# ---------------------------------------------------------------------------
-
-_COCLICK_Q = 20      # deterministic pseudo-query id: user_id % 20
-_COCLICK_TOPN = 3
-_CACHE_TOPN = 3
-_ABANDON_COHORTS = 5
-
-
-def q_coclick_similarity(spark, sf_dir):
-    """Query-query similarity from co-clicks (Beeferman & Berger, KDD
-    2000 — agglomerative clustering over the query-URL click bipartite
-    graph): two queries are similar when they click the same items.
-    The click log's query id is derived deterministically
-    (user_id % {_COCLICK_Q}, the same synthetic-derivation convention
-    coec_model uses for positions); per query the clicked-item SET, then
-    Jaccard over item sets for every query pair sharing an item, top-3
-    neighbors per query.
-
-    Scale shape: the pair generation is the classic bipartite self-join
-    keyed on item — the 10^12-row analogue needs the hot-item cap the
-    LSH entries use (an item clicked by q queries emits q^2 pairs);
-    here item fan-out is bounded by |Q|={_COCLICK_Q} so each item emits
-    <= Q^2 pairs and the similarity matrix is <= Q^2 rows.  Set sizes
-    are a |Q|-row broadcast; the neighbor cut is a per-query rank
-    window over <= Q rows.
-    """
-    from pyspark.sql import Window
-
-    qi = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.pmod(F.col("user_id"), F.lit(_COCLICK_Q)).cast("long").alias("q"),
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-        .distinct()
-    )
-    sizes = qi.groupBy("q").agg(F.count("*").alias("n"))
-    pairs = (
-        qi.select(F.col("q").alias("qa"), "item")
-        .join(qi.select(F.col("q").alias("qb"), "item"), "item")
-        .filter(F.col("qa") < F.col("qb"))
-        .groupBy("qa", "qb")
-        .agg(F.count("*").cast("long").alias("co"))
-    )
-    w = Window.partitionBy("qa").orderBy(
-        F.col("jaccard").desc(), F.col("qb").asc()
-    )
-    return (
-        pairs.join(
-            F.broadcast(sizes.select(F.col("q").alias("qa"),
-                                     F.col("n").alias("na"))), "qa")
-        .join(
-            F.broadcast(sizes.select(F.col("q").alias("qb"),
-                                     F.col("n").alias("nb"))), "qb")
-        .withColumn(
-            "jaccard",
-            _r4(F.col("co") / (F.col("na") + F.col("nb") - F.col("co"))),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _COCLICK_TOPN)
-        .select("qa", "qb", "co", "jaccard", "rank")
-        .orderBy("qa", "rank")
-    )
-
-
-SQL_COCLICK_SIMILARITY = f"""WITH qi AS (
-  SELECT DISTINCT user_id % {_COCLICK_Q} AS q,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events
-  WHERE event_type = 'click'
-    AND json_extract_string(props, '$.k') IS NOT NULL
-),
-sizes AS (SELECT q, count(*) AS n FROM qi GROUP BY q),
-pairs AS (
-  SELECT a.q AS qa, b.q AS qb, count(*) AS co
-  FROM qi a JOIN qi b ON a.item = b.item AND a.q < b.q
-  GROUP BY a.q, b.q
-),
-sim AS (
-  SELECT p.qa, p.qb, p.co,
-         round(CAST(p.co AS DOUBLE) / (sa.n + sb.n - p.co), 4) AS jaccard
-  FROM pairs p
-  JOIN sizes sa ON p.qa = sa.q
-  JOIN sizes sb ON p.qb = sb.q
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY qa
-            ORDER BY jaccard DESC, qb ASC) AS rank
-  FROM sim
-)
-SELECT qa, qb, CAST(co AS BIGINT) AS co, jaccard,
-       CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_COCLICK_TOPN} ORDER BY qa, rank"""
-
-
-def q_cache_selection(spark, sf_dir):
-    """Static result-cache admission by QtfDf (Baeza-Yates et al.,
-    SIGIR 2007): a posting-list cache should admit the terms with the
-    highest query-frequency-to-document-frequency ratio — popular in
-    the QUERY log but cheap to keep because their posting lists are
-    short relative to how often they are asked.  The query log is
-    derived deterministically from click events (event_id % |seeds|
-    picks the seed term queried); qtf_df = qfreq / df, cached = the
-    top {_CACHE_TOPN}.
-
-    Scale shape: the log-side rollup is a map-side-combinable count to
-    |seeds| rows; df comes from the tf aggregate with the term filter
-    pushed BELOW it; the join of two |seeds|-row tables is trivially
-    broadcast.  At 10^12 events nothing exceeds |vocabulary-of-the-log|
-    cardinality — the point of QtfDf is that this tiny summary decides
-    what the cache holds.
-    """
-    from pyspark.sql import Window
-
-    seed_arr = F.array(*[F.lit(s) for s in sorted(_IL_SEEDS)])
-    qfreq = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.element_at(
-                seed_arr,
-                (F.pmod(F.col("event_id"), F.lit(len(_IL_SEEDS))) + 1)
-                .cast("int"),
-            ).alias("term")
-        )
-        .groupBy("term")
-        .agg(F.count("*").cast("long").alias("qfreq"))
-    )
-    df = (
-        _tokens(spark, sf_dir)
-        .filter(F.col("term").isin(_IL_SEEDS))
-        .groupBy("term")
-        .agg(F.count_distinct("doc_id").cast("long").alias("df"))
-    )
-    w = Window.orderBy(F.col("qtf_df").desc(), F.col("term").asc())
-    return (
-        qfreq.join(F.broadcast(df), "term")
-        .withColumn("qtf_df", _r4(F.col("qfreq") / F.col("df")))
-        .withColumn("rank", F.row_number().over(w))
-        .select(
-            "term", "qfreq", "df", "qtf_df", "rank",
-            (F.col("rank") <= _CACHE_TOPN).alias("cached"),
-        )
-        .orderBy("rank")
-    )
-
-
-_CACHE_SEED_VALUES = ", ".join(
-    f"({i}, '{s}')" for i, s in enumerate(sorted(_IL_SEEDS))
-)
-
-SQL_CACHE_SELECTION = f"""WITH {_TOKS_SQL},
-seeds(i, term) AS (VALUES {_CACHE_SEED_VALUES}),
-qfreq AS (
-  SELECT s.term, count(*) AS qfreq
-  FROM events e JOIN seeds s ON e.event_id % {len(_IL_SEEDS)} = s.i
-  WHERE e.event_type = 'click'
-  GROUP BY s.term
-),
-df AS (
-  SELECT term, count(DISTINCT doc_id) AS df FROM toks
-  WHERE term IN ({", ".join(f"'{s}'" for s in sorted(_IL_SEEDS))})
-  GROUP BY term
-),
-ranked AS (
-  SELECT q.term, q.qfreq, df.df,
-         round(CAST(q.qfreq AS DOUBLE) / df.df, 4) AS qtf_df,
-         row_number() OVER (
-           ORDER BY CAST(q.qfreq AS DOUBLE) / df.df DESC, q.term ASC) AS rank
-  FROM qfreq q JOIN df ON q.term = df.term
-)
-SELECT term, CAST(qfreq AS BIGINT) AS qfreq, CAST(df AS BIGINT) AS df,
-       qtf_df, CAST(rank AS BIGINT) AS rank,
-       rank <= {_CACHE_TOPN} AS cached
-FROM ranked ORDER BY rank"""
-
-
-def q_query_abandonment(spark, sf_dir):
-    """Session abandonment rate — the standard search-quality KPI: a
-    session that SAW results (a view event) but never clicked is an
-    abandoned session.  Sessions are the same 30-minute-gap islands
-    sessionize emits; rates are rolled up per user cohort
-    (user_id % {_ABANDON_COHORTS}) so the output is bounded and cohort
-    regressions are visible.
-
-    Scale shape: the gaps-and-islands window is per-user (the
-    sessionize pattern — state bounded by one user's events per
-    partition, never a global window); the per-session flag reduce and
-    the cohort rollup are map-side-combinable aggregates.  Output is
-    {_ABANDON_COHORTS} rows.
-    """
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    sid = (
-        ev.withColumn("prev_ts", F.lag("ts").over(wu))
-        .withColumn(
-            "new_session",
-            F.when(
-                F.col("prev_ts").isNull()
-                | (
-                    F.unix_micros(F.col("ts").cast("timestamp"))
-                    - F.unix_micros(F.col("prev_ts").cast("timestamp"))
-                    > 1800 * 1_000_000
-                ),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn("session_id", F.sum("new_session").over(
-            wu.rowsBetween(Window.unboundedPreceding, 0)
-        ))
-    )
-    sessions = sid.groupBy("user_id", "session_id").agg(
-        F.max(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        .alias("has_view"),
-        F.max(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .alias("has_click"),
-    )
-    return (
-        sessions.filter(F.col("has_view") == 1)
-        .groupBy(
-            F.pmod(F.col("user_id"), F.lit(_ABANDON_COHORTS))
-            .cast("long").alias("cohort")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_sessions"),
-            F.sum(F.when(F.col("has_click") == 0, 1).otherwise(0))
-            .cast("long").alias("n_abandoned"),
-        )
-        .withColumn(
-            "abandon_rate",
-            _r4(F.col("n_abandoned") / F.col("n_sessions")),
-        )
-        .orderBy("cohort")
-    )
-
-
-SQL_QUERY_ABANDONMENT = f"""WITH flagged AS (
-  SELECT user_id, event_id, event_type, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END
-           AS new_session
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sid AS (
-  SELECT *, sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM flagged
-), sessions AS (
-  SELECT user_id, session_id,
-         max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS has_view,
-         max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS has_click
-  FROM sid GROUP BY user_id, session_id
-)
-SELECT CAST(user_id % {_ABANDON_COHORTS} AS BIGINT) AS cohort,
-       CAST(count(*) AS BIGINT) AS n_sessions,
-       CAST(sum(CASE WHEN has_click = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_abandoned,
-       round(sum(CASE WHEN has_click = 0 THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 4) AS abandon_rate
-FROM sessions WHERE has_view = 1
-GROUP BY cohort ORDER BY cohort"""
-
-
-# ---------------------------------------------------------------------------
-# language-model estimation: Kneser-Ney, Good-Turing, stopword induction
-# ---------------------------------------------------------------------------
-
-_KN_D = 0.75
-_KN_PROBES = [
-    ("order", "fast"), ("window", "join"), ("merge", "join"), ("fast", "data")
-]
-_GT_MAX_R = 5
-_STOP_TOPN = 10
-
-
-def q_kneser_ney(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram probabilities (Kneser & Ney, ICASSP
-    1995; Chen & Goodman 1998's benchmark winner) for a fixed probe set —
-    the smoothing a production LM actually ships, vs the additive
-    baseline bigram_logprob uses:
-    P(w2|w1) = max(c(w1w2)-D, 0)/c(w1.)
-               + D * N1+(w1,*)/c(w1.) * N1+(*,w2)/N1+(*,*)
-    with discount D={_KN_D}; the continuation probability counts
-    DISTINCT left-contexts, the insight that makes KN beat frequency
-    backoff.  Unseen probes exercise the pure-backoff path.
-
-    Scale shape: bigram counts and the three N1+ tables are map-side
-    combinable aggregates; the probe join keeps everything after them
-    at |probes| rows (the probe table is a literal); c(w1.) and
-    N1+(w1,*) are derived FROM the bigram table so the model is
-    internally consistent (no doc-boundary mismatch).
-    """
-    inst = _word_grams(spark, sf_dir, 2)
-    sp = F.split("g", " ")
-    bi = (
-        inst.select(sp[0].alias("w1"), sp[1].alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-    )
-    left = bi.groupBy("w1").agg(
-        F.sum("c12").alias("c1"),
-        F.count("*").alias("n1f"),      # N1+(w1, *)
-    )
-    right = bi.groupBy("w2").agg(F.count("*").alias("n1b"))  # N1+(*, w2)
-    types = bi.agg(F.count("*").alias("_nt"))                # N1+(*, *)
-    probes = spark.createDataFrame(_KN_PROBES, ["w1", "w2"])
-    p_cont = F.col("n1b") / F.col("_nt")
-    p_kn = (
-        F.greatest(F.coalesce("c12", F.lit(0)) - _KN_D, F.lit(0.0))
-        / F.col("c1")
-        + _KN_D * F.col("n1f") / F.col("c1") * p_cont
-    )
-    return (
-        probes.join(bi, ["w1", "w2"], "left")
-        .join(left, "w1")
-        .join(right, "w2")
-        .crossJoin(F.broadcast(types))
-        .select(
-            "w1", "w2",
-            F.coalesce("c12", F.lit(0)).cast("long").alias("c12"),
-            _r4(p_kn).alias("p_kn"),
-        )
-        .orderBy("w1", "w2")
-    )
-
-
-_KN_PROBE_VALUES = ", ".join(f"('{a}', '{b}')" for a, b in _KN_PROBES)
-
-SQL_KNESER_NEY = f"""WITH {_TOKS_SQL},
-bi AS (
-  SELECT a.term AS w1, b.term AS w2, count(*) AS c12
-  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  GROUP BY a.term, b.term
-),
-lft AS (SELECT w1, sum(c12) AS c1, count(*) AS n1f FROM bi GROUP BY w1),
-rgt AS (SELECT w2, count(*) AS n1b FROM bi GROUP BY w2),
-types AS (SELECT count(*) AS nt FROM bi),
-probes(w1, w2) AS (VALUES {_KN_PROBE_VALUES})
-SELECT p.w1, p.w2,
-       CAST(coalesce(bi.c12, 0) AS BIGINT) AS c12,
-       round(greatest(coalesce(bi.c12, 0) - {_KN_D}, 0.0) / lft.c1
-             + {_KN_D} * lft.n1f / lft.c1
-               * (CAST(rgt.n1b AS DOUBLE) / types.nt), 4) AS p_kn
-FROM probes p
-LEFT JOIN bi ON p.w1 = bi.w1 AND p.w2 = bi.w2
-JOIN lft ON p.w1 = lft.w1
-JOIN rgt ON p.w2 = rgt.w2
-CROSS JOIN types
-ORDER BY p.w1, p.w2"""
-
-
-def q_good_turing(spark, sf_dir):
-    """Good-Turing frequency-of-frequencies estimates (Good 1953; the
-    Gale & Sampson 1995 simple form) over the BIGRAM count table —
-    bigrams, not unigrams, because GT lives off the low-count tail
-    (N_1, N_2, ...) and n-gram tables are where that tail exists:
-    N_r = how many distinct bigrams occur exactly r times, the smoothed
-    count r* = (r+1) * N_(r+1) / N_r for r = 1..{_GT_MAX_R}, and the
-    unseen-event mass p0 = N_1 / N_instances that every smoothing
-    scheme redistributes.  The table a KenLM-style estimator derives
-    its discounts from (and the D in kneser_ney approximates).
-
-    Scale shape: two map-side-combinable aggregates (bigram counts,
-    then counts-of-counts) collapse the bigram vocabulary to <= max(r)
-    rows before anything else runs; the self-join to fetch N_(r+1) is
-    over that tiny table and the totals are a 1-row broadcast.
-    """
-    counts = (
-        _word_grams(spark, sf_dir, 2)
-        .groupBy("g")
-        .agg(F.count("*").alias("r"))
-    )
-    nr = counts.groupBy("r").agg(F.count("*").alias("n_r"))
-    tot = counts.agg(
-        F.sum("r").alias("_ntok"),
-        F.sum(F.when(F.col("r") == 1, 1).otherwise(0)).alias("_n1"),
-    )  # _ntok = total bigram instances, _n1 = singleton bigram types
-    nxt = nr.select((F.col("r") - 1).alias("r"), F.col("n_r").alias("n_r1"))
-    return (
-        nr.filter((F.col("r") >= 1) & (F.col("r") <= _GT_MAX_R))
-        .join(nxt, "r", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("r").cast("long").alias("r"),
-            F.col("n_r").cast("long").alias("n_r"),
-            F.coalesce("n_r1", F.lit(0)).cast("long").alias("n_r_plus_1"),
-            _r4(
-                (F.col("r") + 1) * F.coalesce("n_r1", F.lit(0)) / F.col("n_r")
-            ).alias("r_star"),
-            _r4(F.col("_n1") / F.col("_ntok")).alias("unseen_mass"),
-        )
-        .orderBy("r")
-    )
-
-
-SQL_GOOD_TURING = f"""WITH {_TOKS_SQL},
-counts AS (
-  SELECT a.term || ' ' || b.term AS g, count(*) AS r
-  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  GROUP BY a.term, b.term),
-nr AS (SELECT r, count(*) AS n_r FROM counts GROUP BY r),
-tot AS (SELECT sum(r) AS ntok,
-               sum(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS n1 FROM counts)
-SELECT CAST(nr.r AS BIGINT) AS r, CAST(nr.n_r AS BIGINT) AS n_r,
-       CAST(coalesce(nx.n_r, 0) AS BIGINT) AS n_r_plus_1,
-       round((nr.r + 1) * CAST(coalesce(nx.n_r, 0) AS DOUBLE) / nr.n_r, 4)
-         AS r_star,
-       round(CAST(tot.n1 AS DOUBLE) / tot.ntok, 4) AS unseen_mass
-FROM nr LEFT JOIN nr nx ON nx.r = nr.r + 1 CROSS JOIN tot
-WHERE nr.r BETWEEN 1 AND {_GT_MAX_R}
-ORDER BY r"""
-
-
-def q_stopword_induction(spark, sf_dir):
-    """Corpus-driven stopword induction — rank terms by document-ratio
-    df/N (Luhn's high-frequency cut; the list Lucene ships per language
-    is exactly this computed offline): the top {_STOP_TOPN} terms by how
-    universally they appear, with their (vanishing) BM25 idf attached —
-    the evidence for dropping them from the index or flagging them
-    stop-eligible at query time.
-
-    Scale shape: df is one map-side distinct-count aggregate over the
-    token scan; N is a 1-row broadcast; the cut is a distributed
-    TakeOrdered over |vocabulary| rows — never a global window.
-    """
-    df = (
-        _tokens(spark, sf_dir)
-        .groupBy("term")
-        .agg(F.count_distinct("doc_id").alias("df"))
-    )
-    n = _docs(spark, sf_dir).agg(F.count("*").alias("_n"))
-    return (
-        df.crossJoin(F.broadcast(n))
-        .select(
-            "term",
-            F.col("df").cast("long").alias("df"),
-            _r4(F.col("df") / F.col("_n")).alias("df_ratio"),
-            _r4(
-                F.log(
-                    (F.col("_n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                )
-            ).alias("idf"),
-        )
-        .orderBy(F.col("df").desc(), F.col("term").asc())
-        .limit(_STOP_TOPN)
-    )
-
-
-SQL_STOPWORD_INDUCTION = f"""WITH {_TOKS_SQL},
-df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY term),
-n AS (SELECT count(*) AS n FROM documents)
-SELECT term, CAST(df AS BIGINT) AS df,
-       round(CAST(df AS DOUBLE) / n.n, 4) AS df_ratio,
-       round(ln((n.n - df + 0.5) / (df + 0.5) + 1.0), 4) AS idf
-FROM df CROSS JOIN n
-ORDER BY df DESC, term ASC LIMIT {_STOP_TOPN}"""
-
-
-# ---------------------------------------------------------------------------
-# SALSA link analysis and crawl-budget apportionment
-# ---------------------------------------------------------------------------
-
-_SALSA_ITERS = 3
-_CB_BUDGET = 1000
-_CB_HOSTS = 10
-
-
-def q_salsa(spark, sf_dir):
-    """SALSA authority scores (Lempel & Moran, WWW 2000) over the same
-    synthetic link graph as q_pagerank/q_hits — the degree-normalized
-    cousin of HITS that powered web search's related-pages features: a
-    random walk alternating authority -> hub (uniform over in-links)
-    -> authority (uniform over out-links).  {_SALSA_ITERS} power
-    iterations from the uniform authority start:
-    h(u) = sum over u->v of a(v)/indeg(v);
-    a'(v) = sum over u->v of h(u)/outdeg(u).
-    The walk conserves probability mass, so sum(a) == 1 at every step —
-    the correctness invariant the test pins.  Top-10 authorities.
-
-    Scale shape per iteration: identical to q_pagerank — one join of
-    the score vector against the degree-annotated edge list + one hash
-    aggregation on the other endpoint (Pregel message passing); degrees
-    are computed once before the loop; lineage references each
-    intermediate exactly once so plan depth is linear in iterations.
-    """
-    _with_n, edges = _link_edges(spark, sf_dir)
-    indeg = edges.groupBy("dst").agg(F.count("*").alias("ind"))
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outd"))
-    e = edges.join(indeg, "dst").join(outdeg, "src")
-    n_auth = indeg.agg(F.count("*").alias("_na"))
-    a = indeg.crossJoin(F.broadcast(n_auth)).select(
-        F.col("dst").alias("id"), (F.lit(1.0) / F.col("_na")).alias("a")
-    )
-    for _ in range(_SALSA_ITERS):
-        h = (
-            a.join(e, a["id"] == e["dst"])
-            .groupBy("src")
-            .agg(F.sum(F.col("a") / F.col("ind")).alias("h"))
-        )
-        a = (
-            h.join(e, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("h") / F.col("outd")).alias("a"))
-            .select(F.col("dst").alias("id"), "a")
-        )
-    return (
-        a.select(
-            F.col("id").alias("doc_id"), F.round("a", 8).alias("salsa_auth")
-        )
-        .orderBy(F.col("salsa_auth").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-def _salsa_sql() -> str:
-    rules = ", ".join(f"({m}, {b})" for m, b in _PR_RULES)
-    parts = [
-        f"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT count(*) AS n FROM nodes),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
-    FROM nodes CROSS JOIN nn
-    CROSS JOIN (VALUES {rules}) AS rules(m, b)
-  ) WHERE src <> dst
-),
-ind AS (SELECT dst, count(*) AS ind FROM edges GROUP BY dst),
-outd AS (SELECT src, count(*) AS outd FROM edges GROUP BY src),
-e AS (SELECT edges.src, edges.dst, ind.ind, outd.outd
-      FROM edges JOIN ind USING (dst) JOIN outd USING (src)),
-na AS (SELECT count(*) AS na FROM ind),
-a0 AS (SELECT dst AS id, CAST(1 AS DOUBLE) / na.na AS a
-       FROM ind CROSS JOIN na)"""
-    ]
-    for t in range(1, _SALSA_ITERS + 1):
-        parts.append(
-            f""",
-h{t} AS (SELECT e.src, sum(a.a / e.ind) AS h
-         FROM a{t - 1} a JOIN e ON a.id = e.dst GROUP BY e.src),
-a{t} AS (SELECT e.dst AS id, sum(h.h / e.outd) AS a
-         FROM h{t} h JOIN e ON h.src = e.src GROUP BY e.dst)"""
-        )
-    parts.append(
-        f"""
-SELECT id AS doc_id, round(a, 8) AS salsa_auth FROM a{_SALSA_ITERS}
-ORDER BY salsa_auth DESC, doc_id ASC LIMIT 10"""
-    )
-    return "".join(parts)
-
-
-SQL_SALSA = _salsa_sql()
-
-
-def q_crawl_budget(spark, sf_dir):
-    """Per-host crawl-budget apportionment by the largest-remainder
-    (Hamilton) method — the deterministic integer allocation a crawl
-    scheduler needs: given demand weights per host (click + view event
-    mass; host = item % {_CB_HOSTS}), split a fixed budget of
-    {_CB_BUDGET} fetch slots so that every host gets floor(B * w/W) and
-    the leftover slots go to the largest fractional remainders
-    (host-id tie-break).  Guarantees sum(budget) == B exactly and each
-    host within 1 slot of its exact quota — the property proportional
-    rounding alone cannot give.
-
-    Scale shape: the host rollup is a map-side-combinable aggregate to
-    {_CB_HOSTS} rows; W is a 1-row broadcast; the remainder ranking is
-    a window over the {_CB_HOSTS}-row table.  At 10^12 events the only
-    corpus-scale work is the first aggregate.
-    """
-    from pyspark.sql import Window
-
-    w = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("click", "view"))
-        .select(
-            (
-                F.get_json_object("props", "$.k").cast("long")
-                % _CB_HOSTS
-            ).alias("host")
-        )
-        .filter(F.col("host").isNotNull())
-        .groupBy("host")
-        .agg(F.count("*").cast("long").alias("weight"))
-    )
-    tot = w.agg(F.sum("weight").alias("_w"))
-    quota = w.crossJoin(F.broadcast(tot)).withColumn(
-        "quota", F.lit(float(_CB_BUDGET)) * F.col("weight") / F.col("_w")
-    )
-    base = quota.withColumn("floor_q", F.floor("quota").cast("long"))
-    short = base.agg(
-        (F.lit(_CB_BUDGET) - F.sum("floor_q")).cast("long").alias("_r")
-    )
-    wrem = Window.orderBy(
-        (F.col("quota") - F.col("floor_q")).desc(), F.col("host").asc()
-    )
-    return (
-        base.crossJoin(F.broadcast(short))
-        .withColumn("rem_rank", F.row_number().over(wrem))
-        .select(
-            "host",
-            "weight",
-            _r4("quota").alias("quota"),
-            (
-                F.col("floor_q")
-                + F.when(F.col("rem_rank") <= F.col("_r"), 1).otherwise(0)
-            ).cast("long").alias("budget"),
-        )
-        .orderBy("host")
-    )
-
-
-SQL_CRAWL_BUDGET = f"""WITH w AS (
-  SELECT CAST(json_extract_string(props, '$.k') AS BIGINT)
-           % {_CB_HOSTS} AS host,
-         count(*) AS weight
-  FROM events
-  WHERE event_type IN ('click', 'view')
-    AND json_extract_string(props, '$.k') IS NOT NULL
-  GROUP BY 1
-),
-tot AS (SELECT sum(weight) AS w FROM w),
-quota AS (
-  SELECT host, weight,
-         {_CB_BUDGET}.0 * weight / tot.w AS quota,
-         CAST(floor({_CB_BUDGET}.0 * weight / tot.w) AS BIGINT) AS floor_q
-  FROM w CROSS JOIN tot
-),
-short AS (SELECT {_CB_BUDGET} - sum(floor_q) AS r FROM quota),
-ranked AS (
-  SELECT *, row_number() OVER (
-    ORDER BY quota - floor_q DESC, host ASC) AS rem_rank
-  FROM quota
-)
-SELECT host, CAST(weight AS BIGINT) AS weight, round(quota, 4) AS quota,
-       CAST(floor_q + CASE WHEN rem_rank <= short.r THEN 1 ELSE 0 END
-            AS BIGINT) AS budget
-FROM ranked CROSS JOIN short
-ORDER BY host"""
-
-
-# ---------------------------------------------------------------------------
-# query segmentation, nextword index stats, anchor-expanded retrieval
-# ---------------------------------------------------------------------------
-
-_SEG_QUERY = ["stream", "column", "window", "join"]
-
-
-def _segmentations():
-    """All 2^(n-1) segmentations of _SEG_QUERY: (label, [(gram, len), ...])
-    where the gram list holds only the multi-word segments (singletons
-    score 0 under the naive function)."""
-    words = _SEG_QUERY
-    out = []
-    for bits in range(2 ** (len(words) - 1)):
-        segs, cur = [], [words[0]]
-        for i in range(1, len(words)):
-            if bits & (1 << (i - 1)):
-                segs.append(cur)
-                cur = [words[i]]
-            else:
-                cur.append(words[i])
-        segs.append(cur)
-        label = "|".join(" ".join(s) for s in segs)
-        grams = [(" ".join(s), len(s)) for s in segs if len(s) >= 2]
-        out.append((label, grams))
-    return out
-
-
-def q_query_segmentation(spark, sf_dir):
-    """Query segmentation by the naive frequency scoring of Hagen,
-    Potthast, Stein & Braeutigam (WWW 2011): enumerate every
-    segmentation S of the query "{' '.join(_SEG_QUERY)}" and score
-    score(S) = sum over multi-word segments s of |s| * freq(s), where
-    freq is the segment's exact-phrase count in the corpus — the
-    preprocessing step that turns free-text queries into the phrase
-    units the ISRPhrase operator (X7) then executes.  All 2^(n-1)=8
-    segmentations reported, best first (label tie-break).
-
-    Scale shape: the corpus-scale work is ONE narrow gram construction
-    per needed width (the _word_grams array transform — no token
-    explode), filtered to the <= n(n-1)/2 candidate sub-spans of the
-    query BEFORE aggregating, so the freq table is <= 6 rows; the
-    segmentation scoring is a literal-table join over <= 8 x 3 rows.
-    """
-    segs = _segmentations()
-    needed = sorted({(g, l) for _lbl, gs in segs for (g, l) in gs})
-    widths = sorted({l for _g, l in needed})
-    freq = None
-    for w in widths:
-        grams_w = [g for g, l in needed if l == w]
-        f = (
-            _word_grams(spark, sf_dir, w)
-            .filter(F.col("g").isin(grams_w))
-            .groupBy("g")
-            .agg(F.count("*").alias("freq"))
-        )
-        freq = f if freq is None else freq.unionByName(f)
-    mapping = spark.createDataFrame(
-        [(lbl, g, l) for lbl, gs in segs for (g, l) in gs],
-        ["label", "g", "len"],
-    )
-    labels = spark.createDataFrame(
-        [(lbl,) for lbl, _gs in segs], ["label"]
-    )
-    scores = (
-        mapping.join(F.broadcast(freq), "g", "left")
-        .groupBy("label")
-        .agg(
-            F.sum(F.col("len") * F.coalesce("freq", F.lit(0)))
-            .cast("long").alias("score")
-        )
-    )
-    return (
-        labels.join(scores, "label", "left")
-        .select(
-            "label",
-            F.coalesce("score", F.lit(0)).cast("long").alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col("label").asc())
-    )
-
-
-def _segmentation_sql() -> str:
-    segs = _segmentations()
-    needed = sorted({(g, l) for _lbl, gs in segs for (g, l) in gs})
-    gram_selects = []
-    for g, l in needed:
-        words = g.split(" ")
-        joins, conds = ["toks t1"], []
-        for i in range(2, l + 1):
-            joins.append(f"toks t{i}")
-            conds.append(
-                f"t{i}.doc_id = t1.doc_id AND t{i}.pos = t1.pos + {i - 1}"
-            )
-        conds += [f"t{i + 1}.term = '{w}'" for i, w in enumerate(words)]
-        gram_selects.append(
-            f"SELECT '{g}' AS g, count(*) AS freq "
-            f"FROM {', '.join(joins)} WHERE {' AND '.join(conds)}"
-        )
-    freq_sql = " UNION ALL ".join(gram_selects)
-    mapping_vals = ", ".join(
-        f"('{lbl}', '{g}', {l})"
-        for lbl, gs in segs
-        for (g, l) in gs
-    )
-    label_vals = ", ".join(f"('{lbl}')" for lbl, _gs in segs)
-    return f"""WITH {_TOKS_SQL},
-freq AS ({freq_sql}),
-mapping(label, g, len) AS (VALUES {mapping_vals}),
-labels(label) AS (VALUES {label_vals}),
-scores AS (
-  SELECT m.label, sum(m.len * coalesce(f.freq, 0)) AS score
-  FROM mapping m LEFT JOIN freq f ON m.g = f.g GROUP BY m.label
-)
-SELECT l.label, CAST(coalesce(s.score, 0) AS BIGINT) AS score
-FROM labels l LEFT JOIN scores s ON l.label = s.label
-ORDER BY score DESC, l.label ASC"""
-
-
-SQL_QUERY_SEGMENTATION = _segmentation_sql()
-
-
-def q_nextword_index(spark, sf_dir):
-    """Nextword-index statistics (Williams, Zobel & Bahle, "Fast phrase
-    querying with combined indexes", TOIS 2004) for the seed head
-    words: the nextword index stores, per frequent FIRST word, the
-    sorted list of words that follow it — turning a two-term phrase
-    query into one lookup instead of a positional intersection.  Per
-    head word: how many distinct nextwords (the fan-out that sizes the
-    sub-index), total continuation instances, and the most frequent
-    nextword (lexicographic tie-break).
-
-    Scale shape: bigram instances are built narrowly from the split
-    array; the head-word filter is pushed below the (w1, w2) count
-    aggregate so only the seeds' continuations shuffle; the top-1 cut
-    is a per-head rank window over that head's distinct nextwords —
-    exactly how the nextword sub-indexes partition on disk.
-    """
-    from pyspark.sql import Window
-
-    sp = F.split("g", " ")
-    bi = (
-        _word_grams(spark, sf_dir, 2)
-        .select(sp[0].alias("w1"), sp[1].alias("w2"))
-        .filter(F.col("w1").isin(_IL_SEEDS))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c"))
-    )
-    w = Window.partitionBy("w1").orderBy(F.col("c").desc(), F.col("w2").asc())
-    return (
-        bi.withColumn("rn", F.row_number().over(w))
-        .groupBy("w1")
-        .agg(
-            F.count("*").cast("long").alias("n_nextwords"),
-            F.sum("c").cast("long").alias("n_instances"),
-            F.max(F.when(F.col("rn") == 1, F.col("w2"))).alias("top_nextword"),
-            F.max(F.when(F.col("rn") == 1, F.col("c")))
-            .cast("long").alias("top_count"),
-        )
-        .select(
-            F.col("w1").alias("head"), "n_nextwords", "n_instances",
-            "top_nextword", "top_count",
-        )
-        .orderBy("head")
-    )
-
-
-SQL_NEXTWORD_INDEX = f"""WITH {_TOKS_SQL},
-bi AS (
-  SELECT a.term AS w1, b.term AS w2, count(*) AS c
-  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  WHERE a.term IN ({", ".join(f"'{s}'" for s in sorted(_IL_SEEDS))})
-  GROUP BY a.term, b.term
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY w1
-            ORDER BY c DESC, w2 ASC) AS rn
-  FROM bi
-)
-SELECT w1 AS head, CAST(count(*) AS BIGINT) AS n_nextwords,
-       CAST(sum(c) AS BIGINT) AS n_instances,
-       max(CASE WHEN rn = 1 THEN w2 END) AS top_nextword,
-       CAST(max(CASE WHEN rn = 1 THEN c END) AS BIGINT) AS top_count
-FROM ranked GROUP BY w1 ORDER BY head"""
-
-
-_ANCH_TERM = "merge"
-
-
-def q_anchor_expand(spark, sf_dir):
-    """Anchor-text document expansion for retrieval (Craswell, Hawking
-    & Robertson, SIGIR 2001 — "Effective site finding using link anchor
-    information"): a page is also ABOUT the anchors of its in-links, so
-    the expanded tf of term t in doc d is tf_text + tf_anchor (one per
-    in-link whose anchor mentions t), and df is recomputed over the
-    expanded membership.  Docs never mentioning '{_ANCH_TERM}' in their
-    text but linked TO with that anchor become retrievable — the effect
-    that made site-finding work.  BM25 over the expanded counts
-    (doc length kept at the text length, the standard approximation),
-    top-10.
-
-    Scale shape: anchors are the same narrow per-source projection as
-    anchor_text joined to the edge list by src; the per-dst anchor-hit
-    count, the text tf (term filter below the agg), and the expanded df
-    are all map-side-combinable aggregates; corpus stats ride the usual
-    1-row broadcast; full-outer of the two tf tables is per-term-sized.
-    """
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    _, edges = _link_edges(spark, sf_dir)
-    anch = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("src"),
-        F.slice(toks, 1, 2).alias("_aterms"),
-    )
-    atf = (
-        edges.join(anch, "src")
-        .filter(F.array_contains("_aterms", _ANCH_TERM))
-        .groupBy("dst")
-        .agg(F.count("*").alias("tf_anchor"))
-        .select(F.col("dst").alias("doc_id"), "tf_anchor")
-    )
-    ttf = (
-        _tokens(spark, sf_dir)
-        .filter(F.col("term") == _ANCH_TERM)
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("tf_text"))
-    )
-    exp = (
-        ttf.join(atf, "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            F.coalesce("tf_text", F.lit(0)).cast("long").alias("tf_text"),
-            F.coalesce("tf_anchor", F.lit(0)).cast("long").alias("tf_anchor"),
-        )
-        .withColumn("tfx", F.col("tf_text") + F.col("tf_anchor"))
-    )
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
-    dfx = exp.agg(F.count("*").alias("_dfx"))
-    return (
-        exp.join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(dfx))
-        .select(
-            "doc_id", "tf_text", "tf_anchor",
-            _r4(
-                F.log(
-                    (F.col("_n") - F.col("_dfx") + 0.5)
-                    / (F.col("_dfx") + 0.5) + 1.0
-                )
-                * (F.col("tfx") * (K1 + 1.0))
-                / (
-                    F.col("tfx")
-                    + K1 * (1.0 - B + B * F.col("dl") / F.col("_avgdl"))
-                )
-            ).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-def _anchor_expand_sql() -> str:
-    rules = ", ".join(f"({m}, {b})" for m, b in _PR_RULES)
-    return f"""WITH {_TOKS_SQL},
-nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT count(*) AS n FROM nodes),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
-    FROM nodes CROSS JOIN nn
-    CROSS JOIN (VALUES {rules}) AS rules(m, b)
-  ) WHERE src <> dst
-),
-anch AS (
-  SELECT doc_id AS src,
-         list_slice(list_filter(regexp_split_to_array(lower(text),
-                    '[^a-z0-9]+'), x -> x <> ''), 1, 2) AS aterms
-  FROM documents
-),
-atf AS (
-  SELECT e.dst AS doc_id, count(*) AS tf_anchor
-  FROM edges e JOIN anch a ON e.src = a.src
-  WHERE list_contains(a.aterms, '{_ANCH_TERM}')
-  GROUP BY e.dst
-),
-ttf AS (SELECT doc_id, count(*) AS tf_text FROM toks
-        WHERE term = '{_ANCH_TERM}' GROUP BY doc_id),
-exp AS (
-  SELECT coalesce(ttf.doc_id, atf.doc_id) AS doc_id,
-         coalesce(ttf.tf_text, 0) AS tf_text,
-         coalesce(atf.tf_anchor, 0) AS tf_anchor
-  FROM ttf FULL OUTER JOIN atf ON ttf.doc_id = atf.doc_id
-),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-dfx AS (SELECT count(*) AS dfx FROM exp)
-SELECT e.doc_id, CAST(e.tf_text AS BIGINT) AS tf_text,
-       CAST(e.tf_anchor AS BIGINT) AS tf_anchor,
-       round(ln((stats.n - dfx.dfx + 0.5) / (dfx.dfx + 0.5) + 1.0)
-             * ((e.tf_text + e.tf_anchor) * ({K1} + 1.0))
-             / ((e.tf_text + e.tf_anchor)
-                + {K1} * (1.0 - {B} + {B} * dl.dl / stats.avgdl)), 4)
-         AS score
-FROM exp e JOIN dl ON e.doc_id = dl.doc_id
-CROSS JOIN stats CROSS JOIN dfx
-ORDER BY score DESC, e.doc_id ASC LIMIT 10"""
-
-
-SQL_ANCHOR_EXPAND = _anchor_expand_sql()
-
-
-# ---------------------------------------------------------------------------
-# event analytics: retention cohorts, last-touch attribution, RFM scoring
-# ---------------------------------------------------------------------------
-
-_RET_WEEK = 604800          # seconds per cohort bucket (7 days)
-_RET_MAX_OFFSET = 3
-_RFM_TOPN = 20
-
-
-def q_retention_cohorts(spark, sf_dir):
-    """Weekly retention-cohort matrix — THE product-analytics table: users
-    are cohorted by the week of their first signup event, and for each
-    week offset k we report how many were active (ANY event) k weeks
-    later.  Weeks are pure epoch arithmetic (floor(epoch/604800)), not
-    calendar truncation, so both engines bucket identically.
-
-    Scale shape: the cohort assignment is one map-side min-aggregate per
-    user; activity weeks are a narrow projection deduplicated per
-    (user, week); the cohort join keys on user_id (the natural
-    partitioning of an event log) and the final matrix is
-    |cohorts| x {_RET_MAX_OFFSET + 1} rows.  No window touches raw events.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "event_type",
-        F.floor(F.unix_timestamp("ts") / _RET_WEEK).cast("long").alias("wk"),
-    )
-    cohort = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("wk").alias("cohort_wk"))
-    )
-    sizes = cohort.groupBy("cohort_wk").agg(
-        F.count("*").cast("long").alias("n_users")
-    )
-    active = (
-        ev.select("user_id", "wk").distinct()
-        .join(cohort, "user_id")
-        .select(
-            "cohort_wk", (F.col("wk") - F.col("cohort_wk")).alias("offset")
-        )
-        .filter(
-            (F.col("offset") >= 0) & (F.col("offset") <= _RET_MAX_OFFSET)
-        )
-        .groupBy("cohort_wk", "offset")
-        .agg(F.count("*").cast("long").alias("n_active"))
-    )
-    return (
-        active.join(F.broadcast(sizes), "cohort_wk")
-        .select(
-            "cohort_wk",
-            F.col("offset").cast("long").alias("week_offset"),
-            "n_users", "n_active",
-            _r4(F.col("n_active") / F.col("n_users")).alias("retention"),
-        )
-        .orderBy("cohort_wk", "week_offset")
-    )
-
-
-SQL_RETENTION_COHORTS = f"""WITH ev AS (
-  SELECT user_id, event_type,
-         CAST(floor(epoch(ts) / {_RET_WEEK}) AS BIGINT) AS wk
-  FROM events
-),
-cohort AS (
-  SELECT user_id, min(wk) AS cohort_wk FROM ev
-  WHERE event_type = 'signup' GROUP BY user_id
-),
-sizes AS (SELECT cohort_wk, count(*) AS n_users FROM cohort
-          GROUP BY cohort_wk),
-active AS (
-  SELECT c.cohort_wk, a.wk - c.cohort_wk AS offset_w,
-         count(*) AS n_active
-  FROM (SELECT DISTINCT user_id, wk FROM ev) a
-  JOIN cohort c ON a.user_id = c.user_id
-  WHERE a.wk - c.cohort_wk BETWEEN 0 AND {_RET_MAX_OFFSET}
-  GROUP BY c.cohort_wk, a.wk - c.cohort_wk
-)
-SELECT a.cohort_wk, CAST(a.offset_w AS BIGINT) AS week_offset,
-       CAST(s.n_users AS BIGINT) AS n_users,
-       CAST(a.n_active AS BIGINT) AS n_active,
-       round(CAST(a.n_active AS DOUBLE) / s.n_users, 4) AS retention
-FROM active a JOIN sizes s ON a.cohort_wk = s.cohort_wk
-ORDER BY a.cohort_wk, week_offset"""
-
-
-def q_last_touch(spark, sf_dir):
-    """Last-touch attribution: every purchase is credited to the SAME
-    user's most recent click or view strictly before it (the touch), and
-    revenue rolls up per touched item — the e-commerce twin of the
-    engine's click-credit assignment, and an as-of join at heart.
-
-    Scale shape: the same single-shuffle union+window merge as
-    asof_join — touches and purchases are unioned, ONE window per user
-    ordered by (ts, event_id) carries the last touch item forward, and
-    the rollup is a map-side-combinable aggregate per item.  No join
-    operator appears in the plan; the one shuffle keys on user_id.
-    Purchases with no prior touch are unattributed and counted
-    separately (item -1).
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("click", "view", "purchase"))
-        .select(
-            "user_id", "event_id", "ts", "event_type", "value",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    touched = ev.withColumn(
-        "touch_item",
-        F.last(
-            F.when(F.col("event_type").isin("click", "view"),
-                   F.col("item")),
-            ignorenulls=True,
-        ).over(w),
-    )
-    return (
-        touched.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            F.coalesce("touch_item", F.lit(-1)).cast("long").alias("item")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_purchases"),
-            _r4(F.sum("value")).alias("revenue"),
-        )
-        .orderBy(F.col("revenue").desc(), F.col("item").asc())
-        .limit(_RFM_TOPN)
-    )
-
-
-SQL_LAST_TOUCH = f"""WITH ev AS (
-  SELECT user_id, event_id, ts, event_type, value,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type IN ('click', 'view', 'purchase')
-),
-touched AS (
-  SELECT *,
-         last_value(CASE WHEN event_type IN ('click', 'view') THEN item END
-                    IGNORE NULLS) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch_item
-  FROM ev
-)
-SELECT CAST(coalesce(touch_item, -1) AS BIGINT) AS item,
-       CAST(count(*) AS BIGINT) AS n_purchases,
-       round(sum(value), 4) AS revenue
-FROM touched WHERE event_type = 'purchase'
-GROUP BY coalesce(touch_item, -1)
-ORDER BY revenue DESC, item ASC LIMIT {_RFM_TOPN}"""
-
-
-def q_rfm_scores(spark, sf_dir):
-    """RFM customer scoring (recency / frequency / monetary, the classic
-    segmentation): per user over purchase events — days since last
-    purchase (vs the log's max ts), purchase count, total spend — each
-    scored 1..5 by rank quintile (rank-based, user-id tie-break, so both
-    engines bin identically), rfm = 100r + 10f + m.  Top {_RFM_TOPN} by
-    rfm.
-
-    Scale shape: the per-user rollup is one map-side-combinable
-    aggregate (the only pass over raw events); the quintile windows run
-    over the |users| ROLLUP, not the log — at 10^12 events with 10^9
-    users the rank windows become broadcast quantile breakpoints
-    (percentile_approx 1-row side plan), same results to quantization.
-    """
-    from pyspark.sql import Window
-
-    p = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "purchase")
-    )
-    mx = p.agg(
-        F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("_mx")
-    )
-    per_user = (
-        p.groupBy("user_id")
-        .agg(
-            F.max(
-                F.unix_micros(F.col("ts").cast("timestamp"))
-            ).alias("_last"),
-            F.count("*").cast("long").alias("frequency"),
-            F.sum("value").alias("_mon"),
-        )
-        .crossJoin(F.broadcast(mx))
-        .select(
-            "user_id",
-            F.floor((F.col("_mx") - F.col("_last")) / 86_400_000_000)
-            .cast("long").alias("recency_days"),
-            "frequency",
-            _r4("_mon").alias("monetary"),
-        )
-    )
-    n = per_user.agg(F.count("*").alias("_n"))
-    rank5 = lambda c: (  # noqa: E731
-        1 + F.floor(5 * (c - 1) / F.col("_n"))
-    ).cast("long")
-    wr = Window.orderBy(F.col("recency_days").asc(), F.col("user_id").asc())
-    wf = Window.orderBy(F.col("frequency").desc(), F.col("user_id").asc())
-    wm = Window.orderBy(F.col("monetary").desc(), F.col("user_id").asc())
-    return (
-        per_user.crossJoin(F.broadcast(n))
-        .withColumn("r_score", 6 - rank5(F.row_number().over(wr)))
-        .withColumn("f_score", 6 - rank5(F.row_number().over(wf)))
-        .withColumn("m_score", 6 - rank5(F.row_number().over(wm)))
-        .select(
-            "user_id", "recency_days", "frequency", "monetary",
-            "r_score", "f_score", "m_score",
-            (F.col("r_score") * 100 + F.col("f_score") * 10
-             + F.col("m_score")).cast("long").alias("rfm"),
-        )
-        .orderBy(F.col("rfm").desc(), F.col("user_id").asc())
-        .limit(_RFM_TOPN)
-    )
-
-
-SQL_RFM_SCORES = f"""WITH p AS (
-  SELECT user_id, epoch_us(ts) AS es, value FROM events
-  WHERE event_type = 'purchase'
-),
-mx AS (SELECT max(es) AS mx FROM p),
-per_user AS (
-  SELECT user_id,
-         CAST(floor((mx.mx - max(p.es)) / 86400000000) AS BIGINT)
-           AS recency_days,
-         count(*) AS frequency,
-         round(sum(value), 4) AS monetary
-  FROM p CROSS JOIN mx
-  GROUP BY user_id, mx.mx
-),
-n AS (SELECT count(*) AS n FROM per_user),
-ranked AS (
-  SELECT u.*,
-         row_number() OVER (ORDER BY recency_days ASC, user_id ASC) AS rr,
-         row_number() OVER (ORDER BY frequency DESC, user_id ASC) AS rf,
-         row_number() OVER (ORDER BY monetary DESC, user_id ASC) AS rm,
-         n.n AS n
-  FROM per_user u CROSS JOIN n
-),
-scored AS (
-  SELECT user_id, recency_days, CAST(frequency AS BIGINT) AS frequency,
-         monetary,
-         CAST(6 - (1 + floor(5 * (rr - 1) / n)) AS BIGINT) AS r_score,
-         CAST(6 - (1 + floor(5 * (rf - 1) / n)) AS BIGINT) AS f_score,
-         CAST(6 - (1 + floor(5 * (rm - 1) / n)) AS BIGINT) AS m_score
-  FROM ranked
-)
-SELECT *, CAST(r_score * 100 + f_score * 10 + m_score AS BIGINT) AS rfm
-FROM scored ORDER BY rfm DESC, user_id ASC LIMIT {_RFM_TOPN}"""
-
-
-# ---------------------------------------------------------------------------
-# alpha-DCG diversity eval, LLR collocations, dictionary front-coding
-# ---------------------------------------------------------------------------
-
-_ADCG_ALPHA = 0.5
-_LLR_TOPN = 20
-
-
-def q_alpha_dcg(spark, sf_dir):
-    """alpha-DCG@10 (Clarke et al., SIGIR 2008 "Novelty and diversity in
-    information retrieval evaluation"): the diversity-aware DCG where a
-    document's gain is discounted by (1-alpha)^(docs of the SAME subtopic
-    already seen above it) — rewarding result lists that cover many
-    subtopics instead of piling onto one.  Subtopic = documents.source;
-    the run is the BM25 top-10 for the standard probe query; alpha =
-    {_ADCG_ALPHA}.  Per-rank rows with the novelty-discounted gain and
-    the running alpha-DCG.
-
-    Scale shape: corpus work is confined to the retrieval plan; the
-    subtopic join is a 10-row broadcast lookup into docmeta-scale data
-    keyed by doc_id, and all three windows (seen-count, rank, running
-    sum) order <= 10 rows post-limit.
-    """
-    from pyspark.sql import Window
-
-    top = (
-        _scored(spark, sf_dir, _QL_TERMS)
-        .groupBy("doc_id")
-        .agg(_r4(F.sum(_r4("score"))).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-    src = _docs(spark, sf_dir).select("doc_id", "source")
-    wr = Window.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-    ranked = (
-        top.join(src, "doc_id")
-        .withColumn("rank", F.row_number().over(wr))
-    )
-    wseen = (
-        Window.partitionBy("source")
-        .orderBy("rank")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wcum = Window.orderBy("rank").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    gain = (
-        F.pow(F.lit(1.0 - _ADCG_ALPHA),
-              F.coalesce(F.count("*").over(wseen), F.lit(0)))
-        / (F.log(F.col("rank") + 1.0) / F.lit(0.6931471805599453))
-    )
-    return (
-        ranked.withColumn("seen_before",
-                          F.count("*").over(wseen).cast("long"))
-        .withColumn("_g", gain)
-        .select(
-            F.col("rank").cast("long").alias("rank"),
-            "doc_id", "source", "seen_before",
-            _r4("_g").alias("gain"),
-            _r4(F.sum("_g").over(wcum)).alias("alpha_dcg"),
-        )
-        .orderBy("rank")
-    )
-
-
-SQL_ALPHA_DCG = f"""WITH {_BM25_CORE_SQL},
-top AS (
-  SELECT doc_id, round(sum(round(score, 4)), 4) AS s
-  FROM scored WHERE term IN ('merge', 'join')
-  GROUP BY doc_id ORDER BY s DESC, doc_id ASC LIMIT 10
-),
-ranked AS (
-  SELECT t.doc_id, d.source, t.s,
-         row_number() OVER (ORDER BY t.s DESC, t.doc_id ASC) AS rank
-  FROM top t JOIN documents d ON t.doc_id = d.doc_id
-),
-gains AS (
-  SELECT rank, doc_id, source,
-         count(*) OVER (PARTITION BY source ORDER BY rank
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING) AS seen_before,
-         power(1.0 - {_ADCG_ALPHA},
-               count(*) OVER (PARTITION BY source ORDER BY rank
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING))
-           / (ln(rank + 1.0) / ln(2.0)) AS g
-  FROM ranked
-)
-SELECT CAST(rank AS BIGINT) AS rank, doc_id, source,
-       CAST(seen_before AS BIGINT) AS seen_before,
-       round(g, 4) AS gain,
-       round(sum(g) OVER (ORDER BY rank
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW), 4) AS alpha_dcg
-FROM gains ORDER BY rank"""
-
-
-def q_llr_collocations(spark, sf_dir):
-    """Collocation extraction by Dunning's log-likelihood ratio (Dunning,
-    CL 1993) — the statistically sound alternative to pmi_bigrams (PMI
-    over-rewards rare pairs; LLR weighs evidence): for each bigram the
-    2x2 contingency table over all bigram instances, LLR = 2 * sum of
-    k * ln(k * N / (row * col)) over the four cells.  Top {_LLR_TOPN}
-    collocations.
-
-    Scale shape: bigram counts and the two marginal tables are map-side
-    aggregates; marginals join back by term key (each side bounded by
-    the vocabulary, NOT force-broadcast — the planner sizes them); N is
-    a 1-row broadcast; the cut is a distributed TakeOrdered.
-    """
-    inst = _word_grams(spark, sf_dir, 2)
-    sp = F.split("g", " ")
-    bi = (
-        inst.select(sp[0].alias("w1"), sp[1].alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("k11"))
-    )
-    row = bi.groupBy("w1").agg(F.sum("k11").alias("c1"))
-    col = bi.groupBy("w2").agg(F.sum("k11").alias("c2"))
-    tot = bi.agg(F.sum("k11").alias("_n"))
-    k11 = F.col("k11").cast("double")
-    k12 = (F.col("c1") - F.col("k11")).cast("double")
-    k21 = (F.col("c2") - F.col("k11")).cast("double")
-    k22 = (F.col("_n") - F.col("c1") - F.col("c2")
-           + F.col("k11")).cast("double")
-    n = F.col("_n").cast("double")
-    cell = lambda k, r, c: F.when(  # noqa: E731
-        k > 0, k * F.log(k * n / (r * c))
-    ).otherwise(F.lit(0.0))
-    llr = 2.0 * (
-        cell(k11, F.col("c1").cast("double"), F.col("c2").cast("double"))
-        + cell(k12, F.col("c1").cast("double"), n - F.col("c2"))
-        + cell(k21, n - F.col("c1"), F.col("c2").cast("double"))
-        + cell(k22, n - F.col("c1"), n - F.col("c2"))
-    )
-    return (
-        bi.join(row, "w1")
-        .join(col, "w2")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "w1", "w2",
-            F.col("k11").cast("long").alias("c12"),
-            _r4(llr).alias("llr"),
-        )
-        .orderBy(F.col("llr").desc(), F.col("w1").asc(), F.col("w2").asc())
-        .limit(_LLR_TOPN)
-    )
-
-
-SQL_LLR_COLLOCATIONS = f"""WITH {_TOKS_SQL},
-bi AS (
-  SELECT a.term AS w1, b.term AS w2, count(*) AS k11
-  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  GROUP BY a.term, b.term
-),
-r AS (SELECT w1, sum(k11) AS c1 FROM bi GROUP BY w1),
-c AS (SELECT w2, sum(k11) AS c2 FROM bi GROUP BY w2),
-tot AS (SELECT sum(k11) AS n FROM bi),
-cells AS (
-  SELECT bi.w1, bi.w2, bi.k11,
-         CAST(bi.k11 AS DOUBLE) AS a11,
-         CAST(r.c1 - bi.k11 AS DOUBLE) AS a12,
-         CAST(c.c2 - bi.k11 AS DOUBLE) AS a21,
-         CAST(tot.n - r.c1 - c.c2 + bi.k11 AS DOUBLE) AS a22,
-         CAST(r.c1 AS DOUBLE) AS c1, CAST(c.c2 AS DOUBLE) AS c2,
-         CAST(tot.n AS DOUBLE) AS n
-  FROM bi JOIN r ON bi.w1 = r.w1 JOIN c ON bi.w2 = c.w2 CROSS JOIN tot
-)
-SELECT w1, w2, CAST(k11 AS BIGINT) AS c12,
-       round(2.0 * (
-         (CASE WHEN a11 > 0 THEN a11 * ln(a11 * n / (c1 * c2))
-               ELSE 0 END)
-         + (CASE WHEN a12 > 0 THEN a12 * ln(a12 * n / (c1 * (n - c2)))
-                 ELSE 0 END)
-         + (CASE WHEN a21 > 0 THEN a21 * ln(a21 * n / ((n - c1) * c2))
-                 ELSE 0 END)
-         + (CASE WHEN a22 > 0 THEN a22 * ln(a22 * n
-                                            / ((n - c1) * (n - c2)))
-                 ELSE 0 END)), 4) AS llr
-FROM cells
-ORDER BY llr DESC, w1 ASC, w2 ASC LIMIT {_LLR_TOPN}"""
-
-
-def q_dict_frontcoding(spark, sf_dir):
-    """Front-coding cost model for the A4 term dictionary (Witten, Moffat
-    & Bell, "Managing Gigabytes" §4): in the SORTED vocabulary each term
-    shares a prefix with its predecessor, so storing (lcp, suffix) costs
-    len - lcp + 2 bytes (1-byte lcp + 1-byte suffix length) instead of
-    len + 1.  Reports raw vs front-coded bytes and the mean LCP — the
-    measurement that justifies (or kills) dictionary front-coding for a
-    given corpus.  LCP is computed as the COUNT of matching prefixes
-    over k = 1..min(len) — valid because prefix equality is monotone.
-
-    Scale shape: the vocabulary rollup is one map-side distinct; the lag
-    window orders the vocabulary — the same |vocab|-sized sort the
-    dictionary writer itself needs (front-coding is definitionally a
-    sorted-order encoding); everything after is a 1-row aggregate.
-    """
-    from pyspark.sql import Window
-
-    vocab = _tokens(spark, sf_dir).select("term").distinct()
-    w = Window.orderBy("term")
-    return (
-        vocab.withColumn("prev", F.lag("term").over(w))
-        .withColumn(
-            "lcp",
-            F.when(F.col("prev").isNull(), F.lit(0)).otherwise(
-                F.size(
-                    F.expr(
-                        "filter(sequence(1, least(length(term), "
-                        "length(prev))), "
-                        "k -> substr(term, 1, k) = substr(prev, 1, k))"
-                    )
-                )
-            ),
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_terms"),
-            F.sum(F.length("term") + 1).cast("long").alias("raw_bytes"),
-            F.sum(F.length("term") - F.col("lcp") + 2)
-            .cast("long").alias("front_bytes"),
-            _r4(F.avg("lcp")).alias("avg_lcp"),
-            _r4(
-                F.sum(F.length("term") - F.col("lcp") + 2)
-                / F.sum(F.length("term") + 1)
-            ).alias("ratio"),
-        )
-    )
-
-
-SQL_DICT_FRONTCODING = f"""WITH {_TOKS_SQL},
-vocab AS (SELECT DISTINCT term FROM toks),
-lagged AS (
-  SELECT term, lag(term) OVER (ORDER BY term) AS prev FROM vocab
-),
-lcps AS (
-  SELECT term,
-         CASE WHEN prev IS NULL THEN 0
-              ELSE length(list_filter(range(1, least(length(term),
-                          length(prev)) + 1),
-                          k -> substr(term, 1, k) = substr(prev, 1, k)))
-         END AS lcp
-  FROM lagged
-)
-SELECT CAST(count(*) AS BIGINT) AS n_terms,
-       CAST(sum(length(term) + 1) AS BIGINT) AS raw_bytes,
-       CAST(sum(length(term) - lcp + 2) AS BIGINT) AS front_bytes,
-       round(avg(lcp), 4) AS avg_lcp,
-       round(sum(length(term) - lcp + 2)
-             / CAST(sum(length(term) + 1) AS DOUBLE), 4) AS ratio
-FROM lcps"""
-
-
-# ---------------------------------------------------------------------------
-# pre-retrieval QPP and BM25 parameter sweep
-# ---------------------------------------------------------------------------
-
-_BM25_GRID = [(0.9, 0.4), (1.2, 0.0), (1.2, 0.75), (2.0, 0.75)]
-
-
-def q_preret_qpp(spark, sf_dir):
-    """PRE-retrieval query-performance predictors (He & Ounis, SIGIR 2004;
-    Zhao, Scholer & Tsegay, ECIR 2008) — the difficulty estimates a
-    router computes BEFORE touching any posting list, the cheap
-    complement to the post-retrieval wig_qpp: per seed term its idf,
-    ICTF = ln(N_tokens / cf), and SCQ = (1 + ln(cf)) * idf (collection-
-    query similarity).  High-idf/high-SCQ terms predict easy queries;
-    flat ones predict ambiguity.
-
-    Scale shape: the term filter is pushed below BOTH aggregates (df
-    over tf, cf over the token scan), so only |seeds| rows survive each;
-    corpus totals are 1-row broadcasts; output is |seeds| rows.
-    """
-    toks = _tokens(spark, sf_dir)
-    seeds = toks.filter(F.col("term").isin(_IL_SEEDS))
-    df = seeds.groupBy("term").agg(
-        F.count_distinct("doc_id").alias("df"),
-        F.count("*").alias("cf"),
-    )
-    nd = _docs(spark, sf_dir).agg(F.count("*").alias("_n"))
-    nt = toks.agg(F.count("*").alias("_t"))
-    idf = F.log(
-        (F.col("_n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    return (
-        df.crossJoin(F.broadcast(nd))
-        .crossJoin(F.broadcast(nt))
-        .select(
-            "term",
-            F.col("df").cast("long").alias("df"),
-            F.col("cf").cast("long").alias("cf"),
-            _r4(idf).alias("idf"),
-            _r4(F.log(F.col("_t") / F.col("cf"))).alias("ictf"),
-            _r4((1.0 + F.log("cf")) * idf).alias("scq"),
-        )
-        .orderBy("term")
-    )
-
-
-SQL_PRERET_QPP = f"""WITH {_TOKS_SQL},
-seeds AS (SELECT * FROM toks
-          WHERE term IN ({", ".join(f"'{s}'" for s in sorted(_IL_SEEDS))})),
-df AS (SELECT term, count(DISTINCT doc_id) AS df, count(*) AS cf
-       FROM seeds GROUP BY term),
-nd AS (SELECT count(*) AS n FROM documents),
-nt AS (SELECT count(*) AS t FROM toks)
-SELECT term, CAST(df AS BIGINT) AS df, CAST(cf AS BIGINT) AS cf,
-       round(ln((nd.n - df + 0.5) / (df + 0.5) + 1.0), 4) AS idf,
-       round(ln(CAST(nt.t AS DOUBLE) / cf), 4) AS ictf,
-       round((1.0 + ln(cf)) * ln((nd.n - df + 0.5) / (df + 0.5) + 1.0), 4)
-         AS scq
-FROM df CROSS JOIN nd CROSS JOIN nt
-ORDER BY term"""
-
-
-def q_bm25_sweep(spark, sf_dir):
-    """BM25 (k1, b) parameter sweep — the tuning experiment every BM25
-    deployment runs (Robertson & Zaragoza 2009 §5 discuss exactly this
-    grid): the SAME tf/df/dl tables scored under {len(_BM25_GRID)}
-    parameter configurations in ONE plan (the config grid is a literal
-    cross join, so the expensive aggregates are computed once, not per
-    config), top-3 docs per configuration.
-
-    Scale shape: term filter below the tf agg; df/stats broadcast; the
-    grid cross-join multiplies only the |candidates| scored rows by
-    {len(_BM25_GRID)}; the cut is a per-config rank window over
-    candidate rows.
-    """
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir)
-    tf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    grid = spark.createDataFrame(_BM25_GRID, ["k1", "b"])
-    idf = F.log(
-        (F.col("_n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    w = idf * (
-        F.col("tf") * (F.col("k1") + 1.0)
-        / (
-            F.col("tf")
-            + F.col("k1")
-            * (1.0 - F.col("b") + F.col("b") * F.col("dl") / F.col("_avgdl"))
-        )
-    )
-    win = Window.partitionBy("k1", "b").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(grid))
-        .groupBy("k1", "b", "doc_id")
-        .agg(_r4(F.sum(_r4(w))).alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= 3)
-        .select("k1", "b", F.col("rank").cast("long").alias("rank"),
-                "doc_id", "score")
-        .orderBy("k1", "b", "rank")
-    )
-
-
-_BM25_GRID_VALUES = ", ".join(f"({k1}, {b})" for k1, b in _BM25_GRID)
-
-SQL_BM25_SWEEP = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id, count(*) AS tf FROM toks
-       WHERE term IN ('merge', 'join') GROUP BY term, doc_id),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-grid(k1, b) AS (VALUES {_BM25_GRID_VALUES}),
-scored AS (
-  SELECT g.k1, g.b, tf.doc_id,
-         round(sum(round(
-           ln((stats.n - df.df + 0.5) / (df.df + 0.5) + 1.0)
-           * (tf.tf * (g.k1 + 1.0))
-           / (tf.tf + g.k1 * (1.0 - g.b + g.b * dl.dl / stats.avgdl)),
-         4)), 4) AS score
-  FROM tf JOIN df ON tf.term = df.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats CROSS JOIN grid g
-  GROUP BY g.k1, g.b, tf.doc_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY k1, b
-            ORDER BY score DESC, doc_id ASC) AS rank
-  FROM scored
-)
-SELECT k1, b, CAST(rank AS BIGINT) AS rank, doc_id, score
-FROM ranked WHERE rank <= 3 ORDER BY k1, b, rank"""
 
 
 # ---------------------------------------------------------------------------
@@ -12366,2150 +5355,6 @@ SELECT a.q, th.theta, n.n_terms, n.n_essential, a.n_candidates,
        round(CAST(a.n_skippable AS DOUBLE) / a.n_candidates, 4) AS skip_pct
 FROM agg a JOIN theta th ON a.q = th.q JOIN ness n ON a.q = n.q
 ORDER BY a.q"""
-
-
-# ---------------------------------------------------------------------------
-# click-graph random walk (Craswell & Szummer, SIGIR 2007)
-# ---------------------------------------------------------------------------
-
-_CW_Q = 20          # pseudo-query id: user_id % 20 (coclick's convention)
-_CW_SEEDS = [0, 1, 2, 3]
-_CW_TOPN = 3
-
-
-def q_click_walk(spark, sf_dir):
-    """Query→item relevance by a 3-step random walk on the click
-    bipartite graph (Craswell & Szummer, SIGIR 2007) — the
-    probabilistic generalisation of coclick_similarity's set Jaccard:
-    edges are click counts, transitions normalise per node
-    (P(q→i) = w/Σ_i w, P(i→q) = w/Σ_q w), and an item's score for a
-    seed query is the probability of arriving at it after
-    query→item→query→item.  The walk surfaces items never co-clicked
-    with the seed directly (two hops away through a shared neighbour
-    query), which is the point of the method.  Top-3 items per seed by
-    the rounded arrival probability with item-id tiebreak.
-
-    Determinism: every transition probability is the SAME int/int
-    division in both engines (exact identical doubles); only the final
-    per-(seed,item) path sum is order-dependent and it rounds to 4dp
-    before ranking.  Scale shape: degree tables are |Q|- and
-    |items|-row aggregates joined back on the edge key (broadcast here,
-    plain hash join at 10^12 edges); each step is one join keyed on the
-    shared node — the hot-node fan-out (an item clicked by q queries
-    multiplies paths by q) needs coclick's hot-key cap at web scale,
-    noted; the cut is a per-seed rank window.
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.pmod(F.col("user_id"), F.lit(_CW_Q)).cast("long").alias("q"),
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    w = ev.groupBy("q", "item").agg(F.count("*").alias("w"))
-    qdeg = w.groupBy("q").agg(F.sum("w").alias("qd"))
-    ideg = w.groupBy("item").agg(F.sum("w").alias("idg"))
-    fwd = w.join(F.broadcast(qdeg), "q").select(
-        "q", "item", (F.col("w") / F.col("qd")).alias("p_qi")
-    )
-    bwd = w.join(F.broadcast(ideg), "item").select(
-        "q", "item", (F.col("w") / F.col("idg")).alias("p_iq")
-    )
-    s1 = fwd.filter(F.col("q").isin(_CW_SEEDS)).select(
-        F.col("q").alias("seed"), F.col("item").alias("i1"),
-        F.col("p_qi").alias("p1"),
-    )
-    s2 = (
-        s1.join(
-            bwd.select(F.col("item").alias("i1"), F.col("q").alias("q1"),
-                       "p_iq"),
-            "i1",
-        )
-        .groupBy("seed", "q1")
-        .agg(F.sum(F.col("p1") * F.col("p_iq")).alias("p2"))
-    )
-    s3 = (
-        s2.join(
-            fwd.select(F.col("q").alias("q1"), F.col("item").alias("i2"),
-                       "p_qi"),
-            "q1",
-        )
-        .groupBy("seed", F.col("i2").alias("item"))
-        .agg(_r4(F.sum(F.col("p2") * F.col("p_qi"))).alias("p3"))
-    )
-    wr = Window.partitionBy("seed").orderBy(
-        F.col("p3").desc(), F.col("item").asc()
-    )
-    return (
-        s3.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= _CW_TOPN)
-        .select("seed", "item", "p3", "rank")
-        .orderBy("seed", "rank")
-    )
-
-
-SQL_CLICK_WALK = f"""WITH ev AS (
-  SELECT user_id % {_CW_Q} AS q,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events
-  WHERE event_type = 'click'
-    AND json_extract_string(props, '$.k') IS NOT NULL
-),
-w AS (SELECT q, item, count(*) AS w FROM ev GROUP BY q, item),
-qdeg AS (SELECT q, sum(w) AS qd FROM w GROUP BY q),
-ideg AS (SELECT item, sum(w) AS idg FROM w GROUP BY item),
-fwd AS (SELECT w.q, w.item, CAST(w.w AS DOUBLE) / qd.qd AS p_qi
-        FROM w JOIN qdeg qd ON w.q = qd.q),
-bwd AS (SELECT w.q, w.item, CAST(w.w AS DOUBLE) / idg.idg AS p_iq
-        FROM w JOIN ideg idg ON w.item = idg.item),
-s1 AS (SELECT q AS seed, item AS i1, p_qi AS p1 FROM fwd
-       WHERE q IN (0, 1, 2, 3)),
-s2 AS (
-  SELECT s1.seed, b.q AS q1, sum(s1.p1 * b.p_iq) AS p2
-  FROM s1 JOIN bwd b ON s1.i1 = b.item GROUP BY s1.seed, b.q
-),
-s3 AS (
-  SELECT s2.seed, f.item, round(sum(s2.p2 * f.p_qi), 4) AS p3
-  FROM s2 JOIN fwd f ON s2.q1 = f.q GROUP BY s2.seed, f.item
-),
-ranked AS (
-  SELECT seed, item, p3, row_number() OVER (PARTITION BY seed
-           ORDER BY p3 DESC, item ASC) AS rank
-  FROM s3
-)
-SELECT seed, item, p3, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_CW_TOPN} ORDER BY seed, rank"""
-
-
-# ---------------------------------------------------------------------------
-# exact paired sign-flip permutation test between two rankers
-# ---------------------------------------------------------------------------
-
-_SIG_SEEDS = ["data", "filter", "hash", "join", "merge", "query", "scan",
-              "spark"]
-_SIG_K = 10
-_SIG_MU = 200.0
-_SIG_ALPHA = 0.05
-
-
-def q_permutation_sigtest(spark, sf_dir):
-    """Exact paired sign-flip permutation test (Fisher; the standard
-    significance test for paired IR evaluation, Smucker et al., CIKM
-    2007) of ranker A (BM25) vs ranker B (Dirichlet query-likelihood,
-    mu=200) on 8 seed queries: per query the reciprocal rank of the
-    first relevant result (the mrr_map_eval label convention) under
-    each ranker, delta = RR_A - RR_B, and the p-value is the fraction
-    of all 2^8 = 256 sign assignments whose |mean signed delta| >= the
-    observed |mean delta| (two-sided, identity included, everything
-    compared on 4dp-rounded values so both engines count the same
-    patterns).  One row: per-ranker means, observed delta, exact
-    p-value, and the alpha=0.05 verdict.
-
-    Scale shape: the deltas table is |queries| rows built from two
-    term-pruned ranking plans (rank windows over the seeds' posting
-    lists only); the permutation grid is a literal 2^n-row range cross
-    joined against a broadcast of the deltas — 2^n·n rows, each sign
-    a pure bitmask test, aggregated map-side per pattern.  At
-    production query-set sizes (2^n infeasible) the same plan samples
-    B patterns via the Knuth multiplicative hash instead of
-    enumerating: a Monte-Carlo permutation test with identical
-    dataflow — the grid stays B·n rows, embarrassingly parallel.
-    """
-    from pyspark.sql import Window
-
-    seeds = sorted(_SIG_SEEDS)
-    n = len(seeds)
-
-    rel = (
-        F.pmod((F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761), F.lit(4))
-        >= 2
-    ).cast("double")
-    wr = Window.partitionBy("seed").orderBy(
-        F.col("s").desc(), F.col("doc_id").asc()
-    )
-
-    def _rr(scored_df):
-        top = (
-            scored_df.withColumn("_r", F.row_number().over(wr))
-            .filter(F.col("_r") <= _SIG_K)
-            .withColumn("rel", rel)
-        )
-        return top.groupBy("seed").agg(
-            _r4(F.max(F.col("rel") / F.col("_r"))).alias("rr")
-        )
-
-    a = _scored(spark, sf_dir, seeds).select(
-        F.col("term").alias("seed"), "doc_id", _r4("score").alias("s")
-    )
-    rr_a = _rr(a).withColumnRenamed("rr", "rr_a")
-
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(seeds))
-    tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = _dl(spark, sf_dir)
-    tot = dl.agg(F.sum("dl").alias("_t"))
-    ctf = tf.groupBy("term").agg(F.sum("tf").alias("ctf"))
-    b = (
-        tf.join(F.broadcast(ctf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("term").alias("seed"),
-            "doc_id",
-            _r4(
-                F.log(
-                    (F.col("tf") + F.lit(_SIG_MU) * F.col("ctf") / F.col("_t"))
-                    / (F.col("dl") + F.lit(_SIG_MU))
-                )
-            ).alias("s"),
-        )
-    )
-    rr_b = _rr(b).withColumnRenamed("rr", "rr_b")
-
-    deltas = (
-        rr_a.join(rr_b, "seed")
-        .join(
-            F.broadcast(
-                spark.createDataFrame(
-                    [(s, i, 1 << i) for i, s in enumerate(seeds)],
-                    "seed string, idx int, mask long",
-                )
-            ),
-            "seed",
-        )
-        .select("seed", "rr_a", "rr_b",
-                (F.col("rr_a") - F.col("rr_b")).alias("delta"), "mask")
-    )
-    pats = spark.range(1 << n).select(F.col("id").alias("pat"))
-    signed = pats.crossJoin(F.broadcast(deltas)).select(
-        "pat",
-        F.when(F.col("pat").bitwiseAND(F.col("mask")) != 0,
-               -F.col("delta")).otherwise(F.col("delta")).alias("sd"),
-    )
-    means = signed.groupBy("pat").agg(
-        F.round(F.abs(F.avg("sd")), 4).alias("am")
-    )
-    obs = means.filter(F.col("pat") == 0).select(
-        F.col("am").alias("obs_am")
-    )
-    stats = deltas.agg(
-        F.count("*").cast("long").alias("n_queries"),
-        _r4(F.avg("rr_a")).alias("mean_rr_a"),
-        _r4(F.avg("rr_b")).alias("mean_rr_b"),
-        _r4(F.avg("delta")).alias("mean_delta"),
-    )
-    p = (
-        means.crossJoin(F.broadcast(obs))
-        .agg(
-            _r4(
-                F.sum(F.when(F.col("am") >= F.col("obs_am"), 1).otherwise(0))
-                / F.count("*")
-            ).alias("p_value")
-        )
-    )
-    return (
-        stats.crossJoin(F.broadcast(p))
-        .select(
-            "n_queries", "mean_rr_a", "mean_rr_b", "mean_delta", "p_value",
-            F.when(F.col("p_value") < _SIG_ALPHA, 1).otherwise(0)
-            .cast("long").alias("significant"),
-        )
-    )
-
-
-SQL_PERMUTATION_SIGTEST = f"""WITH {_BM25_CORE_SQL},
-seeds AS (
-  SELECT seed, CAST(row_number() OVER (ORDER BY seed ASC) - 1 AS BIGINT)
-           AS idx
-  FROM (SELECT unnest(['data', 'filter', 'hash', 'join', 'merge', 'query',
-                       'scan', 'spark']) AS seed)
-),
-rel AS (
-  SELECT doc_id,
-         CASE WHEN ((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 >= 2
-              THEN 1.0 ELSE 0.0 END AS rel
-  FROM dl
-),
-rank_a AS (
-  SELECT s.term AS seed, s.doc_id,
-         row_number() OVER (PARTITION BY s.term
-           ORDER BY round(s.score, 4) DESC, s.doc_id ASC) AS r
-  FROM scored s JOIN seeds ON s.term = seeds.seed
-),
-rr_a AS (
-  SELECT a.seed, round(max(rel.rel / a.r), 4) AS rr_a
-  FROM rank_a a JOIN rel ON a.doc_id = rel.doc_id
-  WHERE a.r <= {_SIG_K} GROUP BY a.seed
-),
-tot AS (SELECT sum(dl) AS t FROM dl),
-ctf AS (SELECT tf.term, sum(tf.tf) AS ctf FROM tf
-        JOIN seeds ON tf.term = seeds.seed GROUP BY tf.term),
-rank_b AS (
-  SELECT tf.term AS seed, tf.doc_id,
-         row_number() OVER (PARTITION BY tf.term
-           ORDER BY round(ln((tf.tf + {_SIG_MU} * ctf.ctf / tot.t)
-                             / (dl.dl + {_SIG_MU})), 4) DESC,
-                    tf.doc_id ASC) AS r
-  FROM tf JOIN ctf ON tf.term = ctf.term
-  JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN tot
-),
-rr_b AS (
-  SELECT b.seed, round(max(rel.rel / b.r), 4) AS rr_b
-  FROM rank_b b JOIN rel ON b.doc_id = rel.doc_id
-  WHERE b.r <= {_SIG_K} GROUP BY b.seed
-),
-deltas AS (
-  SELECT a.seed, a.rr_a, b.rr_b, a.rr_a - b.rr_b AS delta,
-         CAST(1 << s.idx AS BIGINT) AS mask
-  FROM rr_a a JOIN rr_b b ON a.seed = b.seed
-  JOIN seeds s ON a.seed = s.seed
-),
-pats AS (SELECT unnest(range(0, 1 << (SELECT count(*) FROM seeds)))
-           AS pat),
-means AS (
-  SELECT p.pat,
-         round(abs(avg(CASE WHEN (p.pat & d.mask) <> 0 THEN -d.delta
-                            ELSE d.delta END)), 4) AS am
-  FROM pats p CROSS JOIN deltas d GROUP BY p.pat
-),
-obs AS (SELECT am AS obs_am FROM means WHERE pat = 0),
-pv AS (
-  SELECT round(CAST(sum(CASE WHEN m.am >= o.obs_am THEN 1 ELSE 0 END)
-               AS DOUBLE) / count(*), 4) AS p_value
-  FROM means m CROSS JOIN obs o
-),
-st AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_queries,
-         round(avg(rr_a), 4) AS mean_rr_a,
-         round(avg(rr_b), 4) AS mean_rr_b,
-         round(avg(delta), 4) AS mean_delta
-  FROM deltas
-)
-SELECT st.n_queries, st.mean_rr_a, st.mean_rr_b, st.mean_delta,
-       pv.p_value,
-       CAST(CASE WHEN pv.p_value < {_SIG_ALPHA} THEN 1 ELSE 0 END AS BIGINT)
-         AS significant
-FROM st CROSS JOIN pv"""
-
-
-# ---------------------------------------------------------------------------
-# Rank-S shard selection (Kulkarni, Tigelaar, Hiemstra & Callan, CIKM 2012)
-# ---------------------------------------------------------------------------
-
-_RANKS_N = 40        # centralized-sample retrieval depth (redde's depth)
-_RANKS_B = 2.0       # vote decay base; 2 keeps every vote a dyadic rational
-
-
-def q_ranks_selection(spark, sf_dir):
-    """Rank-S resource selection (Kulkarni, Tigelaar, Hiemstra &
-    Callan, CIKM 2012) — the rank-based third of the shard-routing
-    trio: where cori_shards ranks shards by collection term statistics
-    and redde_selection by scaled sample-hit COUNTS, Rank-S weights
-    each centralized-sample hit by an exponentially DECAYING vote in
-    its sample rank, vote(r) = B^-r, so one hit at rank 1 outweighs
-    many hits deep in the ranking.  Same deterministic 1/8 sample and
-    BM25 sample retrieval as ReDDE (doc_id % 8 == 0, sample-scoped
-    stats); votes sum per shard (documents.source) and shards rank by
-    the vote total.
-
-    Determinism: B = 2 makes every vote 2^-r — a dyadic rational that
-    is EXACT in binary floating point, as are the per-shard sums (sums
-    of distinct powers of two at these depths), so no cross-engine
-    rounding enters before the final 4dp display rounding.  Scale
-    shape: identical to redde_selection — retrieval touches only the
-    sample index with the term filter below the tf agg; after the
-    top-40 cut everything is |shards|-sized.
-    """
-    from pyspark.sql import Window
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    sample_ids = docs.filter(F.col("doc_id") % _REDDE_MOD == 0)
-    toks = _tokens(spark, sf_dir).join(sample_ids.select("doc_id"), "doc_id")
-    tf = (
-        toks.filter(F.col("term").isin(_QL_TERMS))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = dl.agg(F.count("*").alias("_n_docs"), F.avg("dl").alias("_avgdl"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    wtop = Window.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-    top = (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "score",
-            bm25.idf_col(F.col("df"), F.col("_n_docs").cast("double"))
-            * bm25.weight_col(F.col("tf"), F.col("dl"), F.col("_avgdl")),
-        )
-        .groupBy("doc_id")
-        .agg(_r4(F.sum(_r4("score"))).alias("s"))
-        .orderBy(F.col("s").desc(), F.col("doc_id").asc())
-        .limit(_RANKS_N)
-        .withColumn("r", F.row_number().over(wtop))
-        .withColumn("vote", F.pow(F.lit(1.0 / _RANKS_B), F.col("r")))
-    )
-    w = Window.orderBy(F.col("ranks_score").desc(), F.col("shard").asc())
-    return (
-        top.join(docs, "doc_id")
-        .groupBy(F.col("source").alias("shard"))
-        .agg(
-            F.count("*").cast("long").alias("n_hits"),
-            _r4(F.sum("vote")).alias("ranks_score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .orderBy("rank")
-    )
-
-
-SQL_RANKS_SELECTION = f"""WITH
-docs AS (SELECT doc_id, source FROM documents),
-sample_ids AS (SELECT doc_id, source FROM docs
-               WHERE doc_id % {_REDDE_MOD} = 0),
-stoks AS (
-  SELECT t.doc_id, t.term FROM (
-    SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(lower(text),
-                              '[^a-z0-9]+'), x -> x <> '')) AS term
-    FROM documents WHERE doc_id % {_REDDE_MOD} = 0) t
-),
-tf AS (SELECT term, doc_id, count(*) AS tf FROM stoks
-       WHERE term IN ('merge', 'join') GROUP BY term, doc_id),
-dl AS (SELECT doc_id, count(*) AS dl FROM stoks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-top AS (
-  SELECT doc_id, s, row_number() OVER (ORDER BY s DESC, doc_id ASC) AS r
-  FROM (
-    SELECT doc_id, round(sum(round(score, 4)), 4) AS s FROM (
-      SELECT tf.doc_id,
-             ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-             * (tf.tf * (1.2 + 1.0))
-             / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl))
-               AS score
-      FROM tf JOIN df ON tf.term = df.term
-      JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN stats)
-    GROUP BY doc_id ORDER BY s DESC, doc_id ASC LIMIT {_RANKS_N})
-),
-votes AS (
-  SELECT d.source AS shard, count(*) AS n_hits,
-         round(sum(power(1.0 / {_RANKS_B}, t.r)), 4) AS ranks_score
-  FROM top t JOIN docs d ON t.doc_id = d.doc_id GROUP BY d.source
-)
-SELECT shard, CAST(n_hits AS BIGINT) AS n_hits, ranks_score,
-       CAST(row_number() OVER (ORDER BY ranks_score DESC, shard ASC)
-            AS BIGINT) AS rank
-FROM votes ORDER BY rank"""
-
-
-# ---------------------------------------------------------------------------
-# Joachims skip-above click preferences (KDD 2002)
-# ---------------------------------------------------------------------------
-
-_CP_SLOTS = 10       # SERP length: position = event_id % 10 + 1 (coec's rule)
-_CP_TOPN = 20
-
-
-def q_click_preferences(spark, sf_dir):
-    """Pairwise preference extraction from clicks — Joachims'
-    "Click > Skip Above" rule (KDD 2002), the training-data generator
-    for pairwise LTR that complements ltr_features' pointwise export:
-    within one user's impression list (position = the coec_model
-    event_id % 10 + 1 convention, an item's position = its earliest
-    viewed slot), a clicked item is preferred over every item the user
-    SAW at a better position but did not click.  Preferences aggregate
-    across users into (preferred, over, n_prefs) counts — exactly the
-    pair weights a RankNet/RankSVM trainer consumes — and the top
-    pairs are reported.
-
-    Scale shape: the pair generation is a per-user self-join bounded
-    by SERP length (≤ slots² pairs per impression — linear in the log,
-    never quadratic in the catalog); pair counts aggregate map-side
-    keyed on (preferred, over) with cardinality ≤ items²-observed; the
-    final cut is one rank window over that bounded aggregate.
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("view", "click"))
-        .select(
-            "event_type",
-            F.col("user_id").alias("u"),
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-            (F.pmod(F.col("event_id"), F.lit(_CP_SLOTS)) + 1)
-            .cast("long").alias("pos"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("u", "item")
-        .agg(F.min("pos").alias("pos"))
-    )
-    clicked = (
-        ev.filter(F.col("event_type") == "click")
-        .select("u", "item")
-        .distinct()
-    )
-    v = views.join(
-        clicked.withColumn("_c", F.lit(1)), ["u", "item"], "left"
-    ).select("u", "item", "pos", F.coalesce("_c", F.lit(0)).alias("c"))
-    pref = v.filter(F.col("c") == 1).select(
-        "u", F.col("item").alias("preferred"), F.col("pos").alias("cpos")
-    )
-    skip = v.filter(F.col("c") == 0).select(
-        "u", F.col("item").alias("over"), F.col("pos").alias("spos")
-    )
-    pairs = (
-        pref.join(skip, "u")
-        .filter(F.col("spos") < F.col("cpos"))
-        .groupBy("preferred", "over")
-        .agg(F.count("*").cast("long").alias("n_prefs"))
-    )
-    w = Window.orderBy(
-        F.col("n_prefs").desc(), F.col("preferred").asc(),
-        F.col("over").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _CP_TOPN)
-        .select("preferred", "over", "n_prefs", "rank")
-        .orderBy("rank")
-    )
-
-
-SQL_CLICK_PREFERENCES = f"""WITH ev AS (
-  SELECT event_type, user_id AS u,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item,
-         CAST(event_id % {_CP_SLOTS} + 1 AS BIGINT) AS pos
-  FROM events
-  WHERE event_type IN ('view', 'click')
-    AND json_extract_string(props, '$.k') IS NOT NULL
-),
-views AS (
-  SELECT u, item, min(pos) AS pos FROM ev
-  WHERE event_type = 'view' GROUP BY u, item
-),
-clicked AS (SELECT DISTINCT u, item FROM ev WHERE event_type = 'click'),
-v AS (
-  SELECT views.u, views.item, views.pos,
-         CASE WHEN clicked.item IS NULL THEN 0 ELSE 1 END AS c
-  FROM views LEFT JOIN clicked
-    ON views.u = clicked.u AND views.item = clicked.item
-),
-pairs AS (
-  SELECT p.item AS preferred, s.item AS over, count(*) AS n_prefs
-  FROM v p JOIN v s ON p.u = s.u AND p.c = 1 AND s.c = 0
-   AND s.pos < p.pos
-  GROUP BY p.item, s.item
-),
-ranked AS (
-  SELECT preferred, over, CAST(n_prefs AS BIGINT) AS n_prefs,
-         row_number() OVER (ORDER BY n_prefs DESC, preferred ASC,
-                            over ASC) AS rank
-  FROM pairs
-)
-SELECT preferred, over, n_prefs, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_CP_TOPN} ORDER BY rank"""
-
-
-# ---------------------------------------------------------------------------
-# query-flow graph next-query suggestion (Boldi et al., CIKM 2008)
-# ---------------------------------------------------------------------------
-
-_QF_MOD = 30         # pseudo-query id: props.k % 30
-_QF_GAP_S = 1800     # session gap, sessionize's 30 minutes
-_QF_TOPN = 2
-
-
-def q_query_flow(spark, sf_dir):
-    """Query-flow-graph suggestion mining (Boldi, Bonchi, Castillo,
-    Donato, Gionis & Vigna, CIKM 2008): the TEMPORAL reformulation
-    signal, complementary to coclick_similarity's click co-occurrence
-    and click_walk's graph diffusion — an edge q→q' counts how often a
-    user issued q' directly after q within one session (sessionize's
-    30-minute gap; the pseudo-query is props.k % 30).  Per source
-    query the top suggestions by edge weight, with the edge's relative
-    frequency w/out(q) — the transition probability a query-flow
-    random walk would use.
-
-    Determinism: session boundaries, adjacency, and counts are pure
-    integer/timestamp logic; the only division is count/count.  Scale
-    shape: one window over (user ORDER BY ts, event_id) builds session
-    ids and adjacency via lag/lead — exactly the sessionization
-    shuffle, nothing more; edges aggregate map-side keyed (q, q');
-    out-degrees are a |Q|-row broadcast; the cut is a per-source rank
-    window over the bounded edge table.
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select(
-            "user_id", "ts", "event_id",
-            F.pmod(F.get_json_object("props", "$.k").cast("long"),
-                   F.lit(_QF_MOD)).alias("q"),
-        )
-        .filter(F.col("q").isNotNull())
-    )
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.lag("ts").over(wu).isNull()
-            | (
-                F.unix_micros(F.col("ts").cast("timestamp"))
-                - F.unix_micros(F.lag("ts").over(wu).cast("timestamp"))
-                > _QF_GAP_S * 1_000_000
-            ),
-            1,
-        ).otherwise(0),
-    )
-    sid = flagged.withColumn(
-        "sid",
-        F.sum("new_session").over(
-            wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    adj = (
-        sid.withColumn("next_q", F.lead("q").over(wu))
-        .withColumn("next_sid", F.lead("sid").over(wu))
-        .filter(
-            (F.col("next_sid") == F.col("sid"))
-            & (F.col("next_q") != F.col("q"))
-        )
-    )
-    edges = adj.groupBy("q", "next_q").agg(
-        F.count("*").cast("long").alias("w")
-    )
-    out = edges.groupBy("q").agg(F.sum("w").alias("out_total"))
-    wr = Window.partitionBy("q").orderBy(
-        F.col("w").desc(), F.col("next_q").asc()
-    )
-    return (
-        edges.join(F.broadcast(out), "q")
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= _QF_TOPN)
-        .select(
-            "q",
-            F.col("next_q").alias("suggestion"),
-            "w",
-            F.col("out_total").cast("long").alias("out_total"),
-            _r4(F.col("w") / F.col("out_total")).alias("prob"),
-            "rank",
-        )
-        .orderBy("q", "rank")
-    )
-
-
-SQL_QUERY_FLOW = f"""WITH ev AS (
-  SELECT user_id, ts, event_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) % {_QF_MOD} AS q
-  FROM events
-  WHERE json_extract_string(props, '$.k') IS NOT NULL
-),
-flagged AS (
-  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > {_QF_GAP_S * 1_000_000}
-                 THEN 1 ELSE 0 END AS new_session
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sid AS (
-  SELECT *, sum(new_session) OVER (PARTITION BY user_id
-           ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-),
-adj AS (
-  SELECT q, lead(q) OVER w AS next_q, sid, lead(sid) OVER w AS next_sid
-  FROM sid WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-edges AS (
-  SELECT q, next_q, count(*) AS w FROM adj
-  WHERE next_sid = sid AND next_q <> q GROUP BY q, next_q
-),
-outd AS (SELECT q, sum(w) AS out_total FROM edges GROUP BY q),
-ranked AS (
-  SELECT e.q, e.next_q AS suggestion, CAST(e.w AS BIGINT) AS w,
-         CAST(o.out_total AS BIGINT) AS out_total,
-         round(CAST(e.w AS DOUBLE) / o.out_total, 4) AS prob,
-         row_number() OVER (PARTITION BY e.q
-           ORDER BY e.w DESC, e.next_q ASC) AS rank
-  FROM edges e JOIN outd o ON e.q = o.q
-)
-SELECT q, suggestion, w, out_total, prob, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_QF_TOPN} ORDER BY q, rank"""
-
-
-# ---------------------------------------------------------------------------
-# MinDist term-proximity ranking (Tao & Zhai, SIGIR 2007)
-# ---------------------------------------------------------------------------
-
-_TP_K = 10
-
-
-def q_term_proximity(spark, sf_dir):
-    """Proximity-boosted BM25 with the MinDist feature — Tao & Zhai
-    (SIGIR 2007) found the minimum pairwise distance between query-term
-    occurrences to be the single best proximity signal; the engine's
-    dynamic ranker computes the same spans natively (SURVEY §2 R4,
-    `Ranker.cpp` span features) and this is its oracle-checkable
-    relational twin.  For each 2-term query (wand_prune_stats' pairs)
-    and every doc matching BOTH terms: mindist = min |pos_a - pos_b|
-    over the two position lists, boost = 1/(1 + mindist) (a rational
-    kernel in place of the paper's log-exp pi so both engines compute
-    EXACT identical values — same monotone shape: 0.5 for adjacent
-    terms, → 0 as the pair drifts apart), final = bm25_a + bm25_b +
-    boost, top-10 per pair.
-
-    Scale shape: position lists reach the join only for the pairs'
-    terms (filter below the tf/position agg); the per-doc pairwise min
-    is tf_a·tf_b small-array work keyed by doc — the engine does it in
-    one merged positional pass, the relational twin as a doc-keyed
-    join; the cut is a per-pair rank window.
-    """
-    from pyspark.sql import Window
-
-    terms = sorted({t for p in _WAND_PAIRS for t in p})
-    pairs = spark.createDataFrame(
-        [(a, b, f"{a}+{b}") for a, b in _WAND_PAIRS],
-        "ta string, tb string, pair string",
-    )
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(terms))
-    s = _scored(spark, sf_dir, terms).select(
-        "term", "doc_id", _r4("score").alias("s")
-    )
-    pa = toks.join(F.broadcast(pairs), F.col("term") == F.col("ta")).select(
-        "pair", "doc_id", F.col("pos").alias("pos_a")
-    )
-    pb = toks.join(F.broadcast(pairs), F.col("term") == F.col("tb")).select(
-        "pair", "doc_id", F.col("pos").alias("pos_b")
-    )
-    mind = (
-        pa.join(pb, ["pair", "doc_id"])
-        .groupBy("pair", "doc_id")
-        .agg(F.min(F.abs(F.col("pos_a") - F.col("pos_b")))
-             .cast("long").alias("mindist"))
-    )
-    sa = s.join(F.broadcast(pairs), F.col("term") == F.col("ta")).select(
-        "pair", "doc_id", F.col("s").alias("s_a")
-    )
-    sb = s.join(F.broadcast(pairs), F.col("term") == F.col("tb")).select(
-        "pair", "doc_id", F.col("s").alias("s_b")
-    )
-    w = Window.partitionBy("pair").orderBy(
-        F.col("final").desc(), F.col("doc_id").asc()
-    )
-    return (
-        mind.join(sa, ["pair", "doc_id"])
-        .join(sb, ["pair", "doc_id"])
-        .withColumn("boost", F.lit(1.0) / (F.lit(1.0) + F.col("mindist")))
-        .withColumn(
-            "final",
-            _r4(F.col("s_a") + F.col("s_b") + F.col("boost")),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TP_K)
-        .select("pair", "doc_id", "mindist", _r4("boost").alias("boost"),
-                "final", "rank")
-        .orderBy("pair", "rank")
-    )
-
-
-SQL_TERM_PROXIMITY = f"""WITH {_BM25_CORE_SQL},
-pairs AS (
-  SELECT * FROM (VALUES ('data', 'join', 'data+join'),
-                        ('merge', 'query', 'merge+query'),
-                        ('spark', 'data', 'spark+data'))
-  AS t(ta, tb, pair)
-),
-pa AS (SELECT p.pair, t.doc_id, t.pos AS pos_a
-       FROM toks t JOIN pairs p ON t.term = p.ta),
-pb AS (SELECT p.pair, t.doc_id, t.pos AS pos_b
-       FROM toks t JOIN pairs p ON t.term = p.tb),
-mind AS (
-  SELECT pa.pair, pa.doc_id,
-         CAST(min(abs(pa.pos_a - pb.pos_b)) AS BIGINT) AS mindist
-  FROM pa JOIN pb ON pa.pair = pb.pair AND pa.doc_id = pb.doc_id
-  GROUP BY pa.pair, pa.doc_id
-),
-sa AS (SELECT p.pair, s.doc_id, round(s.score, 4) AS s_a
-       FROM scored s JOIN pairs p ON s.term = p.ta),
-sb AS (SELECT p.pair, s.doc_id, round(s.score, 4) AS s_b
-       FROM scored s JOIN pairs p ON s.term = p.tb),
-ranked AS (
-  SELECT m.pair, m.doc_id, m.mindist,
-         round(1.0 / (1.0 + m.mindist), 4) AS boost,
-         round(sa.s_a + sb.s_b + 1.0 / (1.0 + m.mindist), 4) AS final,
-         row_number() OVER (PARTITION BY m.pair
-           ORDER BY round(sa.s_a + sb.s_b + 1.0 / (1.0 + m.mindist), 4)
-                    DESC, m.doc_id ASC) AS rank
-  FROM mind m
-  JOIN sa ON m.pair = sa.pair AND m.doc_id = sa.doc_id
-  JOIN sb ON m.pair = sb.pair AND m.doc_id = sb.doc_id
-)
-SELECT pair, doc_id, mindist, boost, final, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= {_TP_K} ORDER BY pair, rank"""
-
-
-# ---------------------------------------------------------------------------
-# BM25+ lower-bounded ranking (Lv & Zhai, CIKM 2011)
-# ---------------------------------------------------------------------------
-
-_BMP_DELTA = 1.0
-_BMP_K = 10
-_BMP_SEED = "merge"
-
-
-def q_bm25_plus(spark, sf_dir):
-    """BM25+ (Lv & Zhai, CIKM 2011): plain BM25's tf normalisation
-    decays toward ZERO for very long documents, so a long doc that
-    genuinely contains the term can score below a short doc that does
-    not deserve it — BM25+ lower-bounds the tf component by adding a
-    constant delta (here 1.0) AFTER saturation, guaranteeing any
-    occurrence is worth at least idf·delta regardless of document
-    length.  Top-10 for one seed term under BM25+, reporting both
-    scores and the doc's rank under each function — rank_shift > 0
-    marks the long documents the lower bound rescues.
-
-    Scale shape: identical to every bm25_* entry — the seed's posting
-    list only (term filter below the tf agg), 1-row broadcast stats,
-    two rank windows over the same scored rows (no second scan), k-row
-    output.
-    """
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir).filter(F.col("term") == _BMP_SEED)
-    tf = toks.groupBy("doc_id").agg(F.count("*").alias("tf"))
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(F.count("*").alias("_n"), F.avg("dl").alias("_avgdl"))
-    base = (
-        tf.join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .crossJoin(
-            F.broadcast(
-                tf.agg(F.count("*").alias("_df"))
-            )
-        )
-        .withColumn(
-            "idf",
-            F.log(
-                (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "sat",
-            F.col("tf") * (K1 + 1.0)
-            / (
-                F.col("tf")
-                + K1 * (1.0 - B + B * F.col("dl") / F.col("_avgdl"))
-            ),
-        )
-        .select(
-            "doc_id", "dl",
-            _r4(F.col("idf") * F.col("sat")).alias("bm25"),
-            _r4(F.col("idf") * (F.col("sat") + _BMP_DELTA)).alias(
-                "bm25_plus"
-            ),
-        )
-    )
-    w_plus = Window.orderBy(F.col("bm25_plus").desc(), F.col("doc_id").asc())
-    w_base = Window.orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-    return (
-        base.withColumn("rank", F.row_number().over(w_plus))
-        .withColumn("rank_bm25", F.row_number().over(w_base))
-        .filter(F.col("rank") <= _BMP_K)
-        .select(
-            "doc_id", F.col("dl").cast("long").alias("dl"), "bm25",
-            "bm25_plus", "rank",
-            F.col("rank_bm25").cast("long").alias("rank_bm25"),
-            (F.col("rank_bm25") - F.col("rank")).cast("long")
-            .alias("rank_shift"),
-        )
-        .orderBy("rank")
-    )
-
-
-SQL_BM25_PLUS = f"""WITH {_TOKS_SQL},
-tf AS (SELECT doc_id, count(*) AS tf FROM toks
-       WHERE term = '{_BMP_SEED}' GROUP BY doc_id),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-dfc AS (SELECT count(*) AS df FROM tf),
-base AS (
-  SELECT tf.doc_id, dl.dl,
-         ln((stats.n_docs - dfc.df + 0.5) / (dfc.df + 0.5) + 1.0) AS idf,
-         tf.tf * (1.2 + 1.0)
-         / (tf.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl)) AS sat
-  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats CROSS JOIN dfc
-),
-scored2 AS (
-  SELECT doc_id, dl, round(idf * sat, 4) AS bm25,
-         round(idf * (sat + {_BMP_DELTA}), 4) AS bm25_plus
-  FROM base
-),
-ranked AS (
-  SELECT *,
-         row_number() OVER (ORDER BY bm25_plus DESC, doc_id ASC) AS rank,
-         row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rank_bm25
-  FROM scored2
-)
-SELECT doc_id, CAST(dl AS BIGINT) AS dl, bm25, bm25_plus,
-       CAST(rank AS BIGINT) AS rank, CAST(rank_bm25 AS BIGINT) AS rank_bm25,
-       CAST(rank_bm25 - rank AS BIGINT) AS rank_shift
-FROM ranked WHERE rank <= {_BMP_K} ORDER BY rank"""
-
-
-# ---------------------------------------------------------------------------
-# term- vs doc-partitioned routing cost model (Moffat, Webber, Zobel &
-# Baeza-Yates, Inf. Retr. 2007)
-# ---------------------------------------------------------------------------
-
-_PC_SHARDS = 8
-_PC_TOPK = 10
-
-
-def q_partition_cost(spark, sf_dir):
-    """Distributed-index routing cost under the two classic
-    partitioning schemes (Moffat, Webber, Zobel & Baeza-Yates, Inf.
-    Retr. 2007) — the design decision behind the engine's A4
-    term-sharded dictionary (SURVEY §2 A4): per 3-term query,
-    DOC-partitioned fans out to ALL shards but each ships only its
-    local top-k (network = shards·k rows), while TERM-partitioned
-    touches only the shards owning the query's terms but must ship
-    WHOLE posting lists to the coordinator (network = sum of the
-    terms' df).  One row per query with both shard counts, both
-    transfer volumes, and which scheme moves less data.  The stand-in
-    term→shard partitioner is length(term) % shards so the oracle can
-    mirror it (production uses xxhash64 — functions/hashing.py).
-
-    Scale shape: df for the query terms comes from the term-filtered
-    tf aggregate (map-side, |terms| rows); everything after is
-    constant-size arithmetic per query.  The point of the entry IS the
-    scale story: term-partitioning's transfer grows with df (unbounded
-    in corpus size) while doc-partitioning's grows with shards·k
-    (constant per query) — why every web-scale engine doc-partitions,
-    exactly as the reference and this repo do.
-    """
-    terms = sorted({t for q in _MS_QUERIES for t in q})
-    triples = spark.createDataFrame(
-        [(a, b, c, f"{a}+{b}+{c}") for a, b, c in _MS_QUERIES],
-        "t1 string, t2 string, t3 string, q string",
-    )
-    df = (
-        _tokens(spark, sf_dir)
-        .filter(F.col("term").isin(terms))
-        .groupBy("term", "doc_id")
-        .agg(F.lit(1).alias("_one"))
-        .groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"))
-        .withColumn(
-            "shard",
-            F.pmod(F.length("term"), F.lit(_PC_SHARDS)).cast("long"),
-        )
-    )
-    hits = df.join(
-        F.broadcast(triples),
-        (F.col("term") == F.col("t1"))
-        | (F.col("term") == F.col("t2"))
-        | (F.col("term") == F.col("t3")),
-    )
-    return (
-        hits.groupBy("q")
-        .agg(
-            F.countDistinct("shard").cast("long").alias("term_shards"),
-            F.sum("df").cast("long").alias("term_transfer"),
-        )
-        .select(
-            "q",
-            "term_shards",
-            "term_transfer",
-            F.lit(_PC_SHARDS).cast("long").alias("doc_shards"),
-            F.lit(_PC_SHARDS * _PC_TOPK).cast("long").alias("doc_transfer"),
-            F.when(
-                F.col("term_transfer") < _PC_SHARDS * _PC_TOPK,
-                F.lit("term"),
-            ).otherwise(F.lit("doc")).alias("cheaper"),
-        )
-        .orderBy("q")
-    )
-
-
-SQL_PARTITION_COST = f"""WITH {_TOKS_SQL},
-qs AS (
-  SELECT * FROM (VALUES ('data', 'join', 'merge', 'data+join+merge'),
-                        ('query', 'spark', 'hash', 'query+spark+hash'),
-                        ('scan', 'filter', 'sort', 'scan+filter+sort'))
-  AS t(t1, t2, t3, q)
-),
-df AS (
-  SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
-         CAST(length(term) % {_PC_SHARDS} AS BIGINT) AS shard
-  FROM toks
-  WHERE term IN ('data', 'join', 'merge', 'query', 'spark', 'hash',
-                 'scan', 'filter', 'sort')
-  GROUP BY term
-),
-hits AS (
-  SELECT qs.q, df.term, df.df, df.shard
-  FROM df JOIN qs ON df.term IN (qs.t1, qs.t2, qs.t3)
-)
-SELECT q,
-       CAST(count(DISTINCT shard) AS BIGINT) AS term_shards,
-       CAST(sum(df) AS BIGINT) AS term_transfer,
-       CAST({_PC_SHARDS} AS BIGINT) AS doc_shards,
-       CAST({_PC_SHARDS * _PC_TOPK} AS BIGINT) AS doc_transfer,
-       CASE WHEN sum(df) < {_PC_SHARDS * _PC_TOPK} THEN 'term'
-            ELSE 'doc' END AS cheaper
-FROM hits GROUP BY q ORDER BY q"""
-
-
-# ---------------------------------------------------------------------------
-# pogo-sticking (short-click) quality signal
-# ---------------------------------------------------------------------------
-
-_POGO_S = 60      # a click followed by ANY next action within 60 s = pogo
-_POGO_MIN = 3     # report items with at least this many clicks
-
-
-def q_pogo_sticking(spark, sf_dir):
-    """Pogo-sticking rate per item — the classic dwell-time quality
-    signal (short clicks; cf. Joachims et al.'s "Accurately interpreting
-    clickthrough data", and industrial SAT-click thresholds): a click
-    whose user produces ANY next event within 60 s counts as a bounce
-    back to the results page, so items whose clicks are mostly short
-    are attracting clicks they do not satisfy (the complement of
-    coec_model's position-debiased attractiveness).  One row per item
-    with >= 3 clicks: click count, pogo count, pogo rate.
-
-    Determinism: dwell is integer epoch arithmetic over the
-    (user ORDER BY ts, event_id) window; the only division is
-    count/count.  Scale shape: ONE sessionization-shaped window
-    shuffle keyed by user (the same exchange sessionize/query_flow
-    use), then a map-side-combinable per-item aggregate — nothing
-    exceeds per-item cardinality at 10^12 events.
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select(
-            "user_id", "ts", "event_id", "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-    )
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = ev.withColumn("next_ts", F.lead("ts").over(wu))
-    clicks = nxt.filter(
-        (F.col("event_type") == "click") & F.col("item").isNotNull()
-    ).withColumn(
-        "pogo",
-        F.when(
-            F.col("next_ts").isNotNull()
-            & (
-                F.unix_micros(F.col("next_ts").cast("timestamp"))
-                - F.unix_micros(F.col("ts").cast("timestamp"))
-                <= _POGO_S * 1_000_000
-            ),
-            1,
-        ).otherwise(0),
-    )
-    return (
-        clicks.groupBy("item")
-        .agg(
-            F.count("*").cast("long").alias("n_clicks"),
-            F.sum("pogo").cast("long").alias("n_pogo"),
-        )
-        .filter(F.col("n_clicks") >= _POGO_MIN)
-        .select(
-            "item", "n_clicks", "n_pogo",
-            _r4(F.col("n_pogo") / F.col("n_clicks")).alias("pogo_rate"),
-        )
-        .orderBy(F.col("pogo_rate").desc(), F.col("item").asc())
-    )
-
-
-SQL_POGO_STICKING = f"""WITH ev AS (
-  SELECT user_id, ts, event_id, event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item,
-         lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS next_ts
-  FROM events
-),
-clicks AS (
-  SELECT item,
-         CASE WHEN next_ts IS NOT NULL
-              AND epoch_us(next_ts) - epoch_us(ts) <= {_POGO_S * 1_000_000}
-              THEN 1 ELSE 0 END AS pogo
-  FROM ev WHERE event_type = 'click' AND item IS NOT NULL
-)
-SELECT item, CAST(count(*) AS BIGINT) AS n_clicks,
-       CAST(sum(pogo) AS BIGINT) AS n_pogo,
-       round(CAST(sum(pogo) AS DOUBLE) / count(*), 4) AS pogo_rate
-FROM clicks GROUP BY item HAVING count(*) >= {_POGO_MIN}
-ORDER BY pogo_rate DESC, item ASC"""
-
-
-# ---------------------------------------------------------------------------
-# degree assortativity of the link graph (Newman, PRL 2002)
-# ---------------------------------------------------------------------------
-
-
-def q_degree_assortativity(spark, sf_dir):
-    """Directed degree assortativity (Newman, PRL 2002/2003) of the
-    shared synthetic link graph (pagerank/hits' S6 LinkEmitter surface):
-    the Pearson correlation, over EDGES, between the source's out-degree
-    and the destination's in-degree.  Real web graphs are
-    disassortative (hubs point at low-degree pages); one number
-    summarises whether this crawl's link structure looks web-like —
-    a drift monitor a crawler QA stack recomputes per snapshot.
-
-    Determinism: degrees are integers, so every sum in the Pearson
-    formula (n·Σxy − Σx·Σy etc.) is an EXACT integer well inside the
-    2^53 double range; the only float ops are one sqrt (IEEE
-    correctly-rounded in both engines) and one division.  Scale shape:
-    two degree aggregates keyed by node, two edge joins keyed src/dst
-    (co-partitioned with the edge list), one 1-row global aggregate —
-    at 10^12 edges this is the Pregel-adjacent shape pagerank already
-    uses, with no iteration.
-    """
-    _, edges = _link_edges(spark, sf_dir)
-    outd = edges.groupBy("src").agg(F.count("*").alias("xd"))
-    ind = edges.groupBy("dst").agg(F.count("*").alias("yd"))
-    e = edges.join(outd, "src").join(ind, "dst")
-    agg = e.agg(
-        F.count("*").alias("m"),
-        F.sum("xd").alias("sx"),
-        F.sum("yd").alias("sy"),
-        F.sum(F.col("xd") * F.col("yd")).alias("sxy"),
-        F.sum(F.col("xd") * F.col("xd")).alias("sxx"),
-        F.sum(F.col("yd") * F.col("yd")).alias("syy"),
-    )
-    num = F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.sqrt(
-        (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        * (F.col("m") * F.col("syy") - F.col("sy") * F.col("sy"))
-    )
-    return agg.select(
-        F.col("m").cast("long").alias("n_edges"),
-        _r4(F.col("sx") / F.col("m")).alias("mean_outdeg"),
-        _r4(F.col("sy") / F.col("m")).alias("mean_indeg"),
-        _r4(num / den).alias("assortativity"),
-    )
-
-
-SQL_DEGREE_ASSORTATIVITY = f"""WITH
-nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT count(*) AS n FROM nodes),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
-    FROM nodes CROSS JOIN nn
-    CROSS JOIN (VALUES {', '.join(f'({m}, {b})' for m, b in _PR_RULES)})
-      AS rules(m, b)
-  ) WHERE src <> dst
-),
-outd AS (SELECT src, count(*) AS xd FROM edges GROUP BY src),
-ind AS (SELECT dst, count(*) AS yd FROM edges GROUP BY dst),
-e AS (
-  SELECT outd.xd, ind.yd
-  FROM edges JOIN outd ON edges.src = outd.src
-  JOIN ind ON edges.dst = ind.dst
-),
-agg AS (
-  SELECT count(*) AS m, sum(xd) AS sx, sum(yd) AS sy,
-         sum(xd * yd) AS sxy, sum(xd * xd) AS sxx, sum(yd * yd) AS syy
-  FROM e
-)
-SELECT CAST(m AS BIGINT) AS n_edges,
-       round(CAST(sx AS DOUBLE) / m, 4) AS mean_outdeg,
-       round(CAST(sy AS DOUBLE) / m, 4) AS mean_indeg,
-       round((m * sxy - sx * sy)
-             / sqrt(CAST(m * sxx - sx * sx AS DOUBLE)
-                    * (m * syy - sy * sy)), 4) AS assortativity
-FROM agg"""
-
-
-# ---------------------------------------------------------------------------
-# link reciprocity (Garlaschelli & Loffredo, PRL 2004)
-# ---------------------------------------------------------------------------
-
-
-def q_link_reciprocity(spark, sf_dir):
-    """Reciprocity of the directed link graph: the fraction of edges
-    whose reverse edge also exists (Garlaschelli & Loffredo, PRL 2004's
-    r = L_bidirectional / L).  Together with degree_assortativity this
-    is the second one-number structural drift monitor a crawler QA
-    stack recomputes per snapshot — real web graphs sit near r ~ 0.25
-    (links are mostly one-way), so a crawl whose reciprocity jumps is
-    mis-canonicalizing URLs or trapped in a forum.
-
-    Determinism: two integer counts and ONE division.  Scale shape: the
-    reverse-edge test is a self-semi-join on the (src, dst) key — the
-    edge list shuffles once on its own key, co-partitioned with itself;
-    at 10^12 edges this is a sort-merge semi-join with no skew beyond
-    the edge key's own distribution.
-    """
-    _, edges = _link_edges(spark, sf_dir)
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    recip = edges.join(rev, ["src", "dst"], "left_semi")
-    return (
-        edges.agg(F.count("*").alias("_ne"))
-        .crossJoin(F.broadcast(recip.agg(F.count("*").alias("_nr"))))
-        .select(
-            F.col("_ne").cast("long").alias("n_edges"),
-            F.col("_nr").cast("long").alias("n_reciprocal"),
-            _r4(F.col("_nr") / F.col("_ne")).alias("reciprocity"),
-        )
-    )
-
-
-SQL_LINK_RECIPROCITY = f"""WITH {_edges_sql()},
-r AS (
-  SELECT count(*) AS nr FROM edges e
-  WHERE EXISTS (SELECT 1 FROM edges x
-                WHERE x.src = e.dst AND x.dst = e.src)
-),
-t AS (SELECT count(*) AS ne FROM edges)
-SELECT CAST(ne AS BIGINT) AS n_edges,
-       CAST(nr AS BIGINT) AS n_reciprocal,
-       round(CAST(nr AS DOUBLE) / ne, 4) AS reciprocity
-FROM t CROSS JOIN r"""
-
-
-# ---------------------------------------------------------------------------
-# per-node local clustering coefficient (Watts-Strogatz)
-# ---------------------------------------------------------------------------
-
-
-def q_clustering_coeff(spark, sf_dir):
-    """Per-node local clustering coefficient (Watts & Strogatz 1998)
-    over the undirected link graph: c_i = 2*t_i / (d_i*(d_i-1)) for
-    every node with degree >= 2, where t_i counts triangles through i.
-    Complements triangle_count's global (triangle, wedge) pair with the
-    node-level signal link-spam detectors threshold on (link farms are
-    near-cliques: c ~ 1 at high degree, where organic hubs have c ~ 0).
-
-    Reuses triangle_count's degree-ordered orientation so each triangle
-    is FOUND once (from its min-degree corner, bounding wedge fanout on
-    power-law hubs) and then credited to all three corners by exploding
-    the (u, v, w) triple — so t_i stays an exact integer and the only
-    float op per row is one division.  Scale shape: the wedge self-join
-    and closure semi-join are triangle_count's plan; the per-node credit
-    is one explode + hash aggregation keyed by node id.
-    """
-    _, edges = _link_edges(spark, sf_dir)
-    und = edges.select(
-        F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-    ).distinct()
-    deg = (
-        und.select(F.col("lo").alias("v"))
-        .unionAll(und.select(F.col("hi").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
-    dl_ = deg.select(F.col("v").alias("lo"), F.col("deg").alias("deg_lo"))
-    dh_ = deg.select(F.col("v").alias("hi"), F.col("deg").alias("deg_hi"))
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | (
-        (F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi"))
-    )
-    oriented = (
-        und.join(dl_, "lo")
-        .join(dh_, "hi")
-        .select(
-            F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-            F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-        )
-    )
-    o2 = oriented.select(F.col("u").alias("u2"), F.col("v").alias("w"))
-    wedges = oriented.join(
-        o2, (oriented["u"] == o2["u2"]) & (oriented["v"] < o2["w"])
-    ).select("u", "v", "w")
-    tri = wedges.join(
-        und,
-        (F.least("v", "w") == und["lo"]) & (F.greatest("v", "w") == und["hi"]),
-        "left_semi",
-    )
-    node_tri = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("v"))
-        .groupBy("v")
-        .agg(F.count("*").alias("t"))
-    )
-    return (
-        deg.filter(F.col("deg") >= 2)
-        .join(node_tri, "v", "left")
-        .select(
-            F.col("v").alias("doc_id"),
-            F.col("deg").cast("long").alias("degree"),
-            F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("n_tri"),
-            _r4(
-                2.0
-                * F.coalesce(F.col("t"), F.lit(0))
-                / (F.col("deg") * (F.col("deg") - 1))
-            ).alias("local_cc"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-SQL_CLUSTERING_COEFF = f"""WITH {_edges_sql()},
-und AS (
-  SELECT DISTINCT least(src, dst) AS lo, greatest(src, dst) AS hi FROM edges
-),
-deg AS (
-  SELECT v, count(*) AS deg FROM (
-    SELECT lo AS v FROM und UNION ALL SELECT hi AS v FROM und
-  ) GROUP BY v
-),
-oriented AS (
-  SELECT CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND und.lo < und.hi)
-         THEN und.lo ELSE und.hi END AS u,
-         CASE WHEN dl.deg < dh.deg OR (dl.deg = dh.deg AND und.lo < und.hi)
-         THEN und.hi ELSE und.lo END AS v
-  FROM und JOIN deg dl ON und.lo = dl.v JOIN deg dh ON und.hi = dh.v
-),
-wedges AS (
-  SELECT a.u AS u, a.v AS v, b.v AS w
-  FROM oriented a JOIN oriented b ON a.u = b.u AND a.v < b.v
-),
-tri AS (
-  SELECT * FROM wedges
-  WHERE EXISTS (SELECT 1 FROM und
-                WHERE und.lo = least(wedges.v, wedges.w)
-                  AND und.hi = greatest(wedges.v, wedges.w))
-),
-node_tri AS (
-  SELECT node AS v, count(*) AS t FROM (
-    SELECT unnest([u, v, w]) AS node FROM tri
-  ) GROUP BY node
-)
-SELECT deg.v AS doc_id, CAST(deg.deg AS BIGINT) AS degree,
-       CAST(coalesce(node_tri.t, 0) AS BIGINT) AS n_tri,
-       round(2.0 * coalesce(node_tri.t, 0)
-             / (deg.deg * (deg.deg - 1)), 4) AS local_cc
-FROM deg LEFT JOIN node_tri ON deg.v = node_tri.v
-WHERE deg.deg >= 2 ORDER BY doc_id"""
-
-
-# ---------------------------------------------------------------------------
-# query reformulation classification (Lau & Horvitz, UM 1999)
-# ---------------------------------------------------------------------------
-
-
-def q_reformulation_types(spark, sf_dir):
-    """Classify consecutive in-session query transitions by term-set
-    relation (the Lau & Horvitz 1999 / Rieh & Xie taxonomy behind query
-    understanding dashboards): repeat (same query), specialization
-    (terms added), generalization (terms removed), substitution (terms
-    swapped, overlap kept), or new_task (no term overlap).  The query
-    log is query_flow's: pseudo-query id props.k % 30 inside
-    sessionize's 30-minute sessions; a query's synthetic TERM SET is
-    the 5-bit mask of (id + 1), so set relations are pure bitwise
-    integer tests ((a & b) = a <=> a's terms subset b's) — identical in
-    both engines, no string handling in the hot path to diverge on.
-
-    Determinism: bitmask tests and integer counts; the only division is
-    n/total.  Scale shape: ONE sessionization window shuffle keyed by
-    user (shared with sessionize/query_flow/pogo_sticking), then a
-    5-row map-side-combinable aggregate — bounded output regardless of
-    log size.
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select(
-            "user_id", "ts", "event_id",
-            F.pmod(
-                F.get_json_object("props", "$.k").cast("long"),
-                F.lit(_QF_MOD),
-            ).alias("q"),
-        )
-        .filter(F.col("q").isNotNull())
-    )
-    wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.lag("ts").over(wu).isNull()
-            | (
-                F.unix_micros(F.col("ts").cast("timestamp"))
-                - F.unix_micros(F.lag("ts").over(wu).cast("timestamp"))
-                > _QF_GAP_S * 1_000_000
-            ),
-            1,
-        ).otherwise(0),
-    )
-    sid = flagged.withColumn(
-        "sid",
-        F.sum("new_session").over(
-            wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    pairs = (
-        sid.withColumn("next_q", F.lead("q").over(wu))
-        .withColumn("next_sid", F.lead("sid").over(wu))
-        .filter(F.col("next_sid") == F.col("sid"))
-        .select(
-            (F.col("q") + 1).alias("a"), (F.col("next_q") + 1).alias("b")
-        )
-    )
-    ab = F.col("a").bitwiseAND(F.col("b"))
-    cls = (
-        F.when(F.col("a") == F.col("b"), F.lit("repeat"))
-        .when(ab == F.col("a"), F.lit("specialization"))
-        .when(ab == F.col("b"), F.lit("generalization"))
-        .when(ab != 0, F.lit("substitution"))
-        .otherwise(F.lit("new_task"))
-    )
-    counted = pairs.select(cls.alias("reform_class")).groupBy(
-        "reform_class"
-    ).agg(F.count("*").cast("long").alias("n"))
-    total = counted.agg(F.sum("n").alias("_tot"))
-    return (
-        counted.crossJoin(F.broadcast(total))
-        .select(
-            "reform_class", "n",
-            _r4(F.col("n") / F.col("_tot")).alias("frac"),
-        )
-        .orderBy("reform_class")
-    )
-
-
-SQL_REFORMULATION_TYPES = f"""WITH ev AS (
-  SELECT user_id, ts, event_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) % {_QF_MOD} AS q
-  FROM events
-  WHERE json_extract_string(props, '$.k') IS NOT NULL
-),
-flagged AS (
-  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                    > {_QF_GAP_S * 1_000_000}
-                 THEN 1 ELSE 0 END AS new_session
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sid AS (
-  SELECT *, sum(new_session) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS sid
-  FROM flagged
-),
-pairs AS (
-  SELECT a, b FROM (
-    SELECT q + 1 AS a,
-           lead(q) OVER w + 1 AS b,
-           sid,
-           lead(sid) OVER w AS next_sid
-    FROM sid WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-  ) WHERE next_sid = sid
-),
-classed AS (
-  SELECT CASE WHEN a = b THEN 'repeat'
-              WHEN (a & b) = a THEN 'specialization'
-              WHEN (a & b) = b THEN 'generalization'
-              WHEN (a & b) <> 0 THEN 'substitution'
-              ELSE 'new_task' END AS reform_class
-  FROM pairs
-),
-counted AS (
-  SELECT reform_class, CAST(count(*) AS BIGINT) AS n
-  FROM classed GROUP BY reform_class
-)
-SELECT reform_class, n,
-       round(CAST(n AS DOUBLE) / (SELECT sum(n) FROM counted), 4) AS frac
-FROM counted ORDER BY reform_class"""
-
-
-# ---------------------------------------------------------------------------
-# bpref evaluation (Buckley & Voorhees, SIGIR 2004)
-# ---------------------------------------------------------------------------
-
-
-def q_bpref_eval(spark, sf_dir):
-    """bpref (Buckley & Voorhees, SIGIR 2004) of the BM25 top-K pool
-    per query, under the same deterministic synthetic judgments
-    ndcg_eval/mrr_map_eval use (grade >= 2 is relevant; every pooled
-    doc is judged).  bpref = (1/R) * sum over relevant r of
-    (1 - min(nonrel_above_r, min(R,N)) / min(R,N)) — the preference
-    metric that stays stable under incomplete judgments, which is why
-    TREC reports it alongside MAP.  Conventions (trec_eval's):
-    R = 0 -> 0.0; N = 0 with R > 0 -> 1.0 (no judged nonrelevant to
-    rank above anything).
-
-    Determinism: the sum is computed as an INTEGER numerator
-    sum(min(R,N) - min(nonrel_above, min(R,N))) with ONE final division
-    by R*min(R,N), so there is no float accumulation to diverge on.
-    Scale shape: identical to mrr_map_eval — per-query rank windows
-    over the term-pruned _scored plan, then a |queries|-row aggregate.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(F.col("term").isin(_NDCG_QS))
-    w = Window.partitionBy("term").orderBy(
-        F.round("score", 4).desc(), F.col("doc_id").asc()
-    )
-    top = (
-        s.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _NDCG_K)
-        .withColumn(
-            "rel",
-            F.when(
-                F.pmod(
-                    (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761),
-                    F.lit(4),
-                )
-                >= 2,
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-    )
-    cw = (
-        Window.partitionBy("term")
-        .orderBy("rank")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pw = Window.partitionBy("term")
-    pool = (
-        top.withColumn("cum_rel", F.sum("rel").over(cw))
-        .withColumn("nonrel_above", F.col("rank") - F.col("cum_rel"))
-        .withColumn("r_tot", F.sum("rel").over(pw))
-        .withColumn("n_tot", F.count("*").over(pw) - F.col("r_tot"))
-        .withColumn("mrn", F.least("r_tot", "n_tot"))
-    )
-    return (
-        pool.groupBy("term")
-        .agg(
-            F.max("r_tot").cast("long").alias("n_rel"),
-            F.max("n_tot").cast("long").alias("n_nonrel"),
-            F.sum(
-                F.col("rel")
-                * (F.col("mrn") - F.least("nonrel_above", "mrn"))
-            ).alias("_num"),
-            F.max("mrn").alias("_mrn"),
-        )
-        .select(
-            "term", "n_rel", "n_nonrel",
-            F.when(F.col("n_rel") == 0, F.lit(0.0))
-            .when(F.col("_mrn") == 0, F.lit(1.0))
-            .otherwise(
-                _r4(F.col("_num") / (F.col("n_rel") * F.col("_mrn")))
-            )
-            .alias("bpref"),
-        )
-        .orderBy("term")
-    )
-
-
-SQL_BPREF_EVAL = f"""WITH {_BM25_CORE_SQL},
-top AS (
-  SELECT term, doc_id, rank,
-         CASE WHEN ((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 >= 2
-              THEN 1 ELSE 0 END AS rel
-  FROM (
-    SELECT term, doc_id, row_number() OVER (
-      PARTITION BY term ORDER BY round(score, 4) DESC, doc_id ASC) AS rank
-    FROM scored WHERE term IN ('merge', 'join', 'scan'))
-  WHERE rank <= {_NDCG_K}
-),
-pool AS (
-  SELECT term, rank, rel,
-         rank - sum(rel) OVER (PARTITION BY term ORDER BY rank
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS nonrel_above,
-         sum(rel) OVER (PARTITION BY term) AS r_tot,
-         count(*) OVER (PARTITION BY term)
-           - sum(rel) OVER (PARTITION BY term) AS n_tot,
-         least(sum(rel) OVER (PARTITION BY term),
-               count(*) OVER (PARTITION BY term)
-                 - sum(rel) OVER (PARTITION BY term)) AS mrn
-  FROM top
-)
-SELECT term,
-       CAST(max(r_tot) AS BIGINT) AS n_rel,
-       CAST(max(n_tot) AS BIGINT) AS n_nonrel,
-       CASE WHEN max(r_tot) = 0 THEN 0.0
-            WHEN max(mrn) = 0 THEN 1.0
-            ELSE round(CAST(sum(rel * (mrn - least(nonrel_above, mrn)))
-                            AS DOUBLE)
-                       / (max(r_tot) * max(mrn)), 4) END AS bpref
-FROM pool GROUP BY term ORDER BY term"""
-
-
-# ---------------------------------------------------------------------------
-# bow-tie decomposition of the link graph (Broder et al., WWW 2000)
-# ---------------------------------------------------------------------------
-
-_BT_ITERS = 8    # K-hop reachability horizon (both directions)
-
-
-def q_bowtie_structure(spark, sf_dir):
-    """Bow-tie decomposition (Broder et al., "Graph structure in the
-    web", WWW 2000) of the link graph, truncated at a _BT_ITERS-hop
-    horizon: from the seed (the max-in-degree node, ties -> smallest
-    id — a deterministic proxy for "a node in the giant SCC"), nodes
-    reachable FORWARD and BACKWARD within K hops form the 'scc' core,
-    backward-only is 'in', forward-only is 'out', and the rest is
-    'other' (tendrils + disconnected, which full Broder separates via
-    weak connectivity).  The K-hop truncation is what makes the result
-    a fixed dataflow both engines compute identically; at web scale
-    the same plan iterates to fixpoint with a convergence check
-    (new-frontier count = 0), K ~ log(diameter) rounds on a web graph.
-
-    Scale shape: each hop is one co-partitioned join of the frontier
-    set against the edge list plus a distinct keyed by node id — the
-    Pregel shape q_pagerank/q_bfs_hops use; the classification is two
-    left-semi flags and a 4-row aggregate.
-    """
-    with_n, edges = _link_edges(spark, sf_dir)
-    nodes = with_n.select("id")
-    ind = edges.groupBy("dst").agg(F.count("*").alias("cnt"))
-    seed1 = ind.agg(
-        F.max(F.struct(F.col("cnt"), (-F.col("dst")).alias("neg"))).alias("s")
-    ).select((-F.col("s.neg")).alias("seed_id"))
-    fwd = nodes.join(
-        F.broadcast(seed1), nodes["id"] == seed1["seed_id"]
-    ).select("id")
-    bwd = fwd
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    for _ in range(_BT_ITERS):
-        fwd = (
-            fwd.unionAll(
-                fwd.join(edges, fwd["id"] == edges["src"]).select(
-                    F.col("dst").alias("id")
-                )
-            )
-            .distinct()
-        )
-        bwd = (
-            bwd.unionAll(
-                bwd.join(rev, bwd["id"] == rev["src"]).select(
-                    F.col("dst").alias("id")
-                )
-            )
-            .distinct()
-        )
-    f_flag = fwd.select("id", F.lit(1).alias("f"))
-    b_flag = bwd.select("id", F.lit(1).alias("b"))
-    classed = (
-        nodes.join(f_flag, "id", "left")
-        .join(b_flag, "id", "left")
-        .select(
-            F.when(
-                F.col("f").isNotNull() & F.col("b").isNotNull(), F.lit("scc")
-            )
-            .when(F.col("b").isNotNull(), F.lit("in"))
-            .when(F.col("f").isNotNull(), F.lit("out"))
-            .otherwise(F.lit("other"))
-            .alias("component"),
-        )
-    )
-    counted = classed.groupBy("component").agg(
-        F.count("*").cast("long").alias("n_nodes")
-    )
-    total = counted.agg(F.sum("n_nodes").alias("_tot"))
-    return (
-        counted.crossJoin(F.broadcast(total))
-        .select(
-            "component", "n_nodes",
-            _r4(F.col("n_nodes") / F.col("_tot")).alias("pct"),
-        )
-        .orderBy("component")
-    )
-
-
-def _bowtie_sql() -> str:
-    # Each f{t}/b{t} is referenced twice by the next round (and f/b{K}
-    # twice more by the classifier), so they are declared MATERIALIZED —
-    # DuckDB otherwise INLINES multi-referenced CTEs and the unrolled
-    # chain re-evaluates exponentially (2^K scans of the edge list).
-    parts = [f"""WITH {_edges_sql()},
-ind AS (SELECT dst, count(*) AS cnt FROM edges GROUP BY dst),
-seed AS (SELECT dst AS id FROM ind ORDER BY cnt DESC, dst ASC LIMIT 1),
-f0 AS (SELECT id FROM seed),
-b0 AS (SELECT id FROM seed)"""]
-    for t in range(1, _BT_ITERS + 1):
-        parts.append(
-            f""",
-f{t} AS MATERIALIZED (
-  SELECT id FROM f{t - 1}
-  UNION
-  SELECT e.dst AS id FROM f{t - 1} f JOIN edges e ON f.id = e.src
-),
-b{t} AS MATERIALIZED (
-  SELECT id FROM b{t - 1}
-  UNION
-  SELECT e.src AS id FROM b{t - 1} b JOIN edges e ON b.id = e.dst
-)"""
-        )
-    parts.append(
-        f""",
-classed AS (
-  SELECT CASE
-    WHEN EXISTS (SELECT 1 FROM f{_BT_ITERS} f WHERE f.id = nodes.id)
-     AND EXISTS (SELECT 1 FROM b{_BT_ITERS} b WHERE b.id = nodes.id)
-      THEN 'scc'
-    WHEN EXISTS (SELECT 1 FROM b{_BT_ITERS} b WHERE b.id = nodes.id)
-      THEN 'in'
-    WHEN EXISTS (SELECT 1 FROM f{_BT_ITERS} f WHERE f.id = nodes.id)
-      THEN 'out'
-    ELSE 'other' END AS component
-  FROM nodes
-),
-counted AS (
-  SELECT component, CAST(count(*) AS BIGINT) AS n_nodes
-  FROM classed GROUP BY component
-)
-SELECT component, n_nodes,
-       round(CAST(n_nodes AS DOUBLE) / (SELECT sum(n_nodes) FROM counted),
-             4) AS pct
-FROM counted ORDER BY component"""
-    )
-    return "".join(parts)
-
-
-SQL_BOWTIE_STRUCTURE = _bowtie_sql()
-
-
-# ---------------------------------------------------------------------------
-# Rank-biased precision (Moffat & Zobel, TOIS 2008)
-# ---------------------------------------------------------------------------
-
-_RBP_K = 10          # evaluation depth (same pool as ndcg/bpref)
-_RBP_PN, _RBP_PD = 4, 5   # persistence p = 4/5 = 0.8 as an exact rational
-
-
-def q_rbp_eval(spark, sf_dir):
-    """Rank-biased precision (Moffat & Zobel, TOIS 2008) of the BM25
-    top-K pool per query, with the residual that bounds what deeper
-    judging could add: RBP = (1-p)·Σ_i rel_i·p^(i-1), residual = p^K
-    (every rank ≤ K is judged here, so the residual is exactly the
-    truncation tail).  p = 0.8, the paper's recommended persistence for
-    web-style browsing; binary relevance from the same deterministic
-    synthetic judgments bpref/mrr use (grade ≥ 2 → relevant).
-
-    Determinism: p is the rational 4/5, so every term rel_i·p^(i-1) is
-    rel_i·4^(i-1)/5^(i-1); scaling by 5^(K-1) makes the sum a pure
-    INTEGER numerator Σ rel_i·4^(i-1)·5^(K-i) (< 10·5^9, safely int64;
-    the 4^a·5^b products are also exact in the double pow both engines
-    evaluate before the bigint cast).  One final division yields RBP —
-    no float accumulation at all.  Scale shape: identical to bpref —
-    per-query rank windows over the term-pruned _scored plan, then a
-    |queries|-row aggregate.
-
-    Reference parity: the reference ranks but never evaluates
-    (`engine/csolver/ranker.cpp` has no metric code); this extends R8's
-    top-k surface with the standard offline-measurement operator.
-    """
-    from pyspark.sql import Window
-
-    p = _RBP_PN / _RBP_PD
-    scale = _RBP_PD ** (_RBP_K - 1)
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(F.col("term").isin(_NDCG_QS))
-    w = Window.partitionBy("term").orderBy(
-        F.round("score", 4).desc(), F.col("doc_id").asc()
-    )
-    top = (
-        s.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _RBP_K)
-        .withColumn(
-            "rel",
-            F.when(
-                F.pmod(
-                    (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761),
-                    F.lit(4),
-                )
-                >= 2,
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "w",
-            (
-                F.pow(F.lit(float(_RBP_PN)), F.col("rank") - 1)
-                * F.pow(F.lit(float(_RBP_PD)), F.lit(_RBP_K) - F.col("rank"))
-            ).cast("long"),
-        )
-    )
-    return (
-        top.groupBy("term")
-        .agg(
-            F.sum("rel").cast("long").alias("n_rel"),
-            F.sum(F.col("rel") * F.col("w")).alias("_num"),
-        )
-        .select(
-            "term", "n_rel",
-            _r4(
-                F.lit(1.0 - p) * F.col("_num") / F.lit(float(scale))
-            ).alias("rbp"),
-            F.round(F.lit(p ** _RBP_K), 4).alias("residual"),
-        )
-        .orderBy("term")
-    )
-
-
-SQL_RBP_EVAL = f"""WITH {_BM25_CORE_SQL},
-top AS (
-  SELECT term, rank,
-         CASE WHEN ((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 >= 2
-              THEN 1 ELSE 0 END AS rel,
-         CAST(pow({_RBP_PN}, rank - 1) * pow({_RBP_PD}, {_RBP_K} - rank)
-              AS BIGINT) AS w
-  FROM (
-    SELECT term, doc_id, row_number() OVER (
-      PARTITION BY term ORDER BY round(score, 4) DESC, doc_id ASC) AS rank
-    FROM scored WHERE term IN ('merge', 'join', 'scan'))
-  WHERE rank <= {_RBP_K}
-)
-SELECT term, CAST(sum(rel) AS BIGINT) AS n_rel,
-       round({1.0 - _RBP_PN / _RBP_PD} * sum(rel * w)
-             / {float(_RBP_PD ** (_RBP_K - 1))}, 4) AS rbp,
-       round({(_RBP_PN / _RBP_PD) ** _RBP_K}, 4) AS residual
-FROM top GROUP BY term ORDER BY term"""
-
-
-# ---------------------------------------------------------------------------
-# NQC post-retrieval query-performance prediction (Shtok et al. 2012)
-# ---------------------------------------------------------------------------
-
-_NQC_K = 10
-
-
-def q_nqc_qpp(spark, sf_dir):
-    """NQC — Normalized Query Commitment (Shtok, Kurland, Carmel &
-    Raiber, TOIS 2012), the post-retrieval QPP that reads the SPREAD of
-    the top-k scores where WIG reads their level: nqc =
-    stddev_pop(top-k scores) / mean(all candidate scores).  A peaked
-    head (high variance) predicts an effective query; a flat head says
-    the ranking failed to commit.  Same |q|=1 seeds as wig_qpp so the
-    two predictors are directly comparable per query.
-
-    Determinism: scores are rounded to 4 decimals then scaled to
-    INTEGERS (×10^4); Σs and Σs² over k=10 and the candidate-mean's Σ
-    are integer-exact, so nqc = n·sqrt(k·Σs² − (Σs)²) / (k·Σall) is
-    computed from identical integers in both engines with one sqrt and
-    one division at the very end.  Scale shape: only |seeds| posting
-    lists are scored; per-seed sums are map-side-combinable; the top-k
-    spread reads k rows from a rank window per seed.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _IL_SEEDS).select(
-        F.col("term").alias("seed"), "doc_id",
-        F.round(F.round("score", 4) * 10000).cast("long").alias("s4"),
-    )
-    w = Window.partitionBy("seed").orderBy(
-        F.col("s4").desc(), F.col("doc_id").asc()
-    )
-    ranked = s.withColumn("_r", F.row_number().over(w))
-    alls = ranked.groupBy("seed").agg(
-        F.count("*").cast("long").alias("n_cand"),
-        F.sum("s4").alias("_sa"),
-    )
-    tops = (
-        ranked.filter(F.col("_r") <= _NQC_K)
-        .groupBy("seed")
-        .agg(
-            F.count("*").cast("long").alias("_k"),
-            F.sum("s4").alias("_s1"),
-            F.sum(F.col("s4") * F.col("s4")).alias("_s2"),
-        )
-    )
-    return (
-        alls.join(tops, "seed")
-        .select(
-            "seed", "n_cand",
-            _r4(
-                F.sqrt(
-                    (F.col("_k") * F.col("_s2") - F.col("_s1") * F.col("_s1"))
-                    .cast("double")
-                )
-                * F.col("n_cand")
-                / (F.col("_k") * F.col("_sa"))
-            ).alias("nqc"),
-            _r4(F.col("_s1") / (F.col("_k") * 10000.0)).alias("mean_top"),
-        )
-        .orderBy("seed")
-    )
-
-
-SQL_NQC_QPP = f"""WITH {_BM25_CORE_SQL},
-ranked AS (
-  SELECT term AS seed, doc_id,
-         CAST(round(round(score, 4) * 10000) AS BIGINT) AS s4,
-         row_number() OVER (PARTITION BY term
-           ORDER BY CAST(round(round(score, 4) * 10000) AS BIGINT) DESC,
-                    doc_id ASC) AS r
-  FROM scored
-  WHERE term IN ('data', 'join', 'merge', 'query', 'spark')
-),
-alls AS (SELECT seed, CAST(count(*) AS BIGINT) AS n_cand, sum(s4) AS sa
-         FROM ranked GROUP BY seed),
-tops AS (SELECT seed, CAST(count(*) AS BIGINT) AS k, sum(s4) AS s1,
-                sum(s4 * s4) AS s2
-         FROM ranked WHERE r <= {_NQC_K} GROUP BY seed)
-SELECT a.seed, a.n_cand,
-       round(sqrt(CAST(t.k * t.s2 - t.s1 * t.s1 AS DOUBLE)) * a.n_cand
-             / (t.k * a.sa), 4) AS nqc,
-       round(t.s1 / (t.k * 10000.0), 4) AS mean_top
-FROM alls a JOIN tops t ON a.seed = t.seed ORDER BY a.seed"""
-
-
-# ---------------------------------------------------------------------------
-# Co-citation + bibliographic coupling (Small 1973; Kessler 1963)
-# ---------------------------------------------------------------------------
-
-_COCITE_TOPK = 20
-
-
-def q_cocitation(spark, sf_dir):
-    """Co-citation (Small 1973) and bibliographic coupling (Kessler
-    1963) over the link graph — the two classic second-order link
-    similarities: pages cited TOGETHER are related (co-citation joins
-    on the citing page), pages citing the SAME targets are related
-    (coupling joins on the cited page).  Top-_COCITE_TOPK unordered
-    pairs by combined evidence, with both counts.
-
-    Determinism: pure integer self-joins and counts.  Scale shape: each
-    self-join keys on one endpoint, so cost is Σ deg² per key — bounded
-    here by the arithmetic graph's O(1) out-degree; on a real web graph
-    the standard guard is capping per-key degree before the self-join
-    (drop hubs above ~10³, exactly the adamic_adar/hot-cell pattern
-    used elsewhere in this catalog).  The pair aggregate is map-side
-    combinable; the cut is a distributed TakeOrdered, never a global
-    sort.
-
-    Reference parity: the reference's LinkEmitter side output
-    (`engine/parser/Parser.cpp` link frames) is the input this operator
-    mines; the reference itself never analyses its link graph.
-    """
-    _, edges = _link_edges(spark, sf_dir)
-    e1, e2 = edges.alias("e1"), edges.alias("e2")
-    cocite = (
-        e1.join(e2, F.col("e1.src") == F.col("e2.src"))
-        .filter(F.col("e1.dst") < F.col("e2.dst"))
-        .groupBy(
-            F.col("e1.dst").alias("a"), F.col("e2.dst").alias("b")
-        )
-        .agg(F.count("*").cast("long").alias("cocite"))
-    )
-    couple = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.dst"))
-        .filter(F.col("e1.src") < F.col("e2.src"))
-        .groupBy(
-            F.col("e1.src").alias("a"), F.col("e2.src").alias("b")
-        )
-        .agg(F.count("*").cast("long").alias("coupling"))
-    )
-    return (
-        cocite.join(couple, ["a", "b"], "full_outer")
-        .select(
-            "a", "b",
-            F.coalesce("cocite", F.lit(0)).cast("long").alias("cocite"),
-            F.coalesce("coupling", F.lit(0)).cast("long").alias("coupling"),
-        )
-        .withColumn("combined", F.col("cocite") + F.col("coupling"))
-        .orderBy(
-            F.col("combined").desc(), F.col("a").asc(), F.col("b").asc()
-        )
-        .limit(_COCITE_TOPK)
-    )
-
-
-SQL_COCITATION = f"""WITH {_edges_sql()},
-cocite AS (
-  SELECT e1.dst AS a, e2.dst AS b, count(*) AS cocite
-  FROM edges e1 JOIN edges e2 ON e1.src = e2.src AND e1.dst < e2.dst
-  GROUP BY e1.dst, e2.dst
-),
-couple AS (
-  SELECT e1.src AS a, e2.src AS b, count(*) AS coupling
-  FROM edges e1 JOIN edges e2 ON e1.dst = e2.dst AND e1.src < e2.src
-  GROUP BY e1.src, e2.src
-)
-SELECT coalesce(c.a, p.a) AS a, coalesce(c.b, p.b) AS b,
-       CAST(coalesce(c.cocite, 0) AS BIGINT) AS cocite,
-       CAST(coalesce(p.coupling, 0) AS BIGINT) AS coupling,
-       CAST(coalesce(c.cocite, 0) + coalesce(p.coupling, 0) AS BIGINT)
-         AS combined
-FROM cocite c FULL OUTER JOIN couple p ON c.a = p.a AND c.b = p.b
-ORDER BY combined DESC, a ASC, b ASC LIMIT {_COCITE_TOPK}"""
-
-
-# ---------------------------------------------------------------------------
-# Elias–Fano index-size model (Vigna, WSDM 2013 quasi-succinct indices)
-# ---------------------------------------------------------------------------
-
-
-def q_elias_fano_cost(spark, sf_dir):
-    """Elias–Fano posting-list size model (Vigna, "Quasi-succinct
-    indices", WSDM 2013 — the docid codec in PISA/modern engines),
-    rolled up by posting_histogram's power-of-two df buckets: a list of
-    n docids over universe U costs n·l lower bits + (n + (U >> l))
-    upper-bits unary, with l = max(0, ⌊log2(U/n)⌋) — within half a bit
-    of the information-theoretic minimum REGARDLESS of gap layout,
-    which is why it needs no gap window at all (contrast codec_cost,
-    whose varbyte/gamma totals depend on the actual gaps).  Output per
-    bucket: list count, postings, EF bits, and bits/posting — the
-    companion measurement to codec_cost for the A2 codec choice.
-
-    Determinism: l is computed as bitlen(U div n) − 1 via the same
-    length(bin(x)) string arithmetic codec_cost uses (⌊log2⌋ of the
-    integer quotient equals ⌊log2⌋ of the real quotient for quotients
-    ≥ 1, so no floating log on power-of-two boundaries); shifts are
-    exact double pow/floor below 2^53.  Scale shape: one pass over the
-    term_df aggregate (no positional data touched), a 1-row broadcast
-    for U, then a ≤64-row map-side-combinable rollup.
-    """
-    tf = _tf(spark, sf_dir)
-    df = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    u = _dl(spark, sf_dir).agg(F.count("*").cast("long").alias("u"))
-    bitlen = lambda c: F.length(F.bin(c))  # noqa: E731
-    lists = (
-        df.crossJoin(F.broadcast(u))
-        .withColumn("_q", F.floor(F.col("u") / F.col("df")).cast("long"))
-        .withColumn("l", (bitlen(F.col("_q")) - 1).cast("long"))
-        .withColumn(
-            "_hi",
-            F.floor(
-                F.col("u") / F.pow(F.lit(2.0), F.col("l"))
-            ).cast("long"),
-        )
-        .withColumn(
-            "ef_bits", F.col("df") * F.col("l") + F.col("df") + F.col("_hi")
-        )
-        .withColumn("bucket", (bitlen(F.col("df")) - 1).cast("long"))
-    )
-    return (
-        lists.groupBy("bucket")
-        .agg(
-            F.count("*").cast("long").alias("n_lists"),
-            F.sum("df").cast("long").alias("postings"),
-            F.sum("ef_bits").cast("long").alias("ef_bits"),
-        )
-        .withColumn(
-            "bits_per_posting", _r4(F.col("ef_bits") / F.col("postings"))
-        )
-        .orderBy("bucket")
-    )
-
-
-SQL_ELIAS_FANO_COST = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id, count(*) AS tf FROM toks GROUP BY term, doc_id),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-u AS (SELECT count(DISTINCT doc_id) AS u FROM toks),
-lists AS (
-  SELECT df.df,
-         length(bin(CAST(df.u1 // df.df AS BIGINT))) - 1 AS l,
-         df.u1,
-         length(bin(CAST(df.df AS BIGINT))) - 1 AS bucket
-  FROM (SELECT df.term, df.df, u.u AS u1 FROM df CROSS JOIN u) df
-),
-sized AS (
-  SELECT bucket, df,
-         df * l + df + CAST(floor(u1 / pow(2, l)) AS BIGINT) AS ef_bits
-  FROM lists
-)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n_lists,
-       CAST(sum(df) AS BIGINT) AS postings,
-       CAST(sum(ef_bits) AS BIGINT) AS ef_bits,
-       round(CAST(sum(ef_bits) AS DOUBLE) / sum(df), 4) AS bits_per_posting
-FROM sized GROUP BY bucket ORDER BY bucket"""
-
-
-# ---------------------------------------------------------------------------
-# Spam mass (Gyöngyi, Berkhin, Garcia-Molina & Pedersen, VLDB 2006)
-# ---------------------------------------------------------------------------
-
-
-def q_spam_mass(spark, sf_dir):
-    """Relative spam mass (Gyöngyi et al., "Link spam detection based on
-    mass estimation", VLDB 2006): the fraction of a page's PageRank NOT
-    accounted for by trusted sources, m(p) = (PR(p) − PR_trust(p)) /
-    PR(p), where PR_trust is the TrustRank vector (teleport restricted
-    to the seed set).  Pages whose rank comes mostly from outside the
-    trust neighbourhood are the link-spam suspects TrustRank alone only
-    implicitly demotes — spam mass makes the signal explicit and
-    thresholdable.  Output: every node with pr, tr, and spam_mass.
-
-    Determinism: both vectors are the already-hash-green pagerank /
-    trustrank iterations; the ratio is taken over the 8-decimal ROUNDED
-    vectors so both engines divide identical doubles (pr > 0 always via
-    the teleport term).  Scale shape: two Pregel-shaped iterate plans
-    over the same co-partitioned edge table plus one final co-keyed
-    join — nothing beyond what pagerank and trustrank already shuffle.
-    """
-    pr = q_pagerank(spark, sf_dir)
-    tr = q_trustrank(spark, sf_dir)
-    return (
-        pr.join(tr, "doc_id")
-        .select(
-            "doc_id", "pr", "tr",
-            _r4((F.col("pr") - F.col("tr")) / F.col("pr")).alias("spam_mass"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _spam_mass_sql() -> str:
-    """Unroll both power iterations in one WITH: pagerank's r*/c* chain
-    and trustrank's s*/d* chain share the nodes/nn/edges/deg CTEs."""
-    rules = ", ".join(f"({m}, {b})" for m, b in _PR_RULES)
-    parts = [
-        f"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT count(*) AS n FROM nodes),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
-    FROM nodes CROSS JOIN nn
-    CROSS JOIN (VALUES {rules}) AS rules(m, b)
-  ) WHERE src <> dst
-),
-deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-e AS (SELECT edges.src, edges.dst, deg.deg FROM edges JOIN deg USING (src)),
-r0 AS (SELECT id, CAST(1 AS DOUBLE) / nn.n AS r FROM nodes CROSS JOIN nn),
-seeds AS (
-  SELECT id, CASE WHEN id % {_BFS_SEED_MOD} = 0
-                  THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END AS t
-  FROM nodes
-),
-ns AS (SELECT sum(t) AS ns FROM seeds),
-base AS (SELECT id, t / ns.ns AS tele FROM seeds CROSS JOIN ns),
-s0 AS (SELECT id, tele, tele AS r FROM base)"""
-    ]
-    for t in range(1, _PR_ITERS + 1):
-        parts.append(
-            f""",
-c{t} AS (SELECT e.dst AS id, sum(r.r / e.deg) AS c
-         FROM r{t - 1} r JOIN e ON r.id = e.src GROUP BY e.dst),
-r{t} AS (SELECT nodes.id,
-                CAST({1.0 - _PR_DAMP} AS DOUBLE) / nn.n
-                + CAST({_PR_DAMP} AS DOUBLE) * coalesce(c{t}.c, 0) AS r
-         FROM nodes CROSS JOIN nn LEFT JOIN c{t} ON nodes.id = c{t}.id),
-d{t} AS (SELECT e.dst AS id, sum(s.r / e.deg) AS c
-         FROM s{t - 1} s JOIN e ON s.id = e.src GROUP BY e.dst),
-s{t} AS (SELECT base.id, base.tele,
-                CAST({1.0 - _PR_DAMP} AS DOUBLE) * base.tele
-                + CAST({_PR_DAMP} AS DOUBLE) * coalesce(d{t}.c, 0) AS r
-         FROM base LEFT JOIN d{t} ON base.id = d{t}.id)"""
-        )
-    parts.append(
-        f"""
-SELECT p.id AS doc_id, round(p.r, 8) AS pr, round(s.r, 8) AS tr,
-       round((round(p.r, 8) - round(s.r, 8)) / round(p.r, 8), 4)
-         AS spam_mass
-FROM r{_PR_ITERS} p JOIN s{_PR_ITERS} s ON p.id = s.id
-ORDER BY doc_id"""
-    )
-    return "".join(parts)
-
-
-SQL_SPAM_MASS = _spam_mass_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -14691,7 +5536,6 @@ GROUP BY 1 ORDER BY bucket"""
 
 _GOPHER_MIN_WORDS, _GOPHER_MAX_WORDS = 25, 100_000
 _GOPHER_MIN_MWL, _GOPHER_MAX_MWL = 3.0, 10.0
-_GOPHER_ALPHA_FRAC = 0.8
 _GOPHER_MIN_STOPS = 2
 
 
@@ -14765,699 +5609,6 @@ rules AS (
 SELECT doc_id, n_words, ok_words, ok_mean_len, ok_alpha, ok_stops,
        (ok_words AND ok_mean_len AND ok_alpha AND ok_stops) AS keep
 FROM rules ORDER BY doc_id"""
-
-
-# ---------------------------------------------------------------------------
-# Filtered vector search: post-filter oversampling recall
-# ---------------------------------------------------------------------------
-
-_FANN_LABEL = 3
-_FANN_K = 10
-_FANN_OVERSAMPLE = (1, 2, 4, 8, 16)
-
-
-def q_filtered_ann(spark, sf_dir):
-    """Filtered vector search — top-k under a metadata predicate
-    (label = {lbl}), the shape every vector store must serve ("ANN
-    with filters").  The baseline strategy is POST-FILTERING an
-    oversampled unfiltered top-(m·k): cheap (reuses the unfiltered
-    index) but recall degrades with predicate selectivity.  This entry
-    measures exactly that: for each oversample factor m, recall@k of
-    post-filter-from-top-(m·k) against the exact predicate-constrained
-    top-k — the curve that tells a serving stack when post-filtering
-    stops being good enough and pre-filtered scan (or per-label IVF
-    routing) must take over.
-
-    Determinism: ranks on 4-decimal rounded cosine with vec_id
-    tiebreaks everywhere; recall is an integer overlap with one final
-    /k.  Scale shape: one scored scan feeds both rank windows; the m
-    sweep joins the (m·k)-row global heads against the k-row exact head
-    — all broadcast-sized; the only real work is the one distributed
-    cosine scan, shared by every m.
-    """.format(lbl=_FANN_LABEL)
-    from pyspark.sql import Window
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("e").alias("qv"))
-    dot = F.aggregate(
-        F.zip_with("e", "qv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    scored = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", "label",
-            _r4(dot / (nrm("e") * nrm("qv"))).alias("cos"),
-        )
-    )
-    wg = Window.orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    ranked = scored.withColumn("grank", F.row_number().over(wg))
-    wf = Window.partitionBy(F.lit(1)).orderBy(
-        F.col("cos").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        scored.filter(F.col("label") == _FANN_LABEL)
-        .withColumn("frank", F.row_number().over(wf))
-        .filter(F.col("frank") <= _FANN_K)
-        .select("vec_id")
-    )
-    ms = spark.createDataFrame(
-        [(m,) for m in _FANN_OVERSAMPLE], "m long"
-    )
-    post = (
-        ranked.filter(F.col("label") == _FANN_LABEL)
-        .crossJoin(F.broadcast(ms))
-        .filter(F.col("grank") <= F.col("m") * _FANN_K)
-    )
-    wm = Window.partitionBy("m").orderBy("grank")
-    kept = post.withColumn("_r", F.row_number().over(wm)).filter(
-        F.col("_r") <= _FANN_K
-    )
-    hits = (
-        kept.join(F.broadcast(exact), "vec_id")
-        .groupBy("m")
-        .agg(F.count("*").cast("long").alias("n_hits"))
-    )
-    found = kept.groupBy("m").agg(
-        F.count("*").cast("long").alias("n_post")
-    )
-    return (
-        ms.join(found, "m", "left")
-        .join(hits, "m", "left")
-        .select(
-            "m",
-            F.coalesce("n_post", F.lit(0)).cast("long").alias("n_post"),
-            _r4(
-                F.coalesce("n_hits", F.lit(0)) / F.lit(float(_FANN_K))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("m")
-    )
-
-
-SQL_FILTERED_ANN = f"""WITH emb AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
-), q AS (SELECT e AS qv FROM emb WHERE vec_id = 0),
-scored AS (
-  SELECT emb.vec_id, emb.label,
-         round(list_dot_product(emb.e, q.qv)
-               / (sqrt(list_dot_product(emb.e, emb.e))
-                  * sqrt(list_dot_product(q.qv, q.qv))), 4) AS cos
-  FROM emb CROSS JOIN q WHERE emb.vec_id <> 0
-),
-ranked AS (
-  SELECT vec_id, label, cos,
-         row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS grank
-  FROM scored
-),
-exact AS (
-  SELECT vec_id FROM (
-    SELECT vec_id, row_number() OVER (ORDER BY cos DESC, vec_id ASC) AS r
-    FROM scored WHERE label = {_FANN_LABEL}) WHERE r <= {_FANN_K}
-),
-ms AS (SELECT * FROM (VALUES {", ".join(f"({m})" for m in _FANN_OVERSAMPLE)}) AS t(m)),
-kept AS (
-  SELECT m, vec_id FROM (
-    SELECT ms.m, r.vec_id,
-           row_number() OVER (PARTITION BY ms.m ORDER BY r.grank) AS rr
-    FROM ranked r CROSS JOIN ms
-    WHERE r.label = {_FANN_LABEL} AND r.grank <= ms.m * {_FANN_K})
-  WHERE rr <= {_FANN_K}
-),
-found AS (SELECT m, count(*) AS n_post FROM kept GROUP BY m),
-hits AS (SELECT k.m, count(*) AS n_hits
-         FROM kept k JOIN exact e ON k.vec_id = e.vec_id GROUP BY k.m)
-SELECT ms.m AS m,
-       CAST(coalesce(found.n_post, 0) AS BIGINT) AS n_post,
-       round(coalesce(hits.n_hits, 0) / {float(_FANN_K)}, 4) AS recall_at_k
-FROM ms LEFT JOIN found ON ms.m = found.m
-LEFT JOIN hits ON ms.m = hits.m
-ORDER BY m"""
-
-
-# ---------------------------------------------------------------------------
-# Truncated harmonic centrality (Boldi & Vigna, Internet Math. 2014)
-# ---------------------------------------------------------------------------
-
-_HC_ITERS = 6    # hop horizon; every 1/d with d ≤ 6 divides 60 exactly
-
-
-def q_harmonic_centrality(spark, sf_dir):
-    """Harmonic centrality (Boldi & Vigna, "Axioms for centrality",
-    Internet Mathematics 2014 — the centrality they show satisfies all
-    three axioms, unlike closeness/betweenness) of the _BFS_SEED_MOD
-    seed sample, truncated at a _HC_ITERS-hop horizon: H(v) =
-    Σ_{{u: d(u,v) ≤ K}} 1/d(u,v), computed by a K-round BACKWARD
-    multi-source BFS (who can reach the seed, at what distance).
-
-    Determinism: distances are integers ≤ 6, and every 1/d with d ≤ 6
-    divides 1/60 evenly — so the sum is the INTEGER Σ (60/d) with one
-    final /60, no float accumulation (the same exact-rational trick as
-    rbp_eval).  Scale shape: Pregel-shaped frontier joins keyed on the
-    edge endpoint — identical to bfs_hops/bowtie — with the per-round
-    min-dist dedup as a map-side-combinable (seed, node) aggregate;
-    |seeds| stays O(N/_BFS_SEED_MOD), so state is bounded.
-    """
-    _, edges = _link_edges(spark, sf_dir)
-    seeds = (
-        _docs(spark, sf_dir)
-        .select(F.col("doc_id").alias("seed"))
-        .filter(F.col("seed") % _BFS_SEED_MOD == 0)
-    )
-    reached = seeds.select(
-        "seed", F.col("seed").alias("id"), F.lit(0).alias("dist")
-    )
-    for t in range(1, _HC_ITERS + 1):
-        cand = (
-            reached.join(edges, reached["id"] == edges["dst"])
-            .select("seed", F.col("src").alias("id"), F.lit(t).alias("dist"))
-        )
-        reached = (
-            reached.unionByName(cand)
-            .groupBy("seed", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-    return (
-        reached.filter(F.col("dist") > 0)
-        .groupBy("seed")
-        .agg(
-            F.count("*").cast("long").alias("n_reached"),
-            F.sum((F.lit(60) / F.col("dist")).cast("long")).alias("_h60"),
-        )
-        .select(
-            "seed", "n_reached",
-            _r4(F.col("_h60") / F.lit(60.0)).alias("harmonic"),
-        )
-        .orderBy("seed")
-    )
-
-
-def _harmonic_sql() -> str:
-    parts = [f"""WITH {_edges_sql()},
-r0 AS (
-  SELECT doc_id AS seed, doc_id AS id, 0 AS dist FROM documents
-  WHERE doc_id % {_BFS_SEED_MOD} = 0
-)"""]
-    for t in range(1, _HC_ITERS + 1):
-        parts.append(
-            f""",
-r{t} AS MATERIALIZED (
-  SELECT seed, id, min(dist) AS dist FROM (
-    SELECT seed, id, dist FROM r{t - 1}
-    UNION ALL
-    SELECT r.seed, e.src AS id, {t} AS dist
-    FROM r{t - 1} r JOIN edges e ON r.id = e.dst
-  ) GROUP BY seed, id
-)"""
-        )
-    parts.append(
-        f"""
-SELECT seed, CAST(count(*) AS BIGINT) AS n_reached,
-       round(sum(60 // dist) / 60.0, 4) AS harmonic
-FROM r{_HC_ITERS} WHERE dist > 0
-GROUP BY seed ORDER BY seed"""
-    )
-    return "".join(parts)
-
-
-SQL_HARMONIC_CENTRALITY = _harmonic_sql()
-
-
-# ---------------------------------------------------------------------------
-# Precision/recall@k (the Cranfield basics, trec_eval's P_k / recall_k)
-# ---------------------------------------------------------------------------
-
-
-def q_prec_rec_at_k(spark, sf_dir):
-    """Set-based precision@5 / precision@10 / recall@10 of the BM25
-    ranking per query — trec_eval's P_5/P_10/recall_10 rows, the
-    Cranfield numbers every other metric in this catalog refines.
-    Relevance is the same deterministic binary judgment bpref/mrr use;
-    R_total counts relevant docs among ALL the query's candidates (the
-    full judgment set, not just the pool), so recall@10 is a real
-    recall.
-
-    Determinism: integer cut-off counts with one division per metric.
-    Scale shape: per-query rank windows over the term-pruned _scored
-    plan plus one unpooled per-query relevant-count aggregate — both
-    map-side-combinable; output is |queries| rows.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(F.col("term").isin(_NDCG_QS))
-    rel = F.when(
-        F.pmod(
-            (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761), F.lit(4)
-        )
-        >= 2,
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    w = Window.partitionBy("term").orderBy(
-        F.round("score", 4).desc(), F.col("doc_id").asc()
-    )
-    ranked = s.withColumn("rank", F.row_number().over(w)).withColumn(
-        "rel", rel
-    )
-    return (
-        ranked.groupBy("term")
-        .agg(
-            F.sum("rel").cast("long").alias("n_rel_total"),
-            F.sum(F.when(F.col("rank") <= 5, F.col("rel")).otherwise(0))
-            .cast("long").alias("_r5"),
-            F.sum(F.when(F.col("rank") <= 10, F.col("rel")).otherwise(0))
-            .cast("long").alias("_r10"),
-        )
-        .select(
-            "term", "n_rel_total",
-            _r4(F.col("_r5") / 5.0).alias("p_at_5"),
-            _r4(F.col("_r10") / 10.0).alias("p_at_10"),
-            _r4(F.col("_r10") / F.col("n_rel_total")).alias("recall_at_10"),
-        )
-        .orderBy("term")
-    )
-
-
-SQL_PREC_REC_AT_K = f"""WITH {_BM25_CORE_SQL},
-ranked AS (
-  SELECT term, doc_id,
-         row_number() OVER (PARTITION BY term
-           ORDER BY round(score, 4) DESC, doc_id ASC) AS rank,
-         CASE WHEN ((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 >= 2
-              THEN 1 ELSE 0 END AS rel
-  FROM scored WHERE term IN ('merge', 'join', 'scan')
-)
-SELECT term, CAST(sum(rel) AS BIGINT) AS n_rel_total,
-       round(sum(CASE WHEN rank <= 5 THEN rel ELSE 0 END) / 5.0, 4)
-         AS p_at_5,
-       round(sum(CASE WHEN rank <= 10 THEN rel ELSE 0 END) / 10.0, 4)
-         AS p_at_10,
-       round(CAST(sum(CASE WHEN rank <= 10 THEN rel ELSE 0 END) AS DOUBLE)
-             / sum(rel), 4) AS recall_at_10
-FROM ranked GROUP BY term ORDER BY term"""
-
-
-# ---------------------------------------------------------------------------
-# 11-point interpolated precision-recall curve (TREC / Salton)
-# ---------------------------------------------------------------------------
-
-_PR_LEVELS = tuple(i / 10 for i in range(11))
-
-
-def q_interp_pr_curve(spark, sf_dir):
-    """The classic 11-point interpolated precision-recall curve
-    (Salton's convention, reported by trec_eval as ircl_prn.0.00 …
-    1.00): at each recall level r ∈ {0.0, 0.1, …, 1.0}, the
-    interpolated precision max{P(i) : R(i) ≥ r} over the FULL ranking
-    (P(i) = relevant-in-top-i / i, R(i) = relevant-in-top-i / R).
-    Averaged over the query set — the curve behind every textbook PR
-    plot, and still the honest way to compare rankers at a chosen
-    operating recall.
-
-    Determinism: P(i) and R(i) are single divisions of integers, so
-    both engines hold identical doubles; max/avg over identical
-    doubles agree; one final round.  Scale shape: one cumulative-sum
-    rank window per query (the mrr/map shape), then an 11-row level
-    table joined BROADCAST against the per-rank points — the max-per
-    -level aggregate is map-side-combinable; output is 11 rows.
-    """
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(F.col("term").isin(_NDCG_QS))
-    rel = F.when(
-        F.pmod(
-            (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761), F.lit(4)
-        )
-        >= 2,
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    w = Window.partitionBy("term").orderBy(
-        F.round("score", 4).desc(), F.col("doc_id").asc()
-    )
-    cw = (
-        Window.partitionBy("term")
-        .orderBy("rank")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pw = Window.partitionBy("term")
-    pts = (
-        s.withColumn("rank", F.row_number().over(w))
-        .withColumn("rel", rel)
-        .withColumn("cum", F.sum("rel").over(cw))
-        .withColumn("rtot", F.sum("rel").over(pw))
-        .select(
-            "term",
-            (F.col("cum") / F.col("rank")).alias("p"),
-            (F.col("cum") / F.col("rtot")).alias("r"),
-        )
-    )
-    levels = spark.createDataFrame(
-        [(lv,) for lv in _PR_LEVELS], "level double"
-    )
-    per_q = (
-        pts.join(F.broadcast(levels), pts["r"] >= levels["level"])
-        .groupBy("term", "level")
-        .agg(F.max("p").alias("ip"))
-    )
-    return (
-        per_q.groupBy("level")
-        .agg(
-            F.count("*").cast("long").alias("n_queries"),
-            _r4(F.avg("ip")).alias("interp_prec"),
-        )
-        .orderBy("level")
-    )
-
-
-SQL_INTERP_PR_CURVE = f"""WITH {_BM25_CORE_SQL},
-pts AS (
-  SELECT term,
-         CAST(sum(rel) OVER cum AS DOUBLE) / rank AS p,
-         CAST(sum(rel) OVER cum AS DOUBLE)
-           / sum(rel) OVER (PARTITION BY term) AS r
-  FROM (
-    SELECT term, doc_id,
-           row_number() OVER (PARTITION BY term
-             ORDER BY round(score, 4) DESC, doc_id ASC) AS rank,
-           CASE WHEN ((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 >= 2
-                THEN 1 ELSE 0 END AS rel
-    FROM scored WHERE term IN ('merge', 'join', 'scan'))
-  WINDOW cum AS (PARTITION BY term ORDER BY rank
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-levels AS (SELECT * FROM (VALUES {", ".join(f"({lv})" for lv in _PR_LEVELS)}) AS t(level)),
-per_q AS (
-  SELECT term, level, max(p) AS ip
-  FROM pts JOIN levels ON pts.r >= levels.level
-  GROUP BY term, level
-)
-SELECT level, CAST(count(*) AS BIGINT) AS n_queries,
-       round(avg(ip), 4) AS interp_prec
-FROM per_q GROUP BY level ORDER BY level"""
-
-
-# ---------------------------------------------------------------------------
-# tau_AP top-weighted rank correlation (Yilmaz, Aslam & Robertson 2008)
-# ---------------------------------------------------------------------------
-
-_TAP_LCM = 2520   # lcm(1..9): every 1/(i-1) with i ≤ 10 divides it
-
-
-def q_tau_ap(spark, sf_dir):
-    """AP-correlation tau_ap (Yilmaz, Aslam & Robertson, SIGIR 2008) of
-    the same BM25 vs Dirichlet-QL top-10 pair kendall_tau and
-    rbo_overlap read — the THIRD agreement lens: tau treats all swaps
-    equally, RBO needs no conjointness, tau_ap is the probabilistic
-    middle ground that weights agreement at the TOP the way average
-    precision does: tau_ap = 2/(n-1)·Σ_{{i=2..n}} C(i)/(i-1) − 1, with
-    C(i) = how many of the i-1 docs ranked above position i in list B
-    are also above that doc in list A.  Common docs are re-ranked
-    densely 1..n in each list first (the truncated-list convention).
-
-    Determinism: C(i) is an integer pair count; Σ C(i)/(i-1) is scaled
-    by lcm(1..9) = {_TAP_LCM} into one INTEGER numerator, with a
-    single final division — the rbp/harmonic exact-rational trick.
-    Scale shape: corpus work lives in the two retrieval plans; the
-    concordance join is ≤ 45 pairs.  Output is 1 row.
-    """
-    from pyspark.sql import Window
-
-    pair = _rank_pair(spark, sf_dir)
-    pair = pair.withColumn(
-        "ri", F.row_number().over(Window.orderBy("ra"))
-    ).withColumn("si", F.row_number().over(Window.orderBy("rb")))
-    i = pair.select(
-        F.col("ri").alias("ri_i"), F.col("si").alias("si_i")
-    )
-    j = pair.select(
-        F.col("ri").alias("ri_j"), F.col("si").alias("si_j")
-    )
-    conc = (
-        i.crossJoin(j)
-        .filter(F.col("si_j") < F.col("si_i"))
-        .groupBy("si_i")
-        .agg(
-            F.sum(
-                F.when(F.col("ri_j") < F.col("ri_i"), 1).otherwise(0)
-            ).alias("c")
-        )
-    )
-    n1 = pair.agg(F.count("*").cast("long").alias("n"))
-    return (
-        conc.crossJoin(F.broadcast(n1))
-        .agg(
-            F.max("n").alias("_n"),
-            F.sum(
-                F.col("c") * (F.lit(_TAP_LCM) / (F.col("si_i") - 1))
-                .cast("long")
-            ).alias("_s"),
-        )
-        .select(
-            F.col("_n").alias("n_common"),
-            _r4(
-                F.lit(2.0) * F.col("_s")
-                / (F.lit(float(_TAP_LCM)) * (F.col("_n") - 1))
-                - 1.0
-            ).alias("tau_ap"),
-        )
-    )
-
-
-SQL_TAU_AP = f"""WITH {_RANK_PAIR_SQL},
-dense AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY ra) AS ri,
-         row_number() OVER (ORDER BY rb) AS si
-  FROM pair
-),
-conc AS (
-  SELECT i.si_i, sum(CASE WHEN j.ri_j < i.ri_i THEN 1 ELSE 0 END) AS c
-  FROM (SELECT ri AS ri_i, si AS si_i FROM dense) i
-  JOIN (SELECT ri AS ri_j, si AS si_j FROM dense) j
-    ON j.si_j < i.si_i
-  GROUP BY i.si_i
-),
-nn2 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM dense)
-SELECT nn2.n AS n_common,
-       round(2.0 * sum(c * ({_TAP_LCM} // (si_i - 1)))
-             / ({float(_TAP_LCM)} * (nn2.n - 1)) - 1.0, 4) AS tau_ap
-FROM conc CROSS JOIN nn2 GROUP BY nn2.n"""
-
-
-# ---------------------------------------------------------------------------
-# Hop plot / neighbourhood function (Palmer ANF, KDD 2002)
-# ---------------------------------------------------------------------------
-
-
-def q_hop_plot(spark, sf_dir):
-    """The hop plot / neighbourhood function N(h) (Palmer, Gibbons &
-    Faloutsos, "ANF", KDD 2002 — computed exactly here on the seed
-    sample instead of with Flajolet-Martin sketches): for each hop
-    count h ≤ _HC_ITERS, how many (node → seed) pairs are within h
-    hops, and the mean reachable-set size per seed — the curve whose
-    flattening point is the graph's effective diameter (Leskovec's
-    densification studies read growth off exactly this curve).
-
-    Determinism: pure integer BFS distances and counts with one final
-    division.  Scale shape: reuses harmonic_centrality's backward
-    multi-source BFS state (same Pregel joins); the rollup is a ≤ K-row
-    cumulative aggregate over integer hop labels.
-    """
-    _, edges = _link_edges(spark, sf_dir)
-    seeds = (
-        _docs(spark, sf_dir)
-        .select(F.col("doc_id").alias("seed"))
-        .filter(F.col("seed") % _BFS_SEED_MOD == 0)
-    )
-    reached = seeds.select(
-        "seed", F.col("seed").alias("id"), F.lit(0).alias("dist")
-    )
-    for t in range(1, _HC_ITERS + 1):
-        cand = (
-            reached.join(edges, reached["id"] == edges["dst"])
-            .select("seed", F.col("src").alias("id"), F.lit(t).alias("dist"))
-        )
-        reached = (
-            reached.unionByName(cand)
-            .groupBy("seed", "id")
-            .agg(F.min("dist").alias("dist"))
-        )
-    ns = seeds.agg(F.count("*").cast("long").alias("n_seeds"))
-    per_hop = (
-        reached.filter(F.col("dist") > 0)
-        .groupBy("dist")
-        .agg(F.count("*").cast("long").alias("n_new"))
-    )
-    from pyspark.sql import Window
-
-    cw = Window.orderBy("dist").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        per_hop.withColumn("n_pairs", F.sum("n_new").over(cw).cast("long"))
-        .crossJoin(F.broadcast(ns))
-        .select(
-            F.col("dist").alias("h"), "n_new", "n_pairs",
-            _r4(F.col("n_pairs") / F.col("n_seeds")).alias("mean_ball"),
-        )
-        .orderBy("h")
-    )
-
-
-def _hop_plot_sql() -> str:
-    parts = [f"""WITH {_edges_sql()},
-r0 AS (
-  SELECT doc_id AS seed, doc_id AS id, 0 AS dist FROM documents
-  WHERE doc_id % {_BFS_SEED_MOD} = 0
-)"""]
-    for t in range(1, _HC_ITERS + 1):
-        parts.append(
-            f""",
-r{t} AS MATERIALIZED (
-  SELECT seed, id, min(dist) AS dist FROM (
-    SELECT seed, id, dist FROM r{t - 1}
-    UNION ALL
-    SELECT r.seed, e.src AS id, {t} AS dist
-    FROM r{t - 1} r JOIN edges e ON r.id = e.dst
-  ) GROUP BY seed, id
-)"""
-        )
-    parts.append(
-        f""",
-nsd AS (SELECT CAST(count(*) AS BIGINT) AS n_seeds FROM r0),
-per_hop AS (
-  SELECT dist AS h, CAST(count(*) AS BIGINT) AS n_new
-  FROM r{_HC_ITERS} WHERE dist > 0 GROUP BY dist
-)
-SELECT h, n_new,
-       CAST(sum(n_new) OVER (ORDER BY h
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS n_pairs,
-       round(sum(n_new) OVER (ORDER BY h
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             / CAST(nsd.n_seeds AS DOUBLE), 4) AS mean_ball
-FROM per_hop CROSS JOIN nsd ORDER BY h"""
-    )
-    return "".join(parts)
-
-
-SQL_HOP_PLOT = _hop_plot_sql()
-
-
-# ---------------------------------------------------------------------------
-# Degree distribution histogram (Broder WWW 2000, figure 2's power law)
-# ---------------------------------------------------------------------------
-
-
-def q_degree_histogram(spark, sf_dir):
-    """In/out-degree distribution of the link graph in power-of-two
-    buckets — the web-graph companion of posting_histogram (Broder et
-    al. WWW 2000 measured both degree power laws this way; zipf_fit
-    covers the TERM frequency law, this covers the LINK one).  One row
-    per bucket with how many nodes fall in it by out- and by in-degree.
-
-    Determinism: integer degrees, bin via bit length.  Scale shape: two
-    map-side-combinable degree aggregates keyed on the edge endpoints,
-    then a ≤ 64-row rollup joined full-outer on bucket.
-    """
-    _, edges = _link_edges(spark, sf_dir)
-    bl = lambda c: (F.length(F.bin(c)) - 1).cast("long")  # noqa: E731
-    outs = (
-        edges.groupBy("src").agg(F.count("*").alias("d"))
-        .groupBy(bl(F.col("d")).alias("bucket"))
-        .agg(F.count("*").cast("long").alias("n_out"))
-    )
-    ins = (
-        edges.groupBy("dst").agg(F.count("*").alias("d"))
-        .groupBy(bl(F.col("d")).alias("bucket"))
-        .agg(F.count("*").cast("long").alias("n_in"))
-    )
-    return (
-        outs.join(ins, "bucket", "full_outer")
-        .select(
-            "bucket",
-            F.coalesce("n_out", F.lit(0)).cast("long").alias("n_out"),
-            F.coalesce("n_in", F.lit(0)).cast("long").alias("n_in"),
-        )
-        .orderBy("bucket")
-    )
-
-
-SQL_DEGREE_HISTOGRAM = f"""WITH {_edges_sql()},
-outs AS (
-  SELECT length(bin(d)) - 1 AS bucket, count(*) AS n_out
-  FROM (SELECT src, count(*) AS d FROM edges GROUP BY src) GROUP BY 1
-),
-ins AS (
-  SELECT length(bin(d)) - 1 AS bucket, count(*) AS n_in
-  FROM (SELECT dst, count(*) AS d FROM edges GROUP BY dst) GROUP BY 1
-)
-SELECT coalesce(outs.bucket, ins.bucket) AS bucket,
-       CAST(coalesce(n_out, 0) AS BIGINT) AS n_out,
-       CAST(coalesce(n_in, 0) AS BIGINT) AS n_in
-FROM outs FULL OUTER JOIN ins ON outs.bucket = ins.bucket
-ORDER BY bucket"""
-
-
-# ---------------------------------------------------------------------------
-# Faceted search counts (the SERP sidebar aggregation)
-# ---------------------------------------------------------------------------
-
-_FACET_TERM = "merge"
-
-
-def q_facet_counts(spark, sf_dir):
-    """Faceted navigation counts for one query: every doc matching the
-    query term, bucketed by each facet dimension (lang, source) — the
-    sidebar aggregation every search UI renders next to the ranked
-    list (and the reason engines keep doc metadata columnar next to
-    the index; the reference's URLBlob packs english/TLD per doc at
-    `HashBlob.h:575-578` for exactly this kind of per-result metadata
-    read).
-
-    Determinism: pure integer counts.  Scale shape: the query term's
-    posting list semi-joins the metadata table on doc_id (co-keyed),
-    then two map-side-combinable (facet, value) aggregates; output is
-    |facet values| rows, never a corpus scan beyond the one postings
-    lookup.
-    """
-    toks = _tokens(spark, sf_dir)
-    match = (
-        toks.filter(F.col("term") == _FACET_TERM)
-        .select("doc_id").distinct()
-    )
-    meta = _docs(spark, sf_dir).select("doc_id", "lang", "source")
-    hit = meta.join(match, "doc_id")
-    by_lang = hit.groupBy(F.col("lang").alias("value")).agg(
-        F.count("*").cast("long").alias("n_docs")
-    ).select(F.lit("lang").alias("facet"), "value", "n_docs")
-    by_src = hit.groupBy(F.col("source").alias("value")).agg(
-        F.count("*").cast("long").alias("n_docs")
-    ).select(F.lit("source").alias("facet"), "value", "n_docs")
-    return by_lang.unionByName(by_src).orderBy(
-        "facet", F.col("n_docs").desc(), "value"
-    )
-
-
-SQL_FACET_COUNTS = f"""WITH {_TOKS_SQL},
-match AS (SELECT DISTINCT doc_id FROM toks WHERE term = '{_FACET_TERM}'),
-hit AS (
-  SELECT d.doc_id, d.lang, d.source
-  FROM documents d JOIN match USING (doc_id)
-)
-SELECT 'lang' AS facet, lang AS value, CAST(count(*) AS BIGINT) AS n_docs
-FROM hit GROUP BY lang
-UNION ALL
-SELECT 'source' AS facet, source AS value, CAST(count(*) AS BIGINT)
-FROM hit GROUP BY source
-ORDER BY facet, n_docs DESC, value"""
 
 
 # ---------------------------------------------------------------------------
@@ -15593,703 +5744,10 @@ FROM flagged f CROSS JOIN agg a ORDER BY f.lang"""
 
 
 # ---------------------------------------------------------------------------
-# OPIC crawl prioritization (Abiteboul, Preda & Cobena, WWW 2003)
-# ---------------------------------------------------------------------------
-
-_OPIC_ITERS = 8
-
-
-def q_opic_priority(spark, sf_dir):
-    """OPIC — On-line Page Importance Computation (Abiteboul, Preda &
-    Cobena, WWW 2003), the crawl-ordering signal computable WHILE
-    crawling, before PageRank's batch iteration is affordable: every
-    page holds cash (init 1/N); a visited page distributes its cash
-    equally to its outlinks and banks the amount in its history;
-    importance ≈ (history + cash) normalized.  This is the batch
-    (synchronous) variant over the link graph: C_{{t+1}} = PC_t,
-    H_K = Σ_{{t=0..K}} C_t, importance = H_K/(K+1).  No damping, no
-    teleport — total cash is conserved (the synthetic graph's ring
-    rule guarantees out-degree ≥ 1, so no virtual node is needed),
-    which is what separates OPIC's estimator from pagerank's.
-
-    Determinism: identical float iteration shape to the hash-green
-    pagerank/trustrank (per-node sums of ≤|rules| in-edge terms),
-    rounded to 8 at output.  Scale shape: one co-partitioned join +
-    one hash agg per round — Pregel-shaped, linear lineage.
-    """
-    with_n, edges = _link_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    e = edges.join(deg, "src")
-    ranks = with_n.select(
-        "id",
-        (F.lit(1.0) / F.col("n")).alias("c"),
-        (F.lit(1.0) / F.col("n")).alias("h"),
-    )
-    for _ in range(_OPIC_ITERS):
-        contribs = (
-            ranks.join(e, ranks["id"] == e["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("c") / F.col("deg")).alias("nc"))
-        )
-        ranks = (
-            ranks.join(contribs, ranks["id"] == contribs["dst"], "left")
-            .select(
-                "id",
-                F.coalesce("nc", F.lit(0.0)).alias("c"),
-                (F.col("h") + F.coalesce("nc", F.lit(0.0))).alias("h"),
-            )
-        )
-    return ranks.select(
-        F.col("id").alias("doc_id"),
-        F.round("c", 8).alias("cash"),
-        F.round(F.col("h") / (_OPIC_ITERS + 1), 8).alias("importance"),
-    )
-
-
-def _opic_sql() -> str:
-    rules = ", ".join(f"({m}, {b})" for m, b in _PR_RULES)
-    parts = [f"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT count(*) AS n FROM nodes),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
-    FROM nodes CROSS JOIN nn
-    CROSS JOIN (VALUES {rules}) AS rules(m, b)
-  ) WHERE src <> dst
-),
-deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-e AS (SELECT edges.src, edges.dst, deg.deg FROM edges JOIN deg USING (src)),
-r0 AS (SELECT id, CAST(1 AS DOUBLE) / nn.n AS c, CAST(1 AS DOUBLE) / nn.n AS h
-       FROM nodes CROSS JOIN nn)"""]
-    for t in range(1, _OPIC_ITERS + 1):
-        parts.append(
-            f""",
-c{t} AS (SELECT e.dst AS id, sum(r.c / e.deg) AS nc
-         FROM r{t - 1} r JOIN e ON r.id = e.src GROUP BY e.dst),
-r{t} AS (SELECT r.id, coalesce(c{t}.nc, 0) AS c,
-                r.h + coalesce(c{t}.nc, 0) AS h
-         FROM r{t - 1} r LEFT JOIN c{t} ON r.id = c{t}.id)"""
-        )
-    parts.append(
-        f"""
-SELECT id AS doc_id, round(c, 8) AS cash,
-       round(h / {_OPIC_ITERS + 1}, 8) AS importance FROM r{_OPIC_ITERS}"""
-    )
-    return "".join(parts)
-
-
-SQL_OPIC_PRIORITY = _opic_sql()
-
-
-# ---------------------------------------------------------------------------
-# Shapley + position-based conversion attribution
-# ---------------------------------------------------------------------------
-
-_ATTR_CHANNELS = ("click", "signup", "view")   # bit order: 1, 2, 4
-
-
-def q_shapley_attribution(spark, sf_dir):
-    """Exact Shapley-value conversion attribution (Shapley 1953, the
-    data-driven marketing formulation of Zhao et al. 2018) over the
-    3-channel touch model: a user's coalition is the SET of channels
-    touched before their first purchase; v(S) = converted users whose
-    touch set ⊆ S.  For this reach-style v the Shapley value has a
-    closed form — each converted user splits one unit of credit
-    EQUALLY among their |m| touched channels (the per-user marginals
-    telescope; the 0!/1!/2! weights sum to 6/|m| per channel in
-    units of 1/3!) — so the whole computation is the integer
-    φ6_c = Σ_{{m ∋ c}} n[m]·(6/|m|) with ONE final /6, which is also
-    why last_touch / position_attribution exist as contrasts: they
-    are the non-symmetric axioms' alternatives.
-
-    Determinism: pure integers until the final division.  Scale
-    shape: sessionize-style per-user min-purchase window, one
-    (user → mask) aggregate, an 8-row mask rollup broadcast into a
-    3-row output.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    first_p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min(F.struct("ts", "event_id")).alias("_fp"))
-        .select("user_id", F.col("_fp.ts").alias("pts"),
-                F.col("_fp.event_id").alias("pid"))
-    )
-    touches = (
-        ev.join(first_p, "user_id")
-        .filter(F.col("event_type").isin(list(_ATTR_CHANNELS)))
-        .filter(
-            (F.col("ts") < F.col("pts"))
-            | ((F.col("ts") == F.col("pts")) & (F.col("event_id") < F.col("pid")))
-        )
-    )
-    bit = F.when(F.col("event_type") == _ATTR_CHANNELS[0], 1).when(
-        F.col("event_type") == _ATTR_CHANNELS[1], 2
-    ).otherwise(4)
-    masks = (
-        touches.select("user_id", bit.alias("b"))
-        .distinct()
-        .groupBy("user_id")
-        .agg(F.sum("b").alias("mask"))
-    )
-    counts = masks.groupBy("mask").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    chans = spark.createDataFrame(
-        [(c, 1 << i) for i, c in enumerate(_ATTR_CHANNELS)],
-        "channel string, cbit long",
-    )
-    per = (
-        counts.crossJoin(F.broadcast(chans))
-        .filter(F.expr("cast(mask as bigint) & cbit") != 0)
-        .withColumn(
-            "sz",
-            F.expr(
-                "cast((mask & 1) != 0 as int) + cast((mask & 2) != 0 as int)"
-                " + cast((mask & 4) != 0 as int)"
-            ),
-        )
-        .withColumn("phi6", F.col("n") * (F.lit(6) / F.col("sz")).cast("long"))
-    )
-    return (
-        per.groupBy("channel")
-        .agg(
-            F.sum("phi6").cast("long").alias("phi6"),
-            F.sum("n").cast("long").alias("n_touched_conv"),
-        )
-        .select(
-            "channel", "n_touched_conv",
-            _r4(F.col("phi6") / 6.0).alias("shapley"),
-        )
-        .orderBy("channel")
-    )
-
-
-SQL_SHAPLEY_ATTRIBUTION = f"""WITH ev AS (
-  SELECT user_id, ts, event_id, event_type FROM events
-),
-first_p AS (
-  SELECT user_id,
-         min(struct_pack(ts := ts, event_id := event_id)) AS fp
-  FROM ev WHERE event_type = 'purchase' GROUP BY user_id
-),
-fp2 AS (SELECT user_id, fp.ts AS pts, fp.event_id AS pid FROM first_p),
-masks AS (
-  SELECT user_id, sum(b) AS mask FROM (
-    SELECT DISTINCT e.user_id,
-           CASE e.event_type WHEN '{_ATTR_CHANNELS[0]}' THEN 1
-                             WHEN '{_ATTR_CHANNELS[1]}' THEN 2
-                             ELSE 4 END AS b
-    FROM ev e JOIN fp2 ON e.user_id = fp2.user_id
-    WHERE e.event_type IN ('{_ATTR_CHANNELS[0]}', '{_ATTR_CHANNELS[1]}',
-                           '{_ATTR_CHANNELS[2]}')
-      AND (e.ts < fp2.pts OR (e.ts = fp2.pts AND e.event_id < fp2.pid))
-  ) GROUP BY user_id
-),
-counts AS (SELECT mask, count(*) AS n FROM masks GROUP BY mask),
-chans AS (SELECT * FROM (VALUES
-  ('{_ATTR_CHANNELS[0]}', 1), ('{_ATTR_CHANNELS[1]}', 2),
-  ('{_ATTR_CHANNELS[2]}', 4)) AS t(channel, cbit)),
-per AS (
-  SELECT c.channel, k.n,
-         ((k.mask::BIGINT & 1 != 0)::INT + (k.mask::BIGINT & 2 != 0)::INT
-          + (k.mask::BIGINT & 4 != 0)::INT) AS sz
-  FROM counts k CROSS JOIN chans c
-  WHERE (k.mask::BIGINT & c.cbit) != 0
-)
-SELECT channel, CAST(sum(n) AS BIGINT) AS n_touched_conv,
-       round(sum(n * (6 // sz)) / 6.0, 4) AS shapley
-FROM per GROUP BY channel ORDER BY channel"""
-
-
-def q_position_attribution(spark, sf_dir):
-    """Position-based (U-shaped 40/20/40) conversion attribution — the
-    non-symmetric contrast to shapley_attribution and the recency
-    contrast to last_touch: within each converted user's pre-purchase
-    touch sequence, the FIRST touch earns 0.4, the LAST 0.4, and the
-    middle touches split 0.2 evenly (1 touch → 1.0; 2 touches →
-    0.5/0.5, the standard degenerate conventions).  Per channel: the
-    credited conversions.
-
-    Determinism: per-touch weights are single divisions of small
-    integers; the per-channel sum rounds once at output (the coec
-    pattern).  Scale shape: one sessionize-style rank window per user
-    (first/last/middle labels from row_number against count), then a
-    map-side-combinable channel aggregate — 3 output rows.
-    """
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    first_p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min(F.struct("ts", "event_id")).alias("_fp"))
-        .select("user_id", F.col("_fp.ts").alias("pts"),
-                F.col("_fp.event_id").alias("pid"))
-    )
-    touches = (
-        ev.join(first_p, "user_id")
-        .filter(F.col("event_type").isin(list(_ATTR_CHANNELS)))
-        .filter(
-            (F.col("ts") < F.col("pts"))
-            | ((F.col("ts") == F.col("pts")) & (F.col("event_id") < F.col("pid")))
-        )
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cw = Window.partitionBy("user_id")
-    lab = (
-        touches.withColumn("r", F.row_number().over(w))
-        .withColumn("k", F.count("*").over(cw))
-        .withColumn(
-            "credit",
-            F.when(F.col("k") == 1, F.lit(1.0))
-            .when(F.col("r") == 1, F.lit(0.4))
-            .when(F.col("r") == F.col("k"), F.lit(0.4))
-            .when(F.col("k") == 2, F.lit(0.0))
-            .otherwise(F.lit(0.2) / (F.col("k") - 2)),
-        )
-        .withColumn(
-            "credit",
-            F.when(F.col("k") == 2, F.lit(0.5)).otherwise(F.col("credit")),
-        )
-    )
-    return (
-        lab.groupBy(F.col("event_type").alias("channel"))
-        .agg(
-            F.count("*").cast("long").alias("n_touches"),
-            _r4(F.sum("credit")).alias("credit"),
-        )
-        .orderBy("channel")
-    )
-
-
-SQL_POSITION_ATTRIBUTION = f"""WITH ev AS (
-  SELECT user_id, ts, event_id, event_type FROM events
-),
-first_p AS (
-  SELECT user_id,
-         min(struct_pack(ts := ts, event_id := event_id)) AS fp
-  FROM ev WHERE event_type = 'purchase' GROUP BY user_id
-),
-fp2 AS (SELECT user_id, fp.ts AS pts, fp.event_id AS pid FROM first_p),
-touches AS (
-  SELECT e.user_id, e.ts, e.event_id, e.event_type
-  FROM ev e JOIN fp2 ON e.user_id = fp2.user_id
-  WHERE e.event_type IN ('{_ATTR_CHANNELS[0]}', '{_ATTR_CHANNELS[1]}',
-                         '{_ATTR_CHANNELS[2]}')
-    AND (e.ts < fp2.pts OR (e.ts = fp2.pts AND e.event_id < fp2.pid))
-),
-lab AS (
-  SELECT event_type,
-         CASE WHEN k = 1 THEN 1.0
-              WHEN k = 2 THEN 0.5
-              WHEN r = 1 OR r = k THEN 0.4
-              ELSE 0.2 / (k - 2) END AS credit
-  FROM (
-    SELECT event_type,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS r,
-           count(*) OVER (PARTITION BY user_id) AS k
-    FROM touches)
-)
-SELECT event_type AS channel, CAST(count(*) AS BIGINT) AS n_touches,
-       round(sum(credit), 4) AS credit
-FROM lab GROUP BY event_type ORDER BY channel"""
-
-
-# ---------------------------------------------------------------------------
-# Mutual-information feature selection (Manning/Raghavan/Schütze IIR §13.5)
-# ---------------------------------------------------------------------------
-
-_MI_CLASS_LANG = "en"
-_MI_TOPK = 20
-
-
-def q_mi_feature_select(spark, sf_dir):
-    """Mutual-information feature selection (the IIR §13.5 classic) for
-    the binary class lang = '{lc}': per term, the 2×2 contingency
-    (term-presence × class) and I(U;C) = Σ_ij (N_ij/N)·log2(N·N_ij /
-    (N_i·N_j)), the ranking every compact text classifier (lang-ID,
-    spam, quality) uses to pick its vocabulary.  Top-{k} terms by MI,
-    with the positive-class presence counts kept for auditability.
-
-    Determinism: the contingency cells are integers; each MI term is
-    one expression over those integers (0·log0 handled as 0), rounded
-    once.  Scale shape: one distinct (term, doc) aggregate joined to
-    the |docs|-row class table, then a per-term map-side-combinable
-    rollup; class totals are a 1-row broadcast; the cut is a
-    distributed TakeOrdered.
-    """.format(lc=_MI_CLASS_LANG, k=_MI_TOPK)
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", (F.col("lang") == _MI_CLASS_LANG).alias("pos")
-    )
-    tot = docs.agg(
-        F.count("*").cast("long").alias("nn"),
-        F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("long").alias("np"),
-    )
-    present = (
-        _tokens(spark, sf_dir).select("term", "doc_id").distinct()
-        .join(docs, "doc_id")
-        .groupBy("term")
-        .agg(
-            F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("long")
-            .alias("n11"),
-            F.sum(F.when(F.col("pos"), 0).otherwise(1)).cast("long")
-            .alias("n10"),
-        )
-    )
-    cells = present.crossJoin(F.broadcast(tot)).select(
-        "term", "n11", "n10",
-        (F.col("np") - F.col("n11")).alias("n01"),
-        (F.col("nn") - F.col("np") - F.col("n10")).alias("n00"),
-        "nn", "np",
-    )
-
-    def mi_term(nij, ni, nj):
-        return F.when(
-            nij > 0,
-            (nij / F.col("nn"))
-            * F.log2(F.col("nn") * nij / (ni * nj)),
-        ).otherwise(F.lit(0.0))
-
-    n1_ = F.col("n11") + F.col("n10")          # term present
-    n0_ = F.col("n01") + F.col("n00")          # term absent
-    npos, nneg = F.col("np"), F.col("nn") - F.col("np")
-    mi = (
-        mi_term(F.col("n11"), n1_, npos)
-        + mi_term(F.col("n10"), n1_, nneg)
-        + mi_term(F.col("n01"), n0_, npos)
-        + mi_term(F.col("n00"), n0_, nneg)
-    )
-    return (
-        cells.select("term", "n11", "n10", _r4(mi).alias("mi"))
-        .orderBy(F.col("mi").desc(), F.col("term").asc())
-        .limit(_MI_TOPK)
-    )
-
-
-SQL_MI_FEATURE_SELECT = f"""WITH {_TOKS_SQL},
-docs AS (SELECT doc_id, (lang = '{_MI_CLASS_LANG}') AS pos FROM documents),
-tot AS (SELECT count(*) AS nn,
-               sum(CASE WHEN pos THEN 1 ELSE 0 END) AS np FROM docs),
-present AS (
-  SELECT t.term,
-         sum(CASE WHEN d.pos THEN 1 ELSE 0 END) AS n11,
-         sum(CASE WHEN d.pos THEN 0 ELSE 1 END) AS n10
-  FROM (SELECT DISTINCT term, doc_id FROM toks) t
-  JOIN docs d USING (doc_id) GROUP BY t.term
-),
-cells AS (
-  SELECT term, n11, n10, tot.np - n11 AS n01,
-         tot.nn - tot.np - n10 AS n00, tot.nn AS nn, tot.np AS np
-  FROM present CROSS JOIN tot
-)
-SELECT term, CAST(n11 AS BIGINT) AS n11, CAST(n10 AS BIGINT) AS n10,
-       round(
-         (CASE WHEN n11 > 0 THEN (n11 / CAST(nn AS DOUBLE))
-               * log2(nn * n11 / (CAST(n11 + n10 AS DOUBLE) * np))
-               ELSE 0 END)
-       + (CASE WHEN n10 > 0 THEN (n10 / CAST(nn AS DOUBLE))
-               * log2(nn * n10 / (CAST(n11 + n10 AS DOUBLE) * (nn - np)))
-               ELSE 0 END)
-       + (CASE WHEN n01 > 0 THEN (n01 / CAST(nn AS DOUBLE))
-               * log2(nn * n01 / (CAST(n01 + n00 AS DOUBLE) * np))
-               ELSE 0 END)
-       + (CASE WHEN n00 > 0 THEN (n00 / CAST(nn AS DOUBLE))
-               * log2(nn * n00 / (CAST(n01 + n00 AS DOUBLE) * (nn - np)))
-               ELSE 0 END), 4) AS mi
-FROM cells ORDER BY mi DESC, term ASC LIMIT {_MI_TOPK}"""
-
-
-# ---------------------------------------------------------------------------
-# IPS counterfactual CTR estimation (Joachims, Swaminathan & Schnabel 2017)
-# ---------------------------------------------------------------------------
-
-
-def q_ips_ctr_estimate(spark, sf_dir):
-    """Inverse-propensity-scored relevance estimation (Joachims,
-    Swaminathan & Schnabel, "Unbiased learning-to-rank with biased
-    feedback", WSDM 2017): clicks are weighted by 1/propensity(pos),
-    with the examination propensity prop(p) = pctr(p)/pctr(1) read off
-    the same position-CTR prior coec_model fits — the SNIPS-free plain
-    IPS estimator.  Per item: naive clicks, naive CTR, and the IPS
-    estimate Σ_clicks 1/prop — the number whose ORDERING is unbiased
-    for true relevance under the examination model, where naive CTR
-    systematically favours items shown high.  Top-20 by IPS score.
-
-    Determinism: the prior is a ≤{slots}-row broadcast; each click's
-    weight pctr(1)/pctr(p) is one double division of identical values;
-    per-item sums round once (the coec precedent).  Scale shape: two
-    map-side-combinable aggregates over the filtered log keyed on item
-    — identical shuffle shape to coec_model, distributed TakeOrdered
-    cut.
-    """.format(slots=_COEC_SLOTS)
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("view", "click"))
-        .select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-            (F.pmod(F.col("event_id"), F.lit(_COEC_SLOTS)) + 1)
-            .cast("long").alias("pos"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    prior = (
-        ev.groupBy("pos")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            .alias("v"),
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .alias("c"),
-        )
-        .filter((F.col("v") > 0) & (F.col("c") > 0))
-        .select("pos", (F.col("c") / F.col("v")).alias("pctr"))
-    )
-    p1 = prior.filter(F.col("pos") == 1).select(
-        F.col("pctr").alias("pctr1")
-    )
-    w = prior.crossJoin(F.broadcast(p1)).select(
-        "pos", (F.col("pctr1") / F.col("pctr")).alias("ipw")
-    )
-    views = ev.filter(F.col("event_type") == "view").groupBy("item").agg(
-        F.count("*").cast("long").alias("n_views")
-    )
-    ips = (
-        ev.filter(F.col("event_type") == "click")
-        .join(F.broadcast(w), "pos")
-        .groupBy("item")
-        .agg(
-            F.count("*").cast("long").alias("n_clicks"),
-            F.sum("ipw").alias("_ips"),
-        )
-    )
-    return (
-        ips.join(views, "item")
-        .select(
-            "item", "n_clicks", "n_views",
-            _r4(F.col("n_clicks") / F.col("n_views")).alias("naive_ctr"),
-            _r4("_ips").alias("ips_score"),
-        )
-        .orderBy(F.col("ips_score").desc(), F.col("item").asc())
-        .limit(20)
-    )
-
-
-SQL_IPS_CTR_ESTIMATE = f"""WITH ev AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item,
-         CAST(event_id % {_COEC_SLOTS} + 1 AS BIGINT) AS pos
-  FROM events WHERE event_type IN ('view', 'click')
-),
-ev2 AS (SELECT * FROM ev WHERE item IS NOT NULL),
-prior AS (
-  SELECT pos,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-           / CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS pctr
-  FROM ev2 GROUP BY pos
-  HAVING sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) > 0
-     AND sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) > 0
-),
-w AS (
-  SELECT p.pos, p1.pctr / p.pctr AS ipw
-  FROM prior p CROSS JOIN (SELECT pctr FROM prior WHERE pos = 1) p1
-),
-views AS (SELECT item, count(*) AS n_views FROM ev2
-          WHERE event_type = 'view' GROUP BY item),
-ips AS (
-  SELECT e.item, count(*) AS n_clicks, sum(w.ipw) AS s
-  FROM ev2 e JOIN w ON e.pos = w.pos
-  WHERE e.event_type = 'click' GROUP BY e.item
-)
-SELECT i.item, CAST(i.n_clicks AS BIGINT) AS n_clicks,
-       CAST(v.n_views AS BIGINT) AS n_views,
-       round(i.n_clicks / CAST(v.n_views AS DOUBLE), 4) AS naive_ctr,
-       round(i.s, 4) AS ips_score
-FROM ips i JOIN views v ON i.item = v.item
-ORDER BY ips_score DESC, i.item ASC LIMIT 20"""
-
-
-# ---------------------------------------------------------------------------
-# EWMA query-volume forecast (Hunter 1986; the ops smoothing baseline)
-# ---------------------------------------------------------------------------
-
-_EWMA_AN, _EWMA_AD = 1, 4          # α = 1/4 as an exact rational
-_EWMA_TYPE = "click"
-
-
-def q_ewma_forecast(spark, sf_dir):
-    """EWMA one-step-ahead volume forecasting (Hunter, J. Qual. Tech.
-    1986 — THE capacity-planning smoothing baseline) of the daily
-    '{et}' event volume: S_t = α·x_t + (1−α)·S_{{t−1}}, S_1 = x_1,
-    α = {an}/{ad}; the forecast for day t is S_{{t−1}} and the
-    residual x_t − S_{{t−1}} is what alerting thresholds watch
-    (spike_detect's z-score is the windowed cousin; EWMA is the
-    exponential-memory one).
-
-    Determinism: the recurrence is evaluated in CLOSED FORM — S_t =
-    α·Σ_{{i=2..t}} (1−α)^{{t−i}}·x_i + (1−α)^{{t−1}}·x_1 — as a
-    weighted self-join where each weight is the identical double
-    pow(0.75, t−i) in both engines; per-day sums round once.  Scale
-    shape: events pre-aggregate map-side to |days| rows FIRST; the
-    O(days²) weight join runs over that bounded table only (a year is
-    366 rows → 10⁵ pairs).  In the streaming engine the same S_t is
-    one stateful value per key — the batch closed form exists to
-    backfill and to verify that state.
-    """.format(et=_EWMA_TYPE, an=_EWMA_AN, ad=_EWMA_AD)
-    from pyspark.sql import Window
-
-    a = _EWMA_AN / _EWMA_AD
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == _EWMA_TYPE)
-        .groupBy(F.date_trunc("DAY", "ts").alias("day"))
-        .agg(F.count("*").cast("long").alias("x"))
-    )
-    t = ev.withColumn(
-        "t", F.row_number().over(Window.orderBy("day"))
-    )
-    i = t.select(
-        F.col("t").alias("ti"), F.col("x").alias("xi")
-    )
-    pairs = t.join(i, F.col("ti") <= F.col("t"))
-    wgt = F.when(
-        F.col("ti") == 1,
-        F.pow(F.lit(1.0 - a), F.col("t") - 1),
-    ).otherwise(
-        F.lit(a) * F.pow(F.lit(1.0 - a), F.col("t") - F.col("ti"))
-    )
-    s = pairs.groupBy("day", "t", "x").agg(
-        F.sum(wgt * F.col("xi")).alias("_s")
-    )
-    wl = Window.orderBy("t")
-    return (
-        s.withColumn("_prev", F.lag("_s").over(wl))
-        .select(
-            "day", "x",
-            _r4("_s").alias("ewma"),
-            _r4(F.col("x") - F.col("_prev")).alias("residual"),
-        )
-        .orderBy("day")
-    )
-
-
-SQL_EWMA_FORECAST = f"""WITH ev AS (
-  SELECT date_trunc('day', ts) AS day, count(*) AS x
-  FROM events WHERE event_type = '{_EWMA_TYPE}' GROUP BY 1
-),
-t AS (SELECT day, x, row_number() OVER (ORDER BY day) AS t FROM ev),
-s AS (
-  SELECT b.day, b.t, b.x,
-         sum(CASE WHEN a.t = 1
-                  THEN pow({1.0 - _EWMA_AN / _EWMA_AD}, b.t - 1) * a.x
-                  ELSE {_EWMA_AN / _EWMA_AD}
-                       * pow({1.0 - _EWMA_AN / _EWMA_AD}, b.t - a.t) * a.x
-             END) AS s
-  FROM t b JOIN t a ON a.t <= b.t
-  GROUP BY b.day, b.t, b.x
-)
-SELECT day, CAST(x AS BIGINT) AS x, round(s, 4) AS ewma,
-       round(x - lag(s) OVER (ORDER BY t), 4) AS residual
-FROM s ORDER BY day"""
-
-
-# ---------------------------------------------------------------------------
 # Reciprocal nearest neighbours (Qin et al., CVPR 2011 k-reciprocal)
 # ---------------------------------------------------------------------------
 
 _RNN_K = 5
-
-
-def q_reciprocal_nn(spark, sf_dir):
-    """k-reciprocal nearest neighbours (Qin et al., CVPR 2011; the
-    re-ranking/confidence primitive behind k-reciprocal re-ranking and
-    high-precision near-dup mining): the pair (a, b) is k-reciprocal
-    iff b is in a's cosine top-{k} AND a is in b's — mutual proximity
-    filters out hub vectors that appear in everyone's neighbour list
-    but reciprocate almost none.  Output: all reciprocal pairs a < b
-    with both ranks and the cosine.
-
-    Determinism: ranks over 4-decimal cosine with vec_id tiebreaks.
-    Scale shape: the all-pairs cosine is the same blocked computation
-    embed_neardup documents (LSH/IVF-bucketed at 10^12); the per-side
-    top-k is a rank window partitioned by the source vector, and the
-    reciprocity test is one self-join of two (n·k)-row lists on the
-    unordered pair key — never an n² join of raw vectors.
-    """.format(k=_RNN_K)
-    from pyspark.sql import Window
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    nrm = F.sqrt(
-        F.aggregate(F.col("e"), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    a = emb.select(
-        F.col("vec_id").alias("va"), F.col("e").alias("ea"),
-        nrm.alias("na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("vb"), F.col("e").alias("eb"),
-        nrm.alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = a.join(b, F.col("va") != F.col("vb")).select(
-        "va", "vb", _r4(dot / (F.col("na") * F.col("nb"))).alias("cos")
-    )
-    w = Window.partitionBy("va").orderBy(
-        F.col("cos").desc(), F.col("vb").asc()
-    )
-    topk = cos.withColumn("r", F.row_number().over(w)).filter(
-        F.col("r") <= _RNN_K
-    )
-    fwd = topk.select("va", "vb", "cos", F.col("r").alias("ra"))
-    bwd = topk.select(
-        F.col("va").alias("vb2"), F.col("vb").alias("va2"),
-        F.col("r").alias("rb"),
-    )
-    rec = fwd.join(
-        bwd,
-        (F.col("va") == F.col("va2")) & (F.col("vb") == F.col("vb2")),
-    ).filter(F.col("va") < F.col("vb"))
-    return rec.select(
-        F.col("va").alias("a"), F.col("vb").alias("b"),
-        "cos", "ra", "rb",
-    ).orderBy("a", "b")
-
-
-SQL_RECIPROCAL_NN = f"""WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-cos AS (
-  SELECT a.vec_id AS va, b.vec_id AS vb,
-         round(list_dot_product(a.e, b.e)
-               / (sqrt(list_dot_product(a.e, a.e))
-                  * sqrt(list_dot_product(b.e, b.e))), 4) AS cos
-  FROM emb a JOIN emb b ON a.vec_id <> b.vec_id
-),
-topk AS (
-  SELECT va, vb, cos, r FROM (
-    SELECT va, vb, cos,
-           row_number() OVER (PARTITION BY va
-                              ORDER BY cos DESC, vb ASC) AS r
-    FROM cos) WHERE r <= {_RNN_K}
-)
-SELECT f.va AS a, f.vb AS b, f.cos AS cos,
-       f.r AS ra, g.r AS rb
-FROM topk f JOIN topk g ON f.va = g.vb AND f.vb = g.va
-WHERE f.va < f.vb
-ORDER BY a, b"""
 
 
 # ---------------------------------------------------------------------------
@@ -16505,100 +5963,6 @@ FROM binned CROSS JOIN tot GROUP BY bin, tot.N ORDER BY bin"""
 
 
 # ---------------------------------------------------------------------------
-# CUPED variance reduction (Deng, Xu, Kohavi & Walker, WSDM 2013)
-# ---------------------------------------------------------------------------
-
-_CUPED_SPLIT_DAYS = 15
-
-
-def q_cuped_adjustment(spark, sf_dir):
-    """CUPED — Controlled-experiment Using Pre-Experiment Data (Deng,
-    Xu, Kohavi & Walker, WSDM 2013), the variance-reduction standard
-    of every A/B platform: per user, Y = experiment-period metric
-    (spend in days > {d}) and X = pre-period covariate (spend in days
-    ≤ {d}); the adjusted metric Y − θ(X − X̄) with θ = cov(X,Y)/var(X)
-    keeps the mean unbiased while removing the between-user variance X
-    explains.  Output: user count, θ, var(Y), the CUPED-adjusted
-    variance, and the reduction ratio — the number that decides how
-    much smaller the experiment can be.
-
-    Determinism: per-user sums then the five moment sums (ΣX, ΣY, ΣX²,
-    ΣXY, ΣY²) — one pass of map-side-combinable aggregates; every
-    derived quantity is computed from those five identical doubles
-    with single expressions, rounded once.  Scale shape: one user-keyed
-    shuffle + a 1-row moment aggregate; nothing grows with events.
-    """.format(d=_CUPED_SPLIT_DAYS)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "ts", "value"
-    )
-    t0 = ev.agg(F.min(F.date_trunc("DAY", "ts")).alias("_t0"))
-    split = F.col("_t0") + F.expr(
-        f"INTERVAL {_CUPED_SPLIT_DAYS} DAYS"
-    )
-    per = (
-        ev.crossJoin(F.broadcast(t0))
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("ts") < split, F.col("value")).otherwise(0.0))
-            .alias("x"),
-            F.sum(F.when(F.col("ts") >= split, F.col("value")).otherwise(0.0))
-            .alias("y"),
-        )
-    )
-    m = per.agg(
-        F.count("*").cast("long").alias("n_users"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    n = F.col("n_users")
-    var_x = (F.col("sxx") - F.col("sx") * F.col("sx") / n) / n
-    var_y = (F.col("syy") - F.col("sy") * F.col("sy") / n) / n
-    cov = (F.col("sxy") - F.col("sx") * F.col("sy") / n) / n
-    theta = cov / var_x
-    var_cuped = var_y - cov * cov / var_x
-    return m.select(
-        "n_users",
-        _r4(theta).alias("theta"),
-        _r4(var_y).alias("var_y"),
-        _r4(var_cuped).alias("var_cuped"),
-        _r4(F.lit(1.0) - var_cuped / var_y).alias("reduction"),
-    )
-
-
-SQL_CUPED_ADJUSTMENT = f"""WITH t0 AS (
-  SELECT min(date_trunc('day', ts)) AS t0 FROM events
-),
-per AS (
-  SELECT user_id,
-         sum(CASE WHEN ts < t0.t0 + INTERVAL {_CUPED_SPLIT_DAYS} DAY
-                  THEN value ELSE 0 END) AS x,
-         sum(CASE WHEN ts >= t0.t0 + INTERVAL {_CUPED_SPLIT_DAYS} DAY
-                  THEN value ELSE 0 END) AS y
-  FROM events CROSS JOIN t0 GROUP BY user_id
-),
-m AS (
-  SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
-  FROM per
-)
-SELECT CAST(n AS BIGINT) AS n_users,
-       round(((sxy - sx * sy / n) / n) / ((sxx - sx * sx / n) / n), 4)
-         AS theta,
-       round((syy - sy * sy / n) / n, 4) AS var_y,
-       round((syy - sy * sy / n) / n
-             - ((sxy - sx * sy / n) / n) * ((sxy - sx * sy / n) / n)
-               / ((sxx - sx * sx / n) / n), 4) AS var_cuped,
-       round(1.0 - ((syy - sy * sy / n) / n
-             - ((sxy - sx * sy / n) / n) * ((sxy - sx * sy / n) / n)
-               / ((sxx - sx * sx / n) / n))
-             / ((syy - sy * sy / n) / n), 4) AS reduction
-FROM m"""
-
-
-# ---------------------------------------------------------------------------
 # Language-ID confusion matrix (the lang_id operator's own eval)
 # ---------------------------------------------------------------------------
 
@@ -16661,586 +6025,6 @@ SELECT j.true_lang, j.pred_lang, CAST(count(*) AS BIGINT) AS n,
 FROM j JOIN pt ON j.true_lang = pt.true_lang
 GROUP BY j.true_lang, j.pred_lang, pt.nt
 ORDER BY j.true_lang, j.pred_lang"""
-
-
-# ---------------------------------------------------------------------------
-# Consistent-hashing reshard movement (Karger STOC'97; HRW: Thaler-Ravishankar)
-# ---------------------------------------------------------------------------
-
-_CH_N = 8          # current shard count; the comparison adds one
-
-
-def q_consistent_hash_moves(spark, sf_dir):
-    """Reshard movement: what fraction of doc keys MOVE when the shard
-    count grows {n} → {n1}, under (a) mod-hashing and (b) rendezvous /
-    highest-random-weight hashing (Thaler & Ravishankar 1998 — the
-    stateless equivalent of Karger's consistent hashing ring).  The
-    classic result this verifies on real keys: mod moves ≈ {n}/{n1} of
-    all keys (nearly everything reshuffles), rendezvous moves exactly
-    the keys the NEW shard wins ≈ 1/{n1} — the argument for HRW-sharded
-    posting stores whose chunks must not churn on scale-out.
-
-    Determinism: both schemes hash with the engine-portable md5-prefix
-    integer (shard_balance's idiom); winners pick by (weight, shard)
-    max — pure integer compares.  Scale shape: mod is a narrow
-    expression; rendezvous joins each key against a BROADCAST
-    ≤{n1}-row shard table and reduces with max_by — one
-    map-side-combinable pass, output 2 rows.
-    """.format(n=_CH_N, n1=_CH_N + 1)
-    keys = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("k")
-    )
-    h = F.conv(F.substring(F.md5("k"), 1, 8), 16, 10).cast("long")
-    mod = keys.select(
-        (F.pmod(h, F.lit(_CH_N)) != F.pmod(h, F.lit(_CH_N + 1)))
-        .cast("int").alias("moved")
-    ).agg(
-        F.count("*").cast("long").alias("n_keys"),
-        F.sum("moved").cast("long").alias("n_moved"),
-    ).select(F.lit("mod").alias("scheme"), "n_keys", "n_moved")
-
-    shards = spark.createDataFrame(
-        [(s,) for s in range(_CH_N + 1)], "s long"
-    )
-    ww = F.conv(
-        F.substring(F.md5(F.concat_ws(":", "k", "s")), 1, 8), 16, 10
-    ).cast("long")
-    pairs = keys.crossJoin(F.broadcast(shards)).select(
-        "k", "s", ww.alias("w")
-    )
-    ordk = F.col("w") * 16 + F.col("s")   # strictly monotone in (w, s)
-    new_s = pairs.groupBy("k").agg(
-        F.max_by("s", ordk).alias("new_s")
-    )
-    old_s = (
-        pairs.filter(F.col("s") < _CH_N)
-        .groupBy("k")
-        .agg(F.max_by("s", ordk).alias("old_s"))
-    )
-    hrw = (
-        new_s.join(old_s, "k")
-        .agg(
-            F.count("*").cast("long").alias("n_keys"),
-            F.sum(
-                (F.col("new_s") != F.col("old_s")).cast("int")
-            ).cast("long").alias("n_moved"),
-        )
-        .select(F.lit("rendezvous").alias("scheme"), "n_keys", "n_moved")
-    )
-    return (
-        mod.unionByName(hrw)
-        .select(
-            "scheme", "n_keys", "n_moved",
-            _r4(F.col("n_moved") / F.col("n_keys")).alias("frac_moved"),
-        )
-        .orderBy("scheme")
-    )
-
-
-SQL_CONSISTENT_HASH_MOVES = f"""WITH keys AS (
-  SELECT CAST(doc_id AS VARCHAR) AS k FROM documents
-),
-modm AS (
-  SELECT 'mod' AS scheme, count(*) AS n_keys,
-         sum(CASE WHEN h % {_CH_N} <> h % {_CH_N + 1} THEN 1 ELSE 0 END)
-           AS n_moved
-  FROM (SELECT CAST(concat('0x', substr(md5(k), 1, 8)) AS BIGINT) AS h
-        FROM keys)
-),
-shards AS (SELECT * FROM range({_CH_N + 1}) AS t(s)),
-pairs AS (
-  SELECT k, s,
-         CAST(concat('0x', substr(md5(concat(k, ':', CAST(s AS VARCHAR))),
-                                  1, 8)) AS BIGINT) AS w
-  FROM keys CROSS JOIN shards
-),
-new_s AS (
-  SELECT k, max_by(s, w * 16 + s) AS new_s FROM pairs GROUP BY k
-),
-old_s AS (
-  SELECT k, max_by(s, w * 16 + s) AS old_s FROM pairs
-  WHERE s < {_CH_N} GROUP BY k
-),
-hrwm AS (
-  SELECT 'rendezvous' AS scheme, count(*) AS n_keys,
-         sum(CASE WHEN n.new_s <> o.old_s THEN 1 ELSE 0 END) AS n_moved
-  FROM new_s n JOIN old_s o USING (k)
-)
-SELECT scheme, CAST(n_keys AS BIGINT) AS n_keys,
-       CAST(n_moved AS BIGINT) AS n_moved,
-       round(n_moved * 1.0 / n_keys, 4) AS frac_moved
-FROM (SELECT * FROM modm UNION ALL SELECT * FROM hrwm)
-ORDER BY scheme"""
-
-
-# ---------------------------------------------------------------------------
-# Skyline / Pareto frontier (Börzsönyi, Kossmann & Stocker, ICDE 2001)
-# ---------------------------------------------------------------------------
-
-
-def q_skyline_docs(spark, sf_dir):
-    """The skyline operator (Börzsönyi et al., ICDE 2001) over the
-    quality/cost plane: documents Pareto-optimal in (p_keep ↑,
-    n_tokens ↓) — no other doc is at least as good on both axes and
-    strictly better on one.  The selection shape behind "best N
-    candidates under competing criteria" (dedup canonical pick,
-    training-data budget curation) that no single weighted score can
-    replicate.
-
-    Determinism: dominance compares the 4-decimal ROUNDED p_keep and
-    integer lengths only.  Scale shape: the dominance test is a
-    left-anti self-join — quadratic in the worst case, so the entry
-    presorts DESC by p_keep which lets block-nested-loop skylines
-    terminate early; at 10^12 rows the standard distributed plan is
-    grid-partition → local skyline → merge (same two-phase shape the
-    engine's top-k gather uses), with THIS operator as the local step.
-    """
-    toks = _tokens(spark, sf_dir)
-    stops = [s.strip("'") for s in _EN_STOPS.strip("()").split(",")]
-    feats = toks.groupBy("doc_id").agg(
-        F.avg(F.length("term")).alias("_len"),
-        (F.sum(F.when(F.col("term").isin(stops), 1).otherwise(0))
-         / F.count("*")).alias("_stop"),
-        (F.count_distinct("term") / F.count("*")).alias("_ttr"),
-        F.count("*").cast("long").alias("n_tokens"),
-    )
-    z = (
-        F.lit(_QC_W_LEN) * F.col("_len")
-        + F.lit(_QC_W_STOP) * F.col("_stop")
-        + F.lit(_QC_W_TTR) * F.col("_ttr")
-        + F.lit(_QC_BIAS)
-    )
-    pts = feats.select(
-        "doc_id",
-        _r4(F.lit(1.0) / (F.lit(1.0) + F.exp(-z))).alias("p_keep"),
-        "n_tokens",
-    )
-    a, b = pts.alias("a"), pts.alias("b")
-    dominated = a.join(
-        b,
-        (F.col("b.p_keep") >= F.col("a.p_keep"))
-        & (F.col("b.n_tokens") <= F.col("a.n_tokens"))
-        & (
-            (F.col("b.p_keep") > F.col("a.p_keep"))
-            | (F.col("b.n_tokens") < F.col("a.n_tokens"))
-        ),
-        "left_semi",
-    )
-    return (
-        pts.join(dominated, "doc_id", "left_anti")
-        .select("doc_id", "p_keep", "n_tokens")
-        .orderBy(F.col("p_keep").desc(), F.col("n_tokens").asc(),
-                 F.col("doc_id").asc())
-    )
-
-
-SQL_SKYLINE_DOCS = f"""WITH {_TOKS_SQL},
-feats AS (
-  SELECT doc_id, avg(length(term)) AS len,
-         sum(CASE WHEN term IN {_EN_STOPS} THEN 1 ELSE 0 END) * 1.0
-           / count(*) AS stop,
-         count(DISTINCT term) * 1.0 / count(*) AS ttr,
-         count(*) AS n_tokens
-  FROM toks GROUP BY doc_id
-),
-pts AS (
-  SELECT doc_id,
-         round(1.0 / (1.0 + exp(-({_QC_W_LEN} * len + {_QC_W_STOP} * stop
-                                 + {_QC_W_TTR} * ttr + ({_QC_BIAS})))), 4)
-           AS p_keep,
-         CAST(n_tokens AS BIGINT) AS n_tokens
-  FROM feats
-)
-SELECT a.doc_id, a.p_keep, a.n_tokens
-FROM pts a
-WHERE NOT EXISTS (
-  SELECT 1 FROM pts b
-  WHERE b.p_keep >= a.p_keep AND b.n_tokens <= a.n_tokens
-    AND (b.p_keep > a.p_keep OR b.n_tokens < a.n_tokens)
-)
-ORDER BY a.p_keep DESC, a.n_tokens ASC, a.doc_id ASC"""
-
-
-# ---------------------------------------------------------------------------
-# Weekday seasonality profile (the ops-analytics load-shaping baseline)
-# ---------------------------------------------------------------------------
-
-
-def q_weekday_seasonality(spark, sf_dir):
-    """Day-of-week seasonal profile of event volume — the decomposition
-    every capacity plan and anomaly threshold starts from (ewma_forecast
-    smooths the trend; this isolates the weekly cycle): per weekday,
-    how many days of data, the mean daily volume, and the seasonal
-    index (mean_dow / overall daily mean) — index > 1 marks the heavy
-    days a static threshold would false-alarm on.
-
-    Determinism: daily counts are integers; means and the index are
-    single divisions of those integers.  Scale shape: events collapse
-    map-side to |days| rows FIRST (the spike_detect pre-aggregate),
-    then a 7-row rollup with the overall mean as a 1-row broadcast.
-    """
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy(F.date_trunc("DAY", "ts").alias("day"))
-        .agg(F.count("*").cast("long").alias("x"))
-    )
-    overall = ev.agg(
-        (F.sum("x") / F.count("*")).alias("_mu")
-    )
-    return (
-        ev.withColumn("dow", (F.dayofweek("day") - 1).cast("long"))
-        .groupBy("dow")
-        .agg(
-            F.count("*").cast("long").alias("n_days"),
-            F.sum("x").cast("long").alias("_sx"),
-        )
-        .crossJoin(F.broadcast(overall))
-        .select(
-            "dow", "n_days",
-            _r4(F.col("_sx") / F.col("n_days")).alias("mean_volume"),
-            _r4(
-                F.col("_sx") / F.col("n_days") / F.col("_mu")
-            ).alias("seasonal_index"),
-        )
-        .orderBy("dow")
-    )
-
-
-SQL_WEEKDAY_SEASONALITY = """WITH ev AS (
-  SELECT date_trunc('day', ts) AS day, count(*) AS x
-  FROM events GROUP BY 1
-),
-overall AS (SELECT sum(x) * 1.0 / count(*) AS mu FROM ev)
-SELECT CAST(dayofweek(day) AS BIGINT) AS dow,
-       CAST(count(*) AS BIGINT) AS n_days,
-       round(sum(x) * 1.0 / count(*), 4) AS mean_volume,
-       round(sum(x) * 1.0 / count(*) / overall.mu, 4) AS seasonal_index
-FROM ev CROSS JOIN overall
-GROUP BY dayofweek(day), overall.mu ORDER BY dow"""
-
-
-# ---------------------------------------------------------------------------
-# Delta-method variance for ratio metrics (Deng, Knoblich & Lu, KDD 2018)
-# ---------------------------------------------------------------------------
-
-_DM_NUM, _DM_DEN = "click", "view"
-
-
-def q_delta_method_ratio(spark, sf_dir):
-    """Delta-method variance of a ratio metric (Deng, Knoblich & Lu,
-    "Applying the Delta method in metric analytics", KDD 2018) — the
-    third leg of the experimentation kit next to cuped_adjustment and
-    permutation_sigtest: user-level CTR is the ratio of two per-user
-    sums r = ΣX/ΣY ({num}/{den} counts), whose naive per-user-average
-    variance is WRONG because numerator and denominator covary;
-    var(r) ≈ (var X + r²·var Y − 2r·cov(X,Y)) / (n·ȳ²) is the
-    first-order correction every A/B platform ships.
-
-    Determinism: per-user counts are integers; the five moment sums
-    are integer totals; every derived value is a single expression
-    over them, rounded once.  Scale shape: one user-keyed count
-    aggregate + a 1-row moment reduce — the cuped shape exactly.
-    """.format(num=_DM_NUM, den=_DM_DEN)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").filter(
-        F.col("event_type").isin(_DM_NUM, _DM_DEN)
-    )
-    per = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == _DM_NUM, 1).otherwise(0))
-        .cast("long").alias("x"),
-        F.sum(F.when(F.col("event_type") == _DM_DEN, 1).otherwise(0))
-        .cast("long").alias("y"),
-    ).filter(F.col("y") > 0)
-    m = per.agg(
-        F.count("*").cast("long").alias("n_users"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    n = F.col("n_users")
-    xb = F.col("sx") / n
-    yb = F.col("sy") / n
-    r = F.col("sx") / F.col("sy")
-    var_x = (F.col("sxx") - F.col("sx") * F.col("sx") / n) / n
-    var_y = (F.col("syy") - F.col("sy") * F.col("sy") / n) / n
-    cov = (F.col("sxy") - F.col("sx") * F.col("sy") / n) / n
-    var_r = (var_x + r * r * var_y - 2 * r * cov) / (n * yb * yb)
-    return m.select(
-        "n_users",
-        _r4(r).alias("ratio"),
-        _r4(var_r).alias("var_delta"),
-        _r4(F.sqrt(var_r)).alias("se_delta"),
-        _r4(var_x / (n * xb * xb)).alias("var_naive_num"),
-    )
-
-
-SQL_DELTA_METHOD_RATIO = f"""WITH per AS (
-  SELECT user_id,
-         sum(CASE WHEN event_type = '{_DM_NUM}' THEN 1 ELSE 0 END) AS x,
-         sum(CASE WHEN event_type = '{_DM_DEN}' THEN 1 ELSE 0 END) AS y
-  FROM events WHERE event_type IN ('{_DM_NUM}', '{_DM_DEN}')
-  GROUP BY user_id HAVING sum(CASE WHEN event_type = '{_DM_DEN}'
-                                   THEN 1 ELSE 0 END) > 0
-),
-m AS (
-  SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * x) AS sxx, sum(x * y) AS sxy, sum(y * y) AS syy
-  FROM per
-)
-SELECT CAST(n AS BIGINT) AS n_users,
-       round(sx * 1.0 / sy, 4) AS ratio,
-       round(((sxx - sx * sx * 1.0 / n) / n
-              + (sx * 1.0 / sy) * (sx * 1.0 / sy)
-                * (syy - sy * sy * 1.0 / n) / n
-              - 2 * (sx * 1.0 / sy) * (sxy - sx * sy * 1.0 / n) / n)
-             / (n * (sy * 1.0 / n) * (sy * 1.0 / n)), 4) AS var_delta,
-       round(sqrt(((sxx - sx * sx * 1.0 / n) / n
-              + (sx * 1.0 / sy) * (sx * 1.0 / sy)
-                * (syy - sy * sy * 1.0 / n) / n
-              - 2 * (sx * 1.0 / sy) * (sxy - sx * sy * 1.0 / n) / n)
-             / (n * (sy * 1.0 / n) * (sy * 1.0 / n))), 4) AS se_delta,
-       round(((sxx - sx * sx * 1.0 / n) / n)
-             / (n * (sx * 1.0 / n) * (sx * 1.0 / n)), 4) AS var_naive_num
-FROM m"""
-
-
-# ---------------------------------------------------------------------------
-# Politeness-bound crawl makespan (Cho & Garcia-Molina's scheduling bound)
-# ---------------------------------------------------------------------------
-
-_CRAWL_DELAY_S = 2        # per-host politeness delay between fetches
-_CRAWL_WORKERS = 16
-
-
-def q_crawl_makespan(spark, sf_dir):
-    """The politeness long-pole analysis every crawler capacity plan
-    starts from (Cho & Garcia-Molina's crawl-ordering work assumes it;
-    robots crawl-delay makes it binding): with a {d}s per-host delay, a
-    host with n pages takes n·{d}s REGARDLESS of worker count — so the
-    crawl's lower bound is max(host serial time, total work / workers).
-    Per host: page count, serial seconds, and its share of the bound;
-    every row also carries the fleet bound for {w} workers and whether
-    THIS host is the long pole (the host you shard by ip-range or
-    negotiate a higher rate for).
-
-    Determinism: integer page counts × integer delay; the bound is a
-    greatest() of two integers (total work is integer-divided, ceil).
-    Scale shape: one map-side host aggregate; the bound is a 1-row
-    broadcast back — the planner never shuffles more than |hosts| rows.
-    """.format(d=_CRAWL_DELAY_S, w=_CRAWL_WORKERS)
-    per = _docs(spark, sf_dir).groupBy(
-        F.col("source").alias("host")
-    ).agg(F.count("*").cast("long").alias("n_pages"))
-    per = per.withColumn(
-        "serial_s", (F.col("n_pages") * _CRAWL_DELAY_S).cast("long")
-    )
-    bound = per.agg(
-        F.max("serial_s").alias("_mx"),
-        F.ceil(
-            F.sum("serial_s") / F.lit(float(_CRAWL_WORKERS))
-        ).cast("long").alias("_fleet"),
-    ).select(
-        F.greatest("_mx", "_fleet").alias("makespan_s"), "_mx"
-    )
-    return (
-        per.crossJoin(F.broadcast(bound))
-        .select(
-            "host", "n_pages", "serial_s", "makespan_s",
-            (F.col("serial_s") == F.col("_mx")).alias("long_pole"),
-            _r4(F.col("serial_s") / F.col("makespan_s")).alias("share"),
-        )
-        .orderBy(F.col("serial_s").desc(), F.col("host").asc())
-    )
-
-
-SQL_CRAWL_MAKESPAN = f"""WITH per AS (
-  SELECT source AS host, count(*) AS n_pages,
-         count(*) * {_CRAWL_DELAY_S} AS serial_s
-  FROM documents GROUP BY source
-),
-bound AS (
-  SELECT greatest(max(serial_s),
-                  CAST(ceil(sum(serial_s) / {float(_CRAWL_WORKERS)})
-                       AS BIGINT)) AS makespan_s,
-         max(serial_s) AS mx
-  FROM per
-)
-SELECT host, CAST(n_pages AS BIGINT) AS n_pages,
-       CAST(serial_s AS BIGINT) AS serial_s,
-       CAST(bound.makespan_s AS BIGINT) AS makespan_s,
-       (serial_s = bound.mx) AS long_pole,
-       round(serial_s * 1.0 / bound.makespan_s, 4) AS share
-FROM per CROSS JOIN bound
-ORDER BY serial_s DESC, host ASC"""
-
-
-# ---------------------------------------------------------------------------
-# Distinct-n diversity (Li et al., NAACL 2016 distinct-1/-2)
-# ---------------------------------------------------------------------------
-
-
-def q_distinct_ngrams(spark, sf_dir):
-    """Corpus n-gram diversity distinct-n = |unique n-grams| / |total
-    n-grams| for n = 1..3 (Li et al., NAACL 2016 — the degeneracy
-    metric for generated text, and for web corpora the quick read on
-    template/boilerplate saturation: a crawl dominated by mirrors
-    collapses distinct-2 long before exact dedup fires).  One row per
-    n with both counts and the ratio.
-
-    Determinism: integer distinct/total counts, one division.  Scale
-    shape: grams build NARROWLY inside the scan (the _word_grams
-    transform — no token explode + window); each n is one
-    count_distinct aggregate, i.e. the exact-dedup shuffle keyed by
-    gram; at 10^12 tokens the standard swap is HLL (hll_distinct) —
-    this entry is the exact twin the sketch is validated against.
-    """
-    rows = []
-    for n in (1, 2, 3):
-        g = _word_grams(spark, sf_dir, n).select("g")
-        rows.append(
-            g.agg(
-                F.lit(n).alias("n"),
-                F.count("*").cast("long").alias("total"),
-                F.count_distinct("g").cast("long").alias("uniq"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out.select(
-        "n", "total", "uniq",
-        _r4(F.col("uniq") / F.col("total")).alias("distinct_n"),
-    ).orderBy("n")
-
-
-def _distinct_sql(n: int) -> str:
-    joins = " || ' ' || ".join(
-        f"a[i + {j}]" for j in range(n)
-    )
-    return f"""
-  SELECT {n} AS n, count(*) AS total, count(DISTINCT g) AS uniq FROM (
-    SELECT unnest(CASE WHEN len(a) >= {n}
-                  THEN list_transform(range(1, len(a) - {n - 1} + 1),
-                                      i -> {joins})
-                  ELSE [] END) AS g
-    FROM (SELECT list_filter(regexp_split_to_array(lower(text),
-                             '[^a-z0-9]+'), x -> x <> '') AS a
-          FROM documents))"""
-
-
-SQL_DISTINCT_NGRAMS = f"""SELECT n, CAST(total AS BIGINT) AS total,
-       CAST(uniq AS BIGINT) AS uniq,
-       round(uniq * 1.0 / total, 4) AS distinct_n
-FROM ({_distinct_sql(1)}
-UNION ALL{_distinct_sql(2)}
-UNION ALL{_distinct_sql(3)})
-ORDER BY n"""
-
-
-# ---------------------------------------------------------------------------
-# Rich-club coefficient (Zhou & Mondragón 2004; Colizza et al. 2006)
-# ---------------------------------------------------------------------------
-
-_RC_THRESHOLDS = (2, 4, 8)
-
-
-def q_rich_club(spark, sf_dir):
-    """Rich-club coefficient φ(k) (Zhou & Mondragón, IEEE Comm. Lett.
-    2004) of the undirected link graph: among nodes with degree > k,
-    the realized fraction of possible edges — do the hubs of the web
-    graph preferentially interlink (the "rich club" that makes hub
-    seeding and hub-first caching work), or are they mutually distant?
-    One row per threshold k ∈ {ks} with club size, internal edge
-    count, and φ.
-
-    Determinism: integer degrees, edge counts, and N·(N−1)/2; one
-    division.  Scale shape: degrees are one map-side aggregate; the
-    club-internal edge count is the edge table semi-joined TWICE
-    against the (tiny, broadcast) club membership — never a node×node
-    join; thresholds multiply rows by |ks| only.
-    """.format(ks=list(_RC_THRESHOLDS))
-    _, edges = _link_edges(spark, sf_dir)
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionByName(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
-    ks = spark.createDataFrame(
-        [(k,) for k in _RC_THRESHOLDS], "k long"
-    )
-    club = deg.crossJoin(F.broadcast(ks)).filter(
-        F.col("deg") > F.col("k")
-    ).select("k", "v")
-    sizes = club.groupBy("k").agg(F.count("*").cast("long").alias("n_club"))
-    e_in = (
-        und.crossJoin(F.broadcast(ks.select(F.col("k").alias("k2"))))
-        .join(
-            club.select(F.col("k").alias("k2"), F.col("v").alias("a")),
-            ["k2", "a"],
-        )
-        .join(
-            club.select(F.col("k").alias("k2"), F.col("v").alias("b")),
-            ["k2", "b"],
-        )
-        .groupBy(F.col("k2").alias("k"))
-        .agg(F.count("*").cast("long").alias("e_club"))
-    )
-    return (
-        sizes.join(e_in, "k", "left")
-        .select(
-            "k", "n_club",
-            F.coalesce("e_club", F.lit(0)).cast("long").alias("e_club"),
-            F.when(
-                F.col("n_club") >= 2,
-                _r4(
-                    F.coalesce("e_club", F.lit(0))
-                    * 2.0
-                    / (F.col("n_club") * (F.col("n_club") - 1))
-                ),
-            ).otherwise(F.lit(0.0)).alias("phi"),
-        )
-        .orderBy("k")
-    )
-
-
-SQL_RICH_CLUB = f"""WITH {_edges_sql()},
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM edges
-),
-deg AS (
-  SELECT v, count(*) AS deg FROM (
-    SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
-  GROUP BY v
-),
-ks AS (SELECT * FROM (VALUES {", ".join(f"({k})" for k in _RC_THRESHOLDS)}) AS t(k)),
-club AS (
-  SELECT ks.k, deg.v FROM deg CROSS JOIN ks WHERE deg.deg > ks.k
-),
-sizes AS (SELECT k, count(*) AS n_club FROM club GROUP BY k),
-e_in AS (
-  SELECT ca.k, count(*) AS e_club
-  FROM und u
-  JOIN club ca ON u.a = ca.v
-  JOIN club cb ON u.b = cb.v AND ca.k = cb.k
-  GROUP BY ca.k
-)
-SELECT s.k, CAST(s.n_club AS BIGINT) AS n_club,
-       CAST(coalesce(e.e_club, 0) AS BIGINT) AS e_club,
-       CASE WHEN s.n_club >= 2
-            THEN round(coalesce(e.e_club, 0) * 2.0
-                       / (s.n_club * (s.n_club - 1)), 4)
-            ELSE 0.0 END AS phi
-FROM sizes s LEFT JOIN e_in e ON s.k = e.k
-ORDER BY s.k"""
 
 
 # ---------------------------------------------------------------------------
@@ -17335,1378 +6119,6 @@ SELECT CAST(tot.m AS BIGINT) AS n_edges,
        round((same.s * 1.0 / tot.m - ab.eab) / (1.0 - ab.eab), 4)
          AS assortativity
 FROM tot CROSS JOIN same CROSS JOIN ab"""
-
-
-# ---------------------------------------------------------------------------
-# Silhouette of the trained IVF clustering (Rousseeuw, JCAM 1987)
-# ---------------------------------------------------------------------------
-
-_SIL_SAMPLE = 30
-
-
-def q_ivf_silhouette(spark, sf_dir):
-    """Silhouette coefficient (Rousseeuw, J. Comput. Appl. Math. 1987)
-    of the trained IVF clustering, on a {s}-vector sample: per sampled
-    vector, a = mean Euclidean distance to its own cell's other
-    members, b = min over other cells of the mean distance to that
-    cell, s = (b−a)/max(a,b) — the cluster-quality QA that says
-    whether the IVF cells ann_ivf_recall probes actually separate
-    (s ≈ 0 → probing one cell misses true neighbours ≈ random, the
-    recall curve explains why).  Output per cell: sampled count and
-    mean silhouette; computed over the SAME _ivf_model both search
-    entries use.
-
-    Determinism: cell assignment reuses _ivf_model's 6-decimal rounded
-    centroids (no flips); distances are identical doubles; per-(vector,
-    cell) means are single divisions; the min-over-cells picks among
-    identical doubles.  Scale shape: sample × corpus distance pairs —
-    the measurement is O(s·n) by design (it is run on a sample exactly
-    because of that); per-pair work collapses map-side to (sample,
-    cell) means before anything shuffles.
-    """.format(s=_SIL_SAMPLE)
-    final = _ivf_assignments(spark, sf_dir)
-    sample = final.filter(F.col("vec_id") < _SIL_SAMPLE).select(
-        F.col("vec_id").alias("sid"), F.col("cl").alias("scl"),
-        F.col("e").alias("se"),
-    )
-    other = final.select(
-        F.col("vec_id").alias("oid"), F.col("cl").alias("ocl"),
-        F.col("e").alias("oe"),
-    )
-    d = F.sqrt(
-        F.aggregate(
-            F.zip_with("se", "oe", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    pairs = (
-        sample.join(other, F.col("sid") != F.col("oid"))
-        .select("sid", "scl", "ocl", d.alias("d"))
-    )
-    per_cell = pairs.groupBy("sid", "scl", "ocl").agg(
-        F.avg("d").alias("md")
-    )
-    a = per_cell.filter(F.col("scl") == F.col("ocl")).select(
-        "sid", F.col("md").alias("a")
-    )
-    b = (
-        per_cell.filter(F.col("scl") != F.col("ocl"))
-        .groupBy("sid")
-        .agg(F.min("md").alias("b"))
-    )
-    s = (
-        sample.select("sid", "scl")
-        .join(a, "sid")
-        .join(b, "sid")
-        .withColumn(
-            "s",
-            (F.col("b") - F.col("a")) / F.greatest("a", "b"),
-        )
-    )
-    return (
-        s.groupBy(F.col("scl").alias("cl"))
-        .agg(
-            F.count("*").cast("long").alias("n_sampled"),
-            _r4(F.avg("s")).alias("mean_silhouette"),
-        )
-        .orderBy("cl")
-    )
-
-
-SQL_IVF_SILHOUETTE = f"""WITH {_IVF_ASSIGN_SQL},
-sample AS (SELECT vec_id AS sid, cl AS scl, e AS se FROM final
-           WHERE vec_id < {_SIL_SAMPLE}),
-pairs AS (
-  SELECT s.sid, s.scl, f.cl AS ocl, list_distance(s.se, f.e) AS d
-  FROM sample s JOIN final f ON s.sid <> f.vec_id
-),
-per_cell AS (
-  SELECT sid, scl, ocl, avg(d) AS md FROM pairs GROUP BY sid, scl, ocl
-),
-aa AS (SELECT sid, md AS a FROM per_cell WHERE scl = ocl),
-bb AS (SELECT sid, min(md) AS b FROM per_cell WHERE scl <> ocl
-       GROUP BY sid),
-sil AS (
-  SELECT s.scl AS cl, (bb.b - aa.a) / greatest(aa.a, bb.b) AS s
-  FROM sample s JOIN aa ON s.sid = aa.sid JOIN bb ON s.sid = bb.sid
-)
-SELECT cl, CAST(count(*) AS BIGINT) AS n_sampled,
-       round(avg(s), 4) AS mean_silhouette
-FROM sil GROUP BY cl ORDER BY cl"""
-
-
-# ---------------------------------------------------------------------------
-# Tail-at-scale fan-out amplification (Dean & Barroso, CACM 2013)
-# ---------------------------------------------------------------------------
-
-_TAS_FANOUTS = (1, 10, 100)
-
-
-def q_tail_at_scale(spark, sf_dir):
-    """"The tail at scale" (Dean & Barroso, CACM 2013) fan-out
-    arithmetic on the empirical latency distribution (event values,
-    the latency_quantiles population): a request that fans out to K
-    shards completes at the MAX of K draws, so its median is the
-    per-shard quantile 0.5^(1/K) and its p99 the quantile
-    0.99^(1/K) — at K=100 the fan-out median sits at the per-shard
-    p99.3, the number that justifies hedged requests and tied
-    requests.  One row per K with both implied levels and latencies.
-
-    Determinism: the implied levels are python-literal doubles
-    identical in both engines; exact interpolated percentile is the
-    latency_quantiles-proven pairing.  Scale shape: one exact
-    percentile aggregate over the value column — a single reduce; the
-    K table is 3 broadcast rows.
-    """
-    lv = {
-        k: (0.5 ** (1.0 / k), 0.99 ** (1.0 / k)) for k in _TAS_FANOUTS
-    }
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    levels = sorted({x for pair in lv.values() for x in pair})
-    arr = ", ".join(repr(x) for x in levels)
-    q = ev.agg(
-        F.expr(f"percentile(value, array({arr}))").alias("q")
-    )
-    idx = {x: i for i, x in enumerate(levels)}
-    rows = None
-    for k in _TAS_FANOUTS:
-        m, p = lv[k]
-        r = q.select(
-            F.lit(k).cast("long").alias("fanout"),
-            F.round(F.lit(m), 6).alias("median_level"),
-            _r4(F.col("q")[idx[m]]).alias("median_latency"),
-            F.round(F.lit(p), 6).alias("p99_level"),
-            _r4(F.col("q")[idx[p]]).alias("p99_latency"),
-        )
-        rows = r if rows is None else rows.unionByName(r)
-    return rows.orderBy("fanout")
-
-
-def _tas_sql() -> str:
-    parts = []
-    for k in _TAS_FANOUTS:
-        m, p = 0.5 ** (1.0 / k), 0.99 ** (1.0 / k)
-        parts.append(f"""
-  SELECT {k} AS fanout, round({m!r}, 6) AS median_level,
-         round(quantile_cont(value, {m!r}), 4) AS median_latency,
-         round({p!r}, 6) AS p99_level,
-         round(quantile_cont(value, {p!r}), 4) AS p99_latency
-  FROM events""")
-    return "SELECT * FROM (" + " UNION ALL".join(parts) + ") ORDER BY fanout"
-
-
-SQL_TAIL_AT_SCALE = _tas_sql()
-
-
-# ---------------------------------------------------------------------------
-# Spearman rank correlation of OPIC vs PageRank (the crawler's shortcut QA)
-# ---------------------------------------------------------------------------
-
-
-def q_spearman_pr_opic(spark, sf_dir):
-    """Spearman rank correlation between OPIC importance and PageRank
-    over ALL nodes — the validation Abiteboul's crawler shortcut lives
-    or dies by: OPIC exists to approximate PageRank's ORDERING while
-    crawling, so the number that matters is rank agreement, not value
-    agreement; ρ = 1 − 6·Σd²/(n(n²−1)) with d the per-node rank gap
-    (kendall_tau/rbo_overlap read top-10 lists; this reads the full
-    vectors).
-
-    Determinism: both vectors are the hash-green 8-decimal iterations;
-    ranks break ties by doc_id; Σd² is a pure integer.  Scale shape:
-    two rank windows over the |nodes|-row vectors and one integer
-    reduce — nothing touches the edge table beyond what the two
-    (already Pregel-shaped) iterations shuffle.
-    """
-    from pyspark.sql import Window
-
-    pr = q_pagerank(spark, sf_dir)
-    op = q_opic_priority(spark, sf_dir).select("doc_id", "importance")
-    j = pr.join(op, "doc_id")
-    rp = F.row_number().over(
-        Window.orderBy(F.col("pr").desc(), F.col("doc_id").asc())
-    )
-    ro = F.row_number().over(
-        Window.orderBy(F.col("importance").desc(), F.col("doc_id").asc())
-    )
-    ranked = j.select(
-        "doc_id", rp.alias("rp"), ro.alias("ro")
-    ).withColumn("d2", (F.col("rp") - F.col("ro"))
-                 * (F.col("rp") - F.col("ro")))
-    return ranked.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("d2").cast("long").alias("sum_d2"),
-    ).select(
-        "n", "sum_d2",
-        _r4(
-            F.lit(1.0)
-            - F.lit(6.0) * F.col("sum_d2")
-            / (F.col("n") * (F.col("n") * F.col("n") - 1))
-        ).alias("spearman_rho"),
-    )
-
-
-SQL_SPEARMAN_PR_OPIC = f"""WITH pr AS ({SQL_PAGERANK}),
-op AS ({SQL_OPIC_PRIORITY}),
-ranked AS (
-  SELECT pr.doc_id,
-         row_number() OVER (ORDER BY pr.pr DESC, pr.doc_id ASC) AS rp,
-         row_number() OVER (ORDER BY op.importance DESC, op.doc_id ASC)
-           AS ro
-  FROM pr JOIN op ON pr.doc_id = op.doc_id
-)
-SELECT CAST(count(*) AS BIGINT) AS n,
-       CAST(sum((rp - ro) * (rp - ro)) AS BIGINT) AS sum_d2,
-       round(1.0 - 6.0 * sum((rp - ro) * (rp - ro))
-             / (count(*) * (count(*) * count(*) - 1.0)), 4)
-         AS spearman_rho
-FROM ranked"""
-
-
-# ---------------------------------------------------------------------------
-# Winsorized mean (the metric-robustness standard; Tukey/Dixon 1960s)
-# ---------------------------------------------------------------------------
-
-_WINS_LO, _WINS_HI = 0.01, 0.99
-
-
-def q_winsorized_mean(spark, sf_dir):
-    """Winsorized mean of event value per event type — cap at the exact
-    p{lo}/p{hi} percentiles instead of dropping (Tukey's robustification;
-    what every experimentation platform applies to revenue-style
-    metrics before delta_method_ratio/cuped touch them, because one
-    whale user otherwise owns the variance): per type, the raw mean,
-    the winsorized mean, both caps, and the fraction of values capped.
-
-    Determinism: caps are the exact-percentile pairing over the per-type
-    group; capping is least/greatest; capped counts are integers; means
-    round once.  Scale shape: one per-type percentile aggregate
-    broadcast back into a narrow capped re-aggregate — two passes,
-    both map-side-combinable, |types| output rows.
-    """.format(lo=int(_WINS_LO * 100), hi=int(_WINS_HI * 100))
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value"
-    )
-    caps = ev.groupBy("event_type").agg(
-        F.expr(
-            f"percentile(value, array({_WINS_LO!r}, {_WINS_HI!r}))"
-        ).alias("q")
-    ).select(
-        "event_type", F.col("q")[0].alias("lo"), F.col("q")[1].alias("hi")
-    )
-    capped = ev.join(F.broadcast(caps), "event_type").select(
-        "event_type", "value", "lo", "hi",
-        F.greatest(F.col("lo"), F.least(F.col("hi"), F.col("value")))
-        .alias("w"),
-    )
-    return (
-        capped.groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            _r4(F.avg("value")).alias("raw_mean"),
-            _r4(F.avg("w")).alias("winsorized_mean"),
-            _r4(F.max("lo")).alias("cap_lo"),
-            _r4(F.max("hi")).alias("cap_hi"),
-            _r4(
-                F.sum(
-                    (F.col("value") != F.col("w")).cast("int")
-                ) / F.count("*")
-            ).alias("frac_capped"),
-        )
-        .orderBy("event_type")
-    )
-
-
-SQL_WINSORIZED_MEAN = f"""WITH caps AS (
-  SELECT event_type,
-         quantile_cont(value, {_WINS_LO!r}) AS lo,
-         quantile_cont(value, {_WINS_HI!r}) AS hi
-  FROM events GROUP BY event_type
-),
-capped AS (
-  SELECT e.event_type, e.value, c.lo, c.hi,
-         greatest(c.lo, least(c.hi, e.value)) AS w
-  FROM events e JOIN caps c USING (event_type)
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-       round(avg(value), 4) AS raw_mean,
-       round(avg(w), 4) AS winsorized_mean,
-       round(max(lo), 4) AS cap_lo,
-       round(max(hi), 4) AS cap_hi,
-       round(sum(CASE WHEN value <> w THEN 1 ELSE 0 END) * 1.0
-             / count(*), 4) AS frac_capped
-FROM capped GROUP BY event_type ORDER BY event_type"""
-
-
-# ---------------------------------------------------------------------------
-# Cardinality-estimation q-error (Leis et al., VLDB 2015 framing)
-# ---------------------------------------------------------------------------
-
-
-def q_cardinality_estimation(spark, sf_dir):
-    """Join/conjunction cardinality estimation under the independence
-    assumption — the query-optimizer staple whose failure Leis et al.
-    ("How good are query optimizers, really?", VLDB 2015) measured
-    with the q-error: for each AND pair, the estimated intersection
-    df̂ = df_a·df_b/N versus the TRUE intersection, and q-error =
-    max(df̂/df, df/df̂) — the multiplicative miss a WAND/routing cost
-    model inherits when terms correlate (our skip_cost_model and
-    partition_cost consume exactly these df's).
-
-    Determinism: integer counts; the estimate and q-error are single
-    divisions.  Scale shape: true intersections come from one
-    self-semi-join of the |pairs| posting lists (rarest-first, the
-    bm25_and shape); estimates are |pairs| arithmetic rows.
-    """
-    terms = sorted({t for p in _SKIP_PAIRS for t in p})
-    tf = _tokens(spark, sf_dir).filter(F.col("term").isin(terms)).select(
-        "term", "doc_id"
-    ).distinct()
-    df = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    nd = _dl(spark, sf_dir).agg(F.count("*").cast("long").alias("n"))
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in _SKIP_PAIRS], "qa string, qb string"
-    )
-    inter = (
-        tf.alias("x")
-        .join(
-            tf.alias("y"),
-            (F.col("x.doc_id") == F.col("y.doc_id"))
-            & (F.col("x.term") < F.col("y.term")),
-        )
-        .groupBy(
-            F.col("x.term").alias("ta"), F.col("y.term").alias("tb")
-        )
-        .agg(F.count("*").cast("long").alias("actual"))
-    )
-    j = (
-        pairs.withColumn(
-            "ta", F.least("qa", "qb")
-        ).withColumn("tb", F.greatest("qa", "qb"))
-        .join(F.broadcast(df.select(F.col("term").alias("qa"),
-                                    F.col("df").alias("df_a"))), "qa")
-        .join(F.broadcast(df.select(F.col("term").alias("qb"),
-                                    F.col("df").alias("df_b"))), "qb")
-        .join(inter, ["ta", "tb"], "left")
-        .crossJoin(F.broadcast(nd))
-    )
-    est = F.col("df_a") * F.col("df_b") / F.col("n")
-    act = F.coalesce("actual", F.lit(0)).cast("long")
-    return j.select(
-        "qa", "qb", "df_a", "df_b",
-        act.alias("actual"),
-        _r4(est).alias("estimated"),
-        _r4(F.greatest(est / act, act / est)).alias("q_error"),
-    ).orderBy("qa", "qb")
-
-
-SQL_CARDINALITY_ESTIMATION = f"""WITH {_TOKS_SQL},
-tf AS (SELECT DISTINCT term, doc_id FROM toks
-       WHERE term IN ({", ".join(f"'{t}'" for t in sorted({t for p in _SKIP_PAIRS for t in p}))})),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-nd AS (SELECT count(DISTINCT doc_id) AS n FROM toks),
-pairs AS (SELECT * FROM (VALUES {", ".join(f"('{a}', '{b}')" for a, b in _SKIP_PAIRS)}) AS t(qa, qb)),
-inter AS (
-  SELECT x.term AS ta, y.term AS tb, count(*) AS actual
-  FROM tf x JOIN tf y ON x.doc_id = y.doc_id AND x.term < y.term
-  GROUP BY x.term, y.term
-)
-SELECT p.qa, p.qb, CAST(a.df AS BIGINT) AS df_a,
-       CAST(b.df AS BIGINT) AS df_b,
-       CAST(coalesce(i.actual, 0) AS BIGINT) AS actual,
-       round(a.df * b.df * 1.0 / nd.n, 4) AS estimated,
-       round(greatest((a.df * b.df * 1.0 / nd.n)
-                      / coalesce(i.actual, 0),
-                      coalesce(i.actual, 0)
-                      / (a.df * b.df * 1.0 / nd.n)), 4) AS q_error
-FROM pairs p
-JOIN df a ON p.qa = a.term JOIN df b ON p.qb = b.term
-LEFT JOIN inter i ON least(p.qa, p.qb) = i.ta
-                 AND greatest(p.qa, p.qb) = i.tb
-CROSS JOIN nd
-ORDER BY p.qa, p.qb"""
-
-
-# ---------------------------------------------------------------------------
-# Chao1 vocabulary estimation (Chao, Scand. J. Statist. 1984)
-# ---------------------------------------------------------------------------
-
-
-def q_chao1_vocab(spark, sf_dir):
-    """Chao1 unseen-species estimation (Chao 1984; the ecology
-    estimator IR borrowed for vocabulary and NDV prediction, the
-    nonparametric cousin of heaps_law's power-law fit): from the
-    half-corpus sample (even doc_ids), estimate the total BIGRAM vocabulary
-    (the unigram vocab is tiny and fully seen here; bigrams have the
-    long singleton tail the estimator needs) as Ŝ = d + f1²/(2·f2) where f1/f2 are the counts of terms seen
-    once/twice in the sample (good_turing's frequency-of-frequencies),
-    then compare against the full corpus' actual distinct-term count —
-    the estimator a pipeline uses to size dictionaries and NDV sketches
-    BEFORE paying the full scan.
-
-    Determinism: all integer counts; Ŝ and the error ratio are single
-    divisions.  Scale shape: one tf aggregate on the sampled half, a
-    ≤2-row frequency-of-frequency rollup, and one exact distinct on
-    the full corpus as the ground truth (the part Chao1 exists to
-    avoid at 10^12 tokens).
-    """
-    grams = _word_grams(spark, sf_dir, 2).select("doc_id", "g")
-    sample = grams.filter(F.col("doc_id") % 2 == 0)
-    sc = sample.groupBy("g").agg(F.count("*").alias("c"))
-    fof = sc.agg(
-        F.count("*").cast("long").alias("d_sample"),
-        F.sum((F.col("c") == 1).cast("int")).cast("long").alias("f1"),
-        F.sum((F.col("c") == 2).cast("int")).cast("long").alias("f2"),
-    )
-    truth = grams.agg(
-        F.count_distinct("g").cast("long").alias("d_full")
-    )
-    est = F.col("d_sample") + (
-        F.col("f1") * F.col("f1")
-        / (2.0 * F.greatest(F.col("f2"), F.lit(1)))
-    )
-    return (
-        fof.crossJoin(F.broadcast(truth))
-        .select(
-            "d_sample", "f1", "f2", "d_full",
-            _r4(est).alias("chao1_est"),
-            _r4(est / F.col("d_full")).alias("est_over_truth"),
-        )
-    )
-
-
-SQL_CHAO1_VOCAB = f"""WITH grams AS (
-  SELECT doc_id, unnest(CASE WHEN len(a) >= 2
-                 THEN list_transform(range(1, len(a)),
-                                     i -> a[i] || ' ' || a[i + 1])
-                 ELSE [] END) AS g
-  FROM (SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
-                                   '[^a-z0-9]+'), x -> x <> '') AS a
-        FROM documents)
-),
-sc AS (
-  SELECT g, count(*) AS c FROM grams WHERE doc_id % 2 = 0
-  GROUP BY g
-),
-fof AS (
-  SELECT count(*) AS d_sample,
-         sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS f1,
-         sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS f2
-  FROM sc
-),
-truth AS (SELECT count(DISTINCT g) AS d_full FROM grams)
-SELECT CAST(d_sample AS BIGINT) AS d_sample, CAST(f1 AS BIGINT) AS f1,
-       CAST(f2 AS BIGINT) AS f2, CAST(d_full AS BIGINT) AS d_full,
-       round(d_sample + f1 * f1 / (2.0 * greatest(f2, 1)), 4)
-         AS chao1_est,
-       round((d_sample + f1 * f1 / (2.0 * greatest(f2, 1))) / d_full, 4)
-         AS est_over_truth
-FROM fof CROSS JOIN truth"""
-
-
-# ---------------------------------------------------------------------------
-# Sample-ratio-mismatch guardrail (Fabijan et al., KDD 2019 diagnostics)
-# ---------------------------------------------------------------------------
-
-_SRM_BUCKETS = 2
-
-
-def q_srm_check(spark, sf_dir):
-    """Sample-ratio-mismatch check (Fabijan et al., "Diagnosing sample
-    ratio mismatch in online controlled experiments", KDD 2019) — the
-    guardrail every A/B platform runs before reading any metric: hash
-    users into {b} buckets (engine-portable md5, the assignment a real
-    platform would ship), and test the observed split against the
-    expected uniform ratio with the χ² statistic Σ(o−e)²/e; χ² > 3.84
-    (α=0.05, 1 dof) means the assignment itself is broken and every
-    downstream readout (cuped_adjustment, delta_method_ratio,
-    permutation_sigtest) is void.
-
-    Determinism: bucket counts are integers; e = n/{b} and the χ² are
-    single expressions.  Scale shape: one distinct-user aggregate and
-    a {b}-row rollup — the check costs one pass regardless of event
-    volume.
-    """.format(b=_SRM_BUCKETS)
-    users = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id").distinct()
-    )
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    per = users.select(
-        F.pmod(h, F.lit(_SRM_BUCKETS)).alias("bucket")
-    ).groupBy("bucket").agg(F.count("*").cast("long").alias("n"))
-    tot = per.agg(F.sum("n").alias("_t"))
-    chi = per.crossJoin(F.broadcast(tot)).select(
-        "bucket", "n",
-        (F.col("_t") / F.lit(float(_SRM_BUCKETS))).alias("_e"),
-    )
-    stat = chi.agg(
-        F.sum(
-            (F.col("n") - F.col("_e")) * (F.col("n") - F.col("_e"))
-            / F.col("_e")
-        ).alias("_chi2")
-    )
-    return (
-        chi.crossJoin(F.broadcast(stat))
-        .select(
-            "bucket", "n",
-            _r4("_e").alias("expected"),
-            _r4("_chi2").alias("chi2"),
-            (F.col("_chi2") > 3.841).alias("srm_flag"),
-        )
-        .orderBy("bucket")
-    )
-
-
-SQL_SRM_CHECK = f"""WITH users AS (
-  SELECT DISTINCT user_id FROM events
-),
-per AS (
-  SELECT CAST(CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)),
-                          1, 8)) AS BIGINT) % {_SRM_BUCKETS} AS BIGINT)
-           AS bucket,
-         count(*) AS n
-  FROM users GROUP BY 1
-),
-tot AS (SELECT sum(n) AS t FROM per),
-chi AS (
-  SELECT bucket, n, tot.t / {float(_SRM_BUCKETS)} AS e
-  FROM per CROSS JOIN tot
-),
-stat AS (SELECT sum((n - e) * (n - e) / e) AS chi2 FROM chi)
-SELECT bucket, CAST(n AS BIGINT) AS n, round(e, 4) AS expected,
-       round(stat.chi2, 4) AS chi2,
-       (stat.chi2 > 3.841) AS srm_flag
-FROM chi CROSS JOIN stat ORDER BY bucket"""
-
-
-# ---------------------------------------------------------------------------
-# Watermark late-arrival accounting (the streaming-semantics batch mirror)
-# ---------------------------------------------------------------------------
-
-_LATE_WM_US = 3_600_000_000      # 1h watermark, in microseconds
-_LATE_JIT_S = 7200               # deterministic arrival jitter bound (2h)
-
-
-def q_late_arrival_stats(spark, sf_dir):
-    """Watermark late-data accounting — the batch mirror of Structured
-    Streaming's `withWatermark` drop rule: replaying each event_type's
-    stream in arrival order (event time plus a deterministic 0-2h
-    per-event jitter — the synthetic log is time-sorted, so the jitter
-    IS the simulated network reordering), an event is LATE if its event time trails the
-    max event time seen so far by more than the 1h watermark — exactly
-    the rows a streaming aggregation would silently drop, which is why
-    platforms ship this count as a data-quality metric next to every
-    windowed job.  Per type: events, late events, late fraction, and
-    the worst lateness seen (the number that sizes the watermark).
-
-    Determinism: all integer microsecond arithmetic (unix_micros — the
-    same exact-µs idiom sessionize uses).  Scale shape: one running-max
-    window per event_type partition — in the streaming engine this is
-    ONE max-timestamp value of state per key; the batch window exists
-    to backfill and to verify that state, like ewma_forecast.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    ).withColumn(
-        # deterministic bounded network jitter (0..2h) so the replay is
-        # genuinely out of order — the synthetic log is time-sorted
-        "arr",
-        F.col("us")
-        + F.pmod(F.col("event_id") * F.lit(2654435761), F.lit(_LATE_JIT_S))
-        * 1_000_000,
-    )
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("arr", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    lab = ev.withColumn("hwm", F.max("us").over(w)).withColumn(
-        "late_by",
-        F.greatest(
-            F.coalesce(F.col("hwm") - F.col("us"), F.lit(0)), F.lit(0)
-        ),
-    )
-    return (
-        lab.groupBy("event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(
-                (F.col("late_by") > _LATE_WM_US).cast("int")
-            ).cast("long").alias("n_late"),
-            F.max("late_by").cast("long").alias("max_late_us"),
-        )
-        .withColumn(
-            "late_frac", _r4(F.col("n_late") / F.col("n_events"))
-        )
-        .orderBy("event_type")
-    )
-
-
-SQL_LATE_ARRIVAL_STATS = f"""WITH ev AS (
-  SELECT event_type, event_id, epoch_us(ts) AS us,
-         epoch_us(ts) + ((event_id * 2654435761) % {_LATE_JIT_S})
-           * 1000000 AS arr
-  FROM events
-),
-lab AS (
-  SELECT event_type,
-         greatest(coalesce(max(us) OVER (PARTITION BY event_type
-                    ORDER BY arr, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                  - us, 0), 0) AS late_by
-  FROM ev
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN late_by > {_LATE_WM_US} THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_late,
-       CAST(max(late_by) AS BIGINT) AS max_late_us,
-       round(sum(CASE WHEN late_by > {_LATE_WM_US} THEN 1 ELSE 0 END)
-             * 1.0 / count(*), 4) AS late_frac
-FROM lab GROUP BY event_type ORDER BY event_type"""
-
-
-# ---------------------------------------------------------------------------
-# Conjunction processing-order cost (the rarest-first optimizer rule)
-# ---------------------------------------------------------------------------
-
-_ORD_TERMS = ("dup", "merge", "join")
-
-
-def q_intersection_order_cost(spark, sf_dir):
-    """Why rarest-first: the true-cardinality cost of every processing
-    order for the 3-term conjunction {ts} — the candidate-driven model
-    cost(t1→t2→t3) = df(t1) + |t1∩t2| (each intermediate result is
-    what probes the next list; the final intersection is
-    order-invariant).  One row per permutation with its cost and cost
-    rank — the ascending-df order must rank first, which is the rule
-    the X3 ISRAnd driver (`plans/wand.py` rarest-first) and every
-    Boolean optimizer hard-code.
-
-    Determinism: df's and pairwise intersections are integer counts;
-    the permutation table is a 6-row literal.  Scale shape: 3 posting
-    lists + 3 pairwise semi-joins (the bm25_and shuffle), then 6 rows
-    of arithmetic.
-    """.format(ts=list(_ORD_TERMS))
-    import itertools
-
-    tf = _tokens(spark, sf_dir).filter(
-        F.col("term").isin(list(_ORD_TERMS))
-    ).select("term", "doc_id").distinct()
-    df = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    inter = (
-        tf.alias("x")
-        .join(
-            tf.alias("y"),
-            (F.col("x.doc_id") == F.col("y.doc_id"))
-            & (F.col("x.term") < F.col("y.term")),
-        )
-        .groupBy(F.col("x.term").alias("ta"), F.col("y.term").alias("tb"))
-        .agg(F.count("*").cast("long").alias("i2"))
-    )
-    perms = spark.createDataFrame(
-        [
-            ("->".join(p), p[0], min(p[0], p[1]), max(p[0], p[1]))
-            for p in itertools.permutations(_ORD_TERMS)
-        ],
-        "ord string, t1 string, pa string, pb string",
-    )
-    j = (
-        perms.join(
-            F.broadcast(df.select(F.col("term").alias("t1"),
-                                  F.col("df").alias("df1"))), "t1"
-        )
-        .join(
-            F.broadcast(inter.select(F.col("ta").alias("pa"),
-                                     F.col("tb").alias("pb"), "i2")),
-            ["pa", "pb"],
-        )
-        .withColumn("cost", (F.col("df1") + F.col("i2")).cast("long"))
-    )
-    from pyspark.sql import Window
-
-    rk = F.row_number().over(
-        Window.orderBy(F.col("cost").asc(), F.col("ord").asc())
-    )
-    return j.select(
-        "ord", "df1", F.col("i2").alias("first_intersection"), "cost",
-        rk.alias("cost_rank"),
-    ).orderBy("cost_rank")
-
-
-def _ord_sql() -> str:
-    import itertools
-
-    rows = ", ".join(
-        f"('{'->'.join(p)}', '{p[0]}', '{min(p[0], p[1])}',"
-        f" '{max(p[0], p[1])}')"
-        for p in itertools.permutations(_ORD_TERMS)
-    )
-    terms = ", ".join(f"'{t}'" for t in sorted(_ORD_TERMS))
-    return f"""WITH {_TOKS_SQL},
-tf AS (SELECT DISTINCT term, doc_id FROM toks WHERE term IN ({terms})),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-inter AS (
-  SELECT x.term AS ta, y.term AS tb, count(*) AS i2
-  FROM tf x JOIN tf y ON x.doc_id = y.doc_id AND x.term < y.term
-  GROUP BY x.term, y.term
-),
-perms AS (SELECT * FROM (VALUES {rows}) AS t(ord, t1, pa, pb)),
-costed AS (
-  SELECT p.ord, df.df AS df1, i.i2 AS first_intersection,
-         df.df + i.i2 AS cost
-  FROM perms p
-  JOIN df ON p.t1 = df.term
-  JOIN inter i ON p.pa = i.ta AND p.pb = i.tb
-)
-SELECT ord, CAST(df1 AS BIGINT) AS df1,
-       CAST(first_intersection AS BIGINT) AS first_intersection,
-       CAST(cost AS BIGINT) AS cost,
-       CAST(row_number() OVER (ORDER BY cost ASC, ord ASC) AS BIGINT)
-         AS cost_rank
-FROM costed ORDER BY cost_rank"""
-
-
-SQL_INTERSECTION_ORDER_COST = _ord_sql()
-
-
-# ---------------------------------------------------------------------------
-# Minimum detectable effect / power analysis (the experiment sizing formula)
-# ---------------------------------------------------------------------------
-
-_MDE_Z_ALPHA = 1.959964        # two-sided α = 0.05
-_MDE_Z_BETA = 0.841621         # power = 0.80
-
-
-def q_mde_power(spark, sf_dir):
-    """Experiment sizing: the minimum detectable effect at α=0.05 /
-    power=0.80 for the per-user '{m}' count metric under a 50/50
-    split, MDE = (z_α/2 + z_β)·sqrt(2·var/n) — the formula every A/B
-    calculator implements, evaluated on the REAL metric variance (the
-    same per-user aggregate cuped_adjustment and delta_method_ratio
-    read; winsorized_mean is what you run first when this variance is
-    whale-dominated).  Output: n per arm, metric mean and variance,
-    absolute MDE, and relative MDE.
-
-    Determinism: per-user counts are integers, so the moment sums are
-    exact; the MDE is one sqrt expression with literal z constants.
-    Scale shape: one user-keyed count aggregate + a 1-row moment
-    reduce — the cuped shape.
-    """.format(m=_DM_NUM)
-    per = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == _DM_NUM)
-        .groupBy("user_id")
-        .agg(F.count("*").cast("long").alias("x"))
-    )
-    m = per.agg(
-        F.count("*").cast("long").alias("n_users"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    n = F.col("n_users")
-    mean = F.col("sx") / n
-    var = (F.col("sxx") - F.col("sx") * F.col("sx") / n) / n
-    half_n = n / 2.0
-    mde = (
-        F.lit(_MDE_Z_ALPHA + _MDE_Z_BETA)
-        * F.sqrt(2.0 * var / half_n)
-    )
-    return m.select(
-        F.floor(half_n).cast("long").alias("n_per_arm"),
-        _r4(mean).alias("metric_mean"),
-        _r4(var).alias("metric_var"),
-        _r4(mde).alias("mde_abs"),
-        _r4(mde / mean).alias("mde_rel"),
-    )
-
-
-SQL_MDE_POWER = f"""WITH per AS (
-  SELECT user_id, count(*) AS x FROM events
-  WHERE event_type = '{_DM_NUM}' GROUP BY user_id
-),
-m AS (
-  SELECT count(*) AS n, sum(x) AS sx, sum(x * x) AS sxx FROM per
-)
-SELECT CAST(floor(n / 2.0) AS BIGINT) AS n_per_arm,
-       round(sx * 1.0 / n, 4) AS metric_mean,
-       round((sxx - sx * sx * 1.0 / n) / n, 4) AS metric_var,
-       round({_MDE_Z_ALPHA + _MDE_Z_BETA}
-             * sqrt(2.0 * ((sxx - sx * sx * 1.0 / n) / n) / (n / 2.0)),
-             4) AS mde_abs,
-       round({_MDE_Z_ALPHA + _MDE_Z_BETA}
-             * sqrt(2.0 * ((sxx - sx * sx * 1.0 / n) / n) / (n / 2.0))
-             / (sx * 1.0 / n), 4) AS mde_rel
-FROM m"""
-
-
-# ---------------------------------------------------------------------------
-# Otsu automatic threshold (Otsu, IEEE TSMC 1979)
-# ---------------------------------------------------------------------------
-
-_OTSU_BINS = 100
-
-
-def q_otsu_threshold(spark, sf_dir):
-    """Otsu's automatic threshold (IEEE TSMC 1979 — the image-binarization
-    classic applied where a pipeline actually needs it: picking the
-    quality-score cutoff WITHOUT labels): over the {b}-bin histogram of
-    quality_classifier's p_keep, choose the threshold maximizing the
-    between-class variance ω₀ω₁(μ₀−μ₁)² — i.e. the split a 2-means on
-    the score axis would find.  Output: the argmax bin as a threshold,
-    its between-class variance, both class masses, and both class means
-    — the data-driven alternative to calibration_curve's fixed 0.5.
-
-    Determinism: the histogram is integer counts on the ROUNDED score;
-    per-candidate variances are single expressions over integer prefix
-    sums (scores enter as the exact 100·p integers); argmax breaks ties
-    toward the lower bin.  Scale shape: one score scan collapses
-    map-side to ≤{b} histogram rows; the threshold sweep is a window
-    over those {b} rows only.
-    """.format(b=_OTSU_BINS)
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir)
-    stops = [s.strip("'") for s in _EN_STOPS.strip("()").split(",")]
-    feats = toks.groupBy("doc_id").agg(
-        F.avg(F.length("term")).alias("_len"),
-        (F.sum(F.when(F.col("term").isin(stops), 1).otherwise(0))
-         / F.count("*")).alias("_stop"),
-        (F.count_distinct("term") / F.count("*")).alias("_ttr"),
-    )
-    z = (
-        F.lit(_QC_W_LEN) * F.col("_len")
-        + F.lit(_QC_W_STOP) * F.col("_stop")
-        + F.lit(_QC_W_TTR) * F.col("_ttr")
-        + F.lit(_QC_BIAS)
-    )
-    p = _r4(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
-    hist = (
-        feats.select(
-            F.least(
-                F.floor(p * _OTSU_BINS), F.lit(_OTSU_BINS - 1)
-            ).cast("long").alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    w = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    tot = hist.agg(
-        F.sum("c").alias("_n"), F.sum(F.col("bin") * F.col("c")).alias("_s")
-    )
-    cum = (
-        hist.withColumn("w0", F.sum("c").over(w))
-        .withColumn("s0", F.sum(F.col("bin") * F.col("c")).over(w))
-        .crossJoin(F.broadcast(tot))
-        .filter((F.col("w0") > 0) & (F.col("w0") < F.col("_n")))
-        .withColumn("w1", F.col("_n") - F.col("w0"))
-        .withColumn("mu0", F.col("s0") / F.col("w0"))
-        .withColumn("mu1", (F.col("_s") - F.col("s0")) / F.col("w1"))
-        .withColumn(
-            "bcv",
-            F.col("w0") * F.col("w1")
-            * (F.col("mu0") - F.col("mu1"))
-            * (F.col("mu0") - F.col("mu1"))
-            / (F.col("_n") * F.col("_n")),
-        )
-    )
-    best = cum.orderBy(
-        F.col("bcv").desc(), F.col("bin").asc()
-    ).limit(1)
-    return best.select(
-        _r4((F.col("bin") + 1) / F.lit(float(_OTSU_BINS)))
-        .alias("threshold"),
-        _r4("bcv").alias("between_var"),
-        F.col("w0").cast("long").alias("n_below"),
-        F.col("w1").cast("long").alias("n_above"),
-        _r4(F.col("mu0") / _OTSU_BINS).alias("mean_below"),
-        _r4(F.col("mu1") / _OTSU_BINS).alias("mean_above"),
-    )
-
-
-SQL_OTSU_THRESHOLD = f"""WITH {_TOKS_SQL},
-feats AS (
-  SELECT doc_id, avg(length(term)) AS len,
-         sum(CASE WHEN term IN {_EN_STOPS} THEN 1 ELSE 0 END) * 1.0
-           / count(*) AS stop,
-         count(DISTINCT term) * 1.0 / count(*) AS ttr
-  FROM toks GROUP BY doc_id
-),
-hist AS (
-  SELECT least(CAST(floor(round(1.0 / (1.0 + exp(-({_QC_W_LEN} * len
-                    + {_QC_W_STOP} * stop + {_QC_W_TTR} * ttr
-                    + ({_QC_BIAS})))), 4) * {_OTSU_BINS}) AS BIGINT),
-               {_OTSU_BINS - 1}) AS bin,
-         count(*) AS c
-  FROM feats GROUP BY 1
-),
-tot AS (SELECT sum(c) AS n, sum(bin * c) AS s FROM hist),
-cum AS (
-  SELECT bin,
-         sum(c) OVER (ORDER BY bin
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS w0,
-         sum(bin * c) OVER (ORDER BY bin
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s0
-  FROM hist
-),
-scored2 AS (
-  SELECT bin, w0, tot.n - w0 AS w1,
-         s0 * 1.0 / w0 AS mu0,
-         (tot.s - s0) * 1.0 / (tot.n - w0) AS mu1,
-         w0 * (tot.n - w0)
-           * (s0 * 1.0 / w0 - (tot.s - s0) * 1.0 / (tot.n - w0))
-           * (s0 * 1.0 / w0 - (tot.s - s0) * 1.0 / (tot.n - w0))
-           / (tot.n * tot.n * 1.0) AS bcv
-  FROM cum CROSS JOIN tot
-  WHERE w0 > 0 AND w0 < tot.n
-)
-SELECT round((bin + 1) / {float(_OTSU_BINS)}, 4) AS threshold,
-       round(bcv, 4) AS between_var,
-       CAST(w0 AS BIGINT) AS n_below, CAST(w1 AS BIGINT) AS n_above,
-       round(mu0 / {_OTSU_BINS}, 4) AS mean_below,
-       round(mu1 / {_OTSU_BINS}, 4) AS mean_above
-FROM scored2 ORDER BY bcv DESC, bin ASC LIMIT 1"""
-
-
-# ---------------------------------------------------------------------------
-# Traffic concentration: Gini coefficient + top-20% share
-# ---------------------------------------------------------------------------
-
-
-def q_traffic_gini(spark, sf_dir):
-    """Traffic inequality over items: the Gini coefficient of per-item
-    click counts, G = Σ(2i − n − 1)·x_(i) / (n·Σx) over the ascending
-    sort, plus the classic Pareto readout (the click share of the
-    top-20% items) — the concentration numbers that decide cache sizes
-    (cache_selection), head/tail tiering (tier_split), and hot-shard
-    salting, all of which assume THIS skew exists.
-
-    Determinism: clicks are integers, so the weighted Gini numerator is
-    an exact integer; both outputs divide once.  Scale shape: one
-    per-item count aggregate, one rank window over the |items|-row
-    result, two integer reduces.
-    """
-    from pyspark.sql import Window
-
-    clicks = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.get_json_object("props", "$.k").cast("long").alias("item")
-        )
-        .filter(F.col("item").isNotNull())
-        .groupBy("item")
-        .agg(F.count("*").cast("long").alias("x"))
-    )
-    w = Window.orderBy(F.col("x").asc(), F.col("item").asc())
-    nrow = clicks.agg(F.count("*").cast("long").alias("nn"))
-    ranked = clicks.withColumn("i", F.row_number().over(w)).crossJoin(
-        F.broadcast(nrow)
-    )
-    agg = ranked.agg(
-        F.max("nn").alias("n_items"),
-        F.sum("x").cast("long").alias("total"),
-        F.sum((2 * F.col("i") - F.col("nn") - 1) * F.col("x"))
-        .alias("_gnum"),
-        F.sum(
-            F.when(F.col("i") * 5 > F.col("nn") * 4, F.col("x"))
-            .otherwise(0)
-        ).cast("long").alias("_top"),
-    )
-    return agg.select(
-        "n_items", "total",
-        _r4(F.col("_gnum") / (F.col("n_items") * F.col("total")))
-        .alias("gini"),
-        _r4(F.col("_top") / F.col("total")).alias("top20_share"),
-    )
-
-
-SQL_TRAFFIC_GINI = """WITH clicks AS (
-  SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS item,
-         count(*) AS x
-  FROM events WHERE event_type = 'click'
-    AND json_extract_string(props, '$.k') IS NOT NULL
-  GROUP BY 1
-),
-ranked AS (
-  SELECT x, row_number() OVER (ORDER BY x ASC, item ASC) AS i,
-         count(*) OVER () AS n
-  FROM clicks
-)
-SELECT CAST(max(n) AS BIGINT) AS n_items,
-       CAST(sum(x) AS BIGINT) AS total,
-       round(sum((2 * i - n - 1) * x) / (max(n) * 1.0 * sum(x)), 4)
-         AS gini,
-       round(sum(CASE WHEN i * 5 > n * 4 THEN x ELSE 0 END)
-             * 1.0 / sum(x), 4) AS top20_share
-FROM ranked"""
-
-
-# ---------------------------------------------------------------------------
-# Empirical-Bayes CTR shrinkage (beta-binomial method of moments)
-# ---------------------------------------------------------------------------
-
-_EB_TOPK = 20
-
-
-def q_eb_shrinkage(spark, sf_dir):
-    """Empirical-Bayes shrinkage of per-item CTR toward the corpus
-    prior (the beta-binomial method-of-moments construction — Robbins'
-    empirical Bayes as every "don't rank by raw ratio" guide applies
-    it): fit Beta(α, β) to the observed per-item CTR mean m and
-    variance v via α+β = m(1−m)/v − 1, then score each item by the
-    posterior mean (clicks + α)/(views + α+β) — small-sample items
-    shrink to the prior, high-volume items keep their data; the fix
-    for ips_ctr_estimate/coec's instability on single-digit counts.
-    Top-{k} items by shrunk CTR with raw CTR alongside.
-
-    Determinism: per-item counts are integers; m and v come from
-    integer moment sums; α/β and each posterior are single
-    expressions over those, rounded once.  Scale shape: one item-keyed
-    count aggregate, a 1-row moment reduce broadcast back, and a
-    distributed TakeOrdered cut.
-    """.format(k=_EB_TOPK)
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("view", "click"))
-        .select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    per = ev.groupBy("item").agg(
-        F.count("*").cast("long").alias("v"),        # trials: all interactions
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("long").alias("c"),
-    ).filter(F.col("v") > 0)
-    mom = per.agg(
-        F.count("*").cast("long").alias("_n"),
-        F.sum(F.col("c") / F.col("v")).alias("_s1"),
-        F.sum((F.col("c") / F.col("v")) * (F.col("c") / F.col("v")))
-        .alias("_s2"),
-    ).select(
-        (F.col("_s1") / F.col("_n")).alias("m"),
-        (
-            (F.col("_s2") - F.col("_s1") * F.col("_s1") / F.col("_n"))
-            / F.col("_n")
-        ).alias("v2"),
-    ).select(
-        "m",
-        (F.col("m") * (1 - F.col("m")) / F.col("v2") - 1).alias("ab"),
-    ).select(
-        "m", "ab",
-        (F.col("m") * F.col("ab")).alias("alpha"),
-        ((1 - F.col("m")) * F.col("ab")).alias("beta"),
-    )
-    return (
-        per.crossJoin(F.broadcast(mom))
-        .select(
-            "item", F.col("c").alias("clicks"),
-            F.col("v").alias("interactions"),
-            _r4(F.col("c") / F.col("v")).alias("raw_ctr"),
-            _r4(
-                (F.col("c") + F.col("alpha"))
-                / (F.col("v") + F.col("ab"))
-            ).alias("eb_ctr"),
-        )
-        .orderBy(F.col("eb_ctr").desc(), F.col("item").asc())
-        .limit(_EB_TOPK)
-    )
-
-
-SQL_EB_SHRINKAGE = f"""WITH ev AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type IN ('view', 'click')
-),
-per AS (
-  SELECT item,
-         count(*) AS v,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c
-  FROM ev WHERE item IS NOT NULL GROUP BY item
-),
-mom AS (
-  SELECT sum(c * 1.0 / v) / count(*) AS m,
-         (sum((c * 1.0 / v) * (c * 1.0 / v))
-          - sum(c * 1.0 / v) * sum(c * 1.0 / v) / count(*))
-           / count(*) AS v2
-  FROM per
-),
-pri AS (
-  SELECT m, (m * (1 - m) / v2 - 1) AS ab FROM mom
-)
-SELECT per.item, CAST(per.c AS BIGINT) AS clicks,
-       CAST(per.v AS BIGINT) AS interactions,
-       round(per.c * 1.0 / per.v, 4) AS raw_ctr,
-       round((per.c + pri.m * pri.ab) / (per.v + pri.ab), 4) AS eb_ctr
-FROM per CROSS JOIN pri
-ORDER BY eb_ctr DESC, per.item ASC LIMIT {_EB_TOPK}"""
-
-
-# ---------------------------------------------------------------------------
-# Column encoding decision model (the Parquet dictionary-vs-plain rule)
-# ---------------------------------------------------------------------------
-
-_ENC_COLS = ("lang", "source", "text")
-
-
-def q_column_encoding_model(spark, sf_dir):
-    """The columnar-storage twin of codec_cost: per string column of the
-    documents table, the Parquet-style dictionary-vs-plain decision —
-    plain bytes = Σ length, dictionary bytes = Σ distinct lengths +
-    n·⌈log2(ndv)⌉/8 index bits — and which encoding a writer should
-    pick.  lang (5 values) and source (tens) dictionary-encode to a
-    few percent; text (all-distinct) must stay plain — the NDV-driven
-    rule every lakehouse writer (and chao1_vocab's estimator, when NDV
-    is too big to count) feeds.
-
-    Determinism: byte counts and NDV are integers; the index-bit width
-    uses the bin-length idiom (no floating log2).  Scale shape: one
-    aggregate per column over the same scan (jointly planned), output
-    |columns| rows.
-    """
-    d = _docs(spark, sf_dir)
-    bitw = lambda c: F.length(F.bin(F.greatest(c - 1, F.lit(1))))  # noqa: E731
-    outs = []
-    for col in _ENC_COLS:
-        per = d.agg(
-            F.lit(col).alias("col_name"),
-            F.count("*").cast("long").alias("n"),
-            F.count_distinct(F.col(col)).cast("long").alias("ndv"),
-            F.sum(F.length(F.col(col))).cast("long").alias("plain_bytes"),
-        )
-        uniq = (
-            d.select(F.col(col).alias("u")).distinct()
-            .agg(F.sum(F.length("u")).cast("long").alias("dict_values"))
-        )
-        outs.append(per.crossJoin(uniq))
-    out = outs[0]
-    for r in outs[1:]:
-        out = out.unionByName(r)
-    dict_bytes = (
-        F.col("dict_values")
-        + F.ceil(F.col("n") * bitw(F.col("ndv")) / 8.0).cast("long")
-    )
-    return out.select(
-        "col_name", "n", "ndv", "plain_bytes",
-        dict_bytes.alias("dict_bytes"),
-        _r4(dict_bytes / F.col("plain_bytes")).alias("ratio"),
-        (dict_bytes < F.col("plain_bytes")).alias("use_dictionary"),
-    ).orderBy("col_name")
-
-
-def _enc_sql() -> str:
-    parts = []
-    for col in _ENC_COLS:
-        parts.append(f"""
-  SELECT '{col}' AS col_name, count(*) AS n,
-         count(DISTINCT {col}) AS ndv,
-         sum(length({col})) AS plain_bytes,
-         (SELECT sum(length(u)) FROM
-            (SELECT DISTINCT {col} AS u FROM documents)) AS dict_values
-  FROM documents""")
-    body = " UNION ALL".join(parts)
-    return f"""WITH base AS ({body})
-SELECT col_name, CAST(n AS BIGINT) AS n, CAST(ndv AS BIGINT) AS ndv,
-       CAST(plain_bytes AS BIGINT) AS plain_bytes,
-       CAST(dict_values + ceil(n * length(bin(greatest(ndv - 1, 1)))
-                               / 8.0) AS BIGINT) AS dict_bytes,
-       round((dict_values + ceil(n * length(bin(greatest(ndv - 1, 1)))
-                                 / 8.0)) * 1.0 / plain_bytes, 4)
-         AS ratio,
-       (dict_values + ceil(n * length(bin(greatest(ndv - 1, 1))) / 8.0)
-        < plain_bytes) AS use_dictionary
-FROM base ORDER BY col_name"""
-
-
-SQL_COLUMN_ENCODING_MODEL = _enc_sql()
-
-
-# ---------------------------------------------------------------------------
-# KMV distinct-count sketch (Bar-Yossef et al., RANDOM 2002; Beyer 2007)
-# ---------------------------------------------------------------------------
-
-_KMV_K = 64
-
-
-def q_kmv_sketch(spark, sf_dir):
-    """KMV / bottom-k distinct estimation (Bar-Yossef et al. 2002;
-    Beyer et al. SIGMOD 2007 — the mergeable NDV sketch DataSketches
-    ships as theta): hash every bigram with the portable md5-prefix
-    integer, keep the k={k} smallest, and estimate NDV as
-    (k−1)·2³²/h_(k) — the k-th smallest hash position tells you the
-    density.  Output: the estimate next to the exact distinct count
-    and the relative error (expected ~1/√k ≈ {e:.0%}), over the same
-    bigram universe chao1_vocab sizes by extrapolation — the two
-    estimators a pipeline cross-checks before trusting either.
-
-    Determinism: hashes are exact integers; the bottom-k is an exact
-    TakeOrdered; one final division.  Scale shape: the sketch is k
-    values REGARDLESS of corpus size (distinct-hash then TakeOrdered
-    k — map-side combinable); the exact count exists as ground truth
-    only, like distinct_ngrams.
-    """.format(k=_KMV_K, e=1 / _KMV_K ** 0.5)
-    grams = _word_grams(spark, sf_dir, 2).select("g").distinct()
-    h = F.conv(F.substring(F.md5("g"), 1, 8), 16, 10).cast("long")
-    bottom = (
-        grams.select(h.alias("h"))
-        .orderBy(F.col("h").asc())
-        .limit(_KMV_K)
-    )
-    kth = bottom.agg(
-        F.max("h").alias("hk"), F.count("*").cast("long").alias("kk")
-    )
-    exact = grams.agg(F.count("*").cast("long").alias("d_exact"))
-    est = (F.col("kk") - 1) * F.lit(float(2 ** 32)) / F.col("hk")
-    return (
-        kth.crossJoin(F.broadcast(exact))
-        .select(
-            F.col("kk").alias("k"),
-            F.col("hk").alias("kth_hash"),
-            "d_exact",
-            _r4(est).alias("kmv_est"),
-            _r4((est - F.col("d_exact")) / F.col("d_exact"))
-            .alias("rel_error"),
-        )
-    )
-
-
-SQL_KMV_SKETCH = f"""WITH grams AS (
-  SELECT DISTINCT unnest(CASE WHEN len(a) >= 2
-                 THEN list_transform(range(1, len(a)),
-                                     i -> a[i] || ' ' || a[i + 1])
-                 ELSE [] END) AS g
-  FROM (SELECT list_filter(regexp_split_to_array(lower(text),
-                           '[^a-z0-9]+'), x -> x <> '') AS a
-        FROM documents)
-),
-hashed AS (
-  SELECT CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) AS h
-  FROM grams
-),
-bottom AS (SELECT h FROM hashed ORDER BY h ASC LIMIT {_KMV_K}),
-kth AS (SELECT max(h) AS hk, count(*) AS kk FROM bottom),
-exact AS (SELECT count(*) AS d_exact FROM grams)
-SELECT CAST(kk AS BIGINT) AS k, CAST(hk AS BIGINT) AS kth_hash,
-       CAST(d_exact AS BIGINT) AS d_exact,
-       round((kk - 1) * {float(2 ** 32)} / hk, 4) AS kmv_est,
-       round(((kk - 1) * {float(2 ** 32)} / hk - d_exact)
-             * 1.0 / d_exact, 4) AS rel_error
-FROM kth CROSS JOIN exact"""
-
-
-# ---------------------------------------------------------------------------
-# Subsampling confidence interval (Politis & Romano, Ann. Stat. 1994)
-# ---------------------------------------------------------------------------
-
-_SUB_B = 64        # replicates
-_SUB_ALPHA = 0.05
-
-
-def q_subsample_ci(spark, sf_dir):
-    """Subsampling confidence interval for the mean event value
-    (Politis & Romano, Annals of Statistics 1994 — the resampling
-    scheme that, unlike the classic bootstrap, runs in ONE distributed
-    pass: replicate membership is a hash of (row, b), so no
-    with-replacement index join exists): B={b} half-samples via md5
-    parity, each replicate's mean, and the CI θ_n ± q_{{1−α}}/√n where
-    q is the empirical quantile of √m_b·|θ_b − θ_n| — the
-    root-n-rescaled subsampling pivot.  This is how you put error bars
-    on a 10^12-row metric without a second pass or shared state.
-
-    Determinism: membership is integer md5 parity; per-replicate sums
-    of the value column round at the very end (the cuped/coec float
-    precedent); the quantile runs over B={b} replicate rows exactly.
-    Scale shape: the replicate fan-out is a flatMap-style crossJoin
-    against a broadcast B-row table collapsing map-side to B partial
-    sums — one shuffle of B rows, however large the input.
-    """.format(b=_SUB_B)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "value"
-    )
-    full = ev.agg(
-        F.count("*").cast("long").alias("n"),
-        F.avg("value").alias("theta"),
-    )
-    bs = spark.createDataFrame([(b,) for b in range(_SUB_B)], "b long")
-    member = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", "event_id", "b")), 1, 8
-            ), 16, 10
-        ).cast("long"),
-        F.lit(2),
-    ) == 0
-    reps = (
-        ev.crossJoin(F.broadcast(bs))
-        .filter(member)
-        .groupBy("b")
-        .agg(
-            F.count("*").cast("long").alias("m"),
-            F.avg("value").alias("tb"),
-        )
-    )
-    piv = reps.crossJoin(F.broadcast(full)).select(
-        (F.sqrt(F.col("m").cast("double"))
-         * F.abs(F.col("tb") - F.col("theta"))).alias("p")
-    )
-    q = piv.agg(
-        F.expr(f"percentile(p, {1.0 - _SUB_ALPHA!r})").alias("q")
-    )
-    return (
-        full.crossJoin(F.broadcast(q))
-        .select(
-            "n",
-            _r4("theta").alias("mean"),
-            _r4(F.col("q") / F.sqrt(F.col("n").cast("double")))
-            .alias("half_width"),
-            _r4(
-                F.col("theta") - F.col("q") / F.sqrt(F.col("n").cast("double"))
-            ).alias("ci_lo"),
-            _r4(
-                F.col("theta") + F.col("q") / F.sqrt(F.col("n").cast("double"))
-            ).alias("ci_hi"),
-            F.lit(_SUB_B).cast("long").alias("n_replicates"),
-        )
-    )
-
-
-SQL_SUBSAMPLE_CI = f"""WITH ev AS (
-  SELECT event_id, value FROM events
-),
-full_ AS (SELECT count(*) AS n, avg(value) AS theta FROM ev),
-bs AS (SELECT * FROM range({_SUB_B}) AS t(b)),
-reps AS (
-  SELECT b, count(*) AS m, avg(value) AS tb
-  FROM ev CROSS JOIN bs
-  WHERE CAST(concat('0x', substr(md5(concat(CAST(event_id AS VARCHAR),
-                    ':', CAST(b AS VARCHAR))), 1, 8)) AS BIGINT)
-        % 2 = 0
-  GROUP BY b
-),
-piv AS (
-  SELECT sqrt(CAST(m AS DOUBLE)) * abs(tb - full_.theta) AS p
-  FROM reps CROSS JOIN full_
-),
-q AS (SELECT quantile_cont(p, {1.0 - _SUB_ALPHA!r}) AS q FROM piv)
-SELECT CAST(full_.n AS BIGINT) AS n,
-       round(full_.theta, 4) AS mean,
-       round(q.q / sqrt(CAST(full_.n AS DOUBLE)), 4) AS half_width,
-       round(full_.theta - q.q / sqrt(CAST(full_.n AS DOUBLE)), 4)
-         AS ci_lo,
-       round(full_.theta + q.q / sqrt(CAST(full_.n AS DOUBLE)), 4)
-         AS ci_hi,
-       CAST({_SUB_B} AS BIGINT) AS n_replicates
-FROM full_ CROSS JOIN q"""
 
 
 # ---------------------------------------------------------------------------
@@ -18831,748 +6243,6 @@ SELECT CAST(nk.nk AS BIGINT) AS nk,
        CAST(count(*) AS BIGINT) AS n_vectors,
        sk.skewness
 FROM nk CROSS JOIN sk GROUP BY nk.nk, sk.skewness ORDER BY nk"""
-
-
-# ---------------------------------------------------------------------------
-# Single-feature ranking screen (the LTR ablation baseline table)
-# ---------------------------------------------------------------------------
-
-
-def q_feature_ndcg_screen(spark, sf_dir):
-    """Single-feature ranking screen — the first table of every
-    learning-to-rank study: rank each query's candidates by ONE feature
-    at a time (BM25 score, raw tf, inverse doc length) and report
-    NDCG@{k} per (query, feature) under the shared synthetic judgments
-    — the screen that says which ltr_features columns carry signal
-    before any model trains.  (On THIS corpus the judgments are a
-    doc_id hash, independent of every feature, so the per-feature
-    NDCGs are exchangeable noise — the entry verifies the screen's
-    mechanics; on real labels the ordering is the payload.)
-
-    Determinism: each feature key ranks on integers or the rounded
-    BM25 score with doc tiebreaks; gains/ideals follow ndcg_eval's
-    exact construction.  Scale shape: one scored scan feeds all
-    features (the feature table is a 3-row broadcast explode); per
-    (query, feature) rank windows over term-pruned candidates only.
-    """.format(k=_NDCG_K)
-    from pyspark.sql import Window
-
-    s = _scored(spark, sf_dir, _NDCG_QS).filter(F.col("term").isin(_NDCG_QS))
-    tf = _tf(spark, sf_dir).filter(F.col("term").isin(_NDCG_QS))
-    dl = _dl(spark, sf_dir)
-    base = (
-        s.join(tf, ["term", "doc_id"])
-        .join(dl, "doc_id")
-        .select(
-            "term", "doc_id",
-            F.round("score", 4).alias("bm25"),
-            F.col("tf").cast("double").alias("ftf"),
-            (F.lit(1.0) / F.col("dl")).alias("invdl"),
-        )
-    )
-    feats = base.select(
-        "term", "doc_id",
-        F.explode(
-            F.array(
-                F.struct(F.lit("bm25").alias("feature"),
-                         F.col("bm25").alias("v")),
-                F.struct(F.lit("tf").alias("feature"),
-                         F.col("ftf").alias("v")),
-                F.struct(F.lit("invdl").alias("feature"),
-                         F.col("invdl").alias("v")),
-            )
-        ).alias("f"),
-    ).select("term", "doc_id", "f.feature", "f.v")
-    w = Window.partitionBy("term", "feature").orderBy(
-        F.col("v").desc(), F.col("doc_id").asc()
-    )
-    top = (
-        feats.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _NDCG_K)
-        .withColumn(
-            "rel",
-            F.pmod(
-                (F.col("doc_id") % _SPLIT_PRIME) * F.lit(2654435761),
-                F.lit(4),
-            ).cast("double"),
-        )
-        .withColumn(
-            "gain",
-            (F.pow(F.lit(2.0), F.col("rel")) - 1.0)
-            / (F.log(F.col("rank") + 1.0) / F.log(F.lit(2.0))),
-        )
-    )
-    iw = Window.partitionBy("term", "feature").orderBy(
-        F.col("rel").desc(), F.col("doc_id").asc()
-    )
-    ideal = top.withColumn("irank", F.row_number().over(iw)).withColumn(
-        "igain",
-        (F.pow(F.lit(2.0), F.col("rel")) - 1.0)
-        / (F.log(F.col("irank") + 1.0) / F.log(F.lit(2.0))),
-    )
-    return (
-        ideal.groupBy("term", "feature")
-        .agg(
-            _r4(
-                F.sum("gain") / F.greatest(F.sum("igain"), F.lit(1e-12))
-            ).alias("ndcg")
-        )
-        .orderBy("term", "feature")
-    )
-
-
-SQL_FEATURE_NDCG_SCREEN = f"""WITH {_BM25_CORE_SQL},
-base AS (
-  SELECT s.term, s.doc_id, round(s.score, 4) AS bm25,
-         CAST(tf.tf AS DOUBLE) AS ftf, 1.0 / dl.dl AS invdl
-  FROM scored s
-  JOIN tf ON s.term = tf.term AND s.doc_id = tf.doc_id
-  JOIN dl ON s.doc_id = dl.doc_id
-  WHERE s.term IN ('merge', 'join', 'scan')
-),
-feats AS (
-  SELECT term, doc_id, 'bm25' AS feature, bm25 AS v FROM base
-  UNION ALL SELECT term, doc_id, 'tf', ftf FROM base
-  UNION ALL SELECT term, doc_id, 'invdl', invdl FROM base
-),
-top AS (
-  SELECT term, feature, doc_id, rank,
-         CAST(((doc_id % {_SPLIT_PRIME}) * 2654435761) % 4 AS DOUBLE)
-           AS rel
-  FROM (
-    SELECT term, feature, doc_id, row_number() OVER (
-      PARTITION BY term, feature ORDER BY v DESC, doc_id ASC) AS rank
-    FROM feats)
-  WHERE rank <= {_NDCG_K}
-),
-gains AS (
-  SELECT term, feature, rel,
-         (pow(2.0, rel) - 1.0) / (ln(rank + 1.0) / ln(2.0)) AS gain,
-         row_number() OVER (PARTITION BY term, feature
-                            ORDER BY rel DESC, doc_id ASC) AS irank
-  FROM top
-)
-SELECT term, feature,
-       round(sum(gain)
-             / greatest(sum((pow(2.0, rel) - 1.0)
-                            / (ln(irank + 1.0) / ln(2.0))), 1e-12), 4)
-         AS ndcg
-FROM gains GROUP BY term, feature ORDER BY term, feature"""
-
-
-# ---------------------------------------------------------------------------
-# k-anonymity audit (Sweeney, IJUFKS 2002)
-# ---------------------------------------------------------------------------
-
-_KANON_K = 5
-
-
-def q_k_anonymity(spark, sf_dir):
-    """k-anonymity audit (Sweeney, IJUFKS 2002) of the documents table
-    under the quasi-identifier pair (lang, source) — the
-    data-governance pass that belongs next to pii_scrub in any corpus
-    release: per equivalence class its size, whether it violates
-    k ≥ {k}, and (in every row) the table's overall k (the smallest
-    class) plus the count of re-identifiable rows — the two numbers a
-    release checklist records.
-
-    Determinism: pure integer group sizes.  Scale shape: one map-side
-    aggregate on the quasi-identifier key; the audit rollup is a 1-row
-    broadcast joined back — |classes| output rows.
-    """.format(k=_KANON_K)
-    d = _docs(spark, sf_dir)
-    cls = d.groupBy("lang", "source").agg(
-        F.count("*").cast("long").alias("class_size")
-    )
-    audit = cls.agg(
-        F.min("class_size").cast("long").alias("table_k"),
-        F.sum(
-            F.when(F.col("class_size") < _KANON_K, F.col("class_size"))
-            .otherwise(0)
-        ).cast("long").alias("n_reidentifiable"),
-    )
-    return (
-        cls.crossJoin(F.broadcast(audit))
-        .select(
-            "lang", "source", "class_size",
-            (F.col("class_size") < _KANON_K).alias("violates_k"),
-            "table_k", "n_reidentifiable",
-        )
-        .orderBy("lang", "source")
-    )
-
-
-SQL_K_ANONYMITY = f"""WITH cls AS (
-  SELECT lang, source, count(*) AS class_size
-  FROM documents GROUP BY lang, source
-),
-audit AS (
-  SELECT min(class_size) AS table_k,
-         sum(CASE WHEN class_size < {_KANON_K} THEN class_size
-                  ELSE 0 END) AS n_reidentifiable
-  FROM cls
-)
-SELECT lang, source, CAST(class_size AS BIGINT) AS class_size,
-       (class_size < {_KANON_K}) AS violates_k,
-       CAST(audit.table_k AS BIGINT) AS table_k,
-       CAST(audit.n_reidentifiable AS BIGINT) AS n_reidentifiable
-FROM cls CROSS JOIN audit ORDER BY lang, source"""
-
-
-# ---------------------------------------------------------------------------
-# OLAP CUBE (Gray et al., Data Mining & Knowledge Discovery 1997)
-# ---------------------------------------------------------------------------
-
-
-def q_olap_cube(spark, sf_dir):
-    """The data cube operator (Gray, Bosworth, Layman & Pirahesh 1997)
-    over (lang, source): all four grouping sets — (lang, source),
-    (lang), (source), and the grand total — in ONE pass with
-    grouping_id distinguishing the levels, plus doc and char measures.
-    This is Spark's native `cube()` (Catalyst Expand + one aggregate)
-    against DuckDB's GROUP BY CUBE — the reporting primitive every
-    dashboard over this corpus would hit, and facet_counts' superset.
-
-    Determinism: integer counts and sums; NULL level markers replaced
-    by the literal 'ALL' on both engines so the hash compare sees
-    identical strings.  Scale shape: Expand multiplies rows by the 4
-    grouping sets BEFORE one map-side-combinable aggregate — one
-    shuffle, |lang|·|source| + |lang| + |source| + 1 output rows, no
-    per-level rescans.
-    """
-    d = _docs(spark, sf_dir)
-    return (
-        d.cube("lang", "source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("n_chars"),
-            F.grouping_id().cast("long").alias("gid"),
-        )
-        .select(
-            F.coalesce("lang", F.lit("ALL")).alias("lang"),
-            F.coalesce("source", F.lit("ALL")).alias("source"),
-            "gid", "n_docs", "n_chars",
-        )
-        .orderBy("gid", "lang", "source")
-    )
-
-
-SQL_OLAP_CUBE = """SELECT coalesce(lang, 'ALL') AS lang,
-       coalesce(source, 'ALL') AS source,
-       CAST(GROUPING(lang) * 2 + GROUPING(source) AS BIGINT) AS gid,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars
-FROM documents
-GROUP BY CUBE (lang, source)
-ORDER BY gid, lang, source"""
-
-
-# ---------------------------------------------------------------------------
-# Wilson score lower bound (Wilson, JASA 1927)
-# ---------------------------------------------------------------------------
-
-_WILSON_Z = 1.959964
-_WILSON_TOPK = 20
-
-
-def q_wilson_lower_bound(spark, sf_dir):
-    """Ranking proportions by the Wilson score interval's LOWER bound
-    (Wilson, JASA 1927 — the "how not to sort by average rating"
-    standard): for each item's click share p̂ of n interactions, LB =
-    (p̂ + z²/2n − z·√(p̂(1−p̂)/n + z²/4n²)) / (1 + z²/n) at z={z} —
-    the frequentist counterpart of eb_shrinkage's posterior mean; both
-    exist because raw ratios over small n lie.  Top-{k} items by LB.
-
-    Determinism: p̂ is one integer division; LB is a single closed
-    expression with a literal z, rounded once.  Scale shape: one
-    item-keyed count aggregate and a distributed TakeOrdered — no
-    prior fit pass needed (the advantage over EB this entry
-    demonstrates).
-    """.format(z=_WILSON_Z, k=_WILSON_TOPK)
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("view", "click"))
-        .select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    per = ev.groupBy("item").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("long").alias("c"),
-    )
-    z = F.lit(_WILSON_Z)
-    p = F.col("c") / F.col("n")
-    nn = F.col("n")
-    lb = (
-        p + z * z / (2 * nn)
-        - z * F.sqrt(p * (1 - p) / nn + z * z / (4 * nn * nn))
-    ) / (1 + z * z / nn)
-    return (
-        per.select(
-            "item", F.col("c").alias("clicks"),
-            F.col("n").alias("interactions"),
-            _r4(p).alias("p_hat"),
-            _r4(lb).alias("wilson_lb"),
-        )
-        .orderBy(F.col("wilson_lb").desc(), F.col("item").asc())
-        .limit(_WILSON_TOPK)
-    )
-
-
-SQL_WILSON_LOWER_BOUND = f"""WITH ev AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type IN ('view', 'click')
-),
-per AS (
-  SELECT item, count(*) AS n,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c
-  FROM ev WHERE item IS NOT NULL GROUP BY item
-)
-SELECT item, CAST(c AS BIGINT) AS clicks, CAST(n AS BIGINT)
-         AS interactions,
-       round(c * 1.0 / n, 4) AS p_hat,
-       round(((c * 1.0 / n) + {_WILSON_Z} * {_WILSON_Z} / (2 * n)
-              - {_WILSON_Z} * sqrt((c * 1.0 / n) * (1 - c * 1.0 / n) / n
-                    + {_WILSON_Z} * {_WILSON_Z} / (4.0 * n * n)))
-             / (1 + {_WILSON_Z} * {_WILSON_Z} / n), 4) AS wilson_lb
-FROM per ORDER BY wilson_lb DESC, item ASC LIMIT {_WILSON_TOPK}"""
-
-
-# ---------------------------------------------------------------------------
-# Median absolute deviation (the robust scale; Hampel 1974)
-# ---------------------------------------------------------------------------
-
-
-def q_mad_scale(spark, sf_dir):
-    """Median absolute deviation per event type (Hampel 1974's robust
-    scale; the outlier fence 1.4826·MAD approximates σ under
-    normality) — the robust complement to winsorized_mean: median and
-    MAD survive arbitrary tail corruption that destroys mean/stddev,
-    which is why monitoring thresholds (spike_detect's z floor) prefer
-    them.  Per type: median, MAD, the normal-consistent sigma-hat, and
-    how many values sit beyond the 3·σ̂ Hampel fence.
-
-    Determinism: both medians are the exact-percentile pairing; the
-    fence count is an integer; one multiply by the literal 1.4826.
-    Scale shape: two per-type exact-percentile aggregates (the second
-    over |x − median|, with the median broadcast back) and a narrow
-    fence count — three passes, all map-side-combinable, |types| rows.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", "value"
-    )
-    med = ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("median")
-    )
-    dev = ev.join(F.broadcast(med), "event_type").select(
-        "event_type", "value", "median",
-        F.abs(F.col("value") - F.col("median")).alias("ad"),
-    )
-    mad = dev.groupBy("event_type").agg(
-        F.max("median").alias("median"),
-        F.expr("percentile(ad, 0.5)").alias("mad"),
-        F.count("*").cast("long").alias("n"),
-    ).withColumn("sigma_hat", F.col("mad") * 1.4826)
-    fenced = (
-        dev.join(
-            F.broadcast(mad.select("event_type", "sigma_hat")),
-            "event_type",
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum(
-                (F.col("ad") > 3 * F.col("sigma_hat")).cast("int")
-            ).cast("long").alias("n_outliers")
-        )
-    )
-    return (
-        mad.join(fenced, "event_type")
-        .select(
-            "event_type", "n",
-            _r4("median").alias("median"),
-            _r4("mad").alias("mad"),
-            _r4("sigma_hat").alias("sigma_hat"),
-            "n_outliers",
-        )
-        .orderBy("event_type")
-    )
-
-
-SQL_MAD_SCALE = """WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS median
-  FROM events GROUP BY event_type
-),
-dev AS (
-  SELECT e.event_type, e.value, m.median,
-         abs(e.value - m.median) AS ad
-  FROM events e JOIN med m USING (event_type)
-),
-mad AS (
-  SELECT event_type, max(median) AS median,
-         quantile_cont(ad, 0.5) AS mad, count(*) AS n,
-         quantile_cont(ad, 0.5) * 1.4826 AS sigma_hat
-  FROM dev GROUP BY event_type
-),
-fenced AS (
-  SELECT d.event_type,
-         sum(CASE WHEN d.ad > 3 * m.sigma_hat THEN 1 ELSE 0 END)
-           AS n_outliers
-  FROM dev d JOIN mad m USING (event_type) GROUP BY d.event_type
-)
-SELECT mad.event_type, CAST(mad.n AS BIGINT) AS n,
-       round(mad.median, 4) AS median, round(mad.mad, 4) AS mad,
-       round(mad.sigma_hat, 4) AS sigma_hat,
-       CAST(fenced.n_outliers AS BIGINT) AS n_outliers
-FROM mad JOIN fenced USING (event_type) ORDER BY event_type"""
-
-
-# ---------------------------------------------------------------------------
-# One-way ANOVA across languages (Fisher's F; the group-difference test)
-# ---------------------------------------------------------------------------
-
-
-def q_anova_length_by_lang(spark, sf_dir):
-    """One-way ANOVA of document length (tokens) across languages —
-    Fisher's F = (SSB/(k−1)) / (SSW/(n−k)): does the corpus' length
-    distribution differ by language more than within-language noise
-    explains?  The test a corpus-balance report runs before blaming a
-    language mix for a length skew (domain_mix reports the shares;
-    this tests the difference).  Output: one row with group count, n,
-    both mean squares, F, and whether F clears the α=0.05 critical
-    value for (k−1, ∞) dof (≈ 2.37 at k=5 — a literal, since the
-    engines ship no F-distribution CDF).
-
-    Determinism: token counts are integers, so SSB/SSW derive from
-    integer sums (Σx, Σx² per group) with single expressions.  Scale
-    shape: one per-(lang) moment aggregate over the per-doc lengths —
-    two map-side-combinable passes and a |langs|-row reduce.
-    """
-    dl = _dl(spark, sf_dir)
-    lang = _docs(spark, sf_dir).select("doc_id", "lang")
-    per = (
-        dl.join(lang, "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count("*").cast("long").alias("ni"),
-            F.sum("dl").alias("si"),
-            F.sum(F.col("dl") * F.col("dl")).alias("qi"),
-        )
-    )
-    m = per.agg(
-        F.count("*").cast("long").alias("k"),
-        F.sum("ni").cast("long").alias("n"),
-        F.sum("si").alias("s"),
-        F.sum("qi").alias("q"),
-        F.sum(F.col("si") * F.col("si") / F.col("ni")).alias("sb"),
-    )
-    ssb = F.col("sb") - F.col("s") * F.col("s") / F.col("n")
-    ssw = F.col("q") - F.col("sb")
-    msb = ssb / (F.col("k") - 1)
-    msw = ssw / (F.col("n") - F.col("k"))
-    f = msb / msw
-    return m.select(
-        "k", "n",
-        _r4(msb).alias("ms_between"),
-        _r4(msw).alias("ms_within"),
-        _r4(f).alias("f_stat"),
-        (f > 2.372).alias("significant"),
-    )
-
-
-SQL_ANOVA_LENGTH_BY_LANG = f"""WITH {_TOKS_SQL},
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-per AS (
-  SELECT d.lang, count(*) AS ni, sum(dl.dl) AS si,
-         sum(dl.dl * dl.dl) AS qi
-  FROM dl JOIN documents d USING (doc_id) GROUP BY d.lang
-),
-m AS (
-  SELECT count(*) AS k, sum(ni) AS n, sum(si) AS s, sum(qi) AS q,
-         sum(si * si * 1.0 / ni) AS sb
-  FROM per
-)
-SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-       round((sb - s * s * 1.0 / n) / (k - 1), 4) AS ms_between,
-       round((q - sb) / (n - k), 4) AS ms_within,
-       round(((sb - s * s * 1.0 / n) / (k - 1))
-             / ((q - sb) / (n - k)), 4) AS f_stat,
-       (((sb - s * s * 1.0 / n) / (k - 1)) / ((q - sb) / (n - k))
-        > 2.372) AS significant
-FROM m"""
-
-
-# ---------------------------------------------------------------------------
-# Hill tail-index estimator (Hill, Annals of Statistics 1975)
-# ---------------------------------------------------------------------------
-
-_HILL_TAIL_K = 50
-
-
-def q_hill_tail_index(spark, sf_dir):
-    """Hill estimator of the power-law tail index (Hill, Ann. Stat.
-    1975) for the in-degree distribution: over the {k} largest
-    in-degrees, α̂ = 1 + k / Σ ln(x_i / x_min) — the maximum-likelihood
-    tail exponent that complements zipf_fit's regression (terms) and
-    degree_histogram's binned view (links); web in-degrees classically
-    land near α ≈ 2.1 (Broder et al.), and the arithmetic graph's
-    concentrated residue classes give a heavier head this estimator
-    quantifies.  Output: k, x_min, α̂, and the implied P(X > 2·x_min)
-    = 2^(1−α̂).
-
-    Determinism: the tail cut is an exact TakeOrdered on integer
-    degrees with id tiebreaks; the log sum runs over exactly k values,
-    rounded once.  Scale shape: degrees are one map-side aggregate;
-    the tail is k rows, the reduce 1 row.
-    """.format(k=_HILL_TAIL_K)
-    _, edges = _link_edges(spark, sf_dir)
-    deg = edges.groupBy("dst").agg(F.count("*").cast("long").alias("d"))
-    tail = deg.orderBy(
-        F.col("d").desc(), F.col("dst").asc()
-    ).limit(_HILL_TAIL_K)
-    xmin = tail.agg(
-        F.min("d").alias("xmin"), F.count("*").cast("long").alias("kk")
-    )
-    s = (
-        tail.crossJoin(F.broadcast(xmin))
-        .agg(
-            F.max("kk").alias("kk"),
-            F.max("xmin").alias("xmin"),
-            F.sum(F.log(F.col("d") / F.col("xmin"))).alias("_ls"),
-        )
-    )
-    alpha = 1.0 + F.col("kk") / F.col("_ls")
-    return s.select(
-        F.col("kk").alias("k"),
-        F.col("xmin").cast("long").alias("x_min"),
-        _r4(alpha).alias("alpha"),
-        _r4(F.pow(F.lit(2.0), 1.0 - alpha)).alias("p_gt_2xmin"),
-    )
-
-
-SQL_HILL_TAIL_INDEX = f"""WITH {_edges_sql()},
-deg AS (SELECT dst, count(*) AS d FROM edges GROUP BY dst),
-tail AS (SELECT dst, d FROM deg ORDER BY d DESC, dst ASC
-         LIMIT {_HILL_TAIL_K}),
-xm AS (SELECT min(d) AS xmin, count(*) AS kk FROM tail),
-s AS (
-  SELECT max(xm.kk) AS kk, max(xm.xmin) AS xmin,
-         sum(ln(t.d * 1.0 / xm.xmin)) AS ls
-  FROM tail t CROSS JOIN xm
-)
-SELECT CAST(kk AS BIGINT) AS k, CAST(xmin AS BIGINT) AS x_min,
-       round(1.0 + kk / ls, 4) AS alpha,
-       round(pow(2.0, 1.0 - (1.0 + kk / ls)), 4) AS p_gt_2xmin
-FROM s"""
-
-
-# ---------------------------------------------------------------------------
-# Classical additive time-series decomposition (Macaulay 1931 lineage)
-# ---------------------------------------------------------------------------
-
-
-def q_classical_decomposition(spark, sf_dir):
-    """Classical additive decomposition of the daily event volume —
-    x_t = trend + seasonal + residual (the moving-average construction
-    STL descends from): trend = centered 7-day moving average (defined
-    only where the full window exists), seasonal = the mean detrended
-    value of the day's weekday, residual = the rest.  ewma_forecast
-    smooths, weekday_seasonality profiles; this entry SPLITS the
-    series so alarms watch the residual only.
-
-    Determinism: daily counts are integers; the 7-day trend is one
-    division of an integer window sum; seasonal means average those
-    (identical) doubles per weekday; residual is a subtraction —
-    rounded once each.  Scale shape: everything after the one
-    events→days aggregate runs over the bounded day table (windows +
-    a 7-row weekday broadcast).
-    """
-    from pyspark.sql import Window
-
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy(F.date_trunc("DAY", "ts").alias("day"))
-        .agg(F.count("*").cast("long").alias("x"))
-    )
-    w7 = Window.orderBy("day").rowsBetween(-3, 3)
-    wc = Window.orderBy("day")
-    t = (
-        ev.withColumn("n7", F.count("*").over(w7))
-        .withColumn("s7", F.sum("x").over(w7))
-        .withColumn(
-            "trend",
-            F.when(F.col("n7") == 7, F.col("s7") / 7.0),
-        )
-        .withColumn("dow", (F.dayofweek("day") - 1).cast("long"))
-        .withColumn("det", F.col("x") - F.col("trend"))
-    )
-    seas = (
-        t.filter(F.col("trend").isNotNull())
-        .groupBy("dow")
-        .agg(F.avg("det").alias("seasonal"))
-    )
-    return (
-        t.join(F.broadcast(seas), "dow", "left")
-        .select(
-            "day", "x",
-            _r4("trend").alias("trend"),
-            _r4("seasonal").alias("seasonal"),
-            _r4(
-                F.col("x") - F.col("trend") - F.col("seasonal")
-            ).alias("residual"),
-        )
-        .orderBy("day")
-    )
-
-
-SQL_CLASSICAL_DECOMPOSITION = """WITH ev AS (
-  SELECT date_trunc('day', ts) AS day, count(*) AS x
-  FROM events GROUP BY 1
-),
-t AS (
-  SELECT day, x,
-         CASE WHEN count(*) OVER w = 7
-              THEN sum(x) OVER w / 7.0 END AS trend,
-         dayofweek(day) AS dow
-  FROM ev WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING
-                       AND 3 FOLLOWING)
-),
-seas AS (
-  SELECT dow, avg(x - trend) AS seasonal
-  FROM t WHERE trend IS NOT NULL GROUP BY dow
-)
-SELECT t.day, CAST(t.x AS BIGINT) AS x,
-       round(t.trend, 4) AS trend,
-       round(seas.seasonal, 4) AS seasonal,
-       round(t.x - t.trend - seas.seasonal, 4) AS residual
-FROM t LEFT JOIN seas ON t.dow = seas.dow
-ORDER BY t.day"""
-
-
-# ---------------------------------------------------------------------------
-# Head churn between time halves (the trending/decay ops readout)
-# ---------------------------------------------------------------------------
-
-_CHURN_TOPK = 20
-
-
-def q_head_churn(spark, sf_dir):
-    """Head churn: the top-{k} clicked items of the log's first half vs
-    its second half — Jaccard overlap plus per-item status (stayed /
-    entered / dropped) — the ops readout behind cache re-warming
-    policy and trending detection (a stable head keeps
-    cache_selection's static cache valid; high churn demands
-    admission like QtfDf).  The time split reuses cuped's midpoint
-    convention.
-
-    Determinism: per-half counts are integers; the top-k cuts are
-    exact TakeOrdered with id tiebreaks; Jaccard is one division of
-    set sizes.  Scale shape: one (half, item) count aggregate, two
-    k-row heads, a k-row full-outer join — output ≤ 2k rows, each
-    carrying the overall jaccard for auditability.
-    """.format(k=_CHURN_TOPK)
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "click")
-        .select(
-            "ts",
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    t0 = ev.agg(F.min(F.date_trunc("DAY", "ts")).alias("_t0"))
-    split = F.col("_t0") + F.expr(f"INTERVAL {_CUPED_SPLIT_DAYS} DAYS")
-    halves = ev.crossJoin(F.broadcast(t0)).select(
-        F.when(F.col("ts") < split, F.lit(1)).otherwise(2).alias("half"),
-        "item",
-    )
-    per = halves.groupBy("half", "item").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("half").orderBy(
-        F.col("n").desc(), F.col("item").asc()
-    )
-    top = per.withColumn("r", F.row_number().over(w)).filter(
-        F.col("r") <= _CHURN_TOPK
-    )
-    h1 = top.filter(F.col("half") == 1).select(
-        "item", F.col("n").alias("n_first")
-    )
-    h2 = top.filter(F.col("half") == 2).select(
-        "item", F.col("n").alias("n_second")
-    )
-    j = h1.join(h2, "item", "full_outer")
-    jac = j.agg(
-        (
-            F.sum(
-                (
-                    F.col("n_first").isNotNull()
-                    & F.col("n_second").isNotNull()
-                ).cast("int")
-            )
-            / F.count("*")
-        ).alias("_jac")
-    )
-    return (
-        j.crossJoin(F.broadcast(jac))
-        .select(
-            "item",
-            F.coalesce("n_first", F.lit(0)).cast("long").alias("n_first"),
-            F.coalesce("n_second", F.lit(0)).cast("long")
-            .alias("n_second"),
-            F.when(
-                F.col("n_first") > 0,
-                F.when(F.col("n_second") > 0, "stayed").otherwise("dropped"),
-            ).otherwise("entered").alias("status"),
-            _r4("_jac").alias("jaccard"),
-        )
-        .orderBy("item")
-    )
-
-
-SQL_HEAD_CHURN = f"""WITH ev AS (
-  SELECT ts, CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type = 'click'
-),
-t0 AS (SELECT min(date_trunc('day', ts)) AS t0 FROM ev),
-halves AS (
-  SELECT CASE WHEN ev.ts < t0.t0 + INTERVAL {_CUPED_SPLIT_DAYS} DAY
-              THEN 1 ELSE 2 END AS half, item
-  FROM ev CROSS JOIN t0 WHERE item IS NOT NULL
-),
-per AS (SELECT half, item, count(*) AS n FROM halves
-        GROUP BY half, item),
-top AS (
-  SELECT half, item, n FROM (
-    SELECT half, item, n, row_number() OVER (PARTITION BY half
-             ORDER BY n DESC, item ASC) AS r
-    FROM per) WHERE r <= {_CHURN_TOPK}
-),
-j AS (
-  SELECT coalesce(a.item, b.item) AS item, a.n AS n_first,
-         b.n AS n_second
-  FROM (SELECT item, n FROM top WHERE half = 1) a
-  FULL OUTER JOIN (SELECT item, n FROM top WHERE half = 2) b
-    ON a.item = b.item
-),
-jac AS (
-  SELECT sum(CASE WHEN n_first IS NOT NULL AND n_second IS NOT NULL
-                  THEN 1 ELSE 0 END) * 1.0 / count(*) AS jac
-  FROM j
-)
-SELECT j.item, CAST(coalesce(j.n_first, 0) AS BIGINT) AS n_first,
-       CAST(coalesce(j.n_second, 0) AS BIGINT) AS n_second,
-       CASE WHEN coalesce(j.n_first, 0) > 0
-            THEN CASE WHEN coalesce(j.n_second, 0) > 0 THEN 'stayed'
-                      ELSE 'dropped' END
-            ELSE 'entered' END AS status,
-       round(jac.jac, 4) AS jaccard
-FROM j CROSS JOIN jac ORDER BY j.item"""
 
 
 # ---------------------------------------------------------------------------
@@ -19791,1482 +6461,6 @@ FROM pairs CROSS JOIN cfgs GROUP BY b, r ORDER BY b"""
 
 
 # ---------------------------------------------------------------------------
-# Fano factor / index of dispersion (Fano 1947; Cox's overdispersion test)
-# ---------------------------------------------------------------------------
-
-
-def q_fano_factor(spark, sf_dir):
-    """Index of dispersion (Fano factor) of hourly event counts per
-    type — var/mean of the count series: a Poisson process sits at
-    exactly 1, clustering (bursts, bots, batch jobs) pushes it above,
-    regularity (rate limiting) below.  The one-number burstiness test
-    that complements spike_detect's WHERE with a WHETHER (and
-    term_burstiness' document-side twin): alerting on a Fano≈1 stream
-    can use Poisson thresholds, an overdispersed one cannot.
-
-    Determinism: hourly counts are integers, so mean and variance come
-    from integer moment sums; the Poisson verdict compares against the
-    ±3·√(2/n) sampling band of the ratio under H₀ (a literal-free
-    integer-derived bound).  Scale shape: events collapse map-side to
-    |type|×|hours| rows, then a per-type moment reduce — |types|
-    output rows.
-    """
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy(
-            "event_type",
-            F.date_trunc("HOUR", "ts").alias("h"),
-        )
-        .agg(F.count("*").cast("long").alias("x"))
-    )
-    m = ev.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_hours"),
-        F.sum("x").alias("_s"),
-        F.sum(F.col("x") * F.col("x")).alias("_q"),
-    )
-    n = F.col("n_hours")
-    mean = F.col("_s") / n
-    var = (F.col("_q") - F.col("_s") * F.col("_s") / n) / n
-    fano = var / mean
-    band = 3.0 * F.sqrt(2.0 / n)
-    return m.select(
-        "event_type", "n_hours",
-        _r4(mean).alias("mean"),
-        _r4(var).alias("var"),
-        _r4(fano).alias("fano"),
-        F.when(fano > 1.0 + band, F.lit("overdispersed"))
-        .when(fano < 1.0 - band, F.lit("underdispersed"))
-        .otherwise(F.lit("poisson")).alias("verdict"),
-    ).orderBy("event_type")
-
-
-SQL_FANO_FACTOR = """WITH ev AS (
-  SELECT event_type, date_trunc('hour', ts) AS h, count(*) AS x
-  FROM events GROUP BY 1, 2
-),
-m AS (
-  SELECT event_type, count(*) AS n, sum(x) AS s, sum(x * x) AS q
-  FROM ev GROUP BY event_type
-)
-SELECT event_type, CAST(n AS BIGINT) AS n_hours,
-       round(s * 1.0 / n, 4) AS mean,
-       round((q - s * s * 1.0 / n) / n, 4) AS var,
-       round(((q - s * s * 1.0 / n) / n) / (s * 1.0 / n), 4) AS fano,
-       CASE WHEN ((q - s * s * 1.0 / n) / n) / (s * 1.0 / n)
-                 > 1.0 + 3.0 * sqrt(2.0 / n) THEN 'overdispersed'
-            WHEN ((q - s * s * 1.0 / n) / n) / (s * 1.0 / n)
-                 < 1.0 - 3.0 * sqrt(2.0 / n) THEN 'underdispersed'
-            ELSE 'poisson' END AS verdict
-FROM m ORDER BY event_type"""
-
-
-# ---------------------------------------------------------------------------
-# Hill diversity numbers (Hill, Ecology 1973)
-# ---------------------------------------------------------------------------
-
-
-def q_hill_diversity(spark, sf_dir):
-    """Hill's diversity numbers (Ecology 1973) for the corpus' source
-    and language distributions — the "effective number" at three
-    orders:
-    ⁰D = richness (every host counts once), ¹D = exp(Shannon H)
-    (hosts weighted by share), ²D = inverse Simpson (dominant hosts
-    only) — ⁰D ≥ ¹D ≥ ²D always, and the GAP between them is the
-    imbalance (domain_mix lists the shares; this compresses them into
-    the three numbers a mixture plan compares across corpora — the
-    diversity twin of traffic_gini's inequality view).
-
-    Determinism: shares are integer-count ratios; H sums share·ln
-    terms over the bounded host table; each D is one expression,
-    rounded once.  Scale shape: one host-count aggregate, a 1-row
-    reduce.
-    """
-    outs = []
-    for dim in ("lang", "source"):
-        per = _docs(spark, sf_dir).groupBy(dim).agg(
-            F.count("*").cast("long").alias("c")
-        )
-        tot = per.agg(F.sum("c").alias("_t"))
-        p = F.col("c") / F.col("_t")
-        m = per.crossJoin(F.broadcast(tot)).agg(
-            F.lit(dim).alias("dimension"),
-            F.count("*").cast("long").alias("d0"),
-            F.sum(p * F.log(p)).alias("_h"),
-            F.sum(p * p).alias("_s2"),
-            F.max("_t").cast("long").alias("n_docs"),
-        )
-        outs.append(m)
-    out = outs[0].unionByName(outs[1])
-    return out.select(
-        "dimension", "n_docs", "d0",
-        _r4(F.exp(-F.col("_h"))).alias("d1"),
-        _r4(F.lit(1.0) / F.col("_s2")).alias("d2"),
-        _r4(F.exp(-F.col("_h")) / F.col("d0")).alias("evenness"),
-    ).orderBy("dimension")
-
-
-def _hill_sql() -> str:
-    parts = []
-    for dim in ("lang", "source"):
-        parts.append(f"""
-  SELECT '{dim}' AS dimension, count(*) AS d0,
-         sum((c * 1.0 / t) * ln(c * 1.0 / t)) AS h,
-         sum((c * 1.0 / t) * (c * 1.0 / t)) AS s2,
-         max(t) AS n_docs
-  FROM (SELECT {dim}, count(*) AS c FROM documents GROUP BY {dim})
-  CROSS JOIN (SELECT count(*) AS t FROM documents)""")
-    return f"""WITH m AS ({" UNION ALL".join(parts)})
-SELECT dimension, CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(d0 AS BIGINT) AS d0,
-       round(exp(-h), 4) AS d1,
-       round(1.0 / s2, 4) AS d2,
-       round(exp(-h) / d0, 4) AS evenness
-FROM m ORDER BY dimension"""
-
-
-SQL_HILL_DIVERSITY = _hill_sql()
-
-
-# ---------------------------------------------------------------------------
-# Conversion lag (time-to-event percentiles between funnel stages)
-# ---------------------------------------------------------------------------
-
-
-def q_conversion_lag(spark, sf_dir):
-    """Time-to-event between funnel stages: for each user with BOTH a
-    signup and a later purchase, the lag from FIRST signup to FIRST
-    subsequent purchase — conversion rate plus exact p50/p90 lag in
-    minutes (event_funnel counts who converts; this measures how LONG
-    conversion takes, the number attribution windows and retargeting
-    deadlines are set from).
-
-    Determinism: first-event picks are min(struct) with event_id
-    tiebreaks (the shapley/first_p idiom); lags are exact integer
-    microseconds; percentiles are the exact-interpolation pairing over
-    those integers.  Scale shape: two per-user min-aggregates and one
-    |converted|-row percentile reduce — 1 output row.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "event_id", "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    first_s = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min(F.struct("us", "event_id")).alias("_f"))
-        .select("user_id", F.col("_f.us").alias("sus"))
-    )
-    first_p_after = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(first_s, "user_id")
-        .filter(F.col("us") >= F.col("sus"))
-        .groupBy("user_id")
-        .agg(
-            F.max("sus").alias("sus"),
-            F.min("us").alias("pus"),
-        )
-        .select(
-            "user_id",
-            ((F.col("pus") - F.col("sus")) / 60_000_000.0).alias("lag_min"),
-        )
-    )
-    ns = first_s.agg(F.count("*").cast("long").alias("n_signup"))
-    return (
-        first_p_after.agg(
-            F.count("*").cast("long").alias("n_converted"),
-            F.expr("percentile(lag_min, array(0.5, 0.9))").alias("_q"),
-        )
-        .crossJoin(F.broadcast(ns))
-        .select(
-            "n_signup", "n_converted",
-            _r4(F.col("n_converted") / F.col("n_signup"))
-            .alias("conversion_rate"),
-            _r4(F.col("_q")[0]).alias("p50_lag_min"),
-            _r4(F.col("_q")[1]).alias("p90_lag_min"),
-        )
-    )
-
-
-SQL_CONVERSION_LAG = """WITH ev AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
-),
-first_s AS (
-  SELECT user_id, min(struct_pack(us := us, event_id := event_id)).us
-           AS sus
-  FROM ev WHERE event_type = 'signup' GROUP BY user_id
-),
-conv AS (
-  SELECT e.user_id,
-         (min(e.us) - max(f.sus)) / 60000000.0 AS lag_min
-  FROM ev e JOIN first_s f ON e.user_id = f.user_id
-  WHERE e.event_type = 'purchase' AND e.us >= f.sus
-  GROUP BY e.user_id
-),
-ns AS (SELECT count(*) AS n_signup FROM first_s)
-SELECT CAST(ns.n_signup AS BIGINT) AS n_signup,
-       CAST(count(*) AS BIGINT) AS n_converted,
-       round(count(*) * 1.0 / ns.n_signup, 4) AS conversion_rate,
-       round(quantile_cont(lag_min, 0.5), 4) AS p50_lag_min,
-       round(quantile_cont(lag_min, 0.9), 4) AS p90_lag_min
-FROM conv CROSS JOIN ns GROUP BY ns.n_signup"""
-
-
-# ---------------------------------------------------------------------------
-# PageRank convergence diagnostics (the power-iteration L1 residual)
-# ---------------------------------------------------------------------------
-
-
-def q_pagerank_convergence(spark, sf_dir):
-    """Power-iteration convergence diagnostics for PageRank: the L1
-    residual ‖r_t − r_{{t−1}}‖₁ after each of the {t} iterations and
-    its per-step contraction ratio — the classic result that the
-    residual shrinks geometrically at rate ≤ damping d={d} (Haveliwala's
-    convergence analysis), which is how production decides HOW MANY
-    iterations to pay for (pagerank itself fixes {t}; this entry shows
-    why that suffices).
-
-    Determinism: the iterates are the hash-green pagerank chain; each
-    residual sums |diffs| of identical doubles and rounds once; the
-    ratio divides consecutive rounded residuals.  Scale shape: one
-    extra |nodes|-row aggregate per iteration over the already-built
-    chain — same Pregel joins, plus K 1-row reduces.
-    """.format(t=_PR_ITERS, d=_PR_DAMP)
-    with_n, edges = _link_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    e = edges.join(deg, "src")
-    ranks = with_n.select("id", "n", (F.lit(1.0) / F.col("n")).alias("r"))
-    resids = []
-    for t in range(1, _PR_ITERS + 1):
-        contribs = (
-            ranks.join(e, ranks["id"] == e["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") / F.col("deg")).alias("c"))
-        )
-        nxt = (
-            with_n.join(contribs, with_n["id"] == contribs["dst"], "left")
-            .select(
-                "id", "n",
-                (
-                    F.lit(1.0 - _PR_DAMP) / F.col("n")
-                    + F.lit(_PR_DAMP) * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("r"),
-            )
-        )
-        both = ranks.select(
-            "id", F.col("r").alias("r0")
-        ).join(nxt.select("id", "r"), "id")
-        resids.append(
-            both.agg(
-                F.lit(t).cast("long").alias("iteration"),
-                _r4(F.sum(F.abs(F.col("r") - F.col("r0"))))
-                .alias("l1_residual"),
-            )
-        )
-        ranks = nxt
-    out = resids[0]
-    for r in resids[1:]:
-        out = out.unionByName(r)
-    from pyspark.sql import Window
-
-    w = Window.orderBy("iteration")
-    return out.withColumn(
-        "contraction",
-        _r4(F.col("l1_residual") / F.lag("l1_residual").over(w)),
-    ).orderBy("iteration")
-
-
-def _pr_conv_sql() -> str:
-    rules = ", ".join(f"({m}, {b})" for m, b in _PR_RULES)
-    parts = [
-        f"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT count(*) AS n FROM nodes),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
-    FROM nodes CROSS JOIN nn
-    CROSS JOIN (VALUES {rules}) AS rules(m, b)
-  ) WHERE src <> dst
-),
-deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-e AS (SELECT edges.src, edges.dst, deg.deg FROM edges JOIN deg USING (src)),
-r0 AS (SELECT id, CAST(1 AS DOUBLE) / nn.n AS r FROM nodes CROSS JOIN nn)"""
-    ]
-    for t in range(1, _PR_ITERS + 1):
-        parts.append(
-            f""",
-c{t} AS (SELECT e.dst AS id, sum(r.r / e.deg) AS c
-         FROM r{t - 1} r JOIN e ON r.id = e.src GROUP BY e.dst),
-r{t} AS MATERIALIZED (SELECT nodes.id,
-                CAST({1.0 - _PR_DAMP} AS DOUBLE) / nn.n
-                + CAST({_PR_DAMP} AS DOUBLE) * coalesce(c{t}.c, 0) AS r
-         FROM nodes CROSS JOIN nn LEFT JOIN c{t} ON nodes.id = c{t}.id),
-d{t} AS (SELECT {t} AS iteration,
-                round(sum(abs(a.r - b.r)), 4) AS l1_residual
-         FROM r{t} a JOIN r{t - 1} b ON a.id = b.id)"""
-        )
-    union = " UNION ALL ".join(
-        f"SELECT * FROM d{t}" for t in range(1, _PR_ITERS + 1)
-    )
-    parts.append(
-        f"""
-SELECT CAST(iteration AS BIGINT) AS iteration, l1_residual,
-       round(l1_residual / lag(l1_residual)
-             OVER (ORDER BY iteration), 4) AS contraction
-FROM ({union}) ORDER BY iteration"""
-    )
-    return "".join(parts)
-
-
-SQL_PAGERANK_CONVERGENCE = _pr_conv_sql()
-
-
-# ---------------------------------------------------------------------------
-# ROC AUC via the Mann-Whitney U statistic (Hanley & McNeil 1982)
-# ---------------------------------------------------------------------------
-
-_AUC_CHURN_DAYS = 1
-
-
-def q_rfm_churn_auc(spark, sf_dir):
-    """Exact ROC AUC of a churn predictor, computed as the Mann-Whitney
-    U statistic (Hanley & McNeil, Radiology 1982: AUC = P(score of a
-    positive > score of a negative), = (R⁺ − n⁺(n⁺+1)/2) / (n⁺·n⁻)
-    from rank sums — no curve integration): the predictor is each
-    user's days-since-last-activity at the cutoff (rfm_scores' R
-    feature, measured on the log's first {d}-days-withheld prefix),
-    the label is churn = no activity in the final {d} day(s)
-    (sized so the synthetic per-user rates actually produce churners).  The
-    evaluation every lifecycle model starts from.  (The synthetic log
-    is a homogeneous process with no churn mechanism, so the honest
-    result is AUC ≈ 0.5 — the entry verifies the exact U-statistic
-    machinery; on real logs the R heuristic is the baseline to beat.)
-
-    Determinism: recency scores are integer microseconds; ranks use
-    (score, user) tiebreaks; U and AUC are exact integer arithmetic
-    with one final division (ties broken deterministically rather than
-    midranked — documented, twin-matched).  Scale shape: one per-user
-    max-ts aggregate, one rank window over |users| rows, a 1-row
-    reduce.
-    """.format(d=_AUC_CHURN_DAYS)
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    hor = ev.agg(F.max("us").alias("_end"))
-    cut = F.col("_end") - F.lit(_AUC_CHURN_DAYS * 86_400_000_000)
-    per = (
-        ev.crossJoin(F.broadcast(hor))
-        .groupBy("user_id")
-        .agg(
-            F.max(F.when(F.col("us") < cut, F.col("us"))).alias("last_pre"),
-            F.max(
-                (F.col("us") >= cut).cast("int")
-            ).alias("_active_post"),
-            F.max("_end").alias("_end2"),
-        )
-        .filter(F.col("last_pre").isNotNull())
-        .select(
-            "user_id",
-            (F.col("_end2") - F.col("last_pre")).alias("recency_us"),
-            (F.col("_active_post") == 0).cast("int").alias("churned"),
-        )
-    )
-    w = Window.orderBy(F.col("recency_us").asc(), F.col("user_id").asc())
-    ranked = per.withColumn("rk", F.row_number().over(w))
-    m = ranked.agg(
-        F.sum("churned").cast("long").alias("n_pos"),
-        F.sum(1 - F.col("churned")).cast("long").alias("n_neg"),
-        F.sum(F.col("churned") * F.col("rk")).cast("long").alias("r_pos"),
-    )
-    u = F.col("r_pos") - F.col("n_pos") * (F.col("n_pos") + 1) / 2
-    return m.select(
-        "n_pos", "n_neg",
-        u.cast("long").alias("u_stat"),
-        _r4(u / (F.col("n_pos") * F.col("n_neg"))).alias("auc"),
-    )
-
-
-SQL_RFM_CHURN_AUC = f"""WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS us FROM events
-),
-hor AS (SELECT max(us) AS e FROM ev),
-per AS (
-  SELECT user_id,
-         e - max(CASE WHEN us < e - {_AUC_CHURN_DAYS * 86_400_000_000}
-                      THEN us END) AS recency_us,
-         CASE WHEN max(CASE WHEN us >= e
-                            - {_AUC_CHURN_DAYS * 86_400_000_000}
-                            THEN 1 ELSE 0 END) = 0
-              THEN 1 ELSE 0 END AS churned
-  FROM ev CROSS JOIN hor GROUP BY user_id, e
-  HAVING max(CASE WHEN us < e - {_AUC_CHURN_DAYS * 86_400_000_000}
-                  THEN us END) IS NOT NULL
-),
-ranked AS (
-  SELECT churned,
-         row_number() OVER (ORDER BY recency_us ASC, user_id ASC) AS rk
-  FROM per
-),
-m AS (
-  SELECT sum(churned) AS n_pos, sum(1 - churned) AS n_neg,
-         sum(churned * rk) AS r_pos
-  FROM ranked
-)
-SELECT CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
-       CAST(r_pos - n_pos * (n_pos + 1) / 2 AS BIGINT) AS u_stat,
-       round((r_pos - n_pos * (n_pos + 1) / 2.0)
-             / (n_pos * n_neg), 4) AS auc
-FROM m"""
-
-
-# ---------------------------------------------------------------------------
-# Inter-rater agreement: Cohen's kappa between the two quality rule sets
-# ---------------------------------------------------------------------------
-
-
-def q_cohens_kappa(spark, sf_dir):
-    """Cohen's kappa (Cohen 1960) between the repo's two document-quality
-    labelers — rater A = the Gopher rule battery (q_gopher_quality's
-    keep), rater B = the corpus_pipeline stopword-density rule
-    (qual_ok: English wins the language vote, ≥ {mt} tokens, stopword
-    density ≥ 5%).  Raw percent agreement over-credits two filters that
-    both pass almost everything; kappa subtracts the agreement their
-    marginal keep-rates would produce by chance — THE number to report
-    before swapping one filter for the other in a training-data funnel
-    (Landis-Koch: ≥0.6 substantial, ≤0.2 slight).
-
-    Determinism: both labels come from one integer token aggregate
-    (counts compared against integer-scaled bounds — no float until the
-    final po/pe/kappa divisions, each rounded to 4).  Degenerate margins
-    (pe = 1: both raters constant) define kappa = 1 when po = 1, the
-    standard convention, guarded identically in both engines.
-
-    Scale shape: ONE narrow map-side aggregate per doc over the token
-    stream feeds both raters (no second text pass), then a 1-row
-    confusion reduce — no joins, no windows, no shuffle beyond the
-    per-doc groupBy.
-    """.format(mt=_PIPE_MIN_TOKENS)
-    toks = _tokens(spark, sf_dir)
-    stops = [s.strip("'") for s in _EN_STOPS.strip("()").split(",")]
-    per = toks.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_words"),
-        F.sum(F.length("term")).cast("long").alias("_chars"),
-        F.sum(F.when(F.col("term").rlike("[a-z]"), 1).otherwise(0))
-        .cast("long").alias("_alpha"),
-        F.sum(F.when(F.col("term").isin(stops), 1).otherwise(0))
-        .cast("long").alias("_stops"),
-        *[
-            F.sum(F.when(F.col("term").isin(*ws), 1).otherwise(0))
-            .cast("long").alias(f"_n_{lang}")
-            for lang, ws in _LANG_WORDS.items()
-        ],
-    )
-    n = F.col("n_words")
-    a = (
-        (n >= _GOPHER_MIN_WORDS) & (n <= _GOPHER_MAX_WORDS)
-        & (F.col("_chars") * 10 >= F.lit(int(_GOPHER_MIN_MWL * 10)) * n)
-        & (F.col("_chars") * 10 <= F.lit(int(_GOPHER_MAX_MWL * 10)) * n)
-        & (F.col("_alpha") * 5 >= n * 4)
-        & (F.col("_stops") >= _GOPHER_MIN_STOPS)
-    )
-    en, de, fr = F.col("_n_en"), F.col("_n_de"), F.col("_n_fr")
-    b = (
-        (en >= de) & (en >= fr) & (en > 0)
-        & (n >= _PIPE_MIN_TOKENS)
-        & (F.col("_stops") * 20 >= n)
-    )
-    lab = (
-        _docs(spark, sf_dir).select("doc_id")
-        .join(per, "doc_id", "left")
-        .select(
-            F.coalesce(a, F.lit(False)).cast("int").alias("a"),
-            F.coalesce(b, F.lit(False)).cast("int").alias("b"),
-        )
-    )
-    m = lab.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.col("a") * F.col("b")).cast("long").alias("n11"),
-        F.sum(F.col("a") * (1 - F.col("b"))).cast("long").alias("n10"),
-        F.sum((1 - F.col("a")) * F.col("b")).cast("long").alias("n01"),
-        F.sum((1 - F.col("a")) * (1 - F.col("b"))).cast("long").alias("n00"),
-    )
-    nn = F.col("n_docs")
-    po = (F.col("n11") + F.col("n00")) / nn
-    pe = (
-        (F.col("n11") + F.col("n10")) * (F.col("n11") + F.col("n01"))
-        + (F.col("n01") + F.col("n00")) * (F.col("n10") + F.col("n00"))
-    ) / (nn * nn)
-    kappa = F.when(pe == 1.0, F.when(po == 1.0, 1.0).otherwise(0.0)).otherwise(
-        (po - pe) / (1.0 - pe)
-    )
-    return m.select(
-        "n_docs", "n11", "n10", "n01", "n00",
-        _r4(po).alias("po"), _r4(pe).alias("pe"), _r4(kappa).alias("kappa"),
-    )
-
-
-def _kappa_sql() -> str:
-    langs = ", ".join(
-        f"{_lang_sum_sql(lang)} AS n_{lang}" for lang in _LANG_WORDS
-    )
-    return f"""WITH {_TOKS_SQL},
-per AS (
-  SELECT doc_id, count(*) AS n_words, sum(length(term)) AS chars,
-         sum(CASE WHEN regexp_matches(term, '[a-z]') THEN 1 ELSE 0 END)
-           AS alpha,
-         sum(CASE WHEN term IN {_EN_STOPS} THEN 1 ELSE 0 END) AS stops,
-         {langs}
-  FROM toks GROUP BY doc_id
-),
-lab AS (
-  SELECT CAST(coalesce(
-           p.n_words >= {_GOPHER_MIN_WORDS}
-           AND p.n_words <= {_GOPHER_MAX_WORDS}
-           AND p.chars * 10 >= {int(_GOPHER_MIN_MWL * 10)} * p.n_words
-           AND p.chars * 10 <= {int(_GOPHER_MAX_MWL * 10)} * p.n_words
-           AND p.alpha * 5 >= p.n_words * 4
-           AND p.stops >= {_GOPHER_MIN_STOPS}, false) AS INT) AS a,
-         CAST(coalesce(
-           p.n_en >= p.n_de AND p.n_en >= p.n_fr AND p.n_en > 0
-           AND p.n_words >= {_PIPE_MIN_TOKENS}
-           AND p.stops * 20 >= p.n_words, false) AS INT) AS b
-  FROM documents d LEFT JOIN per p USING (doc_id)
-),
-m AS (
-  SELECT count(*) AS n_docs, sum(a * b) AS n11, sum(a * (1 - b)) AS n10,
-         sum((1 - a) * b) AS n01, sum((1 - a) * (1 - b)) AS n00
-  FROM lab
-)
-SELECT CAST(n_docs AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n11,
-       CAST(n10 AS BIGINT) AS n10, CAST(n01 AS BIGINT) AS n01,
-       CAST(n00 AS BIGINT) AS n00,
-       round((n11 + n00) * 1.0 / n_docs, 4) AS po,
-       round(((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00))
-             * 1.0 / (n_docs * n_docs), 4) AS pe,
-       round(CASE
-         WHEN ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00))
-              * 1.0 / (n_docs * n_docs) = 1.0
-         THEN CASE WHEN (n11 + n00) * 1.0 / n_docs = 1.0
-                   THEN 1.0 ELSE 0.0 END
-         ELSE ((n11 + n00) * 1.0 / n_docs
-               - ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00))
-                 * 1.0 / (n_docs * n_docs))
-              / (1.0 - ((n11 + n10) * (n11 + n01)
-                        + (n01 + n00) * (n10 + n00))
-                       * 1.0 / (n_docs * n_docs))
-       END, 4) AS kappa
-FROM m"""
-
-
-SQL_COHENS_KAPPA = _kappa_sql()
-
-
-# ---------------------------------------------------------------------------
-# Kaplan-Meier survival estimate of user lifetime
-# ---------------------------------------------------------------------------
-
-_KM_CENSOR_DAYS = 1
-_US_PER_DAY = 86_400_000_000
-
-
-def q_kaplan_meier(spark, sf_dir):
-    """Kaplan-Meier product-limit survival curve (Kaplan & Meier, JASA
-    1958) of user lifetime in the event log — the censoring-correct
-    companion to retention_cohorts (which ignores censoring) and the
-    lifetime distribution rfm_churn_auc's recency heuristic tries to
-    predict.  A user's lifetime is last-activity − first-activity in
-    whole days; users still active in the final {d}-day window are
-    right-CENSORED at their last observed activity (they exit the risk
-    set without an event — exactly the bias naive "average lifetime"
-    numbers get wrong).  S(t) = ∏_{{tᵢ ≤ t}} (1 − dᵢ/nᵢ) over event
-    times tᵢ, with nᵢ = users whose observation time ≥ tᵢ.
-
-    Determinism: durations are exact integer-microsecond differences
-    floor-divided into days; dᵢ/nᵢ ratios and the exp/ln product are the
-    only floats, rounded to 4.  If every at-risk user dies at some tᵢ
-    (dᵢ = nᵢ) the survival hits exact 0 there and stays 0, guarded with
-    an explicit flag instead of ln(0).
-
-    Scale shape: one per-user min/max aggregate (n-row shuffle), one
-    per-duration groupBy (≤ log-span-in-days rows), then windows over
-    that bounded relation — the heavy lifting is the first aggregate;
-    everything after is metadata-sized.
-    """.format(d=_KM_CENSOR_DAYS)
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    hor = ev.agg(F.max("us").alias("_end"))
-    cut = F.col("_end") - F.lit(_KM_CENSOR_DAYS * _US_PER_DAY)
-    per = (
-        ev.crossJoin(F.broadcast(hor))
-        .groupBy("user_id")
-        .agg(
-            F.min("us").alias("first_us"),
-            F.max("us").alias("last_us"),
-            F.max("_end").alias("_end2"),
-        )
-        .select(
-            F.floor(
-                (F.col("last_us") - F.col("first_us")) / F.lit(_US_PER_DAY)
-            ).cast("long").alias("duration_days"),
-            (
-                F.col("last_us")
-                < F.col("_end2") - F.lit(_KM_CENSOR_DAYS * _US_PER_DAY)
-            ).cast("int").alias("churned"),
-        )
-    )
-    g = per.groupBy("duration_days").agg(
-        F.count("*").cast("long").alias("_n_all"),
-        F.sum("churned").cast("long").alias("n_events"),
-    )
-    w_risk = (
-        Window.orderBy(F.col("duration_days").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    g = g.withColumn("n_risk", F.sum("_n_all").over(w_risk))
-    evt = g.filter(F.col("n_events") > 0)
-    w_surv = (
-        Window.orderBy(F.col("duration_days").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    term = F.when(
-        F.col("n_events") < F.col("n_risk"),
-        F.log(F.lit(1.0) - F.col("n_events") / F.col("n_risk")),
-    ).otherwise(F.lit(0.0))
-    hit_zero = F.max(
-        (F.col("n_events") == F.col("n_risk")).cast("int")
-    ).over(w_surv)
-    s_log = F.sum(term).over(w_surv)
-    return (
-        evt.withColumn(
-            "survival",
-            F.when(hit_zero == 1, F.lit(0.0)).otherwise(_r4(F.exp(s_log))),
-        )
-        .select("duration_days", "n_risk", "n_events", "survival")
-        .orderBy("duration_days")
-    )
-
-
-SQL_KAPLAN_MEIER = f"""WITH ev AS (
-  SELECT user_id, epoch_us(ts) AS us FROM events
-),
-hor AS (SELECT max(us) AS e FROM ev),
-per AS (
-  SELECT CAST((max(us) - min(us)) // {_US_PER_DAY} AS BIGINT)
-           AS duration_days,
-         CASE WHEN max(us) < e - {_KM_CENSOR_DAYS * _US_PER_DAY}
-              THEN 1 ELSE 0 END AS churned
-  FROM ev CROSS JOIN hor GROUP BY user_id, e
-),
-g AS (
-  SELECT duration_days, count(*) AS n_all, sum(churned) AS n_events
-  FROM per GROUP BY duration_days
-),
-risk AS (
-  SELECT duration_days, n_events,
-         sum(n_all) OVER (ORDER BY duration_days DESC
-                          ROWS UNBOUNDED PRECEDING) AS n_risk
-  FROM g
-),
-evt AS (SELECT * FROM risk WHERE n_events > 0),
-surv AS (
-  SELECT duration_days, n_risk, n_events,
-         max(CASE WHEN n_events = n_risk THEN 1 ELSE 0 END)
-           OVER w AS hit_zero,
-         sum(CASE WHEN n_events < n_risk
-                  THEN ln(1.0 - n_events * 1.0 / n_risk)
-                  ELSE 0.0 END) OVER w AS s_log
-  FROM evt
-  WINDOW w AS (ORDER BY duration_days ASC ROWS UNBOUNDED PRECEDING)
-)
-SELECT duration_days, CAST(n_risk AS BIGINT) AS n_risk,
-       CAST(n_events AS BIGINT) AS n_events,
-       CASE WHEN hit_zero = 1 THEN 0.0 ELSE round(exp(s_log), 4) END
-         AS survival
-FROM surv ORDER BY duration_days"""
-
-
-# ---------------------------------------------------------------------------
-# Benford leading-digit audit of the event-value stream
-# ---------------------------------------------------------------------------
-
-
-def q_benford_digits(spark, sf_dir):
-    """Benford's-law leading-digit audit (Newcomb 1881 / Benford 1938;
-    Nigrini's forensic-accounting test battery) of the event value
-    stream — the cheap click-fraud / bot-traffic smell test: organic
-    multi-order-of-magnitude amounts follow P(d) = log₁₀(1 + 1/d),
-    synthetic or capped streams don't.  Output: per leading digit 1-9,
-    the observed count, observed vs expected proportion, and the
-    Pearson χ² contribution (sum them for the 8-df statistic; the twin
-    test pins the total).  Whether a given stream conforms is the
-    empirical readout — the sf0.001 synthetic amounts happen to land
-    χ² ≈ 8.4, under the 8-df 99% critical value 20.09, because they
-    span two orders of magnitude; a capped or botted stream would
-    blow past it.
-
-    Determinism: values are two-decimal amounts, lifted to exact
-    integer cents via round(value·100) before the digit is taken from
-    the integer's decimal string — no float log in the digit path; the
-    expected-proportion log₁₀ and χ² arithmetic are rounded to 4.
-    Digits with zero observations still appear (left join against the
-    literal 1-9 relation) so the χ² is over all 9 cells.
-
-    Scale shape: one narrow map + a 9-group aggregate; the digit table
-    and the 1-row total are broadcast — nothing shuffles but the
-    9-group combine."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents")
-    ).filter(F.col("cents") > 0)
-    obs = (
-        ev.select(
-            F.substring(F.col("cents").cast("string"), 1, 1)
-            .cast("int").alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    digits = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
-    full = digits.join(obs, "digit", "left").select(
-        "digit", F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n")
-    )
-    tot = full.agg(F.sum("n").cast("long").alias("_t"))
-    exp_p = F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit"))
-    expected = F.col("_t") * exp_p
-    return (
-        full.crossJoin(F.broadcast(tot))
-        .select(
-            "digit", "n",
-            _r4(F.col("n") / F.col("_t")).alias("obs_p"),
-            _r4(exp_p).alias("exp_p"),
-            _r4((F.col("n") - expected) * (F.col("n") - expected) / expected)
-            .alias("chi2_term"),
-        )
-        .orderBy("digit")
-    )
-
-
-SQL_BENFORD_DIGITS = """WITH cents AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents FROM events
-  WHERE CAST(round(value * 100) AS BIGINT) > 0
-),
-obs AS (
-  SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INT) AS digit,
-         count(*) AS n
-  FROM cents GROUP BY 1
-),
-filled AS (
-  SELECT d.digit, coalesce(obs.n, 0) AS n
-  FROM (SELECT unnest(range(1, 10)) AS digit) d
-  LEFT JOIN obs ON d.digit = obs.digit
-),
-tot AS (SELECT sum(n) AS t FROM filled)
-SELECT CAST(digit AS INT) AS digit, CAST(n AS BIGINT) AS n,
-       round(n * 1.0 / t, 4) AS obs_p,
-       round(log10(1.0 + 1.0 / digit), 4) AS exp_p,
-       round((n - t * log10(1.0 + 1.0 / digit))
-             * (n - t * log10(1.0 + 1.0 / digit))
-             / (t * log10(1.0 + 1.0 / digit)), 4) AS chi2_term
-FROM filled CROSS JOIN tot ORDER BY digit"""
-
-
-# ---------------------------------------------------------------------------
-# Head-term coverage curve (posting-cache / tiering sizing)
-# ---------------------------------------------------------------------------
-
-_COVERAGE_KS = (1, 2, 5, 10, 20, 30)
-
-
-def q_term_coverage(spark, sf_dir):
-    """Head-term coverage curve: for each k, the fraction of ALL token
-    occurrences covered by the k most frequent terms — the sizing curve
-    behind every head/tail split this repo models pointwise
-    (champion lists, tiered_index, cache_selection, stopword
-    induction): reading coverage(k) off this table is how you pick the
-    head size those operators then exploit.  Zipfian text concentrates
-    fast (top-10 terms often cover >50% of a web corpus); the curve
-    makes the knee explicit.
-
-    Determinism: integer occurrence counts, ties broken (count desc,
-    term asc), one final division rounded to 4.  Scale shape: the term
-    count is a map-side-combined aggregate; the head is taken with a
-    distributed TakeOrdered (orderBy.limit(max k) — never a full sort),
-    and the rank/cumsum windows then run over that ≤ max-k-row head;
-    the grand total is a 1-row broadcast side plan."""
-    from pyspark.sql import Window
-
-    counts = _tokens(spark, sf_dir).groupBy("term").agg(
-        F.count("*").cast("long").alias("cnt")
-    )
-    tot = counts.agg(F.sum("cnt").cast("long").alias("_t"))
-    head = counts.orderBy(F.col("cnt").desc(), F.col("term").asc()).limit(
-        max(_COVERAGE_KS)
-    )
-    w = (
-        Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = head.select(
-        F.row_number().over(
-            Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
-        ).alias("k"),
-        F.sum("cnt").over(w).alias("cum_tokens"),
-    )
-    return (
-        ranked.filter(F.col("k").isin(*_COVERAGE_KS))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("k").cast("int").alias("k"),
-            F.col("cum_tokens").cast("long").alias("cum_tokens"),
-            F.col("_t").alias("total_tokens"),
-            _r4(F.col("cum_tokens") / F.col("_t")).alias("coverage"),
-        )
-        .orderBy("k")
-    )
-
-
-SQL_TERM_COVERAGE = f"""WITH {_TOKS_SQL},
-counts AS (SELECT term, count(*) AS cnt FROM toks GROUP BY term),
-tot AS (SELECT sum(cnt) AS t FROM counts),
-ranked AS (
-  SELECT row_number() OVER (ORDER BY cnt DESC, term ASC) AS k,
-         sum(cnt) OVER (ORDER BY cnt DESC, term ASC
-                        ROWS UNBOUNDED PRECEDING) AS cum_tokens
-  FROM counts
-)
-SELECT CAST(k AS INT) AS k, CAST(cum_tokens AS BIGINT) AS cum_tokens,
-       CAST(t AS BIGINT) AS total_tokens,
-       round(cum_tokens * 1.0 / t, 4) AS coverage
-FROM ranked CROSS JOIN tot
-WHERE k IN {_COVERAGE_KS} ORDER BY k"""
-
-
-# ---------------------------------------------------------------------------
-# Jensen-Shannon time-drift of the event-type mix
-# ---------------------------------------------------------------------------
-
-
-def q_jsd_drift(spark, sf_dir):
-    """Jensen-Shannon divergence (Lin 1991) between the event-type mix of
-    the log's first and second half (split at the exact midpoint
-    timestamp) — the BOUNDED, symmetric companion to q_kl_drift's
-    per-source KL: JSD never exceeds ln 2, needs no smoothing (the
-    mixture M = (P+Q)/2 is positive wherever either half has mass, and
-    0·ln 0 = 0 handles one-sided types exactly), and is the standard
-    drift alarm for monitoring dashboards precisely because a brand-new
-    event type yields a finite number instead of KL's ∞.  Output: per
-    event type, each half's count and proportion and the type's JSD
-    contribution ½(p·ln(p/m) + q·ln(q/m)); the twin test pins the total
-    and its ln 2 bound.
-
-    Determinism: the midpoint is exact integer-microsecond arithmetic;
-    proportions are count ratios; contributions round to 4.  Scale
-    shape: one narrow pass tags each event with its half (the 1-row
-    min/max side plan broadcasts), one event_type×half aggregate
-    (bounded groups), then arithmetic over the tiny grouped relation."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    span = ev.agg(
-        F.min("us").alias("_lo"), F.max("us").alias("_hi")
-    )
-    mid = (F.col("_lo") + F.col("_hi")) / 2
-    g = (
-        ev.crossJoin(F.broadcast(span))
-        .groupBy("event_type")
-        .agg(
-            F.sum((F.col("us") < mid).cast("int")).cast("long").alias("n_a"),
-            F.sum((F.col("us") >= mid).cast("int")).cast("long").alias("n_b"),
-        )
-    )
-    tot = g.agg(
-        F.sum("n_a").cast("long").alias("_ta"),
-        F.sum("n_b").cast("long").alias("_tb"),
-    )
-    p = F.col("n_a") / F.col("_ta")
-    q = F.col("n_b") / F.col("_tb")
-    m = (p + q) / 2
-    contrib = (
-        F.when(p > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
-        + F.when(q > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
-    ) / 2
-    return (
-        g.crossJoin(F.broadcast(tot))
-        .select(
-            "event_type", "n_a", "n_b",
-            _r4(p).alias("p_a"), _r4(q).alias("p_b"),
-            _r4(contrib).alias("jsd_term"),
-        )
-        .orderBy("event_type")
-    )
-
-
-SQL_JSD_DRIFT = """WITH ev AS (
-  SELECT event_type, epoch_us(ts) AS us FROM events
-),
-span AS (SELECT min(us) AS lo, max(us) AS hi FROM ev),
-g AS (
-  SELECT event_type,
-         sum(CASE WHEN us < (lo + hi) / 2 THEN 1 ELSE 0 END) AS n_a,
-         sum(CASE WHEN us >= (lo + hi) / 2 THEN 1 ELSE 0 END) AS n_b
-  FROM ev CROSS JOIN span GROUP BY event_type
-),
-tot AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM g)
-SELECT event_type, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-       round(n_a * 1.0 / ta, 4) AS p_a,
-       round(n_b * 1.0 / tb, 4) AS p_b,
-       round((CASE WHEN n_a > 0
-                   THEN (n_a * 1.0 / ta)
-                        * ln((n_a * 1.0 / ta)
-                             / ((n_a * 1.0 / ta + n_b * 1.0 / tb) / 2))
-                   ELSE 0.0 END
-              + CASE WHEN n_b > 0
-                     THEN (n_b * 1.0 / tb)
-                          * ln((n_b * 1.0 / tb)
-                               / ((n_a * 1.0 / ta + n_b * 1.0 / tb) / 2))
-                     ELSE 0.0 END) / 2, 4) AS jsd_term
-FROM g CROSS JOIN tot ORDER BY event_type"""
-
-
-# ---------------------------------------------------------------------------
-# Newman modularity of the LPA partition
-# ---------------------------------------------------------------------------
-
-
-def q_modularity(spark, sf_dir):
-    """Newman-Girvan modularity Q (Newman 2004) of the label-propagation
-    partition over the undirected link graph — the quality number that
-    turns q_label_propagation from "a labeling" into "a good/bad
-    clustering": Q = Σ_c [L_c/m − (D_c/2m)²] compares each community's
-    internal-edge fraction against the configuration-model expectation
-    from its degree mass (Q ≈ 0: no better than random; ≳ 0.3:
-    meaningful structure).  One row: graph sizes, community count, and
-    Q — the acceptance gate before LPA labels feed host-crowding or
-    crawl partitioning downstream.
-
-    Determinism: L_c, D_c, m are exact integer counts (LPA itself is
-    the deterministic synchronous variant); Q's divisions are the only
-    floats, rounded to 4.  Scale shape: the partition reuses LPA's
-    Pregel-shaped rounds; modularity then costs one edge-to-label join
-    keyed by node (the graph's own partitioning), a per-community
-    aggregate, and a 1-row reduce — no new quadratic anything."""
-    lbl = q_label_propagation(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), "community"
-    )
-    with_n, edges = _link_edges(spark, sf_dir)
-    und = edges.select(
-        F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-    ).distinct()
-    m_edges = und.agg(F.count("*").cast("long").alias("_m"))
-    deg = (
-        und.select(F.col("lo").alias("id"))
-        .unionAll(und.select(F.col("hi").alias("id")))
-        .groupBy("id").agg(F.count("*").cast("long").alias("deg"))
-    )
-    la = lbl.select(F.col("id").alias("lo"), F.col("community").alias("ca"))
-    lb = lbl.select(F.col("id").alias("hi"), F.col("community").alias("cb"))
-    within = (
-        und.join(la, "lo").join(lb, "hi")
-        .filter(F.col("ca") == F.col("cb"))
-        .groupBy(F.col("ca").alias("community"))
-        .agg(F.count("*").cast("long").alias("l_c"))
-    )
-    degmass = (
-        lbl.join(deg, "id", "left")
-        .groupBy("community")
-        .agg(F.sum(F.coalesce(F.col("deg"), F.lit(0))).cast("long")
-             .alias("d_c"))
-    )
-    percom = degmass.join(within, "community", "left").select(
-        "community",
-        F.coalesce(F.col("l_c"), F.lit(0)).alias("l_c"),
-        "d_c",
-    )
-    return (
-        percom.crossJoin(F.broadcast(m_edges))
-        .agg(
-            F.count("*").cast("long").alias("n_communities"),
-            F.first("_m").alias("n_edges"),
-            _r4(
-                F.sum(
-                    F.col("l_c") / F.col("_m")
-                    - (F.col("d_c") / (2.0 * F.col("_m")))
-                    * (F.col("d_c") / (2.0 * F.col("_m")))
-                )
-            ).alias("modularity"),
-        )
-        .select("n_communities", F.col("n_edges").cast("long").alias("n_edges"),
-                "modularity")
-    )
-
-
-def _modularity_sql() -> str:
-    parts = [f"""WITH {_edges_sql()},
-und AS (
-  SELECT DISTINCT least(src, dst) AS lo, greatest(src, dst) AS hi FROM edges
-),
-nbr AS (
-  SELECT lo AS src, hi AS dst FROM und
-  UNION ALL SELECT hi AS src, lo AS dst FROM und
-),
-l0 AS (SELECT id, id AS lbl FROM nodes)"""]
-    for t in range(1, _LPA_ITERS + 1):
-        parts.append(
-            f""",
-c{t} AS (
-  SELECT n.dst AS id, l.lbl, count(*) AS c
-  FROM nbr n JOIN l{t - 1} l ON n.src = l.id GROUP BY n.dst, l.lbl
-),
-p{t} AS (
-  SELECT id, lbl FROM (
-    SELECT id, lbl,
-           row_number() OVER (PARTITION BY id
-                              ORDER BY c DESC, lbl ASC) AS rn
-    FROM c{t}
-  ) WHERE rn = 1
-),
-l{t} AS (
-  SELECT l.id, coalesce(p.lbl, l.lbl) AS lbl
-  FROM l{t - 1} l LEFT JOIN p{t} p ON l.id = p.id
-)"""
-        )
-    parts.append(f""",
-mm AS (SELECT count(*) AS m FROM und),
-deg AS (
-  SELECT id, count(*) AS deg FROM (
-    SELECT lo AS id FROM und UNION ALL SELECT hi AS id FROM und
-  ) GROUP BY id
-),
-within AS (
-  SELECT la.lbl AS community, count(*) AS l_c
-  FROM und
-  JOIN l{_LPA_ITERS} la ON und.lo = la.id
-  JOIN l{_LPA_ITERS} lb ON und.hi = lb.id
-  WHERE la.lbl = lb.lbl GROUP BY la.lbl
-),
-degmass AS (
-  SELECT l.lbl AS community, sum(coalesce(deg.deg, 0)) AS d_c
-  FROM l{_LPA_ITERS} l LEFT JOIN deg ON l.id = deg.id GROUP BY l.lbl
-),
-percom AS (
-  SELECT dm.community, coalesce(w.l_c, 0) AS l_c, dm.d_c
-  FROM degmass dm LEFT JOIN within w ON dm.community = w.community
-)
-SELECT CAST(count(*) AS BIGINT) AS n_communities,
-       CAST(max(mm.m) AS BIGINT) AS n_edges,
-       round(sum(l_c * 1.0 / mm.m
-                 - (d_c / (2.0 * mm.m)) * (d_c / (2.0 * mm.m))), 4)
-         AS modularity
-FROM percom CROSS JOIN mm""")
-    return "".join(parts)
-
-
-SQL_MODULARITY = _modularity_sql()
-
-
-# ---------------------------------------------------------------------------
-# Equi-width histogram quantile sketch vs exact quantiles
-# ---------------------------------------------------------------------------
-
-_QSKETCH_BUCKETS = 64
-_QSKETCH_PS = (0.5, 0.9, 0.95, 0.99)
-
-
-def q_quantile_sketch_error(spark, sf_dir):
-    """Measured accuracy of the one-pass equi-width-histogram quantile
-    sketch against the exact interpolated quantile — the same
-    accuracy-companion contract as lsh_recall/ann_ivf_recall, here for
-    the metrics path: a {b}-bucket histogram is what a per-partition
-    metrics table can afford at 100 TB (mergeable, constant size — the
-    cheap cousin of Greenwald-Khanna / t-digest), and this entry prints
-    exactly how much tail-quantile truth that buys.  Per p in
-    {ps}: the sketch estimate (linear interpolation inside the covering
-    bucket), the exact value, and absolute/relative error.
-
-    Determinism: both engines evaluate the same bucket-index expression
-    (IEEE double ops in the same order), the same cumulative window, and the
-    same exact-percentile definition (linear interpolation — already
-    relied on by latency_quantiles); outputs round to 4.  Scale shape:
-    the sketch is one narrow map + a {b}-group aggregate; the windows
-    and the p-sweep then run on the ≤{b}-row histogram, broadcast-sized;
-    the exact side is the engine's percentile aggregate, present only
-    because the entry's job is to measure the sketch against it.
-    """.format(b=_QSKETCH_BUCKETS, ps=_QSKETCH_PS)
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("value")
-    stats = ev.agg(
-        F.count("*").cast("long").alias("_n"),
-        F.min("value").alias("_mn"),
-        F.max("value").alias("_mx"),
-        *[
-            F.expr(f"percentile(value, {p})").alias(f"_ex_{i}")
-            for i, p in enumerate(_QSKETCH_PS)
-        ],
-    )
-    bexpr = F.least(
-        F.floor(
-            (F.col("value") - F.col("_mn"))
-            / (F.col("_mx") - F.col("_mn"))
-            * _QSKETCH_BUCKETS
-        ),
-        F.lit(_QSKETCH_BUCKETS - 1),
-    ).cast("int")
-    hist = (
-        ev.crossJoin(F.broadcast(stats.select("_mn", "_mx")))
-        .select(bexpr.alias("b"))
-        .groupBy("b")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    wcum = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    hist = hist.withColumn("cum", F.sum("c").over(wcum))
-    ps = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(_QSKETCH_PS)], "i int, p double"
-    )
-    cand = (
-        ps.crossJoin(hist)
-        .crossJoin(F.broadcast(stats))
-        .filter(F.col("cum") >= F.col("p") * F.col("_n"))
-        .groupBy("i", "p").agg(F.min("b").alias("b"))
-    )
-    j = (
-        cand.join(hist, "b")
-        .crossJoin(F.broadcast(stats))
-    )
-    width = (F.col("_mx") - F.col("_mn")) / _QSKETCH_BUCKETS
-    approx = F.col("_mn") + width * (
-        F.col("b")
-        + (F.col("p") * F.col("_n") - (F.col("cum") - F.col("c")))
-        / F.col("c")
-    )
-    exact = F.coalesce(
-        *[
-            F.when(F.col("i") == i, F.col(f"_ex_{i}"))
-            for i in range(len(_QSKETCH_PS))
-        ]
-    )
-    return (
-        j.select(
-            F.col("p"),
-            _r4(exact).alias("exact"),
-            _r4(approx).alias("approx"),
-            _r4(F.abs(approx - exact)).alias("abs_err"),
-            _r4(F.abs(approx - exact) / exact).alias("rel_err"),
-        )
-        .orderBy("p")
-    )
-
-
-def _qsketch_sql() -> str:
-    b = _QSKETCH_BUCKETS
-    pvals = ", ".join(
-        f"({i}, CAST({p} AS DOUBLE))" for i, p in enumerate(_QSKETCH_PS)
-    )
-    exacts = ", ".join(
-        f"quantile_cont(value, {p}) AS ex_{i}"
-        for i, p in enumerate(_QSKETCH_PS)
-    )
-    excase = " ".join(
-        f"WHEN ps.i = {i} THEN stats.ex_{i}"
-        for i in range(len(_QSKETCH_PS))
-    )
-    return f"""WITH stats AS (
-  SELECT count(*) AS n, min(value) AS mn, max(value) AS mx, {exacts}
-  FROM events
-),
-hist AS (
-  SELECT CAST(least(floor((value - mn) / (mx - mn) * {b}),
-                    {b - 1}) AS INT) AS b,
-         count(*) AS c
-  FROM events CROSS JOIN stats GROUP BY 1
-),
-cum AS (
-  SELECT b, c, sum(c) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING) AS cum
-  FROM hist
-),
-ps AS (SELECT * FROM (VALUES {pvals}) AS t(i, p)),
-cand AS (
-  SELECT ps.i, ps.p, min(cum.b) AS b
-  FROM ps CROSS JOIN stats JOIN cum ON cum.cum >= ps.p * stats.n
-  GROUP BY ps.i, ps.p
-)
-SELECT ps.p,
-       round(CASE {excase} END, 4) AS exact,
-       round(stats.mn + (stats.mx - stats.mn) / {b}
-             * (cum.b + (ps.p * stats.n - (cum.cum - cum.c)) / cum.c), 4)
-         AS approx,
-       round(abs(stats.mn + (stats.mx - stats.mn) / {b}
-                 * (cum.b + (ps.p * stats.n - (cum.cum - cum.c)) / cum.c)
-                 - (CASE {excase} END)), 4) AS abs_err,
-       round(abs(stats.mn + (stats.mx - stats.mn) / {b}
-                 * (cum.b + (ps.p * stats.n - (cum.cum - cum.c)) / cum.c)
-                 - (CASE {excase} END)) / (CASE {excase} END), 4) AS rel_err
-FROM cand ps
-JOIN cum ON ps.b = cum.b
-CROSS JOIN stats
-ORDER BY ps.p"""
-
-
-SQL_QUANTILE_SKETCH_ERROR = _qsketch_sql()
-
-
-# ---------------------------------------------------------------------------
-# Capture-recapture corpus-size estimation (Bharat-Broder)
-# ---------------------------------------------------------------------------
-
-_CAPTURE_RATE_A = 60   # percent
-_CAPTURE_RATE_B = 50
-
-
-def q_corpus_size_estimate(spark, sf_dir):
-    """Capture-recapture estimate of corpus size from two overlapping
-    samples — the Lincoln-Petersen index N̂ = n₁n₂/m plus Chapman's
-    small-sample correction N̂ = (n₁+1)(n₂+1)/(m+1) − 1, the technique
-    Bharat & Broder (WWW 1998) used to estimate the indexable web from
-    two engines' overlap, and Lawrence & Giles repeated in Science.
-    Here the two "crawls" are deterministic salted-hash samples (md5 of
-    'a'/'b' + doc_id, {ra}%/{rb}% — independent because the salts make
-    the two hash streams unrelated), so the entry measures the
-    estimator's machinery against the KNOWN corpus size: the relative
-    error column is the honest readout.
-
-    Determinism: sample membership is a pure function of doc_id via the
-    engine-portable md5-prefix hash (the _hash16 pattern); all counts
-    integer; the two estimates and the error are the only divisions,
-    rounded to 4.  Scale shape: one narrow pass computes both flags,
-    one 1-row reduce — no join at all (overlap is flag conjunction, not
-    a set intersection).
-    """.format(ra=_CAPTURE_RATE_A, rb=_CAPTURE_RATE_B)
-    def flag(salt: str, rate: int) -> F.Column:
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))),
-                1, 4,
-            ),
-            16, 10,
-        ).cast("int")
-        return ((h % 100) < rate).cast("int")
-
-    d = _docs(spark, sf_dir).select(
-        flag("a", _CAPTURE_RATE_A).alias("a"),
-        flag("b", _CAPTURE_RATE_B).alias("b"),
-    )
-    m = d.agg(
-        F.count("*").cast("long").alias("n_true"),
-        F.sum("a").cast("long").alias("n1"),
-        F.sum("b").cast("long").alias("n2"),
-        F.sum(F.col("a") * F.col("b")).cast("long").alias("n_overlap"),
-    )
-    petersen = F.when(
-        F.col("n_overlap") > 0,
-        _r4(F.col("n1") * F.col("n2") / F.col("n_overlap")),
-    )
-    chapman = _r4(
-        (F.col("n1") + 1) * (F.col("n2") + 1) / (F.col("n_overlap") + 1) - 1
-    )
-    return m.select(
-        "n_true", "n1", "n2", "n_overlap",
-        petersen.alias("petersen_est"),
-        chapman.alias("chapman_est"),
-        _r4(
-            F.abs(
-                (F.col("n1") + 1) * (F.col("n2") + 1)
-                / (F.col("n_overlap") + 1) - 1 - F.col("n_true")
-            ) / F.col("n_true")
-        ).alias("chapman_rel_err"),
-    )
-
-
-def _hash16_sql_of(expr: str) -> str:
-    return (
-        f"((strpos('0123456789abcdef', substr(md5({expr}), 1, 1)) - 1) * 4096"
-        f" + (strpos('0123456789abcdef', substr(md5({expr}), 2, 1)) - 1) * 256"
-        f" + (strpos('0123456789abcdef', substr(md5({expr}), 3, 1)) - 1) * 16"
-        f" + (strpos('0123456789abcdef', substr(md5({expr}), 4, 1)) - 1))"
-    )
-
-
-SQL_CORPUS_SIZE_ESTIMATE = f"""WITH d AS (
-  SELECT CASE WHEN {_hash16_sql_of("'a' || CAST(doc_id AS VARCHAR)")} % 100
-              < {_CAPTURE_RATE_A} THEN 1 ELSE 0 END AS a,
-         CASE WHEN {_hash16_sql_of("'b' || CAST(doc_id AS VARCHAR)")} % 100
-              < {_CAPTURE_RATE_B} THEN 1 ELSE 0 END AS b
-  FROM documents
-),
-m AS (
-  SELECT count(*) AS n_true, sum(a) AS n1, sum(b) AS n2,
-         sum(a * b) AS n_overlap
-  FROM d
-)
-SELECT CAST(n_true AS BIGINT) AS n_true, CAST(n1 AS BIGINT) AS n1,
-       CAST(n2 AS BIGINT) AS n2, CAST(n_overlap AS BIGINT) AS n_overlap,
-       CASE WHEN n_overlap > 0
-            THEN round(n1 * n2 * 1.0 / n_overlap, 4) END AS petersen_est,
-       round((n1 + 1) * (n2 + 1) * 1.0 / (n_overlap + 1) - 1, 4)
-         AS chapman_est,
-       round(abs((n1 + 1) * (n2 + 1) * 1.0 / (n_overlap + 1) - 1 - n_true)
-             / n_true, 4) AS chapman_rel_err
-FROM m"""
-
-
-# ---------------------------------------------------------------------------
-# Click entropy (query ambiguity / personalization potential)
-# ---------------------------------------------------------------------------
-
-
-def q_click_entropy(spark, sf_dir):
-    """Click entropy per query (Dou, Song & Wen, WWW 2007; Teevan et
-    al.'s "potential for personalization"): H(q) = −Σ_item p·ln p over
-    the query's click distribution — the standard query-AMBIGUITY
-    score.  Low entropy = navigational (everyone clicks one result,
-    personalization can't help); high entropy = informational/ambiguous
-    (the re-ranking headroom personalization and diversification chase;
-    the selector MMR-style diversification should run behind).  Uses
-    the log's established pseudo-query convention (user_id % {q}, as
-    coclick_similarity/coec_model) and raw click counts, not distinct
-    items — repeat clicks are evidence of concentration.
-
-    Determinism: integer click counts; p and the entropy sum are the
-    only floats, rounded to 4.  Scale shape: one (query, item) count
-    aggregate (map-side combined), per-query totals via a second tiny
-    aggregate joined back — both keyed by query, the log's natural
-    partitioning; output is |Q| rows.
-    """.format(q=_COCLICK_Q)
-    cl = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.pmod(F.col("user_id"), F.lit(_COCLICK_Q)).cast("long")
-            .alias("q"),
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    qi = cl.groupBy("q", "item").agg(F.count("*").cast("long").alias("c"))
-    qt = qi.groupBy("q").agg(
-        F.sum("c").cast("long").alias("n_clicks"),
-        F.count("*").cast("long").alias("n_items"),
-    )
-    p = F.col("c") / F.col("n_clicks")
-    return (
-        qi.join(F.broadcast(qt), "q")
-        .groupBy("q")
-        .agg(
-            F.first("n_clicks").alias("n_clicks"),
-            F.first("n_items").alias("n_items"),
-            _r4(-F.sum(p * F.log(p))).alias("click_entropy"),
-        )
-        .select("q", "n_clicks", "n_items", "click_entropy")
-        .orderBy("q")
-    )
-
-
-SQL_CLICK_ENTROPY = f"""WITH cl AS (
-  SELECT user_id % {_COCLICK_Q} AS q,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type = 'click'
-    AND json_extract_string(props, '$.k') IS NOT NULL
-),
-qi AS (SELECT q, item, count(*) AS c FROM cl GROUP BY q, item),
-qt AS (SELECT q, sum(c) AS n_clicks, count(*) AS n_items
-       FROM qi GROUP BY q)
-SELECT qi.q, CAST(qt.n_clicks AS BIGINT) AS n_clicks,
-       CAST(qt.n_items AS BIGINT) AS n_items,
-       round(-sum((qi.c * 1.0 / qt.n_clicks)
-                  * ln(qi.c * 1.0 / qt.n_clicks)), 4) AS click_entropy
-FROM qi JOIN qt ON qi.q = qt.q
-GROUP BY qi.q, qt.n_clicks, qt.n_items ORDER BY qi.q"""
-
-
-# ---------------------------------------------------------------------------
-# Goh-Barabasi burstiness of inter-event times
-# ---------------------------------------------------------------------------
-
-
-def q_interevent_burstiness(spark, sf_dir):
-    """Goh-Barabási burstiness coefficient (EPL 2008) of each event
-    type's inter-arrival times: B = (σ−μ)/(σ+μ) ∈ (−1, 1) — the
-    bot-vs-human traffic signature that complements fano_factor's
-    count dispersion with TIMING dispersion: B → −1 is clockwork
-    (scripted/bot), B ≈ 0 Poisson, B → 1 human-bursty.  Per event
-    type: gap count, mean and std of the gap in seconds, and B.
-    (Distinct from q_term_burstiness, which is Church-Gale DOCUMENT
-    burstiness of words.)
-
-    Determinism: gaps are exact integer-microsecond lag differences;
-    Σgap stays integer (≤ span·n < 2⁶³); only the second moment is a
-    double sum, and every reported number is scale-bounded before the
-    4-decimal round (gap seconds ~10³, B ∈ (−1,1)) so float summation
-    order is harmless at that precision.  Scale shape: one lag window
-    partitioned by event_type (the log's natural key), one map-side
-    moment aggregate; output is |event types| rows."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        "event_id",
-    )
-    w = Window.partitionBy("event_type").orderBy("us", "event_id")
-    gaps = (
-        ev.withColumn("prev", F.lag("us").over(w))
-        .filter(F.col("prev").isNotNull())
-        .select("event_type", (F.col("us") - F.col("prev")).alias("gap"))
-    )
-    m = gaps.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_gaps"),
-        F.sum("gap").cast("long").alias("_s1"),
-        F.sum(F.col("gap").cast("double") * F.col("gap").cast("double"))
-        .alias("_s2"),
-    )
-    mu = F.col("_s1") / F.col("n_gaps")
-    var = F.col("_s2") / F.col("n_gaps") - mu * mu
-    sig = F.sqrt(F.greatest(var, F.lit(0.0)))
-    return m.select(
-        "event_type", "n_gaps",
-        _r4(mu / 1e6).alias("mean_gap_s"),
-        _r4(sig / 1e6).alias("std_gap_s"),
-        _r4((sig - mu) / (sig + mu)).alias("burstiness"),
-    ).orderBy("event_type")
-
-
-SQL_INTEREVENT_BURSTINESS = """WITH ev AS (
-  SELECT event_type, epoch_us(ts) AS us, event_id FROM events
-),
-gaps AS (
-  SELECT event_type,
-         us - lag(us) OVER (PARTITION BY event_type
-                            ORDER BY us, event_id) AS gap
-  FROM ev
-),
-m AS (
-  SELECT event_type, count(*) AS n_gaps, sum(gap) AS s1,
-         sum(CAST(gap AS DOUBLE) * CAST(gap AS DOUBLE)) AS s2
-  FROM gaps WHERE gap IS NOT NULL GROUP BY event_type
-)
-SELECT event_type, CAST(n_gaps AS BIGINT) AS n_gaps,
-       round(s1 * 1.0 / n_gaps / 1e6, 4) AS mean_gap_s,
-       round(sqrt(greatest(s2 / n_gaps
-                           - (s1 * 1.0 / n_gaps) * (s1 * 1.0 / n_gaps),
-                           0.0)) / 1e6, 4) AS std_gap_s,
-       round((sqrt(greatest(s2 / n_gaps
-                            - (s1 * 1.0 / n_gaps) * (s1 * 1.0 / n_gaps),
-                            0.0)) - s1 * 1.0 / n_gaps)
-             / (sqrt(greatest(s2 / n_gaps
-                              - (s1 * 1.0 / n_gaps) * (s1 * 1.0 / n_gaps),
-                              0.0)) + s1 * 1.0 / n_gaps), 4) AS burstiness
-FROM m ORDER BY event_type"""
-
-
-# ---------------------------------------------------------------------------
 # Embedding-space anisotropy via the sum-vector identity
 # ---------------------------------------------------------------------------
 
@@ -21339,380 +6533,6 @@ SELECT CAST(nn.n AS BIGINT) AS n_vecs,
        round((sum(s * s) - max(nn.n)) * 1.0
              / (max(nn.n) * (max(nn.n) - 1)), 4) AS mean_pairwise_cos
 FROM persum CROSS JOIN nn GROUP BY nn.n"""
-
-
-# ---------------------------------------------------------------------------
-# Item novelty rate (discovery-rate monitoring)
-# ---------------------------------------------------------------------------
-
-
-def q_item_novelty_rate(spark, sf_dir):
-    """Per-day item novelty rate of the click stream: the share of
-    clicks landing on items never clicked before that day — the
-    discovery-rate line every feed/crawl dashboard tracks (a healthy
-    crawl keeps surfacing new items; novelty → 0 means the frontier
-    stalled or ranking collapsed onto the head, the complement of
-    head_churn's top-k view).  Per day: total clicks, clicks on
-    first-seen items, novelty rate.
-
-    Determinism: "first seen" is the item's min click date — integer
-    date compare, no floats but the final rate.  Scale shape: one
-    per-item min-date aggregate (map-side combined, item-keyed), one
-    equi-join back on item (the log's hot key, but the join side is
-    distinct-items-sized), one per-day count aggregate."""
-    cl = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.to_date(F.col("ts")).alias("day"),
-            F.get_json_object("props", "$.k").cast("long").alias("item"),
-        )
-        .filter(F.col("item").isNotNull())
-    )
-    first = cl.groupBy("item").agg(F.min("day").alias("first_day"))
-    return (
-        cl.join(first, "item")
-        .groupBy("day")
-        .agg(
-            F.count("*").cast("long").alias("n_clicks"),
-            F.sum((F.col("day") == F.col("first_day")).cast("int"))
-            .cast("long").alias("n_novel"),
-        )
-        .select(
-            F.col("day").cast("string").alias("day"),
-            "n_clicks", "n_novel",
-            _r4(F.col("n_novel") / F.col("n_clicks")).alias("novelty_rate"),
-        )
-        .orderBy("day")
-    )
-
-
-SQL_ITEM_NOVELTY_RATE = """WITH cl AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-  FROM events WHERE event_type = 'click'
-    AND json_extract_string(props, '$.k') IS NOT NULL
-),
-first AS (SELECT item, min(day) AS first_day FROM cl GROUP BY item)
-SELECT CAST(cl.day AS VARCHAR) AS day,
-       count(*) AS n_clicks,
-       CAST(sum(CASE WHEN cl.day = first.first_day THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_novel,
-       round(sum(CASE WHEN cl.day = first.first_day THEN 1 ELSE 0 END)
-             * 1.0 / count(*), 4) AS novelty_rate
-FROM cl JOIN first ON cl.item = first.item
-GROUP BY cl.day ORDER BY cl.day"""
-
-
-# ---------------------------------------------------------------------------
-# Wald SPRT sequential A/B stopping
-# ---------------------------------------------------------------------------
-
-_SPRT_P0, _SPRT_P1 = 0.15, 0.25
-_SPRT_ALPHA = _SPRT_BETA = 0.05
-
-
-def q_sprt_stopping(spark, sf_dir):
-    """Wald's sequential probability ratio test (Wald 1945) on the event
-    stream as a Bernoulli click process — the SEQUENTIAL counterpart to
-    the fixed-horizon battery (mde_power sizes the experiment up front,
-    srm_chisq guards the split, this entry answers "when could we have
-    STOPPED?"): H₀ p={p0} vs H₁ p={p1}, α=β={a}.  The cumulative
-    log-likelihood ratio walks ln(p₁/p₀) on a click and
-    ln((1−p₁)/(1−p₀)) otherwise; the test stops at the first crossing
-    of ±ln((1−β)/α).  One row: stream size, empirical click rate, the
-    stopping index and time fraction, the decision, and the boundary —
-    SPRT needs ~½ the samples of the fixed-horizon test at the same
-    error rates, which is why ramp frameworks run it.
-
-    Determinism: the walk adds one of two ln constants in exact
-    (ts, event_id) order — both engines sum the identical sequence in
-    the identical order, so the cumsum is bit-equal.  Scale shape: the
-    walk is a PREFIX SUM over the stream; expressed here as one ordered
-    cumulative window (single-pass), with the two-level distributed
-    prefix-sum pattern q_pack_sequences already implements being the
-    verbatim scale-out for it; the stopping row is a 1-row reduce over
-    the crossing flags — no join, no pair work.
-    """.format(p0=_SPRT_P0, p1=_SPRT_P1, a=_SPRT_ALPHA)
-    import math as _math
-
-    from pyspark.sql import Window
-
-    lr1 = _math.log(_SPRT_P1 / _SPRT_P0)
-    lr0 = _math.log((1 - _SPRT_P1) / (1 - _SPRT_P0))
-    bound = _math.log((1 - _SPRT_BETA) / _SPRT_ALPHA)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        "event_id",
-        (F.col("event_type") == "click").cast("int").alias("x"),
-    )
-    w = Window.orderBy("us", "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    walk = ev.select(
-        "x",
-        F.row_number().over(Window.orderBy("us", "event_id")).alias("i"),
-        F.sum(
-            F.when(F.col("x") == 1, F.lit(lr1)).otherwise(F.lit(lr0))
-        ).over(w).alias("llr"),
-    )
-    agg = walk.agg(
-        F.count("*").cast("long").alias("n_total"),
-        F.sum("x").cast("long").alias("_clicks"),
-        F.min(F.when(F.col("llr") >= bound, F.col("i")))
-        .alias("_up"),
-        F.min(F.when(F.col("llr") <= -bound, F.col("i")))
-        .alias("_dn"),
-        F.max(F.col("llr")).alias("_mx"),
-    )
-    stop = F.when(
-        F.col("_up").isNotNull() & (
-            F.col("_dn").isNull() | (F.col("_up") < F.col("_dn"))
-        ), F.col("_up")
-    ).otherwise(F.col("_dn"))
-    decision = F.when(stop.isNull(), F.lit("inconclusive")).when(
-        stop == F.col("_up"), F.lit("accept_p1")
-    ).otherwise(F.lit("accept_p0"))
-    return agg.select(
-        "n_total",
-        _r4(F.col("_clicks") / F.col("n_total")).alias("click_rate"),
-        stop.cast("long").alias("stop_n"),
-        _r4(stop / F.col("n_total")).alias("stop_frac"),
-        decision.alias("decision"),
-        _r4(F.lit(bound)).alias("boundary"),
-    )
-
-
-SQL_SPRT_STOPPING = f"""WITH ev AS (
-  SELECT epoch_us(ts) AS us, event_id,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS x
-  FROM events
-),
-walk AS (
-  SELECT x,
-         row_number() OVER (ORDER BY us, event_id) AS i,
-         sum(CASE WHEN x = 1 THEN ln({_SPRT_P1} / {_SPRT_P0})
-                  ELSE ln((1 - {_SPRT_P1}) / (1 - {_SPRT_P0})) END)
-           OVER (ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS llr
-  FROM ev
-),
-agg AS (
-  SELECT count(*) AS n_total, sum(x) AS clicks,
-         min(CASE WHEN llr >= ln((1 - {_SPRT_BETA}) / {_SPRT_ALPHA})
-                  THEN i END) AS up,
-         min(CASE WHEN llr <= -ln((1 - {_SPRT_BETA}) / {_SPRT_ALPHA})
-                  THEN i END) AS dn
-  FROM walk
-),
-pick AS (
-  SELECT *, CASE WHEN up IS NOT NULL AND (dn IS NULL OR up < dn)
-                 THEN up ELSE dn END AS stop_n
-  FROM agg
-)
-SELECT CAST(n_total AS BIGINT) AS n_total,
-       round(clicks * 1.0 / n_total, 4) AS click_rate,
-       CAST(stop_n AS BIGINT) AS stop_n,
-       round(stop_n * 1.0 / n_total, 4) AS stop_frac,
-       CASE WHEN stop_n IS NULL THEN 'inconclusive'
-            WHEN stop_n = up THEN 'accept_p1'
-            ELSE 'accept_p0' END AS decision,
-       round(ln((1 - {_SPRT_BETA}) / {_SPRT_ALPHA}), 4) AS boundary
-FROM pick"""
-
-
-# ---------------------------------------------------------------------------
-# Per-user event-type transition matrix (behavior Markov model)
-# ---------------------------------------------------------------------------
-
-
-def q_event_transitions(spark, sf_dir):
-    """First-order Markov transition matrix of user behavior: for each
-    (from_type → to_type) pair, the count of consecutive same-user
-    event pairs and the row-normalized transition probability — the
-    model behind next-action prediction, funnel-leak diagnosis
-    (complementing event_funnel's fixed ORDERED path with the full
-    matrix), and synthetic-log validation.  Rows ordered
-    (from_type, to_type).
-
-    Determinism: successor pairs come from a lag window ordered by
-    exact (ts, event_id) within user; counts integer; the row
-    probability is the single rounded division.  Scale shape: one
-    user-partitioned lead window (the log's natural partitioning — no
-    global order anywhere), one |types|² aggregate, row totals via a
-    broadcast-sized second aggregate."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    pairs = (
-        ev.withColumn("to_type", F.lead("event_type").over(w))
-        .filter(F.col("to_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"), "to_type"
-        )
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    totals = pairs.groupBy("from_type").agg(
-        F.sum("n").cast("long").alias("_row_n")
-    )
-    return (
-        pairs.join(F.broadcast(totals), "from_type")
-        .select(
-            "from_type", "to_type", "n",
-            _r4(F.col("n") / F.col("_row_n")).alias("prob"),
-        )
-        .orderBy("from_type", "to_type")
-    )
-
-
-SQL_EVENT_TRANSITIONS = """WITH ev AS (
-  SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events
-),
-pairs AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY us, event_id) AS to_type
-  FROM ev
-),
-cnt AS (
-  SELECT from_type, to_type, count(*) AS n
-  FROM pairs WHERE to_type IS NOT NULL GROUP BY from_type, to_type
-),
-tot AS (SELECT from_type, sum(n) AS row_n FROM cnt GROUP BY from_type)
-SELECT cnt.from_type, cnt.to_type, CAST(cnt.n AS BIGINT) AS n,
-       round(cnt.n * 1.0 / tot.row_n, 4) AS prob
-FROM cnt JOIN tot ON cnt.from_type = tot.from_type
-ORDER BY cnt.from_type, cnt.to_type"""
-
-
-# ---------------------------------------------------------------------------
-# MinHash Jaccard-estimate accuracy
-# ---------------------------------------------------------------------------
-
-_MHERR_MIN_J = 0.2
-
-
-def q_minhash_estimate_error(spark, sf_dir):
-    """Accuracy of the MinHash JACCARD ESTIMATE itself (Broder 1997:
-    P[min-hash collision] = J, so matches/k is an unbiased estimator
-    with std √(J(1−J)/k)) — the third leg of the MinHash accuracy
-    story: lsh_recall measures the BANDING's candidate recall,
-    lsh_tuning_curve predicts it, and this entry measures how well the
-    k={k} signature estimates J numerically, over the sharing pairs
-    with exact Jaccard ≥ {j}.  One row: pair count, mean true J, mean
-    estimate, mean |error|, signed bias.  The honest readout with k=4
-    (the oracle-imposed signature width): quantization to {{0,¼,…,1}}
-    makes |error| ~0.2 — the number that tells an engineer the 4-hash
-    signature is a BANDING key, not an estimator; the engine-scale
-    variant stores k=128 (std ≈ 0.04 at J=0.5) and this same entry
-    measures whatever k ships.
-
-    Determinism: signature match counts are integer; the four averaged
-    outputs round at 4.  Scale shape: reuses the df-capped sparse
-    shingle self-join (bounded like ngram_jaccard) and joins the
-    4-column signature table twice by doc id — no new quadratic
-    surface; the final reduce is 1 row.
-    """.format(k=4, j=_MHERR_MIN_J)
-    sh = _shingles(spark, sf_dir)
-    df_ok = (
-        sh.groupBy("sh").agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= _SHINGLE_DF_CAP)
-        .select("sh")
-    )
-    sh = sh.join(df_ok, "sh", "left_semi")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("doc_id").alias("da"), "sh")
-    b = sh.select(F.col("doc_id").alias("db"), "sh")
-    pairs = (
-        a.join(b, "sh")
-        .filter(F.col("da") < F.col("db"))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("inter"))
-        .join(sizes.select(F.col("doc_id").alias("da"),
-                           F.col("sz").alias("sza")), "da")
-        .join(sizes.select(F.col("doc_id").alias("db"),
-                           F.col("sz").alias("szb")), "db")
-        .select(
-            "da", "db",
-            (
-                F.col("inter")
-                / (F.col("sza") + F.col("szb") - F.col("inter"))
-            ).alias("jtrue"),
-        )
-        .filter(F.col("jtrue") >= _MHERR_MIN_J)
-    )
-    sig = q_minhash_signature(spark, sf_dir)
-    sa = sig.select(
-        F.col("doc_id").alias("da"),
-        *[F.col(f"sig{i}").alias(f"a{i}") for i in range(4)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("db"),
-        *[F.col(f"sig{i}").alias(f"b{i}") for i in range(4)],
-    )
-    est = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(4)
-    ) / 4.0
-    return (
-        pairs.join(sa, "da").join(sb, "db")
-        .select("jtrue", est.alias("jest"))
-        .agg(
-            F.count("*").cast("long").alias("n_pairs"),
-            _r4(F.avg("jtrue")).alias("mean_true_j"),
-            _r4(F.avg("jest")).alias("mean_estimate"),
-            _r4(F.avg(F.abs(F.col("jest") - F.col("jtrue"))))
-            .alias("mean_abs_err"),
-            _r4(F.avg(F.col("jest") - F.col("jtrue"))).alias("bias"),
-        )
-    )
-
-
-SQL_MINHASH_ESTIMATE_ERROR = f"""WITH {_SHINGLES_SQL},
-capped AS (
-  SELECT s.doc_id, s.sh FROM shingles s
-  JOIN (SELECT sh FROM shingles GROUP BY sh
-        HAVING count(*) <= {_SHINGLE_DF_CAP}) ok ON s.sh = ok.sh
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM capped GROUP BY doc_id),
-pairs AS (
-  SELECT da, db, jtrue FROM (
-    SELECT a.doc_id AS da, b.doc_id AS db,
-           count(*) * 1.0
-           / (max(sa.sz) + max(sb.sz) - count(*)) AS jtrue
-    FROM capped a
-    JOIN capped b ON a.sh = b.sh AND a.doc_id < b.doc_id
-    JOIN sizes sa ON sa.doc_id = a.doc_id
-    JOIN sizes sb ON sb.doc_id = b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-  ) WHERE jtrue >= {_MHERR_MIN_J}
-),
-sig AS (
-  SELECT doc_id,
-         min(md5('0:' || sh)) AS sig0, min(md5('1:' || sh)) AS sig1,
-         min(md5('2:' || sh)) AS sig2, min(md5('3:' || sh)) AS sig3
-  FROM shingles GROUP BY doc_id
-),
-scored AS (
-  SELECT p.jtrue,
-         ((CASE WHEN sa.sig0 = sb.sig0 THEN 1 ELSE 0 END)
-          + (CASE WHEN sa.sig1 = sb.sig1 THEN 1 ELSE 0 END)
-          + (CASE WHEN sa.sig2 = sb.sig2 THEN 1 ELSE 0 END)
-          + (CASE WHEN sa.sig3 = sb.sig3 THEN 1 ELSE 0 END)) / 4.0
-           AS jest
-  FROM pairs p
-  JOIN sig sa ON sa.doc_id = p.da
-  JOIN sig sb ON sb.doc_id = p.db
-)
-SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-       round(avg(jtrue), 4) AS mean_true_j,
-       round(avg(jest), 4) AS mean_estimate,
-       round(avg(abs(jest - jtrue)), 4) AS mean_abs_err,
-       round(avg(jest - jtrue), 4) AS bias
-FROM scored"""
 
 
 # ---------------------------------------------------------------------------
@@ -21807,164 +6627,6 @@ FROM cum CROSS JOIN tot ORDER BY decile"""
 
 
 SQL_CLASSIFIER_GAINS = _gains_sql()
-
-
-# ---------------------------------------------------------------------------
-# Cross-source exact-duplicate contamination matrix
-# ---------------------------------------------------------------------------
-
-
-def q_source_overlap_matrix(spark, sf_dir):
-    """Cross-source contamination matrix at 3-gram granularity: for
-    every source pair, how many DISTINCT shingles they share, each
-    side's distinct-shingle count, and the pair Jaccard — the audit
-    that tells a corpus owner which dump copies from which BEFORE
-    mixture weights double-count the shared text (the pairwise-source
-    generalization of q_decontaminate's one-benchmark-vs-corpus check;
-    host_mirror_detection is the same question at host granularity,
-    and exact-dup spans across sources — zero on this corpus — would
-    show up here as near-1 Jaccard).
-
-    Determinism: set sizes and intersections are exact integer counts
-    over distinct shingles.  Scale shape: per-source DISTINCT shingles
-    first (map-side aggregate — the join sides are distinct-shingle-
-    sized, not corpus-sized), then a self-join keyed on shingle; after
-    the source-level distinct a shingle appears at most once PER
-    SOURCE, so even a boilerplate shingle in every doc emits at most
-    |sources|² pairs — no df cap needed, unlike the doc-level joins.
-    Output is |sources|² rows."""
-    sh = _shingles(spark, sf_dir)
-    dh = (
-        sh.join(_docs(spark, sf_dir).select("doc_id", "source"), "doc_id")
-        .select("source", F.col("sh").alias("h"))
-        .distinct()
-    )
-    sizes = dh.groupBy("source").agg(F.count("*").cast("long").alias("nh"))
-    a = dh.select(F.col("source").alias("src_a"), "h")
-    b = dh.select(F.col("source").alias("src_b"), "h")
-    shared = (
-        a.join(b, "h")
-        .filter(F.col("src_a") < F.col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(F.count("*").cast("long").alias("n_shared"))
-    )
-    return (
-        shared.join(
-            F.broadcast(sizes.select(F.col("source").alias("src_a"),
-                                     F.col("nh").alias("n_a"))), "src_a")
-        .join(
-            F.broadcast(sizes.select(F.col("source").alias("src_b"),
-                                     F.col("nh").alias("n_b"))), "src_b")
-        .select(
-            "src_a", "src_b", "n_a", "n_b", "n_shared",
-            _r4(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-            ).alias("jaccard"),
-        )
-        .orderBy("src_a", "src_b")
-    )
-
-
-SQL_SOURCE_OVERLAP_MATRIX = f"""WITH {_SHINGLES_SQL},
-dh AS (
-  SELECT DISTINCT d.source, s.sh AS h
-  FROM shingles s JOIN documents d ON s.doc_id = d.doc_id
-),
-sizes AS (SELECT source, count(*) AS nh FROM dh GROUP BY source),
-shared AS (
-  SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared
-  FROM dh a JOIN dh b ON a.h = b.h AND a.source < b.source
-  GROUP BY a.source, b.source
-)
-SELECT s.src_a, s.src_b,
-       CAST(sa.nh AS BIGINT) AS n_a, CAST(sb.nh AS BIGINT) AS n_b,
-       CAST(s.n_shared AS BIGINT) AS n_shared,
-       round(s.n_shared * 1.0 / (sa.nh + sb.nh - s.n_shared), 4)
-         AS jaccard
-FROM shared s
-JOIN sizes sa ON sa.source = s.src_a
-JOIN sizes sb ON sb.source = s.src_b
-ORDER BY s.src_a, s.src_b"""
-
-
-# ---------------------------------------------------------------------------
-# Dedup keeper-policy comparison (first-wins vs quality-wins)
-# ---------------------------------------------------------------------------
-
-
-def q_dedup_keeper_policy(spark, sf_dir):
-    """What first-wins dedup costs in kept quality: over the exact-dup
-    groups (md5, >1 member), compare keeper = min doc_id (first-wins,
-    what dedup_first_wins ships — order-dependent, crawl-arrival bias)
-    against keeper = max n_chars then min doc_id (quality-wins, the
-    CCNet/RefinedWeb-style choice).  One row: dup-group count, how many
-    groups pick a DIFFERENT keeper, and the mean kept n_chars under
-    each policy — the quality left on the table by arrival order.
-    (On a corpus whose exact dups are byte-identical the two means
-    coincide — the honest null result; the operator exists for corpora
-    where near-canonicalization upstream makes "same hash" groups span
-    different lengths, e.g. whitespace-normalized text columns.)
-
-    Determinism: both keepers are integer argmin/argmax with total tie
-    orders, expressed as one rank window per group (quality order
-    n_chars desc, doc_id asc) plus min/count over the same partition.
-    Scale shape: one hash-keyed window pass over (md5, doc_id,
-    n_chars) — the exact-dedup shuffle itself, nothing more; the
-    compare is a 1-row reduce."""
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "n_chars", F.md5("text").alias("h")
-    )
-    wp = Window.partitionBy("h")
-    wq = wp.orderBy(F.col("n_chars").desc(), F.col("doc_id").asc())
-    grp = (
-        d.withColumn("_rn", F.row_number().over(wq))
-        .withColumn("_m", F.count("*").over(wp))
-        .withColumn("keep_first", F.min("doc_id").over(wp))
-        .filter((F.col("_rn") == 1) & (F.col("_m") > 1))
-        .select(
-            "h", "keep_first",
-            F.col("n_chars").alias("q_chars"),
-            F.col("doc_id").alias("keep_quality"),
-        )
-    )
-    first_chars = grp.join(
-        d.select(F.col("doc_id").alias("keep_first"),
-                 F.col("n_chars").alias("f_chars")),
-        "keep_first",
-    )
-    return first_chars.agg(
-        F.count("*").cast("long").alias("n_dup_groups"),
-        F.sum(
-            (F.col("keep_first") != F.col("keep_quality")).cast("int")
-        ).cast("long").alias("n_keeper_differs"),
-        _r4(F.avg("f_chars")).alias("mean_chars_first_wins"),
-        _r4(F.avg("q_chars")).alias("mean_chars_quality_wins"),
-    )
-
-
-SQL_DEDUP_KEEPER_POLICY = """WITH d AS (
-  SELECT doc_id, n_chars, md5(text) AS h FROM documents
-),
-grp AS (
-  SELECT h, keep_first, n_chars AS q_chars, doc_id AS keep_quality
-  FROM (
-    SELECT h, doc_id, n_chars,
-           row_number() OVER (PARTITION BY h
-                              ORDER BY n_chars DESC, doc_id ASC) AS rn,
-           count(*) OVER (PARTITION BY h) AS m,
-           min(doc_id) OVER (PARTITION BY h) AS keep_first
-    FROM d
-  ) WHERE rn = 1 AND m > 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_dup_groups,
-       CAST(sum(CASE WHEN g.keep_first <> g.keep_quality
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_keeper_differs,
-       round(avg(f.n_chars), 4) AS mean_chars_first_wins,
-       round(avg(g.q_chars), 4) AS mean_chars_quality_wins
-FROM grp g JOIN d f ON f.doc_id = g.keep_first"""
 
 
 # ---------------------------------------------------------------------------
@@ -22092,111 +6754,6 @@ SQL_COMMUNITY_CONDUCTANCE = _conductance_sql()
 
 
 # ---------------------------------------------------------------------------
-# Local-vs-global IDF divergence across shards (federated scoring skew)
-# ---------------------------------------------------------------------------
-
-_SIDF_SHARDS = 4
-_SIDF_TOPK = 25
-
-
-def q_shard_idf_divergence(spark, sf_dir):
-    """Local-vs-global IDF divergence (Callan's distributed-IR problem;
-    the reason merged federated rankings mis-order): when each of
-    {s} document shards (doc_id % {s}) scores with its LOCAL
-    idf = ln(n_shard/df_shard) instead of the global one, per-shard
-    scores for the same term disagree.  Per term (top {k} by global
-    df): global idf, the min/max local idf across shards, and the
-    spread — the number that decides between broadcasting global stats
-    (this engine's choice: index_stats is a 1-row broadcast) and
-    accepting rank skew.  Terms missing from a shard take the shard's
-    df=0 smoothing idf = ln(n_shard/0.5).
-
-    Determinism: df counts are integer; idf values are single-ln
-    expressions rounded at 4; top-k ties break on term.  Scale shape:
-    one (term, shard) df aggregate (map-side combined) + a terms-sized
-    per-term min/max rollup; shard doc counts are a {s}-row broadcast;
-    the global top-k is a rank over the term relation (TakeOrdered at
-    scale).
-    """.format(s=_SIDF_SHARDS, k=_SIDF_TOPK)
-    from pyspark.sql import Window
-
-    tf = _tf(spark, sf_dir).select(
-        "term", "doc_id", (F.col("doc_id") % _SIDF_SHARDS).alias("shard")
-    )
-    gdf = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    sdf = tf.groupBy("term", "shard").agg(
-        F.count("*").cast("long").alias("sdf")
-    )
-    ndocs = _docs(spark, sf_dir).groupBy(
-        (F.col("doc_id") % _SIDF_SHARDS).alias("shard")
-    ).agg(F.count("*").cast("long").alias("ns"))
-    ntot = ndocs.agg(F.sum("ns").cast("long").alias("_n"))
-    # complete the (term x shard) grid so absent terms take the df=0 idf
-    grid = gdf.select("term").crossJoin(F.broadcast(ndocs))
-    full = grid.join(sdf, ["term", "shard"], "left").select(
-        "term", "shard", "ns",
-        F.coalesce("sdf", F.lit(0)).alias("sdf"),
-    )
-    lidf = F.log(
-        F.col("ns") / F.when(F.col("sdf") > 0, F.col("sdf")).otherwise(0.5)
-    )
-    per = full.groupBy("term").agg(
-        F.min(lidf).alias("_lo"), F.max(lidf).alias("_hi")
-    )
-    w = Window.orderBy(F.col("df").desc(), F.col("term").asc())
-    return (
-        gdf.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= _SIDF_TOPK)
-        .join(per, "term")
-        .crossJoin(F.broadcast(ntot))
-        .select(
-            "term", "df",
-            _r4(F.log(F.col("_n") / F.col("df"))).alias("global_idf"),
-            _r4(F.col("_lo")).alias("min_local_idf"),
-            _r4(F.col("_hi")).alias("max_local_idf"),
-            _r4(F.col("_hi") - F.col("_lo")).alias("spread"),
-        )
-        .orderBy(F.col("df").desc(), F.col("term").asc())
-    )
-
-
-SQL_SHARD_IDF_DIVERGENCE = f"""WITH {_TOKS_SQL},
-tf AS (
-  SELECT term, doc_id, doc_id % {_SIDF_SHARDS} AS shard
-  FROM (SELECT DISTINCT term, doc_id FROM toks)
-),
-gdf AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-sdf AS (SELECT term, shard, count(*) AS sdf FROM tf GROUP BY term, shard),
-ndocs AS (SELECT doc_id % {_SIDF_SHARDS} AS shard, count(*) AS ns
-          FROM documents GROUP BY 1),
-ntot AS (SELECT sum(ns) AS n FROM ndocs),
-grid AS (SELECT g.term, d.shard, d.ns FROM gdf g CROSS JOIN ndocs d),
-filled AS (
-  SELECT grid.term, grid.shard, grid.ns, coalesce(sdf.sdf, 0) AS sdf
-  FROM grid LEFT JOIN sdf ON grid.term = sdf.term
-                         AND grid.shard = sdf.shard
-),
-per AS (
-  SELECT term,
-         min(ln(ns / (CASE WHEN sdf > 0 THEN sdf ELSE 0.5 END))) AS lo,
-         max(ln(ns / (CASE WHEN sdf > 0 THEN sdf ELSE 0.5 END))) AS hi
-  FROM filled GROUP BY term
-),
-ranked AS (
-  SELECT term, df,
-         row_number() OVER (ORDER BY df DESC, term ASC) AS rk
-  FROM gdf
-)
-SELECT r.term, CAST(r.df AS BIGINT) AS df,
-       round(ln(ntot.n * 1.0 / r.df), 4) AS global_idf,
-       round(per.lo, 4) AS min_local_idf,
-       round(per.hi, 4) AS max_local_idf,
-       round(per.hi - per.lo, 4) AS spread
-FROM ranked r JOIN per ON r.term = per.term CROSS JOIN ntot
-WHERE r.rk <= {_SIDF_TOPK} ORDER BY r.df DESC, r.term ASC"""
-
-
-# ---------------------------------------------------------------------------
 # Per-label embedding drift between corpus halves
 # ---------------------------------------------------------------------------
 
@@ -22307,244 +6864,6 @@ JOIN cent b ON a.label = b.label AND a.half = 1 AND b.half = 0
 JOIN sizes sa ON sa.label = a.label AND sa.half = 1
 JOIN sizes sb ON sb.label = b.label AND sb.half = 0
 ORDER BY a.label"""
-
-
-# ---------------------------------------------------------------------------
-# Vocabulary loss through the curation funnel
-# ---------------------------------------------------------------------------
-
-_VOCAB_STAGES = ("all", "lang_ok", "qual_ok", "uniq_ok", "keep")
-
-
-def q_filter_vocab_loss(spark, sf_dir):
-    """What the curation funnel does to the VOCABULARY: per cumulative
-    corpus_pipeline stage (all → lang_ok → qual_ok → uniq_ok → keep),
-    the surviving doc count, token count, distinct-term count, hapax
-    count, and hapax share — the side-effect audit behind the known
-    failure mode of aggressive filtering (rare terms, names and
-    code-switching die first; a funnel that keeps 90% of tokens can
-    still kill half the tail vocabulary, starving the tokenizer and
-    the LM's long tail).  Heaps-law expectation: vocab shrinks
-    sublinearly with tokens; a SUPERlinear drop at one stage fingers
-    that filter.
-
-    Determinism: every number is an integer count but the final hapax
-    share.  Scale shape: the funnel flags come from corpus_pipeline's
-    own one-pass plan (no second text scan); the stage rollup is one
-    per-term aggregate with 5 conditional sums (term-keyed, map-side
-    combined) + a 5-row unpivot — stages are columns until the last
-    tiny reshape, so the token stream is read ONCE."""
-    flags = q_corpus_pipeline(spark, sf_dir)
-    toks = _tokens(spark, sf_dir).join(flags, "doc_id")
-    stage_cond = {
-        "all": F.lit(True),
-        "lang_ok": F.col("lang_ok"),
-        "qual_ok": F.col("qual_ok"),
-        "uniq_ok": F.col("uniq_ok"),
-        "keep": F.col("keep"),
-    }
-    per_term = toks.groupBy("term").agg(
-        *[
-            F.sum(F.when(c, 1).otherwise(0)).cast("long").alias(f"c_{s}")
-            for s, c in stage_cond.items()
-        ]
-    )
-    vocab = per_term.agg(
-        *[
-            F.sum((F.col(f"c_{s}") > 0).cast("int")).cast("long")
-            .alias(f"v_{s}")
-            for s in _VOCAB_STAGES
-        ],
-        *[
-            F.sum(F.col(f"c_{s}")).cast("long").alias(f"t_{s}")
-            for s in _VOCAB_STAGES
-        ],
-        *[
-            F.sum((F.col(f"c_{s}") == 1).cast("int")).cast("long")
-            .alias(f"h_{s}")
-            for s in _VOCAB_STAGES
-        ],
-    )
-    ndocs = flags.agg(
-        *[
-            F.sum(F.when(c, 1).otherwise(0)).cast("long").alias(f"d_{s}")
-            for s, c in stage_cond.items()
-        ]
-    )
-    one = vocab.crossJoin(F.broadcast(ndocs))
-    # unpivot by EXPLODING a struct array over the single aggregated row
-    # (a union of per-stage selects would replicate the whole aggregate
-    # lineage once per stage — 5 corpus passes at scale)
-    stages = F.array(*[
-        F.struct(
-            F.lit(i).alias("stage_idx"),
-            F.lit(s).alias("stage"),
-            F.col(f"d_{s}").alias("n_docs"),
-            F.col(f"t_{s}").alias("n_tokens"),
-            F.col(f"v_{s}").alias("n_terms"),
-            F.col(f"h_{s}").alias("n_hapax"),
-            _r4(F.col(f"h_{s}") / F.col(f"v_{s}")).alias("hapax_share"),
-        )
-        for i, s in enumerate(_VOCAB_STAGES)
-    ])
-    return (
-        one.select(F.explode(stages).alias("r"))
-        .select("r.*")
-        .orderBy("stage_idx")
-    )
-
-
-def _vocab_loss_sql() -> str:
-    conds = {
-        "all": "true", "lang_ok": "f.lang_ok", "qual_ok": "f.qual_ok",
-        "uniq_ok": "f.uniq_ok", "keep": "f.keep",
-    }
-    aggs = []
-    for s in _VOCAB_STAGES:
-        aggs += [
-            f"sum(CASE WHEN c_{s} > 0 THEN 1 ELSE 0 END) AS v_{s}",
-            f"sum(c_{s}) AS t_{s}",
-            f"sum(CASE WHEN c_{s} = 1 THEN 1 ELSE 0 END) AS h_{s}",
-        ]
-    tsums = ", ".join(
-        f"sum(CASE WHEN {c} THEN 1 ELSE 0 END) AS c_{s}"
-        for s, c in conds.items()
-    )
-    dsums = ", ".join(
-        f"sum(CASE WHEN {c.replace('f.', '')} THEN 1 ELSE 0 END) AS d_{s}"
-        for s, c in conds.items()
-    )
-    stage_rows = " UNION ALL ".join(
-        f"SELECT {i} AS stage_idx, '{s}' AS stage, d_{s} AS n_docs, "
-        f"t_{s} AS n_tokens, v_{s} AS n_terms, h_{s} AS n_hapax, "
-        f"round(h_{s} * 1.0 / v_{s}, 4) AS hapax_share "
-        f"FROM vocab CROSS JOIN ndocs"
-        for i, s in enumerate(_VOCAB_STAGES)
-    )
-    return f"""WITH flags AS ({SQL_CORPUS_PIPELINE}),
-{_TOKS_SQL.lstrip()},
-per_term AS (
-  SELECT t.term, {tsums}
-  FROM toks t JOIN flags f ON t.doc_id = f.doc_id
-  GROUP BY t.term
-),
-vocab AS (SELECT {", ".join(aggs)} FROM per_term),
-ndocs AS (SELECT {dsums} FROM flags)
-SELECT CAST(stage_idx AS INT) AS stage_idx, stage,
-       CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(n_terms AS BIGINT) AS n_terms,
-       CAST(n_hapax AS BIGINT) AS n_hapax, hapax_share
-FROM ({stage_rows}) ORDER BY stage_idx"""
-
-
-SQL_FILTER_VOCAB_LOSS = _vocab_loss_sql()
-
-
-# ---------------------------------------------------------------------------
-# User-level jackknife variance of the CTR ratio metric
-# ---------------------------------------------------------------------------
-
-
-def q_jackknife_ctr(spark, sf_dir):
-    """Leave-one-USER-out jackknife standard error of the corpus CTR —
-    the industry-standard fix for the ratio-metric variance problem in
-    A/B analysis (Deng et al., WSDM 2017: users, not events, are the
-    i.i.d. units; the naive binomial SE over events understates
-    variance because one heavy user's events correlate): θ = X/Y over
-    all events, θ₍ᵢ₎ = (X−xᵢ)/(Y−yᵢ) per left-out user,
-    SE² = (n−1)/n · Σ(θ₍ᵢ₎−θ̄)².  One row: user count, totals, CTR,
-    jackknife SE, the 95% CI, and the naive binomial SE for contrast —
-    their RATIO is the design effect a correct experiment readout must
-    apply (cf. cuped_adjustment and delta_method_ratio, the other two
-    legs of the variance-correction toolkit).
-
-    Determinism: per-user counts are integer; the θ₍ᵢ₎ arithmetic is
-    fixed-form float per user and every reported value is O(1)-bounded
-    before the 4-decimal round.  Scale shape: one user-keyed count
-    aggregate, totals as a 1-row broadcast, one n-user reduce — the
-    jackknife needs NO resampling loop, the leave-one-out identity
-    makes it a single pass."""
-    per = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").cast("long").alias("y"),
-            F.sum((F.col("event_type") == "click").cast("int"))
-            .cast("long").alias("x"),
-        )
-    )
-    tot = per.agg(
-        F.count("*").cast("long").alias("_n"),
-        F.sum("x").cast("long").alias("_x"),
-        F.sum("y").cast("long").alias("_y"),
-    )
-    j = per.crossJoin(F.broadcast(tot))
-    theta_i = (F.col("_x") - F.col("x")) / (F.col("_y") - F.col("y"))
-    m = j.agg(
-        F.first("_n").alias("n_users"),
-        F.first("_x").alias("clicks"),
-        F.first("_y").alias("events"),
-        F.avg(theta_i).alias("_tbar"),
-        F.sum(theta_i * theta_i).alias("_tsq"),
-    )
-    n = F.col("n_users")
-    var = (n - 1) / n * (F.col("_tsq") - n * F.col("_tbar") * F.col("_tbar"))
-    se = F.sqrt(F.greatest(var, F.lit(0.0)))
-    ctr = F.col("clicks") / F.col("events")
-    naive = F.sqrt(ctr * (1 - ctr) / F.col("events"))
-    return m.select(
-        F.col("n_users").cast("long").alias("n_users"),
-        F.col("clicks").cast("long").alias("clicks"),
-        F.col("events").cast("long").alias("events"),
-        _r4(ctr).alias("ctr"),
-        _r4(se).alias("jackknife_se"),
-        _r4(ctr - 1.96 * se).alias("ci_lo"),
-        _r4(ctr + 1.96 * se).alias("ci_hi"),
-        _r4(naive).alias("naive_se"),
-        _r4(se / naive).alias("design_effect"),
-    )
-
-
-SQL_JACKKNIFE_CTR = """WITH per AS (
-  SELECT user_id, count(*) AS y,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x
-  FROM events GROUP BY user_id
-),
-tot AS (SELECT count(*) AS n, sum(x) AS tx, sum(y) AS ty FROM per),
-j AS (
-  SELECT per.x, per.y, tot.n, tot.tx, tot.ty,
-         (tot.tx - per.x) * 1.0 / (tot.ty - per.y) AS theta_i
-  FROM per CROSS JOIN tot
-),
-m AS (
-  SELECT max(n) AS n_users, max(tx) AS clicks, max(ty) AS events,
-         avg(theta_i) AS tbar, sum(theta_i * theta_i) AS tsq
-  FROM j
-)
-SELECT CAST(n_users AS BIGINT) AS n_users,
-       CAST(clicks AS BIGINT) AS clicks,
-       CAST(events AS BIGINT) AS events,
-       round(clicks * 1.0 / events, 4) AS ctr,
-       round(sqrt(greatest((n_users - 1.0) / n_users
-                           * (tsq - n_users * tbar * tbar), 0.0)), 4)
-         AS jackknife_se,
-       round(clicks * 1.0 / events
-             - 1.96 * sqrt(greatest((n_users - 1.0) / n_users
-                                    * (tsq - n_users * tbar * tbar),
-                                    0.0)), 4) AS ci_lo,
-       round(clicks * 1.0 / events
-             + 1.96 * sqrt(greatest((n_users - 1.0) / n_users
-                                    * (tsq - n_users * tbar * tbar),
-                                    0.0)), 4) AS ci_hi,
-       round(sqrt((clicks * 1.0 / events) * (1 - clicks * 1.0 / events)
-                  / events), 4) AS naive_se,
-       round(sqrt(greatest((n_users - 1.0) / n_users
-                           * (tsq - n_users * tbar * tbar), 0.0))
-             / sqrt((clicks * 1.0 / events)
-                    * (1 - clicks * 1.0 / events) / events), 4)
-         AS design_effect
-FROM m"""
 
 
 # ---------------------------------------------------------------------------
@@ -22671,95 +6990,6 @@ SQL_DEDUP_THRESHOLD_SENSITIVITY = _dedup_taus_sql()
 
 
 # ---------------------------------------------------------------------------
-# Simpson's-paradox audit of a pooled CTR comparison
-# ---------------------------------------------------------------------------
-
-
-def q_simpson_check(spark, sf_dir):
-    """Simpson's-paradox audit (Simpson 1951; Bickel's Berkeley case) of
-    a two-variant CTR comparison: variant = user_id parity, segment =
-    day-of-week — per segment the two CTRs and the sign of (B−A), plus
-    the POOLED row (segment −1), so a dashboard can see at a glance
-    whether the pooled winner loses inside every stratum (the
-    aggregation bias srm_chisq can't catch: the split is fine, the
-    MIXTURE differs).  The canonical guard before shipping any pooled
-    ratio comparison; segments here are the exposure strata a real
-    experiment would weight by.
-
-    Determinism: variant and segment are integer arithmetic (epoch-day
-    mod 7 — NOT the engines' dayofweek(), whose Sunday origin differs);
-    counts integer; CTRs are the only rounded divisions.  Scale shape:
-    one (segment, variant) count aggregate — 14 groups plus the pooled
-    2 — map-side combined; the pivot joins two broadcast-sized group
-    relations."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.pmod(F.col("user_id"), F.lit(2)).cast("int").alias("variant"),
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            / F.lit(_US_PER_DAY)
-        ).cast("long").alias("_day"),
-        (F.col("event_type") == "click").cast("int").alias("x"),
-    ).select(
-        "variant", "x",
-        F.pmod(F.col("_day"), F.lit(7)).cast("int").alias("segment"),
-    )
-    seg = ev.groupBy("segment", "variant").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("c"),
-    )
-    pooled = ev.groupBy("variant").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("c"),
-    ).withColumn("segment", F.lit(-1).cast("int"))
-    both = seg.unionByName(pooled.select("segment", "variant", "n", "c"))
-    a = both.filter(F.col("variant") == 0).select(
-        "segment", F.col("n").alias("n_a"), F.col("c").alias("c_a")
-    )
-    b = both.filter(F.col("variant") == 1).select(
-        "segment", F.col("n").alias("n_b"), F.col("c").alias("c_b")
-    )
-    ctr_a = F.col("c_a") / F.col("n_a")
-    ctr_b = F.col("c_b") / F.col("n_b")
-    return (
-        a.join(b, "segment")
-        .select(
-            "segment", "n_a", "n_b",
-            _r4(ctr_a).alias("ctr_a"),
-            _r4(ctr_b).alias("ctr_b"),
-            F.signum(_r4(ctr_b) - _r4(ctr_a)).cast("int")
-            .alias("b_minus_a_sign"),
-        )
-        .orderBy("segment")
-    )
-
-
-SQL_SIMPSON_CHECK = f"""WITH ev AS (
-  SELECT user_id % 2 AS variant,
-         CAST((epoch_us(ts) // {_US_PER_DAY}) % 7 AS INT) AS segment,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS x
-  FROM events
-),
-seg AS (
-  SELECT segment, variant, count(*) AS n, sum(x) AS c
-  FROM ev GROUP BY segment, variant
-),
-pooled AS (
-  SELECT -1 AS segment, variant, count(*) AS n, sum(x) AS c
-  FROM ev GROUP BY variant
-),
-allv AS (SELECT * FROM seg UNION ALL SELECT * FROM pooled)
-SELECT a.segment,
-       CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b,
-       round(a.c * 1.0 / a.n, 4) AS ctr_a,
-       round(b.c * 1.0 / b.n, 4) AS ctr_b,
-       CAST(sign(round(b.c * 1.0 / b.n, 4)
-                 - round(a.c * 1.0 / a.n, 4)) AS INT) AS b_minus_a_sign
-FROM (SELECT * FROM allv WHERE variant = 0) a
-JOIN (SELECT * FROM allv WHERE variant = 1) b ON a.segment = b.segment
-ORDER BY a.segment"""
-
-
-# ---------------------------------------------------------------------------
 # Tokenizer fertility by language
 # ---------------------------------------------------------------------------
 
@@ -22816,104 +7046,6 @@ SELECT lang, count(*) AS n_docs,
        round(sum(chars) * 1.0 / sum(bpe), 4) AS chars_per_bpe,
        round(sum(bpe) * 1.0 / sum(ws), 4) AS fertility
 FROM per GROUP BY lang ORDER BY lang"""
-
-
-# ---------------------------------------------------------------------------
-# Phrase selectivity vs the AND approximation
-# ---------------------------------------------------------------------------
-
-_PSEL_TOPK = 10
-
-
-def q_phrase_selectivity(spark, sf_dir):
-    """Phrase selectivity: for the top-{k} bigrams, the documents
-    matching the exact PHRASE vs the documents containing BOTH terms
-    anywhere (the AND upper bound) and their ratio — the number that
-    decides whether a phrase needs positional evaluation at all: a
-    ratio near 1 means AND already answers it (skip the positions
-    decode, serve from the boolean index); near 0 means the phrase is
-    where a nextword index or positional block pays for itself (the
-    DECISION INPUT for q_nextword_index's storage and
-    bm25_phrase/X7's positional intersection cost).
-
-    Determinism: doc counts are integer; ratio is the single rounded
-    division; top-k ties break on the bigram.  Scale shape: phrase
-    counts come from one adjacent-position self-join per the shingle
-    pattern (narrow, position-keyed); AND counts join the two terms'
-    distinct-doc sets (term-keyed, df-bounded); the bigram head is a
-    TakeOrdered over the bigram relation.
-    """.format(k=_PSEL_TOPK)
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir)
-    a = toks.select("doc_id", F.col("pos").alias("p"),
-                    F.col("term").alias("t1"))
-    b = toks.select("doc_id", (F.col("pos") - 1).alias("p"),
-                    F.col("term").alias("t2"))
-    bg = a.join(b, ["doc_id", "p"]).select("doc_id", "t1", "t2")
-    phrase = bg.groupBy("t1", "t2").agg(
-        F.count("*").cast("long").alias("n_occ"),
-        F.countDistinct("doc_id").cast("long").alias("n_phrase_docs"),
-    )
-    w = Window.orderBy(
-        F.col("n_occ").desc(), F.col("t1").asc(), F.col("t2").asc()
-    )
-    top = phrase.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= _PSEL_TOPK
-    )
-    td = toks.select("term", "doc_id").distinct()
-    d1 = td.select(F.col("term").alias("t1"), F.col("doc_id"))
-    d2 = td.select(F.col("term").alias("t2"), F.col("doc_id"))
-    and_docs = (
-        top.select("t1", "t2").join(d1, "t1").join(d2, ["t2", "doc_id"])
-        .groupBy("t1", "t2")
-        .agg(F.countDistinct("doc_id").cast("long").alias("n_and_docs"))
-    )
-    return (
-        top.join(and_docs, ["t1", "t2"])
-        .select(
-            F.concat_ws(" ", "t1", "t2").alias("bigram"),
-            "n_occ", "n_phrase_docs", "n_and_docs",
-            _r4(F.col("n_phrase_docs") / F.col("n_and_docs"))
-            .alias("selectivity"),
-        )
-        .orderBy(F.col("n_occ").desc(), F.col("bigram").asc())
-    )
-
-
-SQL_PHRASE_SELECTIVITY = f"""WITH {_TOKS_SQL},
-bg AS (
-  SELECT a.doc_id, a.term AS t1, b.term AS t2
-  FROM toks a JOIN toks b
-    ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-),
-phrase AS (
-  SELECT t1, t2, count(*) AS n_occ,
-         count(DISTINCT doc_id) AS n_phrase_docs
-  FROM bg GROUP BY t1, t2
-),
-top AS (
-  SELECT * FROM (
-    SELECT *, row_number() OVER (ORDER BY n_occ DESC, t1 ASC, t2 ASC)
-              AS rk
-    FROM phrase
-  ) WHERE rk <= {_PSEL_TOPK}
-),
-td AS (SELECT DISTINCT term, doc_id FROM toks),
-andd AS (
-  SELECT top.t1, top.t2, count(DISTINCT d1.doc_id) AS n_and_docs
-  FROM top
-  JOIN td d1 ON d1.term = top.t1
-  JOIN td d2 ON d2.term = top.t2 AND d2.doc_id = d1.doc_id
-  GROUP BY top.t1, top.t2
-)
-SELECT top.t1 || ' ' || top.t2 AS bigram,
-       CAST(top.n_occ AS BIGINT) AS n_occ,
-       CAST(top.n_phrase_docs AS BIGINT) AS n_phrase_docs,
-       CAST(andd.n_and_docs AS BIGINT) AS n_and_docs,
-       round(top.n_phrase_docs * 1.0 / andd.n_and_docs, 4) AS selectivity
-FROM top JOIN andd ON top.t1 = andd.t1 AND top.t2 = andd.t2
-ORDER BY top.n_occ DESC, bigram ASC"""
 
 
 # ---------------------------------------------------------------------------
@@ -23516,412 +7648,6 @@ SQL_PCA_TOP_COMPONENT = _pca_sql()
 
 
 # ---------------------------------------------------------------------------
-# Linear hybrid-fusion weight sweep
-# ---------------------------------------------------------------------------
-
-_HYBRID_LAMBDAS = (0.0, 0.25, 0.5, 0.75, 1.0)
-
-
-def q_hybrid_weight_sweep(spark, sf_dir):
-    """Linear score-fusion weight sweep for hybrid retrieval: fused =
-    λ·norm(BM25) + (1−λ)·norm(cosine) over min-max-normalized top-50
-    lists (the CombSUM-with-weights family rrf_fusion's rank-based
-    formula sidesteps), for λ ∈ {ls} — per λ, the fused top-1 and the
-    overlap of the fused top-10 with each PURE list's top-10.  This is
-    the tuning table a hybrid-search owner reads to pick λ (or to
-    decide the answer is "use RRF, the curve is too corpus-dependent"
-    — visible here as overlap jumping rather than interpolating).
-
-    Determinism: both lists rank on 4-decimal rounded scores with id
-    tiebreaks (the rrf_fusion precedent); min-max uses those rounded
-    scores; fused scores round at 6 to keep λ-scaled distinctions.
-    Scale shape: identical to rrf_fusion — each list is cut to top-50
-    by a distributed TakeOrdered first, so the normalization (1-row
-    broadcast min/max), the λ crossJoin (5-row broadcast), the rank
-    windows and the overlap flags all run over ≤ 50·|λ| rows; the
-    heavy lifting stays inside the two underlying retrieval plans.
-    """.format(ls=_HYBRID_LAMBDAS)
-    from pyspark.sql import Window
-
-    lex50 = (
-        _scored(spark, sf_dir, ["merge"])
-        .select("doc_id", _r4("score").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(_RRF_DEPTH)
-    )
-    wl = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    lex = lex50.select(
-        "doc_id", "score", F.row_number().over(wl).alias("lr")
-    )
-    lmm = lex.agg(F.min("score").alias("_lo"), F.max("score").alias("_hi"))
-    lex = lex.crossJoin(F.broadcast(lmm)).select(
-        "doc_id", "lr",
-        F.when(
-            F.col("_hi") > F.col("_lo"),
-            (F.col("score") - F.col("_lo")) / (F.col("_hi") - F.col("_lo")),
-        ).otherwise(F.lit(1.0)).alias("nl"),
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double"))
-        .alias("embedding"),
-    )
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv", lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    sem50 = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            _r4(dot / (nrm("embedding") * nrm("qv"))).alias("cos"),
-        )
-        .orderBy(F.col("cos").desc(), F.col("doc_id").asc())
-        .limit(_RRF_DEPTH)
-    )
-    ws = Window.orderBy(F.col("cos").desc(), F.col("doc_id").asc())
-    sem = sem50.select(
-        "doc_id", "cos", F.row_number().over(ws).alias("sr")
-    )
-    smm = sem.agg(F.min("cos").alias("_lo"), F.max("cos").alias("_hi"))
-    sem = sem.crossJoin(F.broadcast(smm)).select(
-        "doc_id", "sr",
-        F.when(
-            F.col("_hi") > F.col("_lo"),
-            (F.col("cos") - F.col("_lo")) / (F.col("_hi") - F.col("_lo")),
-        ).otherwise(F.lit(1.0)).alias("ns"),
-    )
-
-    joined = lex.join(sem, "doc_id", "full_outer").select(
-        "doc_id",
-        F.coalesce("nl", F.lit(0.0)).alias("nl"),
-        F.coalesce("ns", F.lit(0.0)).alias("ns"),
-        (F.coalesce("lr", F.lit(99)) <= 10).alias("in_lex10"),
-        (F.coalesce("sr", F.lit(99)) <= 10).alias("in_sem10"),
-    )
-    lams = spark.createDataFrame(
-        [(l,) for l in _HYBRID_LAMBDAS], "lam double"
-    )
-    fused = joined.crossJoin(F.broadcast(lams)).select(
-        "lam", "doc_id", "in_lex10", "in_sem10",
-        F.round(
-            F.col("lam") * F.col("nl") + (1.0 - F.col("lam")) * F.col("ns"),
-            6,
-        ).alias("f"),
-    )
-    wf = Window.partitionBy("lam").orderBy(
-        F.col("f").desc(), F.col("doc_id").asc()
-    )
-    top = fused.withColumn("rk", F.row_number().over(wf)).filter(
-        F.col("rk") <= 10
-    )
-    return (
-        top.groupBy("lam")
-        .agg(
-            F.min(F.when(F.col("rk") == 1, F.col("doc_id")))
-            .cast("long").alias("top1_doc"),
-            F.sum(F.col("in_lex10").cast("int")).cast("long")
-            .alias("overlap_lex10"),
-            F.sum(F.col("in_sem10").cast("int")).cast("long")
-            .alias("overlap_sem10"),
-        )
-        .orderBy("lam")
-    )
-
-
-SQL_HYBRID_WEIGHT_SWEEP = f"""WITH {_BM25_CORE_SQL},
-lex50 AS (
-  SELECT doc_id, round(score, 4) AS score FROM scored WHERE term = 'merge'
-  ORDER BY score DESC, doc_id ASC LIMIT {_RRF_DEPTH}
-),
-lexr AS (
-  SELECT doc_id, score,
-         row_number() OVER (ORDER BY score DESC, doc_id ASC) AS lr
-  FROM lex50
-),
-lmm AS (SELECT min(score) AS lo, max(score) AS hi FROM lexr),
-lex AS (
-  SELECT doc_id, lr,
-         CASE WHEN hi > lo THEN (score - lo) / (hi - lo)
-              ELSE 1.0 END AS nl
-  FROM lexr CROSS JOIN lmm
-),
-emb AS (SELECT vec_id, embedding::DOUBLE[] AS embedding FROM embeddings),
-qv AS (SELECT embedding AS v FROM emb WHERE vec_id = 0),
-sem50 AS (
-  SELECT e.vec_id AS doc_id,
-         round(list_dot_product(e.embedding, q.v)
-               / (sqrt(list_dot_product(e.embedding, e.embedding))
-                  * sqrt(list_dot_product(q.v, q.v))), 4) AS cos
-  FROM emb e CROSS JOIN qv q WHERE e.vec_id <> 0
-  ORDER BY cos DESC, doc_id ASC LIMIT {_RRF_DEPTH}
-),
-semr AS (
-  SELECT doc_id, cos,
-         row_number() OVER (ORDER BY cos DESC, doc_id ASC) AS sr
-  FROM sem50
-),
-smm AS (SELECT min(cos) AS lo, max(cos) AS hi FROM semr),
-sem AS (
-  SELECT doc_id, sr,
-         CASE WHEN hi > lo THEN (cos - lo) / (hi - lo)
-              ELSE 1.0 END AS ns
-  FROM semr CROSS JOIN smm
-),
-joined AS (
-  SELECT coalesce(lex.doc_id, sem.doc_id) AS doc_id,
-         coalesce(lex.nl, 0.0) AS nl, coalesce(sem.ns, 0.0) AS ns,
-         coalesce(lex.lr, 99) <= 10 AS in_lex10,
-         coalesce(sem.sr, 99) <= 10 AS in_sem10
-  FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id
-),
-lams AS (SELECT * FROM (VALUES {", ".join(f"(CAST({l} AS DOUBLE))"
-                                          for l in _HYBRID_LAMBDAS)})
-                  AS t(lam)),
-fused AS (
-  SELECT lam, doc_id, in_lex10, in_sem10,
-         round(lam * nl + (1.0 - lam) * ns, 6) AS f
-  FROM joined CROSS JOIN lams
-),
-top AS (
-  SELECT * FROM (
-    SELECT *, row_number() OVER (PARTITION BY lam
-                                 ORDER BY f DESC, doc_id ASC) AS rk
-    FROM fused
-  ) WHERE rk <= 10
-)
-SELECT lam,
-       CAST(min(CASE WHEN rk = 1 THEN doc_id END) AS BIGINT) AS top1_doc,
-       CAST(sum(CASE WHEN in_lex10 THEN 1 ELSE 0 END) AS BIGINT)
-         AS overlap_lex10,
-       CAST(sum(CASE WHEN in_sem10 THEN 1 ELSE 0 END) AS BIGINT)
-         AS overlap_sem10
-FROM top GROUP BY lam ORDER BY lam"""
-
-
-# ---------------------------------------------------------------------------
-# Kolmogorov-Smirnov goodness-of-fit for the power-law tail
-# ---------------------------------------------------------------------------
-
-
-def q_ks_power_law(spark, sf_dir):
-    """Kolmogorov-Smirnov distance between the in-degree tail and the
-    Pareto law the Hill estimator fits — the Clauset-Shalizi-Newman
-    (SIAM Rev. 2009) discipline step hill_tail_index stops short of:
-    an α̂ always comes out, but only the KS distance says whether the
-    tail actually FOLLOWS the law (CSN's rule of thumb: D ≳ 0.1 on a
-    decent-sized tail means "stop quoting α").  Same tail and same
-    α̂ construction as hill_tail_index (top-{k} degrees, α̂ = 1 +
-    k/Σln(x/x_min)), then D = sup over tail steps of the two one-sided
-    gaps between the empirical CDF and F(x) = 1 − (x/x_min)^(1−α̂).
-
-    Determinism: the tail is the same exact TakeOrdered; the CDF steps
-    rank on (degree, node id); D is a max of rounded-stable O(1)
-    floats.  Scale shape: degrees are one map-side aggregate, the tail
-    is k rows, the step table a k-row window, the sup a 1-row reduce.
-    """.format(k=_HILL_TAIL_K)
-    from pyspark.sql import Window
-
-    _, edges = _link_edges(spark, sf_dir)
-    deg = edges.groupBy("dst").agg(F.count("*").cast("long").alias("d"))
-    tail = deg.orderBy(
-        F.col("d").desc(), F.col("dst").asc()
-    ).limit(_HILL_TAIL_K)
-    xmin = tail.agg(
-        F.min("d").alias("xmin"), F.count("*").cast("long").alias("kk")
-    )
-    t = tail.crossJoin(F.broadcast(xmin))
-    fit = t.agg(
-        F.max("kk").alias("kk"), F.max("xmin").alias("xmin"),
-        F.sum(F.log(F.col("d") / F.col("xmin"))).alias("_ls"),
-    )
-    alpha = 1.0 + F.col("kk") / F.col("_ls")
-    fit = fit.select("kk", "xmin", alpha.alias("al"))
-    w = Window.orderBy(F.col("d").asc(), F.col("dst").asc())
-    steps = (
-        t.select("d", "dst", "kk")
-        .withColumn("cum", F.row_number().over(w) / F.col("kk"))
-        .groupBy("d")
-        .agg(F.max("cum").alias("f_emp"), F.min("cum").alias("_flo"),
-             F.first("kk").alias("kk"))
-    )
-    j = steps.crossJoin(F.broadcast(fit.select("xmin", "al")))
-    fmod = 1.0 - F.pow(F.col("d") / F.col("xmin"), 1.0 - F.col("al"))
-    gaps = j.select(
-        F.greatest(
-            F.abs(F.col("f_emp") - fmod),
-            F.abs(fmod - (F.col("_flo") - 1.0 / F.col("kk"))),
-        ).alias("g")
-    )
-    dmax = gaps.agg(F.max("g").alias("_d"))
-    return (
-        fit.crossJoin(F.broadcast(dmax))
-        .select(
-            F.col("kk").alias("k"),
-            F.col("xmin").cast("long").alias("x_min"),
-            _r4(F.col("al")).alias("alpha"),
-            _r4(F.col("_d")).alias("ks_distance"),
-        )
-    )
-
-
-SQL_KS_POWER_LAW = f"""WITH nodes AS (SELECT doc_id AS id FROM documents),
-nn AS (SELECT count(*) AS n FROM nodes),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
-    FROM nodes CROSS JOIN nn
-    CROSS JOIN (VALUES {", ".join(f"({m}, {b})" for m, b in _PR_RULES)})
-      AS rules(m, b)
-  ) WHERE src <> dst
-),
-deg AS (SELECT dst, count(*) AS d FROM edges GROUP BY dst),
-tail AS (
-  SELECT dst, d FROM deg ORDER BY d DESC, dst ASC LIMIT {_HILL_TAIL_K}
-),
-xmin AS (SELECT min(d) AS xmin, count(*) AS kk FROM tail),
-fit AS (
-  SELECT max(x.kk) AS kk, max(x.xmin) AS xmin,
-         1.0 + max(x.kk) / sum(ln(t.d * 1.0 / x.xmin)) AS al
-  FROM tail t CROSS JOIN xmin x
-),
-steps AS (
-  SELECT d, max(cum) AS f_emp, min(cum) AS flo, max(kk) AS kk
-  FROM (
-    SELECT t.d, x.kk,
-           row_number() OVER (ORDER BY t.d ASC, t.dst ASC) * 1.0 / x.kk
-             AS cum
-    FROM tail t CROSS JOIN xmin x
-  ) GROUP BY d
-),
-gaps AS (
-  SELECT greatest(
-           abs(f_emp - (1.0 - pow(d * 1.0 / fit.xmin, 1.0 - fit.al))),
-           abs((1.0 - pow(d * 1.0 / fit.xmin, 1.0 - fit.al))
-               - (flo - 1.0 / steps.kk))
-         ) AS g
-  FROM steps CROSS JOIN fit
-)
-SELECT CAST(fit.kk AS BIGINT) AS k, CAST(fit.xmin AS BIGINT) AS x_min,
-       round(fit.al, 4) AS alpha,
-       round((SELECT max(g) FROM gaps), 4) AS ks_distance
-FROM fit"""
-
-
-# ---------------------------------------------------------------------------
-# Erlang-C serving-capacity plan from the measured arrival rate
-# ---------------------------------------------------------------------------
-
-_ERLANG_SERVICE_S = 0.5      # per-query service time (the bench p50 scale)
-_ERLANG_MAX_C = 8
-
-
-def _fact(n: int) -> int:
-    out = 1
-    for i in range(2, n + 1):
-        out *= i
-    return out
-
-
-def q_erlang_capacity(spark, sf_dir):
-    """Erlang-C serving-capacity table from the log's MEASURED arrival
-    rate: λ = events/second over the log span, fixed service time
-    S = {s} s (the bench-p50 scale; a config literal), and for each
-    server count c ∈ 1..{c}: utilization ρ = λS/c, the Erlang-C
-    probability an arrival must queue, and the expected queue wait —
-    the M/M/c capacity plan that turns tail_at_scale's fan-out
-    arithmetic and the bench's latency into "how many query servers do
-    I actually need before p_wait collapses".  Under-provisioned rows
-    (ρ ≥ 1) report NULL wait — the queue diverges, the honest answer.
-
-    Determinism: λ is exact integer counts over exact integer
-    microseconds; each c's Erlang sums are fixed-degree polynomials in
-    a = λS with literal factorial denominators, unrolled identically
-    in both engines; outputs round at 4 (waits in ms).  Scale shape:
-    ONE 1-row aggregate over the log, then an 8-row explode with
-    closed-form arithmetic — no iteration, no join beyond the 1-row
-    broadcast.
-    """.format(s=_ERLANG_SERVICE_S, c=_ERLANG_MAX_C)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
-    )
-    base = ev.agg(
-        F.count("*").cast("long").alias("n"),
-        ((F.max("us") - F.min("us")) / 1e6).alias("span_s"),
-    ).select(
-        "n", "span_s",
-        (F.col("n") / F.col("span_s")).alias("lam"),
-        (F.col("n") / F.col("span_s") * _ERLANG_SERVICE_S).alias("a"),
-    )
-    a = F.col("a")
-    rows = []
-    for c in range(1, _ERLANG_MAX_C + 1):
-        rho = a / c
-        s0 = sum(
-            (a ** k) / F.lit(float(_fact(k))) for k in range(c)
-        )
-        top = (a ** c) / F.lit(float(_fact(c)))
-        pw = top / ((1.0 - rho) * s0 + top)
-        wq_ms = pw * _ERLANG_SERVICE_S / (c * (1.0 - rho)) * 1000.0
-        rows.append(
-            F.struct(
-                F.lit(c).alias("c"),
-                _r4(rho).alias("utilization"),
-                F.when(rho < 1.0, _r4(pw)).alias("p_wait"),
-                F.when(rho < 1.0, _r4(wq_ms)).alias("exp_wait_ms"),
-            )
-        )
-    return (
-        base.select(
-            _r4("lam").alias("lambda_qps"),
-            F.explode(F.array(*rows)).alias("r"),
-        )
-        .select("lambda_qps", "r.*")
-        .orderBy("c")
-    )
-
-
-def _erlang_sql() -> str:
-    rows = []
-    for c in range(1, _ERLANG_MAX_C + 1):
-        s0 = " + ".join(
-            f"pow(a, {k}) / {float(_fact(k))}" for k in range(c)
-        )
-        top = f"pow(a, {c}) / {float(_fact(c))}"
-        rho = f"(a / {c})"
-        pw = f"({top}) / ((1.0 - {rho}) * ({s0}) + ({top}))"
-        wq = (f"({pw}) * {_ERLANG_SERVICE_S} / ({c} * (1.0 - {rho}))"
-              f" * 1000.0")
-        rows.append(
-            f"SELECT round(lam, 4) AS lambda_qps, {c} AS c, "
-            f"round({rho}, 4) AS utilization, "
-            f"CASE WHEN {rho} < 1.0 THEN round({pw}, 4) END AS p_wait, "
-            f"CASE WHEN {rho} < 1.0 THEN round({wq}, 4) END "
-            f"AS exp_wait_ms FROM base"
-        )
-    union = " UNION ALL ".join(rows)
-    return f"""WITH ev AS (SELECT epoch_us(ts) AS us FROM events),
-base AS (
-  SELECT count(*) * 1e6 / (max(us) - min(us)) AS lam,
-         count(*) * 1e6 / (max(us) - min(us)) * {_ERLANG_SERVICE_S} AS a
-  FROM ev
-)
-SELECT CAST(c AS INT) AS c, lambda_qps, utilization, p_wait, exp_wait_ms
-FROM ({union}) ORDER BY c"""
-
-
-SQL_ERLANG_CAPACITY = _erlang_sql()
-
-
-# ---------------------------------------------------------------------------
 # BM25 score attribution (per-term explain for the AND query)
 # ---------------------------------------------------------------------------
 
@@ -24053,258 +7779,62 @@ QUERIES = {
     "events_topk_window": (q_events_topk_window, SQL_EVENTS_TOPK_WINDOW),
     "semantic_dedup": (q_semantic_dedup, SQL_SEMANTIC_DEDUP),
     "dsir_select": (q_dsir_select, SQL_DSIR_SELECT),
-    "tfidf_keywords": (q_tfidf_keywords, SQL_TFIDF_KEYWORDS),
-    "dedup_incremental": (q_dedup_incremental, SQL_DEDUP_INCREMENTAL),
-    "embedding_quantize": (q_embedding_quantize, SQL_EMBEDDING_QUANTIZE),
-    "ann_quantized_recall": (q_ann_quantized_recall, SQL_ANN_QUANTIZED_RECALL),
     "ann_ivf_quantized": (q_ann_ivf_quantized, SQL_ANN_IVF_QUANTIZED),
     "pagerank": (q_pagerank, SQL_PAGERANK),
     "hits": (q_hits, SQL_HITS),
-    "spell_correct": (q_spell_correct, SQL_SPELL_CORRECT),
     "paragraph_dedup": (q_paragraph_dedup, SQL_PARAGRAPH_DEDUP),
-    "prefix_suggest": (q_prefix_suggest, SQL_PREFIX_SUGGEST),
     "asof_join": (q_asof_join, SQL_ASOF_JOIN),
     "range_join": (q_range_join, SQL_RANGE_JOIN),
-    "cms_heavy_hitters": (q_cms_heavy_hitters, SQL_CMS_HEAVY_HITTERS),
     "bm25_zoned": (q_bm25_zoned, SQL_BM25_ZONED),
-    "url_normalize": (q_url_normalize, SQL_URL_NORMALIZE),
-    "rm1_expansion": (q_rm1_expansion, SQL_RM1_EXPANSION),
-    "hll_distinct": (q_hll_distinct, SQL_HLL_DISTINCT),
     "bloom_filter": (q_bloom_filter, SQL_BLOOM_FILTER),
     "triangle_count": (q_triangle_count, SQL_TRIANGLE_COUNT),
-    "textrank_keywords": (q_textrank_keywords, SQL_TEXTRANK_KEYWORDS),
     "kcore": (q_kcore, SQL_KCORE),
     "rrf_fusion": (q_rrf_fusion, SQL_RRF_FUSION),
     "bfs_hops": (q_bfs_hops, SQL_BFS_HOPS),
     "label_propagation": (q_label_propagation, SQL_LABEL_PROPAGATION),
-    "crawl_frontier": (q_crawl_frontier, SQL_CRAWL_FRONTIER),
-    "snippet_extract": (q_snippet_extract, SQL_SNIPPET_EXTRACT),
     "anchor_text": (q_anchor_text, SQL_ANCHOR_TEXT),
-    "host_crowding": (q_host_crowding, SQL_HOST_CROWDING),
-    "latency_quantiles": (q_latency_quantiles, SQL_LATENCY_QUANTILES),
-    "docid_remap": (q_docid_remap, SQL_DOCID_REMAP),
     "trustrank": (q_trustrank, SQL_TRUSTRANK),
     "data_split": (q_data_split, SQL_DATA_SPLIT),
     "oov_rate": (q_oov_rate, SQL_OOV_RATE),
     "bm25_near": (q_bm25_near, SQL_BM25_NEAR),
-    "readability": (q_readability, SQL_READABILITY),
-    "cooccur_items": (q_cooccur_items, SQL_COOCCUR_ITEMS),
     "bpe_pairs": (q_bpe_pairs, SQL_BPE_PAIRS),
-    "ltr_features": (q_ltr_features, SQL_LTR_FEATURES),
-    "robots_filter": (q_robots_filter, SQL_ROBOTS_FILTER),
     "ann_pq_recall": (q_ann_pq_recall, SQL_ANN_PQ_RECALL),
-    "query_likelihood": (q_query_likelihood, SQL_QUERY_LIKELIHOOD),
-    "related_terms": (q_related_terms, SQL_RELATED_TERMS),
-    "ctr_model": (q_ctr_model, SQL_CTR_MODEL),
-    "kl_drift": (q_kl_drift, SQL_KL_DRIFT),
-    "containment": (q_containment, SQL_CONTAINMENT),
-    "freshness_rank": (q_freshness_rank, SQL_FRESHNESS_RANK),
-    "ndcg_eval": (q_ndcg_eval, SQL_NDCG_EVAL),
-    "percolate": (q_percolate, SQL_PERCOLATE),
     "entropy_quality": (q_entropy_quality, SQL_ENTROPY_QUALITY),
-    "event_funnel": (q_event_funnel, SQL_EVENT_FUNNEL),
-    "mrr_map_eval": (q_mrr_map_eval, SQL_MRR_MAP_EVAL),
-    "spike_detect": (q_spike_detect, SQL_SPIKE_DETECT),
-    "posting_histogram": (q_posting_histogram, SQL_POSTING_HISTOGRAM),
-    "rocchio_feedback": (q_rocchio_feedback, SQL_ROCCHIO_FEEDBACK),
     "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
-    "champion_topk": (q_champion_topk, SQL_CHAMPION_TOPK),
-    "mirror_sources": (q_mirror_sources, SQL_MIRROR_SOURCES),
     "lang_consistency": (q_lang_consistency, SQL_LANG_CONSISTENCY),
-    "boilerplate_shingles": (q_boilerplate_shingles, SQL_BOILERPLATE_SHINGLES),
-    "heaps_law": (q_heaps_law, SQL_HEAPS_LAW),
-    "zipf_fit": (q_zipf_fit, SQL_ZIPF_FIT),
-    "coec_model": (q_coec_model, SQL_COEC_MODEL),
-    "adamic_adar": (q_adamic_adar, SQL_ADAMIC_ADAR),
-    "bm25_maxp": (q_bm25_maxp, SQL_BM25_MAXP),
     "curriculum_select": (q_curriculum_select, SQL_CURRICULUM_SELECT),
-    "mmr_diversify": (q_mmr_diversify, SQL_MMR_DIVERSIFY),
     "hard_negatives": (q_hard_negatives, SQL_HARD_NEGATIVES),
     "shard_balance": (q_shard_balance, SQL_SHARD_BALANCE),
-    "clarity_score": (q_clarity_score, SQL_CLARITY_SCORE),
-    "term_burstiness": (q_term_burstiness, SQL_TERM_BURSTINESS),
-    "interleaved_eval": (q_interleaved_eval, SQL_INTERLEAVED_EVAL),
-    "recrawl_priority": (q_recrawl_priority, SQL_RECRAWL_PRIORITY),
-    "cori_shards": (q_cori_shards, SQL_CORI_SHARDS),
-    "pivoted_vsm": (q_pivoted_vsm, SQL_PIVOTED_VSM),
     "wand_prune_stats": (q_wand_prune_stats, SQL_WAND_PRUNE_STATS),
-    "wig_qpp": (q_wig_qpp, SQL_WIG_QPP),
-    "sdm_retrieval": (q_sdm_retrieval, SQL_SDM_RETRIEVAL),
     "codec_cost": (q_codec_cost, SQL_CODEC_COST),
-    "err_eval": (q_err_eval, SQL_ERR_EVAL),
-    "impact_quantize": (q_impact_quantize, SQL_IMPACT_QUANTIZE),
-    "dfr_pl2": (q_dfr_pl2, SQL_DFR_PL2),
-    "tier_split": (q_tier_split, SQL_TIER_SPLIT),
-    "smoothing_sweep": (q_smoothing_sweep, SQL_SMOOTHING_SWEEP),
-    "combsum_fusion": (q_combsum_fusion, SQL_COMBSUM_FUSION),
-    "kendall_tau": (q_kendall_tau, SQL_KENDALL_TAU),
-    "rbo_overlap": (q_rbo_overlap, SQL_RBO_OVERLAP),
-    "redde_selection": (q_redde_selection, SQL_REDDE_SELECTION),
-    "coclick_similarity": (q_coclick_similarity, SQL_COCLICK_SIMILARITY),
-    "cache_selection": (q_cache_selection, SQL_CACHE_SELECTION),
-    "query_abandonment": (q_query_abandonment, SQL_QUERY_ABANDONMENT),
-    "kneser_ney": (q_kneser_ney, SQL_KNESER_NEY),
-    "good_turing": (q_good_turing, SQL_GOOD_TURING),
-    "stopword_induction": (q_stopword_induction, SQL_STOPWORD_INDUCTION),
-    "salsa": (q_salsa, SQL_SALSA),
-    "crawl_budget": (q_crawl_budget, SQL_CRAWL_BUDGET),
-    "query_segmentation": (q_query_segmentation, SQL_QUERY_SEGMENTATION),
-    "nextword_index": (q_nextword_index, SQL_NEXTWORD_INDEX),
-    "anchor_expand": (q_anchor_expand, SQL_ANCHOR_EXPAND),
-    "retention_cohorts": (q_retention_cohorts, SQL_RETENTION_COHORTS),
-    "last_touch": (q_last_touch, SQL_LAST_TOUCH),
-    "rfm_scores": (q_rfm_scores, SQL_RFM_SCORES),
-    "alpha_dcg": (q_alpha_dcg, SQL_ALPHA_DCG),
-    "llr_collocations": (q_llr_collocations, SQL_LLR_COLLOCATIONS),
-    "dict_frontcoding": (q_dict_frontcoding, SQL_DICT_FRONTCODING),
-    "preret_qpp": (q_preret_qpp, SQL_PRERET_QPP),
-    "bm25_sweep": (q_bm25_sweep, SQL_BM25_SWEEP),
     "maxscore_prune_stats": (q_maxscore_prune_stats,
                              SQL_MAXSCORE_PRUNE_STATS),
-    "click_walk": (q_click_walk, SQL_CLICK_WALK),
-    "permutation_sigtest": (q_permutation_sigtest, SQL_PERMUTATION_SIGTEST),
-    "ranks_selection": (q_ranks_selection, SQL_RANKS_SELECTION),
-    "click_preferences": (q_click_preferences, SQL_CLICK_PREFERENCES),
-    "query_flow": (q_query_flow, SQL_QUERY_FLOW),
-    "term_proximity": (q_term_proximity, SQL_TERM_PROXIMITY),
-    "bm25_plus": (q_bm25_plus, SQL_BM25_PLUS),
-    "partition_cost": (q_partition_cost, SQL_PARTITION_COST),
-    "pogo_sticking": (q_pogo_sticking, SQL_POGO_STICKING),
-    "degree_assortativity": (q_degree_assortativity,
-                             SQL_DEGREE_ASSORTATIVITY),
-    "link_reciprocity": (q_link_reciprocity, SQL_LINK_RECIPROCITY),
-    "clustering_coeff": (q_clustering_coeff, SQL_CLUSTERING_COEFF),
-    "reformulation_types": (q_reformulation_types, SQL_REFORMULATION_TYPES),
-    "bpref_eval": (q_bpref_eval, SQL_BPREF_EVAL),
-    "bowtie_structure": (q_bowtie_structure, SQL_BOWTIE_STRUCTURE),
-    "rbp_eval": (q_rbp_eval, SQL_RBP_EVAL),
-    "nqc_qpp": (q_nqc_qpp, SQL_NQC_QPP),
-    "cocitation": (q_cocitation, SQL_COCITATION),
-    "elias_fano_cost": (q_elias_fano_cost, SQL_ELIAS_FANO_COST),
-    "spam_mass": (q_spam_mass, SQL_SPAM_MASS),
     "skip_cost_model": (q_skip_cost_model, SQL_SKIP_COST_MODEL),
     "perplexity_buckets": (q_perplexity_buckets, SQL_PERPLEXITY_BUCKETS),
     "gopher_quality": (q_gopher_quality, SQL_GOPHER_QUALITY),
-    "filtered_ann": (q_filtered_ann, SQL_FILTERED_ANN),
-    "harmonic_centrality": (q_harmonic_centrality,
-                            SQL_HARMONIC_CENTRALITY),
-    "prec_rec_at_k": (q_prec_rec_at_k, SQL_PREC_REC_AT_K),
-    "interp_pr_curve": (q_interp_pr_curve, SQL_INTERP_PR_CURVE),
-    "tau_ap": (q_tau_ap, SQL_TAU_AP),
-    "hop_plot": (q_hop_plot, SQL_HOP_PLOT),
-    "degree_histogram": (q_degree_histogram, SQL_DEGREE_HISTOGRAM),
-    "facet_counts": (q_facet_counts, SQL_FACET_COUNTS),
     "unimax_allocation": (q_unimax_allocation, SQL_UNIMAX_ALLOCATION),
-    "opic_priority": (q_opic_priority, SQL_OPIC_PRIORITY),
-    "shapley_attribution": (q_shapley_attribution,
-                            SQL_SHAPLEY_ATTRIBUTION),
-    "position_attribution": (q_position_attribution,
-                             SQL_POSITION_ATTRIBUTION),
-    "mi_feature_select": (q_mi_feature_select, SQL_MI_FEATURE_SELECT),
-    "ips_ctr_estimate": (q_ips_ctr_estimate, SQL_IPS_CTR_ESTIMATE),
-    "ewma_forecast": (q_ewma_forecast, SQL_EWMA_FORECAST),
-    "reciprocal_nn": (q_reciprocal_nn, SQL_RECIPROCAL_NN),
     "index_size_breakdown": (q_index_size_breakdown,
                              SQL_INDEX_SIZE_BREAKDOWN),
     "calibration_curve": (q_calibration_curve, SQL_CALIBRATION_CURVE),
-    "cuped_adjustment": (q_cuped_adjustment, SQL_CUPED_ADJUSTMENT),
     "lang_confusion": (q_lang_confusion, SQL_LANG_CONFUSION),
-    "consistent_hash_moves": (q_consistent_hash_moves,
-                              SQL_CONSISTENT_HASH_MOVES),
-    "skyline_docs": (q_skyline_docs, SQL_SKYLINE_DOCS),
-    "weekday_seasonality": (q_weekday_seasonality,
-                            SQL_WEEKDAY_SEASONALITY),
-    "delta_method_ratio": (q_delta_method_ratio, SQL_DELTA_METHOD_RATIO),
-    "crawl_makespan": (q_crawl_makespan, SQL_CRAWL_MAKESPAN),
-    "distinct_ngrams": (q_distinct_ngrams, SQL_DISTINCT_NGRAMS),
-    "rich_club": (q_rich_club, SQL_RICH_CLUB),
     "lang_homophily": (q_lang_homophily, SQL_LANG_HOMOPHILY),
-    "ivf_silhouette": (q_ivf_silhouette, SQL_IVF_SILHOUETTE),
-    "tail_at_scale": (q_tail_at_scale, SQL_TAIL_AT_SCALE),
-    "spearman_pr_opic": (q_spearman_pr_opic, SQL_SPEARMAN_PR_OPIC),
-    "winsorized_mean": (q_winsorized_mean, SQL_WINSORIZED_MEAN),
-    "cardinality_estimation": (q_cardinality_estimation,
-                               SQL_CARDINALITY_ESTIMATION),
-    "chao1_vocab": (q_chao1_vocab, SQL_CHAO1_VOCAB),
-    "srm_check": (q_srm_check, SQL_SRM_CHECK),
-    "late_arrival_stats": (q_late_arrival_stats, SQL_LATE_ARRIVAL_STATS),
-    "intersection_order_cost": (q_intersection_order_cost,
-                                SQL_INTERSECTION_ORDER_COST),
-    "mde_power": (q_mde_power, SQL_MDE_POWER),
-    "otsu_threshold": (q_otsu_threshold, SQL_OTSU_THRESHOLD),
-    "traffic_gini": (q_traffic_gini, SQL_TRAFFIC_GINI),
-    "eb_shrinkage": (q_eb_shrinkage, SQL_EB_SHRINKAGE),
-    "column_encoding_model": (q_column_encoding_model,
-                              SQL_COLUMN_ENCODING_MODEL),
-    "kmv_sketch": (q_kmv_sketch, SQL_KMV_SKETCH),
-    "subsample_ci": (q_subsample_ci, SQL_SUBSAMPLE_CI),
     "knn_hubness": (q_knn_hubness, SQL_KNN_HUBNESS),
-    "feature_ndcg_screen": (q_feature_ndcg_screen,
-                            SQL_FEATURE_NDCG_SCREEN),
-    "k_anonymity": (q_k_anonymity, SQL_K_ANONYMITY),
-    "olap_cube": (q_olap_cube, SQL_OLAP_CUBE),
-    "wilson_lower_bound": (q_wilson_lower_bound, SQL_WILSON_LOWER_BOUND),
-    "mad_scale": (q_mad_scale, SQL_MAD_SCALE),
-    "anova_length_by_lang": (q_anova_length_by_lang,
-                             SQL_ANOVA_LENGTH_BY_LANG),
-    "hill_tail_index": (q_hill_tail_index, SQL_HILL_TAIL_INDEX),
-    "classical_decomposition": (q_classical_decomposition,
-                                SQL_CLASSICAL_DECOMPOSITION),
-    "head_churn": (q_head_churn, SQL_HEAD_CHURN),
     "classifier_pr_sweep": (q_classifier_pr_sweep,
                             SQL_CLASSIFIER_PR_SWEEP),
     "lsh_tuning_curve": (q_lsh_tuning_curve, SQL_LSH_TUNING_CURVE),
-    "fano_factor": (q_fano_factor, SQL_FANO_FACTOR),
-    "hill_diversity": (q_hill_diversity, SQL_HILL_DIVERSITY),
-    "conversion_lag": (q_conversion_lag, SQL_CONVERSION_LAG),
-    "pagerank_convergence": (q_pagerank_convergence,
-                             SQL_PAGERANK_CONVERGENCE),
-    "rfm_churn_auc": (q_rfm_churn_auc, SQL_RFM_CHURN_AUC),
-    "cohens_kappa": (q_cohens_kappa, SQL_COHENS_KAPPA),
-    "kaplan_meier": (q_kaplan_meier, SQL_KAPLAN_MEIER),
-    "benford_digits": (q_benford_digits, SQL_BENFORD_DIGITS),
-    "term_coverage": (q_term_coverage, SQL_TERM_COVERAGE),
-    "jsd_drift": (q_jsd_drift, SQL_JSD_DRIFT),
-    "modularity": (q_modularity, SQL_MODULARITY),
-    "quantile_sketch_error": (q_quantile_sketch_error,
-                              SQL_QUANTILE_SKETCH_ERROR),
-    "corpus_size_estimate": (q_corpus_size_estimate,
-                             SQL_CORPUS_SIZE_ESTIMATE),
-    "click_entropy": (q_click_entropy, SQL_CLICK_ENTROPY),
-    "interevent_burstiness": (q_interevent_burstiness,
-                              SQL_INTEREVENT_BURSTINESS),
     "embedding_anisotropy": (q_embedding_anisotropy,
                              SQL_EMBEDDING_ANISOTROPY),
-    "item_novelty_rate": (q_item_novelty_rate, SQL_ITEM_NOVELTY_RATE),
-    "sprt_stopping": (q_sprt_stopping, SQL_SPRT_STOPPING),
-    "event_transitions": (q_event_transitions, SQL_EVENT_TRANSITIONS),
-    "minhash_estimate_error": (q_minhash_estimate_error,
-                               SQL_MINHASH_ESTIMATE_ERROR),
     "classifier_gains": (q_classifier_gains, SQL_CLASSIFIER_GAINS),
-    "source_overlap_matrix": (q_source_overlap_matrix,
-                              SQL_SOURCE_OVERLAP_MATRIX),
-    "dedup_keeper_policy": (q_dedup_keeper_policy,
-                            SQL_DEDUP_KEEPER_POLICY),
     "community_conductance": (q_community_conductance,
                               SQL_COMMUNITY_CONDUCTANCE),
-    "shard_idf_divergence": (q_shard_idf_divergence,
-                             SQL_SHARD_IDF_DIVERGENCE),
     "embedding_drift": (q_embedding_drift, SQL_EMBEDDING_DRIFT),
-    "filter_vocab_loss": (q_filter_vocab_loss, SQL_FILTER_VOCAB_LOSS),
-    "jackknife_ctr": (q_jackknife_ctr, SQL_JACKKNIFE_CTR),
     "dedup_threshold_sensitivity": (q_dedup_threshold_sensitivity,
                                     SQL_DEDUP_THRESHOLD_SENSITIVITY),
-    "simpson_check": (q_simpson_check, SQL_SIMPSON_CHECK),
     "token_fertility": (q_token_fertility, SQL_TOKEN_FERTILITY),
-    "phrase_selectivity": (q_phrase_selectivity, SQL_PHRASE_SELECTIVITY),
     "dedup_chain_drift": (q_dedup_chain_drift, SQL_DEDUP_CHAIN_DRIFT),
     "dedup_rank_impact": (q_dedup_rank_impact, SQL_DEDUP_RANK_IMPACT),
     "brier_decomposition": (q_brier_decomposition,
                             SQL_BRIER_DECOMPOSITION),
     "pca_top_component": (q_pca_top_component, SQL_PCA_TOP_COMPONENT),
-    "hybrid_weight_sweep": (q_hybrid_weight_sweep,
-                            SQL_HYBRID_WEIGHT_SWEEP),
-    "ks_power_law": (q_ks_power_law, SQL_KS_POWER_LAW),
-    "erlang_capacity": (q_erlang_capacity, SQL_ERLANG_CAPACITY),
     "bm25_explain": (q_bm25_explain, SQL_BM25_EXPLAIN),
 }

@@ -202,46 +202,3 @@ def test_kcore_matches_python_twin_and_reaches_fixpoint(spark):
     assert got == expect
     # the peel actually removes something (the core is non-trivial)
     assert 0 < len(expect) < len(ids)
-
-
-def _python_textrank(spark):
-    toks = DQ._tokens(spark, SF_DIR).collect()
-    bydoc = {}
-    for r in toks:
-        bydoc.setdefault(r["doc_id"], []).append((r["pos"], r["term"]))
-    pairs = set()
-    for terms in bydoc.values():
-        terms.sort()
-        for i, (p1, t1) in enumerate(terms):
-            for p2, t2 in terms[i + 1:]:
-                if p2 > p1 + DQ._TR_W:
-                    break
-                if t1 != t2:
-                    pairs.add((min(t1, t2), max(t1, t2)))
-    adj = {}
-    for a, b in pairs:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    n = len(adj)
-    r = {t: 1.0 / n for t in adj}
-    for _ in range(DQ._TR_ITERS):
-        nxt = {t: 0.0 for t in adj}
-        for t, nbrs in adj.items():
-            share = r[t] / len(nbrs)
-            for v in nbrs:
-                nxt[v] += share
-        base = (1.0 - DQ._TR_DAMP) / n
-        r = {t: base + DQ._TR_DAMP * nxt[t] for t in adj}
-    top = sorted(r.items(), key=lambda kv: (-round(kv[1], 8), kv[0]))
-    return top[: DQ._TR_K]
-
-
-def test_textrank_matches_python_twin(spark):
-    expect = _python_textrank(spark)
-    got = [
-        (r["term"], r["rank"])
-        for r in DQ.q_textrank_keywords(spark, SF_DIR).collect()
-    ]
-    assert [t for t, _ in got] == [t for t, _ in expect]
-    for (gt, gr), (_, er) in zip(got, expect):
-        assert abs(gr - er) < 1e-8, (gt, gr, er)

@@ -1,10 +1,9 @@
 """Pure-Python twins and invariants for MaxScore pruning stats, the
 click-graph random walk, and the exact sign-flip permutation test."""
 
-import itertools
 import math
 import re
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import duckdb
 
@@ -88,103 +87,3 @@ def test_maxscore_is_lossless_and_matches_twin(spark):
         # the essential set is never empty (the top-k docs must be
         # reachable through at least one scored list)
         assert r.n_essential >= 1
-
-
-def _click_graph():
-    rows = duckdb.sql(
-        f"""SELECT user_id % {DQ._CW_Q} AS q,
-                   CAST(json_extract_string(props, '$.k') AS BIGINT) AS item
-            FROM read_parquet('{SF_DIR}/events.parquet')
-            WHERE event_type = 'click'
-              AND json_extract_string(props, '$.k') IS NOT NULL"""
-    ).fetchall()
-    w = Counter(rows)
-    qd, idg = Counter(), Counter()
-    for (q, i), c in w.items():
-        qd[q] += c
-        idg[i] += c
-    return w, qd, idg
-
-
-def test_click_walk_matches_twin_and_is_a_distribution(spark):
-    w, qd, idg = _click_graph()
-    got = DQ.q_click_walk(spark, SF_DIR).collect()
-    for seed in DQ._CW_SEEDS:
-        # 3-step walk twin: seed -> i1 -> q1 -> i2
-        p2 = defaultdict(float)
-        for (q, i1), c in w.items():
-            if q != seed:
-                continue
-            p1 = c / qd[q]
-            for (q1, i1b), c2 in w.items():
-                if i1b == i1:
-                    p2[q1] += p1 * (c2 / idg[i1])
-        p3 = defaultdict(float)
-        for q1, p in p2.items():
-            for (qq, i2), c in w.items():
-                if qq == q1:
-                    p3[i2] += p * (c / qd[q1])
-        # the full arrival distribution sums to 1 (row-stochastic walk)
-        assert abs(sum(p3.values()) - 1.0) < 1e-9
-        want = sorted(
-            ((round(p, 4), it) for it, p in p3.items()),
-            key=lambda x: (-x[0], x[1]),
-        )[: DQ._CW_TOPN]
-        rows = sorted(
-            (r for r in got if r.seed == seed), key=lambda r: r.rank
-        )
-        assert [(r.p3, r.item) for r in rows] == want
-        assert [r.rank for r in rows] == list(range(1, len(want) + 1))
-
-
-def test_permutation_sigtest_matches_exact_twin(spark):
-    docs = _doc_tokens()
-    seeds = sorted(DQ._SIG_SEEDS)
-    n_docs = len(docs)
-    dl = {d: len(v) for d, v in docs.items()}
-    total = sum(dl.values())
-    s_a = _bm25_scores(docs, seeds)
-
-    def rel(d):
-        return ((d % DQ._SPLIT_PRIME) * 2654435761) % 4 >= 2
-
-    def rr(scores):
-        top = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
-        for i, (d, _) in enumerate(top[: DQ._SIG_K], 1):
-            if rel(d):
-                return round(1.0 / i, 4)
-        return 0.0
-
-    deltas = []
-    for t in seeds:
-        ctf = sum(v.count(t) for v in docs.values())
-        s_b = {
-            d: round(
-                math.log(
-                    (v.count(t) + DQ._SIG_MU * ctf / total)
-                    / (dl[d] + DQ._SIG_MU)
-                ),
-                4,
-            )
-            for d, v in docs.items()
-            if t in v
-        }
-        deltas.append(rr(s_a[t]) - rr(s_b))
-
-    obs = round(abs(sum(deltas) / len(deltas)), 4)
-    hits = 0
-    for signs in itertools.product((1, -1), repeat=len(deltas)):
-        m = round(
-            abs(sum(s * d for s, d in zip(signs, deltas)) / len(deltas)), 4
-        )
-        if m >= obs:
-            hits += 1
-    want_p = round(hits / 2 ** len(deltas), 4)
-
-    row = DQ.q_permutation_sigtest(spark, SF_DIR).collect()[0]
-    assert row.n_queries == len(seeds)
-    assert row.mean_delta == round(sum(deltas) / len(deltas), 4)
-    assert row.p_value == want_p
-    # the identity assignment always counts, so p >= 2^-n and p <= 1
-    assert 1.0 / 2 ** len(seeds) <= row.p_value <= 1.0
-    assert row.significant == (1 if row.p_value < DQ._SIG_ALPHA else 0)

@@ -35,71 +35,6 @@ def _cos(a, b):
 
 
 # ---------------------------------------------------------------------------
-# mmr_diversify
-# ---------------------------------------------------------------------------
-
-def _mmr_twin():
-    emb = _emb()
-    qv = next(e for v, _l, e in emb if v == 0)
-    cand = sorted(
-        ((v, e, _cos(e, qv)) for v, _l, e in emb if v != 0),
-        key=lambda r: (-r[2], r[0]),
-    )[: DQ._MMR_CAND]
-    sims = {}
-    for i, (va, ea, _ra) in enumerate(cand):
-        for vb, eb, _rb in cand[i + 1:]:
-            sims[(va, vb)] = sims[(vb, va)] = _cos(ea, eb)
-    pool = {v: r for v, _e, r in cand}
-    selected, out = [], []
-    while pool and len(selected) < DQ._MMR_K:
-        best = None
-        for v, r in pool.items():
-            pen = max((sims[(v, s)] for s in selected), default=0.0)
-            score = DQ._MMR_LAMBDA * r - (1 - DQ._MMR_LAMBDA) * pen
-            if best is None or (-score, v) < (-best[0], best[1]):
-                best = (score, v)
-        score, v = best
-        selected.append(v)
-        out.append((len(selected), v, round(pool.pop(v), 4), round(score, 4)))
-    return out
-
-
-def test_mmr_matches_python_twin(spark):
-    want = _mmr_twin()
-    got = [
-        (r.rank, r.vec_id, r.rel, r.mmr)
-        for r in DQ.q_mmr_diversify(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    assert len(got) == DQ._MMR_K
-
-
-def test_mmr_first_pick_is_pure_relevance_and_diversifies(spark):
-    rows = DQ.q_mmr_diversify(spark, SF_DIR).collect()
-    emb = _emb()
-    qv = next(e for v, _l, e in emb if v == 0)
-    rels = sorted(
-        ((round(_cos(e, qv), 4), -v) for v, _l, e in emb if v != 0),
-        reverse=True,
-    )
-    # rank 1 is the global argmax of relevance
-    assert rows[0].rel == rels[0][0]
-    # diversification really reorders: MMR ranking != pure-relevance
-    # ranking for this corpus (λ < 1 and near-dup candidates exist)
-    pure = [(-v) for _r, v in rels[: DQ._MMR_K]]
-    assert [r.vec_id for r in rows] != pure
-
-
-def test_mmr_candidates_cut_by_takeordered(spark):
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        DQ.q_mmr_diversify(spark, SF_DIR).explain("formatted")
-    plan = buf.getvalue()
-    assert "TakeOrderedAndProject" in plan      # bounded candidate pool
-    assert "FlatMapGroupsInPandas" in plan      # sequential greedy stage
-
-
-# ---------------------------------------------------------------------------
 # hard_negatives
 # ---------------------------------------------------------------------------
 

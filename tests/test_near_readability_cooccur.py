@@ -1,7 +1,6 @@
 """Pure-Python twins for bm25_near, readability, and cooccur_items —
 independent of both the Spark plans under test and their DuckDB oracles."""
 
-import json
 import math
 import re
 
@@ -99,94 +98,3 @@ def test_bm25_near_stats_are_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
-# ---------------------------------------------------------------------------
-# readability
-# ---------------------------------------------------------------------------
-
-def test_readability_matches_python_twin(spark):
-    con = _con()
-    rows = con.execute("SELECT doc_id, text, lang FROM documents").fetchall()
-    per_lang = {}
-    for _doc_id, text, lang in rows:
-        toks = _toks(text or "")
-        if not toks:
-            continue
-        words = len(toks)
-        sylls = sum(
-            max(1, len(re.findall(r"[aeiouy]+", t))) for t in toks
-        )
-        sents = max(1, len(re.findall(r"[.!?]+", text or "")))
-        fre = 206.835 - 1.015 * (words / sents) - 84.6 * (sylls / words)
-        per_lang.setdefault(lang, []).append((fre, words / sents))
-    want = {
-        lang: (
-            len(v),
-            round(sum(x for x, _ in v) / len(v), 4),
-            round(sum(y for _, y in v) / len(v), 4),
-        )
-        for lang, v in per_lang.items()
-    }
-    got = {
-        r.lang: (r.n_docs, r.avg_fre, r.avg_wps)
-        for r in DQ.q_readability(spark, SF_DIR).collect()
-    }
-    assert got == want
-
-
-# ---------------------------------------------------------------------------
-# cooccur_items
-# ---------------------------------------------------------------------------
-
-def test_cooccur_items_matches_python_twin(spark):
-    con = _con()
-    rows = con.execute(
-        "SELECT user_id, props FROM events WHERE event_type = 'view'"
-    ).fetchall()
-    counts = {}
-    for uid, props in rows:
-        item = int(json.loads(props)["k"])
-        counts[(uid, item)] = counts.get((uid, item), 0) + 1
-    by_user = {}
-    for (uid, item), v in counts.items():
-        by_user.setdefault(uid, []).append((item, v))
-    capped = {
-        uid: {
-            item
-            for item, _ in sorted(lst, key=lambda p: (-p[1], p[0]))[
-                : DQ._COOC_CAP
-            ]
-        }
-        for uid, lst in by_user.items()
-    }
-    ci, cab = {}, {}
-    for items in capped.values():
-        for i in items:
-            ci[i] = ci.get(i, 0) + 1
-        s = sorted(items)
-        for x in range(len(s)):
-            for y in range(x + 1, len(s)):
-                cab[(s[x], s[y])] = cab.get((s[x], s[y]), 0) + 1
-    scored = [
-        (a, b, c, round(c / math.sqrt(ci[a] * ci[b]), 4))
-        for (a, b), c in cab.items()
-    ]
-    want = sorted(scored, key=lambda r: (-r[3], r[0], r[1]))[:20]
-    got = [
-        (r.item_a, r.item_b, r.cab, r.cosine)
-        for r in DQ.q_cooccur_items(spark, SF_DIR).collect()
-    ]
-    assert got == want
-
-
-def test_cooccur_cap_bounds_pair_blowup(spark):
-    """The per-user cap is the 100-TB guard: no user contributes more than
-    C(cap, 2) pairs no matter how hot their history is."""
-    assert DQ._COOC_CAP == 64
-    # sanity at fixture scale: per-user distinct items never exceeds cap
-    con = _con()
-    mx = con.execute(
-        "SELECT max(cnt) FROM (SELECT user_id, count(DISTINCT "
-        "CAST(json_extract_string(props, '$.k') AS BIGINT)) AS cnt "
-        "FROM events WHERE event_type = 'view' GROUP BY user_id)"
-    ).fetchone()[0]
-    assert mx <= DQ._COOC_CAP  # cap inactive here; activates on hot users

@@ -123,90 +123,6 @@ def test_range_join_is_hash_join_not_nested_loop(spark):
 
 
 # ---------------------------------------------------------------------------
-# count-min sketch
-# ---------------------------------------------------------------------------
-
-
-def _brute_cms(spark):
-    toks = DQ._tokens(spark, SF_DIR).collect()
-    ct = {}
-    for r in toks:
-        ct[r["term"]] = ct.get(r["term"], 0) + 1
-    total = sum(ct.values())
-    sketch = {}
-    buckets = {}
-    for term, c in ct.items():
-        for d in range(DQ._CMS_D):
-            h = hashlib.md5(f"{term}#{d}".encode()).hexdigest()
-            b = int(h[:8], 16) % DQ._CMS_W
-            buckets[(term, d)] = b
-            sketch[(d, b)] = sketch.get((d, b), 0) + c
-    est = {
-        term: min(sketch[(d, buckets[(term, d)])] for d in range(DQ._CMS_D))
-        for term in ct
-    }
-    return ct, est, total
-
-
-def test_cms_heavy_hitters_matches_brute_force(spark):
-    ct, est, total = _brute_cms(spark)
-    rows = DQ.q_cms_heavy_hitters(spark, SF_DIR).collect()
-    expect = {t for t in ct if est[t] * DQ._CMS_DEN >= total}
-    assert {r["term"] for r in rows} == expect
-    for r in rows:
-        assert r["ct"] == ct[r["term"]]
-        assert r["est"] == est[r["term"]]
-        # CMS never undercounts
-        assert r["est"] >= r["ct"]
-
-
-# ---------------------------------------------------------------------------
-# hyperloglog
-# ---------------------------------------------------------------------------
-
-
-def _brute_hll(spark):
-    tf = (
-        DQ._tokens(spark, SF_DIR)
-        .groupBy("term", "doc_id")
-        .count()
-        .collect()
-    )
-    keys = {(r["term"], r["doc_id"]) for r in tf}
-    regs = [0] * DQ._HLL_M
-    for t, d in keys:
-        h = int(hashlib.md5(f"{t}|{d}".encode()).hexdigest()[:15], 16)
-        reg, rest = h % DQ._HLL_M, h >> DQ._HLL_B
-        rho = (
-            DQ._HLL_REST_BITS + 1
-            if rest == 0
-            else DQ._HLL_REST_BITS + 1 - rest.bit_length()
-        )
-        regs[reg] = max(regs[reg], rho)
-    s = sum(2.0 ** -r for r in regs)
-    zeros = sum(1 for r in regs if r == 0)
-    alpha = 0.7213 / (1.0 + 1.079 / DQ._HLL_M)
-    raw = alpha * DQ._HLL_M * DQ._HLL_M / s
-    if raw <= 2.5 * DQ._HLL_M and zeros > 0:
-        import math
-
-        est = DQ._HLL_M * math.log(DQ._HLL_M / zeros)
-    else:
-        est = raw
-    return len(keys), round(est, 4), zeros
-
-
-def test_hll_distinct_matches_brute_force(spark):
-    n, est, zeros = _brute_hll(spark)
-    (r,) = DQ.q_hll_distinct(spark, SF_DIR).collect()
-    assert r["n_exact"] == n
-    assert r["zeros"] == zeros
-    assert abs(r["est"] - est) < 1e-3
-    # HLL standard error is ~1.04/sqrt(m) = 13% at m=64; allow 3 sigma
-    assert abs(r["est"] - n) / n < 0.40
-
-
-# ---------------------------------------------------------------------------
 # bloom filter
 # ---------------------------------------------------------------------------
 

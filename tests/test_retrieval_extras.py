@@ -156,79 +156,6 @@ def test_label_propagation_matches_python_lpa(spark):
 
 
 # ---------------------------------------------------------------------------
-# crawl_frontier
-# ---------------------------------------------------------------------------
-
-def test_crawl_frontier_matches_python_schedule(spark):
-    con = _con()
-    rows = con.execute(
-        "SELECT doc_id, source, n_chars FROM documents"
-    ).fetchall()
-    by_host = {}
-    for doc_id, source, n_chars in rows:
-        by_host.setdefault(source, []).append((doc_id, n_chars))
-    sched = []
-    for source, docs in by_host.items():
-        docs.sort(key=lambda t: (-t[1], t[0]))
-        for i, (doc_id, n_chars) in enumerate(docs):
-            sched.append(
-                (i * DQ._FRONTIER_DELAY_S, -n_chars, doc_id, source)
-            )
-    sched.sort()
-    expect = [
-        (doc_id, source, slot)
-        for slot, _, doc_id, source in sched[: DQ._FRONTIER_K]
-    ]
-
-    got = [
-        (r["doc_id"], r["source"], r["slot_s"])
-        for r in DQ.q_crawl_frontier(spark, SF_DIR).collect()
-    ]
-    assert got == expect
-    # politeness invariant: within the result, a host's k-th url is never
-    # scheduled before its (k-1)-th
-    seen = {}
-    for doc_id, source, slot in got:
-        if source in seen:
-            assert slot == seen[source] + DQ._FRONTIER_DELAY_S
-        else:
-            assert slot == 0
-        seen[source] = slot
-
-
-# ---------------------------------------------------------------------------
-# snippet_extract
-# ---------------------------------------------------------------------------
-
-def test_snippet_extract_matches_python_windows(spark):
-    con = _con()
-    rows = con.execute(
-        "SELECT doc_id, text FROM documents ORDER BY doc_id"
-    ).fetchall()
-    expect = []
-    for doc_id, text in rows:
-        i = text.lower().find(DQ._SNIPPET_TERM)
-        if i < 0:
-            continue
-        pos = i + 1  # 1-based, both engines
-        start = max(1, pos - DQ._SNIPPET_CTX)
-        expect.append(
-            (doc_id, pos, text[start - 1: start - 1 + DQ._SNIPPET_LEN])
-        )
-        if len(expect) == 10:
-            break
-
-    got = [
-        (r["doc_id"], r["pos"], r["snippet"])
-        for r in DQ.q_snippet_extract(spark, SF_DIR).collect()
-    ]
-    assert got == expect
-    assert all(DQ._SNIPPET_TERM in s.lower() or p > DQ._SNIPPET_CTX + 1
-               or len(s) == DQ._SNIPPET_LEN
-               for _, p, s in got)
-
-
-# ---------------------------------------------------------------------------
 # anchor_text
 # ---------------------------------------------------------------------------
 
@@ -258,103 +185,6 @@ def test_anchor_text_matches_python_aggregation(spark):
         for r in DQ.q_anchor_text(spark, SF_DIR).collect()
     }
     assert got == expect
-
-
-# ---------------------------------------------------------------------------
-# host_crowding
-# ---------------------------------------------------------------------------
-
-def test_host_crowding_matches_python_diversification(spark):
-    con = _con()
-    cand = con.execute(
-        f"""WITH {DQ._BM25_CORE_SQL}
-        SELECT s.doc_id, d.source, round(s.score, 4) AS score
-        FROM scored s JOIN documents d ON s.doc_id = d.doc_id
-        WHERE s.term = 'merge'"""
-    ).fetchall()
-    per_host = {}
-    keep = []
-    for doc_id, source, score in sorted(cand, key=lambda t: (-t[2], t[0])):
-        n = per_host.get(source, 0)
-        if n < DQ._CROWD_PER_HOST:
-            per_host[source] = n + 1
-            keep.append((doc_id, source, score))
-    expect = keep[:10]
-
-    got = [
-        (r["doc_id"], r["source"], r["score"])
-        for r in DQ.q_host_crowding(spark, SF_DIR).collect()
-    ]
-    assert got == expect
-    counts = {}
-    for _, source, _ in got:
-        counts[source] = counts.get(source, 0) + 1
-    assert max(counts.values()) <= DQ._CROWD_PER_HOST
-
-
-# ---------------------------------------------------------------------------
-# latency_quantiles
-# ---------------------------------------------------------------------------
-
-def test_latency_quantiles_matches_numpy_linear_interpolation(spark):
-    import numpy as np
-
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT event_type, value "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    by_type = {}
-    for et, v in rows:
-        by_type.setdefault(et, []).append(v)
-    got = {
-        r["event_type"]: (r["p50"], r["p95"], r["p99"])
-        for r in DQ.q_latency_quantiles(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(by_type)
-    for et, vals in by_type.items():
-        expect = tuple(
-            round(float(np.percentile(vals, p * 100, method="linear")), 4)
-            for p in DQ._QUANTILES
-        )
-        assert got[et] == expect, (et, got[et], expect)
-
-
-# ---------------------------------------------------------------------------
-# docid_remap
-# ---------------------------------------------------------------------------
-
-def test_docid_remap_matches_python_gap_bits_and_is_reported_honestly(spark):
-    import re
-
-    con = _con()
-    rows = con.execute(
-        "SELECT doc_id, text, n_chars FROM documents"
-    ).fetchall()
-    posts = {}
-    for doc_id, text, _ in rows:
-        for t in set(
-            t for t in re.split(r"[^a-z0-9]+", text.lower()) if t
-        ):
-            posts.setdefault(t, []).append(doc_id)
-    order = sorted(rows, key=lambda r: (-r[2], r[0]))
-    new_id = {doc_id: i for i, (doc_id, _, _) in enumerate(order)}
-
-    def bits(ids):
-        total = 0
-        prev = -1
-        for i in sorted(ids):
-            total += (i - prev).bit_length()
-            prev = i
-        return total
-
-    bits_old = sum(bits(ids) for ids in posts.values())
-    bits_new = sum(bits([new_id[d] for d in ids]) for ids in posts.values())
-
-    row = DQ.q_docid_remap(spark, SF_DIR).collect()[0]
-    assert row["bits_old"] == bits_old
-    assert row["bits_new"] == bits_new
-    assert row["ratio"] == round(bits_new / bits_old, 4)
 
 
 # ---------------------------------------------------------------------------

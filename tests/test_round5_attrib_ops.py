@@ -2,7 +2,6 @@
 unimax_allocation, opic_priority, shapley_attribution,
 position_attribution."""
 
-import math
 import re
 from collections import defaultdict
 
@@ -22,47 +21,6 @@ def _docs():
 
 def _tok(t):
     return [x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x]
-
-
-def _events():
-    return duckdb.connect().execute(
-        f"SELECT user_id, ts, event_id, event_type "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-
-
-def _touch_sequences():
-    """Per converted user: channel touches before the first purchase,
-    in (ts, event_id) order."""
-    evs = _events()
-    first_p = {}
-    for u, ts, eid, et in evs:
-        if et == "purchase":
-            k = (ts, eid)
-            if u not in first_p or k < first_p[u]:
-                first_p[u] = k
-    seqs = defaultdict(list)
-    for u, ts, eid, et in evs:
-        if u in first_p and et in DQ._ATTR_CHANNELS:
-            if (ts, eid) < first_p[u]:
-                seqs[u].append((ts, eid, et))
-    return {u: [et for _t, _e, et in sorted(v)] for u, v in seqs.items()}
-
-
-def test_facet_counts_matches_twin(spark):
-    hits = [
-        (l, s) for _d, t, l, s in _docs() if DQ._FACET_TERM in _tok(t)
-    ]
-    want = defaultdict(int)
-    for l, s in hits:
-        want[("lang", l)] += 1
-        want[("source", s)] += 1
-    got = {
-        (r.facet, r.value): r.n_docs
-        for r in DQ.q_facet_counts(spark, SF_DIR).collect()
-    }
-    assert got == dict(want)
-    assert sum(v for (f, _), v in got.items() if f == "lang") == len(hits)
 
 
 def test_unimax_allocation_matches_twin(spark):
@@ -96,112 +54,3 @@ def test_unimax_allocation_matches_twin(spark):
     assert sum(v[2] for v in got.values()) + lv == b
     # nobody exceeds the epoch cap
     assert all(v[2] <= v[1] for v in got.values())
-
-
-def test_opic_priority_matches_twin(spark):
-    n = len(_docs())
-    out = defaultdict(list)
-    for i in range(n):
-        for m, bb in DQ._PR_RULES:
-            d = (m * i + bb) % n
-            if d != i:
-                out[i].append(d)
-    # dedup like the DISTINCT in _link_edges
-    out = {k: sorted(set(v)) for k, v in out.items()}
-    c = {i: 1 / n for i in range(n)}
-    h = dict(c)
-    for _ in range(DQ._OPIC_ITERS):
-        nxt = defaultdict(float)
-        for u, dsts in out.items():
-            share = c[u] / len(dsts)
-            for d in dsts:
-                nxt[d] += share
-        c = {i: nxt.get(i, 0.0) for i in range(n)}
-        for i in range(n):
-            h[i] += c[i]
-    got = {
-        r.doc_id: (r.cash, r.importance)
-        for r in DQ.q_opic_priority(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(range(n))
-    for i in range(n):
-        assert abs(got[i][0] - c[i]) < 1e-6
-        assert abs(got[i][1] - h[i] / (DQ._OPIC_ITERS + 1)) < 1e-6
-    # cash conservation: no damping, no dangling -> mass stays 1
-    assert abs(sum(v[0] for v in got.values()) - 1.0) < 1e-6
-    assert abs(sum(v[1] for v in got.values()) - 1.0) < 1e-6
-
-
-def test_shapley_attribution_matches_twin(spark):
-    seqs = _touch_sequences()
-    phi6 = defaultdict(int)
-    touched = defaultdict(int)
-    for _u, seq in seqs.items():
-        chans = set(seq)
-        if not chans:
-            continue
-        for ch in chans:
-            phi6[ch] += 6 // len(chans)
-            touched[ch] += 1
-    want = {
-        ch: (touched[ch], round(phi6[ch] / 6.0, 4)) for ch in phi6
-    }
-    got = {
-        r.channel: (r.n_touched_conv, r.shapley)
-        for r in DQ.q_shapley_attribution(spark, SF_DIR).collect()
-    }
-    assert got == want
-    # efficiency axiom: single- and 2-channel users' credit sums exactly;
-    # 3-channel users lose 6-2*3=0 sixths -> total equals attributed users
-    n_attr = sum(1 for s in seqs.values() if s)
-    # 4-decimal output rounding leaves ≤ 5e-5 per channel
-    assert abs(sum(v[1] for v in got.values()) - n_attr) < 2e-4
-
-
-def test_position_attribution_matches_twin(spark):
-    seqs = _touch_sequences()
-    credit = defaultdict(float)
-    n_t = defaultdict(int)
-    for _u, seq in seqs.items():
-        k = len(seq)
-        if k == 0:
-            continue
-        for i, ch in enumerate(seq, start=1):
-            n_t[ch] += 1
-            if k == 1:
-                credit[ch] += 1.0
-            elif k == 2:
-                credit[ch] += 0.5
-            elif i in (1, k):
-                credit[ch] += 0.4
-            else:
-                credit[ch] += 0.2 / (k - 2)
-    got = {
-        r.channel: (r.n_touches, r.credit)
-        for r in DQ.q_position_attribution(spark, SF_DIR).collect()
-    }
-    assert {c: n for c, n in n_t.items()} == {
-        c: v[0] for c, v in got.items()
-    }
-    for ch, (_n, cr) in got.items():
-        assert abs(cr - credit[ch]) < 2e-4
-    # conservation: total credit = number of attributed conversions
-    n_attr = sum(1 for s in seqs.values() if s)
-    assert abs(sum(v[1] for v in got.values()) - n_attr) < 1e-3
-
-
-def test_attribution_models_disagree_meaningfully(spark):
-    """The three attribution lenses (shapley, U-shaped, last-touch) must
-    conserve the same total but distribute it differently — otherwise
-    keeping three entries would be redundant."""
-    sh = {
-        r.channel: r.shapley
-        for r in DQ.q_shapley_attribution(spark, SF_DIR).collect()
-    }
-    po = {
-        r.channel: r.credit
-        for r in DQ.q_position_attribution(spark, SF_DIR).collect()
-    }
-    assert set(sh) == set(po)
-    assert abs(sum(sh.values()) - sum(po.values())) < 1e-3
-    assert any(abs(sh[c] - po[c]) > 1e-3 for c in sh)

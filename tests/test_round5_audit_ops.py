@@ -2,7 +2,6 @@
 feature_ndcg_screen, k_anonymity."""
 
 import math
-import re
 from collections import defaultdict
 
 import duckdb
@@ -51,82 +50,3 @@ def test_knn_hubness_matches_twin(spark):
         assert abs(s - skew) < 1e-3
     # mean N_k is exactly k: every vector casts k votes
     assert abs(m - DQ._RNN_K) < 1e-9
-
-
-def test_feature_ndcg_screen_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id, text FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    toks = {
-        d: [x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x]
-        for d, t in rows
-    }
-    dls = {d: len(v) for d, v in toks.items() if v}
-    n, avgdl = len(dls), sum(dls.values()) / len(dls)
-    want = {}
-    for q in DQ._NDCG_QS:
-        tf = {d: v.count(q) for d, v in toks.items() if q in v}
-        df = len(tf)
-        idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        feats = {
-            d: {
-                "bm25": round(
-                    idf * (f * 2.2)
-                    / (f + 1.2 * (1 - 0.75 + 0.75 * dls[d] / avgdl)),
-                    4,
-                ),
-                "tf": float(f),
-                "invdl": 1.0 / dls[d],
-            }
-            for d, f in tf.items()
-        }
-        for feat in ("bm25", "tf", "invdl"):
-            top = sorted(
-                feats, key=lambda d: (-feats[d][feat], d)
-            )[: DQ._NDCG_K]
-            gains = ideal = 0.0
-            rels = [
-                ((d % DQ._SPLIT_PRIME) * 2654435761) % 4 for d in top
-            ]
-            for i, rel in enumerate(rels, start=1):
-                gains += (2.0 ** rel - 1) / (math.log(i + 1) / math.log(2))
-            for i, rel in enumerate(
-                sorted(
-                    rels,
-                    key=lambda r: -r,
-                ),
-                start=1,
-            ):
-                ideal += (2.0 ** rel - 1) / (math.log(i + 1) / math.log(2))
-            want[(q, feat)] = round(gains / max(ideal, 1e-12), 4)
-    got = {
-        (r.term, r.feature): r.ndcg
-        for r in DQ.q_feature_ndcg_screen(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 2e-4
-    assert all(0.0 <= v <= 1.0 for v in got.values())
-
-
-def test_k_anonymity_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT lang, source FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    cls = defaultdict(int)
-    for l, s in rows:
-        cls[(l, s)] += 1
-    table_k = min(cls.values())
-    reid = sum(v for v in cls.values() if v < DQ._KANON_K)
-    got = {
-        (r.lang, r.source): (r.class_size, r.violates_k, r.table_k,
-                             r.n_reidentifiable)
-        for r in DQ.q_k_anonymity(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(cls)
-    for key, size in cls.items():
-        assert got[key] == (
-            size, size < DQ._KANON_K, table_k, reid
-        )
-    # class sizes partition the table
-    assert sum(v[0] for v in got.values()) == len(rows)

@@ -1,7 +1,6 @@
 """Pure-Python twins for round-5 batch 29: filter_vocab_loss,
 jackknife_ctr, dedup_threshold_sensitivity."""
 
-import math
 import re
 from collections import Counter, defaultdict
 
@@ -10,80 +9,6 @@ import duckdb
 from search_engine_spark import driver_queries as DQ
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_filter_vocab_loss_matches_twin(spark):
-    flags = {
-        r.doc_id: r for r in DQ.q_corpus_pipeline(spark, SF_DIR).collect()
-    }
-    docs = duckdb.connect().execute(
-        f"SELECT doc_id, text "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    stage_of = {
-        "all": lambda f: True,
-        "lang_ok": lambda f: f.lang_ok,
-        "qual_ok": lambda f: f.qual_ok,
-        "uniq_ok": lambda f: f.uniq_ok,
-        "keep": lambda f: f.keep,
-    }
-    counts = {s: Counter() for s in DQ._VOCAB_STAGES}
-    ndocs = Counter()
-    for d, txt in docs:
-        toks = [t for t in re.split(r"[^a-z0-9]+", txt.lower()) if t]
-        f = flags[d]
-        for s, cond in stage_of.items():
-            if cond(f):
-                ndocs[s] += 1
-                counts[s].update(toks)
-    got = DQ.q_filter_vocab_loss(spark, SF_DIR).collect()
-    assert [r.stage for r in got] == list(DQ._VOCAB_STAGES)
-    prev_tokens = prev_vocab = None
-    for r in got:
-        c = counts[r.stage]
-        hapax = sum(1 for v in c.values() if v == 1)
-        assert r.n_docs == ndocs[r.stage]
-        assert r.n_tokens == sum(c.values())
-        assert r.n_terms == len(c)
-        assert r.n_hapax == hapax
-        if len(c):
-            assert r.hapax_share == round(hapax / len(c), 4)
-        # the funnel is cumulative: survivors only shrink
-        if prev_tokens is not None:
-            assert r.n_tokens <= prev_tokens
-            assert r.n_terms <= prev_vocab
-        prev_tokens, prev_vocab = r.n_tokens, r.n_terms
-
-
-def test_jackknife_ctr_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT user_id, event_type "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    per = defaultdict(lambda: [0, 0])
-    for u, t in rows:
-        per[u][0] += 1
-        per[u][1] += t == "click"
-    n = len(per)
-    Y = sum(v[0] for v in per.values())
-    X = sum(v[1] for v in per.values())
-    thetas = [(X - x) / (Y - y) for y, x in per.values()]
-    tbar = sum(thetas) / n
-    var = (n - 1) / n * sum((t - tbar) ** 2 for t in thetas)
-    se = math.sqrt(max(var, 0.0))
-    ctr = X / Y
-    naive = math.sqrt(ctr * (1 - ctr) / Y)
-    r = DQ.q_jackknife_ctr(spark, SF_DIR).collect()[0]
-    assert (r.n_users, r.clicks, r.events) == (n, X, Y)
-    assert r.ctr == round(ctr, 4)
-    assert abs(r.jackknife_se - se) < 1e-3
-    assert abs(r.ci_lo - (ctr - 1.96 * se)) < 1e-3
-    assert abs(r.ci_hi - (ctr + 1.96 * se)) < 1e-3
-    assert abs(r.naive_se - naive) < 1e-3
-    # clustered events make the jackknife SE >= the naive binomial SE
-    # is NOT guaranteed in general, but the design effect must be
-    # positive and finite
-    assert r.design_effect > 0
 
 
 def test_dedup_threshold_sensitivity_matches_twin(spark):

@@ -1,8 +1,6 @@
 """Pure-Python twins for the round-5 closing batch 8: crawl_makespan,
 distinct_ngrams, rich_club, lang_homophily."""
 
-import math
-import re
 from collections import defaultdict
 
 import duckdb
@@ -19,10 +17,6 @@ def _docs():
     ).fetchall()
 
 
-def _tok(t):
-    return [x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x]
-
-
 def _edges(n):
     edges = set()
     for i in range(n):
@@ -31,74 +25,6 @@ def _edges(n):
             if d != i:
                 edges.add((i, d))
     return edges
-
-
-def test_crawl_makespan_matches_twin(spark):
-    per = defaultdict(int)
-    for _d, _t, _l, s in _docs():
-        per[s] += 1
-    serial = {h: n * DQ._CRAWL_DELAY_S for h, n in per.items()}
-    mx = max(serial.values())
-    fleet = math.ceil(sum(serial.values()) / DQ._CRAWL_WORKERS)
-    bound = max(mx, fleet)
-    got = {
-        r.host: (r.n_pages, r.serial_s, r.makespan_s, r.long_pole, r.share)
-        for r in DQ.q_crawl_makespan(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(per)
-    for h in per:
-        assert got[h] == (
-            per[h], serial[h], bound, serial[h] == mx,
-            round(serial[h] / bound, 4),
-        )
-    # the bound is genuinely a max of the two lower bounds
-    assert bound >= mx and bound >= fleet
-
-
-def test_distinct_ngrams_matches_twin(spark):
-    want = {}
-    for n in (1, 2, 3):
-        total, uniq = 0, set()
-        for _d, t, _l, _s in _docs():
-            ts = _tok(t)
-            for i in range(len(ts) - n + 1):
-                g = " ".join(ts[i:i + n])
-                total += 1
-                uniq.add(g)
-        want[n] = (total, len(uniq), round(len(uniq) / total, 4))
-    got = {
-        r.n: (r.total, r.uniq, r.distinct_n)
-        for r in DQ.q_distinct_ngrams(spark, SF_DIR).collect()
-    }
-    assert got == want
-    # diversity must increase with n (longer grams repeat less)
-    ds = [got[n][2] for n in (1, 2, 3)]
-    assert ds == sorted(ds)
-
-
-def test_rich_club_matches_twin(spark):
-    n = len(_docs())
-    und = {
-        (min(a, b), max(a, b)) for a, b in _edges(n)
-    }
-    deg = defaultdict(int)
-    for a, b in und:
-        deg[a] += 1
-        deg[b] += 1
-    want = {}
-    for k in DQ._RC_THRESHOLDS:
-        club = {v for v, d in deg.items() if d > k}
-        e_in = sum(1 for a, b in und if a in club and b in club)
-        nc = len(club)
-        phi = (
-            round(2.0 * e_in / (nc * (nc - 1)), 4) if nc >= 2 else 0.0
-        )
-        want[k] = (nc, e_in, phi)
-    got = {
-        r.k: (r.n_club, r.e_club, r.phi)
-        for r in DQ.q_rich_club(spark, SF_DIR).collect()
-    }
-    assert got == want
 
 
 def test_lang_homophily_matches_twin(spark):

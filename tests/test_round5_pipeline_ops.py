@@ -22,20 +22,6 @@ def _toks():
     }
 
 
-def _edges():
-    n = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchone()[0]
-    ids = list(range(n))
-    edges = set()
-    for i in ids:
-        for m, b in DQ._PR_RULES:
-            d = (m * i + b) % n
-            if d != i:
-                edges.add((i, d))
-    return ids, edges
-
-
 # ---------------------------------------------------------------------------
 # skip_cost_model
 # ---------------------------------------------------------------------------
@@ -148,76 +134,3 @@ def test_gopher_quality_matches_twin(spark):
     assert any(keeps) and not all(keeps)
 
 
-# ---------------------------------------------------------------------------
-# filtered_ann
-# ---------------------------------------------------------------------------
-
-def test_filtered_ann_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT vec_id, label, embedding::DOUBLE[] "
-        f"FROM read_parquet('{SF_DIR}/embeddings.parquet')"
-    ).fetchall()
-    q = next(e for v, _l, e in rows if v == 0)
-    qn = math.sqrt(sum(x * x for x in q))
-    scored = []
-    for v, l, e in rows:
-        if v == 0:
-            continue
-        dot = sum(a * b for a, b in zip(e, q))
-        en = math.sqrt(sum(x * x for x in e))
-        scored.append((v, l, round(dot / (en * qn), 4)))
-    by_cos = sorted(scored, key=lambda r: (-r[2], r[0]))
-    exact = {
-        v
-        for v, _l, _c in [
-            r for r in by_cos if r[1] == DQ._FANN_LABEL
-        ][: DQ._FANN_K]
-    }
-    want = []
-    for m in DQ._FANN_OVERSAMPLE:
-        head = by_cos[: m * DQ._FANN_K]
-        kept = [v for v, l, _c in head if l == DQ._FANN_LABEL][: DQ._FANN_K]
-        want.append(
-            (m, len(kept), round(len(set(kept) & exact) / DQ._FANN_K, 4))
-        )
-    got = [
-        (r.m, r.n_post, r.recall_at_k)
-        for r in DQ.q_filtered_ann(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    # recall must be monotone non-decreasing in the oversample factor
-    rs = [r for _m, _n, r in got]
-    assert rs == sorted(rs)
-
-
-# ---------------------------------------------------------------------------
-# harmonic_centrality
-# ---------------------------------------------------------------------------
-
-def test_harmonic_centrality_matches_twin(spark):
-    ids, edges = _edges()
-    bwd = defaultdict(set)
-    for s, d in edges:
-        bwd[d].add(s)
-    want = {}
-    for seed in ids:
-        if seed % DQ._BFS_SEED_MOD != 0:
-            continue
-        dist = {seed: 0}
-        frontier = {seed}
-        for t in range(1, DQ._HC_ITERS + 1):
-            nxt = set()
-            for v in frontier:
-                for u in bwd[v]:
-                    if u not in dist:
-                        dist[u] = t
-                        nxt.add(u)
-            frontier = nxt
-        h60 = sum(60 // d for d in dist.values() if d > 0)
-        want[seed] = (len(dist) - 1, round(h60 / 60.0, 4))
-    got = {
-        r.seed: (r.n_reached, r.harmonic)
-        for r in DQ.q_harmonic_centrality(spark, SF_DIR).collect()
-    }
-    assert got == want
-    assert len(got) >= 1

@@ -2,48 +2,13 @@
 token_fertility, phrase_selectivity."""
 
 import re
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import duckdb
 
 from search_engine_spark import driver_queries as DQ
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_simpson_check_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT user_id, epoch_us(ts), event_type "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    seg = defaultdict(lambda: [0, 0])
-    pooled = defaultdict(lambda: [0, 0])
-    for u, us, t in rows:
-        v = u % 2
-        s = (us // DQ._US_PER_DAY) % 7
-        x = t == "click"
-        seg[(s, v)][0] += 1
-        seg[(s, v)][1] += x
-        pooled[v][0] += 1
-        pooled[v][1] += x
-    got = DQ.q_simpson_check(spark, SF_DIR).collect()
-    segs = sorted({s for s, _v in seg})
-    assert [r.segment for r in got] == [-1] + segs
-    for r in got:
-        if r.segment == -1:
-            na, ca = pooled[0]
-            nb, cb = pooled[1]
-        else:
-            na, ca = seg[(r.segment, 0)]
-            nb, cb = seg[(r.segment, 1)]
-        assert (r.n_a, r.n_b) == (na, nb)
-        assert r.ctr_a == round(ca / na, 4)
-        assert r.ctr_b == round(cb / nb, 4)
-        expect_sign = (
-            0 if round(cb / nb, 4) == round(ca / na, 4)
-            else 1 if round(cb / nb, 4) > round(ca / na, 4) else -1
-        )
-        assert r.b_minus_a_sign == expect_sign
 
 
 def test_token_fertility_matches_twin(spark):
@@ -70,32 +35,3 @@ def test_token_fertility_matches_twin(spark):
         assert r.fertility == round(bpe / ws, 4)
         # the BPE-ish segmentation can only split further
         assert r.fertility >= 1.0
-
-
-def test_phrase_selectivity_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id, text "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    occ = Counter()
-    pdocs = defaultdict(set)
-    tdocs = defaultdict(set)
-    for d, txt in rows:
-        toks = [t for t in re.split(r"[^a-z0-9]+", txt.lower()) if t]
-        for t in toks:
-            tdocs[t].add(d)
-        for x, y in zip(toks, toks[1:]):
-            occ[(x, y)] += 1
-            pdocs[(x, y)].add(d)
-    top = sorted(occ.items(), key=lambda kv: (-kv[1], kv[0]))
-    top = top[:DQ._PSEL_TOPK]
-    got = DQ.q_phrase_selectivity(spark, SF_DIR).collect()
-    assert [r.bigram for r in got] == [f"{a} {b}" for (a, b), _c in top]
-    for r, ((a, b), c) in zip(got, top):
-        nand = len(tdocs[a] & tdocs[b])
-        assert r.n_occ == c
-        assert r.n_phrase_docs == len(pdocs[(a, b)])
-        assert r.n_and_docs == nand
-        assert r.selectivity == round(len(pdocs[(a, b)]) / nand, 4)
-        # the phrase can never match more docs than the AND
-        assert r.n_phrase_docs <= r.n_and_docs

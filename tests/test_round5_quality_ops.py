@@ -123,41 +123,6 @@ def test_calibration_curve_matches_twin(spark):
     ) + 1e-9
 
 
-def test_cuped_adjustment_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT user_id, ts, value "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    t0 = min(ts.replace(hour=0, minute=0, second=0, microsecond=0)
-             for _u, ts, _v in rows)
-    import datetime
-
-    split = t0 + datetime.timedelta(days=DQ._CUPED_SPLIT_DAYS)
-    per = defaultdict(lambda: [0.0, 0.0])
-    for u, ts, v in rows:
-        per[u][0 if ts < split else 1] += v
-    xs = [x for x, _y in per.values()]
-    ys = [y for _x, y in per.values()]
-    n = len(per)
-    sx, sy = sum(xs), sum(ys)
-    sxx = sum(x * x for x in xs)
-    sxy = sum(x * y for x, y in zip(xs, ys))
-    syy = sum(y * y for y in ys)
-    var_x = (sxx - sx * sx / n) / n
-    var_y = (syy - sy * sy / n) / n
-    cov = (sxy - sx * sy / n) / n
-    theta = cov / var_x
-    var_cuped = var_y - cov * cov / var_x
-    r = DQ.q_cuped_adjustment(spark, SF_DIR).collect()[0]
-    assert r.n_users == n
-    assert abs(r.theta - theta) < 1e-3
-    assert abs(r.var_y - var_y) < 0.5       # 4-dp round on a big number
-    assert abs(r.var_cuped - var_cuped) < 0.5
-    assert abs(r.reduction - (1 - var_cuped / var_y)) < 1e-3
-    # CUPED can only help: adjusted variance never exceeds raw
-    assert r.var_cuped <= r.var_y + 1e-9
-
-
 def test_lang_confusion_matches_twin(spark):
     mat = defaultdict(int)
     per_true = defaultdict(int)

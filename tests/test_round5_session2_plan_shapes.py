@@ -31,80 +31,9 @@ def test_embedding_anisotropy_is_join_free(spark):
     assert _no_cartesian(plan)
 
 
-def test_corpus_size_estimate_is_join_free(spark):
-    """Overlap is flag conjunction in one narrow pass — no set
-    intersection join anywhere."""
-    plan = _explain(DQ.q_corpus_size_estimate(spark, SF_DIR))
-    assert "Join" not in plan
-    assert _no_cartesian(plan)
-
-
 def test_token_fertility_is_join_free(spark):
     plan = _explain(DQ.q_token_fertility(spark, SF_DIR))
     assert "Join" not in plan
-    assert _no_cartesian(plan)
-
-
-def test_sprt_walk_has_no_join(spark):
-    """The LLR walk is a window prefix sum + one reduce."""
-    plan = _explain(DQ.q_sprt_stopping(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "Window" in plan
-    assert _no_cartesian(plan)
-
-
-def test_interevent_burstiness_is_window_plus_agg(spark):
-    plan = _explain(DQ.q_interevent_burstiness(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "Window" in plan
-    assert _no_cartesian(plan)
-
-
-def test_kaplan_meier_risk_set_is_metadata_sized(spark):
-    """The heavy work is the per-user aggregate; the survival windows
-    run over the per-duration relation, and the horizon is a broadcast
-    1-row side."""
-    plan = _explain(DQ.q_kaplan_meier(spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert _no_cartesian(plan)
-
-
-def test_benford_total_is_broadcast(spark):
-    plan = _explain(DQ.q_benford_digits(spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert _no_cartesian(plan)
-
-
-def test_term_coverage_total_is_broadcast(spark):
-    plan = _explain(DQ.q_term_coverage(spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert _no_cartesian(plan)
-
-
-def test_jackknife_totals_are_broadcast(spark):
-    """The leave-one-out identity needs totals beside every user row —
-    as a broadcast, never a shuffled join or a driver collect."""
-    plan = _explain(DQ.q_jackknife_ctr(spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert _no_cartesian(plan)
-
-
-def test_click_entropy_totals_are_broadcast(spark):
-    plan = _explain(DQ.q_click_entropy(spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert _no_cartesian(plan)
-
-
-def test_source_overlap_join_is_keyed(spark):
-    """The source-pair join must be an equi-join on the shingle, never
-    a cartesian of the source sets."""
-    plan = _explain(DQ.q_source_overlap_matrix(spark, SF_DIR))
-    assert _no_cartesian(plan)
-
-
-def test_dedup_keeper_policy_is_one_hash_window(spark):
-    plan = _explain(DQ.q_dedup_keeper_policy(spark, SF_DIR))
-    assert "Window" in plan
     assert _no_cartesian(plan)
 
 
@@ -114,25 +43,3 @@ def test_dedup_threshold_sweep_broadcasts_taus(spark):
     plan = _explain(DQ.q_dedup_threshold_sensitivity(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert _no_cartesian(plan)
-
-
-def test_minhash_estimate_error_has_no_cartesian(spark):
-    plan = _explain(DQ.q_minhash_estimate_error(spark, SF_DIR))
-    assert _no_cartesian(plan)
-
-
-def test_event_transitions_is_partitioned_window(spark):
-    plan = _explain(DQ.q_event_transitions(spark, SF_DIR))
-    assert "Window" in plan
-    assert _no_cartesian(plan)
-
-
-def test_filter_vocab_loss_reads_tokens_once(spark):
-    """The 5-stage rollup must come from ONE term-keyed aggregate with
-    conditional sums — not five scans of the token stream."""
-    plan = _explain(DQ.q_filter_vocab_loss(spark, SF_DIR))
-    assert _no_cartesian(plan)
-    # the 5-row unpivot EXPLODES one aggregated row — the corpus lineage
-    # (corpus_pipeline flags + the token scan) appears once, not 5x
-    assert "Generate" in plan          # the explode
-    assert plan.count("documents.parquet") <= 10

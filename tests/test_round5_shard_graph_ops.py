@@ -2,7 +2,6 @@
 shard_idf_divergence, embedding_drift."""
 
 import math
-import re
 from collections import Counter, defaultdict
 
 import duckdb
@@ -60,39 +59,6 @@ def test_community_conductance_matches_twin(spark):
     assert got == expected
     # conductance is a fraction of the smaller side's volume
     assert all(0.0 <= r[4] <= 1.0 for r in got)
-
-
-def test_shard_idf_divergence_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id, text "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    S = DQ._SIDF_SHARDS
-    gdf, sdf = Counter(), Counter()
-    ns = Counter()
-    for d, txt in rows:
-        ns[d % S] += 1
-        terms = set(
-            t for t in re.split(r"[^a-z0-9]+", txt.lower()) if t
-        )
-        for t in terms:
-            gdf[t] += 1
-            sdf[(t, d % S)] += 1
-    n = len(rows)
-    top = sorted(gdf.items(), key=lambda kv: (-kv[1], kv[0]))
-    top = top[:DQ._SIDF_TOPK]
-    got = DQ.q_shard_idf_divergence(spark, SF_DIR).collect()
-    assert [(r.term, r.df) for r in got] == top
-    for r in got:
-        lidfs = [
-            math.log(ns[s] / (sdf.get((r.term, s), 0) or 0.5))
-            for s in range(S)
-        ]
-        assert r.global_idf == round(math.log(n / gdf[r.term]), 4)
-        assert abs(r.min_local_idf - min(lidfs)) < 1e-3
-        assert abs(r.max_local_idf - max(lidfs)) < 1e-3
-        assert abs(r.spread - (max(lidfs) - min(lidfs))) < 2e-3
-        assert r.spread >= 0
 
 
 def test_embedding_drift_matches_twin(spark):

@@ -24,81 +24,6 @@ def _docs():
     }
 
 
-def test_cori_matches_python_twin(spark):
-    docs = _docs()
-    dfst = defaultdict(set)          # (source, term) -> docs
-    cw = Counter()                   # source -> tokens
-    for d, (toks, s) in docs.items():
-        cw[s] += len(toks)
-        for t in set(toks):
-            if t in DQ._IL_SEEDS:
-                dfst[(s, t)].add(d)
-    avg_cw = sum(cw.values()) / len(cw)
-    n_s = len(cw)
-    cf = Counter(t for (_s, t) in dfst)
-    rows = []
-    for (s, t), ds in dfst.items():
-        df = len(ds)
-        T = df / (df + 50.0 + 150.0 * cw[s] / avg_cw)
-        i_part = math.log((n_s + 0.5) / cf[t]) / math.log(n_s + 1.0)
-        rows.append((t, s, df, round(0.4 + 0.6 * T * i_part, 4)))
-    want = []
-    for seed in sorted(DQ._IL_SEEDS):
-        per = sorted(
-            (r for r in rows if r[0] == seed),
-            key=lambda r: (-r[3], r[1]),
-        )[: DQ._CORI_TOPN]
-        want += [
-            (seed, s, df, b, i + 1) for i, (_t, s, df, b) in enumerate(per)
-        ]
-    got = [
-        (r.seed, r.shard, r.df_st, r.belief, r.rank)
-        for r in DQ.q_cori_shards(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    # belief stays inside CORI's [b, 1] band
-    assert all(0.4 <= b <= 1.0 for _s, _sh, _d, b, _r in got)
-
-
-def test_pivoted_vsm_matches_python_twin(spark):
-    docs = _docs()
-    tf = {d: Counter(toks) for d, (toks, _s) in docs.items()}
-    dl = {d: len(toks) for d, (toks, _s) in docs.items()}
-    n = len(docs)
-    avgdl = sum(dl.values()) / n
-    df = Counter()
-    for c in tf.values():
-        for t in DQ._PIV_TERMS:
-            if c.get(t):
-                df[t] += 1
-    scored = {}
-    for d, c in tf.items():
-        s, hits = 0.0, 0
-        for t in DQ._PIV_TERMS:
-            f = c.get(t, 0)
-            if not f:
-                continue
-            hits += 1
-            s += (
-                (1.0 + math.log(1.0 + math.log(f)))
-                / ((1.0 - DQ._PIV_S) + DQ._PIV_S * dl[d] / avgdl)
-                * math.log((n + 1.0) / df[t])
-            )
-        if hits:
-            scored[d] = (round(s, 4), hits)
-    want = [
-        (d, s, h)
-        for d, (s, h) in sorted(
-            scored.items(), key=lambda kv: (-kv[1][0], kv[0])
-        )[:10]
-    ]
-    got = [
-        (r.doc_id, r.score, r.n_terms)
-        for r in DQ.q_pivoted_vsm(spark, SF_DIR).collect()
-    ]
-    assert got == want
-
-
 def test_wand_prune_is_lossless(spark):
     """The graded invariant: every pruned doc's TRUE score is < theta,
     so block-max skipping never changes the top-k."""

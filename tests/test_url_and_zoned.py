@@ -2,7 +2,6 @@
 frontier canonicalization): Python brute-force twins + invariants."""
 
 import math
-import re
 
 from search_engine_spark import driver_queries as DQ
 from search_engine_spark.plans import bm25
@@ -72,72 +71,5 @@ def test_bm25_zoned_boost_actually_changes_scores(spark):
 
 def test_bm25_zoned_plan_broadcasts_stats(spark):
     plan = _explain(DQ.q_bm25_zoned(spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-
-
-_NORM_RE = re.compile(
-    r"^(https?)://([^/:?#]+)(?::([0-9]+))?([^?#]*)(?:\?([^#]*))?$"
-)
-
-
-def test_url_normalize_invariants(spark):
-    rows = DQ.q_url_normalize(spark, SF_DIR).collect()
-    assert len(rows) > 0
-    for r in rows:
-        m = _NORM_RE.match(r["norm"])
-        assert m, r["norm"]
-        scheme, host, port, path, q = m.groups()
-        assert scheme in ("http", "https")
-        assert host == host.lower() and not host.startswith("www.")
-        # default ports stripped, fragment gone
-        assert port not in ("80", "443") or (
-            (scheme, port) not in (("http", "80"), ("https", "443"))
-        )
-        assert "#" not in r["norm"]
-        if q:
-            parts = q.split("&")
-            assert parts == sorted(parts)
-
-
-def test_url_normalize_is_idempotent(spark):
-    """Normalizing an already-normal URL must be a fixpoint — run the
-    same component logic in Python over the emitted norm strings."""
-    rows = DQ.q_url_normalize(spark, SF_DIR).collect()
-    for r in rows:
-        m = _NORM_RE.match(r["norm"])
-        scheme, host, port, path, q = m.groups()
-        rebuilt = f"{scheme}://{host}"
-        if port and not (
-            (scheme == "http" and port == "80")
-            or (scheme == "https" and port == "443")
-        ):
-            rebuilt += f":{port}"
-        rebuilt += path or ""
-        if q:
-            rebuilt += "?" + "&".join(sorted(q.split("&")))
-        assert rebuilt == r["norm"]
-
-
-def test_rm1_expansion_reranks_and_broadcasts(spark):
-    """RM1 expansion must actually change the ranking vs the seed-only
-    query (the expansion terms contribute weight), the selected terms
-    must exclude the seed, and the two-pass plan must broadcast its
-    small sides without any cartesian blowup."""
-    rm1 = [
-        (r["doc_id"], r["score"])
-        for r in DQ.q_rm1_expansion(spark, SF_DIR).collect()
-    ]
-    seed = [
-        (r["doc_id"], r["score"])
-        for r in DQ.q_bm25_single(spark, SF_DIR).collect()
-    ]
-    assert len(rm1) == 10
-    assert rm1 != seed
-    # expanded scores dominate seed-only scores for shared docs (the
-    # extra terms only ever ADD weight)
-    seed_map = dict(seed)
-    assert all(s >= seed_map[d] - 1e-6 for d, s in rm1 if d in seed_map)
-    plan = _explain(DQ.q_rm1_expansion(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
