@@ -99,7 +99,7 @@ def main() -> None:
     docs_per_sec = BENCH_DOCS / build_s
 
     # ---- real engine: query-set p50 top-10 BM25 latency (packed + WAND;
-    # phrase/NOT queries fall back to the exhaustive executor) --------------
+    # phrase/NOT queries on the general packed kernel) -----------------------
     from search_engine_spark.plans.wand import PackedQueryEngine
     from search_engine_spark.sources.queryset import QUERY_STRINGS
 

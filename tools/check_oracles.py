@@ -26,7 +26,7 @@ def main() -> None:
     sf_dir = "/root/testdata/sf0.01"
     names = sys.argv[1:] or None
 
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-check", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
