@@ -2,8 +2,9 @@
 
 `queries()` exposes one entry per implemented operator family from
 SURVEY.md §2 (+ training-data-pipeline extras), each with an exactly
-mirrored DuckDB oracle in `oracle_sql()`.  Implementations live in
-search_engine_spark/driver_queries.py.
+mirrored DuckDB oracle in `oracle_sql()`.  The registry is
+search_engine_spark/driver_queries.py; the implementations live in
+search_engine_spark/catalog/, one module per operator family.
 
 Two additional rows-only entries (no SQL oracle — they exercise the
 reference-parity HTML parser + nonstandard stemmer, which are not
@@ -241,7 +242,7 @@ FROM documents"""
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: conjunctive BM25 top-10 over the sf0.001 documents table."""
     _ensure_pythonpath(spark)
-    from search_engine_spark.driver_queries import q_bm25_and
+    from search_engine_spark.catalog.ir import q_bm25_and
 
     return q_bm25_and(spark, "/root/testdata/sf0.001")
 

@@ -4,7 +4,7 @@ from collections import Counter
 
 import pyarrow.parquet as pq
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import q_lang_consistency
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -35,7 +35,7 @@ def test_lang_consistency_matches_python_twin(spark):
     want.sort(key=lambda r: (r[1], r[0]))
     got = [
         (r.doc_id, r.source, r.lang, r.majority_lang, r.maj_frac)
-        for r in DQ.q_lang_consistency(spark, SF_DIR).collect()
+        for r in q_lang_consistency(spark, SF_DIR).collect()
     ]
     assert got == want
     assert got  # fixture sanity: outliers exist at sf0.001
@@ -45,7 +45,7 @@ def test_lang_majority_window_runs_over_aggregate(spark):
     """The row_number window must consume the (source, lang) histogram,
     never per-doc rows: the Window's child in the optimized plan is an
     Aggregate."""
-    plan = DQ.q_lang_consistency(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+    plan = q_lang_consistency(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
     i = plan.find("Window")
     assert i != -1
     assert "Aggregate" in plan[i : i + 2000]

@@ -8,7 +8,7 @@ import math
 import re
 
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import _CURR_FRAC, q_curriculum_select
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -33,7 +33,7 @@ def test_curriculum_matches_naive_cumsum(spark, tmp_path):
         toks = [x for x in re.split(r"[^a-z0-9]+", text.lower()) if x]
         docs[doc_id] = (len(toks), sum(len(t) for t in toks) / len(toks))
     total = sum(n for n, _d in docs.values())
-    budget = math.floor(DQ._CURR_FRAC * total)
+    budget = math.floor(_CURR_FRAC * total)
     want, cum = [], 0
     for doc_id, (n, diff) in sorted(
         docs.items(), key=lambda kv: (kv[1][1], kv[0])
@@ -44,7 +44,7 @@ def test_curriculum_matches_naive_cumsum(spark, tmp_path):
         want.append((doc_id, n, round(diff, 4), cum))
     got = [
         (r.doc_id, r.n_tok, r.difficulty, r.cum_tokens)
-        for r in DQ.q_curriculum_select(spark, str(tmp_path)).collect()
+        for r in q_curriculum_select(spark, str(tmp_path)).collect()
     ]
     assert got == want
     assert 0 < len(got) < len(rows)   # the budget genuinely cuts
@@ -58,7 +58,7 @@ def test_curriculum_prefix_sum_is_distributed(spark):
     plan is the only global window and it sees ≤ #ranges rows)."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_curriculum_select(spark, SF_DIR).explain("formatted")
+        q_curriculum_select(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "rangepartitioning" in plan.lower()
     assert "BroadcastHashJoin" in plan

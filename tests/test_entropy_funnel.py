@@ -6,7 +6,7 @@ from collections import Counter
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import q_entropy_quality
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -47,14 +47,14 @@ def test_entropy_quality_matches_python_twin(spark):
     }
     got = {
         r.lang: (r.n_docs, r.avg_entropy, r.n_low)
-        for r in DQ.q_entropy_quality(spark, SF_DIR).collect()
+        for r in q_entropy_quality(spark, SF_DIR).collect()
     }
     assert got == want
 
 
 def test_entropy_bounded_by_log_alphabet(spark):
     """Shannon entropy over a 36-char alphabet is at most log2(36)."""
-    for r in DQ.q_entropy_quality(spark, SF_DIR).collect():
+    for r in q_entropy_quality(spark, SF_DIR).collect():
         assert 0.0 <= r.avg_entropy <= math.log2(36) + 1e-9
 
 

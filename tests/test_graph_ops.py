@@ -9,7 +9,10 @@ import io
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.graph import (
+    _HITS_ITERS, _KCORE_K, _KCORE_ROUNDS, _PR_DAMP, _PR_ITERS, _PR_RULES,
+    q_hits, q_kcore, q_pagerank, q_triangle_count,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -19,18 +22,18 @@ def _python_pagerank(ids):
     n = len(ids)
     out = {}
     for u in ids:
-        tgts = {(m * u + b) % n for m, b in DQ._PR_RULES}
+        tgts = {(m * u + b) % n for m, b in _PR_RULES}
         tgts.discard(u)
         out[u] = sorted(tgts)
     r = {u: 1.0 / n for u in ids}
-    for _ in range(DQ._PR_ITERS):
+    for _ in range(_PR_ITERS):
         nxt = {u: 0.0 for u in ids}
         for u, tgts in out.items():
             share = r[u] / len(tgts)
             for v in tgts:
                 nxt[v] += share
-        base = (1.0 - DQ._PR_DAMP) / n
-        r = {u: base + DQ._PR_DAMP * nxt[u] for u in ids}
+        base = (1.0 - _PR_DAMP) / n
+        r = {u: base + _PR_DAMP * nxt[u] for u in ids}
     return r, out
 
 
@@ -47,7 +50,7 @@ def test_pagerank_matches_python_twin(spark):
     expect, _ = _python_pagerank(ids)
     got = {
         r["doc_id"]: r["pr"]
-        for r in DQ.q_pagerank(spark, SF_DIR).collect()
+        for r in q_pagerank(spark, SF_DIR).collect()
     }
     assert set(got) == set(expect)
     # Spark returns round(r, 8); the twin is unrounded -> half-step bound
@@ -69,7 +72,7 @@ def test_pagerank_graph_has_no_dangling_nodes_and_is_skewed(spark):
 
 
 def test_pagerank_plan_shape(spark):
-    df = DQ.q_pagerank(spark, SF_DIR)
+    df = q_pagerank(spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -85,7 +88,7 @@ def _python_hits(ids):
     L1 normalization."""
     n = len(ids)
     out = {
-        u: sorted({(m * u + b) % n for m, b in DQ._PR_RULES} - {u})
+        u: sorted({(m * u + b) % n for m, b in _PR_RULES} - {u})
         for u in ids
     }
     inn = {u: [] for u in ids}
@@ -94,7 +97,7 @@ def _python_hits(ids):
             inn[v].append(u)
     h = {u: 1 for u in ids}
     a = {}
-    for _ in range(DQ._HITS_ITERS):
+    for _ in range(_HITS_ITERS):
         a = {v: sum(h[u] for u in inn[v]) for v in ids}
         h = {u: sum(a[v] for v in out[u]) for u in ids}
     return a, h
@@ -108,7 +111,7 @@ def test_hits_matches_python_twin(spark):
     asum, hsum = sum(a.values()), sum(h.values())
     got = {
         r["doc_id"]: (r["auth"], r["hub"])
-        for r in DQ.q_hits(spark, SF_DIR).collect()
+        for r in q_hits(spark, SF_DIR).collect()
     }
     assert set(got) == set(ids)
     for u in ids:
@@ -118,7 +121,7 @@ def test_hits_matches_python_twin(spark):
 
 
 def test_hits_scores_are_normalized_and_skewed(spark):
-    rows = DQ.q_hits(spark, SF_DIR).collect()
+    rows = q_hits(spark, SF_DIR).collect()
     sa = sum(r["auth"] for r in rows)
     sh = sum(r["hub"] for r in rows)
     assert abs(sa - 1.0) < 1e-5 and abs(sh - 1.0) < 1e-5
@@ -128,7 +131,7 @@ def test_hits_scores_are_normalized_and_skewed(spark):
 
 
 def test_hits_plan_shape(spark):
-    df = DQ.q_hits(spark, SF_DIR)
+    df = q_hits(spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -144,7 +147,7 @@ def test_triangle_count_matches_brute_force(spark):
     n = len(ids)
     E = set()
     for u in ids:
-        for m, b in DQ._PR_RULES:
+        for m, b in _PR_RULES:
             v = (m * u + b) % n
             if v != u:
                 E.add((min(u, v), max(u, v)))
@@ -160,7 +163,7 @@ def test_triangle_count_matches_brute_force(spark):
         u, v = (a, b) if (deg[a], a) < (deg[b], b) else (b, a)
         out[u] = out.get(u, 0) + 1
     wedges = sum(d * (d - 1) // 2 for d in out.values())
-    (r,) = DQ.q_triangle_count(spark, SF_DIR).collect()
+    (r,) = q_triangle_count(spark, SF_DIR).collect()
     assert r["n_triangles"] == tri
     assert r["n_wedges"] == wedges
     assert tri > 0  # the arithmetic graph genuinely closes triangles
@@ -170,7 +173,7 @@ def _und_adj(ids):
     n = len(ids)
     E = set()
     for u in ids:
-        for m, b in DQ._PR_RULES:
+        for m, b in _PR_RULES:
             v = (m * u + b) % n
             if v != u:
                 E.add((min(u, v), max(u, v)))
@@ -186,18 +189,18 @@ def test_kcore_matches_python_twin_and_reaches_fixpoint(spark):
     _, adj = _und_adj(ids)
     keep = set(adj)
     history = []
-    for _ in range(DQ._KCORE_ROUNDS + 1):  # one EXTRA round
-        keep = {v for v in keep if len(adj[v] & keep) >= DQ._KCORE_K}
+    for _ in range(_KCORE_ROUNDS + 1):  # one EXTRA round
+        keep = {v for v in keep if len(adj[v] & keep) >= _KCORE_K}
         history.append(set(keep))
     # fixpoint within the operator's round budget
-    assert history[DQ._KCORE_ROUNDS] == history[DQ._KCORE_ROUNDS - 1]
+    assert history[_KCORE_ROUNDS] == history[_KCORE_ROUNDS - 1]
     expect = {
-        v: len(adj[v] & history[DQ._KCORE_ROUNDS - 1])
-        for v in history[DQ._KCORE_ROUNDS - 1]
+        v: len(adj[v] & history[_KCORE_ROUNDS - 1])
+        for v in history[_KCORE_ROUNDS - 1]
     }
     got = {
         r["doc_id"]: r["core_deg"]
-        for r in DQ.q_kcore(spark, SF_DIR).collect()
+        for r in q_kcore(spark, SF_DIR).collect()
     }
     assert got == expect
     # the peel actually removes something (the core is non-trivial)

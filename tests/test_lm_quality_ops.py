@@ -3,7 +3,10 @@ quality, lexical diversity, and fixed-weight classifier inference."""
 
 import math
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import (
+    q_bigram_logprob, q_quality_classifier, q_ttr_quality, _QC_BIAS, _QC_W_LEN,
+    _QC_W_STOP, _QC_W_TTR,
+)
 
 
 def _write_docs(spark, tmp_path, texts):
@@ -29,7 +32,7 @@ def test_bigram_logprob_matches_hand_model(spark, tmp_path):
                     + math.log(p("a", "b"))) / 3, 4)
     want1 = round(-math.log(p("a", "a")), 4)
     out = {r["doc_id"]: r for r in
-           DQ.q_bigram_logprob(spark, str(tmp_path)).collect()}
+           q_bigram_logprob(spark, str(tmp_path)).collect()}
     assert out[0]["n_bigrams"] == 3 and abs(out[0]["xent_nats"] - want0) < 1e-9
     assert out[1]["n_bigrams"] == 1 and abs(out[1]["xent_nats"] - want1) < 1e-9
     assert 2 not in out                       # single-token doc: no transitions
@@ -38,7 +41,7 @@ def test_bigram_logprob_matches_hand_model(spark, tmp_path):
 def test_ttr_quality_hand_counts(spark, tmp_path):
     _write_docs(spark, tmp_path, ["a a a b", "a b c d"])
     out = {r["doc_id"]: r for r in
-           DQ.q_ttr_quality(spark, str(tmp_path)).collect()}
+           q_ttr_quality(spark, str(tmp_path)).collect()}
     # doc0: 4 tokens, 2 types (a:3, b:1) -> ttr .5, hapax 1/2
     assert out[0]["n_tokens"] == 4 and out[0]["n_types"] == 2
     assert out[0]["ttr"] == 0.5 and out[0]["hapax_ratio"] == 0.5
@@ -49,11 +52,11 @@ def test_ttr_quality_hand_counts(spark, tmp_path):
 def test_quality_classifier_matches_hand_logistic(spark, tmp_path):
     _write_docs(spark, tmp_path, ["the of and is it", "zzzz zzzz zzzz"])
     out = {r["doc_id"]: r for r in
-           DQ.q_quality_classifier(spark, str(tmp_path)).collect()}
+           q_quality_classifier(spark, str(tmp_path)).collect()}
 
     def sigmoid(mean_len, stop, ttr):
-        z = (DQ._QC_W_LEN * mean_len + DQ._QC_W_STOP * stop
-             + DQ._QC_W_TTR * ttr + DQ._QC_BIAS)
+        z = (_QC_W_LEN * mean_len + _QC_W_STOP * stop
+             + _QC_W_TTR * ttr + _QC_BIAS)
         return round(1.0 / (1.0 + math.exp(-z)), 4)
 
     # doc0: 5 stopwords -> mean_len 12/5, stop 1.0, ttr 1.0

@@ -7,7 +7,9 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    _MS_K, _MS_QUERIES, q_maxscore_prune_stats,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,10 +51,10 @@ def test_maxscore_is_lossless_and_matches_twin(spark):
     docs = _doc_tokens()
     got = {
         r.q: r
-        for r in DQ.q_maxscore_prune_stats(spark, SF_DIR).collect()
+        for r in q_maxscore_prune_stats(spark, SF_DIR).collect()
     }
-    assert set(got) == {f"{a}+{b}+{c}" for a, b, c in DQ._MS_QUERIES}
-    for qt in DQ._MS_QUERIES:
+    assert set(got) == {f"{a}+{b}+{c}" for a, b, c in _MS_QUERIES}
+    for qt in _MS_QUERIES:
         qname = "+".join(qt)
         s = _bm25_scores(docs, qt)
         tot = defaultdict(float)
@@ -61,7 +63,7 @@ def test_maxscore_is_lossless_and_matches_twin(spark):
                 tot[d] += v
         tot = {d: round(v, 4) for d, v in tot.items()}
         ranked = sorted(tot.items(), key=lambda kv: (-kv[1], kv[0]))
-        theta = ranked[DQ._MS_K - 1][1]
+        theta = ranked[_MS_K - 1][1]
         tmax = sorted(
             ((max(s[t].values()), t) for t in qt if s[t])
         )

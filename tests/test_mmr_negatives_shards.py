@@ -10,7 +10,8 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import q_shard_balance, _SHARDS
+from search_engine_spark.catalog.ann import _HARDNEG_Q, q_hard_negatives
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,7 +43,7 @@ def test_hard_negatives_match_python_twin(spark):
     emb = _emb()
     want = []
     for av, al, ae in emb:
-        if av >= DQ._HARDNEG_Q:
+        if av >= _HARDNEG_Q:
             continue
         best = None
         for v, lab, e in emb:
@@ -55,17 +56,17 @@ def test_hard_negatives_match_python_twin(spark):
     want.sort()
     got = [
         (r.anchor, r.label_a, r.negative, r.label_n, r.cos)
-        for r in DQ.q_hard_negatives(spark, SF_DIR).collect()
+        for r in q_hard_negatives(spark, SF_DIR).collect()
     ]
     assert got == want
-    assert len(got) == DQ._HARDNEG_Q
+    assert len(got) == _HARDNEG_Q
     assert all(a != n for _q, a, _n, n, _c in got)   # labels always differ
 
 
 def test_hard_negatives_anchor_side_is_broadcast(spark):
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_hard_negatives(spark, SF_DIR).explain("formatted")
+        q_hard_negatives(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
@@ -87,7 +88,7 @@ def test_shard_balance_matches_python_twin(spark):
             df[t] += 1
     per = defaultdict(lambda: [0, 0])
     for t, d in df.items():
-        shard = int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % DQ._SHARDS
+        shard = int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % _SHARDS
         per[shard][0] += 1
         per[shard][1] += d
     mean = sum(p[1] for p in per.values()) / len(per)
@@ -96,7 +97,7 @@ def test_shard_balance_matches_python_twin(spark):
     )
     got = [
         (r.shard, r.n_terms, r.postings, r.skew)
-        for r in DQ.q_shard_balance(spark, SF_DIR).collect()
+        for r in q_shard_balance(spark, SF_DIR).collect()
     ]
     assert got == want
     # total vocabulary is conserved across shards
@@ -108,7 +109,7 @@ def test_shard_balance_window_runs_over_shard_rollup(spark):
     vocabulary: an aggregate sits below the window in the plan."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_shard_balance(spark, SF_DIR).explain("formatted")
+        q_shard_balance(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "Window" in plan
     assert plan.index("Window") < plan.index("HashAggregate") or (

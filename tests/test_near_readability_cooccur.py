@@ -6,7 +6,7 @@ import re
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import _NEAR_W, q_bm25_near
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,7 +42,7 @@ def test_bm25_near_matches_python_twin(spark):
         ntf = sum(
             1
             for p in pa
-            if any(abs(q - p) <= DQ._NEAR_W for q in pb)
+            if any(abs(q - p) <= _NEAR_W for q in pb)
         )
         if ntf:
             hits[doc_id] = ntf
@@ -65,14 +65,14 @@ def test_bm25_near_matches_python_twin(spark):
     want = sorted(scored, key=lambda r: (-r[2], r[0]))[:10]
     got = [
         (r.doc_id, r.ntf, r.score)
-        for r in DQ.q_bm25_near(spark, SF_DIR).collect()
+        for r in q_bm25_near(spark, SF_DIR).collect()
     ]
     assert got == want
 
 
 def test_bm25_near_at_least_as_broad_as_phrase(spark):
     """Every phrase match (adjacency) is a NEAR/3 match, never vice versa."""
-    near = {r.doc_id for r in DQ.q_bm25_near(spark, SF_DIR).collect()}
+    near = {r.doc_id for r in q_bm25_near(spark, SF_DIR).collect()}
     con = _con()
     phrase_docs = set()
     for doc_id, text in con.execute("SELECT doc_id, text FROM documents").fetchall():
@@ -92,7 +92,7 @@ def test_bm25_near_stats_are_broadcast(spark):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_bm25_near(spark, SF_DIR).explain("formatted")
+        q_bm25_near(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan

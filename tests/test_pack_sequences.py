@@ -4,7 +4,7 @@ through one task — the shape we refuse to ship at 10^12 rows)."""
 
 import pyspark.sql.functions as F
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import _PACK_LEN, q_pack_sequences
 
 
 def test_pack_offsets_match_naive_cumsum(spark, tmp_path):
@@ -16,7 +16,7 @@ def test_pack_offsets_match_naive_cumsum(spark, tmp_path):
     )
     got = {
         r["doc_id"]: r
-        for r in DQ.q_pack_sequences(spark, str(tmp_path)).collect()
+        for r in q_pack_sequences(spark, str(tmp_path)).collect()
     }
     assert 500 not in got
     # naive oracle: cumsum in doc_id order
@@ -26,8 +26,8 @@ def test_pack_offsets_match_naive_cumsum(spark, tmp_path):
         r = got[i]
         assert r["n_tokens"] == n
         assert r["start_offset"] == off
-        assert r["first_chunk"] == off // DQ._PACK_LEN
-        assert r["last_chunk"] == (off + n - 1) // DQ._PACK_LEN
+        assert r["first_chunk"] == off // _PACK_LEN
+        assert r["last_chunk"] == (off + n - 1) // _PACK_LEN
         off += n
 
 
@@ -36,9 +36,9 @@ def test_pack_chunks_are_contiguous(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         f"{tmp_path}/documents.parquet"
     )
-    out = DQ.q_pack_sequences(spark, str(tmp_path)).orderBy("doc_id").collect()
+    out = q_pack_sequences(spark, str(tmp_path)).orderBy("doc_id").collect()
     # stream is gapless: each doc starts where the previous one ended
     for prev, cur in zip(out, out[1:]):
         assert cur["start_offset"] == prev["start_offset"] + prev["n_tokens"]
     total = out[-1]["start_offset"] + out[-1]["n_tokens"]
-    assert out[-1]["last_chunk"] == (total - 1) // DQ._PACK_LEN
+    assert out[-1]["last_chunk"] == (total - 1) // _PACK_LEN

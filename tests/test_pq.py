@@ -6,7 +6,9 @@ import math
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ann import (
+    _PQ_D, _PQ_KS, _PQ_M, q_ann_pq_recall, _RECALL_K, _RECALL_NQ,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,7 +26,7 @@ def _emb():
 
 def _pq_twin():
     emb = _emb()
-    M, D, KS = DQ._PQ_M, DQ._PQ_D, DQ._PQ_KS
+    M, D, KS = _PQ_M, _PQ_D, _PQ_KS
     subs = {
         (vid, m): e[m * D : (m + 1) * D]
         for vid, e in emb.items()
@@ -60,10 +62,10 @@ def _pq_twin():
 
 def test_ann_pq_recall_matches_python_twin(spark):
     emb, cents, codes = _pq_twin()
-    M, D = DQ._PQ_M, DQ._PQ_D
+    M, D = _PQ_M, _PQ_D
     nrm = {v: math.sqrt(sum(x * x for x in e)) for v, e in emb.items()}
     want = {}
-    for qid in range(DQ._RECALL_NQ):
+    for qid in range(_RECALL_NQ):
         qv = emb[qid]
         lut = {
             (m, c): (
@@ -87,13 +89,13 @@ def test_ann_pq_recall_matches_python_twin(spark):
         top = lambda lst: {
             v
             for _, v in sorted(lst, key=lambda t: (-t[0], t[1]))[
-                : DQ._RECALL_K
+                : _RECALL_K
             ]
         }
-        want[qid] = round(len(top(adc) & top(exact)) / DQ._RECALL_K, 4)
+        want[qid] = round(len(top(adc) & top(exact)) / _RECALL_K, 4)
     got = {
         r.qid: r.recall
-        for r in DQ.q_ann_pq_recall(spark, SF_DIR).collect()
+        for r in q_ann_pq_recall(spark, SF_DIR).collect()
     }
     assert got == want
 
@@ -101,7 +103,7 @@ def test_ann_pq_recall_matches_python_twin(spark):
 def test_ann_pq_recall_beats_chance(spark):
     """4-bit PQ on isotropic data is lossy but must far exceed the ~K/n
     chance floor."""
-    rows = DQ.q_ann_pq_recall(spark, "/root/testdata/sf0.01").collect()
+    rows = q_ann_pq_recall(spark, "/root/testdata/sf0.01").collect()
     mean = sum(r.recall for r in rows) / len(rows)
     assert 0.3 <= mean <= 1.0
 
@@ -109,7 +111,7 @@ def test_ann_pq_recall_beats_chance(spark):
 def test_ann_pq_codebook_is_broadcast(spark):
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_ann_pq_recall(spark, SF_DIR).explain("formatted")
+        q_ann_pq_recall(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan

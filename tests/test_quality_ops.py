@@ -4,7 +4,10 @@ length banding, and class-cohesion readouts of a training-data pipeline."""
 import math
 
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ann import q_label_centroids
+from search_engine_spark.catalog.quality import (
+    q_corpus_pipeline, q_length_filter, q_unigram_logprob,
+)
 
 
 def test_unigram_logprob_matches_hand_model(spark, tmp_path):
@@ -17,7 +20,7 @@ def test_unigram_logprob_matches_hand_model(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
     out = {r["doc_id"]: r for r in
-           DQ.q_unigram_logprob(spark, str(tmp_path)).collect()}
+           q_unigram_logprob(spark, str(tmp_path)).collect()}
     w0 = (3 * -math.log(0.6) + -math.log(0.3)) / 4
     w1 = (3 * -math.log(0.6) + 2 * -math.log(0.3) + -math.log(0.1)) / 6
     assert out[0]["n_tokens"] == 4 and out[1]["n_tokens"] == 6
@@ -33,7 +36,7 @@ def test_length_filter_drops_tails(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{tmp_path}/documents.parquet")
     kept = sorted(
-        r["doc_id"] for r in DQ.q_length_filter(spark, str(tmp_path)).collect()
+        r["doc_id"] for r in q_length_filter(spark, str(tmp_path)).collect()
     )
     # exact percentile band [p5, p95] over 10..1000 keeps the middle ~90%
     assert 85 <= len(kept) <= 95
@@ -54,7 +57,7 @@ def test_label_centroids_cohesion(spark, tmp_path):
         rows, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
     out = {r["label"]: r for r in
-           DQ.q_label_centroids(spark, str(tmp_path)).collect()}
+           q_label_centroids(spark, str(tmp_path)).collect()}
     assert out[0]["n_vecs"] == 3 and out[1]["n_vecs"] == 2
     # tight cluster is more cohesive than the orthogonal pair
     assert out[0]["mean_cos"] > 0.99
@@ -84,7 +87,7 @@ def test_corpus_pipeline_funnel(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.parquet(f"{tmp_path}/documents.parquet")
     out = {r["doc_id"]: r for r in
-           DQ.q_corpus_pipeline(spark, str(tmp_path)).collect()}
+           q_corpus_pipeline(spark, str(tmp_path)).collect()}
     assert len(out) == 7
     # cumulative flags: keep -> uniq_ok -> qual_ok -> lang_ok
     for r in out.values():
@@ -115,7 +118,7 @@ def test_corpus_pipeline_dedup_among_survivors(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.parquet(f"{tmp_path}/documents.parquet")
     out = {r["doc_id"]: r for r in
-           DQ.q_corpus_pipeline(spark, str(tmp_path)).collect()}
+           q_corpus_pipeline(spark, str(tmp_path)).collect()}
     assert out[0]["uniq_ok"] and not out[0]["keep"]
     assert not out[10]["uniq_ok"] and not out[11]["uniq_ok"]
     assert not any(r["keep"] for r in out.values())

@@ -9,7 +9,10 @@ import hashlib
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    _BLOOM_BASE, _BLOOM_K, _BLOOM_M, q_bloom_filter,
+)
+from search_engine_spark.catalog.events import q_asof_join, q_range_join, _RJ_N
 from tests.test_driver_plan_shapes import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -48,7 +51,7 @@ def _brute_asof(events):
 def test_asof_join_matches_brute_force(spark):
     events = _events()
     expect = _brute_asof(events)
-    rows = DQ.q_asof_join(spark, SF_DIR).collect()
+    rows = q_asof_join(spark, SF_DIR).collect()
     assert len(rows) == len(expect)
     for r in rows:
         b = expect[r["event_id"]]
@@ -75,7 +78,7 @@ def test_asof_join_precondition_no_ts_ties(spark):
 def test_asof_join_is_single_shuffle_no_join(spark):
     """The union+window merge must contain NO join operator at all —
     one exchange on user_id and a linear window pass."""
-    plan = _explain(DQ.q_asof_join(spark, SF_DIR))
+    plan = _explain(q_asof_join(spark, SF_DIR))
     assert "Join" not in plan
     assert "Window" in plan
 
@@ -88,7 +91,7 @@ def test_asof_join_is_single_shuffle_no_join(spark):
 def _brute_intervals():
     base = datetime.datetime(2024, 1, 1)
     out = []
-    for i in range(DQ._RJ_N):
+    for i in range(_RJ_N):
         s = base + datetime.timedelta(hours=7 * i, minutes=(i * i) % 11)
         e = s + datetime.timedelta(minutes=90 + (13 * i) % 45)
         out.append((i, s, e))
@@ -104,7 +107,7 @@ def test_range_join_matches_brute_force(spark):
             expect[i] = (len(hits), round(sum(v for (v,) in hits), 4))
     got = {
         r["interval_id"]: (r["n_events"], r["sum_value"])
-        for r in DQ.q_range_join(spark, SF_DIR).collect()
+        for r in q_range_join(spark, SF_DIR).collect()
     }
     assert set(got) == set(expect)
     for i in expect:
@@ -116,7 +119,7 @@ def test_range_join_is_hash_join_not_nested_loop(spark):
     """The bucket key must turn the interval predicate into a broadcast
     HASH join — a BroadcastNestedLoopJoin would be the O(|E| x |I|)
     plan that dies at scale."""
-    plan = _explain(DQ.q_range_join(spark, SF_DIR))
+    plan = _explain(q_range_join(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -135,22 +138,22 @@ def test_bloom_filter_matches_brute_force_and_has_fp(spark):
     ).fetchall()
     bits = set()
     for _, src, key in docs:
-        if src in DQ._BLOOM_BASE:
-            for j in range(DQ._BLOOM_K):
+        if src in _BLOOM_BASE:
+            for j in range(_BLOOM_K):
                 h = hashlib.md5(f"{key}#{j}".encode()).hexdigest()
-                bits.add(int(h[:8], 16) % DQ._BLOOM_M)
+                bits.add(int(h[:8], 16) % _BLOOM_M)
     expect = {}
     for did, src, key in docs:
         hit = all(
             int(
                 hashlib.md5(f"{key}#{j}".encode()).hexdigest()[:8], 16
             )
-            % DQ._BLOOM_M
+            % _BLOOM_M
             in bits
-            for j in range(DQ._BLOOM_K)
+            for j in range(_BLOOM_K)
         )
-        expect[did] = (1 if src in DQ._BLOOM_BASE else 0, 1 if hit else 0)
-    rows = DQ.q_bloom_filter(spark, SF_DIR).collect()
+        expect[did] = (1 if src in _BLOOM_BASE else 0, 1 if hit else 0)
+    rows = q_bloom_filter(spark, SF_DIR).collect()
     assert len(rows) == len(expect)
     fps = 0
     for r in rows:

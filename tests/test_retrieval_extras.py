@@ -7,7 +7,15 @@ DuckDB oracles."""
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import _BM25_CORE_SQL
+from search_engine_spark.catalog.ann import q_rrf_fusion, _RRF_DEPTH, _RRF_K
+from search_engine_spark.catalog.graph import (
+    _BFS_ITERS, _BFS_SEED_MOD, _LPA_ITERS, _PR_DAMP, _PR_ITERS, _PR_RULES,
+    q_anchor_text, q_bfs_hops, q_label_propagation, q_trustrank,
+)
+from search_engine_spark.catalog.quality import (
+    _OOV_MIN_DF, q_data_split, q_oov_rate, _SPLIT_MOD, _SPLIT_PRIME,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -36,7 +44,7 @@ def _edges(ids):
     n = len(ids)
     out = set()
     for u in ids:
-        for m, b in DQ._PR_RULES:
+        for m, b in _PR_RULES:
             v = (m * u + b) % n
             if v != u:
                 out.add((u, v))
@@ -53,10 +61,10 @@ def test_rrf_fusion_matches_python_fusion(spark):
     matches score-for-score."""
     con = _con()
     lex = con.execute(
-        f"""WITH {DQ._BM25_CORE_SQL}
+        f"""WITH {_BM25_CORE_SQL}
         SELECT doc_id, round(score, 4) AS score FROM scored
         WHERE term = 'merge'
-        ORDER BY score DESC, doc_id ASC LIMIT {DQ._RRF_DEPTH}"""
+        ORDER BY score DESC, doc_id ASC LIMIT {_RRF_DEPTH}"""
     ).fetchall()
     sem = con.execute(
         f"""WITH emb AS (
@@ -67,13 +75,13 @@ def test_rrf_fusion_matches_python_fusion(spark):
                      / (sqrt(list_dot_product(e.embedding, e.embedding))
                         * sqrt(list_dot_product(q.v, q.v))), 4) AS cos
         FROM emb e CROSS JOIN q WHERE e.vec_id <> 0
-        ORDER BY cos DESC, vec_id ASC LIMIT {DQ._RRF_DEPTH}"""
+        ORDER BY cos DESC, vec_id ASC LIMIT {_RRF_DEPTH}"""
     ).fetchall()
     fused = {}
     for rank, (doc_id, _) in enumerate(lex, start=1):
-        fused[doc_id] = fused.get(doc_id, 0.0) + 1.0 / (DQ._RRF_K + rank)
+        fused[doc_id] = fused.get(doc_id, 0.0) + 1.0 / (_RRF_K + rank)
     for rank, (doc_id, _) in enumerate(sem, start=1):
-        fused[doc_id] = fused.get(doc_id, 0.0) + 1.0 / (DQ._RRF_K + rank)
+        fused[doc_id] = fused.get(doc_id, 0.0) + 1.0 / (_RRF_K + rank)
     expect = sorted(
         ((round(s, 6), d) for d, s in fused.items()),
         key=lambda t: (-t[0], t[1]),
@@ -81,7 +89,7 @@ def test_rrf_fusion_matches_python_fusion(spark):
 
     got = [
         (r["rrf"], r["doc_id"])
-        for r in DQ.q_rrf_fusion(spark, SF_DIR).collect()
+        for r in q_rrf_fusion(spark, SF_DIR).collect()
     ]
     assert got == expect
 
@@ -97,9 +105,9 @@ def test_bfs_hops_matches_python_bfs(spark):
     adj = {}
     for u, v in edges:
         adj.setdefault(u, []).append(v)
-    dist = {u: 0 for u in ids if u % DQ._BFS_SEED_MOD == 0}
+    dist = {u: 0 for u in ids if u % _BFS_SEED_MOD == 0}
     frontier = dict(dist)
-    for h in range(1, DQ._BFS_ITERS + 1):
+    for h in range(1, _BFS_ITERS + 1):
         nxt = {}
         for u in frontier:
             for v in adj.get(u, ()):
@@ -110,11 +118,11 @@ def test_bfs_hops_matches_python_bfs(spark):
 
     got = {
         r["doc_id"]: r["hops"]
-        for r in DQ.q_bfs_hops(spark, SF_DIR).collect()
+        for r in q_bfs_hops(spark, SF_DIR).collect()
     }
     assert got == dist
     assert 0 in set(got.values())          # seeds present
-    assert max(got.values()) <= DQ._BFS_ITERS
+    assert max(got.values()) <= _BFS_ITERS
 
 
 # ---------------------------------------------------------------------------
@@ -132,7 +140,7 @@ def test_label_propagation_matches_python_lpa(spark):
         nbr.setdefault(lo, []).append(hi)
         nbr.setdefault(hi, []).append(lo)
     lbl = {u: u for u in ids}
-    for _ in range(DQ._LPA_ITERS):
+    for _ in range(_LPA_ITERS):
         new = {}
         for u in ids:
             counts = {}
@@ -148,7 +156,7 @@ def test_label_propagation_matches_python_lpa(spark):
 
     got = {
         r["doc_id"]: r["community"]
-        for r in DQ.q_label_propagation(spark, SF_DIR).collect()
+        for r in q_label_propagation(spark, SF_DIR).collect()
     }
     assert got == lbl
     # propagation actually merged something: fewer communities than nodes
@@ -182,7 +190,7 @@ def test_anchor_text_matches_python_aggregation(spark):
 
     got = {
         r["doc_id"]: (r["n_inlinks"], r["top_anchor"], r["anchor_n"])
-        for r in DQ.q_anchor_text(spark, SF_DIR).collect()
+        for r in q_anchor_text(spark, SF_DIR).collect()
     }
     assert got == expect
 
@@ -197,26 +205,26 @@ def test_trustrank_matches_python_twin_and_demotes_nonseeded(spark):
     n = len(ids)
     out = {}
     for u in ids:
-        tgts = {(m * u + b) % n for m, b in DQ._PR_RULES}
+        tgts = {(m * u + b) % n for m, b in _PR_RULES}
         tgts.discard(u)
         out[u] = sorted(tgts)
-    seeds = [u for u in ids if u % DQ._BFS_SEED_MOD == 0]
+    seeds = [u for u in ids if u % _BFS_SEED_MOD == 0]
     tele = {u: (1.0 / len(seeds) if u in set(seeds) else 0.0) for u in ids}
     r = dict(tele)
-    for _ in range(DQ._PR_ITERS):
+    for _ in range(_PR_ITERS):
         nxt = {u: 0.0 for u in ids}
         for u, tgts in out.items():
             share = r[u] / len(tgts)
             for v in tgts:
                 nxt[v] += share
         r = {
-            u: (1.0 - DQ._PR_DAMP) * tele[u] + DQ._PR_DAMP * nxt[u]
+            u: (1.0 - _PR_DAMP) * tele[u] + _PR_DAMP * nxt[u]
             for u in ids
         }
 
     got = {
         row["doc_id"]: row["tr"]
-        for row in DQ.q_trustrank(spark, SF_DIR).collect()
+        for row in q_trustrank(spark, SF_DIR).collect()
     }
     assert set(got) == set(ids)
     for u in ids:
@@ -238,7 +246,7 @@ def test_data_split_matches_python_hash_assignment(spark):
     rows = con.execute("SELECT doc_id, text FROM documents").fetchall()
     expect = {}
     for doc_id, text in rows:
-        b = ((doc_id % DQ._SPLIT_PRIME) * 2654435761) % DQ._SPLIT_MOD
+        b = ((doc_id % _SPLIT_PRIME) * 2654435761) % _SPLIT_MOD
         split = "train" if b <= 7 else ("val" if b == 8 else "test")
         toks = [t for t in re.split(r"[^a-z0-9]+", text.lower()) if t]
         n_docs, n_tokens = expect.get(split, (0, 0))
@@ -246,7 +254,7 @@ def test_data_split_matches_python_hash_assignment(spark):
 
     got = {
         r["split"]: (r["n_docs"], r["n_tokens"])
-        for r in DQ.q_data_split(spark, SF_DIR).collect()
+        for r in q_data_split(spark, SF_DIR).collect()
     }
     assert got == expect
     assert got["train"][0] > got["val"][0]
@@ -273,7 +281,7 @@ def test_oov_rate_matches_python_coverage(spark):
         lang_of[doc_id] = lang
         for t in set(toks):
             df[t] = df.get(t, 0) + 1
-    vocab = {t for t, d in df.items() if d >= DQ._OOV_MIN_DF}
+    vocab = {t for t, d in df.items() if d >= _OOV_MIN_DF}
     per_lang = {}
     for doc_id, toks in doc_toks.items():
         oov = sum(1 for t in toks if t not in vocab) / len(toks)
@@ -285,7 +293,7 @@ def test_oov_rate_matches_python_coverage(spark):
 
     got = {
         r["lang"]: (r["n_docs"], r["avg_oov"])
-        for r in DQ.q_oov_rate(spark, SF_DIR).collect()
+        for r in q_oov_rate(spark, SF_DIR).collect()
     }
     assert got == expect
     # a df-10 vocab on a Zipf corpus must cover most tokens

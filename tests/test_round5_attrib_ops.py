@@ -7,7 +7,10 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import (
+    q_unimax_allocation, _UNIMAX_BUDGET_DEN, _UNIMAX_BUDGET_NUM,
+    _UNIMAX_EPOCHS,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,10 +31,10 @@ def test_unimax_allocation_matches_twin(spark):
     for _d, t, l, _s in _docs():
         per[l] += len(_tok(t))
     total = sum(per.values())
-    b = total * DQ._UNIMAX_BUDGET_NUM // DQ._UNIMAX_BUDGET_DEN
+    b = total * _UNIMAX_BUDGET_NUM // _UNIMAX_BUDGET_DEN
     langs = sorted(per, key=lambda x: (per[x], x))
     L = len(langs)
-    caps = {x: per[x] * DQ._UNIMAX_EPOCHS for x in langs}
+    caps = {x: per[x] * _UNIMAX_EPOCHS for x in langs}
     pfx, capped = 0, {}
     for r, x in enumerate(langs, start=1):
         capped[x] = caps[x] * (L - r + 1) <= b - pfx
@@ -46,7 +49,7 @@ def test_unimax_allocation_matches_twin(spark):
                    b - pfx - tau * nu)
     got = {
         r.lang: (r.n_tokens, r.cap, r.alloc, r.epochs, r.leftover)
-        for r in DQ.q_unimax_allocation(spark, SF_DIR).collect()
+        for r in q_unimax_allocation(spark, SF_DIR).collect()
     }
     assert got == want
     # budget accounting: allocations + leftover = budget exactly

@@ -6,7 +6,7 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ann import q_knn_hubness, _RNN_K
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -29,7 +29,7 @@ def test_knn_hubness_matches_twin(spark):
             )
             cand.append((c, vb))
         for _c, vb in sorted(cand, key=lambda r: (-r[0], r[1]))[
-            : DQ._RNN_K
+            : _RNN_K
         ]:
             nk[vb] += 1
     vals = [nk.get(v, 0) for v, _e in rows]
@@ -43,10 +43,10 @@ def test_knn_hubness_matches_twin(spark):
         hist[x] += 1
     got = {
         r.nk: (r.n_vectors, r.skewness)
-        for r in DQ.q_knn_hubness(spark, SF_DIR).collect()
+        for r in q_knn_hubness(spark, SF_DIR).collect()
     }
     assert {k: v for k, (v, _s) in got.items()} == dict(hist)
     for _k, (_v, s) in got.items():
         assert abs(s - skew) < 1e-3
     # mean N_k is exactly k: every vector casts k votes
-    assert abs(m - DQ._RNN_K) < 1e-9
+    assert abs(m - _RNN_K) < 1e-9

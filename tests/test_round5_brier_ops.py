@@ -1,6 +1,8 @@
 """Pure-Python twin for round-5 batch 32: brier_decomposition."""
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import (
+    q_brier_decomposition, q_gopher_quality, q_quality_classifier,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -8,11 +10,11 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_brier_decomposition_matches_twin(spark):
     score = {
         r.doc_id: r.p_keep
-        for r in DQ.q_quality_classifier(spark, SF_DIR).collect()
+        for r in q_quality_classifier(spark, SF_DIR).collect()
     }
     label = {
         r.doc_id: int(r.keep)
-        for r in DQ.q_gopher_quality(spark, SF_DIR).collect()
+        for r in q_gopher_quality(spark, SF_DIR).collect()
     }
     rows = [(score[d], label[d]) for d in score]
     n = len(rows)
@@ -33,7 +35,7 @@ def test_brier_decomposition_matches_twin(spark):
         for v in bins.values()
     )
     unc = ybar * (1 - ybar)
-    r = DQ.q_brier_decomposition(spark, SF_DIR).collect()[0]
+    r = q_brier_decomposition(spark, SF_DIR).collect()[0]
     assert r.n_docs == n
     assert abs(r.brier - brier) < 1e-3
     assert abs(r.reliability - rel) < 1e-3

@@ -2,7 +2,9 @@
 source_overlap_matrix, dedup_keeper_policy."""
 
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import (
+    q_classifier_gains, q_gopher_quality, q_quality_classifier,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -10,11 +12,11 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_classifier_gains_matches_twin(spark):
     score = {
         r.doc_id: r.p_keep
-        for r in DQ.q_quality_classifier(spark, SF_DIR).collect()
+        for r in q_quality_classifier(spark, SF_DIR).collect()
     }
     label = {
         r.doc_id: int(r.keep)
-        for r in DQ.q_gopher_quality(spark, SF_DIR).collect()
+        for r in q_gopher_quality(spark, SF_DIR).collect()
     }
     ranked = sorted(score, key=lambda d: (-score[d], d))
     n = len(ranked)
@@ -23,7 +25,7 @@ def test_classifier_gains_matches_twin(spark):
     for i in range(10):
         sz = base + (1 if i < extra else 0)
         deciles.append(sz)
-    got = DQ.q_classifier_gains(spark, SF_DIR).collect()
+    got = q_classifier_gains(spark, SF_DIR).collect()
     assert [r.decile for r in got] == list(range(1, 11))
     tp = sum(label.values())
     idx = 0

@@ -8,7 +8,11 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import B, K1
+from search_engine_spark.catalog.dedup import (
+    _CHAIN_TOPK, _LSH_BAND_CAP, _LSH_TRUE_TAU, q_dedup_chain_drift,
+    q_dedup_rank_impact, _RANKIMPACT_K, _RANKIMPACT_TERMS, _SHINGLE_DF_CAP,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -41,7 +45,7 @@ def _lsh_clusters(sh):
             bands[sig].add(d)
     adj = defaultdict(set)
     for members in bands.values():
-        if len(members) > DQ._LSH_BAND_CAP:
+        if len(members) > _LSH_BAND_CAP:
             continue
         ms = sorted(members)
         for i, a in enumerate(ms):
@@ -75,7 +79,7 @@ def test_dedup_chain_drift_matches_twin(spark):
     for s in sh.values():
         df.update(s)
     capped = {
-        d: {g for g in s if df[g] <= DQ._SHINGLE_DF_CAP}
+        d: {g for g in s if df[g] <= _SHINGLE_DF_CAP}
         for d, s in sh.items()
     }
     members = defaultdict(list)
@@ -91,18 +95,18 @@ def test_dedup_chain_drift_matches_twin(spark):
                 js.append(
                     inter / len(capped[a] | capped[b]) if inter else 0.0
                 )
-        below = sum(1 for j in js if j < DQ._LSH_TRUE_TAU)
+        below = sum(1 for j in js if j < _LSH_TRUE_TAU)
         rows.append((c, len(ms), len(js), min(js),
                      sum(js) / len(js), below / len(js)))
     rows.sort(key=lambda r: (-r[1], r[0]))
     expected = [
         (c, n, p, round(mn, 4), round(me, 4), round(fb, 4))
-        for c, n, p, mn, me, fb in rows[:DQ._CHAIN_TOPK]
+        for c, n, p, mn, me, fb in rows[:_CHAIN_TOPK]
     ]
     got = [
         (r.cluster, r.n_members, r.n_pairs, r.min_jaccard,
          r.mean_jaccard, r.frac_below_tau)
-        for r in DQ.q_dedup_chain_drift(spark, SF_DIR).collect()
+        for r in q_dedup_chain_drift(spark, SF_DIR).collect()
     ]
     assert got == expected
     # the audit's invariants: min <= mean, fractions in [0, 1]
@@ -126,8 +130,8 @@ def _bm25_topk(doc_terms, terms, k):
         dfv = len(tf[t])
         for d, f in tf[t].items():
             idf = math.log((n - dfv + 0.5) / (dfv + 0.5) + 1.0)
-            s = idf * (f * (DQ.K1 + 1.0)) / (
-                f + DQ.K1 * (1.0 - DQ.B + DQ.B * dl[d] / avgdl)
+            s = idf * (f * (K1 + 1.0)) / (
+                f + K1 * (1.0 - B + B * dl[d] / avgdl)
             )
             scored.append((round(s, 4), d))
         scored.sort(key=lambda x: (-x[0], x[1]))
@@ -145,7 +149,7 @@ def test_dedup_rank_impact_matches_twin(spark):
     for toks in doc_terms.values():
         dfc.update(set(toks))
     top = sorted(dfc.items(), key=lambda kv: (-kv[1], kv[0]))
-    terms = [t for t, _c in top[:DQ._RANKIMPACT_TERMS]]
+    terms = [t for t, _c in top[:_RANKIMPACT_TERMS]]
 
     sh = _shingle_sets(docs)
     lbl = _lsh_clusters(sh)
@@ -153,14 +157,14 @@ def test_dedup_rank_impact_matches_twin(spark):
     keep_terms = {
         d: toks for d, toks in doc_terms.items() if d not in dropped
     }
-    full_top = _bm25_topk(doc_terms, terms, DQ._RANKIMPACT_K)
-    keep_top = _bm25_topk(keep_terms, terms, DQ._RANKIMPACT_K)
-    got = DQ.q_dedup_rank_impact(spark, SF_DIR).collect()
+    full_top = _bm25_topk(doc_terms, terms, _RANKIMPACT_K)
+    keep_top = _bm25_topk(keep_terms, terms, _RANKIMPACT_K)
+    got = q_dedup_rank_impact(spark, SF_DIR).collect()
     assert [r.term for r in got] == sorted(terms)
     for r in got:
         ov = len(set(full_top[r.term]) & set(keep_top[r.term]))
         rm = sum(1 for d in full_top[r.term] if d in dropped)
         assert (r.overlap_at_k, r.n_removed_by_dedup) == (ov, rm)
         # every removed doc is an overlap opportunity lost
-        assert r.overlap_at_k <= DQ._RANKIMPACT_K - 0  # bounded
-        assert r.overlap_at_k + r.n_removed_by_dedup <= DQ._RANKIMPACT_K
+        assert r.overlap_at_k <= _RANKIMPACT_K - 0  # bounded
+        assert r.overlap_at_k + r.n_removed_by_dedup <= _RANKIMPACT_K

@@ -6,7 +6,7 @@ from collections import Counter
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import B, K1, q_bm25_and, q_bm25_explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -34,8 +34,8 @@ def test_bm25_explain_matches_twin(spark):
         if not f:
             return None
         idf = math.log((n - df[term] + 0.5) / (df[term] + 0.5) + 1.0)
-        return idf * (f * (DQ.K1 + 1.0)) / (
-            f + DQ.K1 * (1.0 - DQ.B + DQ.B * dl[d] / avgdl)
+        return idf * (f * (K1 + 1.0)) / (
+            f + K1 * (1.0 - B + B * dl[d] / avgdl)
         )
 
     both = [
@@ -46,7 +46,7 @@ def test_bm25_explain_matches_twin(spark):
         d: round(score("merge", d) + score("join", d), 4) for d in both
     }
     top = sorted(both, key=lambda d: (-totals[d], d))[:10]
-    got = DQ.q_bm25_explain(spark, SF_DIR).collect()
+    got = q_bm25_explain(spark, SF_DIR).collect()
     assert len(got) == 2 * len(top)
     for r in got:
         d = top[r.rank - 1]
@@ -65,7 +65,7 @@ def test_bm25_explain_matches_twin(spark):
         assert abs(sum(shares) - 1.0) < 5e-3
     and_top = {
         r.doc_id: r.score
-        for r in DQ.q_bm25_and(spark, SF_DIR).collect()
+        for r in q_bm25_and(spark, SF_DIR).collect()
     }
     for r in got:
         assert and_top[r.doc_id] == r.doc_score

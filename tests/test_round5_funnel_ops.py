@@ -6,7 +6,9 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.dedup import (
+    _DEDUP_TAUS, q_dedup_threshold_sensitivity, _SHINGLE_DF_CAP,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,7 +26,7 @@ def test_dedup_threshold_sensitivity_matches_twin(spark):
     for s in sh.values():
         df.update(s)
     capped = {
-        d: {g for g in s if df[g] <= DQ._SHINGLE_DF_CAP}
+        d: {g for g in s if df[g] <= _SHINGLE_DF_CAP}
         for d, s in sh.items()
     }
     ids = sorted(sh)
@@ -34,8 +36,8 @@ def test_dedup_threshold_sensitivity_matches_twin(spark):
             inter = len(capped[da] & capped[db])
             if inter:
                 pair_j[(da, db)] = inter / len(capped[da] | capped[db])
-    got = DQ.q_dedup_threshold_sensitivity(spark, SF_DIR).collect()
-    assert [r.tau for r in got] == list(DQ._DEDUP_TAUS)
+    got = q_dedup_threshold_sensitivity(spark, SF_DIR).collect()
+    assert [r.tau for r in got] == list(_DEDUP_TAUS)
     maxj = defaultdict(float)
     for (da, db), j in pair_j.items():
         maxj[da] = max(maxj[da], j)

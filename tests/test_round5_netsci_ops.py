@@ -5,7 +5,7 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.graph import _PR_RULES, q_lang_homophily
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,7 +20,7 @@ def _docs():
 def _edges(n):
     edges = set()
     for i in range(n):
-        for m, b in DQ._PR_RULES:
+        for m, b in _PR_RULES:
             d = (m * i + b) % n
             if d != i:
                 edges.add((i, d))
@@ -41,7 +41,7 @@ def test_lang_homophily_matches_twin(spark):
         (na[l] / m) * (nb.get(l, 0) / m) for l in na
     )
     r = (same / m - eab) / (1.0 - eab)
-    row = DQ.q_lang_homophily(spark, SF_DIR).collect()[0]
+    row = q_lang_homophily(spark, SF_DIR).collect()[0]
     assert row.n_edges == m and row.n_same_lang == same
     assert row.observed == round(same / m, 4)
     assert abs(row.expected - eab) < 1e-4

@@ -4,7 +4,7 @@ import math
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ann import _PCA_ITERS, q_pca_top_component
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -26,7 +26,7 @@ def test_pca_top_component_matches_twin(spark):
         for i in range(d)
     ]
     v = [1.0] * d
-    for _ in range(DQ._PCA_ITERS):
+    for _ in range(_PCA_ITERS):
         w = [sum(cov[i][j] * v[j] for j in range(d)) for i in range(d)]
         z = math.sqrt(sum(x * x for x in w))
         v = [x / z for x in w]
@@ -34,7 +34,7 @@ def test_pca_top_component_matches_twin(spark):
     lam = sum(cv[i] * v[i] for i in range(d))
     res = math.sqrt(sum((cv[i] - lam * v[i]) ** 2 for i in range(d)))
     tr = sum(cov[i][i] for i in range(d))
-    r = DQ.q_pca_top_component(spark, SF_DIR).collect()[0]
+    r = q_pca_top_component(spark, SF_DIR).collect()[0]
     assert (r.n_vecs, r.n_dims) == (n, d)
     assert abs(r.top_eigenvalue - lam) < 1e-3
     assert abs(r.trace - tr) < 1e-3

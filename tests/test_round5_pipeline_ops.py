@@ -7,7 +7,12 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import q_skip_cost_model, _SKIP_PAIRS
+from search_engine_spark.catalog.quality import (
+    _EN_STOPS, _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL,
+    _GOPHER_MIN_STOPS, _GOPHER_MIN_WORDS, q_gopher_quality,
+    q_perplexity_buckets,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -33,7 +38,7 @@ def test_skip_cost_model_matches_twin(spark):
         for t in set(ts):
             dfs[t] += 1
     want = []
-    for qa, qb in sorted(DQ._SKIP_PAIRS):
+    for qa, qb in sorted(_SKIP_PAIRS):
         a, b = dfs[qa], dfs[qb]
         p, l = min(a, b), max(a, b)
         s = math.ceil(math.sqrt(l))
@@ -43,7 +48,7 @@ def test_skip_cost_model_matches_twin(spark):
             (qa, qb, a, b, a + b, s, skip, opt,
              round(1.0 - skip / (a + b), 4), round(1.0 - opt / (a + b), 4))
         )
-    got = [tuple(r) for r in DQ.q_skip_cost_model(spark, SF_DIR).collect()]
+    got = [tuple(r) for r in q_skip_cost_model(spark, SF_DIR).collect()]
     assert got == want
     for row in got:
         # the optimal skip length can never cost more than the fixed one
@@ -92,7 +97,7 @@ def test_perplexity_buckets_matches_twin(spark):
         c[3] = max(c[3], x)
     got = {
         r.bucket: [r.n_docs, r.n_tokens, r.min_xent, r.max_xent]
-        for r in DQ.q_perplexity_buckets(spark, SF_DIR).collect()
+        for r in q_perplexity_buckets(spark, SF_DIR).collect()
     }
     assert got == want
     # the CCNet partition is a partition: thirds cover the corpus
@@ -105,7 +110,7 @@ def test_perplexity_buckets_matches_twin(spark):
 # ---------------------------------------------------------------------------
 
 def test_gopher_quality_matches_twin(spark):
-    stops = {s.strip("'") for s in DQ._EN_STOPS.strip("()").split(",")}
+    stops = {s.strip("'") for s in _EN_STOPS.strip("()").split(",")}
     want = {}
     for d, ts in _toks().items():
         if not ts:
@@ -114,19 +119,19 @@ def test_gopher_quality_matches_twin(spark):
         chars = sum(len(t) for t in ts)
         alpha = sum(1 for t in ts if re.search(r"[a-z]", t))
         nstop = sum(1 for t in ts if t in stops)
-        ok_w = DQ._GOPHER_MIN_WORDS <= n <= DQ._GOPHER_MAX_WORDS
+        ok_w = _GOPHER_MIN_WORDS <= n <= _GOPHER_MAX_WORDS
         ok_m = (
-            chars * 10 >= int(DQ._GOPHER_MIN_MWL * 10) * n
-            and chars * 10 <= int(DQ._GOPHER_MAX_MWL * 10) * n
+            chars * 10 >= int(_GOPHER_MIN_MWL * 10) * n
+            and chars * 10 <= int(_GOPHER_MAX_MWL * 10) * n
         )
         ok_a = alpha * 5 >= n * 4
-        ok_s = nstop >= DQ._GOPHER_MIN_STOPS
+        ok_s = nstop >= _GOPHER_MIN_STOPS
         want[d] = (n, ok_w, ok_m, ok_a, ok_s,
                    ok_w and ok_m and ok_a and ok_s)
     got = {
         r.doc_id: (r.n_words, r.ok_words, r.ok_mean_len, r.ok_alpha,
                    r.ok_stops, r.keep)
-        for r in DQ.q_gopher_quality(spark, SF_DIR).collect()
+        for r in q_gopher_quality(spark, SF_DIR).collect()
     }
     assert got == want
     # the battery must actually discriminate on this corpus

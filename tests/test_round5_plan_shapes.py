@@ -6,7 +6,7 @@ bare CartesianProduct appears anywhere."""
 import contextlib
 import io
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import q_unimax_allocation
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -25,6 +25,6 @@ def _no_cartesian(plan: str) -> bool:
 def test_unimax_allocation_single_token_aggregate(spark):
     """The planner's corpus-scale work is exactly one token count per
     language; everything after runs over the |langs|-row table."""
-    plan = _explain(DQ.q_unimax_allocation(spark, SF_DIR))
+    plan = _explain(q_unimax_allocation(spark, SF_DIR))
     assert _no_cartesian(plan)
     assert "BroadcastExchange" in plan      # totals/agg sides

@@ -6,7 +6,7 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import q_token_fertility
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -25,7 +25,7 @@ def test_token_fertility_matches_twin(spark):
         a[1] += ws
         a[2] += bpe
         a[3] += len(txt)
-    got = DQ.q_token_fertility(spark, SF_DIR).collect()
+    got = q_token_fertility(spark, SF_DIR).collect()
     assert [r.lang for r in got] == sorted(agg)
     for r in got:
         n, ws, bpe, ch = agg[r.lang]

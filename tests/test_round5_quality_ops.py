@@ -8,7 +8,12 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import q_index_size_breakdown
+from search_engine_spark.catalog.quality import (
+    _CAL_BINS, _EN_STOPS, _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL,
+    _GOPHER_MIN_STOPS, _GOPHER_MIN_WORDS, _LANG_WORDS, q_calibration_curve,
+    q_lang_confusion, _QC_BIAS, _QC_W_LEN, _QC_W_STOP, _QC_W_TTR,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,7 +63,7 @@ def test_index_size_breakdown_matches_twin(spark):
     }
     got = {
         r.component: (r.bytes, r.share)
-        for r in DQ.q_index_size_breakdown(spark, SF_DIR).collect()
+        for r in q_index_size_breakdown(spark, SF_DIR).collect()
     }
     assert got == want
     # every occurrence pays a position byte; docids/tfs pay per posting —
@@ -67,7 +72,7 @@ def test_index_size_breakdown_matches_twin(spark):
 
 
 def _features():
-    stops = {s.strip("'") for s in DQ._EN_STOPS.strip("()").split(",")}
+    stops = {s.strip("'") for s in _EN_STOPS.strip("()").split(",")}
     out = {}
     for d, t, _l in _docs():
         ts = _tok(t)
@@ -79,18 +84,18 @@ def _features():
         alpha = sum(1 for x in ts if re.search(r"[a-z]", x))
         ttr = len(set(ts)) / n
         z = (
-            DQ._QC_W_LEN * (chars / n)
-            + DQ._QC_W_STOP * (stopn / n)
-            + DQ._QC_W_TTR * ttr
-            + DQ._QC_BIAS
+            _QC_W_LEN * (chars / n)
+            + _QC_W_STOP * (stopn / n)
+            + _QC_W_TTR * ttr
+            + _QC_BIAS
         )
         p = round(1.0 / (1.0 + math.exp(-z)), 4)
         keep = (
-            DQ._GOPHER_MIN_WORDS <= n <= DQ._GOPHER_MAX_WORDS
-            and chars * 10 >= int(DQ._GOPHER_MIN_MWL * 10) * n
-            and chars * 10 <= int(DQ._GOPHER_MAX_MWL * 10) * n
+            _GOPHER_MIN_WORDS <= n <= _GOPHER_MAX_WORDS
+            and chars * 10 >= int(_GOPHER_MIN_MWL * 10) * n
+            and chars * 10 <= int(_GOPHER_MAX_MWL * 10) * n
             and alpha * 5 >= n * 4
-            and stopn >= DQ._GOPHER_MIN_STOPS
+            and stopn >= _GOPHER_MIN_STOPS
         )
         out[d] = (p, 1 if keep else 0)
     return out
@@ -101,13 +106,13 @@ def test_calibration_curve_matches_twin(spark):
     N = len(feats)
     bins = defaultdict(lambda: [0, 0.0, 0])
     for p, y in feats.values():
-        b = min(int(p * DQ._CAL_BINS), DQ._CAL_BINS - 1)
+        b = min(int(p * _CAL_BINS), _CAL_BINS - 1)
         bins[b][0] += 1
         bins[b][1] += p
         bins[b][2] += y
     got = {
         r.bin: (r.n, r.mean_conf, r.frac_pos, r.ece_part)
-        for r in DQ.q_calibration_curve(spark, SF_DIR).collect()
+        for r in q_calibration_curve(spark, SF_DIR).collect()
     }
     assert set(got) == set(bins)
     for b, (n, sp, sy) in bins.items():
@@ -130,7 +135,7 @@ def test_lang_confusion_matches_twin(spark):
         ts = _tok(t)
         counts = {
             lang: sum(1 for x in ts if x in set(ws))
-            for lang, ws in DQ._LANG_WORDS.items()
+            for lang, ws in _LANG_WORDS.items()
         }
         en, de, fr = counts.get("en", 0), counts.get("de", 0), counts.get("fr", 0)
         if en >= de and en >= fr and en > 0:
@@ -149,7 +154,7 @@ def test_lang_confusion_matches_twin(spark):
     }
     got = {
         (r.true_lang, r.pred_lang): (r.n, r.frac_of_true)
-        for r in DQ.q_lang_confusion(spark, SF_DIR).collect()
+        for r in q_lang_confusion(spark, SF_DIR).collect()
     }
     assert got == want
     # rows of the matrix partition each true class exactly

@@ -7,7 +7,9 @@ Explain-only: these tests never execute the plans."""
 import contextlib
 import io
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.dedup import q_dedup_threshold_sensitivity
+from search_engine_spark.catalog.ann import q_embedding_anisotropy
+from search_engine_spark.catalog.quality import q_token_fertility
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -26,13 +28,13 @@ def _no_cartesian(plan: str) -> bool:
 def test_embedding_anisotropy_is_join_free(spark):
     """The n^2-pair statistic must be computed WITHOUT any join — the
     whole point of the sum-vector identity."""
-    plan = _explain(DQ.q_embedding_anisotropy(spark, SF_DIR))
+    plan = _explain(q_embedding_anisotropy(spark, SF_DIR))
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert _no_cartesian(plan)
 
 
 def test_token_fertility_is_join_free(spark):
-    plan = _explain(DQ.q_token_fertility(spark, SF_DIR))
+    plan = _explain(q_token_fertility(spark, SF_DIR))
     assert "Join" not in plan
     assert _no_cartesian(plan)
 
@@ -40,6 +42,6 @@ def test_token_fertility_is_join_free(spark):
 def test_dedup_threshold_sweep_broadcasts_taus(spark):
     """The tau sweep must broadcast the 8-row threshold table over the
     bounded pair set."""
-    plan = _explain(DQ.q_dedup_threshold_sensitivity(spark, SF_DIR))
+    plan = _explain(q_dedup_threshold_sensitivity(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert _no_cartesian(plan)

@@ -6,7 +6,10 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ann import q_embedding_drift
+from search_engine_spark.catalog.graph import (
+    _COND_TOPK, _LPA_ITERS, q_community_conductance,
+)
 from tests.test_round5_drift_graph_ops import _und_edges_and_nodes
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -18,7 +21,7 @@ def _lpa_labels(nodes, und):
         nbrs[lo].add(hi)
         nbrs[hi].add(lo)
     lbl = {i: i for i in nodes}
-    for _ in range(DQ._LPA_ITERS):
+    for _ in range(_LPA_ITERS):
         new = {}
         for i in nodes:
             if not nbrs[i]:
@@ -50,11 +53,11 @@ def test_community_conductance_matches_twin(spark):
     per.sort(key=lambda r: (-r[1], r[0]))
     expected = [
         (c, n, v, k, round(k / min(v, 2 * m - v), 4))
-        for c, n, v, k in per[:DQ._COND_TOPK]
+        for c, n, v, k in per[:_COND_TOPK]
     ]
     got = [
         (r.community, r.n_nodes, r.vol, r.cut, r.conductance)
-        for r in DQ.q_community_conductance(spark, SF_DIR).collect()
+        for r in q_community_conductance(spark, SF_DIR).collect()
     ]
     assert got == expected
     # conductance is a fraction of the smaller side's volume
@@ -77,7 +80,7 @@ def test_embedding_drift_matches_twin(spark):
             sums[k] = list(e)
         else:
             sums[k] = [a + b for a, b in zip(sums[k], e)]
-    got = DQ.q_embedding_drift(spark, SF_DIR).collect()
+    got = q_embedding_drift(spark, SF_DIR).collect()
     labels = sorted({lab for lab, _h in counts})
     assert [r.label for r in got] == labels
     for r in got:

@@ -5,7 +5,7 @@ import math
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ann import q_embedding_anisotropy
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,7 +24,7 @@ def test_embedding_anisotropy_matches_twin(spark):
     n, d = len(units), len(units[0])
     ssum = [sum(u[i] for u in units) for i in range(d)]
     mean_cos = (sum(s * s for s in ssum) - n) / (n * (n - 1))
-    r = DQ.q_embedding_anisotropy(spark, SF_DIR).collect()[0]
+    r = q_embedding_anisotropy(spark, SF_DIR).collect()[0]
     assert (r.n_vecs, r.n_dims) == (n, d)
     assert abs(r.mean_pairwise_cos - mean_cos) < 1e-3
     # identity check against a brute-force O(n^2) computation on a slice

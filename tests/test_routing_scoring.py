@@ -8,7 +8,9 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    q_wand_prune_stats, _WAND_BLOCK, _WAND_K, _WAND_PAIRS,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -32,7 +34,7 @@ def test_wand_prune_is_lossless(spark):
     dl = {d: len(toks) for d, (toks, _s) in docs.items()}
     n = len(docs)
     avgdl = sum(dl.values()) / n
-    terms = sorted({t for p in DQ._WAND_PAIRS for t in p})
+    terms = sorted({t for p in _WAND_PAIRS for t in p})
     df = Counter()
     for c in tf.values():
         for t in terms:
@@ -50,28 +52,28 @@ def test_wand_prune_is_lossless(spark):
 
     got = {
         r.pair: (r.theta, r.n_candidates, r.n_pruned, r.prune_pct)
-        for r in DQ.q_wand_prune_stats(spark, SF_DIR).collect()
+        for r in q_wand_prune_stats(spark, SF_DIR).collect()
     }
-    assert set(got) == {f"{a}+{b}" for a, b in DQ._WAND_PAIRS}
-    for a, b in DQ._WAND_PAIRS:
+    assert set(got) == {f"{a}+{b}" for a, b in _WAND_PAIRS}
+    for a, b in _WAND_PAIRS:
         tot = {}
         for d in tf:
             s = sum(x for x in (bm25(a, d), bm25(b, d)) if x is not None)
             if s:
                 tot[d] = s
-        top = sorted(tot.items(), key=lambda kv: (-kv[1], kv[0]))[: DQ._WAND_K]
+        top = sorted(tot.items(), key=lambda kv: (-kv[1], kv[0]))[: _WAND_K]
         theta = min(s for _d, s in top)
         bmax = defaultdict(float)
         for d, s_tot in tot.items():
-            blk = d // DQ._WAND_BLOCK
+            blk = d // _WAND_BLOCK
             for t in (a, b):
                 s = bm25(t, d)
                 if s is not None:
                     bmax[(t, blk)] = max(bmax[(t, blk)], s)
         pruned = [
             d for d in tot
-            if bmax.get((a, d // DQ._WAND_BLOCK), 0.0)
-            + bmax.get((b, d // DQ._WAND_BLOCK), 0.0) < theta
+            if bmax.get((a, d // _WAND_BLOCK), 0.0)
+            + bmax.get((b, d // _WAND_BLOCK), 0.0) < theta
         ]
         g_theta, g_cand, g_pruned, g_pct = got[f"{a}+{b}"]
         assert g_theta == theta

@@ -3,7 +3,9 @@ cleanup stages of a training-data pipeline.  The sf corpus contains no PII,
 so the scrub behavior is validated here on fixture docs that do."""
 
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import (
+    q_domain_mix, q_dsir_select, q_pii_scrub, q_stratified_sample, _SAMPLE_MOD,
+)
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -19,8 +21,8 @@ def test_stratified_sample_deterministic_and_weighted(spark, tmp_path):
         for i in range(400)
     ]
     sf = _write_docs(spark, tmp_path, rows)
-    a = {r["doc_id"]: r for r in DQ.q_stratified_sample(spark, sf).collect()}
-    b = {r["doc_id"]: r for r in DQ.q_stratified_sample(spark, sf).collect()}
+    a = {r["doc_id"]: r for r in q_stratified_sample(spark, sf).collect()}
+    b = {r["doc_id"]: r for r in q_stratified_sample(spark, sf).collect()}
     assert a.keys() == b.keys()          # pure function of doc_id: reproducible
     # non-en kept in full, en downsampled to ~rate (hash is uniform-ish)
     n_fr = sum(1 for r in a.values() if r["lang"] == "fr")
@@ -31,7 +33,7 @@ def test_stratified_sample_deterministic_and_weighted(spark, tmp_path):
         assert r["weight"] == (round(1 / 0.3, 4) if r["lang"] == "en" else 1.0)
     # the decision matches the documented hash exactly
     for i in range(0, 400, 2):
-        keep = (i * 2654435761) % DQ._SAMPLE_MOD < 0.3 * DQ._SAMPLE_MOD
+        keep = (i * 2654435761) % _SAMPLE_MOD < 0.3 * _SAMPLE_MOD
         assert (i in a) == keep
 
 
@@ -39,7 +41,7 @@ def test_domain_mix_shares_and_weights(spark, tmp_path):
     rows = [(i, " ".join(["w"] * (10 if i % 4 == 0 else 5)),
              "en", f"src{i % 4}") for i in range(80)]
     sf = _write_docs(spark, tmp_path, rows)
-    out = {r["source"]: r for r in DQ.q_domain_mix(spark, sf).collect()}
+    out = {r["source"]: r for r in q_domain_mix(spark, sf).collect()}
     assert set(out) == {"src0", "src1", "src2", "src3"}
     total = sum(r["n_tokens"] for r in out.values())
     assert total == 20 * 10 + 60 * 5
@@ -61,7 +63,7 @@ def test_pii_scrub_redacts(spark, tmp_path):
         (3, "mixed: eve@corp.com and 123-456-7890", "en", "s"),
     ]
     sf = _write_docs(spark, tmp_path, rows)
-    out = {r["doc_id"]: r for r in DQ.q_pii_scrub(spark, sf).collect()}
+    out = {r["doc_id"]: r for r in q_pii_scrub(spark, sf).collect()}
     assert (out[0]["n_emails"], out[0]["n_phones"]) == (2, 0)
     assert (out[1]["n_emails"], out[1]["n_phones"]) == (0, 2)
     assert (out[2]["n_emails"], out[2]["n_phones"]) == (0, 0)
@@ -88,7 +90,7 @@ def test_dsir_select_prefers_target_like_docs(spark, tmp_path):
         (3, "bird bird bird", "en", "src2"),       # raw-only, OOV for target
     ]
     sf = _write_docs(spark, tmp_path, rows)
-    out = DQ.q_dsir_select(spark, sf).collect()
+    out = q_dsir_select(spark, sf).collect()
     got = {r["doc_id"]: r for r in out}
     assert set(got) == {0, 1, 2, 3}                # K=50 > corpus: all ranked
 

@@ -5,7 +5,10 @@ import math
 import re
 from collections import Counter
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.dedup import (
+    q_dedup_keep, q_doc_similarity, q_dup_spans, _SIM_QUERY_DOC,
+)
+from search_engine_spark.catalog.quality import q_pmi_bigrams
 
 
 def _toks(text):
@@ -46,7 +49,7 @@ def test_pmi_bigrams_matches_hand_model(spark, tmp_path):
     ).write.parquet(f"{tmp_path}/documents.parquet")
     got = [
         (r["term_a"], r["term_b"], r["c_ab"], r["pmi"])
-        for r in DQ.q_pmi_bigrams(spark, str(tmp_path)).collect()
+        for r in q_pmi_bigrams(spark, str(tmp_path)).collect()
     ]
     want = _pmi_expected(texts)
     assert got == want
@@ -55,7 +58,7 @@ def test_pmi_bigrams_matches_hand_model(spark, tmp_path):
 
 def test_doc_similarity_ranks_identical_doc_first(spark, tmp_path):
     rows = [
-        (DQ._SIM_QUERY_DOC, "apple banana cherry", "en", "s"),
+        (_SIM_QUERY_DOC, "apple banana cherry", "en", "s"),
         (1, "apple banana cherry", "en", "s"),     # identical -> cos 1.0
         (2, "apple banana dog", "en", "s"),        # partial overlap
         (3, "egg fig grape", "en", "s"),           # disjoint -> absent
@@ -63,7 +66,7 @@ def test_doc_similarity_ranks_identical_doc_first(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
-    got = DQ.q_doc_similarity(spark, str(tmp_path)).collect()
+    got = q_doc_similarity(spark, str(tmp_path)).collect()
     by_id = {r["doc_id"]: r["cos"] for r in got}
     assert by_id[1] == 1.0
     assert 3 not in by_id                      # no shared terms, no candidate
@@ -82,7 +85,7 @@ def test_dedup_keep_keeps_one_representative(spark, tmp_path):
         f"{tmp_path}/documents.parquet"
     )
     kept = sorted(
-        r["doc_id"] for r in DQ.q_dedup_keep(spark, str(tmp_path)).collect()
+        r["doc_id"] for r in q_dedup_keep(spark, str(tmp_path)).collect()
     )
     # the near-dup cluster {1000,1001,1002} collapses to its min id
     assert 1000 in kept and 1001 not in kept and 1002 not in kept
@@ -108,9 +111,9 @@ def test_events_topk_window_ranks_within_hour(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     ).write.parquet(f"{tmp_path}/events.parquet")
-    from search_engine_spark import driver_queries as DQ
+    from search_engine_spark.catalog.events import q_events_topk_window
 
-    out = DQ.q_events_topk_window(spark, str(tmp_path)).collect()
+    out = q_events_topk_window(spark, str(tmp_path)).collect()
     h10 = sorted([(r["rk"], r["event_type"], r["total"]) for r in out
                   if r["win"].hour == 10])
     assert h10 == [(1, "a", 30.0), (2, "b", 20.0), (3, "c", 10.0)]
@@ -135,10 +138,10 @@ def test_semantic_dedup_drops_same_cell_neardups(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
-    from search_engine_spark import driver_queries as DQ
+    from search_engine_spark.catalog.ann import q_semantic_dedup
 
     kept = sorted(r["vec_id"] for r in
-                  DQ.q_semantic_dedup(spark, str(tmp_path)).collect())
+                  q_semantic_dedup(spark, str(tmp_path)).collect())
     # the near-dup trio {0,1,9} lands in one IVF cell and collapses to 0
     assert kept == [0, 2, 3, 4, 5, 6, 7, 8]
 
@@ -151,7 +154,7 @@ def test_semantic_dedup_hot_cell_pairs_bounded(spark, tmp_path, monkeypatch):
     representative per sub-bucket."""
     import numpy as np
 
-    from search_engine_spark import driver_queries as DQ
+    from search_engine_spark.catalog import ann
 
     rows = []
     # ids {0, 1, 100..137}: 40 near-identical vectors along axis 0.  Only
@@ -169,8 +172,8 @@ def test_semantic_dedup_hot_cell_pairs_bounded(spark, tmp_path, monkeypatch):
         rows, "vec_id long, embedding array<float>, label int"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
 
-    monkeypatch.setattr(DQ, "_SEMDEDUP_CELL_CAP", 10)
-    pairs = DQ._semantic_pairs(spark, str(tmp_path)).collect()
+    monkeypatch.setattr(ann, "_SEMDEDUP_CELL_CAP", 10)
+    pairs = ann._semantic_pairs(spark, str(tmp_path)).collect()
     m, cap = len(hot), 10
     n_sub = -(-m // cap)                      # ceil(40/10) = 4
     per_bucket = -(-m // n_sub) + 1           # ≤ 11 members per residue
@@ -179,7 +182,7 @@ def test_semantic_dedup_hot_cell_pairs_bounded(spark, tmp_path, monkeypatch):
     assert len(pairs) < m * (m - 1) // 2 / 3  # genuinely sub-quadratic
 
     kept = sorted(r["vec_id"] for r in
-                  DQ.q_semantic_dedup(spark, str(tmp_path)).collect())
+                  ann.q_semantic_dedup(spark, str(tmp_path)).collect())
     # one representative per sub-bucket (vec_id % 4): residue minima are
     # 0, 1, 102, 103; seeds 2..8 are untouched singles
     assert kept == [0, 1, 2, 3, 4, 5, 6, 7, 8, 102, 103]
@@ -191,21 +194,21 @@ def test_ivf_recall_rises_with_nprobe(spark):
     nprobe (candidate supersets can only add exact hits under the shared
     (cos desc, vec_id) comparator) and identically 1.0 once every cell is
     probed (the probe set IS the brute-force candidate set)."""
-    from search_engine_spark import driver_queries as DQ
+    from search_engine_spark.catalog.ann import _IVF_K, ivf_recall, _RECALL_NQ
 
     sf = "/root/testdata/sf0.001"
     by_np = {}
-    for np_ in (1, 2, DQ._IVF_K):
+    for np_ in (1, 2, _IVF_K):
         by_np[np_] = {r["qid"]: r["recall"]
-                      for r in DQ.ivf_recall(spark, sf, nprobe=np_).collect()}
-    assert len(by_np[1]) == DQ._RECALL_NQ
+                      for r in ivf_recall(spark, sf, nprobe=np_).collect()}
+    assert len(by_np[1]) == _RECALL_NQ
     # per-query monotone, not just on average
     for q in by_np[1]:
-        assert by_np[1][q] <= by_np[2][q] <= by_np[DQ._IVF_K][q]
+        assert by_np[1][q] <= by_np[2][q] <= by_np[_IVF_K][q]
     mean1 = sum(by_np[1].values()) / len(by_np[1])
     mean2 = sum(by_np[2].values()) / len(by_np[2])
     assert mean1 < mean2          # single-probe genuinely lossy here
-    assert all(v == 1.0 for v in by_np[DQ._IVF_K].values())
+    assert all(v == 1.0 for v in by_np[_IVF_K].values())
 
 
 def test_lsh_recall_diagnostic(spark, tmp_path):
@@ -213,7 +216,7 @@ def test_lsh_recall_diagnostic(spark, tmp_path):
     against exact capped-shingle Jaccard — near-dup pairs must be counted
     as both true and hit (recall 1.0 here: 1-hash bands always collide on
     high-Jaccard docs sharing a min shingle)."""
-    from search_engine_spark import driver_queries as DQ
+    from search_engine_spark.catalog.dedup import q_lsh_recall
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -225,7 +228,7 @@ def test_lsh_recall_diagnostic(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         f"{tmp_path}/documents.parquet"
     )
-    r = DQ.q_lsh_recall(spark, str(tmp_path)).collect()[0]
+    r = q_lsh_recall(spark, str(tmp_path)).collect()[0]
     assert r["n_true"] >= 3            # the {1,2,3} clique
     assert r["n_hit"] == r["n_true"]   # all true pairs surfaced
     assert r["recall"] == 1.0
@@ -244,7 +247,7 @@ def _winnow_expected(text, w=4):
 
 
 def test_winnow_fingerprints_match_hand_model(spark, tmp_path):
-    from search_engine_spark import driver_queries as DQ
+    from search_engine_spark.catalog.dedup import q_winnow_fingerprints
 
     texts = {
         1: "the quick brown fox jumps over the lazy dog near the river bank",
@@ -260,7 +263,7 @@ def test_winnow_fingerprints_match_hand_model(spark, tmp_path):
         [(i, t) for i, t in texts.items()], "doc_id long, text string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
     got: dict[int, set] = {}
-    for r in DQ.q_winnow_fingerprints(spark, str(tmp_path)).collect():
+    for r in q_winnow_fingerprints(spark, str(tmp_path)).collect():
         got.setdefault(r["doc_id"], set()).add(r["fp"])
     for i, t in texts.items():
         assert got.get(i, set()) == _winnow_expected(t), i
@@ -314,7 +317,7 @@ def test_dup_spans_match_hand_model(spark, tmp_path):
         [(i, t) for i, t in texts.items()], "doc_id long, text string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
     got: dict[int, list] = {}
-    for r in DQ.q_dup_spans(spark, str(tmp_path)).collect():
+    for r in q_dup_spans(spark, str(tmp_path)).collect():
         got.setdefault(r["doc_id"], []).append(
             (r["span_start"], r["span_end"])
         )

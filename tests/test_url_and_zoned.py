@@ -3,7 +3,9 @@ frontier canonicalization): Python brute-force twins + invariants."""
 
 import math
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    q_bm25_zoned, _scored, _tokens, _ZONE_LEN, _ZONE_W, _ZONED_TERMS,
+)
 from search_engine_spark.plans import bm25
 from tests.test_driver_plan_shapes import _explain
 
@@ -11,7 +13,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _brute_zoned(spark):
-    toks = DQ._tokens(spark, SF_DIR).collect()
+    toks = _tokens(spark, SF_DIR).collect()
     dl = {}
     for r in toks:
         dl[r["doc_id"]] = dl.get(r["doc_id"], 0) + 1
@@ -19,8 +21,8 @@ def _brute_zoned(spark):
     avgdl = sum(dl.values()) / n_docs
     wtf = {}
     for r in toks:
-        if r["term"] in DQ._ZONED_TERMS:
-            w = DQ._ZONE_W if r["pos"] <= DQ._ZONE_LEN else 1.0
+        if r["term"] in _ZONED_TERMS:
+            w = _ZONE_W if r["pos"] <= _ZONE_LEN else 1.0
             wtf[(r["term"], r["doc_id"])] = (
                 wtf.get((r["term"], r["doc_id"]), 0.0) + w
             )
@@ -42,7 +44,7 @@ def test_bm25_zoned_matches_brute_force(spark):
     expect = _brute_zoned(spark)
     got = [
         (r["doc_id"], r["score"])
-        for r in DQ.q_bm25_zoned(spark, SF_DIR).collect()
+        for r in q_bm25_zoned(spark, SF_DIR).collect()
     ]
     assert [d for d, _ in got] == [d for d, _ in expect]
     for (gd, gs), (ed, es) in zip(got, expect):
@@ -52,13 +54,13 @@ def test_bm25_zoned_matches_brute_force(spark):
 def test_bm25_zoned_boost_actually_changes_scores(spark):
     """With the zone weight forced to 1.0 the operator must degrade to
     plain BM25 — i.e. the boost is live, not dead code."""
-    plain = DQ._scored(spark, SF_DIR, list(DQ._ZONED_TERMS))
+    plain = _scored(spark, SF_DIR, list(_ZONED_TERMS))
     plain_by_doc = {}
     for r in plain.collect():
         plain_by_doc[r["doc_id"]] = plain_by_doc.get(r["doc_id"], 0.0) + r["score"]
     zoned = {
         r["doc_id"]: r["score"]
-        for r in DQ.q_bm25_zoned(spark, SF_DIR).collect()
+        for r in q_bm25_zoned(spark, SF_DIR).collect()
     }
     # at least one top-10 doc must score strictly higher than plain BM25
     # (any query-term occurrence inside the zone adds weight)
@@ -70,6 +72,6 @@ def test_bm25_zoned_boost_actually_changes_scores(spark):
 
 
 def test_bm25_zoned_plan_broadcasts_stats(spark):
-    plan = _explain(DQ.q_bm25_zoned(spark, SF_DIR))
+    plan = _explain(q_bm25_zoned(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan

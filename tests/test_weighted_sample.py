@@ -4,7 +4,9 @@ import math
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import (
+    q_weighted_sample, _SPLIT_PRIME, _WSAMPLE_K,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -19,7 +21,7 @@ def _rows():
 
 def _key(doc_id, n_chars):
     u = (
-        ((doc_id % DQ._SPLIT_PRIME) * 2654435761) % 1000000 + 0.5
+        ((doc_id % _SPLIT_PRIME) * 2654435761) % 1000000 + 0.5
     ) / 1000000.0
     return round(math.log(u) / max(n_chars, 1), 6)
 
@@ -31,10 +33,10 @@ def test_weighted_sample_matches_python_twin(spark):
             for doc_id, n in _rows()
         ),
         key=lambda r: (-r[2], r[0]),
-    )[: DQ._WSAMPLE_K]
+    )[: _WSAMPLE_K]
     got = [
         (r.doc_id, r.w, r.key)
-        for r in DQ.q_weighted_sample(spark, SF_DIR).collect()
+        for r in q_weighted_sample(spark, SF_DIR).collect()
     ]
     assert got == want
 
@@ -44,8 +46,8 @@ def test_weighted_sample_favors_heavy_docs(spark):
     the defining property of weight-proportional sampling."""
     rows = _rows()
     corpus_mean = sum(max(n, 1) for _d, n in rows) / len(rows)
-    got = DQ.q_weighted_sample(spark, SF_DIR).collect()
-    assert len(got) == DQ._WSAMPLE_K
+    got = q_weighted_sample(spark, SF_DIR).collect()
+    assert len(got) == _WSAMPLE_K
     sample_mean = sum(r.w for r in got) / len(got)
     assert sample_mean > corpus_mean
 
@@ -56,7 +58,7 @@ def test_weighted_sample_plan_is_topk_not_sort(spark):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_weighted_sample(spark, SF_DIR).explain("formatted")
+        q_weighted_sample(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
