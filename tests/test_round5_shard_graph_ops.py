@@ -8,11 +8,25 @@ import duckdb
 
 from search_engine_spark.catalog.ann import q_embedding_drift
 from search_engine_spark.catalog.graph import (
-    _COND_TOPK, _LPA_ITERS, q_community_conductance,
+    _COND_TOPK, _LPA_ITERS, _PR_RULES, q_community_conductance,
 )
-from tests.test_round5_drift_graph_ops import _und_edges_and_nodes
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _und_edges_and_nodes():
+    rows = duckdb.connect().execute(
+        f"SELECT doc_id FROM read_parquet('{SF_DIR}/documents.parquet')"
+    ).fetchall()
+    nodes = sorted(d for (d,) in rows)
+    n = len(nodes)
+    und = set()
+    for i in nodes:
+        for m, b in _PR_RULES:
+            j = (m * i + b) % n
+            if i != j:
+                und.add((min(i, j), max(i, j)))
+    return nodes, und
 
 
 def _lpa_labels(nodes, und):
