@@ -1,5 +1,5 @@
-"""Pure-Python twins for bpe_pairs, ltr_features, and robots_filter —
-independent of both the Spark plans under test and their DuckDB oracles."""
+"""Pure-Python twins for bpe_pairs — independent of both the Spark plan
+under test and its DuckDB oracle."""
 
 import re
 from collections import Counter

@@ -1,4 +1,4 @@
-"""Pure-Python twins for champion_topk, mirror_sources, lang_consistency."""
+"""Pure-Python twins for lang_consistency."""
 
 from collections import Counter
 

@@ -1,6 +1,5 @@
-"""Pure-Python twins for coec_model, adamic_adar, bm25_maxp, and
-curriculum_select, plus plan-shape checks (broadcast prior, capped
-self-join, no global single-task window in the curriculum prefix sum)."""
+"""Pure-Python twins for curriculum_select, plus a plan-shape check (no
+global single-task window in the curriculum prefix sum)."""
 
 import contextlib
 import io

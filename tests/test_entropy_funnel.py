@@ -1,4 +1,4 @@
-"""Pure-Python twins for entropy_quality and event_funnel."""
+"""Pure-Python twins for entropy_quality."""
 
 import math
 import re

@@ -1,6 +1,5 @@
-"""Pure-Python twins for mmr_diversify, hard_negatives, and
-shard_balance, plus plan/shape checks (bounded candidate cut, broadcast
-anchors, shard rollup before the skew window)."""
+"""Pure-Python twins for hard_negatives and shard_balance, plus plan/shape
+checks (broadcast anchors, shard rollup before the skew window)."""
 
 import contextlib
 import hashlib

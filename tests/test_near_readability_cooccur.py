@@ -1,5 +1,5 @@
-"""Pure-Python twins for bm25_near, readability, and cooccur_items —
-independent of both the Spark plans under test and their DuckDB oracles."""
+"""Pure-Python twins for bm25_near — independent of both the Spark plan
+under test and its DuckDB oracle."""
 
 import math
 import re

@@ -1,8 +1,7 @@
-"""asof_join / range_join / cms_heavy_hitters: the three classic
-operators Spark lacks as built-ins, each re-expressed as a composition
-of DataFrame ops (union+window merge, bucket-expansion equi-join,
-fixed-width sketch aggregation) and checked here against brute-force
-Python twins on the sf0.001 tables."""
+"""asof_join / range_join: two classic operators Spark lacks as built-ins,
+each re-expressed as a composition of DataFrame ops (union+window merge,
+bucket-expansion equi-join) and checked here against brute-force Python
+twins on the sf0.001 tables; plus bloom_filter against brute force."""
 
 import datetime
 import hashlib

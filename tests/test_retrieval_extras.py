@@ -1,9 +1,7 @@
-"""Pure-Python twins for the hybrid-retrieval / crawl-scheduling /
-snippet / graph / pipeline extras (rrf_fusion, bfs_hops,
-label_propagation, crawl_frontier, snippet_extract, anchor_text,
-host_crowding, latency_quantiles, docid_remap, trustrank, data_split,
-oov_rate) — independent of both the Spark plans under test and their
-DuckDB oracles."""
+"""Pure-Python twins for the hybrid-retrieval / graph / pipeline extras
+(rrf_fusion, bfs_hops, label_propagation, anchor_text, trustrank,
+data_split, oov_rate) — independent of both the Spark plans under test
+and their DuckDB oracles."""
 
 import duckdb
 

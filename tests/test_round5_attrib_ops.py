@@ -1,6 +1,4 @@
-"""Pure-Python twins for the round-5 closing batch 4: facet_counts,
-unimax_allocation, opic_priority, shapley_attribution,
-position_attribution."""
+"""Pure-Python twins for unimax_allocation."""
 
 import re
 from collections import defaultdict

@@ -1,5 +1,4 @@
-"""Pure-Python twins for the round-5 closing batch 15: knn_hubness,
-feature_ndcg_screen, k_anonymity."""
+"""Pure-Python twins for knn_hubness."""
 
 import math
 from collections import defaultdict

@@ -1,5 +1,4 @@
-"""Pure-Python twins for round-5 batch 27: classifier_gains,
-source_overlap_matrix, dedup_keeper_policy."""
+"""Pure-Python twins for classifier_gains."""
 
 
 from search_engine_spark.catalog.quality import (

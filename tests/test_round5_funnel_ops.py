@@ -1,5 +1,4 @@
-"""Pure-Python twins for round-5 batch 29: filter_vocab_loss,
-jackknife_ctr, dedup_threshold_sensitivity."""
+"""Pure-Python twins for dedup_threshold_sensitivity."""
 
 import re
 from collections import Counter, defaultdict

@@ -1,5 +1,4 @@
-"""Pure-Python twins for the round-5 closing batch 8: crawl_makespan,
-distinct_ngrams, rich_club, lang_homophily."""
+"""Pure-Python twins for lang_homophily."""
 
 from collections import defaultdict
 

@@ -1,5 +1,5 @@
-"""Pure-Python twins for the round-5 closing batch 2: skip_cost_model,
-perplexity_buckets, gopher_quality, filtered_ann, harmonic_centrality."""
+"""Pure-Python twins for skip_cost_model, perplexity_buckets and
+gopher_quality."""
 
 import math
 import re

@@ -1,5 +1,4 @@
-"""Pure-Python twins for round-5 batch 30: simpson_check,
-token_fertility, phrase_selectivity."""
+"""Pure-Python twins for token_fertility."""
 
 import re
 from collections import defaultdict

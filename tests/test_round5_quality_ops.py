@@ -1,5 +1,4 @@
-"""Pure-Python twins for the round-5 closing batch 6:
-index_size_breakdown, calibration_curve, cuped_adjustment,
+"""Pure-Python twins for index_size_breakdown, calibration_curve and
 lang_confusion."""
 
 import math

@@ -1,5 +1,4 @@
-"""Pure-Python twins for round-5 batch 28: community_conductance,
-shard_idf_divergence, embedding_drift."""
+"""Pure-Python twins for community_conductance and embedding_drift."""
 
 import math
 from collections import Counter, defaultdict

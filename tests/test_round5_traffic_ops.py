@@ -1,5 +1,4 @@
-"""Pure-Python twins for round-5 batch 25: click_entropy,
-interevent_burstiness, embedding_anisotropy, item_novelty_rate."""
+"""Pure-Python twins for embedding_anisotropy."""
 
 import math
 

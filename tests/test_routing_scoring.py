@@ -1,6 +1,5 @@
-"""Pure-Python twins for cori_shards, pivoted_vsm, and wand_prune_stats,
-plus the invariant that makes block-max WAND correct: pruning is lossless
-(no pruned doc scores >= theta)."""
+"""The invariant that makes block-max WAND correct, checked on
+wand_prune_stats: pruning is lossless (no pruned doc scores >= theta)."""
 
 import math
 import re

@@ -1,5 +1,5 @@
-"""bm25_zoned (title-zone-weighted BM25) and url_normalize (crawl
-frontier canonicalization): Python brute-force twins + invariants."""
+"""bm25_zoned (title-zone-weighted BM25): Python brute-force twin +
+invariants."""
 
 import math
 
