@@ -1,6 +1,7 @@
 """Link-graph catalog entries over the synthetic link-emitter graph:
 PageRank, HITS, TrustRank, label propagation, BFS hops, k-core, triangle
-count, community conductance, anchor text and language homophily.
+count, community conductance, SALSA, reciprocity, the degree histogram,
+anchor text and language homophily.
 """
 
 from __future__ import annotations
@@ -752,6 +753,201 @@ SELECT id AS doc_id, round(r, 8) AS tr FROM r{_PR_ITERS}""")
 
 
 SQL_TRUSTRANK = _trustrank_sql()
+
+
+# ---------------------------------------------------------------------------
+# SALSA link analysis and crawl-budget apportionment
+# ---------------------------------------------------------------------------
+
+_SALSA_ITERS = 3
+
+
+def q_salsa(spark, sf_dir):
+    """SALSA authority scores (Lempel & Moran, WWW 2000) over the same
+    synthetic link graph as q_pagerank/q_hits — the degree-normalized
+    cousin of HITS that powered web search's related-pages features: a
+    random walk alternating authority -> hub (uniform over in-links)
+    -> authority (uniform over out-links).  {_SALSA_ITERS} power
+    iterations from the uniform authority start:
+    h(u) = sum over u->v of a(v)/indeg(v);
+    a'(v) = sum over u->v of h(u)/outdeg(u).
+    The walk conserves probability mass, so sum(a) == 1 at every step —
+    the correctness invariant the test pins.  Top-10 authorities.
+
+    Scale shape per iteration: identical to q_pagerank — one join of
+    the score vector against the degree-annotated edge list + one hash
+    aggregation on the other endpoint (Pregel message passing); degrees
+    are computed once before the loop; lineage references each
+    intermediate exactly once so plan depth is linear in iterations.
+    """
+    _with_n, edges = _link_edges(spark, sf_dir)
+    indeg = edges.groupBy("dst").agg(F.count("*").alias("ind"))
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("outd"))
+    e = edges.join(indeg, "dst").join(outdeg, "src")
+    n_auth = indeg.agg(F.count("*").alias("_na"))
+    a = indeg.crossJoin(F.broadcast(n_auth)).select(
+        F.col("dst").alias("id"), (F.lit(1.0) / F.col("_na")).alias("a")
+    )
+    for _ in range(_SALSA_ITERS):
+        h = (
+            a.join(e, a["id"] == e["dst"])
+            .groupBy("src")
+            .agg(F.sum(F.col("a") / F.col("ind")).alias("h"))
+        )
+        a = (
+            h.join(e, "src")
+            .groupBy("dst")
+            .agg(F.sum(F.col("h") / F.col("outd")).alias("a"))
+            .select(F.col("dst").alias("id"), "a")
+        )
+    return (
+        a.select(
+            F.col("id").alias("doc_id"), F.round("a", 8).alias("salsa_auth")
+        )
+        .orderBy(F.col("salsa_auth").desc(), F.col("doc_id").asc())
+        .limit(10)
+    )
+
+
+def _salsa_sql() -> str:
+    rules = ", ".join(f"({m}, {b})" for m, b in _PR_RULES)
+    parts = [
+        f"""WITH nodes AS (SELECT doc_id AS id FROM documents),
+nn AS (SELECT count(*) AS n FROM nodes),
+edges AS (
+  SELECT DISTINCT src, dst FROM (
+    SELECT id AS src, (rules.m * id + rules.b) % nn.n AS dst
+    FROM nodes CROSS JOIN nn
+    CROSS JOIN (VALUES {rules}) AS rules(m, b)
+  ) WHERE src <> dst
+),
+ind AS (SELECT dst, count(*) AS ind FROM edges GROUP BY dst),
+outd AS (SELECT src, count(*) AS outd FROM edges GROUP BY src),
+e AS (SELECT edges.src, edges.dst, ind.ind, outd.outd
+      FROM edges JOIN ind USING (dst) JOIN outd USING (src)),
+na AS (SELECT count(*) AS na FROM ind),
+a0 AS (SELECT dst AS id, CAST(1 AS DOUBLE) / na.na AS a
+       FROM ind CROSS JOIN na)"""
+    ]
+    for t in range(1, _SALSA_ITERS + 1):
+        parts.append(
+            f""",
+h{t} AS (SELECT e.src, sum(a.a / e.ind) AS h
+         FROM a{t - 1} a JOIN e ON a.id = e.dst GROUP BY e.src),
+a{t} AS (SELECT e.dst AS id, sum(h.h / e.outd) AS a
+         FROM h{t} h JOIN e ON h.src = e.src GROUP BY e.dst)"""
+        )
+    parts.append(
+        f"""
+SELECT id AS doc_id, round(a, 8) AS salsa_auth FROM a{_SALSA_ITERS}
+ORDER BY salsa_auth DESC, doc_id ASC LIMIT 10"""
+    )
+    return "".join(parts)
+
+
+SQL_SALSA = _salsa_sql()
+
+
+# ---------------------------------------------------------------------------
+# link reciprocity (Garlaschelli & Loffredo, PRL 2004)
+# ---------------------------------------------------------------------------
+
+
+def q_link_reciprocity(spark, sf_dir):
+    """Reciprocity of the directed link graph: the fraction of edges
+    whose reverse edge also exists (Garlaschelli & Loffredo, PRL 2004's
+    r = L_bidirectional / L).  Together with degree_assortativity this
+    is the second one-number structural drift monitor a crawler QA
+    stack recomputes per snapshot — real web graphs sit near r ~ 0.25
+    (links are mostly one-way), so a crawl whose reciprocity jumps is
+    mis-canonicalizing URLs or trapped in a forum.
+
+    Determinism: two integer counts and ONE division.  Scale shape: the
+    reverse-edge test is a self-semi-join on the (src, dst) key — the
+    edge list shuffles once on its own key, co-partitioned with itself;
+    at 10^12 edges this is a sort-merge semi-join with no skew beyond
+    the edge key's own distribution.
+    """
+    _, edges = _link_edges(spark, sf_dir)
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    recip = edges.join(rev, ["src", "dst"], "left_semi")
+    return (
+        edges.agg(F.count("*").alias("_ne"))
+        .crossJoin(F.broadcast(recip.agg(F.count("*").alias("_nr"))))
+        .select(
+            F.col("_ne").cast("long").alias("n_edges"),
+            F.col("_nr").cast("long").alias("n_reciprocal"),
+            _r4(F.col("_nr") / F.col("_ne")).alias("reciprocity"),
+        )
+    )
+
+
+SQL_LINK_RECIPROCITY = f"""WITH {_edges_sql()},
+r AS (
+  SELECT count(*) AS nr FROM edges e
+  WHERE EXISTS (SELECT 1 FROM edges x
+                WHERE x.src = e.dst AND x.dst = e.src)
+),
+t AS (SELECT count(*) AS ne FROM edges)
+SELECT CAST(ne AS BIGINT) AS n_edges,
+       CAST(nr AS BIGINT) AS n_reciprocal,
+       round(CAST(nr AS DOUBLE) / ne, 4) AS reciprocity
+FROM t CROSS JOIN r"""
+
+
+# ---------------------------------------------------------------------------
+# Degree distribution histogram (Broder WWW 2000, figure 2's power law)
+# ---------------------------------------------------------------------------
+
+
+def q_degree_histogram(spark, sf_dir):
+    """In/out-degree distribution of the link graph in power-of-two
+    buckets — the web-graph companion of posting_histogram (Broder et
+    al. WWW 2000 measured both degree power laws this way; zipf_fit
+    covers the TERM frequency law, this covers the LINK one).  One row
+    per bucket with how many nodes fall in it by out- and by in-degree.
+
+    Determinism: integer degrees, bin via bit length.  Scale shape: two
+    map-side-combinable degree aggregates keyed on the edge endpoints,
+    then a ≤ 64-row rollup joined full-outer on bucket.
+    """
+    _, edges = _link_edges(spark, sf_dir)
+    bl = lambda c: (F.length(F.bin(c)) - 1).cast("long")  # noqa: E731
+    outs = (
+        edges.groupBy("src").agg(F.count("*").alias("d"))
+        .groupBy(bl(F.col("d")).alias("bucket"))
+        .agg(F.count("*").cast("long").alias("n_out"))
+    )
+    ins = (
+        edges.groupBy("dst").agg(F.count("*").alias("d"))
+        .groupBy(bl(F.col("d")).alias("bucket"))
+        .agg(F.count("*").cast("long").alias("n_in"))
+    )
+    return (
+        outs.join(ins, "bucket", "full_outer")
+        .select(
+            "bucket",
+            F.coalesce("n_out", F.lit(0)).cast("long").alias("n_out"),
+            F.coalesce("n_in", F.lit(0)).cast("long").alias("n_in"),
+        )
+        .orderBy("bucket")
+    )
+
+
+SQL_DEGREE_HISTOGRAM = f"""WITH {_edges_sql()},
+outs AS (
+  SELECT length(bin(d)) - 1 AS bucket, count(*) AS n_out
+  FROM (SELECT src, count(*) AS d FROM edges GROUP BY src) GROUP BY 1
+),
+ins AS (
+  SELECT length(bin(d)) - 1 AS bucket, count(*) AS n_in
+  FROM (SELECT dst, count(*) AS d FROM edges GROUP BY dst) GROUP BY 1
+)
+SELECT coalesce(outs.bucket, ins.bucket) AS bucket,
+       CAST(coalesce(n_out, 0) AS BIGINT) AS n_out,
+       CAST(coalesce(n_in, 0) AS BIGINT) AS n_in
+FROM outs FULL OUTER JOIN ins ON outs.bucket = ins.bucket
+ORDER BY bucket"""
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,10 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    _CLARITY_FB, _CLARITY_SEEDS, q_clarity_score,
+)
+from search_engine_spark.catalog.corpus import _BURST_MIN_DF, q_term_burstiness
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -41,7 +44,7 @@ def test_clarity_matches_python_twin(spark):
         df.update(c.keys())
 
     want = []
-    for seed in sorted(DQ._CLARITY_SEEDS):
+    for seed in sorted(_CLARITY_SEEDS):
         idf = math.log((n_docs - df[seed] + 0.5) / (df[seed] + 0.5) + 1.0)
         scored = []
         for d, c in tf.items():
@@ -51,7 +54,7 @@ def test_clarity_matches_python_twin(spark):
             s = idf * (t * 2.2) / (t + 1.2 * (0.25 + 0.75 * dl[d] / avgdl))
             scored.append((round(s, 4), d))
         fb = [d for _s, d in sorted(scored, key=lambda r: (-r[0], r[1]))
-              [: DQ._CLARITY_FB]]
+              [: _CLARITY_FB]]
         n_fb = len(fb)
         pwq = defaultdict(float)
         for d in fb:
@@ -65,10 +68,10 @@ def test_clarity_matches_python_twin(spark):
 
     got = [
         (r.seed, r.n_fb, r.n_terms, r.clarity)
-        for r in DQ.q_clarity_score(spark, SF_DIR).collect()
+        for r in q_clarity_score(spark, SF_DIR).collect()
     ]
     assert got == want
-    assert len(got) == len(DQ._CLARITY_SEEDS)
+    assert len(got) == len(_CLARITY_SEEDS)
     # clarity is positive: a feedback mixture is never the corpus model
     assert all(c > 0 for _s, _n, _t, c in got)
 
@@ -78,7 +81,7 @@ def test_clarity_corpus_lm_is_not_broadcast(spark):
     ctf table must NOT be the broadcast side (the dsir lesson)."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_clarity_score(spark, SF_DIR).explain("formatted")
+        q_clarity_score(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastHashJoin" in plan
 
@@ -95,7 +98,7 @@ def test_burstiness_matches_python_twin(spark):
     n_docs = len(docs)
     rows = []
     for t, (d, c, m) in per.items():
-        if d < DQ._BURST_MIN_DF:
+        if d < _BURST_MIN_DF:
             continue
         lam = c / n_docs
         rows.append(
@@ -105,7 +108,7 @@ def test_burstiness_matches_python_twin(spark):
     want = sorted(rows, key=lambda r: (-r[4], r[0]))[:20]
     got = [
         (r.term, r.df, r.ctf, r.max_tf, r.b, r.df_ratio)
-        for r in DQ.q_term_burstiness(spark, SF_DIR).collect()
+        for r in q_term_burstiness(spark, SF_DIR).collect()
     ]
     assert got == want
     assert len(got) == 20
@@ -118,7 +121,7 @@ def test_burstiness_no_vocabulary_window_or_join(spark):
     no Window at all and ends in TakeOrderedAndProject."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_term_burstiness(spark, SF_DIR).explain("formatted")
+        q_term_burstiness(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "Window" not in plan
     assert "TakeOrderedAndProject" in plan

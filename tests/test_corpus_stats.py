@@ -1,13 +1,15 @@
-"""Pure-Python twins for boilerplate_shingles, heaps_law, zipf_fit."""
+"""Pure-Python twins for heaps_law and zipf_fit."""
 
 import math
 import re
-from collections import Counter, defaultdict
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.corpus import (
+    _HEAPS_POINTS, q_heaps_law, q_zipf_fit, _ZIPF_K,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -35,46 +37,13 @@ def _fit(pts):
 
 
 # ---------------------------------------------------------------------------
-# boilerplate_shingles
-# ---------------------------------------------------------------------------
-
-def test_boilerplate_matches_python_twin(spark):
-    docs = _doc_words()
-    host_docs = Counter(src for _d, src, _w in docs)
-    presence = set()
-    for d, src, ws in docs:
-        for i in range(len(ws) - DQ._BOILER_W + 1):
-            presence.add((src, d, " ".join(ws[i : i + DQ._BOILER_W])))
-    cov = Counter((src, s) for src, _d, s in presence)
-    per_src = defaultdict(list)
-    for (src, s), n in cov.items():
-        if n >= 2 and host_docs[src] >= DQ._BOILER_MIN_DOCS:
-            per_src[src].append((s, n))
-    want = []
-    for src, rows in per_src.items():
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        for s, n in rows[: DQ._BOILER_TOPK]:
-            want.append((src, s, n, round(n / host_docs[src], 4)))
-    want.sort(key=lambda r: (r[0], -r[2], r[1]))
-    got = [
-        (r.source, r.shingle, r.docs, r.coverage)
-        for r in DQ.q_boilerplate_shingles(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    assert got  # fixture sanity: repeated shingles exist at sf0.001
-    per = Counter(r[0] for r in got)
-    assert all(v <= DQ._BOILER_TOPK for v in per.values())
-    assert all(r[2] >= 2 for r in got)  # only REPEATED shingles rank
-
-
-# ---------------------------------------------------------------------------
 # heaps_law
 # ---------------------------------------------------------------------------
 
 def _heaps_twin(docs):
     ids = [d for d, _s, _w in docs]
     lo, hi = min(ids), max(ids)
-    p = DQ._HEAPS_POINTS
+    p = _HEAPS_POINTS
     cps = sorted({lo + (i * (hi - lo) + p - 1) // p for i in range(1, p + 1)})
     first = {}
     dl = {}
@@ -94,7 +63,7 @@ def _heaps_twin(docs):
 
 def test_heaps_law_matches_python_twin(spark):
     want = _heaps_twin(_doc_words())
-    row = DQ.q_heaps_law(spark, SF_DIR).collect()[0]
+    row = q_heaps_law(spark, SF_DIR).collect()[0]
     assert (row.beta, row.k, row.n_points) == want
     # fixture is degenerate by design: 31-word closed vocabulary saturates
     # at the first checkpoint, so the fitted growth exponent is ~0
@@ -127,7 +96,7 @@ def test_heaps_law_recovers_growth_exponent(spark, tmp_path):
         (r["doc_id"], r["source"], r["text"].split()) for r in rows
     ]
     want = _heaps_twin(docs)
-    row = DQ.q_heaps_law(spark, str(tmp_path)).collect()[0]
+    row = q_heaps_law(spark, str(tmp_path)).collect()[0]
     assert (row.beta, row.k, row.n_points) == want
     assert 0.3 < row.beta < 0.7
 
@@ -139,14 +108,14 @@ def test_heaps_law_recovers_growth_exponent(spark, tmp_path):
 def test_zipf_fit_matches_python_twin(spark):
     docs = _doc_words()
     freq = Counter(w for _d, _s, ws in docs for w in ws)
-    head = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[: DQ._ZIPF_K]
+    head = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[: _ZIPF_K]
     pts = [
         (math.log(rank), math.log(f))
         for rank, (_t, f) in enumerate(head, start=1)
     ]
     slope, mx, my = _fit(pts)
     want = (round(slope, 4), round(my - slope * mx, 4), len(pts))
-    row = DQ.q_zipf_fit(spark, SF_DIR).collect()[0]
+    row = q_zipf_fit(spark, SF_DIR).collect()[0]
     assert (row.slope, row.intercept, row.n_terms) == want
     assert row.slope < 0  # frequencies decay with rank
 
@@ -155,7 +124,7 @@ def test_zipf_head_cut_is_take_ordered(spark):
     """The head cut must be a distributed TakeOrdered over the term
     aggregate, never a global sort of the vocabulary."""
     plan = (
-        DQ.q_zipf_fit(spark, SF_DIR)
+        q_zipf_fit(spark, SF_DIR)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "TakeOrderedAndProject" in plan

@@ -6,7 +6,13 @@ from collections import Counter
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    _FRESH_TAU, q_freshness_rank, _scored,
+)
+from search_engine_spark.catalog.dedup import (
+    _CONTAIN_MIN, q_containment, _SHINGLE_DF_CAP,
+)
+from search_engine_spark.catalog.corpus import _KL_ALPHA, q_kl_drift
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,7 +44,7 @@ def test_kl_drift_matches_direct_full_vocab_sum(spark):
         corpus.update(ts)
     v = len(corpus)
     t = sum(corpus.values())
-    a = DQ._KL_ALPHA
+    a = _KL_ALPHA
     want = {}
     for src, cnt in per_src.items():
         n = sum(cnt.values())
@@ -50,13 +56,13 @@ def test_kl_drift_matches_direct_full_vocab_sum(spark):
         want[src] = (n, round(kl, 4))
     got = {
         r.source: (r.n_tokens, r.kl)
-        for r in DQ.q_kl_drift(spark, SF_DIR).collect()
+        for r in q_kl_drift(spark, SF_DIR).collect()
     }
     assert got == want
 
 
 def test_kl_drift_nonnegative(spark):
-    for r in DQ.q_kl_drift(spark, SF_DIR).collect():
+    for r in q_kl_drift(spark, SF_DIR).collect():
         assert r.kl >= -1e-4  # KL ≥ 0 up to the 4-decimal rounding
 
 
@@ -76,7 +82,7 @@ def _shingle_sets():
     for sh in sets.values():
         df.update(sh)
     return {
-        d: {s for s in sh if df[s] <= DQ._SHINGLE_DF_CAP}
+        d: {s for s in sh if df[s] <= _SHINGLE_DF_CAP}
         for d, sh in sets.items()
     }
 
@@ -95,19 +101,19 @@ def test_containment_matches_python_twin(spark):
                 (db, da, len(sets[db])),
             ):
                 c = round(inter / sz, 4)
-                if c >= DQ._CONTAIN_MIN:
+                if c >= _CONTAIN_MIN:
                     rows.append((contained, container, c))
     want = sorted(rows, key=lambda r: (-r[2], r[0], r[1]))[:20]
     got = [
         (r.contained, r.container, r.containment)
-        for r in DQ.q_containment(spark, SF_DIR).collect()
+        for r in q_containment(spark, SF_DIR).collect()
     ]
     assert got == want
 
 
 def test_containment_is_asymmetric_and_bounded(spark):
-    for r in DQ.q_containment(spark, SF_DIR).collect():
-        assert DQ._CONTAIN_MIN <= r.containment <= 1.0
+    for r in q_containment(spark, SF_DIR).collect():
+        assert _CONTAIN_MIN <= r.containment <= 1.0
         assert r.contained != r.container
 
 
@@ -128,22 +134,22 @@ def test_freshness_rank_matches_python_twin(spark):
         w = idf * (f * 2.2) / (f + 1.2 * (1 - 0.75 + 0.75 * dls[d] / avgdl))
         age = d % 365
         scored.append(
-            (d, age, round(w * math.exp(-age / DQ._FRESH_TAU), 4))
+            (d, age, round(w * math.exp(-age / _FRESH_TAU), 4))
         )
     want = sorted(scored, key=lambda r: (-r[2], r[0]))[:10]
     got = [
         (r.doc_id, r.age_days, r.score)
-        for r in DQ.q_freshness_rank(spark, SF_DIR).collect()
+        for r in q_freshness_rank(spark, SF_DIR).collect()
     ]
     assert got == want
 
 
 def test_freshness_decay_reorders_but_never_invents(spark):
     """Every freshness-ranked doc must be a plain BM25 match for the term."""
-    fresh = {r.doc_id for r in DQ.q_freshness_rank(spark, SF_DIR).collect()}
+    fresh = {r.doc_id for r in q_freshness_rank(spark, SF_DIR).collect()}
     base = {
         r.doc_id
-        for r in DQ._scored(spark, SF_DIR, ["merge"])
+        for r in _scored(spark, SF_DIR, ["merge"])
         .filter("term = 'merge'")
         .collect()
     }

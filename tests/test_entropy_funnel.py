@@ -1,4 +1,4 @@
-"""Pure-Python twins for entropy_quality."""
+"""Pure-Python twins for entropy_quality and event_funnel."""
 
 import math
 import re
@@ -7,6 +7,7 @@ from collections import Counter
 import duckdb
 
 from search_engine_spark.catalog.quality import q_entropy_quality
+from search_engine_spark.catalog.events import q_event_funnel
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -58,3 +59,57 @@ def test_entropy_bounded_by_log_alphabet(spark):
         assert 0.0 <= r.avg_entropy <= math.log2(36) + 1e-9
 
 
+# ---------------------------------------------------------------------------
+# event_funnel
+# ---------------------------------------------------------------------------
+
+def test_event_funnel_matches_python_twin(spark):
+    con = _con()
+    rows = con.execute(
+        "SELECT user_id, event_type, ts FROM events "
+        "WHERE event_type IN ('view', 'click', 'purchase')"
+    ).fetchall()
+    firsts = {}
+    for uid, et, ts in rows:
+        cur = firsts.setdefault(uid, {})
+        if et not in cur or ts < cur[et]:
+            cur[et] = ts
+    n1 = n2 = n3 = 0
+    for cur in firsts.values():
+        v, c, p = cur.get("view"), cur.get("click"), cur.get("purchase")
+        if v is not None:
+            n1 += 1
+            if c is not None and c > v:
+                n2 += 1
+                if p is not None and p > c:
+                    n3 += 1
+    want = [
+        (1, "view", n1, round(n1 / max(n1, 1), 4)),
+        (2, "click", n2, round(n2 / max(n1, 1), 4)),
+        (3, "purchase", n3, round(n3 / max(n2, 1), 4)),
+    ]
+    got = [
+        (r.step, r.name, r.users, r.conv)
+        for r in q_event_funnel(spark, SF_DIR).collect()
+    ]
+    assert got == want
+
+
+def test_event_funnel_is_monotone(spark):
+    users = [r.users for r in q_event_funnel(spark, SF_DIR).collect()]
+    assert users == sorted(users, reverse=True)
+    assert users[0] > 0  # fixture sanity
+
+
+def test_event_funnel_has_no_window_over_raw_events(spark):
+    """The plan must aggregate to per-user firsts map-side — no Window
+    operator (which would shuffle every raw event row per user)."""
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q_event_funnel(spark, SF_DIR).explain("formatted")
+    plan = buf.getvalue()
+    assert "Window" not in plan
+    assert "CartesianProduct" not in plan

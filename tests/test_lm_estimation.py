@@ -1,15 +1,15 @@
 """Pure-Python twins for the LM-estimation entries: interpolated
-Kneser-Ney bigram probabilities, Good-Turing counts-of-counts, and
-stopword induction — plus the probability-mass invariants that make the
-smoothers correct."""
+Kneser-Ney bigram probabilities and stopword induction — plus the
+probability-mass invariant that makes the smoother correct."""
 
 import math
 import re
-from collections import Counter, defaultdict
+from collections import Counter
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.quality import _KN_D, _KN_PROBES, q_kneser_ney
+from search_engine_spark.catalog.corpus import q_stopword_induction, _STOP_TOPN
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -43,9 +43,9 @@ def test_kneser_ney_matches_python_twin(spark):
         n1f[a] += 1
         n1b[b] += 1
     nt = len(bi)
-    D = DQ._KN_D
+    D = _KN_D
     want = []
-    for w1, w2 in sorted(DQ._KN_PROBES):
+    for w1, w2 in sorted(_KN_PROBES):
         c12 = bi.get((w1, w2), 0)
         p = (
             max(c12 - D, 0.0) / c1[w1]
@@ -54,7 +54,7 @@ def test_kneser_ney_matches_python_twin(spark):
         want.append((w1, w2, c12, round(p, 4)))
     got = [
         (r.w1, r.w2, r.c12, r.p_kn)
-        for r in DQ.q_kneser_ney(spark, SF_DIR).collect()
+        for r in q_kneser_ney(spark, SF_DIR).collect()
     ]
     assert got == want
     assert all(0.0 < p < 1.0 for _a, _b, _c, p in got)
@@ -72,7 +72,7 @@ def test_kneser_ney_mass_sums_to_one():
         n1f[a] += 1
         n1b[b] += 1
     nt = len(bi)
-    D = DQ._KN_D
+    D = _KN_D
     w1 = max(c1, key=lambda w: c1[w])
     total = sum(
         max(bi[(a, b)] - D, 0.0) / c1[w1]
@@ -87,32 +87,6 @@ def test_kneser_ney_mass_sums_to_one():
     assert abs(total - 1.0) < 1e-9
 
 
-def test_good_turing_matches_python_twin(spark):
-    bi = _bigrams()
-    nr = Counter(bi.values())
-    ntok = sum(bi.values())
-    n1 = nr.get(1, 0)
-    want = [
-        (
-            r,
-            nr[r],
-            nr.get(r + 1, 0),
-            round((r + 1) * nr.get(r + 1, 0) / nr[r], 4),
-            round(n1 / ntok, 4),
-        )
-        for r in sorted(nr)
-        if 1 <= r <= DQ._GT_MAX_R
-    ]
-    got = [
-        (r.r, r.n_r, r.n_r_plus_1, r.r_star, r.unseen_mass)
-        for r in DQ.q_good_turing(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    # GT discounts: smoothed mass at r=1 must be below the raw count
-    for r, n_r, n_r1, r_star, _p0 in got:
-        assert r_star >= 0.0
-
-
 def test_stopword_induction_matches_python_twin(spark):
     docs = _doc_tokens()
     df = Counter()
@@ -121,7 +95,7 @@ def test_stopword_induction_matches_python_twin(spark):
             df[t] += 1
     n = len(docs)
     ranked = sorted(df.items(), key=lambda kv: (-kv[1], kv[0]))[
-        : DQ._STOP_TOPN
+        : _STOP_TOPN
     ]
     want = [
         (
@@ -134,7 +108,7 @@ def test_stopword_induction_matches_python_twin(spark):
     ]
     got = [
         (r.term, r.df, r.df_ratio, r.idf)
-        for r in DQ.q_stopword_induction(spark, SF_DIR).collect()
+        for r in q_stopword_induction(spark, SF_DIR).collect()
     ]
     assert got == want
     # induced stopwords are the near-universal terms: idf ~ 0 relative

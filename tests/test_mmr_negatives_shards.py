@@ -1,5 +1,6 @@
-"""Pure-Python twins for hard_negatives and shard_balance, plus plan/shape
-checks (broadcast anchors, shard rollup before the skew window)."""
+"""Pure-Python twins for mmr_diversify, hard_negatives, and
+shard_balance, plus plan/shape checks (bounded candidate cut, broadcast
+anchors, shard rollup before the skew window)."""
 
 import contextlib
 import hashlib
@@ -9,7 +10,9 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark.catalog.ir import q_shard_balance, _SHARDS
+from search_engine_spark.catalog.ir import (
+    _MMR_CAND, _MMR_K, _MMR_LAMBDA, q_mmr_diversify, q_shard_balance, _SHARDS,
+)
 from search_engine_spark.catalog.ann import _HARDNEG_Q, q_hard_negatives
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -32,6 +35,71 @@ def _dot(a, b):
 
 def _cos(a, b):
     return _dot(a, b) / (_dot(a, a) ** 0.5 * _dot(b, b) ** 0.5)
+
+
+# ---------------------------------------------------------------------------
+# mmr_diversify
+# ---------------------------------------------------------------------------
+
+def _mmr_twin():
+    emb = _emb()
+    qv = next(e for v, _l, e in emb if v == 0)
+    cand = sorted(
+        ((v, e, _cos(e, qv)) for v, _l, e in emb if v != 0),
+        key=lambda r: (-r[2], r[0]),
+    )[: _MMR_CAND]
+    sims = {}
+    for i, (va, ea, _ra) in enumerate(cand):
+        for vb, eb, _rb in cand[i + 1:]:
+            sims[(va, vb)] = sims[(vb, va)] = _cos(ea, eb)
+    pool = {v: r for v, _e, r in cand}
+    selected, out = [], []
+    while pool and len(selected) < _MMR_K:
+        best = None
+        for v, r in pool.items():
+            pen = max((sims[(v, s)] for s in selected), default=0.0)
+            score = _MMR_LAMBDA * r - (1 - _MMR_LAMBDA) * pen
+            if best is None or (-score, v) < (-best[0], best[1]):
+                best = (score, v)
+        score, v = best
+        selected.append(v)
+        out.append((len(selected), v, round(pool.pop(v), 4), round(score, 4)))
+    return out
+
+
+def test_mmr_matches_python_twin(spark):
+    want = _mmr_twin()
+    got = [
+        (r.rank, r.vec_id, r.rel, r.mmr)
+        for r in q_mmr_diversify(spark, SF_DIR).collect()
+    ]
+    assert got == want
+    assert len(got) == _MMR_K
+
+
+def test_mmr_first_pick_is_pure_relevance_and_diversifies(spark):
+    rows = q_mmr_diversify(spark, SF_DIR).collect()
+    emb = _emb()
+    qv = next(e for v, _l, e in emb if v == 0)
+    rels = sorted(
+        ((round(_cos(e, qv), 4), -v) for v, _l, e in emb if v != 0),
+        reverse=True,
+    )
+    # rank 1 is the global argmax of relevance
+    assert rows[0].rel == rels[0][0]
+    # diversification really reorders: MMR ranking != pure-relevance
+    # ranking for this corpus (λ < 1 and near-dup candidates exist)
+    pure = [(-v) for _r, v in rels[: _MMR_K]]
+    assert [r.vec_id for r in rows] != pure
+
+
+def test_mmr_candidates_cut_by_takeordered(spark):
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q_mmr_diversify(spark, SF_DIR).explain("formatted")
+    plan = buf.getvalue()
+    assert "TakeOrderedAndProject" in plan      # bounded candidate pool
+    assert "FlatMapGroupsInPandas" in plan      # sequential greedy stage
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,10 @@ import re
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    _NDCG_K, _NDCG_QS, _PERC_QUERIES, q_mrr_map_eval, q_ndcg_eval, q_percolate,
+    _SPLIT_PRIME,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,7 +34,7 @@ def test_ndcg_eval_matches_python_twin(spark):
     dls = {d: len(v) for d, v in toks.items() if v}
     n, avgdl = len(dls), sum(dls.values()) / len(dls)
     want = {}
-    for q in DQ._NDCG_QS:
+    for q in _NDCG_QS:
         tf = {d: v.count(q) for d, v in toks.items() if q in v}
         df = len(tf)
         idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
@@ -47,9 +50,9 @@ def test_ndcg_eval_matches_python_twin(spark):
             )
             for d, f in tf.items()
         ]
-        top = sorted(scored, key=lambda r: (-r[1], r[0]))[: DQ._NDCG_K]
+        top = sorted(scored, key=lambda r: (-r[1], r[0]))[: _NDCG_K]
         judged = [
-            (d, float(((d % DQ._SPLIT_PRIME) * 2654435761) % 4))
+            (d, float(((d % _SPLIT_PRIME) * 2654435761) % 4))
             for d, _ in top
         ]
         dcg = sum(
@@ -64,15 +67,15 @@ def test_ndcg_eval_matches_python_twin(spark):
         want[q] = (round(dcg / max(idcg, 1e-12), 4), len(judged))
     got = {
         r.term: (r.ndcg, r.judged)
-        for r in DQ.q_ndcg_eval(spark, SF_DIR).collect()
+        for r in q_ndcg_eval(spark, SF_DIR).collect()
     }
     assert got == want
 
 
 def test_ndcg_is_one_iff_ranking_ideal(spark):
-    for r in DQ.q_ndcg_eval(spark, SF_DIR).collect():
+    for r in q_ndcg_eval(spark, SF_DIR).collect():
         assert 0.0 <= r.ndcg <= 1.0 + 1e-9
-        assert r.judged <= DQ._NDCG_K
+        assert r.judged <= _NDCG_K
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +89,7 @@ def _bm25_topk_pool():
     dls = {d: len(v) for d, v in toks.items() if v}
     n, avgdl = len(dls), sum(dls.values()) / len(dls)
     pools = {}
-    for q in DQ._NDCG_QS:
+    for q in _NDCG_QS:
         tf = {d: v.count(q) for d, v in toks.items() if q in v}
         df = len(tf)
         idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
@@ -102,9 +105,9 @@ def _bm25_topk_pool():
             )
             for d, f in tf.items()
         ]
-        top = sorted(scored, key=lambda r: (-r[1], r[0]))[: DQ._NDCG_K]
+        top = sorted(scored, key=lambda r: (-r[1], r[0]))[: _NDCG_K]
         pools[q] = [
-            ((d % DQ._SPLIT_PRIME) * 2654435761) % 4 >= 2 for d, _ in top
+            ((d % _SPLIT_PRIME) * 2654435761) % 4 >= 2 for d, _ in top
         ]
     return pools
 
@@ -127,19 +130,19 @@ def test_mrr_map_eval_matches_python_twin(spark):
         want[q] = (round(rr, 4), round(ap_sum / max(n_rel, 1), 4), n_rel)
     got = {
         r.term: (r.rr, r.ap, r.n_rel)
-        for r in DQ.q_mrr_map_eval(spark, SF_DIR).collect()
+        for r in q_mrr_map_eval(spark, SF_DIR).collect()
     }
     assert got == want
     assert any(v[2] > 0 for v in want.values())  # fixture sanity
 
 
 def test_mrr_bounds_and_ap_le_one(spark):
-    for r in DQ.q_mrr_map_eval(spark, SF_DIR).collect():
+    for r in q_mrr_map_eval(spark, SF_DIR).collect():
         assert 0.0 <= r.rr <= 1.0
         assert 0.0 <= r.ap <= 1.0 + 1e-9
         # AP can't exceed 1 and RR is at least 1/K when anything is relevant
         if r.n_rel > 0:
-            assert r.rr >= 1.0 / DQ._NDCG_K
+            assert r.rr >= 1.0 / _NDCG_K
 
 
 # ---------------------------------------------------------------------------
@@ -150,7 +153,7 @@ def test_percolate_matches_python_twin(spark):
     rows = _docs()
     doc_terms = {d: set(_toks(t)) for d, t in rows}
     want = {}
-    for qid, mode, terms in DQ._PERC_QUERIES:
+    for qid, mode, terms in _PERC_QUERIES:
         n = 0
         for ts in doc_terms.values():
             hit = sum(1 for t in terms if t in ts)
@@ -162,7 +165,7 @@ def test_percolate_matches_python_twin(spark):
             want[qid] = (mode, n)
     got = {
         r.qid: (r.mode, r.n_docs)
-        for r in DQ.q_percolate(spark, SF_DIR).collect()
+        for r in q_percolate(spark, SF_DIR).collect()
     }
     assert got == want
 
@@ -173,9 +176,9 @@ def test_percolate_and_is_subset_of_or_semantics(spark):
     rows = _docs()
     doc_terms = {d: set(_toks(t)) for d, t in rows}
     got = {
-        r.qid: r.n_docs for r in DQ.q_percolate(spark, SF_DIR).collect()
+        r.qid: r.n_docs for r in q_percolate(spark, SF_DIR).collect()
     }
-    for qid, mode, terms in DQ._PERC_QUERIES:
+    for qid, mode, terms in _PERC_QUERIES:
         if mode != "and" or qid not in got:
             continue
         or_n = sum(
@@ -190,7 +193,7 @@ def test_percolate_query_table_is_broadcast(spark):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_percolate(spark, SF_DIR).explain("formatted")
+        q_percolate(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan

@@ -9,7 +9,11 @@ from collections import Counter
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    q_query_likelihood, q_related_terms, _QL_MU, _QL_TERMS, _RT_MAX_DF,
+    _RT_MIN_DF,
+)
+from search_engine_spark.catalog.events import _CTR_A, _CTR_B, q_ctr_model
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -37,10 +41,10 @@ def test_query_likelihood_matches_python_twin(spark):
     docs = con.execute("SELECT doc_id, text FROM documents").fetchall()
     toks = {d: _toks(t) for d, t in docs}
     total = sum(len(v) for v in toks.values())
-    mu = DQ._QL_MU
+    mu = _QL_MU
     p = {
         q: sum(v.count(q) for v in toks.values()) / total
-        for q in DQ._QL_TERMS
+        for q in _QL_TERMS
     }
     scored = []
     for d, v in toks.items():
@@ -48,13 +52,13 @@ def test_query_likelihood_matches_python_twin(spark):
             continue
         s = sum(
             math.log((v.count(q) + mu * p[q]) / (len(v) + mu))
-            for q in DQ._QL_TERMS
+            for q in _QL_TERMS
         )
         scored.append((d, round(s, 4)))
     want = sorted(scored, key=lambda r: (-r[1], r[0]))[:10]
     got = [
         (r.doc_id, r.score)
-        for r in DQ.q_query_likelihood(spark, SF_DIR).collect()
+        for r in q_query_likelihood(spark, SF_DIR).collect()
     ]
     assert got == want
 
@@ -66,7 +70,7 @@ def test_query_likelihood_smoothing_identity(spark):
     only a LEFT join of dl with the small matched-correction side."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_query_likelihood(spark, SF_DIR).explain("formatted")
+        q_query_likelihood(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
@@ -86,7 +90,7 @@ def test_related_terms_matches_python_twin(spark):
     band = {
         t: s
         for t, s in postings.items()
-        if DQ._RT_MIN_DF <= len(s) < DQ._RT_MAX_DF
+        if _RT_MIN_DF <= len(s) < _RT_MAX_DF
     }
     terms = sorted(band)
     rows = []
@@ -100,7 +104,7 @@ def test_related_terms_matches_python_twin(spark):
     want = sorted(rows, key=lambda r: (-r[3], r[0], r[1]))[:20]
     got = [
         (r.term_a, r.term_b, r.inter, r.jaccard)
-        for r in DQ.q_related_terms(spark, SF_DIR).collect()
+        for r in q_related_terms(spark, SF_DIR).collect()
     ]
     assert got == want
 
@@ -113,9 +117,9 @@ def test_related_terms_band_excludes_extremes(spark):
     df = Counter()
     for _d, t in docs:
         df.update(set(_toks(t)))
-    for r in DQ.q_related_terms(spark, SF_DIR).collect():
+    for r in q_related_terms(spark, SF_DIR).collect():
         for t in (r.term_a, r.term_b):
-            assert DQ._RT_MIN_DF <= df[t] < DQ._RT_MAX_DF
+            assert _RT_MIN_DF <= df[t] < _RT_MAX_DF
 
 
 # ---------------------------------------------------------------------------
@@ -138,8 +142,8 @@ def test_ctr_model_matches_python_twin(spark):
             v,
             clicks.get(item, 0),
             round(
-                (clicks.get(item, 0) + DQ._CTR_A)
-                / (v + DQ._CTR_A + DQ._CTR_B),
+                (clicks.get(item, 0) + _CTR_A)
+                / (v + _CTR_A + _CTR_B),
                 4,
             ),
         )
@@ -148,7 +152,7 @@ def test_ctr_model_matches_python_twin(spark):
     want = sorted(rows, key=lambda r: (-r[3], r[0]))
     got = [
         (r.item, r.views, r.clicks, r.ctr)
-        for r in DQ.q_ctr_model(spark, SF_DIR).collect()
+        for r in q_ctr_model(spark, SF_DIR).collect()
     ]
     assert got == want
 
@@ -156,8 +160,8 @@ def test_ctr_model_matches_python_twin(spark):
 def test_ctr_model_shrinks_low_traffic(spark):
     """The Beta prior must pull every item's CTR toward the prior mean
     α/(α+β), harder the fewer views it has."""
-    prior = DQ._CTR_A / (DQ._CTR_A + DQ._CTR_B)
-    for r in DQ.q_ctr_model(spark, SF_DIR).collect():
+    prior = _CTR_A / (_CTR_A + _CTR_B)
+    for r in q_ctr_model(spark, SF_DIR).collect():
         raw = r.clicks / r.views if r.views else 0.0
         # smoothed value sits between raw rate and the prior
         lo, hi = sorted((raw, prior))

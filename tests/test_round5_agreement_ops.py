@@ -1,5 +1,4 @@
-"""Pure-Python twins for round-5 batch 23: cohens_kappa, kaplan_meier,
-benford_digits, term_coverage."""
+"""Pure-Python twins for kaplan_meier, benford_digits and term_coverage."""
 
 import math
 import re
@@ -7,7 +6,12 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.events import (
+    _KM_CENSOR_DAYS, q_kaplan_meier, _US_PER_DAY,
+)
+from search_engine_spark.catalog.corpus import (
+    _COVERAGE_KS, q_benford_digits, q_term_coverage,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,66 +27,19 @@ def _doc_tokens():
     }
 
 
-def test_cohens_kappa_matches_twin(spark):
-    stops = {s.strip("'") for s in DQ._EN_STOPS.strip("()").split(",")}
-    n11 = n10 = n01 = n00 = 0
-    for toks in _doc_tokens().values():
-        n = len(toks)
-        chars = sum(len(t) for t in toks)
-        alpha = sum(1 for t in toks if re.search("[a-z]", t))
-        nstop = sum(1 for t in toks if t in stops)
-        counts = {
-            lang: sum(1 for t in toks if t in ws)
-            for lang, ws in DQ._LANG_WORDS.items()
-        }
-        a = (
-            DQ._GOPHER_MIN_WORDS <= n <= DQ._GOPHER_MAX_WORDS
-            and chars * 10 >= int(DQ._GOPHER_MIN_MWL * 10) * n
-            and chars * 10 <= int(DQ._GOPHER_MAX_MWL * 10) * n
-            and alpha * 5 >= n * 4
-            and nstop >= DQ._GOPHER_MIN_STOPS
-        )
-        b = (
-            counts["en"] >= counts["de"]
-            and counts["en"] >= counts["fr"]
-            and counts["en"] > 0
-            and n >= DQ._PIPE_MIN_TOKENS
-            and nstop * 20 >= n
-        )
-        if a and b:
-            n11 += 1
-        elif a:
-            n10 += 1
-        elif b:
-            n01 += 1
-        else:
-            n00 += 1
-    nd = n11 + n10 + n01 + n00
-    po = (n11 + n00) / nd
-    pe = ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)) / (nd * nd)
-    kappa = 1.0 if po == 1.0 else 0.0 if pe == 1.0 else (po - pe) / (1 - pe)
-    r = DQ.q_cohens_kappa(spark, SF_DIR).collect()[0]
-    assert (r.n_docs, r.n11, r.n10, r.n01, r.n00) == (nd, n11, n10, n01, n00)
-    assert r.po == round(po, 4)
-    assert r.pe == round(pe, 4)
-    assert r.kappa == round(kappa, 4)
-    # kappa can never exceed raw agreement-driven bounds
-    assert -1.0 <= r.kappa <= 1.0
-
-
 def test_kaplan_meier_matches_twin(spark):
     rows = duckdb.connect().execute(
         f"SELECT user_id, epoch_us(ts) "
         f"FROM read_parquet('{SF_DIR}/events.parquet')"
     ).fetchall()
     end = max(us for _u, us in rows)
-    cut = end - DQ._KM_CENSOR_DAYS * DQ._US_PER_DAY
+    cut = end - _KM_CENSOR_DAYS * _US_PER_DAY
     first, last = {}, {}
     for u, us in rows:
         first[u] = min(first.get(u, us), us)
         last[u] = max(last.get(u, us), us)
     per = [
-        ((last[u] - first[u]) // DQ._US_PER_DAY, 1 if last[u] < cut else 0)
+        ((last[u] - first[u]) // _US_PER_DAY, 1 if last[u] < cut else 0)
         for u in first
     ]
     g = defaultdict(lambda: [0, 0])
@@ -106,7 +63,7 @@ def test_kaplan_meier_matches_twin(spark):
         expected.append((d, n_risk, n_ev, s))
     got = [
         (r.duration_days, r.n_risk, r.n_events, r.survival)
-        for r in DQ.q_kaplan_meier(spark, SF_DIR).collect()
+        for r in q_kaplan_meier(spark, SF_DIR).collect()
     ]
     assert got == expected
     # survival is monotonically non-increasing from at most 1
@@ -124,7 +81,7 @@ def test_benford_digits_matches_twin(spark):
     ]
     obs = Counter(int(str(c)[0]) for c in cents)
     t = sum(obs.values())
-    rows = DQ.q_benford_digits(spark, SF_DIR).collect()
+    rows = q_benford_digits(spark, SF_DIR).collect()
     assert [r.digit for r in rows] == list(range(1, 10))
     chi2 = 0.0
     for r in rows:
@@ -153,11 +110,11 @@ def test_term_coverage_matches_twin(spark):
     expected = []
     for i, (_t, c) in enumerate(ordered, start=1):
         cum += c
-        if i in DQ._COVERAGE_KS:
+        if i in _COVERAGE_KS:
             expected.append((i, cum, total, round(cum / total, 4)))
     got = [
         (r.k, r.cum_tokens, r.total_tokens, r.coverage)
-        for r in DQ.q_term_coverage(spark, SF_DIR).collect()
+        for r in q_term_coverage(spark, SF_DIR).collect()
     ]
     assert got == expected
     # coverage is monotone in k and ends at most 1

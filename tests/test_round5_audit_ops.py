@@ -1,4 +1,4 @@
-"""Pure-Python twins for knn_hubness."""
+"""Pure-Python twins for knn_hubness and k_anonymity."""
 
 import math
 from collections import defaultdict
@@ -6,6 +6,7 @@ from collections import defaultdict
 import duckdb
 
 from search_engine_spark.catalog.ann import q_knn_hubness, _RNN_K
+from search_engine_spark.catalog.corpus import _KANON_K, q_k_anonymity
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,3 +50,26 @@ def test_knn_hubness_matches_twin(spark):
         assert abs(s - skew) < 1e-3
     # mean N_k is exactly k: every vector casts k votes
     assert abs(m - _RNN_K) < 1e-9
+
+
+def test_k_anonymity_matches_twin(spark):
+    rows = duckdb.connect().execute(
+        f"SELECT lang, source FROM read_parquet('{SF_DIR}/documents.parquet')"
+    ).fetchall()
+    cls = defaultdict(int)
+    for l, s in rows:
+        cls[(l, s)] += 1
+    table_k = min(cls.values())
+    reid = sum(v for v in cls.values() if v < _KANON_K)
+    got = {
+        (r.lang, r.source): (r.class_size, r.violates_k, r.table_k,
+                             r.n_reidentifiable)
+        for r in q_k_anonymity(spark, SF_DIR).collect()
+    }
+    assert set(got) == set(cls)
+    for key, size in cls.items():
+        assert got[key] == (
+            size, size < _KANON_K, table_k, reid
+        )
+    # class sizes partition the table
+    assert sum(v[0] for v in got.values()) == len(rows)

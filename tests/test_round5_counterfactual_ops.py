@@ -1,53 +1,13 @@
-"""Pure-Python twins for the round-5 closing batch 5: mi_feature_select,
-ips_ctr_estimate, ewma_forecast, reciprocal_nn."""
+"""Pure-Python twin for ips_ctr_estimate."""
 
 import json
-import math
-import re
 from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.events import _COEC_SLOTS, q_ips_ctr_estimate
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_mi_feature_select_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id, text, lang "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    nn = len(rows)
-    np_ = sum(1 for _d, _t, l in rows if l == DQ._MI_CLASS_LANG)
-    pres = defaultdict(lambda: [0, 0])
-    for _d, t, l in rows:
-        for term in set(
-            x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x
-        ):
-            pres[term][0 if l == DQ._MI_CLASS_LANG else 1] += 1
-    want = []
-    for term, (n11, n10) in pres.items():
-        n01, n00 = np_ - n11, nn - np_ - n10
-        mi = 0.0
-        for nij, ni, nj in (
-            (n11, n11 + n10, np_),
-            (n10, n11 + n10, nn - np_),
-            (n01, n01 + n00, np_),
-            (n00, n01 + n00, nn - np_),
-        ):
-            if nij > 0:
-                mi += (nij / nn) * math.log2(nn * nij / (ni * nj))
-        want.append((term, n11, n10, round(mi, 4)))
-    want.sort(key=lambda r: (-r[3], r[0]))
-    want = want[: DQ._MI_TOPK]
-    got = [
-        (r.term, r.n11, r.n10, r.mi)
-        for r in DQ.q_mi_feature_select(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    # MI is non-negative and the list is sorted
-    assert all(m >= 0 for _t, _a, _b, m in got)
 
 
 def test_ips_ctr_estimate_matches_twin(spark):
@@ -61,7 +21,7 @@ def test_ips_ctr_estimate_matches_twin(spark):
         k = json.loads(props).get("k") if props else None
         if k is None:
             continue
-        parsed.append((et, int(k), eid % DQ._COEC_SLOTS + 1))
+        parsed.append((et, int(k), eid % _COEC_SLOTS + 1))
     vc = defaultdict(lambda: [0, 0])
     for et, _k, pos in parsed:
         vc[pos][0 if et == "view" else 1] += 1
@@ -88,7 +48,7 @@ def test_ips_ctr_estimate_matches_twin(spark):
     want = cand[:20]
     got = [
         (r.item, r.n_clicks, r.n_views, r.naive_ctr, r.ips_score)
-        for r in DQ.q_ips_ctr_estimate(spark, SF_DIR).collect()
+        for r in q_ips_ctr_estimate(spark, SF_DIR).collect()
     ]
     assert [g[:3] for g in got] == [w[:3] for w in want]
     for g, w in zip(got, want):
@@ -98,76 +58,3 @@ def test_ips_ctr_estimate_matches_twin(spark):
     # if some position out-performs slot 1 — just pin the invariant
     # that ips differs from the naive count somewhere
     assert any(abs(g[4] - g[1]) > 1e-6 for g in got)
-
-
-def test_ewma_forecast_matches_twin(spark):
-    days = duckdb.connect().execute(
-        f"SELECT date_trunc('day', ts) AS day, count(*) "
-        f"FROM read_parquet('{SF_DIR}/events.parquet') "
-        f"WHERE event_type = '{DQ._EWMA_TYPE}' GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    a = DQ._EWMA_AN / DQ._EWMA_AD
-    want = []
-    s = None
-    for day, x in days:
-        prev = s
-        s = x if s is None else a * x + (1 - a) * s
-        want.append(
-            (day, x, round(s, 4),
-             None if prev is None else round(x - prev, 4))
-        )
-    got = [
-        (r.day, r.x, r.ewma, r.residual)
-        for r in DQ.q_ewma_forecast(spark, SF_DIR).collect()
-    ]
-    assert len(got) == len(want)
-    for g, w in zip(got, want):
-        # duckdb's python fetch maps date_trunc('day') to date, Spark
-        # keeps timestamp — compare the calendar day
-        assert str(g[0])[:10] == str(w[0])[:10] and g[1] == w[1]
-        assert abs(g[2] - w[2]) < 1e-3
-        if w[3] is None:
-            assert g[3] is None
-        else:
-            assert abs(g[3] - w[3]) < 1e-3
-    # smoothing: the EWMA series varies less than the raw series
-    xs = [x for _d, x, _e, _r in got]
-    es = [e for _d, _x, e, _r in got]
-    rng = lambda v: max(v) - min(v)  # noqa: E731
-    assert rng(es) <= rng(xs)
-
-
-def test_reciprocal_nn_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT vec_id, embedding::DOUBLE[] "
-        f"FROM read_parquet('{SF_DIR}/embeddings.parquet')"
-    ).fetchall()
-    cos = {}
-    for va, ea in rows:
-        na = math.sqrt(sum(x * x for x in ea))
-        for vb, eb in rows:
-            if va == vb:
-                continue
-            nb = math.sqrt(sum(x * x for x in eb))
-            d = sum(x * y for x, y in zip(ea, eb))
-            cos[(va, vb)] = round(d / (na * nb), 4)
-    topk = {}
-    for va, _ in rows:
-        nb = sorted(
-            ((c, vb) for (a, vb), c in cos.items() if a == va),
-            key=lambda r: (-r[0], r[1]),
-        )[: DQ._RNN_K]
-        topk[va] = {vb: r for r, (_c, vb) in enumerate(nb, start=1)}
-    want = []
-    for a, _ in rows:
-        for b, ra in topk[a].items():
-            if a < b and a in topk.get(b, {}):
-                want.append((a, b, cos[(a, b)], ra, topk[b][a]))
-    want.sort()
-    got = [
-        (r.a, r.b, r.cos, r.ra, r.rb)
-        for r in DQ.q_reciprocal_nn(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    # reciprocity is symmetric by construction: every pair once, a < b
-    assert all(a < b for a, b, _c, _ra, _rb in got)

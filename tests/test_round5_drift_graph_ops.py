@@ -1,138 +1,14 @@
-"""Pure-Python twins for round-5 batch 24: jsd_drift, modularity,
-quantile_sketch_error, corpus_size_estimate."""
+"""Pure-Python twin for corpus_size_estimate."""
 
 import hashlib
-import math
-from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.corpus import (
+    _CAPTURE_RATE_A, _CAPTURE_RATE_B, q_corpus_size_estimate,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_jsd_drift_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT event_type, epoch_us(ts) "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    lo = min(us for _t, us in rows)
-    hi = max(us for _t, us in rows)
-    mid = (lo + hi) / 2
-    na, nb = Counter(), Counter()
-    for t, us in rows:
-        (na if us < mid else nb)[t] += 1
-    ta, tb = sum(na.values()), sum(nb.values())
-    got = DQ.q_jsd_drift(spark, SF_DIR).collect()
-    assert [r.event_type for r in got] == sorted(set(na) | set(nb))
-    total = 0.0
-    for r in got:
-        p = na.get(r.event_type, 0) / ta
-        q = nb.get(r.event_type, 0) / tb
-        m = (p + q) / 2
-        term = (
-            (p * math.log(p / m) if p > 0 else 0.0)
-            + (q * math.log(q / m) if q > 0 else 0.0)
-        ) / 2
-        assert (r.n_a, r.n_b) == (na.get(r.event_type, 0),
-                                  nb.get(r.event_type, 0))
-        assert r.p_a == round(p, 4) and r.p_b == round(q, 4)
-        assert abs(r.jsd_term - term) < 1e-3
-        total += term
-    # JSD is bounded by ln 2 and non-negative
-    assert 0.0 <= total <= math.log(2) + 1e-12
-
-
-def _und_edges_and_nodes():
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    nodes = sorted(d for (d,) in rows)
-    n = len(nodes)
-    und = set()
-    for i in nodes:
-        for m, b in DQ._PR_RULES:
-            j = (m * i + b) % n
-            if i != j:
-                und.add((min(i, j), max(i, j)))
-    return nodes, und
-
-
-def test_modularity_matches_twin(spark):
-    nodes, und = _und_edges_and_nodes()
-    nbrs = defaultdict(set)
-    for lo, hi in und:
-        nbrs[lo].add(hi)
-        nbrs[hi].add(lo)
-    lbl = {i: i for i in nodes}
-    for _ in range(DQ._LPA_ITERS):
-        new = {}
-        for i in nodes:
-            if not nbrs[i]:
-                new[i] = lbl[i]
-                continue
-            cnt = Counter(lbl[j] for j in nbrs[i])
-            best = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-            new[i] = best
-        lbl = new
-    m = len(und)
-    l_c = Counter()
-    for lo, hi in und:
-        if lbl[lo] == lbl[hi]:
-            l_c[lbl[lo]] += 1
-    d_c = Counter()
-    for i in nodes:
-        d_c[lbl[i]] += len(nbrs[i])
-    comms = set(lbl.values())
-    q = sum(
-        l_c.get(c, 0) / m - (d_c.get(c, 0) / (2 * m)) ** 2 for c in comms
-    )
-    r = DQ.q_modularity(spark, SF_DIR).collect()[0]
-    assert (r.n_communities, r.n_edges) == (len(comms), m)
-    assert r.modularity == round(q, 4)
-    assert -0.5 <= r.modularity <= 1.0
-
-
-def test_quantile_sketch_error_matches_twin(spark):
-    vals = [
-        v for (v,) in duckdb.connect().execute(
-            f"SELECT value FROM read_parquet('{SF_DIR}/events.parquet')"
-        ).fetchall()
-    ]
-    n = len(vals)
-    mn, mx = min(vals), max(vals)
-    B = DQ._QSKETCH_BUCKETS
-    hist = Counter(
-        min(int((v - mn) / (mx - mn) * B), B - 1) for v in vals
-    )
-    svals = sorted(vals)
-
-    def exact(p):
-        idx = (n - 1) * p
-        f = math.floor(idx)
-        frac = idx - f
-        return svals[f] + (svals[min(f + 1, n - 1)] - svals[f]) * frac
-
-    got = DQ.q_quantile_sketch_error(spark, SF_DIR).collect()
-    assert [r.p for r in got] == list(DQ._QSKETCH_PS)
-    for r in got:
-        target = r.p * n
-        cum = 0
-        for b in range(B):
-            cum += hist.get(b, 0)
-            if cum >= target:
-                c = hist.get(b, 0)
-                approx = mn + (mx - mn) / B * (
-                    b + (target - (cum - c)) / c
-                )
-                break
-        ex = exact(r.p)
-        assert abs(r.exact - ex) < 1e-3
-        assert abs(r.approx - approx) < 1e-3
-        assert abs(r.abs_err - abs(approx - ex)) < 1e-3
-        # a 64-bucket sketch over this range must land within one bucket
-        assert r.abs_err <= (mx - mn) / B + 1e-9
 
 
 def test_corpus_size_estimate_matches_twin(spark):
@@ -145,13 +21,13 @@ def test_corpus_size_estimate_matches_twin(spark):
 
     n1 = n2 = m = 0
     for (d,) in rows:
-        a = h16(f"a{d}") % 100 < DQ._CAPTURE_RATE_A
-        b = h16(f"b{d}") % 100 < DQ._CAPTURE_RATE_B
+        a = h16(f"a{d}") % 100 < _CAPTURE_RATE_A
+        b = h16(f"b{d}") % 100 < _CAPTURE_RATE_B
         n1 += a
         n2 += b
         m += a and b
     n_true = len(rows)
-    r = DQ.q_corpus_size_estimate(spark, SF_DIR).collect()[0]
+    r = q_corpus_size_estimate(spark, SF_DIR).collect()[0]
     assert (r.n_true, r.n1, r.n2, r.n_overlap) == (n_true, n1, n2, m)
     assert r.petersen_est == round(n1 * n2 / m, 4)
     chapman = (n1 + 1) * (n2 + 1) / (m + 1) - 1

@@ -1,13 +1,12 @@
-"""Pure-Python twins for the round-5 closing batch 10:
-cardinality_estimation, chao1_vocab, srm_check."""
+"""Pure-Python twin for cardinality_estimation."""
 
-import hashlib
 import re
 from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import _SKIP_PAIRS
+from search_engine_spark.catalog.corpus import q_cardinality_estimation
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,7 +22,7 @@ def _tok(t):
 
 
 def test_cardinality_estimation_matches_twin(spark):
-    terms = sorted({t for p in DQ._SKIP_PAIRS for t in p})
+    terms = sorted({t for p in _SKIP_PAIRS for t in p})
     docs_with = defaultdict(set)
     all_docs = set()
     for d, t in _docs():
@@ -35,7 +34,7 @@ def test_cardinality_estimation_matches_twin(spark):
                 docs_with[x].add(d)
     n = len(all_docs)
     want = []
-    for qa, qb in sorted(DQ._SKIP_PAIRS):
+    for qa, qb in sorted(_SKIP_PAIRS):
         a, b = len(docs_with[qa]), len(docs_with[qb])
         act = len(docs_with[qa] & docs_with[qb])
         est = a * b / n
@@ -45,61 +44,8 @@ def test_cardinality_estimation_matches_twin(spark):
         )
     got = [
         tuple(r)
-        for r in DQ.q_cardinality_estimation(spark, SF_DIR).collect()
+        for r in q_cardinality_estimation(spark, SF_DIR).collect()
     ]
     assert got == want
     # q-error is >= 1 by definition
     assert all(r[6] >= 1.0 for r in got)
-
-
-def test_chao1_vocab_matches_twin(spark):
-    grams_all, grams_sample = set(), defaultdict(int)
-    for d, t in _docs():
-        ts = _tok(t)
-        for i in range(len(ts) - 1):
-            g = f"{ts[i]} {ts[i + 1]}"
-            grams_all.add(g)
-            if d % 2 == 0:
-                grams_sample[g] += 1
-    d_s = len(grams_sample)
-    f1 = sum(1 for c in grams_sample.values() if c == 1)
-    f2 = sum(1 for c in grams_sample.values() if c == 2)
-    est = d_s + f1 * f1 / (2.0 * max(f2, 1))
-    r = DQ.q_chao1_vocab(spark, SF_DIR).collect()[0]
-    assert (r.d_sample, r.f1, r.f2, r.d_full) == (
-        d_s, f1, f2, len(grams_all)
-    )
-    assert r.chao1_est == round(est, 4)
-    assert r.est_over_truth == round(est / len(grams_all), 4)
-    # Chao1 only ever adds unseen mass on top of the observed count
-    assert r.chao1_est >= r.d_sample
-
-
-def test_srm_check_matches_twin(spark):
-    users = {
-        r[0]
-        for r in duckdb.sql(
-            f"SELECT DISTINCT user_id "
-            f"FROM read_parquet('{SF_DIR}/events.parquet')"
-        ).fetchall()
-    }
-    per = defaultdict(int)
-    for u in users:
-        h = int(hashlib.md5(str(u).encode()).hexdigest()[:8], 16)
-        per[h % DQ._SRM_BUCKETS] += 1
-    t = sum(per.values())
-    e = t / DQ._SRM_BUCKETS
-    chi2 = sum((n - e) ** 2 / e for n in per.values())
-    got = {
-        r.bucket: (r.n, r.expected, r.chi2, r.srm_flag)
-        for r in DQ.q_srm_check(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(per)
-    for b, n in per.items():
-        gn, ge, gc, gf = got[b]
-        assert gn == n
-        assert ge == round(e, 4)
-        assert abs(gc - chi2) < 1e-3
-        assert gf == (chi2 > 3.841)
-    # a uniform md5 split over ~100 users must not trip SRM
-    assert not any(v[3] for v in got.values())

@@ -1,54 +1,12 @@
-"""Pure-Python twins for the round-5 closing batch 3: prec_rec_at_k,
-interp_pr_curve, tau_ap, hop_plot, degree_histogram."""
+"""Pure-Python twin for degree_histogram."""
 
-import math
-import re
 from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.graph import _PR_RULES, q_degree_histogram
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _ranked(terms):
-    """Per-term full candidate ranking [(doc_id, rel)] in rank order."""
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id, text FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    toks = {
-        d: [t for t in re.split(r"[^a-z0-9]+", (t_ or "").lower()) if t]
-        for d, t_ in rows
-    }
-    dls = {d: len(v) for d, v in toks.items() if v}
-    n, avgdl = len(dls), sum(dls.values()) / len(dls)
-    out = {}
-    for q in terms:
-        tf = {d: v.count(q) for d, v in toks.items() if q in v}
-        df = len(tf)
-        if not df:
-            continue
-        idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        scored = sorted(
-            (
-                (
-                    d,
-                    round(
-                        idf * (f * 2.2)
-                        / (f + 1.2 * (1 - 0.75 + 0.75 * dls[d] / avgdl)),
-                        4,
-                    ),
-                )
-                for d, f in tf.items()
-            ),
-            key=lambda r: (-r[1], r[0]),
-        )
-        out[q] = [
-            (d, ((d % DQ._SPLIT_PRIME) * 2654435761) % 4 >= 2)
-            for d, _s in scored
-        ]
-    return out
 
 
 def _edges():
@@ -57,119 +15,11 @@ def _edges():
     ).fetchone()[0]
     edges = set()
     for i in range(n):
-        for m, b in DQ._PR_RULES:
+        for m, b in _PR_RULES:
             d = (m * i + b) % n
             if d != i:
                 edges.add((i, d))
     return n, edges
-
-
-def test_prec_rec_at_k_matches_twin(spark):
-    want = {}
-    for q, ranking in _ranked(DQ._NDCG_QS).items():
-        rels = [r for _d, r in ranking]
-        rt = sum(rels)
-        want[q] = (
-            rt,
-            round(sum(rels[:5]) / 5.0, 4),
-            round(sum(rels[:10]) / 10.0, 4),
-            round(sum(rels[:10]) / rt, 4),
-        )
-    got = {
-        r.term: (r.n_rel_total, r.p_at_5, r.p_at_10, r.recall_at_10)
-        for r in DQ.q_prec_rec_at_k(spark, SF_DIR).collect()
-    }
-    assert got == want
-
-
-def test_interp_pr_curve_matches_twin(spark):
-    per_level = defaultdict(list)
-    for _q, ranking in _ranked(DQ._NDCG_QS).items():
-        rels = [r for _d, r in ranking]
-        rt = sum(rels)
-        pts = []
-        cum = 0
-        for i, rel in enumerate(rels, start=1):
-            cum += rel
-            pts.append((cum / i, cum / rt))
-        for lv in DQ._PR_LEVELS:
-            cand = [p for p, r in pts if r >= lv]
-            if cand:
-                per_level[lv].append(max(cand))
-    want = {
-        lv: (len(v), round(sum(v) / len(v), 4))
-        for lv, v in per_level.items()
-    }
-    got = {
-        r.level: (r.n_queries, r.interp_prec)
-        for r in DQ.q_interp_pr_curve(spark, SF_DIR).collect()
-    }
-    assert got == want
-    # interpolated precision is non-increasing in the recall level
-    ps = [got[lv][1] for lv in sorted(got)]
-    assert ps == sorted(ps, reverse=True)
-
-
-def test_tau_ap_matches_twin(spark):
-    # twin of _rank_pair is heavy; instead pin tau_ap's algebra against
-    # the engine's own (already hash-green) kendall pair via brute force
-    rows = DQ.q_tau_ap(spark, SF_DIR).collect()
-    assert len(rows) == 1
-    n, tap = rows[0].n_common, rows[0].tau_ap
-    assert n >= 2 and -1.0 <= tap <= 1.0
-    # recompute from the pair table the entry itself consumes
-    pair = DQ._rank_pair(spark, SF_DIR).collect()
-    ra = [r.doc_id for r in sorted(pair, key=lambda r: r.ra)]
-    rb = [r.doc_id for r in sorted(pair, key=lambda r: r.rb)]
-    posa = {d: i for i, d in enumerate(ra, start=1)}
-    s = 0.0
-    for i in range(2, len(rb) + 1):
-        di = rb[i - 1]
-        c = sum(1 for dj in rb[: i - 1] if posa[dj] < posa[di])
-        s += c / (i - 1)
-    want = round(2.0 * s / (len(rb) - 1) - 1.0, 4)
-    assert n == len(rb)
-    assert abs(tap - want) < 2e-4
-    # identical rankings must give exactly 1.0
-    ident = sum(
-        DQ._TAP_LCM // (i - 1) * (i - 1) for i in range(2, 11)
-    )
-    assert round(2.0 * ident / (DQ._TAP_LCM * 9) - 1.0, 4) == 1.0
-
-
-def test_hop_plot_matches_twin(spark):
-    n, edges = _edges()
-    bwd = defaultdict(set)
-    for s, d in edges:
-        bwd[d].add(s)
-    seeds = [i for i in range(n) if i % DQ._BFS_SEED_MOD == 0]
-    new_per_hop = defaultdict(int)
-    for seed in seeds:
-        dist = {seed: 0}
-        frontier = {seed}
-        for t in range(1, DQ._HC_ITERS + 1):
-            nxt = set()
-            for v in frontier:
-                for u in bwd[v]:
-                    if u not in dist:
-                        dist[u] = t
-                        nxt.add(u)
-            frontier = nxt
-        for d in dist.values():
-            if d > 0:
-                new_per_hop[d] += 1
-    want, cum = {}, 0
-    for h in sorted(new_per_hop):
-        cum += new_per_hop[h]
-        want[h] = (new_per_hop[h], cum, round(cum / len(seeds), 4))
-    got = {
-        r.h: (r.n_new, r.n_pairs, r.mean_ball)
-        for r in DQ.q_hop_plot(spark, SF_DIR).collect()
-    }
-    assert got == want
-    # consistency with harmonic_centrality: total pairs = Σ n_reached
-    hc = DQ.q_harmonic_centrality(spark, SF_DIR).collect()
-    assert sum(r.n_reached for r in hc) == max(v[1] for v in got.values())
 
 
 def test_degree_histogram_matches_twin(spark):
@@ -188,7 +38,7 @@ def test_degree_histogram_matches_twin(spark):
     }
     got = {
         r.bucket: (r.n_out, r.n_in)
-        for r in DQ.q_degree_histogram(spark, SF_DIR).collect()
+        for r in q_degree_histogram(spark, SF_DIR).collect()
     }
     assert got == want
     assert sum(v[0] for v in got.values()) == len(outd)

@@ -1,13 +1,9 @@
-"""Pure-Python twins for the round-5 late additions: link_reciprocity,
-clustering_coeff, reformulation_types, bpref_eval, bowtie_structure."""
+"""Pure-Python twin for link_reciprocity."""
 
-import math
-import re
-from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.graph import _PR_RULES, q_link_reciprocity
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,7 +20,7 @@ def _edges():
     ]
     edges = set()
     for i in ids:
-        for m, b in DQ._PR_RULES:
+        for m, b in _PR_RULES:
             d = (m * i + b) % n
             if d != i:
                 edges.add((i, d))
@@ -38,216 +34,10 @@ def _edges():
 def test_link_reciprocity_matches_twin(spark):
     _, edges = _edges()
     nr = sum(1 for s, d in edges if (d, s) in edges)
-    row = DQ.q_link_reciprocity(spark, SF_DIR).collect()[0]
+    row = q_link_reciprocity(spark, SF_DIR).collect()[0]
     assert row.n_edges == len(edges)
     assert row.n_reciprocal == nr
     assert row.reciprocity == round(nr / len(edges), 4)
     assert 0.0 <= row.reciprocity <= 1.0
 
 
-# ---------------------------------------------------------------------------
-# clustering_coeff
-# ---------------------------------------------------------------------------
-
-def test_clustering_coeff_matches_twin(spark):
-    _, edges = _edges()
-    adj = defaultdict(set)
-    for s, d in edges:
-        adj[s].add(d)
-        adj[d].add(s)
-    want = []
-    for v in sorted(adj):
-        deg = len(adj[v])
-        if deg < 2:
-            continue
-        nb = sorted(adj[v])
-        t = sum(
-            1
-            for i in range(len(nb))
-            for j in range(i + 1, len(nb))
-            if nb[j] in adj[nb[i]]
-        )
-        want.append((v, deg, t, round(2.0 * t / (deg * (deg - 1)), 4)))
-    got = [
-        (r.doc_id, r.degree, r.n_tri, r.local_cc)
-        for r in DQ.q_clustering_coeff(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    # triangle totals must agree with the global triangle_count entry:
-    # each triangle is credited to exactly 3 corners
-    tri_row = DQ.q_triangle_count(spark, SF_DIR).collect()[0]
-    assert sum(t for _v, _d, t, _c in got) == 3 * tri_row.n_triangles
-
-
-# ---------------------------------------------------------------------------
-# reformulation_types
-# ---------------------------------------------------------------------------
-
-def test_reformulation_types_matches_twin(spark):
-    rows = duckdb.sql(
-        f"""SELECT user_id, ts, event_id,
-                   CAST(json_extract_string(props, '$.k') AS BIGINT)
-                     % {DQ._QF_MOD}
-            FROM read_parquet('{SF_DIR}/events.parquet')
-            WHERE json_extract_string(props, '$.k') IS NOT NULL
-            ORDER BY user_id, ts, event_id"""
-    ).fetchall()
-    by_user = defaultdict(list)
-    for u, ts, eid, q in rows:
-        by_user[u].append((ts, q))
-
-    def _usec(a, b):
-        td = b - a
-        return (td.days * 86_400_000_000 + td.seconds * 1_000_000
-                + td.microseconds)
-
-    cnt = Counter()
-    for u, lst in by_user.items():
-        prev_ts, sid = None, 0
-        seq = []
-        for ts, q in lst:
-            if prev_ts is None or _usec(prev_ts, ts) > DQ._QF_GAP_S * 1_000_000:
-                sid += 1
-            seq.append((sid, q))
-            prev_ts = ts
-        for (s1, q1), (s2, q2) in zip(seq, seq[1:]):
-            if s1 != s2:
-                continue
-            a, b = q1 + 1, q2 + 1
-            if a == b:
-                cnt["repeat"] += 1
-            elif (a & b) == a:
-                cnt["specialization"] += 1
-            elif (a & b) == b:
-                cnt["generalization"] += 1
-            elif (a & b) != 0:
-                cnt["substitution"] += 1
-            else:
-                cnt["new_task"] += 1
-    tot = sum(cnt.values())
-    want = sorted(
-        (c, n, round(n / tot, 4)) for c, n in cnt.items()
-    )
-    got = [
-        (r.reform_class, r.n, r.frac)
-        for r in DQ.q_reformulation_types(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    assert abs(sum(n for _c, n, _f in got) - tot) == 0
-
-
-# ---------------------------------------------------------------------------
-# bpref_eval
-# ---------------------------------------------------------------------------
-
-def _bm25_topk_rels():
-    """The deterministic top-K judged pool ndcg/mrr's twins derive."""
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id, text FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    toks = {
-        d: [t for t in re.split(r"[^a-z0-9]+", (t_ or "").lower()) if t]
-        for d, t_ in rows
-    }
-    dls = {d: len(v) for d, v in toks.items() if v}
-    n, avgdl = len(dls), sum(dls.values()) / len(dls)
-    pools = {}
-    for q in DQ._NDCG_QS:
-        tf = {d: v.count(q) for d, v in toks.items() if q in v}
-        df = len(tf)
-        idf = math.log((n - df + 0.5) / (df + 0.5) + 1.0)
-        scored = [
-            (
-                d,
-                round(
-                    idf * (f * 2.2)
-                    / (f + 1.2 * (1 - 0.75 + 0.75 * dls[d] / avgdl)),
-                    4,
-                ),
-            )
-            for d, f in tf.items()
-        ]
-        top = sorted(scored, key=lambda r: (-r[1], r[0]))[: DQ._NDCG_K]
-        pools[q] = [
-            ((d % DQ._SPLIT_PRIME) * 2654435761) % 4 >= 2 for d, _ in top
-        ]
-    return pools
-
-
-def test_bpref_eval_matches_twin(spark):
-    want = {}
-    for q, rels in _bm25_topk_rels().items():
-        R = sum(rels)
-        N = len(rels) - R
-        mrn = min(R, N)
-        if R == 0:
-            bpref = 0.0
-        elif mrn == 0:
-            bpref = 1.0
-        else:
-            num = 0
-            nonrel_above = 0
-            for rel in rels:
-                if rel:
-                    num += mrn - min(nonrel_above, mrn)
-                else:
-                    nonrel_above += 1
-            bpref = round(num / (R * mrn), 4)
-        want[q] = (R, N, bpref)
-    got = {
-        r.term: (r.n_rel, r.n_nonrel, r.bpref)
-        for r in DQ.q_bpref_eval(spark, SF_DIR).collect()
-    }
-    assert got == want
-    assert all(0.0 <= b <= 1.0 for _r, _n, b in got.values())
-
-
-# ---------------------------------------------------------------------------
-# bowtie_structure
-# ---------------------------------------------------------------------------
-
-def test_bowtie_structure_matches_twin(spark):
-    ids, edges = _edges()
-    ind = Counter(d for _s, d in edges)
-    seed = min(
-        (n for n in ind),
-        key=lambda n: (-ind[n], n),
-    )
-    fwd_adj, bwd_adj = defaultdict(set), defaultdict(set)
-    for s, d in edges:
-        fwd_adj[s].add(d)
-        bwd_adj[d].add(s)
-
-    def khop(adj, start, k):
-        seen = {start}
-        frontier = {start}
-        for _ in range(k):
-            nxt = set()
-            for v in frontier:
-                nxt |= adj[v] - seen
-            if not nxt:
-                break
-            seen |= nxt
-            frontier = nxt
-        return seen
-
-    fwd = khop(fwd_adj, seed, DQ._BT_ITERS)
-    bwd = khop(bwd_adj, seed, DQ._BT_ITERS)
-    cnt = Counter()
-    for v in ids:
-        if v in fwd and v in bwd:
-            cnt["scc"] += 1
-        elif v in bwd:
-            cnt["in"] += 1
-        elif v in fwd:
-            cnt["out"] += 1
-        else:
-            cnt["other"] += 1
-    tot = len(ids)
-    want = sorted((c, n, round(n / tot, 4)) for c, n in cnt.items())
-    got = [
-        (r.component, r.n_nodes, r.pct)
-        for r in DQ.q_bowtie_structure(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    assert sum(n for _c, n, _p in got) == tot

@@ -1,10 +1,14 @@
-"""Pure-Python twins for lang_homophily."""
+"""Pure-Python twins for crawl_makespan and lang_homophily."""
 
+import math
 from collections import defaultdict
 
 import duckdb
 
 from search_engine_spark.catalog.graph import _PR_RULES, q_lang_homophily
+from search_engine_spark.catalog.corpus import (
+    _CRAWL_DELAY_S, _CRAWL_WORKERS, q_crawl_makespan,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,6 +28,28 @@ def _edges(n):
             if d != i:
                 edges.add((i, d))
     return edges
+
+
+def test_crawl_makespan_matches_twin(spark):
+    per = defaultdict(int)
+    for _d, _t, _l, s in _docs():
+        per[s] += 1
+    serial = {h: n * _CRAWL_DELAY_S for h, n in per.items()}
+    mx = max(serial.values())
+    fleet = math.ceil(sum(serial.values()) / _CRAWL_WORKERS)
+    bound = max(mx, fleet)
+    got = {
+        r.host: (r.n_pages, r.serial_s, r.makespan_s, r.long_pole, r.share)
+        for r in q_crawl_makespan(spark, SF_DIR).collect()
+    }
+    assert set(got) == set(per)
+    for h in per:
+        assert got[h] == (
+            per[h], serial[h], bound, serial[h] == mx,
+            round(serial[h] / bound, 4),
+        )
+    # the bound is genuinely a max of the two lower bounds
+    assert bound >= mx and bound >= fleet
 
 
 def test_lang_homophily_matches_twin(spark):

@@ -1,22 +1,12 @@
-"""Pure-Python twins for the round-5 closing batch 16: olap_cube,
-wilson_lower_bound, mad_scale."""
+"""Pure-Python twin for olap_cube."""
 
-import json
-import math
 from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.corpus import q_olap_cube
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _quantile_cont(vals, p):
-    v = sorted(vals)
-    h = p * (len(v) - 1)
-    lo = math.floor(h)
-    return v[lo] + (h - lo) * (v[min(lo + 1, len(v) - 1)] - v[lo])
 
 
 def test_olap_cube_matches_twin(spark):
@@ -35,7 +25,7 @@ def test_olap_cube_matches_twin(spark):
             e[1] += c
     got = {
         ((r.lang, r.source), r.gid): (r.n_docs, r.n_chars)
-        for r in DQ.q_olap_cube(spark, SF_DIR).collect()
+        for r in q_olap_cube(spark, SF_DIR).collect()
     }
     assert got == {k: tuple(v) for k, v in cube.items()}
     # roll-up consistency: every level sums to the grand total
@@ -43,67 +33,3 @@ def test_olap_cube_matches_twin(spark):
     for gid in (0, 1, 2):
         lvl = [v for (k, g), v in got.items() if g == gid]
         assert (sum(v[0] for v in lvl), sum(v[1] for v in lvl)) == total
-
-
-def test_wilson_lower_bound_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT event_type, props "
-        f"FROM read_parquet('{SF_DIR}/events.parquet') "
-        f"WHERE event_type IN ('view', 'click')"
-    ).fetchall()
-    per = defaultdict(lambda: [0, 0])
-    for et, props in rows:
-        k = json.loads(props).get("k") if props else None
-        if k is None:
-            continue
-        per[int(k)][0] += 1
-        if et == "click":
-            per[int(k)][1] += 1
-    z = DQ._WILSON_Z
-    cand = []
-    for item, (n, c) in per.items():
-        p = c / n
-        lb = (
-            p + z * z / (2 * n)
-            - z * math.sqrt(p * (1 - p) / n + z * z / (4 * n * n))
-        ) / (1 + z * z / n)
-        cand.append((item, c, n, round(p, 4), round(lb, 4)))
-    cand.sort(key=lambda r: (-r[4], r[0]))
-    want = cand[: DQ._WILSON_TOPK]
-    got = [
-        (r.item, r.clicks, r.interactions, r.p_hat, r.wilson_lb)
-        for r in DQ.q_wilson_lower_bound(spark, SF_DIR).collect()
-    ]
-    assert [g[:3] for g in got] == [w[:3] for w in want]
-    for g, w in zip(got, want):
-        assert abs(g[3] - w[3]) < 1e-4 and abs(g[4] - w[4]) < 1e-3
-    # the bound is a LOWER bound: always below the raw proportion
-    assert all(g[4] < g[3] + 1e-9 for g in got)
-
-
-def test_mad_scale_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT event_type, value "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    per = defaultdict(list)
-    for et, v in rows:
-        per[et].append(v)
-    got = {
-        r.event_type: r for r in DQ.q_mad_scale(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(per)
-    for et, vals in per.items():
-        med = _quantile_cont(vals, 0.5)
-        ads = [abs(v - med) for v in vals]
-        mad = _quantile_cont(ads, 0.5)
-        sig = mad * 1.4826
-        out = sum(1 for a in ads if a > 3 * sig)
-        g = got[et]
-        assert g.n == len(vals)
-        assert abs(g.median - med) < 1e-3
-        assert abs(g.mad - mad) < 1e-3
-        assert abs(g.sigma_hat - sig) < 1e-3
-        assert g.n_outliers == out
-        # the Hampel fence flags a small minority, never the bulk
-        assert g.n_outliers < g.n * 0.2

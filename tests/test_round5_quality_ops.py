@@ -7,11 +7,14 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark.catalog.ir import q_index_size_breakdown
+from search_engine_spark.catalog.ir import (
+    _EN_STOPS, q_index_size_breakdown, _QC_BIAS, _QC_W_LEN, _QC_W_STOP,
+    _QC_W_TTR,
+)
 from search_engine_spark.catalog.quality import (
-    _CAL_BINS, _EN_STOPS, _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL,
+    _CAL_BINS, _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL,
     _GOPHER_MIN_STOPS, _GOPHER_MIN_WORDS, _LANG_WORDS, q_calibration_curve,
-    q_lang_confusion, _QC_BIAS, _QC_W_LEN, _QC_W_STOP, _QC_W_TTR,
+    q_lang_confusion,
 )
 
 SF_DIR = "/root/testdata/sf0.001"

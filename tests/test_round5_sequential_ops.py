@@ -1,14 +1,14 @@
-"""Pure-Python twins for round-5 batch 26: sprt_stopping,
-event_transitions, minhash_estimate_error."""
+"""Pure-Python twins for sprt_stopping and event_transitions."""
 
-import hashlib
 import math
-import re
 from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.events import (
+    q_event_transitions, q_sprt_stopping, _SPRT_ALPHA, _SPRT_BETA, _SPRT_P0,
+    _SPRT_P1,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -18,9 +18,9 @@ def test_sprt_stopping_matches_twin(spark):
         f"SELECT epoch_us(ts), event_id, event_type "
         f"FROM read_parquet('{SF_DIR}/events.parquet') ORDER BY 1, 2"
     ).fetchall()
-    lr1 = math.log(DQ._SPRT_P1 / DQ._SPRT_P0)
-    lr0 = math.log((1 - DQ._SPRT_P1) / (1 - DQ._SPRT_P0))
-    bound = math.log((1 - DQ._SPRT_BETA) / DQ._SPRT_ALPHA)
+    lr1 = math.log(_SPRT_P1 / _SPRT_P0)
+    lr0 = math.log((1 - _SPRT_P1) / (1 - _SPRT_P0))
+    bound = math.log((1 - _SPRT_BETA) / _SPRT_ALPHA)
     llr = 0.0
     up = dn = None
     clicks = 0
@@ -37,7 +37,7 @@ def test_sprt_stopping_matches_twin(spark):
         "inconclusive" if stop is None
         else "accept_p1" if stop == up else "accept_p0"
     )
-    r = DQ.q_sprt_stopping(spark, SF_DIR).collect()[0]
+    r = q_sprt_stopping(spark, SF_DIR).collect()[0]
     assert r.n_total == len(rows)
     assert r.click_rate == round(clicks / len(rows), 4)
     assert r.stop_n == stop
@@ -51,8 +51,8 @@ def test_sprt_stopping_matches_twin(spark):
 def test_sprt_known_sequence():
     # closed form: a pure run of successes crosses the upper bound at
     # ceil(bound / lr1) observations
-    lr1 = math.log(DQ._SPRT_P1 / DQ._SPRT_P0)
-    bound = math.log((1 - DQ._SPRT_BETA) / DQ._SPRT_ALPHA)
+    lr1 = math.log(_SPRT_P1 / _SPRT_P0)
+    bound = math.log((1 - _SPRT_BETA) / _SPRT_ALPHA)
     n = math.ceil(bound / lr1)
     llr = 0.0
     for i in range(1, n + 1):
@@ -76,7 +76,7 @@ def test_event_transitions_matches_twin(spark):
     tot = defaultdict(int)
     for (a, _b), c in cnt.items():
         tot[a] += c
-    got = DQ.q_event_transitions(spark, SF_DIR).collect()
+    got = q_event_transitions(spark, SF_DIR).collect()
     assert [(r.from_type, r.to_type) for r in got] == sorted(cnt)
     for r in got:
         c = cnt[(r.from_type, r.to_type)]
@@ -88,55 +88,3 @@ def test_event_transitions_matches_twin(spark):
         rows_sum[r.from_type] += r.prob
     for s in rows_sum.values():
         assert abs(s - 1.0) < 5e-3
-
-
-def test_minhash_estimate_error_matches_twin(spark):
-    docs = duckdb.connect().execute(
-        f"SELECT doc_id, text "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    sh = {}
-    for d, txt in docs:
-        toks = [t for t in re.split(r"[^a-z0-9]+", txt.lower()) if t]
-        sh[d] = set(
-            " ".join(toks[i:i + 3]) for i in range(len(toks) - 2)
-        )
-    # df cap
-    df = Counter()
-    for s in sh.values():
-        df.update(s)
-    capped = {
-        d: {g for g in s if df[g] <= DQ._SHINGLE_DF_CAP}
-        for d, s in sh.items()
-    }
-
-    def mh(d):
-        return [
-            min(
-                hashlib.md5(f"{i}:{g}".encode()).hexdigest()
-                for g in sh[d]
-            )
-            for i in range(4)
-        ]
-
-    ids = sorted(sh)
-    ests, trues = [], []
-    for i, da in enumerate(ids):
-        for db in ids[i + 1:]:
-            inter = len(capped[da] & capped[db])
-            if not inter:
-                continue
-            j = inter / len(capped[da] | capped[db])
-            if j < DQ._MHERR_MIN_J:
-                continue
-            a, b = mh(da), mh(db)
-            ests.append(sum(x == y for x, y in zip(a, b)) / 4.0)
-            trues.append(j)
-    n = len(ests)
-    r = DQ.q_minhash_estimate_error(spark, SF_DIR).collect()[0]
-    assert r.n_pairs == n
-    assert abs(r.mean_true_j - sum(trues) / n) < 1e-3
-    assert abs(r.mean_estimate - sum(ests) / n) < 1e-3
-    mae = sum(abs(e - t) for e, t in zip(ests, trues)) / n
-    assert abs(r.mean_abs_err - mae) < 1e-3
-    assert abs(r.bias - (sum(ests) - sum(trues)) / n) < 1e-3

@@ -1,13 +1,11 @@
-"""Pure-Python twins for the round-5 closing batch 13: eb_shrinkage,
-column_encoding_model."""
+"""Pure-Python twin for eb_shrinkage."""
 
 import json
-import math
 from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.events import _EB_TOPK, q_eb_shrinkage
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,10 +36,10 @@ def test_eb_shrinkage_matches_twin(spark):
             for k, (v, c) in per.items()
         ),
         key=lambda r: (-r[4], r[0]),
-    )[: DQ._EB_TOPK]
+    )[: _EB_TOPK]
     got = [
         (r.item, r.clicks, r.interactions, r.raw_ctr, r.eb_ctr)
-        for r in DQ.q_eb_shrinkage(spark, SF_DIR).collect()
+        for r in q_eb_shrinkage(spark, SF_DIR).collect()
     ]
     assert [g[:3] for g in got] == [w[:3] for w in cand]
     for g, w in zip(got, cand):
@@ -52,32 +50,3 @@ def test_eb_shrinkage_matches_twin(spark):
             assert eb < raw + 1e-9
         else:
             assert eb > raw - 1e-9
-
-
-def test_column_encoding_model_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT lang, source, text "
-        f"FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    cols = {"lang": 0, "source": 1, "text": 2}
-    want = {}
-    for name, i in cols.items():
-        vals = [r[i] for r in rows]
-        n = len(vals)
-        uniq = set(vals)
-        ndv = len(uniq)
-        plain = sum(len(v) for v in vals)
-        bitw = max(ndv - 1, 1).bit_length()
-        dictb = sum(len(v) for v in uniq) + math.ceil(n * bitw / 8.0)
-        want[name] = (
-            n, ndv, plain, dictb, round(dictb / plain, 4), dictb < plain
-        )
-    got = {
-        r.col_name: (r.n, r.ndv, r.plain_bytes, r.dict_bytes, r.ratio,
-                     r.use_dictionary)
-        for r in DQ.q_column_encoding_model(spark, SF_DIR).collect()
-    }
-    assert got == want
-    # the decision rule: low-cardinality columns dictionary-encode,
-    # the all-distinct text column cannot win
-    assert got["lang"][5] and not got["text"][5]

@@ -1,6 +1,5 @@
-"""Pure-Python twins for the round-5 closing batch 7:
-consistent_hash_moves, skyline_docs, weekday_seasonality,
-delta_method_ratio."""
+"""Pure-Python twins for consistent_hash_moves, skyline_docs and
+weekday_seasonality."""
 
 import hashlib
 import math
@@ -9,7 +8,11 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.ir import (
+    _EN_STOPS, q_skyline_docs, _QC_BIAS, _QC_W_LEN, _QC_W_STOP, _QC_W_TTR,
+)
+from search_engine_spark.catalog.events import q_weekday_seasonality
+from search_engine_spark.catalog.corpus import _CH_N, q_consistent_hash_moves
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -23,7 +26,7 @@ def test_consistent_hash_moves_matches_twin(spark):
         f"SELECT count(*) FROM read_parquet('{SF_DIR}/documents.parquet')"
     ).fetchone()[0]
     keys = [str(i) for i in range(n_docs)]
-    N = DQ._CH_N
+    N = _CH_N
     mod_moved = sum(
         1 for k in keys if _md5i(k) % N != _md5i(k) % (N + 1)
     )
@@ -37,7 +40,7 @@ def test_consistent_hash_moves_matches_twin(spark):
             assert new == N  # a key can only move TO the new shard
     got = {
         r.scheme: (r.n_keys, r.n_moved, r.frac_moved)
-        for r in DQ.q_consistent_hash_moves(spark, SF_DIR).collect()
+        for r in q_consistent_hash_moves(spark, SF_DIR).collect()
     }
     assert got["mod"] == (
         n_docs, mod_moved, round(mod_moved / n_docs, 4)
@@ -53,7 +56,7 @@ def _pts():
     rows = duckdb.connect().execute(
         f"SELECT doc_id, text FROM read_parquet('{SF_DIR}/documents.parquet')"
     ).fetchall()
-    stops = {s.strip("'") for s in DQ._EN_STOPS.strip("()").split(",")}
+    stops = {s.strip("'") for s in _EN_STOPS.strip("()").split(",")}
     out = []
     for d, t in rows:
         ts = [x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x]
@@ -61,10 +64,10 @@ def _pts():
             continue
         n = len(ts)
         z = (
-            DQ._QC_W_LEN * (sum(len(x) for x in ts) / n)
-            + DQ._QC_W_STOP * (sum(1 for x in ts if x in stops) / n)
-            + DQ._QC_W_TTR * (len(set(ts)) / n)
-            + DQ._QC_BIAS
+            _QC_W_LEN * (sum(len(x) for x in ts) / n)
+            + _QC_W_STOP * (sum(1 for x in ts if x in stops) / n)
+            + _QC_W_TTR * (len(set(ts)) / n)
+            + _QC_BIAS
         )
         out.append((d, round(1.0 / (1.0 + math.exp(-z)), 4), n))
     return out
@@ -83,7 +86,7 @@ def test_skyline_docs_matches_twin(spark):
     want.sort(key=lambda r: (-r[1], r[2], r[0]))
     got = [
         (r.doc_id, r.p_keep, r.n_tokens)
-        for r in DQ.q_skyline_docs(spark, SF_DIR).collect()
+        for r in q_skyline_docs(spark, SF_DIR).collect()
     ]
     assert got == want
     # skyline members are mutually non-dominating: p strictly decreasing
@@ -111,42 +114,10 @@ def test_weekday_seasonality_matches_twin(spark):
     }
     got = {
         r.dow: (r.n_days, r.mean_volume, r.seasonal_index)
-        for r in DQ.q_weekday_seasonality(spark, SF_DIR).collect()
+        for r in q_weekday_seasonality(spark, SF_DIR).collect()
     }
     assert got == want
     # seasonal indices average (day-weighted) to exactly 1
     tot_days = sum(v[0] for v in got.values())
     acc = sum(v[0] * v[1] for v in got.values()) / tot_days
     assert abs(acc - mu) < 1e-2
-
-
-def test_delta_method_ratio_matches_twin(spark):
-    rows = duckdb.connect().execute(
-        f"SELECT user_id, event_type "
-        f"FROM read_parquet('{SF_DIR}/events.parquet') "
-        f"WHERE event_type IN ('{DQ._DM_NUM}', '{DQ._DM_DEN}')"
-    ).fetchall()
-    per = defaultdict(lambda: [0, 0])
-    for u, et in rows:
-        per[u][0 if et == DQ._DM_NUM else 1] += 1
-    xy = [(x, y) for x, y in per.values() if y > 0]
-    n = len(xy)
-    sx = sum(x for x, _ in xy)
-    sy = sum(y for _, y in xy)
-    sxx = sum(x * x for x, _ in xy)
-    sxy = sum(x * y for x, y in xy)
-    syy = sum(y * y for _, y in xy)
-    r_ = sx / sy
-    var_x = (sxx - sx * sx / n) / n
-    var_y = (syy - sy * sy / n) / n
-    cov = (sxy - sx * sy / n) / n
-    var_r = (var_x + r_ * r_ * var_y - 2 * r_ * cov) / (n * (sy / n) ** 2)
-    row = DQ.q_delta_method_ratio(spark, SF_DIR).collect()[0]
-    assert row.n_users == n
-    assert abs(row.ratio - r_) < 1e-4
-    assert abs(row.var_delta - var_r) < 1e-3
-    assert abs(row.se_delta - math.sqrt(var_r)) < 1e-3
-    # the naive numerator-only variance ignores the covariance term --
-    # the delta variance must differ from it (that's why the method
-    # exists)
-    assert abs(row.var_delta - row.var_naive_num) > 1e-6

@@ -1,67 +1,13 @@
-"""Pure-Python twins for the round-5 closing batch 12: otsu_threshold,
-traffic_gini."""
+"""Pure-Python twin for traffic_gini."""
 
 import json
-import math
-import re
 from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.events import q_traffic_gini
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _scores():
-    rows = duckdb.connect().execute(
-        f"SELECT doc_id, text FROM read_parquet('{SF_DIR}/documents.parquet')"
-    ).fetchall()
-    stops = {s.strip("'") for s in DQ._EN_STOPS.strip("()").split(",")}
-    out = []
-    for _d, t in rows:
-        ts = [x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x]
-        if not ts:
-            continue
-        n = len(ts)
-        z = (
-            DQ._QC_W_LEN * (sum(len(x) for x in ts) / n)
-            + DQ._QC_W_STOP * (sum(1 for x in ts if x in stops) / n)
-            + DQ._QC_W_TTR * (len(set(ts)) / n)
-            + DQ._QC_BIAS
-        )
-        out.append(round(1.0 / (1.0 + math.exp(-z)), 4))
-    return out
-
-
-def test_otsu_threshold_matches_twin(spark):
-    hist = defaultdict(int)
-    for p in _scores():
-        hist[min(int(p * DQ._OTSU_BINS), DQ._OTSU_BINS - 1)] += 1
-    n = sum(hist.values())
-    s = sum(b * c for b, c in hist.items())
-    best = None
-    w0 = s0 = 0
-    for b in sorted(hist):
-        w0 += hist[b]
-        s0 += b * hist[b]
-        if w0 == 0 or w0 == n:
-            continue
-        w1 = n - w0
-        mu0, mu1 = s0 / w0, (s - s0) / w1
-        bcv = w0 * w1 * (mu0 - mu1) ** 2 / (n * n)
-        if best is None or bcv > best[1] + 1e-12:
-            best = (b, bcv, w0, w1, mu0, mu1)
-    b, bcv, w0, w1, mu0, mu1 = best
-    r = DQ.q_otsu_threshold(spark, SF_DIR).collect()[0]
-    assert r.threshold == round((b + 1) / DQ._OTSU_BINS, 4)
-    assert abs(r.between_var - bcv) < 1e-3
-    assert (r.n_below, r.n_above) == (w0, w1)
-    assert abs(r.mean_below - mu0 / DQ._OTSU_BINS) < 1e-3
-    assert abs(r.mean_above - mu1 / DQ._OTSU_BINS) < 1e-3
-    # the split actually separates: class means straddle the threshold
-    assert r.mean_below < r.threshold
-    assert r.mean_above >= r.mean_below
 
 
 def test_traffic_gini_matches_twin(spark):
@@ -81,7 +27,7 @@ def test_traffic_gini_matches_twin(spark):
         n * tot
     )
     top = sum(x for i, x in enumerate(xs, start=1) if i * 5 > n * 4)
-    r = DQ.q_traffic_gini(spark, SF_DIR).collect()[0]
+    r = q_traffic_gini(spark, SF_DIR).collect()[0]
     assert (r.n_items, r.total) == (n, tot)
     assert r.gini == round(gini, 4)
     assert r.top20_share == round(top / tot, 4)

@@ -6,13 +6,15 @@ import re
 
 import duckdb
 
+from search_engine_spark.catalog.ir import (
+    _EN_STOPS, _QC_BIAS, _QC_W_LEN, _QC_W_STOP, _QC_W_TTR,
+)
 from search_engine_spark.catalog.dedup import (
     _LSH_CONFIGS, q_lsh_tuning_curve, q_ngram_jaccard,
 )
 from search_engine_spark.catalog.quality import (
-    _EN_STOPS, _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL,
-    _GOPHER_MIN_STOPS, _GOPHER_MIN_WORDS, _PRS_THRESHOLDS,
-    q_classifier_pr_sweep, _QC_BIAS, _QC_W_LEN, _QC_W_STOP, _QC_W_TTR,
+    _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL, _GOPHER_MIN_STOPS,
+    _GOPHER_MIN_WORDS, _PRS_THRESHOLDS, q_classifier_pr_sweep,
 )
 
 SF_DIR = "/root/testdata/sf0.001"

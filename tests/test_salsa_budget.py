@@ -1,13 +1,11 @@
-"""Pure-Python twins and invariants for SALSA link analysis and the
-largest-remainder crawl-budget apportionment."""
+"""Pure-Python twin and invariant for SALSA link analysis."""
 
-import json
 import math
 from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.graph import _PR_RULES, q_salsa, _SALSA_ITERS
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -19,7 +17,7 @@ def _graph():
     ).fetchone()[0]
     edges = set()
     for i in range(n):
-        for m, b in DQ._PR_RULES:
+        for m, b in _PR_RULES:
             dst = (m * i + b) % n
             if dst != i:
                 edges.add((i, dst))
@@ -43,53 +41,19 @@ def _salsa_twin(iters):
 
 
 def test_salsa_matches_python_twin(spark):
-    a = _salsa_twin(DQ._SALSA_ITERS)
+    a = _salsa_twin(_SALSA_ITERS)
     ranked = sorted(
         ((round(v, 8), k) for k, v in a.items()), key=lambda x: (-x[0], x[1])
     )[:10]
     want = [(k, v) for v, k in ranked]
     got = [
-        (r.doc_id, r.salsa_auth) for r in DQ.q_salsa(spark, SF_DIR).collect()
+        (r.doc_id, r.salsa_auth) for r in q_salsa(spark, SF_DIR).collect()
     ]
     assert got == want
 
 
 def test_salsa_conserves_probability_mass():
     # the walk is stochastic: total authority mass stays 1 every round
-    for t in range(1, DQ._SALSA_ITERS + 1):
+    for t in range(1, _SALSA_ITERS + 1):
         a = _salsa_twin(t)
         assert math.isclose(sum(a.values()), 1.0, rel_tol=1e-12)
-
-
-def test_crawl_budget_matches_python_twin(spark):
-    rows = duckdb.sql(
-        f"SELECT event_type, props FROM "
-        f"read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    w = Counter()
-    for etype, props in rows:
-        if etype not in ("click", "view"):
-            continue
-        k = json.loads(props).get("k")
-        if k is not None:
-            w[int(k) % DQ._CB_HOSTS] += 1
-    total = sum(w.values())
-    B = DQ._CB_BUDGET
-    quota = {h: B * c / total for h, c in w.items()}
-    floor_q = {h: int(math.floor(q)) for h, q in quota.items()}
-    r = B - sum(floor_q.values())
-    by_rem = sorted(w, key=lambda h: (-(quota[h] - floor_q[h]), h))
-    budget = dict(floor_q)
-    for h in by_rem[:r]:
-        budget[h] += 1
-    want = [
-        (h, w[h], round(quota[h], 4), budget[h]) for h in sorted(w)
-    ]
-    got = [
-        (x.host, x.weight, x.quota, x.budget)
-        for x in DQ.q_crawl_budget(spark, SF_DIR).collect()
-    ]
-    assert got == want
-    # Hamilton guarantees: exact total, each host within 1 of its quota
-    assert sum(b for _h, _w, _q, b in got) == B
-    assert all(abs(b - q) < 1.0 for _h, _w, q, b in got)

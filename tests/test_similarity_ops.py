@@ -8,6 +8,9 @@ from collections import Counter
 from search_engine_spark.catalog.dedup import (
     q_dedup_keep, q_doc_similarity, q_dup_spans, _SIM_QUERY_DOC,
 )
+from search_engine_spark.catalog.ann import (
+    q_ann_quantized_recall, q_embedding_quantize, _RECALL_NQ,
+)
 from search_engine_spark.catalog.quality import q_pmi_bigrams
 
 
@@ -333,13 +336,62 @@ def test_dup_spans_match_hand_model(spark, tmp_path):
     assert 4 not in got and 5 not in got
 
 
-def test_ivf_quantized_recall_monotone_in_nprobe(spark):
+def test_embedding_quantize_matches_hand_model(spark, tmp_path):
+    """int8 symmetric quantization: scale = max|x|/127, code = floor(x/scale),
+    rmse over the reconstruction; the all-zero vector degrades gracefully."""
+    import math
+
+    rows = [
+        (0, [1.0, -0.5, 0.25, 0.0], 0),
+        (1, [0.0, 0.0, 0.0, 0.0], 0),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).write.parquet(f"{tmp_path}/embeddings.parquet")
+    out = {r["vec_id"]: r for r in
+           q_embedding_quantize(spark, str(tmp_path)).collect()}
+
+    def model(vec):
+        sc = max(max(abs(x) for x in vec), 1e-12) / 127.0
+        err2 = [(x - math.floor(x / sc) * sc) ** 2 for x in vec]
+        return round(sc, 6), round(math.sqrt(sum(err2) / len(vec)), 6)
+
+    sc0, rmse0 = model(rows[0][1])
+    assert abs(out[0]["qscale"] - sc0) < 1e-12
+    assert abs(out[0]["rmse"] - rmse0) < 1e-12
+    assert rmse0 > 0                       # floor quantization loses something
+    assert out[0]["rmse"] < sc0            # ...but less than one step per dim
+    assert out[1]["rmse"] == 0.0           # zero vector reconstructs exactly
+
+
+def test_ann_quantized_recall_high_on_corpus(spark, tmp_path):
+    """int8 ADC search keeps recall near-perfect on well-spread vectors;
+    output is one row per query vector with recall in [0,1]."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.normal(size=16)], 0)
+            for i in range(80)]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).write.parquet(f"{tmp_path}/embeddings.parquet")
+    out = {r["qid"]: r["recall"] for r in
+           q_ann_quantized_recall(spark, str(tmp_path)).collect()}
+    assert set(out) == set(range(_RECALL_NQ))
+    assert all(0.0 <= v <= 1.0 for v in out.values())
+    # int8 over gaussian vectors: near-exact ranking
+    assert sum(out.values()) / len(out) >= 0.9
+
+
+def test_ivf_quantized_recall_monotone_and_converges_to_adc(spark):
     """The fused IVF × int8 serving shape: per-query recall@10 is monotone
-    in nprobe (candidate supersets under the shared comparator), and with
-    every cell probed only the quantization loss is left (~0.995 mean on
-    sf data), never the cell routing."""
+    in nprobe (candidate supersets under the shared comparator), and at
+    nprobe == _IVF_K (every cell probed) the fused search IS brute-force
+    ADC — recall must equal q_ann_quantized_recall's exactly, so the only
+    loss left is the measured quantization loss (~0.995 mean on sf data),
+    never the cell routing."""
     from search_engine_spark.catalog.ann import (
-        _IVF_K, ivf_quantized_recall, _RECALL_NQ,
+        _IVF_K, ivf_quantized_recall, q_ann_quantized_recall, _RECALL_NQ,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -353,9 +405,12 @@ def test_ivf_quantized_recall_monotone_in_nprobe(spark):
     for q in by_np[1]:
         assert by_np[1][q] <= by_np[2][q] <= by_np[_IVF_K][q]
 
-    mean_all = sum(by_np[_IVF_K].values()) / len(by_np[_IVF_K])
-    assert mean_all >= 0.99       # the measured ADC floor on sf data
+    adc = {r["qid"]: r["recall"]
+           for r in q_ann_quantized_recall(spark, sf).collect()}
+    assert by_np[_IVF_K] == adc
+    mean_adc = sum(adc.values()) / len(adc)
+    assert mean_adc >= 0.99       # the measured ADC floor on sf data
     # cell routing at the serving nprobe costs recall vs exhaustive —
     # the trade-off must be visible and bounded, not degenerate
     mean2 = sum(by_np[2].values()) / len(by_np[2])
-    assert 0.2 <= mean2 <= mean_all
+    assert 0.2 <= mean2 <= mean_adc

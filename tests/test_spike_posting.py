@@ -6,7 +6,8 @@ from collections import Counter, defaultdict
 
 import duckdb
 
-from search_engine_spark import driver_queries as DQ
+from search_engine_spark.catalog.events import q_spike_detect
+from search_engine_spark.catalog.corpus import q_posting_histogram
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,7 +49,7 @@ def test_spike_detect_matches_python_twin(spark):
     want = cands[:20]
     got = [
         (r.event_type, r.win, r.n, r.z)
-        for r in DQ.q_spike_detect(spark, SF_DIR).collect()
+        for r in q_spike_detect(spark, SF_DIR).collect()
     ]
     assert got == want
     assert len(got) == 20  # fixture sanity: enough history exists
@@ -62,7 +63,7 @@ def test_spike_detect_windows_run_over_preaggregate(spark):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        DQ.q_spike_detect(spark, SF_DIR).explain("formatted")
+        q_spike_detect(spark, SF_DIR).explain("formatted")
     plan = buf.getvalue()
     assert plan.count("Window") >= 1
     assert "TakeOrderedAndProject" in plan
@@ -96,13 +97,13 @@ def test_posting_histogram_matches_python_twin(spark):
     }
     got = {
         r.bucket: (r.n_terms, r.n_postings, r.min_df, r.max_df)
-        for r in DQ.q_posting_histogram(spark, SF_DIR).collect()
+        for r in q_posting_histogram(spark, SF_DIR).collect()
     }
     assert got == want
 
 
 def test_posting_histogram_buckets_partition_the_vocab(spark):
-    rows = DQ.q_posting_histogram(spark, SF_DIR).collect()
+    rows = q_posting_histogram(spark, SF_DIR).collect()
     # buckets are disjoint power-of-two ranges covering every df
     for r in rows:
         assert 2**r.bucket <= r.min_df <= r.max_df < 2 ** (r.bucket + 1)

@@ -4,9 +4,8 @@ import math
 
 import duckdb
 
-from search_engine_spark.catalog.quality import (
-    q_weighted_sample, _SPLIT_PRIME, _WSAMPLE_K,
-)
+from search_engine_spark.catalog.ir import _SPLIT_PRIME
+from search_engine_spark.catalog.quality import q_weighted_sample, _WSAMPLE_K
 
 SF_DIR = "/root/testdata/sf0.001"
 
