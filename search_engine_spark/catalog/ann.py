@@ -1,8 +1,7 @@
 """ANN and embedding catalog entries: brute-force, sign-LSH, IVF, IVF x int8
-and product-quantized search with measured recall, int8 quantization,
-semantic dedup, label centroids, hard negatives, hubness, anisotropy,
-drift, the top principal component and reciprocal-rank fusion of the BM25
-and ANN lists.
+and product-quantized search with measured recall, semantic dedup, label
+centroids, hard negatives, hubness, anisotropy, drift, the top principal
+component and reciprocal-rank fusion of the BM25 and ANN lists.
 """
 
 from __future__ import annotations
@@ -529,187 +528,6 @@ closure AS (
 clusters AS (SELECT doc, min(reach) AS cluster FROM closure GROUP BY doc)
 SELECT v.vec_id AS vec_id FROM embeddings v
 WHERE v.vec_id NOT IN (SELECT doc FROM clusters WHERE cluster <> doc)"""
-
-
-# ---------------------------------------------------------------------------
-# int8 embedding quantization (ANN compression path)
-# ---------------------------------------------------------------------------
-
-def q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 quantization of the embedding column — the memory
-    move that makes 10^12-vector ANN affordable (4x smaller, SIMD int8
-    dot products) — with its per-vector reconstruction error so the
-    recall cost is measurable before committing the index.
-
-    Per vector: scale = max|x| / 127, code_i = floor(x_i / scale)
-    (floor, not round: round-half ties break differently across engines),
-    rmse = sqrt(mean((x_i - code_i*scale)^2)).  Everything is JVM array
-    expressions over one narrow pass — no shuffle at all; the oracle is
-    the same arithmetic in DuckDB list lambdas."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    m = F.array_max(F.transform("e", lambda x: F.abs(x)))
-    staged = emb.withColumn(
-        "_sc", F.greatest(m, F.lit(1e-12)) / F.lit(127.0)
-    )
-    err2 = F.aggregate(
-        F.transform(
-            "e",
-            lambda x: F.pow(
-                x - F.floor(x / F.col("_sc")) * F.col("_sc"), F.lit(2.0)
-            ),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return staged.select(
-        "vec_id",
-        F.round("_sc", 6).alias("qscale"),
-        F.round(F.sqrt(err2 / F.size("e")), 6).alias("rmse"),
-    )
-
-
-SQL_EMBEDDING_QUANTIZE = """WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-staged AS (
-  SELECT vec_id, e,
-         greatest(list_aggregate(list_transform(e, x -> abs(x)), 'max'),
-                  1e-12) / 127.0 AS sc
-  FROM emb
-)
-SELECT vec_id, round(sc, 6) AS qscale,
-       round(sqrt(list_aggregate(
-                    list_transform(e, x -> pow(x - floor(x / sc) * sc, 2.0)),
-                    'sum') / len(e)), 6) AS rmse
-FROM staged"""
-
-
-def q_ann_quantized_recall(spark, sf_dir):
-    """recall@_RECALL_K of similarity search over the int8-QUANTIZED
-    index against the exact float top-K — the measured accuracy cost of
-    `embedding_quantize`'s 4x memory cut, the number an ANN user needs
-    before committing the compressed index.  Asymmetric distance (ADC,
-    the standard trick): the query stays float, only the database side
-    is dequantized codes.
-
-    Scale shape mirrors ivf_recall: _RECALL_NQ query vectors broadcast,
-    one narrow pass computes the dequantized vector + both norms per
-    candidate, both top-K ranks are windows PARTITIONED BY query — no
-    global sort; exact brute force is the ground truth by definition and
-    runs over a query sample."""
-    from pyspark.sql import Window
-
-    def nrm(c):
-        return F.sqrt(
-            F.aggregate(F.col(c), F.lit(0.0), lambda a, x: a + x * x)
-        )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
-    )
-    sc = F.greatest(
-        F.array_max(F.transform("e", lambda x: F.abs(x))), F.lit(1e-12)
-    ) / F.lit(127.0)
-    base = (
-        emb.withColumn("_sc", sc)
-        .withColumn(
-            "dq",
-            F.transform(
-                "e", lambda x: F.floor(x / F.col("_sc")) * F.col("_sc")
-            ),
-        )
-        .withColumn("nrm", nrm("e"))
-        .withColumn("dnrm", F.greatest(nrm("dq"), F.lit(1e-12)))
-    )
-    qs = base.filter(F.col("vec_id") < _RECALL_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("_cos").desc(), F.col("vec_id").asc()
-    )
-
-    def topk(vec_col, nrm_col):
-        dot = F.aggregate(
-            F.zip_with(vec_col, "qv", lambda a, b: a * b), F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return (
-            base.crossJoin(F.broadcast(qs))
-            .filter(F.col("vec_id") != F.col("qid"))
-            .withColumn(
-                "_cos", F.round(dot / (F.col(nrm_col) * F.col("qnrm")), 4)
-            )
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= _RECALL_K)
-            .select("qid", "vec_id")
-        )
-
-    exact, quant = topk("e", "nrm"), topk("dq", "dnrm")
-    hits = (
-        quant.join(exact, ["qid", "vec_id"])
-        .groupBy("qid").agg(F.count("*").alias("_h"))
-    )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.round(F.coalesce(F.col("_h"), F.lit(0)).cast("double")
-                    / _RECALL_K, 4).alias("recall"),
-        )
-        .orderBy("qid")
-    )
-
-
-SQL_ANN_QUANTIZED_RECALL = f"""WITH emb AS (
-  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-),
-st AS (
-  SELECT vec_id, e,
-         greatest(list_aggregate(list_transform(e, x -> abs(x)), 'max'),
-                  1e-12) / 127.0 AS sc
-  FROM emb
-),
-base AS (
-  SELECT vec_id, e, list_transform(e, x -> floor(x / sc) * sc) AS dq
-  FROM st
-),
-n AS (
-  SELECT vec_id, e, dq,
-         sqrt(list_dot_product(e, e)) AS nrm,
-         greatest(sqrt(list_dot_product(dq, dq)), 1e-12) AS dnrm
-  FROM base
-),
-qs AS (SELECT vec_id AS qid, e AS qv, nrm AS qnrm
-       FROM n WHERE vec_id < {_RECALL_NQ}),
-exact AS (
-  SELECT q.qid, f.vec_id, row_number() OVER (PARTITION BY q.qid
-    ORDER BY round(list_dot_product(f.e, q.qv) / (f.nrm * q.qnrm), 4) DESC,
-             f.vec_id ASC) AS rn
-  FROM n f CROSS JOIN qs q WHERE f.vec_id <> q.qid
-),
-quant AS (
-  SELECT q.qid, f.vec_id, row_number() OVER (PARTITION BY q.qid
-    ORDER BY round(list_dot_product(f.dq, q.qv) / (f.dnrm * q.qnrm), 4) DESC,
-             f.vec_id ASC) AS rn
-  FROM n f CROSS JOIN qs q WHERE f.vec_id <> q.qid
-),
-hits AS (
-  SELECT e.qid, count(*) AS h
-  FROM (SELECT qid, vec_id FROM exact WHERE rn <= {_RECALL_K}) e
-  JOIN (SELECT qid, vec_id FROM quant WHERE rn <= {_RECALL_K}) i
-    ON e.qid = i.qid AND e.vec_id = i.vec_id
-  GROUP BY e.qid
-)
-SELECT q.qid AS qid,
-       round(coalesce(h, 0)::DOUBLE / {_RECALL_K}, 4) AS recall
-FROM qs q LEFT JOIN hits ON q.qid = hits.qid
-ORDER BY qid"""
 
 
 # ---------------------------------------------------------------------------

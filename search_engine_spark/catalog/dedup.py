@@ -1,9 +1,8 @@
 """Dedup catalog entries: exact and first-wins dedup, shingle Jaccard,
 MinHash/LSH, winnowing, exact-substring spans, SimHash, clusters and the
-keep list, paragraph dedup, decontamination, tf-idf document similarity,
-incremental dedup, containment, mirror sources, the cross-source overlap
-matrix and the dedup audits (LSH tuning, threshold sensitivity, chain
-drift, rank impact, keeper policy).
+keep list, paragraph dedup, decontamination, tf-idf document similarity
+and the dedup audits (LSH tuning, threshold sensitivity, chain drift, rank
+impact).
 """
 
 from __future__ import annotations
@@ -845,58 +844,6 @@ WHERE d.doc_id NOT IN (SELECT doc FROM clusters WHERE cluster <> doc)"""
 
 
 # ---------------------------------------------------------------------------
-# incremental dedup: a delta crawl batch against an existing base corpus
-# ---------------------------------------------------------------------------
-
-def q_dedup_incremental(spark, sf_dir):
-    """Crawl-refresh dedup: treat even doc_ids as the BASE corpus already
-    indexed and odd doc_ids as the incoming DELTA batch, and give every
-    delta doc a verdict — 'dup_base' (exact text already in the base),
-    'dup_delta' (a lower-id delta doc has the same text), or 'new'.
-    This is the corpus-level twin of the engine's incremental append
-    (pipeline.run_append): only 'new' docs would be extracted and merged.
-
-    Shape at scale: base membership is a vocab-of-hashes LEFT join on
-    md5 (map-side-aggregated to distinct hashes first, so the join side
-    is |unique base texts|, not |base|); within-delta first-wins is a
-    min() window over the same md5 shuffle — no self-join, no sort."""
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.md5("text").alias("h"), (F.col("doc_id") % 2).alias("_odd")
-    )
-    base_h = d.filter(F.col("_odd") == 0).select("h").distinct()
-    delta = d.filter(F.col("_odd") == 1)
-    first = F.min("doc_id").over(Window.partitionBy("h"))
-    return (
-        delta.join(base_h.withColumn("_in_base", F.lit(1)), "h", "left")
-        .withColumn("_first", first)
-        .select(
-            "doc_id",
-            F.when(F.col("_in_base") == 1, F.lit("dup_base"))
-            .when(F.col("_first") < F.col("doc_id"), F.lit("dup_delta"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-        )
-    )
-
-
-SQL_DEDUP_INCREMENTAL = """WITH d AS (
-  SELECT doc_id, md5(text) AS h, doc_id % 2 AS odd FROM documents
-),
-base_h AS (SELECT DISTINCT h FROM d WHERE odd = 0),
-delta AS (
-  SELECT doc_id, h, min(doc_id) OVER (PARTITION BY h) AS first
-  FROM d WHERE odd = 1
-)
-SELECT delta.doc_id AS doc_id,
-       CASE WHEN base_h.h IS NOT NULL THEN 'dup_base'
-            WHEN delta.first < delta.doc_id THEN 'dup_delta'
-            ELSE 'new' END AS verdict
-FROM delta LEFT JOIN base_h ON delta.h = base_h.h"""
-
-
-# ---------------------------------------------------------------------------
 # CCNet-style paragraph-level exact dedup (aligned chunk hashing)
 # ---------------------------------------------------------------------------
 
@@ -959,202 +906,6 @@ flagged AS (
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_par,
        CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
 FROM flagged GROUP BY doc_id ORDER BY doc_id"""
-
-
-# ---------------------------------------------------------------------------
-# asymmetric shingle containment (subset-duplication detector)
-# ---------------------------------------------------------------------------
-
-_CONTAIN_MIN = 0.4   # report pairs where |A∩B| / |A| ≥ this
-
-
-def q_containment(spark, sf_dir):
-    """Asymmetric near-dup: shingle CONTAINMENT |A∩B| / |A| (Broder's
-    second resemblance measure) — catches a short doc swallowed by a
-    longer one (quotes, wrapped reposts, boilerplate shells), which
-    symmetric Jaccard under-scores because the union is large.  Reports
-    ordered pairs (contained, container) at containment ≥ _CONTAIN_MIN.
-
-    Scale shape: identical to ngram_jaccard — shared-shingle equi-join
-    with the head-shingle df cap bounding hot keys; containment just
-    divides by ONE side's size, so no new shuffle.  Both directions of
-    a pair come from the same joined row (a<b once, then both ratios),
-    not a second join.
-    """
-    sh = _shingles(spark, sf_dir)
-    df_ok = (
-        sh.groupBy("sh").agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= _SHINGLE_DF_CAP)
-        .select("sh")
-    )
-    sh = sh.join(df_ok, "sh", "left_semi")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("doc_id").alias("da"), "sh")
-    b = sh.select(F.col("doc_id").alias("db"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("da") < F.col("db"))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("inter"))
-        .join(sizes.select(F.col("doc_id").alias("da"),
-                           F.col("sz").alias("sza")), "da")
-        .join(sizes.select(F.col("doc_id").alias("db"),
-                           F.col("sz").alias("szb")), "db")
-    )
-    fwd = inter.select(
-        F.col("da").alias("contained"), F.col("db").alias("container"),
-        _r4(F.col("inter") / F.col("sza")).alias("containment"),
-    )
-    rev = inter.select(
-        F.col("db").alias("contained"), F.col("da").alias("container"),
-        _r4(F.col("inter") / F.col("szb")).alias("containment"),
-    )
-    return (
-        fwd.unionByName(rev)
-        .filter(F.col("containment") >= _CONTAIN_MIN)
-        .orderBy(
-            F.col("containment").desc(),
-            F.col("contained").asc(),
-            F.col("container").asc(),
-        )
-        .limit(20)
-    )
-
-
-SQL_CONTAINMENT = f"""WITH {_SHINGLES_SQL},
-capped AS (
-  SELECT s.doc_id, s.sh FROM shingles s
-  JOIN (SELECT sh FROM shingles GROUP BY sh
-        HAVING count(*) <= {_SHINGLE_DF_CAP}) ok ON s.sh = ok.sh
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM capped GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS inter
-  FROM capped a JOIN capped b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sized AS (
-  SELECT i.da, i.db, i.inter, sa.sz AS sza, sb.sz AS szb
-  FROM inter i JOIN sizes sa ON sa.doc_id = i.da
-  JOIN sizes sb ON sb.doc_id = i.db
-),
-dirs AS (
-  SELECT da AS contained, db AS container,
-         round(inter * 1.0 / sza, 4) AS containment FROM sized
-  UNION ALL
-  SELECT db AS contained, da AS container,
-         round(inter * 1.0 / szb, 4) AS containment FROM sized
-)
-SELECT contained, container, containment FROM dirs
-WHERE containment >= {_CONTAIN_MIN}
-ORDER BY containment DESC, contained ASC, container ASC LIMIT 20"""
-
-
-_MIRROR_W = 4            # shingle width (words)
-_MIRROR_SRC_CAP = 16     # drop shingles present on more hosts (boilerplate)
-
-
-def q_mirror_sources(spark, sf_dir):
-    """Host-level mirror detection (Bharat & Broder, WWW 1999): two
-    sources are mirror candidates when their sampled 4-word shingle sets
-    overlap heavily.  Pipeline: per-host distinct shingles → a
-    deterministic 1-in-4 sample by md5 prefix (the paper's hash-mod
-    shingle sampling, identical in both engines) → boilerplate cap
-    (shingles on more than _MIRROR_SRC_CAP hosts are dropped before the
-    pair join) → shared-shingle self-join → overlap = shared /
-    min(|A|, |B|) over the sampled sets.
-
-    Scale shape: shingling is a NARROW array transform per doc (no
-    positional self-join — contrast _shingles' 3-way join, which this
-    entry deliberately avoids); the sample keeps a fixed fraction of
-    shingle mass independent of corpus size; and the src-cap bounds the
-    per-shingle fanout so the pair join is linear in sampled shingle
-    occurrences, never quadratic in hot-shingle df.  At 10^8 hosts the
-    pair list is sparse because only co-occurring sampled shingles pair."""
-    arr = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda x: x != ""
-    )
-    d = _docs(spark, sf_dir).select("source", arr.alias("a"))
-    sh = (
-        d.filter(F.size("a") >= _MIRROR_W)
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size(a) - {_MIRROR_W - 1}), "
-                    "i -> concat_ws(' ', a[i-1], a[i], a[i+1], a[i+2]))"
-                )
-            ).alias("s"),
-        )
-        .distinct()
-        .filter(F.substring(F.md5("s"), 1, 1).isin("0", "1", "2", "3"))
-    )
-    sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
-    ok = (
-        sh.groupBy("s").agg(F.count("*").alias("_nf"))
-        .filter(F.col("_nf") <= _MIRROR_SRC_CAP)
-        .select("s")
-    )
-    sh = sh.join(ok, "s", "left_semi")
-    a = sh.select(F.col("source").alias("src_a"), "s")
-    b = sh.select(F.col("source").alias("src_b"), "s")
-    pairs = (
-        a.join(b, "s")
-        .filter(F.col("src_a") < F.col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(F.count("*").alias("shared"))
-    )
-    return (
-        pairs.join(
-            sizes.select(F.col("source").alias("src_a"), F.col("n").alias("na")),
-            "src_a",
-        )
-        .join(
-            sizes.select(F.col("source").alias("src_b"), F.col("n").alias("nb")),
-            "src_b",
-        )
-        .select(
-            "src_a", "src_b", "shared",
-            _r4(F.col("shared") / F.least("na", "nb")).alias("overlap"),
-        )
-        .orderBy(F.col("shared").desc(), "src_a", "src_b")
-        .limit(10)
-    )
-
-
-SQL_MIRROR_SOURCES = f"""WITH toks AS (
-  SELECT source,
-         unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                            x -> x <> '')) AS term,
-         generate_subscripts(list_filter(regexp_split_to_array(lower(text),
-                            '[^a-z0-9]+'), x -> x <> ''), 1) AS pos,
-         doc_id
-  FROM documents
-),
-sh AS (
-  SELECT DISTINCT t1.source,
-         t1.term || ' ' || t2.term || ' ' || t3.term || ' ' || t4.term AS s
-  FROM toks t1
-  JOIN toks t2 ON t1.doc_id = t2.doc_id AND t2.pos = t1.pos + 1
-  JOIN toks t3 ON t1.doc_id = t3.doc_id AND t3.pos = t1.pos + 2
-  JOIN toks t4 ON t1.doc_id = t4.doc_id AND t4.pos = t1.pos + 3
-),
-samp AS (SELECT source, s FROM sh WHERE substring(md5(s), 1, 1) IN
-         ('0', '1', '2', '3')),
-sizes AS (SELECT source, count(*) AS n FROM samp GROUP BY source),
-ok AS (SELECT s FROM samp GROUP BY s HAVING count(*) <= {_MIRROR_SRC_CAP}),
-pairs AS (
-  SELECT a.source AS src_a, b.source AS src_b, count(*) AS shared
-  FROM samp a JOIN ok ON a.s = ok.s
-  JOIN samp b ON a.s = b.s AND a.source < b.source
-  GROUP BY a.source, b.source
-)
-SELECT src_a, src_b, shared,
-       round(shared / least(x.n, y.n), 4) AS overlap
-FROM pairs
-JOIN sizes x ON src_a = x.source
-JOIN sizes y ON src_b = y.source
-ORDER BY shared DESC, src_a ASC, src_b ASC LIMIT 10"""
 
 
 # ---------------------------------------------------------------------------
@@ -1224,164 +975,6 @@ SELECT b, r,
        round(sum(1.0 - pow(1.0 - pow(jaccard, r), b)), 4)
          AS expected_collisions
 FROM pairs CROSS JOIN cfgs GROUP BY b, r ORDER BY b"""
-
-
-# ---------------------------------------------------------------------------
-# Cross-source exact-duplicate contamination matrix
-# ---------------------------------------------------------------------------
-
-
-def q_source_overlap_matrix(spark, sf_dir):
-    """Cross-source contamination matrix at 3-gram granularity: for
-    every source pair, how many DISTINCT shingles they share, each
-    side's distinct-shingle count, and the pair Jaccard — the audit
-    that tells a corpus owner which dump copies from which BEFORE
-    mixture weights double-count the shared text (the pairwise-source
-    generalization of q_decontaminate's one-benchmark-vs-corpus check;
-    host_mirror_detection is the same question at host granularity,
-    and exact-dup spans across sources — zero on this corpus — would
-    show up here as near-1 Jaccard).
-
-    Determinism: set sizes and intersections are exact integer counts
-    over distinct shingles.  Scale shape: per-source DISTINCT shingles
-    first (map-side aggregate — the join sides are distinct-shingle-
-    sized, not corpus-sized), then a self-join keyed on shingle; after
-    the source-level distinct a shingle appears at most once PER
-    SOURCE, so even a boilerplate shingle in every doc emits at most
-    |sources|² pairs — no df cap needed, unlike the doc-level joins.
-    Output is |sources|² rows."""
-    sh = _shingles(spark, sf_dir)
-    dh = (
-        sh.join(_docs(spark, sf_dir).select("doc_id", "source"), "doc_id")
-        .select("source", F.col("sh").alias("h"))
-        .distinct()
-    )
-    sizes = dh.groupBy("source").agg(F.count("*").cast("long").alias("nh"))
-    a = dh.select(F.col("source").alias("src_a"), "h")
-    b = dh.select(F.col("source").alias("src_b"), "h")
-    shared = (
-        a.join(b, "h")
-        .filter(F.col("src_a") < F.col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(F.count("*").cast("long").alias("n_shared"))
-    )
-    return (
-        shared.join(
-            F.broadcast(sizes.select(F.col("source").alias("src_a"),
-                                     F.col("nh").alias("n_a"))), "src_a")
-        .join(
-            F.broadcast(sizes.select(F.col("source").alias("src_b"),
-                                     F.col("nh").alias("n_b"))), "src_b")
-        .select(
-            "src_a", "src_b", "n_a", "n_b", "n_shared",
-            _r4(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-            ).alias("jaccard"),
-        )
-        .orderBy("src_a", "src_b")
-    )
-
-
-SQL_SOURCE_OVERLAP_MATRIX = f"""WITH {_SHINGLES_SQL},
-dh AS (
-  SELECT DISTINCT d.source, s.sh AS h
-  FROM shingles s JOIN documents d ON s.doc_id = d.doc_id
-),
-sizes AS (SELECT source, count(*) AS nh FROM dh GROUP BY source),
-shared AS (
-  SELECT a.source AS src_a, b.source AS src_b, count(*) AS n_shared
-  FROM dh a JOIN dh b ON a.h = b.h AND a.source < b.source
-  GROUP BY a.source, b.source
-)
-SELECT s.src_a, s.src_b,
-       CAST(sa.nh AS BIGINT) AS n_a, CAST(sb.nh AS BIGINT) AS n_b,
-       CAST(s.n_shared AS BIGINT) AS n_shared,
-       round(s.n_shared * 1.0 / (sa.nh + sb.nh - s.n_shared), 4)
-         AS jaccard
-FROM shared s
-JOIN sizes sa ON sa.source = s.src_a
-JOIN sizes sb ON sb.source = s.src_b
-ORDER BY s.src_a, s.src_b"""
-
-
-# ---------------------------------------------------------------------------
-# Dedup keeper-policy comparison (first-wins vs quality-wins)
-# ---------------------------------------------------------------------------
-
-
-def q_dedup_keeper_policy(spark, sf_dir):
-    """What first-wins dedup costs in kept quality: over the exact-dup
-    groups (md5, >1 member), compare keeper = min doc_id (first-wins,
-    what dedup_first_wins ships — order-dependent, crawl-arrival bias)
-    against keeper = max n_chars then min doc_id (quality-wins, the
-    CCNet/RefinedWeb-style choice).  One row: dup-group count, how many
-    groups pick a DIFFERENT keeper, and the mean kept n_chars under
-    each policy — the quality left on the table by arrival order.
-    (On a corpus whose exact dups are byte-identical the two means
-    coincide — the honest null result; the operator exists for corpora
-    where near-canonicalization upstream makes "same hash" groups span
-    different lengths, e.g. whitespace-normalized text columns.)
-
-    Determinism: both keepers are integer argmin/argmax with total tie
-    orders, expressed as one rank window per group (quality order
-    n_chars desc, doc_id asc) plus min/count over the same partition.
-    Scale shape: one hash-keyed window pass over (md5, doc_id,
-    n_chars) — the exact-dedup shuffle itself, nothing more; the
-    compare is a 1-row reduce."""
-    from pyspark.sql import Window
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", "n_chars", F.md5("text").alias("h")
-    )
-    wp = Window.partitionBy("h")
-    wq = wp.orderBy(F.col("n_chars").desc(), F.col("doc_id").asc())
-    grp = (
-        d.withColumn("_rn", F.row_number().over(wq))
-        .withColumn("_m", F.count("*").over(wp))
-        .withColumn("keep_first", F.min("doc_id").over(wp))
-        .filter((F.col("_rn") == 1) & (F.col("_m") > 1))
-        .select(
-            "h", "keep_first",
-            F.col("n_chars").alias("q_chars"),
-            F.col("doc_id").alias("keep_quality"),
-        )
-    )
-    first_chars = grp.join(
-        d.select(F.col("doc_id").alias("keep_first"),
-                 F.col("n_chars").alias("f_chars")),
-        "keep_first",
-    )
-    return first_chars.agg(
-        F.count("*").cast("long").alias("n_dup_groups"),
-        F.sum(
-            (F.col("keep_first") != F.col("keep_quality")).cast("int")
-        ).cast("long").alias("n_keeper_differs"),
-        _r4(F.avg("f_chars")).alias("mean_chars_first_wins"),
-        _r4(F.avg("q_chars")).alias("mean_chars_quality_wins"),
-    )
-
-
-SQL_DEDUP_KEEPER_POLICY = """WITH d AS (
-  SELECT doc_id, n_chars, md5(text) AS h FROM documents
-),
-grp AS (
-  SELECT h, keep_first, n_chars AS q_chars, doc_id AS keep_quality
-  FROM (
-    SELECT h, doc_id, n_chars,
-           row_number() OVER (PARTITION BY h
-                              ORDER BY n_chars DESC, doc_id ASC) AS rn,
-           count(*) OVER (PARTITION BY h) AS m,
-           min(doc_id) OVER (PARTITION BY h) AS keep_first
-    FROM d
-  ) WHERE rn = 1 AND m > 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_dup_groups,
-       CAST(sum(CASE WHEN g.keep_first <> g.keep_quality
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_keeper_differs,
-       round(avg(f.n_chars), 4) AS mean_chars_first_wins,
-       round(avg(g.q_chars), 4) AS mean_chars_quality_wins
-FROM grp g JOIN d f ON f.doc_id = g.keep_first"""
 
 
 # ---------------------------------------------------------------------------

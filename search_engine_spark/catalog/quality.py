@@ -1,6 +1,6 @@
 """Text-quality, language, token and sampling catalog entries: quality
 heuristics and the fixed-weight classifier with its calibration reports,
-LM cross-entropy, Kneser-Ney bigrams and perplexity buckets, language ID, token statistics,
+LM cross-entropy and perplexity buckets, language ID, token statistics,
 sequence packing, PII scrubbing and the sampling/mixing selectors.
 """
 
@@ -9,10 +9,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from search_engine_spark.catalog.ir import (
-    _dl, _docs, _EN_STOPS, _QC_BIAS, _QC_W_LEN, _QC_W_STOP, _QC_W_TTR, _r4,
-    _SPLIT_PRIME, _tf, _tokens, _TOKS_SQL,
+    _dl, _docs, _r4, _tf, _tokens, _TOKS_SQL,
 )
 from search_engine_spark.catalog.dedup import _DECON_MOD, _DECON_W, _word_grams
+
+
+_EN_STOPS = "('the','a','an','and','or','of','to','in','is','it','for','on')"
 
 
 def q_text_quality(spark, sf_dir):
@@ -684,6 +686,11 @@ SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
 FROM tf GROUP BY doc_id"""
 
 
+# fixed, deterministic logistic weights — stand-in for a trained
+# fastText-style quality model's inference pass
+_QC_W_LEN, _QC_W_STOP, _QC_W_TTR, _QC_BIAS = 0.8, 6.0, 1.5, -3.0
+
+
 def q_quality_classifier(spark, sf_dir):
     """Model-based quality filtering as pure JVM expressions: a logistic
     model over per-doc features (mean token length, stopword ratio,
@@ -840,6 +847,9 @@ SELECT tfb.doc_id AS doc_id, CAST(sum(tfb.tf) AS BIGINT) AS n_tokens,
 FROM tfb JOIN ratio ON tfb.b = ratio.b
 GROUP BY tfb.doc_id
 ORDER BY logw DESC, doc_id ASC LIMIT {_DSIR_K}"""
+
+
+_SPLIT_PRIME = 1000003   # same int64-safe reduction as stratified_sample
 _SPLIT_MOD = 10          # buckets 0-7 train, 8 val, 9 test
 
 
@@ -1304,92 +1314,6 @@ SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
 FROM cum CROSS JOIN tot
 WHERE cum_tokens <= CAST(floor({_CURR_FRAC} * tot.t) AS BIGINT)
 ORDER BY cum_tokens ASC"""
-
-
-# ---------------------------------------------------------------------------
-# language-model estimation: Kneser-Ney, Good-Turing, stopword induction
-# ---------------------------------------------------------------------------
-
-_KN_D = 0.75
-_KN_PROBES = [
-    ("order", "fast"), ("window", "join"), ("merge", "join"), ("fast", "data")
-]
-
-
-def q_kneser_ney(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram probabilities (Kneser & Ney, ICASSP
-    1995; Chen & Goodman 1998's benchmark winner) for a fixed probe set —
-    the smoothing a production LM actually ships, vs the additive
-    baseline bigram_logprob uses:
-    P(w2|w1) = max(c(w1w2)-D, 0)/c(w1.)
-               + D * N1+(w1,*)/c(w1.) * N1+(*,w2)/N1+(*,*)
-    with discount D={_KN_D}; the continuation probability counts
-    DISTINCT left-contexts, the insight that makes KN beat frequency
-    backoff.  Unseen probes exercise the pure-backoff path.
-
-    Scale shape: bigram counts and the three N1+ tables are map-side
-    combinable aggregates; the probe join keeps everything after them
-    at |probes| rows (the probe table is a literal); c(w1.) and
-    N1+(w1,*) are derived FROM the bigram table so the model is
-    internally consistent (no doc-boundary mismatch).
-    """
-    inst = _word_grams(spark, sf_dir, 2)
-    sp = F.split("g", " ")
-    bi = (
-        inst.select(sp[0].alias("w1"), sp[1].alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-    )
-    left = bi.groupBy("w1").agg(
-        F.sum("c12").alias("c1"),
-        F.count("*").alias("n1f"),      # N1+(w1, *)
-    )
-    right = bi.groupBy("w2").agg(F.count("*").alias("n1b"))  # N1+(*, w2)
-    types = bi.agg(F.count("*").alias("_nt"))                # N1+(*, *)
-    probes = spark.createDataFrame(_KN_PROBES, ["w1", "w2"])
-    p_cont = F.col("n1b") / F.col("_nt")
-    p_kn = (
-        F.greatest(F.coalesce("c12", F.lit(0)) - _KN_D, F.lit(0.0))
-        / F.col("c1")
-        + _KN_D * F.col("n1f") / F.col("c1") * p_cont
-    )
-    return (
-        probes.join(bi, ["w1", "w2"], "left")
-        .join(left, "w1")
-        .join(right, "w2")
-        .crossJoin(F.broadcast(types))
-        .select(
-            "w1", "w2",
-            F.coalesce("c12", F.lit(0)).cast("long").alias("c12"),
-            _r4(p_kn).alias("p_kn"),
-        )
-        .orderBy("w1", "w2")
-    )
-
-
-_KN_PROBE_VALUES = ", ".join(f"('{a}', '{b}')" for a, b in _KN_PROBES)
-
-SQL_KNESER_NEY = f"""WITH {_TOKS_SQL},
-bi AS (
-  SELECT a.term AS w1, b.term AS w2, count(*) AS c12
-  FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  GROUP BY a.term, b.term
-),
-lft AS (SELECT w1, sum(c12) AS c1, count(*) AS n1f FROM bi GROUP BY w1),
-rgt AS (SELECT w2, count(*) AS n1b FROM bi GROUP BY w2),
-types AS (SELECT count(*) AS nt FROM bi),
-probes(w1, w2) AS (VALUES {_KN_PROBE_VALUES})
-SELECT p.w1, p.w2,
-       CAST(coalesce(bi.c12, 0) AS BIGINT) AS c12,
-       round(greatest(coalesce(bi.c12, 0) - {_KN_D}, 0.0) / lft.c1
-             + {_KN_D} * lft.n1f / lft.c1
-               * (CAST(rgt.n1b AS DOUBLE) / types.nt), 4) AS p_kn
-FROM probes p
-LEFT JOIN bi ON p.w1 = bi.w1 AND p.w2 = bi.w2
-JOIN lft ON p.w1 = lft.w1
-JOIN rgt ON p.w2 = rgt.w2
-CROSS JOIN types
-ORDER BY p.w1, p.w2"""
 
 
 # ---------------------------------------------------------------------------

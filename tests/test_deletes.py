@@ -12,7 +12,7 @@ from search_engine_spark.operators.pipeline import (
 )
 from search_engine_spark.plans.wand import PackedQueryEngine
 
-from tests.test_packed_index import _mk_pages, _packed_fingerprint
+from tests.helpers import _mk_pages, _packed_fingerprint
 
 QUERIES = (
     "common engine",        # flat AND (WAND kernel)

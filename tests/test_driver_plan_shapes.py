@@ -3,33 +3,18 @@ the properties that keep them viable at 10^12 docs — 1-row corpus stats
 enter as BROADCAST side plans (never a driver collect, never a shuffled
 join), and the only nested-loop joins are those broadcast 1-row sides."""
 
-import contextlib
-import io
-
-from search_engine_spark.catalog.ir import (
-    _PFX_K, q_prefix_suggest, q_snippet_extract, q_spell_correct,
-    q_tfidf_keywords, _scored, _SPELL_LEN_BAND, _SPELL_NQ,
-)
+from search_engine_spark.catalog.ir import _scored
 from search_engine_spark.catalog.dedup import (
-    q_dedup_incremental, q_doc_similarity, q_dup_spans, q_paragraph_dedup,
+    q_doc_similarity, q_dup_spans, q_paragraph_dedup,
 )
-from search_engine_spark.catalog.ann import (
-    q_ann_quantized_recall, q_embedding_quantize, q_rrf_fusion,
-)
+from search_engine_spark.catalog.ann import q_rrf_fusion
 from search_engine_spark.catalog.quality import (
     _DSIR_BUCKETS, q_bigram_logprob, q_dsir_select, q_pmi_bigrams,
     q_quality_classifier, q_unigram_logprob,
 )
-from search_engine_spark.catalog.corpus import q_crawl_frontier
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _explain(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def _broadcast_only_nested_loops(plan: str) -> bool:
@@ -108,71 +93,12 @@ def test_dsir_select_broadcasts_only_the_fixed_bucket_table(spark):
     assert _DSIR_BUCKETS == 10_000
 
 
-def test_tfidf_keywords_vocab_join_is_unhinted(spark):
-    """The df table's cardinality is the corpus vocabulary — unbounded on
-    raw web text — so the AUTHORED plan must not force-broadcast it; the
-    only authored hint is the 1-row n_docs side.  (The planner may still
-    broadcast df at toy scale from its size stats — that's its call, not
-    a forced OOM at 100 TB.)  The keyword rank is a per-doc window (hash
-    shuffle on doc_id), never a rangepartitioned global sort."""
-    df = q_tfidf_keywords(spark, SF_DIR)
-    assert _analyzed(df).count("ResolvedHint") == 1      # ndocs only
-    plan = _explain(df)
-    assert _broadcast_only_nested_loops(plan)
-    assert "Window" in plan
-    assert "rangepartitioning" not in plan
-
-
 def test_unigram_logprob_vocab_join_is_unhinted(spark):
     """Same contract for the unigram LM: only the 1-row corpus total is
     an authored broadcast; the vocab-sized count table joins unhinted."""
     df = q_unigram_logprob(spark, SF_DIR)
     assert _analyzed(df).count("ResolvedHint") == 1      # tot only
     assert _broadcast_only_nested_loops(_explain(df))
-
-
-def test_embedding_quantize_is_shuffle_free(spark):
-    """Quantization is one narrow pass: no Exchange of any kind."""
-    plan = _explain(q_embedding_quantize(spark, SF_DIR))
-    assert "Exchange" not in plan
-
-
-def test_dedup_incremental_no_self_join_blowup(spark):
-    """Delta-vs-base is one equi-join on the text hash (base side distinct
-    first) + a per-hash window — no cartesian, no global sort."""
-    plan = _explain(q_dedup_incremental(spark, SF_DIR))
-    assert _broadcast_only_nested_loops(plan)
-    assert "Window" in plan
-    assert "rangepartitioning" not in plan
-
-
-def test_ann_quantized_recall_queries_are_broadcast(spark):
-    """Both ranking sides join the query sample via broadcast; the ranks
-    are per-query windows, never a global sort."""
-    plan = _explain(q_ann_quantized_recall(spark, SF_DIR))
-    assert "BroadcastExchange" in plan
-    assert _broadcast_only_nested_loops(plan)
-    assert "Window" in plan
-
-
-def test_spell_correct_queries_are_broadcast(spark):
-    """The misspelled-query set is tiny and must broadcast against the
-    term dictionary — the vocabulary is never shuffled for a lookup."""
-    plan = _explain(q_spell_correct(spark, SF_DIR))
-    assert "Broadcast" in plan
-    assert _broadcast_only_nested_loops(plan)
-
-
-def test_spell_correct_candidates_are_pruned(spark):
-    """Every emitted suggestion obeys the candidate band (first char
-    kept, length within the band) and minimality sanity: dist 0 iff the
-    'misspelling' happens to be a real vocab term."""
-    rows = q_spell_correct(spark, SF_DIR).collect()
-    assert len(rows) == _SPELL_NQ
-    for r in rows:
-        assert r["miss"][0] == r["suggestion"][0]
-        assert abs(len(r["miss"]) - len(r["suggestion"])) <= _SPELL_LEN_BAND
-        assert (r["dist"] == 0) == (r["miss"] == r["suggestion"])
 
 
 def test_paragraph_dedup_is_linear(spark):
@@ -191,38 +117,6 @@ def test_paragraph_dedup_finds_real_duplicates(spark):
     rows = q_paragraph_dedup(spark, SF_DIR).collect()
     assert sum(r["n_dup"] for r in rows) > 0
     assert all(0 <= r["n_dup"] <= r["n_par"] for r in rows)
-
-
-def test_prefix_suggest_is_joinless_topk(spark):
-    plan = _explain(q_prefix_suggest(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "Window" in plan
-    rows = q_prefix_suggest(spark, SF_DIR).collect()
-    by_pfx = {}
-    for r in rows:
-        by_pfx.setdefault(r["prefix"], []).append(r)
-    for pfx, grp in by_pfx.items():
-        assert len(grp) <= _PFX_K
-        grp.sort(key=lambda r: r["rnk"])
-        dfs = [r["df"] for r in grp]
-        assert dfs == sorted(dfs, reverse=True)
-
-
-def test_crawl_frontier_is_takeordered_not_global_sort(spark):
-    """The next-K pick must be a distributed TakeOrdered over the per-host
-    windows, never a full global Sort+Limit."""
-    plan = _explain(q_crawl_frontier(spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan
-    assert _broadcast_only_nested_loops(plan)
-
-
-def test_snippet_extract_is_narrow_scan(spark):
-    """Snippet extraction must be joinless and windowless — one narrow
-    projection over the documents scan, then a TakeOrdered-10."""
-    plan = _explain(q_snippet_extract(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "Window" not in plan
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_rrf_fusion_rank_windows_are_post_limit(spark):

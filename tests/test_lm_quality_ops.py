@@ -3,11 +3,9 @@ quality, lexical diversity, and fixed-weight classifier inference."""
 
 import math
 
-from search_engine_spark.catalog.ir import (
-    _QC_BIAS, _QC_W_LEN, _QC_W_STOP, _QC_W_TTR,
-)
 from search_engine_spark.catalog.quality import (
-    q_bigram_logprob, q_quality_classifier, q_ttr_quality,
+    q_bigram_logprob, q_quality_classifier, q_ttr_quality, _QC_BIAS, _QC_W_LEN,
+    _QC_W_STOP, _QC_W_TTR,
 )
 
 

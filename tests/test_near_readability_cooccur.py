@@ -7,7 +7,6 @@ import re
 import duckdb
 
 from search_engine_spark.catalog.ir import _NEAR_W, q_bm25_near
-from search_engine_spark.catalog.events import _COOC_CAP
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -97,22 +96,3 @@ def test_bm25_near_stats_are_broadcast(spark):
     plan = buf.getvalue()
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
-
-
-# ---------------------------------------------------------------------------
-# cooccur_items
-# ---------------------------------------------------------------------------
-
-
-def test_cooccur_cap_bounds_pair_blowup(spark):
-    """The per-user cap is the 100-TB guard: no user contributes more than
-    C(cap, 2) pairs no matter how hot their history is."""
-    assert _COOC_CAP == 64
-    # sanity at fixture scale: per-user distinct items never exceeds cap
-    con = _con()
-    mx = con.execute(
-        "SELECT max(cnt) FROM (SELECT user_id, count(DISTINCT "
-        "CAST(json_extract_string(props, '$.k') AS BIGINT)) AS cnt "
-        "FROM events WHERE event_type = 'view' GROUP BY user_id)"
-    ).fetchone()[0]
-    assert mx <= _COOC_CAP  # cap inactive here; activates on hot users

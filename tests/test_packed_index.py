@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators import codec
+from tests.helpers import _mk_pages, _packed_fingerprint
 
 
 @pytest.fixture(scope="module")
@@ -192,37 +193,6 @@ def test_resume_skips_completed_phases(catalog, spark, pages_path, tmp_path):
 # incremental append (crawl refresh): new partials + ONE merge pass must
 # converge bit-identically to a from-scratch build of the union corpus
 # ---------------------------------------------------------------------------
-
-def _mk_pages(spark, specs):
-    """specs: [(url, body_words)] → a pages frame (html synthesized)."""
-    import datetime as dt
-
-    from search_engine_spark import schemas
-
-    rows = []
-    for url, words in specs:
-        # page content is a pure function of the URL so the same url
-        # produces the same page in the base+append and union builds
-        h = sum(url.encode())
-        html = (f"<html><head><title>alpha t{h % 5}</title></head>"
-                f"<body>{words}</body></html>")
-        rows.append((url, dt.datetime(2026, 1, 1) + dt.timedelta(seconds=h),
-                     html.encode(), "", "en"))
-    return spark.createDataFrame(rows, schemas.PAGES)
-
-
-def _packed_fingerprint(cat):
-    rows = cat.read("postings_packed").collect()
-    out = {}
-    for r in rows:
-        out[(r["term"], r["bucket"])] = (
-            r["shard"], r["df"], r["n_docs"],
-            bytes(r["doc_ids"]), bytes(r["tfs"]), bytes(r["pos"]),
-            tuple(r["block_last"]), tuple(r["block_maxw"]),
-            r["first_docid"], r["last_docid"],
-        )
-    return out
-
 
 def test_incremental_append_converges_to_from_scratch(spark, tmp_path):
     from search_engine_spark.operators.pipeline import run_append, run_build

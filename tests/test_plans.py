@@ -4,18 +4,10 @@ filter into the parquet scan; BM25 scoring joins must broadcast the tiny
 side.  These are the properties that keep a 10^12-doc query from touching
 more than |q| shards."""
 
-import contextlib
-import io
-
 import pytest
 from pyspark.sql import functions as F
 
-
-def _explain(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.helpers import _explain
 
 
 def _topk_plan(eng, query: str, synonyms: bool = False) -> str:

@@ -7,7 +7,7 @@ from search_engine_spark.operators.pipeline import run_build
 from search_engine_spark.plans.query_ast import Or, Prefix, Word, parse
 from search_engine_spark.plans.wand import PackedQueryEngine
 
-from tests.test_packed_index import _mk_pages
+from tests.helpers import _mk_pages
 
 
 def _batch(n=60):

@@ -12,7 +12,7 @@ from search_engine_spark.catalog.ir import (
     _BLOOM_BASE, _BLOOM_K, _BLOOM_M, q_bloom_filter,
 )
 from search_engine_spark.catalog.events import q_asof_join, q_range_join, _RJ_N
-from tests.test_driver_plan_shapes import _explain
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -1,26 +1,18 @@
-"""Pure-Python twins for the hybrid-retrieval / crawl-scheduling /
-snippet / graph / pipeline extras (rrf_fusion, bfs_hops,
-label_propagation, crawl_frontier, snippet_extract, anchor_text,
-latency_quantiles, trustrank, data_split, oov_rate) — independent of
-both the Spark plans under test and their DuckDB oracles."""
+"""Pure-Python twins for the hybrid-retrieval / graph / pipeline extras
+(rrf_fusion, bfs_hops, label_propagation, anchor_text, trustrank,
+data_split, oov_rate) — independent of both the Spark plans under test
+and their DuckDB oracles."""
 
 import duckdb
 
-from search_engine_spark.catalog.ir import (
-    _BM25_CORE_SQL, q_snippet_extract, _SNIPPET_CTX, _SNIPPET_LEN,
-    _SNIPPET_TERM, _SPLIT_PRIME,
-)
+from search_engine_spark.catalog.ir import _BM25_CORE_SQL
 from search_engine_spark.catalog.ann import q_rrf_fusion, _RRF_DEPTH, _RRF_K
 from search_engine_spark.catalog.graph import (
     _BFS_ITERS, _BFS_SEED_MOD, _LPA_ITERS, _PR_DAMP, _PR_ITERS, _PR_RULES,
     q_anchor_text, q_bfs_hops, q_label_propagation, q_trustrank,
 )
 from search_engine_spark.catalog.quality import (
-    _OOV_MIN_DF, q_data_split, q_oov_rate, _SPLIT_MOD,
-)
-from search_engine_spark.catalog.events import q_latency_quantiles, _QUANTILES
-from search_engine_spark.catalog.corpus import (
-    _FRONTIER_DELAY_S, _FRONTIER_K, q_crawl_frontier,
+    _OOV_MIN_DF, q_data_split, q_oov_rate, _SPLIT_MOD, _SPLIT_PRIME,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -170,79 +162,6 @@ def test_label_propagation_matches_python_lpa(spark):
 
 
 # ---------------------------------------------------------------------------
-# crawl_frontier
-# ---------------------------------------------------------------------------
-
-def test_crawl_frontier_matches_python_schedule(spark):
-    con = _con()
-    rows = con.execute(
-        "SELECT doc_id, source, n_chars FROM documents"
-    ).fetchall()
-    by_host = {}
-    for doc_id, source, n_chars in rows:
-        by_host.setdefault(source, []).append((doc_id, n_chars))
-    sched = []
-    for source, docs in by_host.items():
-        docs.sort(key=lambda t: (-t[1], t[0]))
-        for i, (doc_id, n_chars) in enumerate(docs):
-            sched.append(
-                (i * _FRONTIER_DELAY_S, -n_chars, doc_id, source)
-            )
-    sched.sort()
-    expect = [
-        (doc_id, source, slot)
-        for slot, _, doc_id, source in sched[: _FRONTIER_K]
-    ]
-
-    got = [
-        (r["doc_id"], r["source"], r["slot_s"])
-        for r in q_crawl_frontier(spark, SF_DIR).collect()
-    ]
-    assert got == expect
-    # politeness invariant: within the result, a host's k-th url is never
-    # scheduled before its (k-1)-th
-    seen = {}
-    for doc_id, source, slot in got:
-        if source in seen:
-            assert slot == seen[source] + _FRONTIER_DELAY_S
-        else:
-            assert slot == 0
-        seen[source] = slot
-
-
-# ---------------------------------------------------------------------------
-# snippet_extract
-# ---------------------------------------------------------------------------
-
-def test_snippet_extract_matches_python_windows(spark):
-    con = _con()
-    rows = con.execute(
-        "SELECT doc_id, text FROM documents ORDER BY doc_id"
-    ).fetchall()
-    expect = []
-    for doc_id, text in rows:
-        i = text.lower().find(_SNIPPET_TERM)
-        if i < 0:
-            continue
-        pos = i + 1  # 1-based, both engines
-        start = max(1, pos - _SNIPPET_CTX)
-        expect.append(
-            (doc_id, pos, text[start - 1: start - 1 + _SNIPPET_LEN])
-        )
-        if len(expect) == 10:
-            break
-
-    got = [
-        (r["doc_id"], r["pos"], r["snippet"])
-        for r in q_snippet_extract(spark, SF_DIR).collect()
-    ]
-    assert got == expect
-    assert all(_SNIPPET_TERM in s.lower() or p > _SNIPPET_CTX + 1
-               or len(s) == _SNIPPET_LEN
-               for _, p, s in got)
-
-
-# ---------------------------------------------------------------------------
 # anchor_text
 # ---------------------------------------------------------------------------
 
@@ -272,34 +191,6 @@ def test_anchor_text_matches_python_aggregation(spark):
         for r in q_anchor_text(spark, SF_DIR).collect()
     }
     assert got == expect
-
-
-# ---------------------------------------------------------------------------
-# latency_quantiles
-# ---------------------------------------------------------------------------
-
-def test_latency_quantiles_matches_numpy_linear_interpolation(spark):
-    import numpy as np
-
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT event_type, value "
-        f"FROM read_parquet('{SF_DIR}/events.parquet')"
-    ).fetchall()
-    by_type = {}
-    for et, v in rows:
-        by_type.setdefault(et, []).append(v)
-    got = {
-        r["event_type"]: (r["p50"], r["p95"], r["p99"])
-        for r in q_latency_quantiles(spark, SF_DIR).collect()
-    }
-    assert set(got) == set(by_type)
-    for et, vals in by_type.items():
-        expect = tuple(
-            round(float(np.percentile(vals, p * 100, method="linear")), 4)
-            for p in _QUANTILES
-        )
-        assert got[et] == expect, (et, got[et], expect)
 
 
 # ---------------------------------------------------------------------------

@@ -7,12 +7,11 @@ from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark.catalog.ir import (
-    _EN_STOPS, q_skip_cost_model, _SKIP_PAIRS,
-)
+from search_engine_spark.catalog.ir import q_skip_cost_model, _SKIP_PAIRS
 from search_engine_spark.catalog.quality import (
-    _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL, _GOPHER_MIN_STOPS,
-    _GOPHER_MIN_WORDS, q_gopher_quality, q_perplexity_buckets,
+    _EN_STOPS, _GOPHER_MAX_MWL, _GOPHER_MAX_WORDS, _GOPHER_MIN_MWL,
+    _GOPHER_MIN_STOPS, _GOPHER_MIN_WORDS, q_gopher_quality,
+    q_perplexity_buckets,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -138,5 +137,3 @@ def test_gopher_quality_matches_twin(spark):
     # the battery must actually discriminate on this corpus
     keeps = [v[5] for v in got.values()]
     assert any(keeps) and not all(keeps)
-
-

@@ -2,9 +2,6 @@
 cleanup stages of a training-data pipeline.  The sf corpus contains no PII,
 so the scrub behavior is validated here on fixture docs that do."""
 
-import pyspark.sql.functions as F
-
-from search_engine_spark.catalog.dedup import q_dedup_incremental
 from search_engine_spark.catalog.quality import (
     q_domain_mix, q_dsir_select, q_pii_scrub, q_stratified_sample, _SAMPLE_MOD,
 )
@@ -121,23 +118,3 @@ def test_dsir_select_prefers_target_like_docs(spark, tmp_path):
     weights = [r["logw"] for r in out]
     assert weights == sorted(weights, reverse=True)
     assert ordered[-1] == 3                         # pure-OOV doc ranks last
-
-
-def test_dedup_incremental_verdicts(spark, tmp_path):
-    """Even doc_ids are the base, odd the delta: a delta doc duplicating a
-    base text is dup_base; the first of a delta-only dup group is new and
-    the rest dup_delta; dup_base wins over dup_delta."""
-    rows = [
-        (0, "alpha beta", "en", "s"),      # base
-        (2, "gamma delta", "en", "s"),     # base
-        (1, "alpha beta", "en", "s"),      # delta, dup of base 0
-        (3, "epsilon zeta", "en", "s"),    # delta, brand new
-        (5, "eta theta", "en", "s"),       # delta, first of a delta dup group
-        (7, "eta theta", "en", "s"),       # delta, dup of 5
-        (9, "alpha beta", "en", "s"),      # delta, dup of base AND of 1
-    ]
-    sf = _write_docs(spark, tmp_path, rows)
-    out = {r["doc_id"]: r["verdict"] for r in
-           q_dedup_incremental(spark, sf).collect()}
-    assert out == {1: "dup_base", 3: "new", 5: "new",
-                   7: "dup_delta", 9: "dup_base"}

@@ -7,7 +7,7 @@ import pytest
 from search_engine_spark.operators.pipeline import run_build, run_delete
 from search_engine_spark.plans.wand import PackedQueryEngine
 
-from tests.test_packed_index import _mk_pages
+from tests.helpers import _mk_pages
 
 QUERIES = (
     "common engine",        # flat AND

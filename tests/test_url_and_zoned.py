@@ -1,15 +1,13 @@
-"""bm25_zoned (title-zone-weighted BM25) and url_normalize (crawl
-frontier canonicalization): Python brute-force twins + invariants."""
+"""bm25_zoned (title-zone-weighted BM25): Python brute-force twin +
+invariants."""
 
 import math
-import re
 
 from search_engine_spark.catalog.ir import (
     q_bm25_zoned, _scored, _tokens, _ZONE_LEN, _ZONE_W, _ZONED_TERMS,
 )
-from search_engine_spark.catalog.corpus import q_url_normalize
 from search_engine_spark.plans import bm25
-from tests.test_driver_plan_shapes import _explain
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -77,46 +75,3 @@ def test_bm25_zoned_plan_broadcasts_stats(spark):
     plan = _explain(q_bm25_zoned(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
-
-
-_NORM_RE = re.compile(
-    r"^(https?)://([^/:?#]+)(?::([0-9]+))?([^?#]*)(?:\?([^#]*))?$"
-)
-
-
-def test_url_normalize_invariants(spark):
-    rows = q_url_normalize(spark, SF_DIR).collect()
-    assert len(rows) > 0
-    for r in rows:
-        m = _NORM_RE.match(r["norm"])
-        assert m, r["norm"]
-        scheme, host, port, path, q = m.groups()
-        assert scheme in ("http", "https")
-        assert host == host.lower() and not host.startswith("www.")
-        # default ports stripped, fragment gone
-        assert port not in ("80", "443") or (
-            (scheme, port) not in (("http", "80"), ("https", "443"))
-        )
-        assert "#" not in r["norm"]
-        if q:
-            parts = q.split("&")
-            assert parts == sorted(parts)
-
-
-def test_url_normalize_is_idempotent(spark):
-    """Normalizing an already-normal URL must be a fixpoint — run the
-    same component logic in Python over the emitted norm strings."""
-    rows = q_url_normalize(spark, SF_DIR).collect()
-    for r in rows:
-        m = _NORM_RE.match(r["norm"])
-        scheme, host, port, path, q = m.groups()
-        rebuilt = f"{scheme}://{host}"
-        if port and not (
-            (scheme == "http" and port == "80")
-            or (scheme == "https" and port == "443")
-        ):
-            rebuilt += f":{port}"
-        rebuilt += path or ""
-        if q:
-            rebuilt += "?" + "&".join(sorted(q.split("&")))
-        assert rebuilt == r["norm"]
