@@ -91,7 +91,8 @@ class Spec:
 
     def __init__(self, ast: Expr):
         self.wslots: list[Expr] = []       # phrase-free subtrees
-        self.pslots: list[tuple[tuple[str, ...], bool]] = []  # (stems, deco)
+        # (stems, deco, win)
+        self.pslots: list[tuple[tuple[str, ...], bool, int]] = []
         self.root = self._rec(ast)
         self.zero_match = zero_match(ast)
 
@@ -577,8 +578,9 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
         )
         docs = docs.crossJoin(F.broadcast(counts))
         # uniform phrase finalization: only nonzero ptf slots were emitted,
-        # each contributing idf(global df) * bm25_weight(ptf, dl) — the
-        # identical expressions the per-query path builds in _score_expr
+        # each contributing bm25.idf_col(global df) * bm25.weight_col(ptf,
+        # dl) — the same JVM expressions the logical executor scores a
+        # phrase leaf with
         score = score + F.aggregate(
             F.zip_with(
                 "pidx", "ptf",
