@@ -3,7 +3,9 @@ the properties that keep them viable at 10^12 docs — 1-row corpus stats
 enter as BROADCAST side plans (never a driver collect, never a shuffled
 join), and the only nested-loop joins are those broadcast 1-row sides."""
 
-from search_engine_spark.catalog.ir import _scored
+from search_engine_spark.catalog.ir import (
+    q_snippet_extract, q_tfidf_keywords, _scored,
+)
 from search_engine_spark.catalog.dedup import (
     q_doc_similarity, q_dup_spans, q_paragraph_dedup,
 )
@@ -93,6 +95,21 @@ def test_dsir_select_broadcasts_only_the_fixed_bucket_table(spark):
     assert _DSIR_BUCKETS == 10_000
 
 
+def test_tfidf_keywords_vocab_join_is_unhinted(spark):
+    """The df table's cardinality is the corpus vocabulary — unbounded on
+    raw web text — so the AUTHORED plan must not force-broadcast it; the
+    only authored hint is the 1-row n_docs side.  (The planner may still
+    broadcast df at toy scale from its size stats — that's its call, not
+    a forced OOM at 100 TB.)  The keyword rank is a per-doc window (hash
+    shuffle on doc_id), never a rangepartitioned global sort."""
+    df = q_tfidf_keywords(spark, SF_DIR)
+    assert _analyzed(df).count("ResolvedHint") == 1      # ndocs only
+    plan = _explain(df)
+    assert _broadcast_only_nested_loops(plan)
+    assert "Window" in plan
+    assert "rangepartitioning" not in plan
+
+
 def test_unigram_logprob_vocab_join_is_unhinted(spark):
     """Same contract for the unigram LM: only the 1-row corpus total is
     an authored broadcast; the vocab-sized count table joins unhinted."""
@@ -117,6 +134,15 @@ def test_paragraph_dedup_finds_real_duplicates(spark):
     rows = q_paragraph_dedup(spark, SF_DIR).collect()
     assert sum(r["n_dup"] for r in rows) > 0
     assert all(0 <= r["n_dup"] <= r["n_par"] for r in rows)
+
+
+def test_snippet_extract_is_narrow_scan(spark):
+    """Snippet extraction must be joinless and windowless — one narrow
+    projection over the documents scan, then a TakeOrdered-10."""
+    plan = _explain(q_snippet_extract(spark, SF_DIR))
+    assert "Join" not in plan
+    assert "Window" not in plan
+    assert "TakeOrderedAndProject" in plan
 
 
 def test_rrf_fusion_rank_windows_are_post_limit(spark):

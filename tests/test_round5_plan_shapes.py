@@ -3,6 +3,7 @@ the properties that keep them viable at web scale — small sides enter
 BROADCAST, dominance/reciprocity tests stay bounded self-joins, and no
 bare CartesianProduct appears anywhere."""
 
+from search_engine_spark.catalog.ir import q_facet_counts
 from search_engine_spark.catalog.quality import q_unimax_allocation
 from tests.helpers import _explain
 
@@ -11,6 +12,14 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _no_cartesian(plan: str) -> bool:
     return "CartesianProduct" not in plan
+
+
+def test_facet_counts_metadata_join_is_bounded(spark):
+    plan = _explain(q_facet_counts(spark, SF_DIR))
+    # the posting-list match set and the metadata table hash-join; no
+    # cartesian anywhere
+    assert _no_cartesian(plan)
+    assert "Join" in plan
 
 
 def test_unimax_allocation_single_token_aggregate(spark):
