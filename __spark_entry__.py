@@ -83,7 +83,7 @@ def _engine_catalog(spark: SparkSession):
     # schemas across rounds
     wh = f"/tmp/se_entry_wh_n{_ENGINE_CORPUS_DOCS}_v4"
     pages = spark.read.parquet(str(cached_pages(_ENGINE_CORPUS_DOCS)))
-    return run_build(spark, pages, wh, pack=True)
+    return run_build(spark, pages, wh)
 
 
 def _engine_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

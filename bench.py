@@ -12,10 +12,9 @@ Two surfaces are measured:
   corpus (docs/sec) and p50 top-10 BM25 latency over the frozen 40-query
   reference set (sources/queryset.py).
 
-Scaling-efficiency evidence (local[8] vs local[32]) is produced by
-tools/scaling_bench.py and recorded in BENCH/BASELINE.md — it needs two
-SparkSessions with different masters, which don't belong in the per-round
-loop.
+Scaling-efficiency evidence (local[8] vs local[32]) is the committed
+32-core history in BENCH/scaling_r*.json and BENCH/BASELINE.md; no tool in
+the tree re-measures it, since it needs at least 32 cores.
 """
 
 from __future__ import annotations

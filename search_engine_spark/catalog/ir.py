@@ -323,66 +323,6 @@ GROUP BY doc_id ORDER BY tf DESC, doc_id ASC LIMIT 10"""
 
 
 # ---------------------------------------------------------------------------
-# tf-idf keyword extraction (top-k terms per document)
-# ---------------------------------------------------------------------------
-
-_KEYWORDS_K = 3
-
-
-def q_tfidf_keywords(spark, sf_dir):
-    """Per-document keyword extraction: the top-_KEYWORDS_K terms of each
-    document by tf·idf (idf = ln(n_docs / df)) — the classic summary
-    feature for corpus exploration and weak labeling.
-
-    Shape at scale: the df table joins UNHINTED — its cardinality is the
-    corpus vocabulary, which is unbounded on raw web text (ids, typos,
-    hashes), so a forced broadcast would OOM the driver at 100 TB; the
-    planner/AQE broadcasts it only when its measured size allows and
-    falls back to a hash join otherwise.  n_docs is a 1-row broadcast,
-    and the rank is a window PARTITIONED BY doc_id — a hash shuffle on
-    the doc key, never a global sort; ranking compares the ROUNDED score
-    (then term) so mathematically-tied keywords order identically across
-    engines."""
-    from pyspark.sql import Window
-
-    tf = _tf(spark, sf_dir)
-    ndocs = _docs(spark, sf_dir).agg(F.count("*").alias("_n"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    scored = (
-        tf.join(df, "term")
-        .crossJoin(F.broadcast(ndocs))
-        .withColumn("tfidf", _r4(F.col("tf") * F.log(F.col("_n") / F.col("df"))))
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= _KEYWORDS_K)
-        .select("doc_id", "term", "rank", "tfidf")
-    )
-
-
-SQL_TFIDF_KEYWORDS = f"""WITH {_TOKS_SQL},
-tf AS (SELECT term, doc_id, count(*) AS tf FROM toks GROUP BY term, doc_id),
-nd AS (SELECT count(*) AS n FROM documents),
-df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id, tf.term,
-         round(tf.tf * ln(nd.n / df.df), 4) AS tfidf
-  FROM tf JOIN df ON tf.term = df.term CROSS JOIN nd
-),
-ranked AS (
-  SELECT doc_id, term, tfidf,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY tfidf DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, term, CAST(rank AS BIGINT) AS rank, tfidf
-FROM ranked WHERE rank <= {_KEYWORDS_K}"""
-
-
-# ---------------------------------------------------------------------------
 # Zone-weighted BM25 (BM25F-lite): title positions boost term frequency
 # ---------------------------------------------------------------------------
 
@@ -580,52 +520,6 @@ FROM docs d LEFT JOIN hit ON d.doc_id = hit.doc_id
 ORDER BY d.doc_id"""
 
 
-_SNIPPET_TERM = "merge"
-_SNIPPET_CTX = 30    # chars of context before the hit
-_SNIPPET_LEN = 60    # total snippet length
-
-
-def q_snippet_extract(spark, sf_dir):
-    """Query-biased result snippets: for documents containing the query
-    term, extract a _SNIPPET_LEN-char window starting _SNIPPET_CTX chars
-    before the first (case-insensitive) occurrence — the result-page
-    snippet the reference's BuildSearchHTML would show next to each hit.
-
-    Scale shape: one narrow projection over the documents scan (locate +
-    substring are JVM string expressions inside whole-stage codegen; no
-    shuffle until the final TakeOrdered-10), and only the first 60+30
-    chars around the hit ever leave the scan — never the full text.
-    """
-    p = F.locate(_SNIPPET_TERM, F.lower(F.col("text")))
-    hit = (
-        _docs(spark, sf_dir)
-        .select("doc_id", p.alias("pos"), "text")
-        .filter(F.col("pos") > 0)
-    )
-    start = F.greatest(F.lit(1), F.col("pos") - F.lit(_SNIPPET_CTX))
-    return (
-        hit.select(
-            "doc_id",
-            F.col("pos").cast("long").alias("pos"),
-            F.col("text").substr(start, F.lit(_SNIPPET_LEN)).alias("snippet"),
-        )
-        .orderBy(F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_SNIPPET_EXTRACT = f"""WITH hit AS (
-  SELECT doc_id,
-         CAST(strpos(lower(text), '{_SNIPPET_TERM}') AS BIGINT) AS pos,
-         text
-  FROM documents WHERE strpos(lower(text), '{_SNIPPET_TERM}') > 0
-)
-SELECT doc_id, pos,
-       substr(text, CAST(greatest(1, pos - {_SNIPPET_CTX}) AS INTEGER),
-              {_SNIPPET_LEN}) AS snippet
-FROM hit ORDER BY doc_id ASC LIMIT 10"""
-
-
 # ---------------------------------------------------------------------------
 # NEAR/k proximity retrieval (X7 generalized: window instead of adjacency)
 # ---------------------------------------------------------------------------
@@ -697,216 +591,6 @@ ndf AS (SELECT count(*) AS ndf FROM hits)
              * (h.ntf * (1.2 + 1.0))
              / (h.ntf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl)), 4) AS score
 FROM hits h JOIN dl ON h.doc_id = dl.doc_id CROSS JOIN stats CROSS JOIN ndf''')}"""
-
-
-# ---------------------------------------------------------------------------
-# freshness-decayed ranking (time-aware retrieval)
-# ---------------------------------------------------------------------------
-
-_FRESH_TAU = 90.0   # e-folding age, days
-
-
-def q_freshness_rank(spark, sf_dir):
-    """Time-decayed retrieval: BM25 for 'merge' multiplied by
-    exp(-age_days/τ) — the standard freshness prior for news-ish
-    verticals.  Crawl ages are synthesized deterministically from doc_id
-    (doc_id % 365 days old) so both engines see identical inputs.
-    Top-10 by decayed score.
-
-    Scale shape: the decay is a narrow per-row expression on top of the
-    same pruned _scored plan (only the query term's postings shuffle);
-    freshness changes the ORDER, not the plan.  In the packed engine
-    the same factor folds into the WAND upper bound (w · max-decay of a
-    bucket) without breaking pruning.
-    """
-    s = _scored(spark, sf_dir, ["merge"]).filter(F.col("term") == "merge")
-    age = (F.col("doc_id") % 365).cast("double")
-    return (
-        s.select(
-            "doc_id",
-            age.cast("long").alias("age_days"),
-            _r4(F.col("score") * F.exp(-age / F.lit(_FRESH_TAU))).alias(
-                "score"
-            ),
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_FRESHNESS_RANK = f"""WITH {_BM25_CORE_SQL}
-{_topk_sql(f'''SELECT doc_id, CAST(doc_id % 365 AS BIGINT) AS age_days,
-       round(score * exp(-(doc_id % 365) / {_FRESH_TAU}), 4) AS score
-FROM scored WHERE term = 'merge' ''')}"""
-
-
-# ---------------------------------------------------------------------------
-# percolation / reverse search (stored-query alerting)
-# ---------------------------------------------------------------------------
-
-_PERC_QUERIES = [
-    # (qid, mode, terms) — the stored alert table (Elasticsearch
-    # percolator shape); terms drawn from the synthetic vocabulary
-    (1, "and", ["merge", "join"]),
-    (2, "and", ["hash", "join", "spark"]),
-    (3, "or", ["vector", "window"]),
-    (4, "and", ["scan", "filter"]),
-    (5, "or", ["dup", "stream"]),
-    (6, "and", ["merge", "sort", "batch"]),
-]
-
-
-def q_percolate(spark, sf_dir):
-    """Reverse search (percolation): match every document against a STORED
-    query table — the alerting/subscription primitive (saved searches,
-    brand monitoring) where the queries are the index and the doc is the
-    probe.  AND queries need every term present, OR queries any.  Output:
-    per stored query, how many docs fire it.
-
-    Scale shape: the stored-query term table is tiny and broadcast (an
-    alert table is KB-MB even with millions of alerts after term
-    sharding); one pass over DISTINCT (doc, term) pairs joins it, the
-    per-(doc, query) coverage count is map-side combinable, and the AND
-    threshold is a join-free post-filter.  The corpus is scanned ONCE no
-    matter how many stored queries — the whole point of percolation.
-    """
-    qrows = [
-        (qid, mode, t, len(terms))
-        for qid, mode, terms in _PERC_QUERIES
-        for t in terms
-    ]
-    qtab = spark.createDataFrame(
-        qrows, "qid int, mode string, term string, n_terms int"
-    )
-    dt = _tf(spark, sf_dir).select("doc_id", "term")
-    cov = (
-        dt.join(F.broadcast(qtab), "term")
-        .groupBy("doc_id", "qid")
-        .agg(
-            F.count("*").alias("hit"),
-            F.first("mode").alias("mode"),
-            F.first("n_terms").alias("n_terms"),
-        )
-    )
-    fired = cov.filter(
-        (F.col("mode") == "or") | (F.col("hit") == F.col("n_terms"))
-    )
-    return (
-        fired.groupBy("qid")
-        .agg(
-            F.first("mode").alias("mode"),
-            F.count("*").cast("long").alias("n_docs"),
-        )
-        .orderBy("qid")
-    )
-
-
-def _percolate_sql() -> str:
-    vals = ", ".join(
-        f"({qid}, '{mode}', '{t}', {len(terms)})"
-        for qid, mode, terms in _PERC_QUERIES
-        for t in terms
-    )
-    return f"""WITH {_TOKS_SQL},
-dt AS (SELECT DISTINCT doc_id, term FROM toks),
-qtab(qid, mode, term, n_terms) AS (VALUES {vals}),
-cov AS (
-  SELECT d.doc_id, q.qid, count(*) AS hit,
-         any_value(q.mode) AS mode, any_value(q.n_terms) AS n_terms
-  FROM dt d JOIN qtab q ON d.term = q.term
-  GROUP BY d.doc_id, q.qid
-)
-SELECT qid, any_value(mode) AS mode, CAST(count(*) AS BIGINT) AS n_docs
-FROM cov WHERE mode = 'or' OR hit = n_terms
-GROUP BY qid ORDER BY qid"""
-
-
-SQL_PERCOLATE = _percolate_sql()
-
-
-_CHAMPION_C = 32
-_CHAMPION_TERMS = ["merge", "sort"]
-
-
-def q_champion_topk(spark, sf_dir):
-    """Impact-ordered champion lists (static index pruning, Manning IR
-    §7.1.3): each query term's posting list is cut to its _CHAMPION_C
-    highest-tf docs BEFORE scoring, and the top-10 is answered from the
-    champions only — the classic early-termination serving shape the
-    reference's exhaustive ISR scan (isr.cpp) cannot express.
-
-    df is the TRUE document frequency (computed before the champion
-    cut), so champion BM25 scores equal the exhaustive engine's scores
-    for every doc that survives the cut; only the candidate SET is
-    pruned.  Ties in the cut break by doc_id so the champion set is
-    deterministic across engines.
-
-    Scale shape: the query-term filter sits below the tf aggregation,
-    so only |terms| posting lists reach the shuffle; the champion cut is
-    a window partitioned by term over those lists alone (never the
-    vocabulary); and at serving time the scan cost per term is C docs,
-    not df — at 10^12 docs champion lists are what makes head terms
-    (df ~ 10^10) answerable at interactive latency.  The lists would be
-    precomputed at index-build time; this entry derives them inline so
-    the oracle can mirror it."""
-    from pyspark.sql import Window
-
-    toks = _tokens(spark, sf_dir).filter(F.col("term").isin(_CHAMPION_TERMS))
-    tf = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    dl = _dl(spark, sf_dir)
-    stats = dl.agg(F.count("*").alias("_n_docs"), F.avg("dl").alias("_avgdl"))
-    w = Window.partitionBy("term").orderBy(
-        F.col("tf").desc(), F.col("doc_id").asc()
-    )
-    champ = (
-        tf.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _CHAMPION_C)
-        .drop("rn")
-    )
-    scored = (
-        champ.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "score",
-            bm25.idf_col(F.col("df"), F.col("_n_docs").cast("double"))
-            * bm25.weight_col(F.col("tf"), F.col("dl"), F.col("_avgdl")),
-        )
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(_r4(F.sum("score")).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(10)
-    )
-
-
-SQL_CHAMPION_TOPK = f"""WITH {_TOKS_SQL},
-tfq AS (SELECT term, doc_id, count(*) AS tf FROM toks
-        WHERE term IN ('merge', 'sort') GROUP BY term, doc_id),
-dfq AS (SELECT term, count(*) AS df FROM tfq GROUP BY term),
-dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-champ AS (
-  SELECT term, doc_id, tf,
-         row_number() OVER (PARTITION BY term
-                            ORDER BY tf DESC, doc_id ASC) AS rn
-  FROM tfq
-),
-scored AS (
-  SELECT c.doc_id,
-         ln((stats.n_docs - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0)
-         * (c.tf * (1.2 + 1.0))
-         / (c.tf + 1.2 * (1.0 - 0.75 + 0.75 * dl.dl / stats.avgdl)) AS score
-  FROM champ c
-  JOIN dfq ON c.term = dfq.term
-  JOIN dl ON c.doc_id = dl.doc_id
-  CROSS JOIN stats
-  WHERE c.rn <= {_CHAMPION_C}
-)
-SELECT doc_id, round(sum(score), 4) AS score FROM scored
-GROUP BY doc_id ORDER BY score DESC, doc_id ASC LIMIT 10"""
 
 
 # ---------------------------------------------------------------------------
@@ -1421,60 +1105,6 @@ SELECT qa, qb, df_a, df_b,
        round(1.0 - CAST(ceil(2.0 * sqrt(CAST(p_ * l_ AS DOUBLE)))
                         AS BIGINT) / (df_a + df_b), 4) AS opt_saving
 FROM c ORDER BY qa, qb"""
-
-
-# ---------------------------------------------------------------------------
-# Faceted search counts (the SERP sidebar aggregation)
-# ---------------------------------------------------------------------------
-
-_FACET_TERM = "merge"
-
-
-def q_facet_counts(spark, sf_dir):
-    """Faceted navigation counts for one query: every doc matching the
-    query term, bucketed by each facet dimension (lang, source) — the
-    sidebar aggregation every search UI renders next to the ranked
-    list (and the reason engines keep doc metadata columnar next to
-    the index; the reference's URLBlob packs english/TLD per doc at
-    `HashBlob.h:575-578` for exactly this kind of per-result metadata
-    read).
-
-    Determinism: pure integer counts.  Scale shape: the query term's
-    posting list semi-joins the metadata table on doc_id (co-keyed),
-    then two map-side-combinable (facet, value) aggregates; output is
-    |facet values| rows, never a corpus scan beyond the one postings
-    lookup.
-    """
-    toks = _tokens(spark, sf_dir)
-    match = (
-        toks.filter(F.col("term") == _FACET_TERM)
-        .select("doc_id").distinct()
-    )
-    meta = _docs(spark, sf_dir).select("doc_id", "lang", "source")
-    hit = meta.join(match, "doc_id")
-    by_lang = hit.groupBy(F.col("lang").alias("value")).agg(
-        F.count("*").cast("long").alias("n_docs")
-    ).select(F.lit("lang").alias("facet"), "value", "n_docs")
-    by_src = hit.groupBy(F.col("source").alias("value")).agg(
-        F.count("*").cast("long").alias("n_docs")
-    ).select(F.lit("source").alias("facet"), "value", "n_docs")
-    return by_lang.unionByName(by_src).orderBy(
-        "facet", F.col("n_docs").desc(), "value"
-    )
-
-
-SQL_FACET_COUNTS = f"""WITH {_TOKS_SQL},
-match AS (SELECT DISTINCT doc_id FROM toks WHERE term = '{_FACET_TERM}'),
-hit AS (
-  SELECT d.doc_id, d.lang, d.source
-  FROM documents d JOIN match USING (doc_id)
-)
-SELECT 'lang' AS facet, lang AS value, CAST(count(*) AS BIGINT) AS n_docs
-FROM hit GROUP BY lang
-UNION ALL
-SELECT 'source' AS facet, source AS value, CAST(count(*) AS BIGINT)
-FROM hit GROUP BY source
-ORDER BY facet, n_docs DESC, value"""
 
 
 # ---------------------------------------------------------------------------

@@ -311,22 +311,18 @@ def build_doclens(docmeta: DataFrame, bucket_width: int) -> DataFrame:
 
 def pack_and_merge(cat, num_shards: int = 32, salt_buckets: int = 16,
                    merge_factor: int | None = None,
-                   postings_table: str = "postings",
-                   docmeta_table: str = "docmeta",
                    bucket_width: int | None = None) -> None:
     """Run both passes with checkpoint/resume through the catalog.
 
-    ``postings_table``/``docmeta_table`` let the streaming path consolidate
-    its appended partials (postings_stream/docmeta_stream) with the same
-    merge machinery.  ``bucket_width`` overrides the n_docs-derived salt
-    width — an incremental append must keep the ORIGINAL width so its new
-    partials land on the same bucket grid as the base build's."""
+    ``bucket_width`` overrides the n_docs-derived salt width — an
+    incremental append must keep the ORIGINAL width so its new partials
+    land on the same bucket grid as the base build's."""
     if not cat.exists("index_stats"):
         from search_engine_spark.operators import build as B
 
         cat.write(
             "index_stats",
-            B.build_index_stats(cat.read(docmeta_table), cat.read(postings_table)),
+            B.build_index_stats(cat.read("docmeta"), cat.read("postings")),
         )
     stats = cat.read("index_stats").collect()[0]
     n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
@@ -355,7 +351,7 @@ def pack_and_merge(cat, num_shards: int = 32, salt_buckets: int = 16,
 
     if not cat.exists("postings_partial"):
         partials = pack_partials(
-            cat.read(postings_table), num_shards, bucket_width
+            cat.read("postings"), num_shards, bucket_width
         )
         # align rows to their shard before the partitioned write: otherwise
         # every write task opens a file in every shard dir (tasks×shards
@@ -376,7 +372,7 @@ def pack_and_merge(cat, num_shards: int = 32, salt_buckets: int = 16,
 
     mwidth = bucket_width * merge_factor
     if not cat.exists("doclens"):
-        cat.write("doclens", build_doclens(cat.read(docmeta_table), mwidth))
+        cat.write("doclens", build_doclens(cat.read("docmeta"), mwidth))
         cat.log_phase("p6b_doclens", cat.read("doclens"), {"bucket_width": mwidth})
 
     merged = merge_partials(cat.read("postings_partial"), merge_factor, avgdl)

@@ -38,7 +38,6 @@ def run_build(
     salt_buckets: int = 16,
     merge_factor: int | None = None,
     force: bool = False,
-    pack: bool = True,
     bucket_width: int | None = None,
 ) -> IndexCatalog:
     import time
@@ -156,7 +155,7 @@ def run_build(
 
         timed("p5_stats", p5)
 
-    if pack and not cat.exists("postings_packed"):
+    if not cat.exists("postings_packed"):
         def p6() -> str:
             from search_engine_spark.operators import merge
 
@@ -406,9 +405,6 @@ def apply_delta(
     ))
     timed_t0 = time.perf_counter()
     old_avgdl = cat.get_prop("packed_avgdl")
-    if compaction == "tiered" and old_avgdl is None:
-        # pre-fingerprint warehouse: no safe header correction — fall back
-        compaction = "full"
     manifest = cat.read_manifest("postings_packed")
     promoted = False
     if compaction == "tiered":
@@ -520,7 +516,7 @@ def run_delete(
 
     * ``tombstones`` (doc_id, label) — the kernels mask decoded postings
       and bucket complements against the per-bucket tombstone arrays
-      (plans/wand.py ``_mask_tombs``, plans/packed_exec.py), and the
+      (plans/wand.py ``_decode_rows``, plans/packed_exec.py), and the
       logical executor anti-joins them up front;
     * ``df_patch_deletes`` (term, df_sub, label) — per-term df
       decrements; the packed reader subtracts them so idf matches a

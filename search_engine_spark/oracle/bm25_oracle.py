@@ -9,8 +9,6 @@ everything is plain dicts/lists, no Spark.
 
 from __future__ import annotations
 
-import math
-
 from search_engine_spark.functions.htmlparse import parse_html
 from search_engine_spark.functions.tokenize import doc_terms
 from search_engine_spark.plans import bm25

@@ -23,8 +23,6 @@ per-term df map).  The final top-k is Spark's TakeOrderedAndProject.
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -48,7 +48,7 @@ from search_engine_spark.plans.query_ast import (
     And, Expr, Not, Or, OrSyn, Phrase, Word,
 )
 from search_engine_spark.plans.wand import (
-    _bucket_allow, _bucket_tombs, _weights,
+    _bucket_allow, _bucket_tombs, _decode_rows, _weights,
 )
 
 
@@ -388,39 +388,6 @@ class _BucketEval:
 # ---------------------------------------------------------------------------
 # Spark plan assembly (driver side)
 # ---------------------------------------------------------------------------
-
-def _decode_rows(trows, need_pos: bool, tombs=None,
-                 allow=None) -> dict[str, dict]:
-    from search_engine_spark.operators import codec
-
-    decoded: dict[str, dict] = {}
-    for r in trows if trows is not None else []:
-        ids = codec.decode_docids(bytes(r["doc_ids"]))
-        tfs = codec.decode_tfs(bytes(r["tfs"]))
-        flatpos = (codec.decode_position_stream(bytes(r["pos"]), tfs)
-                   if need_pos else None)
-        if (tombs is not None or allow is not None) and ids.size:
-            # deleted (and, when site-scoped, disallowed) docs are masked
-            # out of the decoded posting — for scoring, membership, AND
-            # positions (the run mask drops each masked doc's position
-            # run from the flat stream)
-            keep = (~np.isin(ids, tombs) if tombs is not None
-                    else np.ones(ids.size, dtype=bool))
-            if allow is not None:
-                keep &= np.isin(ids, allow)
-            if not keep.all():
-                if need_pos:
-                    flatpos = flatpos[np.repeat(keep, tfs)]
-                ids, tfs = ids[keep], tfs[keep]
-        e = {"ids": ids, "tfs": tfs, "df": int(r["df"])}
-        if need_pos:
-            e["flatpos"] = flatpos
-            offs = np.zeros(tfs.size, dtype=np.int64)
-            np.cumsum(tfs[:-1], out=offs[1:])
-            e["offs"] = offs
-        decoded[r["term"]] = e
-    return decoded
-
 
 def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                              k: int = 10, rows: DataFrame | None = None

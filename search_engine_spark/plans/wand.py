@@ -10,7 +10,8 @@ Every kernel — flat WAND here, the dense batch kernel, the general kernel
 of plans/packed_exec.py — reads the same bucket-row plan (_bucket_rows):
 the query keys' shard-pruned packed rows, the doclens rows and any
 tombstone / site-allow rows reach the kernel through ONE shuffle on
-``bucket``.  A served query then costs a fixed handful of Spark jobs: the
+``bucket``, and each kernel decodes and masks them through _decode_rows.
+A served query then costs a fixed handful of Spark jobs: the
 shuffle's map stage and the kernel + top-k stage (AQE runs each as a job),
 one ``doc_id IN (k ids)`` docmeta lookup for url and title (_with_meta),
 plus one range-pruned dictionary job for prefix queries (_prefix_table)
@@ -136,10 +137,14 @@ def _bucket_allow(brow) -> np.ndarray | None:
     return np.asarray(a, dtype=np.int64)
 
 
-def _mask_tombs(ids: np.ndarray, tfs: np.ndarray, tombs: np.ndarray | None,
-                allow: np.ndarray | None = None):
-    """Drop tombstoned (and, when site-scoped, disallowed) docs from one
-    decoded posting.  Masking decoded arrays is exactly 'the doc was never
+def _decode_rows(trows, need_pos: bool, tombs: np.ndarray | None = None,
+                 allow: np.ndarray | None = None) -> dict[str, dict]:
+    """Decode one bucket's packed rows → {term: {ids, tfs, df[, flatpos,
+    offs]}}, with tombstoned (and, when site-scoped, disallowed) docs
+    masked out of every posting — for scoring, membership AND positions
+    (the run mask drops each masked doc's position run from the flat
+    stream).  Every kernel decodes through here, so this is the one
+    masking rule.  Masking decoded arrays is exactly 'the doc was never
     indexed' for scoring: block_last boundaries are doc-id VALUES consumed
     via searchsorted (still aligned after removal) and block_maxw stays a
     valid upper bound when docs are removed — WAND pruning remains
@@ -147,17 +152,31 @@ def _mask_tombs(ids: np.ndarray, tfs: np.ndarray, tombs: np.ndarray | None,
     drops the postings.  Filtering INSIDE the kernel, before the
     per-bucket top-k cut, is what keeps a filtered top-k exact (a
     post-cut filter could starve a bucket whose winners were filtered)."""
-    if ids.size == 0:
-        return ids, tfs
-    if tombs is not None:
-        keep = ~np.isin(ids, tombs)
-        if not keep.all():
-            ids, tfs = ids[keep], tfs[keep]
-    if allow is not None and ids.size:
-        keep = np.isin(ids, allow)
-        if not keep.all():
-            ids, tfs = ids[keep], tfs[keep]
-    return ids, tfs
+    from search_engine_spark.operators import codec
+
+    decoded: dict[str, dict] = {}
+    for r in trows if trows is not None else []:
+        ids = codec.decode_docids(bytes(r["doc_ids"]))
+        tfs = codec.decode_tfs(bytes(r["tfs"]))
+        flatpos = (codec.decode_position_stream(bytes(r["pos"]), tfs)
+                   if need_pos else None)
+        if (tombs is not None or allow is not None) and ids.size:
+            keep = (~np.isin(ids, tombs) if tombs is not None
+                    else np.ones(ids.size, dtype=bool))
+            if allow is not None:
+                keep &= np.isin(ids, allow)
+            if not keep.all():
+                if need_pos:
+                    flatpos = flatpos[np.repeat(keep, tfs)]
+                ids, tfs = ids[keep], tfs[keep]
+        e = {"ids": ids, "tfs": tfs, "df": int(r["df"])}
+        if need_pos:
+            e["flatpos"] = flatpos
+            offs = np.zeros(tfs.size, dtype=np.int64)
+            np.cumsum(tfs[:-1], out=offs[1:])
+            e["offs"] = offs
+        decoded[r["term"]] = e
+    return decoded
 
 
 def _topk_select(ids: np.ndarray, scores: np.ndarray, k: int):
@@ -655,32 +674,28 @@ class PackedQueryEngine:
         plans_ = plans
 
         def kernel(batches):
-            from search_engine_spark.operators import codec
-
             for pdf in batches:
                 out_q, out_d, out_s = [], [], []
                 for brow in pdf.itertuples(index=False):
                     start = int(brow.start)
                     dls = np.asarray(brow.dls, dtype=np.float64)
                     width = dls.size
-                    tombs = _bucket_tombs(brow)
-                    allow = _bucket_allow(brow)
+                    # keys only the general kernel reads stay packed
+                    trows = [r for r in brow.trows if r["term"] in flat_keys]
                     decoded: dict[str, dict] = {}
-                    for r in brow.trows:
-                        if r["term"] not in flat_keys:
-                            continue  # a key only the general kernel reads
-                        ids = codec.decode_docids(bytes(r["doc_ids"]))
-                        tfs = codec.decode_tfs(bytes(r["tfs"]))
-                        ids, tfs = _mask_tombs(ids, tfs, tombs, allow)
-                        decoded[r["term"]] = {
-                            "ids": ids,
+                    for term, e in _decode_rows(trows, False,
+                                                _bucket_tombs(brow),
+                                                _bucket_allow(brow)).items():
+                        decoded[term] = {
+                            "ids": e["ids"],
                             # idf-free weights computed ONCE per (term,
                             # bucket) and SHARED by every query in the
                             # batch — this amortization is what makes the
                             # one-job batch path beat per-query WAND
-                            "w": _weights(tfs, dls[ids - start], avgdl, k1, b),
+                            "w": _weights(e["tfs"], dls[e["ids"] - start],
+                                          avgdl, k1, b),
                             # every packed row carries the term's GLOBAL df
-                            "base_idf": bm25.idf(int(r["df"]), n_docs),
+                            "base_idf": bm25.idf(e["df"], n_docs),
                         }
                     for q, mode, stems in plans_:
                         mult = Counter(stems)
@@ -858,26 +873,23 @@ class PackedQueryEngine:
         mult_ = dict(mult)
 
         def kernel(batches):
-            from search_engine_spark.operators import codec
-
             for pdf in batches:
                 all_ids, all_scores = [], []
                 for brow in pdf.itertuples(index=False):
                     start = int(brow.start)
                     dls = np.asarray(brow.dls, dtype=np.float64)
-                    tombs = _bucket_tombs(brow)
-                    allow = _bucket_allow(brow)
+                    decoded = _decode_rows(brow.trows, False,
+                                           _bucket_tombs(brow),
+                                           _bucket_allow(brow))
                     by_key: dict[str, dict] = {}
                     for r in brow.trows:
-                        ids = codec.decode_docids(bytes(r["doc_ids"]))
-                        tfs = codec.decode_tfs(bytes(r["tfs"]))
-                        ids, tfs = _mask_tombs(ids, tfs, tombs, allow)
+                        e = decoded[r["term"]]
                         by_key[r["term"]] = {
-                            "ids": ids,
-                            "tfs": tfs,
+                            "ids": e["ids"],
+                            "tfs": e["tfs"],
                             "block_last": np.asarray(r["block_last"], dtype=np.int64),
                             "block_maxw": np.asarray(r["block_maxw"], dtype=np.float64),
-                            "idf": bm25.idf(int(r["df"]), n_docs)
+                            "idf": bm25.idf(e["df"], n_docs)
                             * mult_[r["term"].removeprefix("@")],
                         }
                     if mode_ == "and":

@@ -70,11 +70,10 @@ def write_stream_batch(cat: IndexCatalog, batch_df: DataFrame,
     batch = batch.withColumn("doc_id", F.xxhash64("url", "warc_ts", "text"))
     from search_engine_spark.operators import build as B
 
-    # ``text`` rides along ONLY so consolidate_stream can order the keeper
-    # window by (warc_ts, text) — the exact sort the batch pipeline's
-    # dedup_first_wins uses — keeping streamed-then-consolidated warehouses
-    # bit-identical to batch builds even when two fetches of a url share a
-    # warc_ts.
+    # ``warc_ts`` and ``text`` ride along ONLY so consolidate_stream can run
+    # the batch pipeline's dedup_first_wins (keeper = earliest (warc_ts,
+    # text)) — keeping streamed-then-consolidated warehouses bit-identical
+    # to batch builds even when two fetches of a url share a warc_ts.
     meta = B.build_docmeta(batch).join(
         batch.select("doc_id", "warc_ts", "text"), "doc_id"
     ).withColumn("batch_id", F.lit(batch_id))
@@ -116,22 +115,11 @@ def consolidate_stream(cat: IndexCatalog, num_shards: int = 32,
     warehouse: first-wins dedup across all micro-batches, dense url-rank
     re-key (bit-identical to the batch pipeline's ids for the same
     corpus), then the regular checkpointed pack+merge."""
-    from pyspark.sql import Window
-
-    meta = cat.read("docmeta_stream")
-    # keeper fetch per url: earliest (warc_ts, text) — the SAME sort key as
-    # the batch pipeline's dedup_first_wins (operators/extract.py), so the
-    # consolidated warehouse is bit-identical to a batch build even when
-    # two fetches of a url tie on warc_ts with different content; doc_id
-    # (hash of url+ts+text) is a final deterministic tiebreaker.
-    w = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").asc(), F.col("text").asc(), F.col("doc_id").asc()
-    )
-    keepers = (
-        meta.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "warc_ts", "text", "batch_id")
-    )
+    # keeper fetch per url: the batch pipeline's own first-wins rule, so
+    # the consolidated warehouse is bit-identical to a batch build even
+    # when two fetches of a url tie on warc_ts with different content
+    keepers = extract.dedup_first_wins(cat.read("docmeta_stream")).drop(
+        "warc_ts", "text", "batch_id")
     # dense ids by url rank — same axis the batch pipeline uses
     from search_engine_spark.operators.docids import dense_ids_by_key
 
@@ -197,8 +185,6 @@ def consolidate_stream_incremental(
 
     Returns the applied append label, ``"full"`` for a first/full
     consolidation, or ``None`` when no new batches exist."""
-    from pyspark.sql import Window
-
     from search_engine_spark.operators.docids import dense_ids_by_key
     from search_engine_spark.operators.pipeline import apply_delta
 
@@ -219,15 +205,11 @@ def consolidate_stream_incremental(
     max_b = int(meta.agg(F.max("batch_id")).collect()[0][0])
     label = f"stream_b{max_b}"
 
-    # first-wins among the NEW fetches (same sort key as the batch
-    # pipeline's dedup_first_wins), then the existing corpus wins
-    w = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").asc(), F.col("text").asc(), F.col("doc_id").asc()
-    )
+    # first-wins among the NEW fetches (the batch pipeline's rule), then
+    # the existing corpus wins
     keepers = (
-        meta.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "warc_ts", "text", "batch_id")
+        extract.dedup_first_wins(meta)
+        .drop("warc_ts", "text", "batch_id")
         .join(cat.read("docmeta").select("url"), "url", "left_anti")
     )
     base = cat.read("docmeta").agg(F.max("doc_id")).collect()[0][0] + 1

@@ -45,7 +45,7 @@ def catalog(spark, pages_path, tmp_path_factory):
     pages = spark.read.parquet(pages_path)
     # merge_factor=2 → the merge pass genuinely concatenates partial streams
     cat = run_build(spark, pages, str(wh), num_shards=8, salt_buckets=4,
-                    merge_factor=2, pack=True)
+                    merge_factor=2)
     yield cat
     shutil.rmtree(wh, ignore_errors=True)
 

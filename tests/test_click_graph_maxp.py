@@ -1,12 +1,11 @@
 """Pure-Python twins for curriculum_select, plus a plan-shape check (no
 global single-task window in the curriculum prefix sum)."""
 
-import contextlib
-import io
 import math
 import re
 
 from search_engine_spark.catalog.quality import _CURR_FRAC, q_curriculum_select
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -54,9 +53,6 @@ def test_curriculum_prefix_sum_is_distributed(spark):
     scan: a range exchange exists, and no window runs with an empty
     partition spec over the full corpus (the k-row base-offset side
     plan is the only global window and it sees ≤ #ranges rows)."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q_curriculum_select(spark, SF_DIR).explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(q_curriculum_select(spark, SF_DIR))
     assert "rangepartitioning" in plan.lower()
     assert "BroadcastHashJoin" in plan

@@ -5,7 +5,6 @@ general kernel phrases/NOT, logical executor), and physical compaction
 must change nothing observable while retiring the tombstones."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from search_engine_spark.operators.pipeline import (
     compact_deletes, run_append, run_build, run_delete,

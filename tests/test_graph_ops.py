@@ -4,15 +4,13 @@ outlink emission — with the crawl graph replaced by a deterministic
 arithmetic one so a pure-Python twin and the DuckDB oracle can rebuild
 it edge-for-edge)."""
 
-import contextlib
-import io
-
 import duckdb
 
 from search_engine_spark.catalog.graph import (
     _HITS_ITERS, _KCORE_K, _KCORE_ROUNDS, _PR_DAMP, _PR_ITERS, _PR_RULES,
     q_hits, q_kcore, q_pagerank, q_triangle_count,
 )
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -73,10 +71,7 @@ def test_pagerank_graph_has_no_dangling_nodes_and_is_skewed(spark):
 
 def test_pagerank_plan_shape(spark):
     df = q_pagerank(spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(df)
     # the 1-row N side enters as a broadcast, never a shuffled join
     assert "BroadcastExchange" in plan
     # no bare cartesian product anywhere in 8 unrolled iterations
@@ -132,10 +127,7 @@ def test_hits_scores_are_normalized_and_skewed(spark):
 
 def test_hits_plan_shape(spark):
     df = q_hits(spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(df)
     # the two 1-row normalization sums enter as broadcasts, and the
     # iteration itself must never degenerate to a cartesian product
     assert "BroadcastExchange" in plan

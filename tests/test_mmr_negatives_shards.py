@@ -1,9 +1,7 @@
 """Pure-Python twins for hard_negatives and shard_balance, plus plan/shape
 checks (broadcast anchors, shard rollup before the skew window)."""
 
-import contextlib
 import hashlib
-import io
 import re
 from collections import Counter, defaultdict
 
@@ -11,6 +9,7 @@ import duckdb
 
 from search_engine_spark.catalog.ir import q_shard_balance, _SHARDS
 from search_engine_spark.catalog.ann import _HARDNEG_Q, q_hard_negatives
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -63,10 +62,7 @@ def test_hard_negatives_match_python_twin(spark):
 
 
 def test_hard_negatives_anchor_side_is_broadcast(spark):
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q_hard_negatives(spark, SF_DIR).explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(q_hard_negatives(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
@@ -106,10 +102,7 @@ def test_shard_balance_matches_python_twin(spark):
 def test_shard_balance_window_runs_over_shard_rollup(spark):
     """The skew window's input is the ≤_SHARDS-row rollup, not the
     vocabulary: an aggregate sits below the window in the plan."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q_shard_balance(spark, SF_DIR).explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(q_shard_balance(spark, SF_DIR))
     assert "Window" in plan
     assert plan.index("Window") < plan.index("HashAggregate") or (
         "HashAggregate" in plan

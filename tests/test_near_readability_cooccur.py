@@ -7,6 +7,7 @@ import re
 import duckdb
 
 from search_engine_spark.catalog.ir import _NEAR_W, q_bm25_near
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -87,12 +88,6 @@ def test_bm25_near_at_least_as_broad_as_phrase(spark):
 
 
 def test_bm25_near_stats_are_broadcast(spark):
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q_bm25_near(spark, SF_DIR).explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(q_bm25_near(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan

@@ -2,8 +2,6 @@
 naive global cumulative sum (which a bare Window.orderBy would compute
 through one task — the shape we refuse to ship at 10^12 rows)."""
 
-import pyspark.sql.functions as F
-
 from search_engine_spark.catalog.quality import _PACK_LEN, q_pack_sequences
 
 

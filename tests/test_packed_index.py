@@ -142,12 +142,16 @@ def test_resume_after_midbuild_kill(spark, pages_path, tmp_path):
 
     wh = tmp_path / "wh_kill"
     pages = spark.read.parquet(pages_path)
-    # phase 1-5 only ("killed" before pack)
-    run_build(spark, pages, str(wh), num_shards=8, salt_buckets=4, pack=False)
+    cat = run_build(spark, pages, str(wh), num_shards=8, salt_buckets=4,
+                    merge_factor=2)
+    # "killed" before pack: drop every p6 output, phases 1-5 stay durable
+    for t in ("postings_partial", "doclens", "postings_packed"):
+        cat.drop(t)
+    assert not cat.exists("postings_packed")
     docs_mtime = (wh / "docs" / "_SUCCESS").stat().st_mtime
     # resume: completes pack without touching earlier phases
     cat = run_build(spark, pages, str(wh), num_shards=8, salt_buckets=4,
-                    merge_factor=2, pack=True)
+                    merge_factor=2)
     assert (wh / "docs" / "_SUCCESS").stat().st_mtime == docs_mtime
     assert cat.exists("postings_packed")
     n = cat.read("postings_packed").count()

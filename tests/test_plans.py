@@ -4,7 +4,6 @@ filter into the parquet scan; BM25 scoring joins must broadcast the tiny
 side.  These are the properties that keep a 10^12-doc query from touching
 more than |q| shards."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.helpers import _explain

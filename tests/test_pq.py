@@ -1,7 +1,5 @@
 """Pure-Python twin + properties for ann_pq_recall (product quantization)."""
 
-import contextlib
-import io
 import math
 
 import duckdb
@@ -9,6 +7,7 @@ import duckdb
 from search_engine_spark.catalog.ann import (
     _PQ_D, _PQ_KS, _PQ_M, q_ann_pq_recall, _RECALL_K, _RECALL_NQ,
 )
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -109,9 +108,6 @@ def test_ann_pq_recall_beats_chance(spark):
 
 
 def test_ann_pq_codebook_is_broadcast(spark):
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q_ann_pq_recall(spark, SF_DIR).explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(q_ann_pq_recall(spark, SF_DIR))
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan

@@ -3,7 +3,6 @@ length banding, and class-cohesion readouts of a training-data pipeline."""
 
 import math
 
-from search_engine_spark.catalog.ir import q_tfidf_keywords
 from search_engine_spark.catalog.ann import q_label_centroids
 from search_engine_spark.catalog.quality import (
     q_corpus_pipeline, q_length_filter, q_unigram_logprob,
@@ -122,33 +121,3 @@ def test_corpus_pipeline_dedup_among_survivors(spark, tmp_path):
     assert out[0]["uniq_ok"] and not out[0]["keep"]
     assert not out[10]["uniq_ok"] and not out[11]["uniq_ok"]
     assert not any(r["keep"] for r in out.values())
-
-
-def test_tfidf_keywords_top3_per_doc(spark, tmp_path):
-    """tf-idf keyword extraction: rank = tf*ln(n/df) desc, term asc; docs
-    with fewer distinct terms return fewer rows."""
-    import math
-
-    rows = [
-        (0, "apple apple banana cherry", "en", "s"),
-        (1, "banana cherry cherry", "en", "s"),
-        (2, "apple date", "en", "s"),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).write.parquet(f"{tmp_path}/documents.parquet")
-    out = {}
-    for r in q_tfidf_keywords(spark, str(tmp_path)).collect():
-        out.setdefault(r["doc_id"], []).append((r["rank"], r["term"], r["tfidf"]))
-    out = {k: [t for _, t, _ in sorted(v)] for k, v in out.items()}
-    # df: apple 2, banana 2, cherry 2, date 1; n = 3
-    # doc0: apple 2ln1.5 > banana ln1.5 == cherry ln1.5 (term tie-break)
-    assert out[0] == ["apple", "banana", "cherry"]
-    # doc1: cherry 2ln1.5 > banana ln1.5 — only two distinct terms
-    assert out[1] == ["cherry", "banana"]
-    # doc2: date ln3 > apple ln1.5
-    assert out[2] == ["date", "apple"]
-    scores = {(r["doc_id"], r["term"]): r["tfidf"]
-              for r in q_tfidf_keywords(spark, str(tmp_path)).collect()}
-    assert abs(scores[(0, "apple")] - round(2 * math.log(1.5), 4)) < 1e-9
-    assert abs(scores[(2, "date")] - round(math.log(3), 4)) < 1e-9

@@ -1,15 +1,12 @@
-"""Pure-Python twins for the hybrid-retrieval / snippet / graph /
-pipeline extras (rrf_fusion, bfs_hops, label_propagation,
-snippet_extract, anchor_text, trustrank, data_split, oov_rate) —
+"""Pure-Python twins for the hybrid-retrieval / graph / pipeline
+extras (rrf_fusion, bfs_hops, label_propagation, anchor_text,
+trustrank, data_split, oov_rate) —
 independent of both the Spark plans under test and their DuckDB
 oracles."""
 
 import duckdb
 
-from search_engine_spark.catalog.ir import (
-    _BM25_CORE_SQL, q_snippet_extract, _SNIPPET_CTX, _SNIPPET_LEN,
-    _SNIPPET_TERM,
-)
+from search_engine_spark.catalog.ir import _BM25_CORE_SQL
 from search_engine_spark.catalog.ann import q_rrf_fusion, _RRF_DEPTH, _RRF_K
 from search_engine_spark.catalog.graph import (
     _BFS_ITERS, _BFS_SEED_MOD, _LPA_ITERS, _PR_DAMP, _PR_ITERS, _PR_RULES,
@@ -163,38 +160,6 @@ def test_label_propagation_matches_python_lpa(spark):
     assert got == lbl
     # propagation actually merged something: fewer communities than nodes
     assert len(set(got.values())) < len(ids)
-
-
-# ---------------------------------------------------------------------------
-# snippet_extract
-# ---------------------------------------------------------------------------
-
-def test_snippet_extract_matches_python_windows(spark):
-    con = _con()
-    rows = con.execute(
-        "SELECT doc_id, text FROM documents ORDER BY doc_id"
-    ).fetchall()
-    expect = []
-    for doc_id, text in rows:
-        i = text.lower().find(_SNIPPET_TERM)
-        if i < 0:
-            continue
-        pos = i + 1  # 1-based, both engines
-        start = max(1, pos - _SNIPPET_CTX)
-        expect.append(
-            (doc_id, pos, text[start - 1: start - 1 + _SNIPPET_LEN])
-        )
-        if len(expect) == 10:
-            break
-
-    got = [
-        (r["doc_id"], r["pos"], r["snippet"])
-        for r in q_snippet_extract(spark, SF_DIR).collect()
-    ]
-    assert got == expect
-    assert all(_SNIPPET_TERM in s.lower() or p > _SNIPPET_CTX + 1
-               or len(s) == _SNIPPET_LEN
-               for _, p, s in got)
 
 
 # ---------------------------------------------------------------------------

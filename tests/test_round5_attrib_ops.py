@@ -1,11 +1,10 @@
-"""Pure-Python twins for facet_counts and unimax_allocation."""
+"""Pure-Python twin for unimax_allocation."""
 
 import re
 from collections import defaultdict
 
 import duckdb
 
-from search_engine_spark.catalog.ir import _FACET_TERM, q_facet_counts
 from search_engine_spark.catalog.quality import (
     q_unimax_allocation, _UNIMAX_BUDGET_DEN, _UNIMAX_BUDGET_NUM,
     _UNIMAX_EPOCHS,
@@ -23,22 +22,6 @@ def _docs():
 
 def _tok(t):
     return [x for x in re.split(r"[^a-z0-9]+", (t or "").lower()) if x]
-
-
-def test_facet_counts_matches_twin(spark):
-    hits = [
-        (l, s) for _d, t, l, s in _docs() if _FACET_TERM in _tok(t)
-    ]
-    want = defaultdict(int)
-    for l, s in hits:
-        want[("lang", l)] += 1
-        want[("source", s)] += 1
-    got = {
-        (r.facet, r.value): r.n_docs
-        for r in q_facet_counts(spark, SF_DIR).collect()
-    }
-    assert got == dict(want)
-    assert sum(v for (f, _), v in got.items() if f == "lang") == len(hits)
 
 
 def test_unimax_allocation_matches_twin(spark):

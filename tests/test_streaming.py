@@ -90,7 +90,7 @@ def test_merge_resume_layout_mismatch_fails_loudly(spark, tmp_path):
     wh = tmp_path / "wh"
     pages = spark.read.parquet(str(cached_pages(60)))
     cat = run_build(spark, pages, str(wh), num_shards=4, salt_buckets=4,
-                    merge_factor=2, pack=True)
+                    merge_factor=2)
     # simulate an interrupted merge: packed output gone, partials remain
     cat.drop("postings_packed")
     with pytest.raises(ValueError, match="layout mismatch"):

@@ -7,6 +7,7 @@ import duckdb
 from search_engine_spark.catalog.quality import (
     q_weighted_sample, _SPLIT_PRIME, _WSAMPLE_K,
 )
+from tests.helpers import _explain
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -53,12 +54,6 @@ def test_weighted_sample_favors_heavy_docs(spark):
 
 
 def test_weighted_sample_plan_is_topk_not_sort(spark):
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q_weighted_sample(spark, SF_DIR).explain("formatted")
-    plan = buf.getvalue()
+    plan = _explain(q_weighted_sample(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
