@@ -2,8 +2,9 @@
 
 Replicates the engine's full pipeline — extraction, term pipeline, overlong
 title drop, first-wins dedup, lexicographic doc ids, BM25 — with the SAME
-float operation structure as plans/executor.py, so top-k is rank-identical
-and scores match to the last bit (modulo libm ulps).  Used only by tests;
+≤2-addend float structure as the packed general kernel
+(plans/packed_exec.py), so top-k is rank-identical and scores match to the
+last bit (modulo libm ulps).  Used only by tests;
 everything is plain dicts/lists, no Spark.
 """
 
@@ -13,7 +14,7 @@ from search_engine_spark.functions.htmlparse import parse_html
 from search_engine_spark.functions.tokenize import doc_terms
 from search_engine_spark.plans import bm25
 from search_engine_spark.plans.query_ast import (
-    And, Expr, Not, Or, OrSyn, Phrase, Word, compile_query,
+    And, Expr, Not, Or, OrSyn, Phrase, Word, compile_query, ordered_stems,
 )
 
 
@@ -53,7 +54,7 @@ class OracleIndex:
         self.n_docs = len(self.docs)
         self.avgdl = sum(self.dl) / self.n_docs if self.n_docs else 0.0
 
-    # -- scoring, mirroring executor float structure ------------------------
+    # -- scoring, mirroring the general kernel's float structure ------------
     def _term_scores(self, key: str) -> dict[int, float]:
         plist = self.postings.get(key)
         if not plist:
@@ -72,7 +73,11 @@ class OracleIndex:
             out[d] = out.get(d, 0.0) + s
         return out
 
-    def _phrase_scores(self, stems: list[str], decorated: bool) -> dict[int, float]:
+    def _phrase_scores(self, stems: list[str], decorated: bool,
+                       window: int = 1) -> dict[int, float]:
+        """Phrase (window 1) or NEAR (window > 1) leaf: per doc, the count
+        of first-stem positions that start an ordered chain in which each
+        next stem occurs within ``window`` positions after the previous."""
         keys = [("@" + s if decorated else s) for s in stems]
         first = self.postings.get(keys[0])
         if first is None:
@@ -80,18 +85,17 @@ class OracleIndex:
         rest = [self.postings.get(k) for k in keys[1:]]
         if any(r is None for r in rest):
             return {}
+
+        def chain(d: int, p: int, i: int) -> bool:
+            return i == len(rest) or any(
+                p < q <= p + window and chain(d, q, i + 1) for q in rest[i][d]
+            )
+
         tfs: dict[int, int] = {}
         for d, ps in first.items():
-            sets = []
-            ok = True
-            for r in rest:
-                if d not in r:
-                    ok = False
-                    break
-                sets.append(set(r[d]))
-            if not ok:
+            if any(d not in r for r in rest):
                 continue
-            c = sum(1 for p in ps if all((p + i + 1) in sets[i] for i in range(len(sets))))
+            c = sum(1 for p in ps if chain(d, p, 0))
             if c > 0:
                 tfs[d] = c
         if not tfs:
@@ -106,8 +110,9 @@ class OracleIndex:
         if isinstance(expr, Word):
             return self._word_scores(expr.stem)
         if isinstance(expr, Phrase):
-            body = self._phrase_scores(expr.effective_stems, False)
-            title = self._phrase_scores(expr.effective_stems, True)
+            win = int(getattr(expr, "window", 1))   # Near carries window>1
+            body = self._phrase_scores(expr.effective_stems, False, win)
+            title = self._phrase_scores(expr.effective_stems, True, win)
             out = dict(body)
             for d, s in title.items():
                 out[d] = out.get(d, 0.0) + s
@@ -156,46 +161,65 @@ class OracleIndex:
             for d, s in ranked[:k]
         ]
 
-    # -- dynamic span-feature parity oracle (Ranker.cpp WorkerThread) -------
+    # -- heuristic parity modes (Ranker.cpp WorkerThread) --------------------
+    def _static(self, d: int, utility_query: bool) -> float:
+        """The reference static page-quality score of doc ``d``."""
+        import re
+
+        from search_engine_spark.plans.static_score import static_score_py
+        from search_engine_spark.schemas import TLD_CODE
+
+        doc = self.docs[d]
+        host = re.match(r"^[a-z][a-z0-9+.-]*://([^/]+)", doc["url"])
+        suffix_m = re.search(r"\.([a-z0-9]+)$", host.group(1)) if host else None
+        tld = TLD_CODE.get(suffix_m.group(1), 0) if suffix_m else 0
+        return static_score_py(
+            {
+                "url": doc["url"], "url_len": len(doc["url"]),
+                "word_count": doc["word_count"],
+                "title_len": doc["title_len"],
+                "english": doc["english"], "tld": tld,
+            },
+            utility_query=utility_query,
+        )
+
+    def topk_static(self, query: str, k: int = 10, synonyms: bool = False):
+        """Static parity mode: every BM25 match whose static score passes
+        STATIC_THRESHOLD, rescored (1 - STATIC_MIX)·bm25 +
+        STATIC_MIX·static."""
+        from search_engine_spark.plans import static_score as S
+
+        ast = compile_query(query, synonyms=synonyms)
+        if ast is None:
+            return []
+        uq = S.is_utility_query(ordered_stems(ast))
+        out = []
+        for d, bm in self._eval(ast).items():
+            st = self._static(d, uq)
+            if st >= S.STATIC_THRESHOLD:
+                out.append((d, bm * (1.0 - S.STATIC_MIX) + st * S.STATIC_MIX))
+        out.sort(key=lambda t: (-t[1], t[0]))
+        return [(d, s, self.docs[d]["url"], self.docs[d]["title"])
+                for d, s in out[:k]]
+
     def topk_dynamic(self, query: str, k: int = 10, synonyms: bool = False):
         """Per-doc reimplementation of the heuristic ranking flow over the
         oracle's plain dict index: candidate supply = the boolean matching
         set, then static gate → span features → dynamic mix → final score
         (plans/dynamic_score.py kernels over independently-built maps)."""
-        import re
-
         from search_engine_spark.plans import dynamic_score as D
-        from search_engine_spark.plans.static_score import (
-            is_utility_query, static_score_py,
-        )
-        from search_engine_spark.schemas import TLD_CODE
+        from search_engine_spark.plans.static_score import is_utility_query
 
         ast = compile_query(query, synonyms=synonyms)
         if ast is None:
             return []
         groups = D.term_groups_from_ast(ast)
         candidates = sorted(self._eval(ast).keys())
-
-        # query intent over the same ordered-stems view the executor uses
-        from search_engine_spark.plans.executor import _ordered_stems
-
-        uq = is_utility_query(_ordered_stems(ast))
+        uq = is_utility_query(ordered_stems(ast))
 
         out = []
         for d in candidates:
             doc = self.docs[d]
-            host = re.match(r"^[a-z][a-z0-9+.-]*://([^/]+)", doc["url"])
-            suffix_m = re.search(r"\.([a-z0-9]+)$", host.group(1)) if host else None
-            tld = TLD_CODE.get(suffix_m.group(1), 0) if suffix_m else 0
-            static = static_score_py(
-                {
-                    "url": doc["url"], "url_len": len(doc["url"]),
-                    "word_count": doc["word_count"],
-                    "title_len": doc["title_len"],
-                    "english": doc["english"], "tld": tld,
-                },
-                utility_query=uq,
-            )
             pos_map = {
                 key: self.postings.get(key, {}).get(d, [])
                 for key in groups.all_keys()
@@ -206,7 +230,7 @@ class OracleIndex:
             }
             score = D.rank_doc(
                 groups, pos_map, flag_map, doc["url"], doc["title_len"],
-                doc["word_count"], self.dl[d], static,
+                doc["word_count"], self.dl[d], self._static(d, uq),
             )
             if score is not None:
                 out.append((d, score, doc["url"], doc["title"]))

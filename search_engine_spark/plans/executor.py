@@ -28,48 +28,9 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.plans import bm25
 from search_engine_spark.plans.query_ast import (
-    And, Expr, Not, Or, OrSyn, Phrase, Word, compile_query,
+    And, Expr, Not, Or, OrSyn, Phrase, Word, collect_keys, compile_query,
+    ordered_stems,
 )
-
-
-def _ordered_stems(expr: Expr) -> list[str]:
-    """Leaf stems in left-to-right order (the reference's flattened ISR
-    term order, isr.cpp:656-674 — first term = query intent main term)."""
-    if isinstance(expr, Word):
-        return [expr.stem]
-    if isinstance(expr, Phrase):
-        return list(expr.effective_stems)
-    if isinstance(expr, (And, Or)):
-        return _ordered_stems(expr.left) + _ordered_stems(expr.right)
-    if isinstance(expr, Not):
-        return _ordered_stems(expr.child)
-    if isinstance(expr, OrSyn):
-        out = _ordered_stems(expr.original)
-        for s in expr.synonyms:
-            out += _ordered_stems(s)
-        return out
-    raise TypeError(type(expr))
-
-
-def _collect_keys(expr: Expr) -> set[str]:
-    if isinstance(expr, Word):
-        return {expr.stem, "@" + expr.stem}
-    if isinstance(expr, Phrase):
-        ks: set[str] = set()
-        for s in expr.effective_stems:
-            ks.add(s)
-            ks.add("@" + s)
-        return ks
-    if isinstance(expr, (And, Or)):
-        return _collect_keys(expr.left) | _collect_keys(expr.right)
-    if isinstance(expr, Not):
-        return _collect_keys(expr.child)
-    if isinstance(expr, OrSyn):
-        ks = _collect_keys(expr.original)
-        for s in expr.synonyms:
-            ks |= _collect_keys(s)
-        return ks
-    raise TypeError(type(expr))
 
 
 class QueryEngine:
@@ -311,7 +272,7 @@ class QueryEngine:
             return empty
         if dynamic_mode:
             return self._search_dynamic(ast, k)
-        keys = _collect_keys(ast)
+        keys = collect_keys(ast)
         if not keys:
             return empty
         scored = self._scored(keys).persist()
@@ -321,7 +282,7 @@ class QueryEngine:
             # reference's static page-quality score, prune static < 0.25
             from search_engine_spark.plans import static_score as S
 
-            uq = S.is_utility_query(_ordered_stems(ast))
+            uq = S.is_utility_query(ordered_stems(ast))
             meta = self.docmeta.withColumn("_static", S.static_score_col(uq))
             result = (
                 result.join(meta, "doc_id")
@@ -387,7 +348,7 @@ class QueryEngine:
             .agg(F.collect_list(F.struct("term", "positions", "pos_flags"))
                  .alias("_plist"))
         )
-        uq = S.is_utility_query(_ordered_stems(ast))
+        uq = S.is_utility_query(ordered_stems(ast))
         meta = self.docmeta.withColumn("_static", S.static_score_col(uq))
         rows = plist.join(meta, "doc_id")
 

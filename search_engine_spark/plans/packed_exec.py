@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.plans import bm25
 from search_engine_spark.plans.query_ast import (
-    And, Expr, Not, Or, OrSyn, Phrase, Word,
+    And, Expr, Not, Or, OrSyn, Phrase, Word, collect_keys,
 )
 from search_engine_spark.plans.wand import (
     _bucket_allow, _bucket_tombs, _decode_rows, _weights,
@@ -421,13 +421,11 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
 
     Rows still need the caller's per-query global rank window — this
     returns candidates, exactly like the flat kernel path."""
-    from search_engine_spark.plans.executor import _collect_keys
-
     specs = [Spec(ast) for _, ast in items]
     need_pos = any(has_phrase(ast) for _, ast in items)
     if rows is None:
         rows = engine._bucket_rows(
-            sorted({key for _, ast in items for key in _collect_keys(ast)}),
+            sorted({key for _, ast in items for key in collect_keys(ast)}),
             ["term", "df", "doc_ids", "tfs"] + (["pos"] if need_pos else []),
             outer=any(sp.zero_match for sp in specs),
         )

@@ -20,8 +20,8 @@ Faithful port of the reference grammar and rewrites
   leaf expands to OR_SYN(original, synonyms…) — in BM25 scoring the
   synonyms contribute with weight SYN_WEIGHT=0.4 (Ranker.hpp:110).
 
-The AST is the engine's logical plan; plans/executor.py compiles it to a
-DataFrame pipeline.
+The AST is the engine's logical plan; plans/wand.py and plans/packed_exec.py
+evaluate it over the packed index.
 """
 
 from __future__ import annotations
@@ -319,3 +319,42 @@ def optimize(expr: Expr | None, synonyms: bool = False) -> Expr | None:
 
 def compile_query(query: str, synonyms: bool = False) -> Expr | None:
     return optimize(parse(query), synonyms=synonyms)
+
+
+# --- leaf walks shared by the engine and the oracle -----------------------------
+
+def ordered_stems(expr: Expr) -> list[str]:
+    """Leaf stems in left-to-right order (the reference's flattened ISR
+    term order, isr.cpp:656-674 — first term = query intent main term)."""
+    if isinstance(expr, Word):
+        return [expr.stem]
+    if isinstance(expr, Phrase):
+        return list(expr.effective_stems)
+    if isinstance(expr, (And, Or)):
+        return ordered_stems(expr.left) + ordered_stems(expr.right)
+    if isinstance(expr, Not):
+        return ordered_stems(expr.child)
+    if isinstance(expr, OrSyn):
+        out = ordered_stems(expr.original)
+        for s in expr.synonyms:
+            out += ordered_stems(s)
+        return out
+    raise TypeError(type(expr))
+
+
+def collect_keys(expr: Expr) -> set[str]:
+    """Every index key the tree reads: each leaf stem and its '@' twin."""
+    if isinstance(expr, Word):
+        return {expr.stem, "@" + expr.stem}
+    if isinstance(expr, Phrase):
+        return {k for s in expr.effective_stems for k in (s, "@" + s)}
+    if isinstance(expr, (And, Or)):
+        return collect_keys(expr.left) | collect_keys(expr.right)
+    if isinstance(expr, Not):
+        return collect_keys(expr.child)
+    if isinstance(expr, OrSyn):
+        ks = collect_keys(expr.original)
+        for s in expr.synonyms:
+            ks |= collect_keys(s)
+        return ks
+    raise TypeError(type(expr))

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.plans import bm25
 from search_engine_spark.plans.query_ast import (
-    And, Expr, Not, Or, OrSyn, Prefix, Word, compile_query,
+    And, Expr, Not, Or, OrSyn, Prefix, Word, collect_keys, compile_query,
 )
 
 
@@ -623,7 +623,6 @@ class PackedQueryEngine:
         is silently dropped.
         """
         from search_engine_spark.plans import packed_exec
-        from search_engine_spark.plans.executor import _collect_keys
 
         asts: list[tuple[str, Expr]] = []
         for q in queries:
@@ -664,7 +663,7 @@ class PackedQueryEngine:
         parts: list[DataFrame] = []
         need_pos = any(packed_exec.has_phrase(a) for _, a in nonflat)
         rows = self._bucket_rows(
-            sorted(flat_keys.union(*(_collect_keys(a) for _, a in nonflat))),
+            sorted(flat_keys.union(*(collect_keys(a) for _, a in nonflat))),
             _SCORE_COLS + (["pos"] if need_pos else []),
             outer=any(packed_exec.zero_match(a) for _, a in nonflat),
         )

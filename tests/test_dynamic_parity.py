@@ -169,10 +169,10 @@ DYNAMIC_QUERIES = [
 
 
 @pytest.mark.parametrize("q", DYNAMIC_QUERIES)
-def test_dynamic_rank_identity(engine, oracle, q):
+def test_dynamic_rank_identity(packed_engine, oracle, q):
     got = [
         (r["doc_id"], r["score"])
-        for r in engine.search(q, k=10, dynamic_mode=True).collect()
+        for r in packed_engine.search(q, k=10, dynamic_mode=True).collect()
     ]
     exp = [(d, s) for d, s, _, _ in oracle.topk_dynamic(q, k=10)]
     assert [d for d, _ in got] == [d for d, _ in exp], f"{q!r}: {got} vs {exp}"
@@ -181,11 +181,11 @@ def test_dynamic_rank_identity(engine, oracle, q):
 
 
 @pytest.mark.parametrize("q", ["connection", "apple news"])
-def test_dynamic_rank_identity_with_synonyms(engine, oracle, q):
+def test_dynamic_rank_identity_with_synonyms(packed_engine, oracle, q):
     got = [
         (r["doc_id"], r["score"])
-        for r in engine.search(q, k=10, synonyms=True,
-                               dynamic_mode=True).collect()
+        for r in packed_engine.search(q, k=10, synonyms=True,
+                                      dynamic_mode=True).collect()
     ]
     exp = [(d, s) for d, s, _, _ in oracle.topk_dynamic(q, k=10, synonyms=True)]
     assert [d for d, _ in got] == [d for d, _ in exp], q

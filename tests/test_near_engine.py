@@ -1,6 +1,6 @@
 """NEAR/k ordered-proximity operator on the REAL engine: parser syntax
 ("a b"~k), packed positional kernel (window-widened phrase chain), and the
-exhaustive DataFrame executor twin — three independent implementations
+pure-Python oracle's ordered chain — independent implementations
 cross-checked (plus NEAR/1 ≡ Phrase exactly)."""
 
 import pytest
@@ -69,33 +69,26 @@ def test_near1_equals_phrase_packed(packed_engine):
 
 
 # ---------------------------------------------------------------------------
-# packed kernel ≡ exhaustive executor (rank identity)
+# packed kernel ≡ exhaustive oracle (rank identity)
 # ---------------------------------------------------------------------------
 
+def _packed_vs_oracle(packed_engine, oracle, q):
+    got = [(r.doc_id, r.score)
+           for r in packed_engine.search(q, k=10).collect()]
+    want = [(d, s) for d, s, _u, _t in oracle.topk(q, k=10)]
+    assert [d for d, _ in got] == [d for d, _ in want], q
+    assert [s for _, s in got] == pytest.approx(
+        [s for _, s in want], rel=1e-9, abs=1e-12), q
+    assert got, q
+
+
 @pytest.mark.parametrize("q", QUERIES)
-def test_near_packed_matches_exhaustive(q, packed_engine, engine):
-    got = [
-        (r.doc_id, round(r.score, 9))
-        for r in packed_engine.search(q, k=10).collect()
-    ]
-    want = [
-        (r.doc_id, round(r.score, 9))
-        for r in engine.search(q, k=10).collect()
-    ]
-    assert got == want
+def test_near_packed_matches_exhaustive(q, packed_engine, oracle):
+    _packed_vs_oracle(packed_engine, oracle, q)
 
 
-def test_near_mixed_tree_packed_matches_exhaustive(packed_engine, engine):
-    q = '"w0 w1"~4 scores'
-    got = [
-        (r.doc_id, round(r.score, 9))
-        for r in packed_engine.search(q, k=10).collect()
-    ]
-    want = [
-        (r.doc_id, round(r.score, 9))
-        for r in engine.search(q, k=10).collect()
-    ]
-    assert got == want
+def test_near_mixed_tree_packed_matches_exhaustive(packed_engine, oracle):
+    _packed_vs_oracle(packed_engine, oracle, '"w0 w1"~4 scores')
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ import pytest
 from search_engine_spark.sources.queryset import QUERIES
 
 
-def _run(engine, oracle, q, k=10, synonyms=False, tol=1e-12):
+def _run(engine, oracle, q, k=10, synonyms=False, tol=1e-9):
     got = [
         (r["doc_id"], r["score"])
         for r in engine.search(q, k=k, synonyms=synonyms).collect()
@@ -24,8 +24,16 @@ def _run(engine, oracle, q, k=10, synonyms=False, tol=1e-12):
 
 
 @pytest.mark.parametrize("qid,q", QUERIES)
-def test_rank_identity(engine, oracle, qid, q):
-    _run(engine, oracle, q)
+def test_rank_identity(packed_engine, oracle, qid, q):
+    """The one-job batch path (search_batch) must be rank-identical to the
+    oracle on every query of the frozen set."""
+    got = [(r["doc_id"], r["score"]) for r in sorted(
+        packed_engine.search_batch([q], k=10).collect(),
+        key=lambda r: r["rank"])]
+    exp = [(d, s) for d, s, _, _ in oracle.topk(q, k=10)]
+    assert [d for d, _ in got] == [d for d, _ in exp], q
+    assert [s for _, s in got] == pytest.approx(
+        [s for _, s in exp], rel=1e-9, abs=1e-9), q
 
 
 # Real-vocabulary queries: every word below is (a) in the synthetic corpus
@@ -44,13 +52,13 @@ SYNONYM_QUERIES = [
 
 
 @pytest.mark.parametrize("q", SYNONYM_QUERIES)
-def test_rank_identity_with_synonyms(engine, oracle, q):
-    _run(engine, oracle, q, synonyms=True)
+def test_rank_identity_with_synonyms(packed_engine, oracle, q):
+    _run(packed_engine, oracle, q, synonyms=True)
 
 
 @pytest.mark.parametrize("q", ["connection", "news retrieval", "apple | size"])
 def test_rank_identity_with_synonyms_packed(packed_engine, oracle, q):
-    _run(packed_engine, oracle, q, synonyms=True, tol=1e-9)
+    _run(packed_engine, oracle, q, synonyms=True)
 
 
 @pytest.mark.parametrize("qid,q", QUERIES)
@@ -58,7 +66,7 @@ def test_rank_identity_packed(packed_engine, oracle, qid, q):
     """The physical path (varbyte + block-max WAND + fallbacks) must be
     rank-identical to the oracle too; 1e-9 tolerance absorbs float addition
     order inside the kernel."""
-    _run(packed_engine, oracle, q, tol=1e-9)
+    _run(packed_engine, oracle, q)
 
 
 NONFLAT_QUERIES = [
@@ -76,7 +84,7 @@ def test_rank_identity_packed_without_fallback(catalog, oracle, q):
 
     eng = PackedQueryEngine.from_catalog(catalog)
     eng.fallback = None
-    _run(eng, oracle, q, tol=1e-9)
+    _run(eng, oracle, q)
 
 
 @pytest.mark.parametrize("q", ["connection", "news retrieval",
@@ -86,13 +94,13 @@ def test_rank_identity_synonyms_packed_without_fallback(catalog, oracle, q):
 
     eng = PackedQueryEngine.from_catalog(catalog)
     eng.fallback = None
-    _run(eng, oracle, q, synonyms=True, tol=1e-9)
+    _run(eng, oracle, q, synonyms=True)
 
 
-def test_nonempty_results_for_head_terms(engine):
-    assert engine.search("search").count() > 0
-    assert engine.search("w0").count() > 0
+def test_nonempty_results_for_head_terms(packed_engine):
+    assert packed_engine.search("search").count() > 0
+    assert packed_engine.search("w0").count() > 0
 
 
-def test_stopword_query_empty(engine):
-    assert engine.search("the of and").count() == 0
+def test_stopword_query_empty(packed_engine):
+    assert packed_engine.search("the of and").count() == 0

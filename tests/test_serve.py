@@ -72,14 +72,13 @@ def test_search_site_scoped(server):
     assert got == want and got
 
 
-def test_search_phrase_and_modes(server):
-    base, engine = server
+def test_search_phrase_and_modes(server, oracle):
+    base, _engine = server
     code, body = _get(f"{base}/search?q=%22search+engine%22&k=3")
     assert code == 200 and len(body["results"]) <= 3
     code, body = _get(f"{base}/search?q=search&k=3&mode=dynamic")
     assert code == 200
-    want = [r["doc_id"]
-            for r in engine.search("search", k=3, dynamic_mode=True).collect()]
+    want = [d for d, _s, _u, _t in oracle.topk_dynamic("search", k=3)]
     assert [r["doc_id"] for r in body["results"]] == want
 
 
