@@ -77,11 +77,12 @@ def _engine_catalog(spark: SparkSession):
     from search_engine_spark.operators.pipeline import run_build
     from search_engine_spark.sources.pages import cached_pages
 
-    # _v4: bump when the warehouse layout changes (v3 = packed positions
+    # _v5: bump when the warehouse layout changes (v3 = packed positions
     # column for first-class phrase queries; v4 = merge-time block headers
-    # + dlb partials for incremental append) so a stale cache never mixes
-    # schemas across rounds
-    wh = f"/tmp/se_entry_wh_n{_ENGINE_CORPUS_DOCS}_v4"
+    # + dlb partials for incremental append; v5 = no logical postings
+    # table, packed flags stream) so a stale cache never mixes schemas
+    # across rounds
+    wh = f"/tmp/se_entry_wh_n{_ENGINE_CORPUS_DOCS}_v5"
     pages = spark.read.parquet(str(cached_pages(_ENGINE_CORPUS_DOCS)))
     return run_build(spark, pages, wh)
 
@@ -98,15 +99,26 @@ def _engine_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _engine_postings_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine postings for a fixed stem, demonstrating @-title decoration
-    and position arrays from the reference-parity analyzer."""
+    and positions from the reference-parity analyzer: the packed rows of
+    ``search``/``@search`` decoded into one (term, doc_id, tf,
+    n_positions) row per posting."""
+    import numpy as np
     from pyspark.sql import functions as F
 
+    from search_engine_spark.operators import codec
+
     cat = _engine_catalog(spark)
-    return _check_golden("engine_postings_sample", (
-        cat.read("postings")
-        .filter(F.col("term").isin("search", "@search"))
-        .select("term", "doc_id", "tf", F.size("positions").alias("n_positions"))
-    ))
+    rows = []
+    for r in (cat.read("postings_packed")
+              .filter(F.col("term").isin("search", "@search")).collect()):
+        ids = codec.decode_docids(bytes(r["doc_ids"]))
+        tfs = codec.decode_tfs(bytes(r["tfs"]))
+        flat = codec.decode_position_stream(bytes(r["pos"]), tfs)
+        runs = np.split(flat, np.cumsum(tfs)[:-1])
+        rows += [(r["term"], int(d), int(t), len(p))
+                 for d, t, p in zip(ids, tfs, runs)]
+    return _check_golden("engine_postings_sample", spark.createDataFrame(
+        rows, "term string, doc_id long, tf int, n_positions int"))
 
 
 def _engine_batch_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,14 +143,12 @@ def _engine_batch_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _engine_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase retrieval on the PHYSICAL path: positional adjacency decoded
     from the packed ``pos`` varbyte streams inside the bucketed kernel
-    (plans/packed_exec.py) — no logical-postings fallback (fallback engine
-    explicitly removed).  Rank identity vs the pure-Python oracle is
+    (plans/packed_exec.py).  Rank identity vs the pure-Python oracle is
     enforced by tests/test_rank_identity.py; this entry golden-checks the
     values end-to-end (ISRPhrase X7, isr.cpp:571-598)."""
     from search_engine_spark.plans.wand import PackedQueryEngine
 
     eng = PackedQueryEngine.from_catalog(_engine_catalog(spark))
-    eng.fallback = None  # prove the packed path serves phrases alone
     # phrase + implicit-AND term + NOT in one tree: exercises the ptf-slot
     # finalize, the word-slot kernel, and the anti-join membership together
     return _check_golden(
@@ -152,14 +162,13 @@ def _engine_near_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     positional kernel (plans/packed_exec.py phrase_match, window>1
     branch) over the packed ``pos`` streams — the Lucene-style "a b"~k
     surface the phrase ISR (X7) is the k=1 special case of.  Packed ≡
-    exhaustive-executor rank identity plus NEAR/1 ≡ Phrase are enforced
+    oracle rank identity plus NEAR/1 ≡ Phrase are enforced
     by tests/test_near_engine.py; this entry golden-checks the values
     end-to-end, mixed with a word term so the ptf-slot finalize and the
     word-slot kernel compose."""
     from search_engine_spark.plans.wand import PackedQueryEngine
 
     eng = PackedQueryEngine.from_catalog(_engine_catalog(spark))
-    eng.fallback = None  # prove the packed path serves NEAR alone
     return _check_golden(
         "engine_near_topk",
         eng.search('"w0 w1"~4 scores', k=10),
@@ -186,7 +195,8 @@ def _engine_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _engine_dynamic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic-parity ranking flow (SURVEY §2.7 R4/R5): static gate +
     rarest-term span features + synonym fallback + 0.75/0.25 final mix
-    (plans/dynamic_score.py), distributed over the candidate set.
+    (plans/dynamic_score.py), distributed over the packed general
+    kernel's match set.
     Value-checked against fixtures/golden_engine.json; rank identity vs
     the per-doc oracle is enforced by tests/test_dynamic_parity.py."""
     from search_engine_spark.plans.wand import PackedQueryEngine

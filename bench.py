@@ -106,9 +106,7 @@ def main() -> None:
     eng.packed = eng.packed.cache()
     eng.doclens = eng.doclens.cache()
     eng.docmeta = eng.docmeta.cache()
-    eng.fallback.postings = eng.fallback.postings.cache()
-    eng.fallback.docmeta = eng.docmeta
-    for df in (eng.packed, eng.doclens, eng.docmeta, eng.fallback.postings):
+    for df in (eng.packed, eng.doclens, eng.docmeta):
         _force(df)
 
     lat = []

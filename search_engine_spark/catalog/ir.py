@@ -269,7 +269,6 @@ def q_bm25_phrase(spark, sf_dir):
     # phrase df INSIDE the same plan via a global window count over the
     # (small) matching set — no persist()+count() driver action; corpus
     # stats a 1-row broadcast side plan — ONE job total
-    # (the same trick as plans/executor.py's phrase leaf)
     from pyspark.sql import Window
 
     starts = starts.withColumn("_pdf", F.count("*").over(Window.partitionBy()))

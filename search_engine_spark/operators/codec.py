@@ -16,6 +16,8 @@ private):
 * doc_ids: strictly increasing → deltas with first value absolute
   (gap_0 = docid_0, gap_i = docid_i − docid_{i−1}), each varbyte'd.
 * tfs: varbyte of (tf − 1) (tf ≥ 1 always).
+* pos / flags: per doc, varbyte(delta in-doc positions) and one style-flag
+  byte per occurrence, tf values each, concatenated in doc order.
 * block headers (replaces the reference's skip table, Posts.hpp:345-379):
   fixed BLOCK_SIZE-doc blocks, per block `(last_docid, max_weight)` where
   max_weight = max over the block of the BM25 tf/dl weight (idf excluded —
@@ -171,6 +173,31 @@ def decode_position_stream(buf: bytes, lens: np.ndarray) -> np.ndarray:
     np.cumsum(lens[:-1], out=offs[1:])
     base = np.repeat(cs[offs] - vals[offs], lens)
     return cs - base
+
+
+def split_position_stream(buf: bytes, lens: np.ndarray) -> list[bytes]:
+    """Concatenated per-doc position streams → the per-doc streams, cut at
+    every ``lens``-th value end (a byte with the stop bit) — the inverse of
+    concatenation, without decoding a value."""
+    lens = np.asarray(lens, dtype=np.int64)
+    if lens.size == 0:
+        return []
+    value_ends = np.flatnonzero(np.frombuffer(buf, dtype=np.uint8) & 0x80) + 1
+    ends = value_ends[np.cumsum(lens) - 1]
+    starts = np.concatenate(([0], ends[:-1]))
+    return [buf[a:b] for a, b in zip(starts, ends)]
+
+
+def encode_flag_lists(lists: list[np.ndarray]) -> list[bytes]:
+    """Per-occurrence style flags (bold/heading bits, Posts.hpp:33) → one
+    byte per occurrence, aligned with the posting's position stream; like
+    the positions, a doc's run length is its tf, so streams concatenate
+    without delimiters."""
+    return [np.asarray(f, dtype=np.uint8).tobytes() for f in lists]
+
+
+def decode_flag_stream(buf: bytes) -> np.ndarray:
+    return np.frombuffer(buf, dtype=np.uint8).astype(np.int64)
 
 
 def rebase_first_gap(buf: bytes, prev_last_docid: int) -> bytes:

@@ -12,9 +12,10 @@ directories, the Spark analogue of the reference's dictionary lookup):
   n_docs      long     — postings in this row
   doc_ids     binary   — varbyte(delta(sorted doc ids)), first gap absolute
   tfs         binary   — varbyte(tf − 1), aligned with doc_ids
+  pos         binary   — per doc, varbyte(delta in-doc positions)
+  flags       binary   — per occurrence, one style-flag byte (aligned with pos)
   block_last  array<long>   — per 128-doc block: last doc id
   block_maxw  array<double> — per block: max idf-free BM25 weight
-  first_docid, last_docid   — row-level bounds (data-skipping stats)
 
 Why doc-space bucketing (the explicit skew handling the north rule asks
 for): grouping by bare ``term`` puts a head term's entire posting list in
@@ -29,11 +30,15 @@ from its per-chunk ISR trees, csolver.cpp:135-149 — doc-sharded there,
 doc-bucketed-within-term-shard here).
 
 Pass structure (each pass a checkpointed catalog table):
-  p6a ``postings_partial``: join dl → per-posting idf-free weight (JVM
-      expressions) → groupBy(term, doc_bucket) collect_list/sort_array (two-
-      phase hash agg) → vectorized pandas-UDF encoders → partial rows.
-  p6b ``postings_packed``: global df agg + shuffle-merge of each term's
-      partials into merge_factor-coarser buckets via stream concatenation.
+  p4 ``postings_partial`` (write_partials): the docs' posting rows
+      (operators/build.py build_postings, never written themselves) →
+      groupBy(term, doc_bucket) collect_list/sort_array → vectorized
+      pandas-UDF encoders → partial rows.  The partials are the one
+      postings table every later pass reads and writes: appends add
+      partial rows, deletes and compaction decode them (unpack_partials).
+  p6 ``postings_packed`` (pack_and_merge): global df agg + shuffle-merge of
+      each term's partials into merge_factor-coarser buckets via stream
+      concatenation.
 """
 
 from __future__ import annotations
@@ -54,15 +59,21 @@ from search_engine_spark.plans import bm25
 
 PACKED_SCHEMA = (
     "term string, shard int, bucket int, df long, n_docs long, "
-    "doc_ids binary, tfs binary, pos binary, block_last array<long>, "
-    "block_maxw array<double>, first_docid long, last_docid long"
+    "doc_ids binary, tfs binary, pos binary, flags binary, "
+    "block_last array<long>, block_maxw array<double>"
 )
-# ``pos``: concatenated per-doc varbyte(delta positions) streams, doc order
-# aligned with doc_ids; per-doc run lengths = decoded tfs (tf == n positions
-# by construction, operators/build.py build_postings).  Parquet is columnar,
+# ``pos``/``flags``: concatenated per-doc streams, doc order aligned with
+# doc_ids; per-doc run lengths = decoded tfs (tf == n positions by
+# construction, operators/build.py build_postings).  Parquet is columnar,
 # so "positions in separate storage" (SURVEY §7.2) is column pruning: BM25
-# scans select every column EXCEPT pos and never read these bytes — only
-# phrase/NOT/synonym plans (plans/packed_exec.py) project it.
+# scans select every column EXCEPT pos/flags and never read these bytes —
+# only phrase/NOT/synonym plans project pos, and only the dynamic parity
+# mode projects flags (plans/packed_exec.py).
+# Partial rows (postings_partial) carry the same streams plus ``dlb``
+# (per-posting doc lengths), ``df_local`` and first_docid/last_docid, the
+# merge's concatenation keys.
+LAYOUT_PROPS = ("p6a_num_shards", "p6a_salt_buckets", "p6a_bucket_width",
+                "p6a_merge_factor")
 
 
 def shard_col(term_col="term", num_shards: int = 32):
@@ -78,26 +89,18 @@ def shard_col(term_col="term", num_shards: int = 32):
 # applyInPandas) so thousands of small per-term groups batch into a few
 # Arrow transfers instead of one pandas round-trip per group.
 
-@pandas_udf(BinaryType())
-def _enc_pos_row(positions: pd.Series) -> pd.Series:
-    """Per-POSTING position compression, applied as a NARROW map BEFORE the
-    pack shuffle: the (term, doc_bucket) groupBy then moves ~1.2 bytes per
-    occurrence across the wire instead of 8-byte Arrow ints.  Encoded in
-    one vectorized pass per Arrow batch (codec.encode_position_lists)."""
-    return pd.Series(codec.encode_position_lists(list(positions)))
-
-
 _ENC_T = StructType([
     StructField("doc_ids", BinaryType()),
     StructField("tfs", BinaryType()),
     StructField("dlb", BinaryType()),
     StructField("pos", BinaryType()),
+    StructField("flags", BinaryType()),
 ])
 
 
 @pandas_udf(_ENC_T)
 def _enc_posting(ids: pd.Series, tfs: pd.Series, dls: pd.Series,
-                 posbs: pd.Series) -> pd.DataFrame:
+                 posbs: pd.Series, flagbs: pd.Series) -> pd.DataFrame:
     """Partials carry NO block headers: WAND bounds depend on avgdl, which
     is only final at merge time (an incremental append changes it), so the
     merge pass computes them — exact for whatever corpus the merge sees.
@@ -105,15 +108,15 @@ def _enc_posting(ids: pd.Series, tfs: pd.Series, dls: pd.Series,
     ~1 byte each), which is what the merge needs to weight postings without
     a doclens join (a second corpus-wide shuffle of the payloads)."""
     rows = []
-    for i, t, dl, pb in zip(ids, tfs, dls, posbs):
-        ia = np.asarray(i, dtype=np.int64)
+    for i, t, dl, pb, fb in zip(ids, tfs, dls, posbs, flagbs):
         rows.append({
-            "doc_ids": codec.encode_docids(ia),
+            "doc_ids": codec.encode_docids(np.asarray(i, dtype=np.int64)),
             "tfs": codec.encode_tfs(np.asarray(t, dtype=np.int64)),
             "dlb": codec.varbyte_encode(np.asarray(dl, dtype=np.int64)),
-            # per-doc streams are already individually delta-encoded and
-            # doc-ordered (sort_array upstream) — plain concatenation
+            # per-doc streams are self-contained and doc-ordered
+            # (sort_array upstream) — plain concatenation
             "pos": b"".join(bytes(x) for x in pb),
+            "flags": b"".join(bytes(x) for x in fb),
         })
     return pd.DataFrame(rows)
 
@@ -123,10 +126,9 @@ _MERGED_T = StructType([
     StructField("doc_ids", BinaryType()),
     StructField("tfs", BinaryType()),
     StructField("pos", BinaryType()),
+    StructField("flags", BinaryType()),
     StructField("block_last", ArrayType(LongType())),
     StructField("block_maxw", ArrayType(DoubleType())),
-    StructField("first_docid", LongType()),
-    StructField("last_docid", LongType()),
 ])
 
 
@@ -148,6 +150,7 @@ def _make_merge_udf(avgdl: float, k1: float = bm25.K1, b: float = bm25.B):
             tfs_buf = bytearray()
             dlb_buf = bytearray()
             pos_buf = bytearray()
+            flags_buf = bytearray()
             prev_last = None
             n = 0
             for p in plist:
@@ -158,6 +161,7 @@ def _make_merge_udf(avgdl: float, k1: float = bm25.K1, b: float = bm25.B):
                 tfs_buf += bytes(p["tfs"])
                 dlb_buf += bytes(p["dlb"])
                 pos_buf += bytes(p["pos"])  # per-doc streams restart absolute
+                flags_buf += bytes(p["flags"])
                 prev_last = int(p["last_docid"])
                 n += int(p["n_docs"])
             ids = codec.decode_docids(bytes(ids_buf))
@@ -170,10 +174,9 @@ def _make_merge_udf(avgdl: float, k1: float = bm25.K1, b: float = bm25.B):
                 "doc_ids": bytes(ids_buf),
                 "tfs": bytes(tfs_buf),
                 "pos": bytes(pos_buf),
+                "flags": bytes(flags_buf),
                 "block_last": last,
                 "block_maxw": maxw,
-                "first_docid": int(plist[0]["first_docid"]),
-                "last_docid": prev_last,
             })
         return pd.DataFrame(rows)
 
@@ -185,51 +188,101 @@ def pack_partials(
     num_shards: int,
     bucket_width: int,
 ) -> DataFrame:
-    """p6a: logical postings → per-(term, doc_bucket) encoded partial rows.
+    """Posting rows (build_postings shape: term, doc_id, dl, tf, pos,
+    flags) → per-(term, doc_bucket) encoded partial rows.
 
-    No join: postings carry ``dl`` inline (build_postings), so the
-    per-posting doc length rides into the partial's ``dlb`` stream as a
-    pure column expression.  Headers are merge-time (see _enc_posting)."""
+    No join: postings carry ``dl`` inline, so the per-posting doc length
+    rides into the partial's ``dlb`` stream as a pure column expression.
+    Headers are merge-time (see _enc_posting)."""
     plist = (
-        postings.select("term", "doc_id", "tf", "dl", "positions")
-        # narrow pre-shuffle compression: each posting's positions become a
-        # self-contained varbyte stream, so the pack shuffle moves bytes,
-        # not 8-byte ints, and the merge pass never re-encodes them
-        .withColumn("posb", _enc_pos_row("positions"))
-        .drop("positions")
+        postings.select("term", "doc_id", "tf", "dl", "pos", "flags")
         .withColumn("bucket", (F.col("doc_id") / F.lit(bucket_width)).cast("int"))
         .groupBy("term", "bucket")
         .agg(
             F.sort_array(
-                F.collect_list(F.struct("doc_id", "tf", "dl", "posb"))
+                F.collect_list(F.struct("doc_id", "tf", "dl", "pos", "flags"))
             ).alias("plist"),
             F.count("*").alias("n_docs"),
-        )
-        .select(
-            "term",
-            shard_col(num_shards=num_shards).alias("shard"),
-            "bucket",
-            "n_docs",
-            F.col("plist.doc_id").alias("_ids"),
-            F.col("plist.tf").alias("_tfs"),
-            F.col("plist.dl").alias("_dls"),
-            F.col("plist.posb").alias("_posbs"),
         )
     )
     return plist.select(
         "term",
-        "shard",
+        shard_col(num_shards=num_shards).alias("shard"),
         "bucket",
         F.col("n_docs").alias("df_local"),
         "n_docs",
-        _enc_posting("_ids", "_tfs", "_dls", "_posbs").alias("p"),
-        F.element_at("_ids", 1).alias("first_docid"),
-        F.element_at("_ids", -1).alias("last_docid"),
+        _enc_posting("plist.doc_id", "plist.tf", "plist.dl", "plist.pos",
+                     "plist.flags").alias("p"),
+        F.element_at("plist.doc_id", 1).alias("first_docid"),
+        F.element_at("plist.doc_id", -1).alias("last_docid"),
     ).select(
         "term", "shard", "bucket", "df_local", "n_docs",
-        "p.doc_ids", "p.tfs", "p.dlb", "p.pos",
+        "p.doc_ids", "p.tfs", "p.dlb", "p.pos", "p.flags",
         "first_docid", "last_docid",
     )
+
+
+def unpack_partials(partials: DataFrame) -> DataFrame:
+    """Partial rows → posting rows (term, doc_id, dl, tf, pos, flags): the
+    inverse of pack_partials.  Doc ids, tfs and doc lengths are decoded;
+    each doc's position and flag streams are cut out of the row's streams
+    undecoded, so re-packing the rows reproduces the partials byte for
+    byte."""
+
+    def unpack(batches):
+        for pdf in batches:
+            out = {c: [] for c in ("term", "doc_id", "dl", "tf", "pos",
+                                   "flags")}
+            for r in pdf.itertuples(index=False):
+                ids = codec.decode_docids(bytes(r.doc_ids))
+                tfs = codec.decode_tfs(bytes(r.tfs))
+                fends = np.cumsum(tfs)
+                flags = bytes(r.flags)
+                out["term"] += [r.term] * ids.size
+                out["doc_id"] += ids.tolist()
+                out["dl"] += codec.varbyte_decode(bytes(r.dlb)).tolist()
+                out["tf"] += tfs.tolist()
+                out["pos"] += codec.split_position_stream(bytes(r.pos), tfs)
+                out["flags"] += [flags[a - n:a] for a, n in zip(fends, tfs)]
+            yield pd.DataFrame(out)
+
+    return partials.select("term", "doc_ids", "tfs", "dlb", "pos",
+                           "flags").mapInPandas(
+        unpack, "term string, doc_id long, dl int, tf int, pos binary, "
+                "flags binary")
+
+
+def pack_layout(n_docs: int, num_shards: int = 32, salt_buckets: int = 16,
+                merge_factor: int | None = None,
+                bucket_width: int | None = None) -> dict[str, int]:
+    """The doc-bucket grid of the partials, keyed by the catalog
+    properties that persist it (LAYOUT_PROPS).  ``bucket_width`` overrides
+    the n_docs-derived salt width — a build that must land on another
+    build's grid passes that build's width."""
+    if bucket_width is None:
+        bucket_width = max(1, math.ceil(n_docs / salt_buckets))
+    if merge_factor is None:
+        merge_factor = max(1, salt_buckets // 4)
+    return dict(zip(LAYOUT_PROPS,
+                    (num_shards, salt_buckets, bucket_width, merge_factor)))
+
+
+def write_partials(cat, postings: DataFrame, layout: dict[str, int],
+                   table: str = "postings_partial") -> None:
+    """pack_partials → ``table``, and persist ``layout`` as the catalog's
+    layout properties."""
+    num_shards = layout["p6a_num_shards"]
+    # align rows to their shard before the partitioned write: otherwise
+    # every write task opens a file in every shard dir (tasks×shards
+    # small files — the classic dynamic-partition write explosion)
+    cat.write(
+        table,
+        pack_partials(postings, num_shards, layout["p6a_bucket_width"])
+        .repartition(num_shards, "shard"),
+        partition_by=["shard"],
+    )
+    for k, v in layout.items():
+        cat.set_prop(k, v)
 
 
 def merge_partials(partials: DataFrame, merge_factor: int,
@@ -251,12 +304,6 @@ def merge_partials(partials: DataFrame, merge_factor: int,
     and the payload shuffle, so untouched buckets' bytes never enter
     the exchange.
     """
-    if "dlb" not in partials.columns:
-        raise ValueError(
-            "postings_partial lacks the per-posting dlb stream (written by "
-            "an older layout); re-run the pack phase with force to rebuild "
-            "partials before merging"
-        )
     df_global = partials.groupBy("term").agg(F.sum("df_local").alias("df"))
 
     if bucket_min is not None:
@@ -273,7 +320,7 @@ def merge_partials(partials: DataFrame, merge_factor: int,
             F.collect_list(
                 F.struct(
                     "bucket", "first_docid", "n_docs", "doc_ids", "tfs",
-                    "dlb", "pos", "last_docid",
+                    "dlb", "pos", "flags", "last_docid",
                 )
             )
         ).alias("parts")
@@ -287,8 +334,8 @@ def merge_partials(partials: DataFrame, merge_factor: int,
         merge_udf("parts").alias("m"),
     ).select(
         "term", "shard", "bucket", "df",
-        "m.n_docs", "m.doc_ids", "m.tfs", "m.pos", "m.block_last",
-        "m.block_maxw", "m.first_docid", "m.last_docid",
+        "m.n_docs", "m.doc_ids", "m.tfs", "m.pos", "m.flags",
+        "m.block_last", "m.block_maxw",
     )
 
 
@@ -312,65 +359,38 @@ def build_doclens(docmeta: DataFrame, bucket_width: int) -> DataFrame:
 def pack_and_merge(cat, num_shards: int = 32, salt_buckets: int = 16,
                    merge_factor: int | None = None,
                    bucket_width: int | None = None) -> None:
-    """Run both passes with checkpoint/resume through the catalog.
+    """p6: doclens plus the merge of ``postings_partial`` into
+    ``postings_packed`` (index_stats first, when missing).
 
-    ``bucket_width`` overrides the n_docs-derived salt width — an
-    incremental append must keep the ORIGINAL width so its new partials
-    land on the same bucket grid as the base build's."""
+    Resume safety: the packed buckets and the doclens buckets must agree
+    on (bucket_width × merge_factor) and rows must land in the same shard
+    dirs, so resuming an interrupted merge with different --salt-buckets /
+    --merge-factor / --shards would silently misalign them.  The layout
+    the partials were written with (write_partials persists it) is
+    asserted against this run's — fail loudly, never misindex."""
     if not cat.exists("index_stats"):
         from search_engine_spark.operators import build as B
 
         cat.write(
             "index_stats",
-            B.build_index_stats(cat.read("docmeta"), cat.read("postings")),
+            B.build_index_stats(cat.read("docmeta"),
+                                cat.read("postings_partial")),
         )
     stats = cat.read("index_stats").collect()[0]
     n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-    if bucket_width is None:
-        bucket_width = max(1, math.ceil(n_docs / salt_buckets))
-    if merge_factor is None:
-        merge_factor = max(1, salt_buckets // 4)
+    layout = pack_layout(n_docs, num_shards, salt_buckets, merge_factor,
+                         bucket_width)
+    for k, want in layout.items():
+        have = cat.get_prop(k)
+        if have is not None and int(have) != int(want):
+            raise ValueError(
+                f"resume layout mismatch: postings_partial was built with "
+                f"{k}={have} but this run asks for {want}; re-run with the "
+                f"original parameters or --force a full re-merge"
+            )
+    merge_factor = layout["p6a_merge_factor"]
 
-    # Resume safety: the packed buckets and the doclens buckets must agree
-    # on (bucket_width × merge_factor) and rows must land in the same shard
-    # dirs, so resuming an interrupted merge with different --salt-buckets /
-    # --merge-factor / --shards would silently misalign them.  The layout
-    # parameters are persisted as catalog properties when p6a is first
-    # written and asserted on every resume — fail loudly, never misindex.
-    _layout = {"p6a_num_shards": num_shards, "p6a_salt_buckets": salt_buckets,
-               "p6a_bucket_width": bucket_width, "p6a_merge_factor": merge_factor}
-    if cat.exists("postings_partial"):
-        for k, want in _layout.items():
-            have = cat.get_prop(k)
-            if have is not None and int(have) != int(want):
-                raise ValueError(
-                    f"resume layout mismatch: postings_partial was built with "
-                    f"{k}={have} but this run asks for {want}; re-run with the "
-                    f"original parameters or --force a full re-merge"
-                )
-
-    if not cat.exists("postings_partial"):
-        partials = pack_partials(
-            cat.read("postings"), num_shards, bucket_width
-        )
-        # align rows to their shard before the partitioned write: otherwise
-        # every write task opens a file in every shard dir (tasks×shards
-        # small files — the classic dynamic-partition write explosion)
-        cat.write(
-            "postings_partial",
-            partials.repartition(num_shards, "shard"),
-            partition_by=["shard"],
-        )
-        cat.log_phase(
-            "p6a_partials",
-            cat.read("postings_partial"),
-            {"bucket_width": bucket_width, "salt_buckets": salt_buckets},
-        )
-    # persist (or backfill, for pre-existing warehouses) the validated layout
-    for k, v in _layout.items():
-        cat.set_prop(k, v)
-
-    mwidth = bucket_width * merge_factor
+    mwidth = layout["p6a_bucket_width"] * merge_factor
     if not cat.exists("doclens"):
         cat.write("doclens", build_doclens(cat.read("docmeta"), mwidth))
         cat.log_phase("p6b_doclens", cat.read("doclens"), {"bucket_width": mwidth})
@@ -382,7 +402,7 @@ def pack_and_merge(cat, num_shards: int = 32, salt_buckets: int = 16,
         partition_by=["shard"],
     )
     cat.set_prop("num_shards", num_shards)
-    cat.set_prop("bucket_width", bucket_width * merge_factor)
+    cat.set_prop("bucket_width", mwidth)
     # the avgdl every stored block-max header is valid for — a later
     # TIERED append scales copied headers by max(1, new_avgdl / this)
     cat.set_prop("packed_avgdl", repr(avgdl))

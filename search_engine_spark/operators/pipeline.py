@@ -10,10 +10,17 @@ Phases, each writing one catalog table and a lineage record:
   p2b_docs     dense doc-id stamp from parquet
                footer offsets                        (narrow)
   p3_docmeta   docmeta                               (narrow)
-  p4_postings  inline() per-doc postings             (narrow explode)
-  p5_stats     index_stats                           (tiny agg)
-  p6_packed    salted pack + shuffle-merge into
-               term-sharded physical postings        (see merge.py)
+  p4_postings  per-doc postings (narrow explode) packed
+               straight into per-(term, doc bucket)
+               partials: postings_partial            (salted pack shuffle)
+  p5_stats     index_stats from docmeta + partials   (tiny agg)
+  p6_packed    doclens + shuffle-merge into the
+               term-sharded postings_packed          (see merge.py)
+
+The partials are the one postings table later passes read and write:
+appends add partial rows, deletes decode the tombstoned buckets' rows,
+and compaction decodes, masks, re-stamps and re-packs them
+(merge.unpack_partials).
 
 Resume: a phase whose output table exists (complete _SUCCESS) is skipped,
 so a killed build continues from the last durable phase — the reference has
@@ -25,8 +32,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyspark.sql import functions as F
+
 from search_engine_spark.operators import build as B
-from search_engine_spark.operators import docids, extract
+from search_engine_spark.operators import docids, extract, merge
 from search_engine_spark.sources.catalog import IndexCatalog
 
 
@@ -45,11 +54,11 @@ def run_build(
     cat = IndexCatalog(spark, warehouse)
 
     if force:
-        for t in ("docs_raw", "docs_sorted", "docs", "docmeta", "postings",
+        for t in ("docs_raw", "docs_sorted", "docs", "docmeta",
                   "index_stats", "postings_partial", "doclens",
                   "postings_packed", "postings_packed_next",
                   "tombstones", "df_patch_deletes", "index_stats_next",
-                  "docmeta_next", "postings_next"):
+                  "docmeta_next", "postings_partial_next"):
             cat.drop(t)
         # properties describe the dropped tables (layout params, append
         # idempotence flags) — stale ones must not outlive a force rebuild
@@ -107,41 +116,16 @@ def run_build(
 
         timed("p3_docmeta", p3)
 
-    if not cat.exists("postings"):
-        # Hive-partitioned by term shard so every term-filtered read of the
-        # logical postings (the parity modes' executor, positions lookups)
-        # prunes to the query terms' shard directories instead of scanning
-        # the whole table — the same pruning the packed layout gets.
-        #
-        # Write strategy is adaptive: the postings are the build's fattest
-        # rows (positions + per-occurrence flags), so a full shard shuffle
-        # is only paid when it is actually needed — when input tasks ≫
-        # shards, where a direct dynamic-partition write would explode
-        # into tasks×shards files.  Below that regime, sortWithinPartitions
-        # groups each task's rows by shard so the dynamic write opens each
-        # shard file once per task (≤ tasks×shards files, bounded small),
-        # and the big rows never cross the wire.
+    if not cat.exists("postings_partial"):
+        # the docs' posting rows go straight into the salted pack: the
+        # bucket grid is sized from n_docs, which docmeta already knows
         def p4() -> str:
-            from search_engine_spark.operators.merge import shard_col
-
-            posts = B.build_postings(docs).withColumn(
-                "shard", shard_col(num_shards=num_shards)
+            merge.write_partials(
+                cat, B.build_postings(docs),
+                merge.pack_layout(cat.read("docmeta").count(), num_shards,
+                                  salt_buckets, merge_factor, bucket_width),
             )
-            # sorting by term WITHIN the shard (after the shard grouping
-            # key) makes every parquet file term-clustered, so row-group
-            # min/max stats prune a term-filtered fallback read to a few
-            # row groups even inside the right shard dir — the poor-man's
-            # secondary index (verified by tests/test_plans.py row-group
-            # stats check)
-            n_input = docs.rdd.getNumPartitions()
-            if n_input > 4 * num_shards:
-                posts = posts.repartition(num_shards, "shard") \
-                             .sortWithinPartitions("shard", "term")
-            else:
-                posts = posts.sortWithinPartitions("shard", "term")
-            cat.write("postings", posts, partition_by=["shard"])
-            cat.set_prop("postings_num_shards", num_shards)
-            return "postings"
+            return "postings_partial"
 
         timed("p4_postings", p4)
 
@@ -149,7 +133,8 @@ def run_build(
         def p5() -> str:
             cat.write(
                 "index_stats",
-                B.build_index_stats(cat.read("docmeta"), cat.read("postings")),
+                B.build_index_stats(cat.read("docmeta"),
+                                    cat.read("postings_partial")),
             )
             return "index_stats"
 
@@ -157,8 +142,6 @@ def run_build(
 
     if not cat.exists("postings_packed"):
         def p6() -> str:
-            from search_engine_spark.operators import merge
-
             merge.pack_and_merge(
                 cat, num_shards=num_shards, salt_buckets=salt_buckets,
                 merge_factor=merge_factor, bucket_width=bucket_width,
@@ -182,8 +165,8 @@ def run_append(
 ) -> IndexCatalog:
     """Incrementally index a NEW pages batch into an EXISTING packed
     warehouse — the crawl-refresh shape at 100 TB: extract + id-stamp only
-    the delta, append its logical postings and pack partials, then run ONE
-    merge pass over all partials (old + new).  Nothing from the base build
+    the delta, append its packed partials, then run ONE merge pass over
+    all partials (old + new).  Nothing from the base build
     is re-extracted, re-shuffled, or re-packed; the merge pass is the
     LSM-style compaction (stream concatenation, positions never decoded).
 
@@ -201,8 +184,8 @@ def run_append(
     url rather than byte-identical).
 
     The expensive delta phases (extract, dedup shuffle, id stamp) are
-    checkpointed per ``label``; every apply sub-step (the docmeta /
-    postings / partials appends) is guarded by its OWN catalog marker, so
+    checkpointed per ``label``; every apply sub-step (the docmeta and
+    partials appends) is guarded by its OWN catalog marker, so
     a retry after a mid-apply crash (e.g. a merge OOM) resumes without
     double-appending; the final ``append_<label>_applied`` property marks
     the whole append complete.  An empty delta (every url already
@@ -243,10 +226,8 @@ def run_append(
     """
     import time
 
-    from pyspark.sql import functions as F
-
     cat = IndexCatalog(spark, warehouse)
-    for t in ("docmeta", "postings", "postings_partial", "postings_packed"):
+    for t in ("docmeta", "postings_partial", "postings_packed"):
         if not cat.exists(t):
             raise ValueError(f"run_append needs an existing warehouse ({t} missing)")
     applied_key = f"append_{label}_applied"
@@ -271,8 +252,6 @@ def run_append(
 
     if not cat.exists(raw_t):
         def p1() -> str:
-            from pyspark.sql import functions as F
-
             raw = extract.extract_docs(pages)
             raw = extract.drop_overlong_titles(raw)
             # urls the base build (or an earlier append) already indexed
@@ -334,20 +313,14 @@ def apply_delta(
     max_generations: int = 8,
     bound_inflation_limit: float = 1.25,
 ) -> None:
-    """Apply a PRE-EXTRACTED delta (docmeta rows + logical postings, with
-    doc ids already stamped densely after the base corpus's max) to an
-    existing packed warehouse: marker-guarded appends, stats/doclens
-    refresh, one merge pass (full or tiered-manifest).  Shared by
+    """Apply a PRE-EXTRACTED delta (docmeta rows + posting rows of the
+    build_postings shape, with doc ids already stamped densely after the
+    base corpus's max) to an existing packed warehouse: marker-guarded
+    appends, stats/doclens refresh, one merge pass (full or tiered-manifest).  Shared by
     ``run_append`` (crawl-refresh page batches) and the streaming
     consolidator's incremental mode (stream micro-batches) — both delta
     producers, one apply path."""
     import time
-
-    from pyspark.sql import functions as F
-
-    from search_engine_spark.operators.merge import (
-        build_doclens, merge_partials, pack_partials, shard_col,
-    )
 
     num_shards = int(cat.get_prop("p6a_num_shards"))
     bucket_width = int(cat.get_prop("p6a_bucket_width"))
@@ -372,37 +345,21 @@ def apply_delta(
         cat.set_prop(step_key, 1)
 
     once("docmeta", lambda: cat.write("docmeta", delta_meta, mode="append"))
+    # new partials only over the delta's postings (doc ids > base max)
+    once("partials", lambda: cat.write(
+        "postings_partial",
+        merge.pack_partials(delta_posts, num_shards, bucket_width)
+        .repartition(num_shards, "shard"),
+        partition_by=["shard"], mode="append",
+    ))
 
-    def _append_postings() -> None:
-        posts = delta_posts.withColumn(
-            "shard", shard_col(num_shards=num_shards)
-        ).sortWithinPartitions("shard", "term")
-        cat.write("postings", posts, partition_by=["shard"], mode="append")
-
-    once("postings", _append_postings)
-
-    meta_all, posts_all = cat.read("docmeta"), cat.read("postings")
-    if cat.exists("tombstones"):
-        # deleted docs must stay out of the refreshed corpus stats — an
-        # append after a delete would otherwise resurrect them in n_docs
-        # and avgdl (their postings stay masked at read until compaction)
-        tombs = F.broadcast(cat.read("tombstones").select("doc_id"))
-        meta_all = meta_all.join(tombs, "doc_id", "left_anti")
-        posts_all = posts_all.join(tombs, "doc_id", "left_anti")
-    cat.write("index_stats", B.build_index_stats(meta_all, posts_all))
+    cat.write("index_stats", _live_index_stats(cat))
     stats = cat.read("index_stats").collect()[0]
     avgdl = float(stats["avgdl"])
 
     mwidth = bucket_width * merge_factor
-    cat.write("doclens", build_doclens(cat.read("docmeta"), mwidth))
+    cat.write("doclens", merge.build_doclens(cat.read("docmeta"), mwidth))
 
-    # new partials only over the delta's postings (doc ids > base max)
-    once("partials", lambda: cat.write(
-        "postings_partial",
-        pack_partials(delta_posts, num_shards, bucket_width)
-        .repartition(num_shards, "shard"),
-        partition_by=["shard"], mode="append",
-    ))
     timed_t0 = time.perf_counter()
     old_avgdl = cat.get_prop("packed_avgdl")
     manifest = cat.read_manifest("postings_packed")
@@ -436,7 +393,7 @@ def apply_delta(
         tail_t = f"postings_packed_tail_{label}"
         patch_t = f"postings_df_patch_{label}"
         if not cat.exists(tail_t):
-            tail = merge_partials(
+            tail = merge.merge_partials(
                 cat.read("postings_partial"), merge_factor, avgdl,
                 bucket_min=m0 * merge_factor,
             )
@@ -468,7 +425,7 @@ def apply_delta(
             cat.write_manifest("postings_packed", manifest)
         log_table = tail_t
     else:
-        merged = merge_partials(
+        merged = merge.merge_partials(
             cat.read("postings_partial"), merge_factor, avgdl
         )
         # write aside + snapshot-swap: a crash mid-write leaves the live
@@ -499,6 +456,34 @@ def apply_delta(
     cat.write_metrics_tables()
 
 
+def _decoded_buckets(cat: IndexCatalog,
+                     ids: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """postings_partial split by the doc buckets holding ``ids`` (a
+    delta-sized doc_id frame): the partial rows of every other bucket, and
+    the decoded posting rows (merge.unpack_partials) of those buckets —
+    so deletes decode only the buckets they touch."""
+    width = int(cat.get_prop("p6a_bucket_width"))
+    hit = sorted({r["doc_id"] // width for r in ids.collect()})
+    parts = cat.read("postings_partial")
+    inside = F.col("bucket").isin(hit)
+    return parts.filter(~inside), merge.unpack_partials(parts.filter(inside))
+
+
+def _live_index_stats(cat: IndexCatalog) -> DataFrame:
+    """index_stats over the live corpus: tombstoned docs stay out of
+    n_docs, avgdl and the posting counts (their partial rows stay until
+    compaction), or an append after a delete would resurrect them."""
+    meta, parts = cat.read("docmeta"), cat.read("postings_partial")
+    if cat.exists("tombstones"):
+        tombs = cat.read("tombstones").select("doc_id")
+        meta = meta.join(F.broadcast(tombs), "doc_id", "left_anti")
+        clean, decoded = _decoded_buckets(cat, tombs)
+        parts = clean.select("term", "n_docs").unionByName(
+            decoded.join(F.broadcast(tombs), "doc_id", "left_anti")
+            .select("term", F.lit(1).cast("long").alias("n_docs")))
+    return B.build_index_stats(meta, parts)
+
+
 def run_delete(
     spark: SparkSession,
     urls: DataFrame,
@@ -516,10 +501,10 @@ def run_delete(
 
     * ``tombstones`` (doc_id, label) — the kernels mask decoded postings
       and bucket complements against the per-bucket tombstone arrays
-      (plans/wand.py ``_decode_rows``, plans/packed_exec.py), and the
-      logical executor anti-joins them up front;
+      (plans/wand.py ``_decode_rows``, plans/packed_exec.py);
     * ``df_patch_deletes`` (term, df_sub, label) — per-term df
-      decrements; the packed reader subtracts them so idf matches a
+      decrements, counted from the decoded partial rows of the victims'
+      doc buckets only; the packed reader subtracts them so idf matches a
       survivor-only corpus exactly;
     * ``index_stats`` recomputed over survivors (n_docs, avgdl), written
       aside and snapshot-swapped.
@@ -539,10 +524,8 @@ def run_delete(
     a marked no-op.  A deleted url can be re-indexed by a later
     ``run_append`` (it leaves the first-wins reference set).
     """
-    from pyspark.sql import functions as F
-
     cat = IndexCatalog(spark, warehouse)
-    for t in ("docmeta", "postings", "index_stats"):
+    for t in ("docmeta", "postings_partial", "index_stats"):
         if not cat.exists(t):
             raise ValueError(f"run_delete needs an existing warehouse ({t} missing)")
     applied_key = f"delete_{label}_applied"
@@ -589,7 +572,7 @@ def run_delete(
     # -- df decrements: every (term, @term) posting the victims carried --
     def _df_patch() -> None:
         patch = (
-            cat.read("postings")
+            _decoded_buckets(cat, victims)[1]
             .join(F.broadcast(victims), "doc_id", "left_semi")
             .groupBy("term")
             .agg(F.count("*").cast("long").alias("df_sub"))
@@ -600,14 +583,7 @@ def run_delete(
     once("dfpatch", _df_patch)
 
     # -- survivor corpus stats (idempotent recomputation; aside + swap) --
-    tombs_all = F.broadcast(cat.read("tombstones").select("doc_id"))
-    cat.write(
-        "index_stats_next",
-        B.build_index_stats(
-            cat.read("docmeta").join(tombs_all, "doc_id", "left_anti"),
-            cat.read("postings").join(tombs_all, "doc_id", "left_anti"),
-        ),
-    )
+    cat.write("index_stats_next", _live_index_stats(cat))
     cat.swap("index_stats_next", "index_stats")
 
     cat.log_phase(
@@ -622,7 +598,9 @@ def run_delete(
 def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
     """Physically drop every tombstoned doc and retire the tombstones —
     the delete-debt twin of the tiered-append full compaction: rewrite
-    the logical tables without the victims, re-pack, and delete the
+    docmeta and the partials without the victims (partials are decoded,
+    masked, re-stamped and re-packed; position and flag streams are cut
+    out and re-concatenated, never decoded), re-merge, and delete the
     tombstone/df-patch side tables.  Queries before and after are
     EXACTLY equal (the masked view already behaved as survivor-only);
     what compaction buys back is the kernels' masking work, the
@@ -651,10 +629,6 @@ def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
     the tombstones are dropped LAST — a crash anywhere leaves a
     consistent masked warehouse that a re-run finishes compacting.
     """
-    from pyspark.sql import functions as F
-
-    from search_engine_spark.operators.merge import pack_and_merge
-
     cat = IndexCatalog(spark, warehouse)
     if not cat.exists("tombstones"):
         return cat
@@ -667,10 +641,7 @@ def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
         return cat
     tombs = F.broadcast(cat.read("tombstones").select("doc_id"))
 
-    num_shards = int(cat.get_prop("p6a_num_shards"))
-    salt_buckets = int(cat.get_prop("p6a_salt_buckets"))
-    bucket_width = int(cat.get_prop("p6a_bucket_width"))
-    merge_factor = int(cat.get_prop("p6a_merge_factor"))
+    layout = {k: int(cat.get_prop(k)) for k in merge.LAYOUT_PROPS}
 
     # two-level shift tables (see docstring): victim buckets on the merged
     # grid, their prefix counts, and per-bucket victim arrays
@@ -695,10 +666,10 @@ def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
         F.coalesce(F.col("_varr"), F.array().cast("array<long>")),
         lambda v: v < F.col("doc_id"),
     ))
-    for t in ("docmeta", "postings"):
-        nxt = (
-            cat.read(t)
-            .join(tombs, "doc_id", "left_anti")
+
+    def restamp(df: DataFrame) -> DataFrame:
+        return (
+            df.join(tombs, "doc_id", "left_anti")
             .join(inbucket_df, my_bucket == F.col("_vb"), "left")
             .withColumn(
                 "doc_id",
@@ -706,24 +677,26 @@ def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
             )
             .drop("_vb", "_varr")
         )
-        if t == "postings":  # keep p4's row-group term clustering
-            nxt = nxt.sortWithinPartitions("shard", "term")
-        cat.write(
-            f"{t}_next", nxt,
-            partition_by=(["shard"] if t == "postings" else None),
-        )
-        cat.swap(f"{t}_next", t)
 
-    # survivor-only rebuild of everything derived: stats, doclens,
-    # partials, packed (pack_and_merge recomputes stats first because the
-    # table was dropped; its layout props keep the original grid)
+    cat.write("docmeta_next", restamp(cat.read("docmeta")))
+    merge.write_partials(
+        cat, restamp(merge.unpack_partials(cat.read("postings_partial"))),
+        layout, table="postings_partial_next",
+    )
+    cat.swap("docmeta_next", "docmeta")
+    cat.swap("postings_partial_next", "postings_partial")
+
+    # survivor-only rebuild of everything derived: stats, doclens, packed
+    # (pack_and_merge recomputes stats first because the table was
+    # dropped; the layout props keep the original grid)
     cat.drop_manifest("postings_packed")
-    for t in ("index_stats", "doclens", "postings_partial",
-              "postings_packed"):
+    for t in ("index_stats", "doclens", "postings_packed"):
         cat.drop(t)
-    pack_and_merge(
-        cat, num_shards=num_shards, salt_buckets=salt_buckets,
-        merge_factor=merge_factor, bucket_width=bucket_width,
+    merge.pack_and_merge(
+        cat, num_shards=layout["p6a_num_shards"],
+        salt_buckets=layout["p6a_salt_buckets"],
+        merge_factor=layout["p6a_merge_factor"],
+        bucket_width=layout["p6a_bucket_width"],
     )
 
     # retire the delete debt LAST: markers stay (labels are applied —

@@ -1,15 +1,16 @@
-"""General AST evaluation over the PACKED index: phrases, NOT, synonyms —
-every query shape the exhaustive executor supports — served from the
-varbyte/block-header physical layout with shard pruning, instead of falling
-back to the row-per-posting logical postings scan.
+"""General AST evaluation over the PACKED index: phrases, NOT, synonyms,
+NEAR — every query shape the engine supports — served from the
+varbyte/block-header physical layout with shard pruning, plus the
+heuristic parity modes' match sets.
 
 How it works (batch_general_candidates; ``PackedQueryEngine.search`` runs
 a single non-flat query as a batch of one):
 
 * Each AST is compiled to a SLOT SPEC.  Maximal phrase-free subtrees
   become *word slots*: the kernel evaluates them to a final float per doc
-  (the exact same ≤2-addend combine structure as plans/executor.py, so
-  scores match the logical path bit-for-bit up to libm ulps).  Phrase
+  (≤2 addends per combine — Word = body + title, And/Or = left + right —
+  the same structure as the pure-Python oracle, so scores match it
+  bit-for-bit up to libm ulps).  Phrase
   leaves become *ptf slot pairs* (body, '@'-title): their per-doc phrase
   term frequency is bucket-computable, but their BM25 idf needs the GLOBAL
   phrase df — which no single bucket knows.
@@ -19,12 +20,14 @@ a single non-flat query as a batch of one):
   word-slot score plus sparse (phrase slot, ptf) pairs.
 * When phrase slots exist, a count kernel over the same bucket rows (the
   exchange is reused) counts each phrase variant's matches per bucket —
-  over ALL docs matching the phrase, not just tree survivors, mirroring
-  the executor where a phrase leaf's df is computed before the tree joins
-  filter it.
+  over ALL docs matching the phrase, not just tree survivors: a phrase
+  leaf's df is a corpus statistic, computed before the tree filters.
 * Finalization is declarative: global phrase dfs = the summed counts,
   broadcast as one row, and each phrase contribution is the JVM
-  expression idf_col(df) * weight_col(ptf, dl) the executor builds.
+  expression idf_col(df) * weight_col(ptf, dl).
+* dynamic_scores re-ranks a tree's match set by the reference span
+  features (plans/dynamic_score.py) over the decoded positions and
+  per-occurrence flags.
 
 Membership is fully bucket-local (every posting of a doc lives in the
 doc's bucket), which is what makes NOT (complement within the bucket's
@@ -108,7 +111,7 @@ class Spec:
             return {"op": "p", "b": len(self.pslots) - 2,
                     "t": len(self.pslots) - 1, "stems": stems, "win": win}
         if isinstance(e, And):
-            # Not fast paths in the executor's exact precedence order
+            # Not fast paths: a & -b and -a & b are anti-joins
             if isinstance(e.right, Not):
                 return {"op": "andnot", "keep": self._rec(e.left),
                         "drop": e.right.child}
@@ -160,8 +163,7 @@ class _BucketEval:
 
     @staticmethod
     def _or2(l, r):
-        """Full-outer sum with 0-coalesce — exactly 2 addends per doc, the
-        executor's _combine_or structure."""
+        """Full-outer sum with 0-coalesce — exactly 2 addends per doc."""
         lids, ls = l
         rids, rs = r
         if lids.size == 0:
@@ -175,7 +177,7 @@ class _BucketEval:
         return ids, out
 
     def seval(self, e: Expr):
-        """(ids, scores) for a phrase-free subtree — mirrors executor._eval."""
+        """(ids, scores) for a phrase-free subtree."""
         if isinstance(e, Word):
             return self._or2(self._key_scored(e.stem),
                              self._key_scored("@" + e.stem))
@@ -263,9 +265,8 @@ class _BucketEval:
                      window: int = 1):
         """(ids, ptf): docs containing the stems at consecutive positions
         (window=1, the Phrase/X7 case) or as an ordered chain with each
-        next stem within ``window`` positions of the previous (Near) —
-        executor._eval_phrase semantics over the decoded position
-        streams, fully vectorized.  ptf counts chain STARTS (distinct
+        next stem within ``window`` positions of the previous (Near), over
+        the decoded position streams, fully vectorized.  ptf counts chain STARTS (distinct
         first-stem positions that can begin a valid chain)."""
         ck = (stems, decorated, window)
         hit = self._phrase_cache.get(ck)
@@ -390,8 +391,8 @@ class _BucketEval:
 # ---------------------------------------------------------------------------
 
 def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
-                             k: int = 10, rows: DataFrame | None = None
-                             ) -> DataFrame:
+                             k: int | None = 10,
+                             rows: DataFrame | None = None) -> DataFrame:
     """(query, doc_id, score) candidate rows for MANY arbitrary ASTs —
     phrases, NOT, synonyms, mixed — in ONE kernel pass over the packed
     index, the general-AST twin of search_batch's flat dense kernel.
@@ -410,7 +411,8 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
     shared subplan and broadcast as one array column.  Phrase-free trees
     are truncated to the bucket-exact top-k in-kernel (their slot value IS
     the final score), so a bare-NOT query emits k rows per bucket, not the
-    bucket's complement.
+    bucket's complement; ``k=None`` keeps the whole match set (the parity
+    modes re-rank it).
 
     ``engine`` is a plans.wand.PackedQueryEngine; ``rows`` are its bucket
     rows (_bucket_rows) when the caller shares them with another kernel —
@@ -468,7 +470,7 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                     ids, wmat, pmat = ev.keval(roots[qi], nw_l[qi], np_l[qi])
                     if ids.size == 0:
                         continue
-                    if np_l[qi] == 0 and ids.size > kk:
+                    if np_l[qi] == 0 and kk is not None and ids.size > kk:
                         # phrase-free ⇒ one word slot whose value IS the
                         # score: bucket-exact top-k suffices
                         order = np.lexsort((ids, -wmat[:, 0]))[:kk]
@@ -544,8 +546,7 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
         docs = docs.crossJoin(F.broadcast(counts))
         # uniform phrase finalization: only nonzero ptf slots were emitted,
         # each contributing bm25.idf_col(global df) * bm25.weight_col(ptf,
-        # dl) — the same JVM expressions the logical executor scores a
-        # phrase leaf with
+        # dl)
         score = score + F.aggregate(
             F.zip_with(
                 "pidx", "ptf",
@@ -564,3 +565,88 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
         "doc_id", score.alias("score"),
     )
 
+
+
+def dynamic_scores(engine, ast: Expr, meta: DataFrame) -> DataFrame:
+    """(doc_id, score, url, title) of every doc matching ``ast`` that the
+    reference dynamic ranker keeps (plans/dynamic_score.rank_doc returns a
+    score), over ``meta`` — docmeta plus its ``_static`` score column.
+
+    Candidate supply is the tree's exhaustive match set (_BucketEval
+    membership, the general kernel's evaluator).  Per candidate and query
+    key the kernel emits the decoded positions and per-occurrence flags;
+    the rows group per doc, join their docmeta row and are scored by ONE
+    Arrow-batched pandas UDF — per-doc work is O(matched postings),
+    distributed by doc."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import DoubleType
+
+    from search_engine_spark.plans import dynamic_score as D
+
+    groups = D.term_groups_from_ast(ast)
+    rows = engine._bucket_rows(
+        sorted(groups.all_keys()),
+        ["term", "df", "doc_ids", "tfs", "pos", "flags"],
+        outer=zero_match(ast),
+    )
+    n_docs, avgdl, k1, b = engine.n_docs, engine.avgdl, engine.k1, engine.b
+
+    def kernel(batches):
+        for pdf in batches:
+            out = {"doc_id": [], "term": [], "positions": [], "pos_flags": []}
+            for brow in pdf.itertuples(index=False):
+                dls = np.asarray(brow.dls, dtype=np.float64)
+                tombs = _bucket_tombs(brow)
+                decoded = _decode_rows(brow.trows, True, tombs,
+                                       need_flags=True)
+                ev = _BucketEval(decoded, int(brow.start), dls.size, dls,
+                                 n_docs, avgdl, k1, b, tombs)
+                cand = ev.member(ast)
+                for term, e in decoded.items():
+                    at = np.searchsorted(e["ids"], cand)
+                    at = at[at < e["ids"].size]
+                    at = at[np.isin(e["ids"][at], cand)]
+                    for i in at:
+                        lo, hi = e["offs"][i], e["offs"][i] + e["tfs"][i]
+                        out["doc_id"].append(int(e["ids"][i]))
+                        out["term"].append(term)
+                        out["positions"].append(e["flatpos"][lo:hi].tolist())
+                        out["pos_flags"].append(e["flatflags"][lo:hi].tolist())
+            yield pd.DataFrame({
+                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
+                "term": pd.Series(out["term"], dtype="object"),
+                "positions": pd.Series(out["positions"], dtype="object"),
+                "pos_flags": pd.Series(out["pos_flags"], dtype="object"),
+            })
+
+    @pandas_udf(DoubleType())
+    def _dyn_score(plists, urls, title_lens, word_counts, dls, statics):
+        scores = []
+        for pl, url, tl, wc, dl, st in zip(
+            plists, urls, title_lens, word_counts, dls, statics
+        ):
+            scores.append(D.rank_doc(
+                groups,
+                {e["term"]: list(e["positions"]) for e in pl},
+                {e["term"]: list(e["pos_flags"]) for e in pl},
+                url, int(tl), int(wc), int(dl), float(st),
+            ))
+        return pd.Series(scores, dtype="float64")
+
+    plist = (
+        rows.mapInPandas(kernel, schema=(
+            "doc_id long, term string, positions array<int>, "
+            "pos_flags array<int>"))
+        .groupBy("doc_id")
+        .agg(F.collect_list(F.struct("term", "positions", "pos_flags"))
+             .alias("_plist"))
+    )
+    return (
+        plist.join(meta, "doc_id")
+        .select(
+            "doc_id", "url", "title",
+            _dyn_score("_plist", "url", "title_len", "word_count", "dl",
+                       "_static").alias("score"),
+        )
+        .filter(F.col("score").isNotNull())
+    )

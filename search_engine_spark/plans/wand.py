@@ -38,9 +38,9 @@ Anything outside flat AND/OR word queries — phrases (positions decoded
 from the packed ``pos`` column), NOT (bucket-local complements), synonym
 trees (weighted OR folds) — runs on the packed GENERAL kernel
 (plans/packed_exec.py): same bucket rows, exhaustive within the bucket;
-``search`` runs such a tree as a batch of one.  Only the heuristic parity
-modes (static/dynamic) run on the logical-postings executor
-(plans/executor.py).
+``search`` runs such a tree as a batch of one.  The heuristic parity
+modes (static/dynamic) rank the general kernel's exhaustive match set
+(_parity_topk).
 """
 
 from __future__ import annotations
@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from search_engine_spark.plans import bm25
 from search_engine_spark.plans.query_ast import (
     And, Expr, Not, Or, OrSyn, Prefix, Word, collect_keys, compile_query,
+    ordered_stems,
 )
 
 
@@ -138,40 +139,45 @@ def _bucket_allow(brow) -> np.ndarray | None:
 
 
 def _decode_rows(trows, need_pos: bool, tombs: np.ndarray | None = None,
-                 allow: np.ndarray | None = None) -> dict[str, dict]:
+                 allow: np.ndarray | None = None,
+                 need_flags: bool = False) -> dict[str, dict]:
     """Decode one bucket's packed rows → {term: {ids, tfs, df[, flatpos,
-    offs]}}, with tombstoned (and, when site-scoped, disallowed) docs
-    masked out of every posting — for scoring, membership AND positions
-    (the run mask drops each masked doc's position run from the flat
-    stream).  Every kernel decodes through here, so this is the one
-    masking rule.  Masking decoded arrays is exactly 'the doc was never
-    indexed' for scoring: block_last boundaries are doc-id VALUES consumed
-    via searchsorted (still aligned after removal) and block_maxw stays a
-    valid upper bound when docs are removed — WAND pruning remains
-    lossless, merely a little looser until the next compaction physically
-    drops the postings.  Filtering INSIDE the kernel, before the
-    per-bucket top-k cut, is what keeps a filtered top-k exact (a
-    post-cut filter could starve a bucket whose winners were filtered)."""
+    offs][, flatflags]}}, with tombstoned (and, when site-scoped,
+    disallowed) docs masked out of every posting — for scoring, membership
+    AND positions and flags (the run mask drops each masked doc's
+    occurrence run from the flat streams).  Every kernel decodes through
+    here, so this is the one masking rule.  Masking decoded arrays is
+    exactly 'the doc was never indexed' for scoring: block_last boundaries
+    are doc-id VALUES consumed via searchsorted (still aligned after
+    removal) and block_maxw stays a valid upper bound when docs are
+    removed — WAND pruning remains lossless, merely a little looser until
+    the next compaction physically drops the postings.  Filtering INSIDE
+    the kernel, before the per-bucket top-k cut, is what keeps a filtered
+    top-k exact (a post-cut filter could starve a bucket whose winners
+    were filtered).  ``need_flags`` implies ``need_pos``."""
     from search_engine_spark.operators import codec
 
+    need_pos = need_pos or need_flags
     decoded: dict[str, dict] = {}
     for r in trows if trows is not None else []:
         ids = codec.decode_docids(bytes(r["doc_ids"]))
         tfs = codec.decode_tfs(bytes(r["tfs"]))
-        flatpos = (codec.decode_position_stream(bytes(r["pos"]), tfs)
-                   if need_pos else None)
+        occ = {}
+        if need_pos:
+            occ["flatpos"] = codec.decode_position_stream(bytes(r["pos"]), tfs)
+        if need_flags:
+            occ["flatflags"] = codec.decode_flag_stream(bytes(r["flags"]))
         if (tombs is not None or allow is not None) and ids.size:
             keep = (~np.isin(ids, tombs) if tombs is not None
                     else np.ones(ids.size, dtype=bool))
             if allow is not None:
                 keep &= np.isin(ids, allow)
             if not keep.all():
-                if need_pos:
-                    flatpos = flatpos[np.repeat(keep, tfs)]
+                run = np.repeat(keep, tfs)
+                occ = {name: a[run] for name, a in occ.items()}
                 ids, tfs = ids[keep], tfs[keep]
-        e = {"ids": ids, "tfs": tfs, "df": int(r["df"])}
+        e = {"ids": ids, "tfs": tfs, "df": int(r["df"]), **occ}
         if need_pos:
-            e["flatpos"] = flatpos
             offs = np.zeros(tfs.size, dtype=np.int64)
             np.cumsum(tfs[:-1], out=offs[1:])
             e["offs"] = offs
@@ -402,14 +408,13 @@ def _successor(prefix: str) -> str | None:
 
 
 class PackedQueryEngine:
-    """BM25 top-k over postings_packed; hands only the heuristic parity
-    modes to the exhaustive executor (``fallback``)."""
+    """BM25 top-k, and the heuristic parity modes, over postings_packed."""
 
     MAX_PREFIX_EXPANSIONS = 32
 
     def __init__(self, spark: SparkSession, packed: DataFrame, doclens: DataFrame,
                  docmeta: DataFrame, n_docs: int, avgdl: float, num_shards: int,
-                 fallback=None, k1: float = bm25.K1, b: float = bm25.B,
+                 k1: float = bm25.K1, b: float = bm25.B,
                  mwidth: int | None = None,
                  tombstones: DataFrame | None = None):
         self.spark = spark
@@ -420,7 +425,6 @@ class PackedQueryEngine:
         self.avgdl = float(avgdl)
         self.num_shards = int(num_shards)
         self.k1, self.b = k1, b
-        self.fallback = fallback
         self.mwidth = mwidth  # merged bucket width; enables site scoping
         # (bucket, tombs) / (bucket, allow) doc-id rows that reach the
         # kernels as per-bucket sorted arrays (_bucket_rows): deleted docs,
@@ -430,8 +434,6 @@ class PackedQueryEngine:
 
     @classmethod
     def from_catalog(cls, cat) -> "PackedQueryEngine":
-        from search_engine_spark.plans.executor import QueryEngine
-
         stats = cat.read("index_stats").collect()[0]
         packed = cat.read("postings_packed")
         mwidth = cat.get_prop("bucket_width")
@@ -471,7 +473,6 @@ class PackedQueryEngine:
             stats["n_docs"],
             stats["avgdl"],
             num_shards=int(cat.get_prop("num_shards", 32)),
-            fallback=QueryEngine.from_catalog(cat, stats),
             mwidth=mwidth,
             tombstones=tombstones,
         )
@@ -820,17 +821,47 @@ class PackedQueryEngine:
             )
         ast = compile_query(query, synonyms=synonyms)
         ast = self._rewrite_prefixes(ast)
-        if static_mode or dynamic_mode:
-            # heuristic-parity scoring invalidates the BM25-only WAND
-            # bounds → the exhaustive executor is the correct engine
-            if self.fallback is None:
-                raise ValueError("parity modes require the fallback engine")
-            if dynamic_mode:
-                return self.fallback.search_ast(ast, k=k, dynamic_mode=True)
-            return self.fallback.search_ast(ast, k=k, static_mode=True)
         if ast is None:
             return self._empty()
+        if static_mode or dynamic_mode:
+            return self._parity_topk(query, ast, k, dynamic_mode)
         return self._with_meta(self._topk(query, ast, k).collect())
+
+    def _parity_topk(self, query: str, ast: Expr, k: int,
+                     dynamic: bool) -> DataFrame:
+        """Heuristic-parity top-k (SURVEY §2.7 R2-R7) over the general
+        kernel's exhaustive match set — the parity scores are not BM25,
+        so no WAND bound or per-bucket cut applies.  Static mode keeps the
+        matches whose reference static score passes STATIC_THRESHOLD and
+        mixes it into their BM25 score; dynamic mode scores them by span
+        features over their decoded positions and flags
+        (packed_exec.dynamic_scores).  The docmeta side carries the
+        static score either way."""
+        from search_engine_spark.plans import packed_exec
+        from search_engine_spark.plans import static_score as S
+
+        meta = self.docmeta.withColumn(
+            "_static",
+            S.static_score_col(S.is_utility_query(ordered_stems(ast))))
+        if dynamic:
+            ranked = packed_exec.dynamic_scores(self, ast, meta)
+        else:
+            ranked = (
+                packed_exec.batch_general_candidates(self, [(query, ast)],
+                                                     k=None)
+                .join(meta, "doc_id")
+                .filter(F.col("_static") >= S.STATIC_THRESHOLD)
+                .select(
+                    "doc_id",
+                    (F.col("score") * (1.0 - S.STATIC_MIX)
+                     + F.col("_static") * S.STATIC_MIX).alias("score"),
+                    "url", "title",
+                )
+            )
+        top = ranked.orderBy(F.col("score").desc(),
+                             F.col("doc_id").asc()).limit(k).collect()
+        return _local_frame(self.spark, _RESULT_FIELDS,
+                            {c: [r[c] for r in top] for c in _RESULT_FIELDS})
 
     def _topk(self, query: str, ast: Expr, k: int) -> DataFrame:
         """The top-k plan — rows with doc_id and score — of one compiled
@@ -852,7 +883,7 @@ class PackedQueryEngine:
         """(doc_id, score) rows of every bucket's exact top-k for a flat
         AND/OR query, by the block-max WAND kernels."""
         # duplicate stems in the query ('apple | apples' → appl twice) score
-        # multiply, matching the exhaustive executor's per-leaf evaluation —
+        # multiply, matching the general kernel's per-leaf evaluation —
         # fold the multiplicity into the per-key idf scale.
         from collections import Counter
 

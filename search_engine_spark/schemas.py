@@ -76,34 +76,6 @@ DOCMETA = T.StructType([
     T.StructField("dl", T.IntegerType(), False),
 ])
 
-POSTINGS = T.StructType([
-    T.StructField("term", T.StringType(), False),
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("dl", T.IntegerType(), False),   # inline doc length (norms)
-    T.StructField("tf", T.IntegerType(), False),
-    T.StructField("positions", T.ArrayType(T.IntegerType(), False), False),
-    T.StructField("flags", T.IntegerType(), False),  # max over occurrences
-    # per-occurrence style flags aligned with positions (dynamic ranker)
-    T.StructField("pos_flags", T.ArrayType(T.IntegerType(), False), False),
-])
-
-# physical packed layout (operators/merge.py): term-sharded on disk,
-# doc-bucketed rows, varbyte payloads + block-max headers (parallel arrays
-# block_last/block_maxw — one entry per 128-doc block)
-POSTINGS_PACKED = T.StructType([
-    T.StructField("term", T.StringType(), False),
-    T.StructField("shard", T.IntegerType(), False),
-    T.StructField("bucket", T.IntegerType(), False),
-    T.StructField("df", T.LongType(), False),        # GLOBAL df for the term
-    T.StructField("n_docs", T.LongType(), False),    # postings in this row
-    T.StructField("doc_ids", T.BinaryType(), False), # varbyte(delta(ids))
-    T.StructField("tfs", T.BinaryType(), False),     # varbyte(tf-1)
-    T.StructField("block_last", T.ArrayType(T.LongType(), False), False),
-    T.StructField("block_maxw", T.ArrayType(T.DoubleType(), False), False),
-    T.StructField("first_docid", T.LongType(), False),
-    T.StructField("last_docid", T.LongType(), False),
-])
-
 # bucket-aligned dense doc-length rows (the query kernel's forward index)
 DOCLENS = T.StructType([
     T.StructField("bucket", T.IntegerType(), False),

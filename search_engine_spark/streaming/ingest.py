@@ -1,4 +1,4 @@
-"""Structured-streaming ingest: incremental pages → docs → partial postings.
+"""Structured-streaming ingest: incremental pages → docs → stream postings.
 
 The reference's "streaming" is TCP frames into bounded queues
 (Parser.cpp:255-332, 203-246); the Spark-native equivalent is a file/table
@@ -7,12 +7,11 @@ stream with checkpointed exactly-once micro-batches:
 * ``stream_docs``          — readStream over a pages directory → the same
                              extraction UDF as the batch path (operator
                              reuse: one extract_docs for both modes).
-* ``incremental_index``    — foreachBatch sink appending per-batch logical
-                             postings + docmeta partials to the warehouse;
-                             the batch merge job (jobs/merge_index.py) then
-                             consolidates partials into the packed index —
-                             i.e. the streaming path PRODUCES the inputs of
-                             the multi-pass shuffle-merge (SURVEY.md A6).
+* ``incremental_index``    — foreachBatch sink appending per-batch posting
+                             rows + docmeta to the warehouse's stream
+                             tables; ``consolidate_stream`` then packs them
+                             into partials and runs the multi-pass
+                             shuffle-merge (SURVEY.md A6).
                              Trigger availableNow => drain-and-stop, which
                              with the checkpoint dir gives resumable,
                              exactly-once incremental builds.
@@ -25,7 +24,7 @@ streaming appends cannot renumber, so incremental partials use a stable
 per-fetch 64-bit id xxhash64(url, warc_ts).  ``consolidate_stream`` then
 dedups first-wins across ALL batches, re-keys to dense url-rank ids
 (identical to what the batch pipeline would assign for the same corpus),
-and runs the standard pack+merge — so a streamed-then-consolidated
+packs the rows straight into partials and runs the standard merge — so a streamed-then-consolidated
 warehouse answers queries identically to a batch-built one.
 """
 
@@ -133,26 +132,15 @@ def consolidate_stream(cat: IndexCatalog, num_shards: int = 32,
     post = cat.read("postings_stream").withColumnRenamed("doc_id", "_old").join(
         mapping.withColumnRenamed("doc_id", "_old").select("_old", "new_id"),
         "_old",  # inner join: loser fetches' postings drop out here
-    )
-    from search_engine_spark.operators.merge import shard_col
+    ).drop("_old").withColumnRenamed("new_id", "doc_id")
+    from search_engine_spark.operators import merge
 
-    post = (
-        post.drop("_old").withColumnRenamed("new_id", "doc_id")
-        .select("term", "doc_id", "dl", "tf", "positions", "flags",
-                "pos_flags")
-        .withColumn("shard", shard_col(num_shards=num_shards))
-    )
-    # same shard-partitioned layout as the batch pipeline's p4 (phrase/NOT
-    # reads prune to the query terms' shard dirs)
-    cat.write("postings", post.repartition(num_shards, "shard"),
-              partition_by=["shard"])
-    cat.set_prop("postings_num_shards", num_shards)
-    for t in ("index_stats", "postings_partial", "doclens", "postings_packed"):
+    for t in ("index_stats", "doclens", "postings_packed"):
         cat.drop(t)
-    from search_engine_spark.operators.merge import pack_and_merge
-
-    pack_and_merge(cat, num_shards=num_shards, salt_buckets=salt_buckets,
-                   merge_factor=merge_factor)
+    merge.write_partials(cat, post, merge.pack_layout(
+        cat.read("docmeta").count(), num_shards, salt_buckets, merge_factor))
+    merge.pack_and_merge(cat, num_shards=num_shards,
+                         salt_buckets=salt_buckets, merge_factor=merge_factor)
 
 
 def consolidate_stream_incremental(
@@ -230,8 +218,7 @@ def consolidate_stream_incremental(
         .join(mapping.withColumnRenamed("doc_id", "_old")
               .select("_old", "new_id"), "_old")
         .withColumn("doc_id", F.col("new_id") + F.lit(int(base)))
-        .select("term", "doc_id", "dl", "tf", "positions", "flags",
-                "pos_flags")
+        .select("term", "doc_id", "dl", "tf", "pos", "flags")
     )
     # MATERIALIZE the delta before applying: both plans anti-join against
     # the live docmeta, so once apply_delta appends to it a lazy

@@ -55,10 +55,3 @@ def packed_engine(catalog):
     from search_engine_spark.plans.wand import PackedQueryEngine
 
     return PackedQueryEngine.from_catalog(catalog)
-
-
-@pytest.fixture(scope="session")
-def engine(catalog):
-    from search_engine_spark.plans.executor import QueryEngine
-
-    return QueryEngine.from_catalog(catalog)

@@ -30,8 +30,8 @@ def _packed_fingerprint(cat):
         out[(r["term"], r["bucket"])] = (
             r["shard"], r["df"], r["n_docs"],
             bytes(r["doc_ids"]), bytes(r["tfs"]), bytes(r["pos"]),
+            bytes(r["flags"]),
             tuple(r["block_last"]), tuple(r["block_maxw"]),
-            r["first_docid"], r["last_docid"],
         )
     return out
 

@@ -1,7 +1,7 @@
 """Delete support (operators/pipeline.run_delete + compact_deletes):
 tombstone-masked queries must behave exactly as if the deleted pages were
 never indexed, across every engine path (flat WAND, dense batch kernel,
-general kernel phrases/NOT, logical executor), and physical compaction
+general kernel phrases/NOT), and physical compaction
 must change nothing observable while retiring the tombstones."""
 
 import pytest

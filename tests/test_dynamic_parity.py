@@ -3,7 +3,7 @@
 Layer 1: hand-traced kernel unit tests locking the Ranker.cpp semantics,
 including its quirks (per-term flag resets, single-term triple counting,
 termCount incrementing once per close term).
-Layer 2: Spark distributed path (executor._search_dynamic) vs the
+Layer 2: Spark distributed path (packed_exec.dynamic_scores) vs the
 pure-Python per-doc oracle (OracleIndex.topk_dynamic) — rank + score
 identity over the fixture corpus for every query shape.
 """
@@ -191,13 +191,3 @@ def test_dynamic_rank_identity_with_synonyms(packed_engine, oracle, q):
     assert [d for d, _ in got] == [d for d, _ in exp], q
     for (gd, gs), (_, es) in zip(got, exp):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (q, gd)
-
-
-def test_packed_engine_routes_dynamic_to_fallback(packed_engine, oracle):
-    got = [
-        (r["doc_id"], r["score"])
-        for r in packed_engine.search("search engine", k=10,
-                                      dynamic_mode=True).collect()
-    ]
-    exp = [(d, s) for d, s, _, _ in oracle.topk_dynamic("search engine", k=10)]
-    assert [d for d, _ in got] == [d for d, _ in exp]

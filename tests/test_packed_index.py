@@ -1,5 +1,5 @@
 """Packed physical index correctness (SURVEY.md §5.2 layer 4, M3):
-the salted pack + shuffle-merge must preserve the logical postings exactly,
+the salted pack + shuffle-merge must preserve the docs' postings exactly,
 and the lineage/metrics + checkpoint/resume contract must hold."""
 
 import numpy as np
@@ -19,9 +19,11 @@ def packed_rows(catalog):
 
 
 def test_packed_matches_logical_postings(catalog, packed_rows):
+    from search_engine_spark.operators import build as B
+
     logical = {
         r["term"]: r
-        for r in catalog.read("postings")
+        for r in B.build_postings(catalog.read("docs"))
         .groupBy("term")
         .agg(
             F.sort_array(F.collect_list(F.struct("doc_id", "tf"))).alias("p"),
@@ -61,7 +63,7 @@ def test_block_headers_bound_weights(catalog, packed_rows):
         tfs = codec.decode_tfs(bytes(r["tfs"]))
         last = np.asarray(r["block_last"])
         maxw = np.asarray(r["block_maxw"])
-        assert int(last[-1]) == int(r["last_docid"])
+        assert int(last[-1]) == int(ids[-1])
         w = np.array([bm25.weight(t, dl[d], avgdl) for d, t in zip(ids, tfs)])
         bidx = np.searchsorted(last, ids)
         assert (w <= maxw[bidx] + 1e-12).all()
@@ -70,10 +72,10 @@ def test_block_headers_bound_weights(catalog, packed_rows):
 
 
 def test_bucket_rows_respect_doc_ranges(catalog, packed_rows):
+    width = catalog.get_prop("bucket_width")
     for (term, bucket), r in packed_rows.items():
         ids = codec.decode_docids(bytes(r["doc_ids"]))
-        assert int(ids[0]) == r["first_docid"]
-        assert int(ids[-1]) == r["last_docid"]
+        assert (ids // width == bucket).all()
         assert (np.diff(ids) > 0).all()
         assert r["n_docs"] == ids.size
 
@@ -96,8 +98,9 @@ def test_head_term_salting_bounds_groups(catalog, packed_rows):
     for r in rows:
         assert r["n_docs"] <= props_width
         # and the bucket's doc range matches its id
-        assert r["first_docid"] // props_width == r["bucket"]
-        assert r["last_docid"] // props_width == r["bucket"]
+        ids = codec.decode_docids(bytes(r["doc_ids"]))
+        assert ids[0] // props_width == r["bucket"]
+        assert ids[-1] // props_width == r["bucket"]
 
 
 def test_shard_partitioning(catalog):
@@ -128,7 +131,7 @@ def test_doclens_dense(catalog):
 def test_lineage_records_phases(catalog):
     phases = {rec["phase"] for rec in catalog.lineage_records()}
     assert {"p1_docs_raw", "p2a_docs_sorted", "p2b_docs", "p3_docmeta", "p4_postings", "p5_stats",
-            "p6a_partials", "p6b_doclens", "p6_packed"} <= phases
+            "p6b_doclens", "p6_packed"} <= phases
     for rec in catalog.lineage_records():
         assert rec["total_rows"] == sum(p["rows"] for p in rec["partitions"])
 
@@ -182,13 +185,13 @@ def test_resume_skips_completed_phases(catalog, spark, pages_path, tmp_path):
 
     before = {
         t: (catalog.path(t) / "_SUCCESS").stat().st_mtime
-        for t in ("docs", "docmeta", "postings", "postings_packed")
+        for t in ("docs", "docmeta", "postings_packed")
     }
     pages = spark.read.parquet(pages_path)
     run_build(spark, pages, str(catalog.warehouse), num_shards=8, salt_buckets=4)
     after = {
         t: (catalog.path(t) / "_SUCCESS").stat().st_mtime
-        for t in ("docs", "docmeta", "postings", "postings_packed")
+        for t in ("docs", "docmeta", "postings_packed")
     }
     assert before == after
 

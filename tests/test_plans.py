@@ -42,14 +42,6 @@ def test_num_shards_from_catalog_property(catalog, packed_engine):
     assert packed_engine.num_shards == 8
 
 
-def test_df_map_join_is_broadcast(engine):
-    """The per-term df map in the exhaustive path must broadcast, never
-    shuffle the postings side."""
-    df = engine._scored({"search", "@search"})
-    plan = _explain(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
-
 def test_docs_scan_prunes_columns(spark, pages_path):
     """Column pruning: a projection of two docs columns must not read the
     heavy terms/links arrays from parquet (ReadSchema check)."""
@@ -72,40 +64,42 @@ def test_bm25_packed_query_never_reads_pos_column(packed_engine):
 
 
 def test_pack_phase_prunes_flags_not_positions(catalog):
-    """The pack scan now carries positions (they become the packed ``pos``
-    streams) but must still prune the per-occurrence flag arrays, which
-    only the dynamic parity ranker reads."""
+    """The p4 pack scans the docs for the posting entries — positions and
+    per-occurrence flags become the packed ``pos``/``flags`` streams — but
+    must prune the per-posting max flag and the text payloads."""
+    from search_engine_spark.operators import build as B
     from search_engine_spark.operators import merge
 
-    df = merge.pack_partials(catalog.read("postings"),
+    df = merge.pack_partials(B.build_postings(catalog.read("docs")),
                              num_shards=8, bucket_width=100)
     plan = _explain(df)
     rs = plan.split("ReadSchema")[1].splitlines()[0]
-    assert "positions" in rs
-    assert "pos_flags" not in rs and "flags" not in rs
+    assert "p_poss" in rs and "p_fposs" in rs
+    for col in ("p_flags", "text", "title", "links"):
+        assert f"{col}:" not in rs, col
+
+
+def _scanned(plan: str, catalog) -> set[str]:
+    """The warehouse tables a plan's file scans read."""
+    import re
+
+    root = re.escape(str(catalog.warehouse))
+    return set(re.findall(root + r"/([A-Za-z0-9_]+)", plan))
 
 
 def test_phrase_query_runs_on_packed_not_logical(catalog, packed_engine):
-    """Phrases are first-class on the physical path: the plan must scan
-    postings_packed (with shard partition pruning) and must NOT touch the
-    logical postings table at all."""
+    """Phrases are first-class on the physical path: the plan scans only
+    postings_packed (with shard partition pruning) and the doclens."""
     plan = _topk_plan(packed_engine, '"search engine"')
-    packed_path = str(catalog.path("postings_packed"))
-    logical_path = str(catalog.path("postings"))
-    assert packed_path in plan
-    assert logical_path + "]" not in plan and logical_path + "/" not in plan \
-        and logical_path + "," not in plan
+    assert _scanned(plan, catalog) == {"postings_packed", "doclens"}
     assert "PartitionFilters" in plan
     assert "shard" in plan.split("PartitionFilters")[1].splitlines()[0]
 
 
 def test_not_and_synonym_queries_run_on_packed(catalog, packed_engine):
-    logical_path = str(catalog.path("postings"))
     for q, syn in (("search - engine", False), ("connection", True)):
         plan = _topk_plan(packed_engine, q, synonyms=syn)
-        assert logical_path + "]" not in plan \
-            and logical_path + "/" not in plan \
-            and logical_path + "," not in plan, q
+        assert _scanned(plan, catalog) == {"postings_packed", "doclens"}, q
 
 
 def test_topk_docmeta_lookup_is_pushed_filter(packed_engine):
@@ -119,47 +113,6 @@ def test_topk_docmeta_lookup_is_pushed_filter(packed_engine):
         assert op not in plan, op
     result = _explain(packed_engine.search("search engine", k=10))
     assert "LocalTableScan" in result and "FileScan" not in result
-
-
-def test_phrase_fallback_prunes_shard_partitions(engine):
-    """The phrase/NOT fallback reads the LOGICAL postings — which are now
-    hive-partitioned by term shard — so a phrase query must prune to the
-    query terms' shard dirs instead of full-scanning the table."""
-    assert engine.num_shards, "postings should be shard-partitioned"
-    df = engine._scored({"search", "@search", "engin", "@engin"})
-    plan = _explain(df)
-    assert "PartitionFilters" in plan
-    assert "shard" in plan.split("PartitionFilters")[1].splitlines()[0]
-    pushed = plan.split("PushedFilters")[1].splitlines()[0]
-    assert "term" in pushed
-
-
-def test_logical_postings_term_sorted_for_rowgroup_pruning(catalog):
-    """Within each shard file the logical postings must be term-sorted, so
-    parquet row-group min/max stats prune single-term reads (the dynamic
-    parity mode reads this table term-filtered)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = glob.glob(str(catalog.path("postings")) + "/shard=*/*.parquet")
-    assert files
-    checked = 0
-    for f in files[:4]:
-        md = pq.ParquetFile(f).metadata
-        tcol = next(i for i in range(md.num_columns)
-                    if md.schema.column(i).name == "term")
-        prev_max = None
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(tcol).statistics
-            assert st is not None and st.has_min_max
-            if prev_max is not None:
-                # row groups non-overlapping-or-touching ⇒ a term-equality
-                # predicate can skip every group whose [min,max] misses it
-                assert st.min >= prev_max
-            prev_max = st.max
-            checked += 1
-    assert checked > 0
 
 
 def test_packed_query_matches_after_shard_pruning(oracle, packed_engine):

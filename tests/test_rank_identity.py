@@ -63,7 +63,7 @@ def test_rank_identity_with_synonyms_packed(packed_engine, oracle, q):
 
 @pytest.mark.parametrize("qid,q", QUERIES)
 def test_rank_identity_packed(packed_engine, oracle, qid, q):
-    """The physical path (varbyte + block-max WAND + fallbacks) must be
+    """The physical path (varbyte + block-max WAND + general kernel) must be
     rank-identical to the oracle too; 1e-9 tolerance absorbs float addition
     order inside the kernel."""
     _run(packed_engine, oracle, q)
@@ -77,24 +77,16 @@ NONFLAT_QUERIES = [
 
 
 @pytest.mark.parametrize("q", NONFLAT_QUERIES)
-def test_rank_identity_packed_without_fallback(catalog, oracle, q):
-    """Phrases/NOT/nesting must be served by the PACKED path alone — a
-    fallback-less engine proves no silent logical-postings detour."""
-    from search_engine_spark.plans.wand import PackedQueryEngine
-
-    eng = PackedQueryEngine.from_catalog(catalog)
-    eng.fallback = None
-    _run(eng, oracle, q)
+def test_rank_identity_packed_without_fallback(packed_engine, oracle, q):
+    """Phrases/NOT/nesting are served by the packed general kernel."""
+    _run(packed_engine, oracle, q)
 
 
 @pytest.mark.parametrize("q", ["connection", "news retrieval",
                                "attention - bias"])
-def test_rank_identity_synonyms_packed_without_fallback(catalog, oracle, q):
-    from search_engine_spark.plans.wand import PackedQueryEngine
-
-    eng = PackedQueryEngine.from_catalog(catalog)
-    eng.fallback = None
-    _run(eng, oracle, q, synonyms=True)
+def test_rank_identity_synonyms_packed_without_fallback(packed_engine, oracle,
+                                                        q):
+    _run(packed_engine, oracle, q, synonyms=True)
 
 
 def test_nonempty_results_for_head_terms(packed_engine):
