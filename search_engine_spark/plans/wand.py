@@ -154,10 +154,10 @@ def _decode_rows(trows, need_pos: bool, tombs: np.ndarray | None = None,
     the next compaction physically drops the postings.  Filtering INSIDE
     the kernel, before the per-bucket top-k cut, is what keeps a filtered
     top-k exact (a post-cut filter could starve a bucket whose winners
-    were filtered).  ``need_flags`` implies ``need_pos``."""
+    were filtered).  ``need_flags`` needs ``need_pos`` (the flag runs
+    share the position offsets)."""
     from search_engine_spark.operators import codec
 
-    need_pos = need_pos or need_flags
     decoded: dict[str, dict] = {}
     for r in trows if trows is not None else []:
         ids = codec.decode_docids(bytes(r["doc_ids"]))
