@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Streaming ingest job: drain all currently-available page files into the
-warehouse's incremental partial tables (checkpointed, exactly-once), then
-optionally re-run the pack+merge consolidation.
+warehouse's ``docs_stream`` table (checkpointed, exactly-once), then
+optionally consolidate: the first consolidation builds the index, later
+ones append only the batches streamed since.
 
   spark-submit --master 'local[32]' jobs/stream_ingest.py \
       --pages-dir /data/pages_incoming --warehouse /tmp/se_wh \
@@ -26,12 +27,15 @@ def main() -> None:
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument("--consolidate", action="store_true",
-                    help="re-run pack+merge over the appended partials")
+                    help="index the batches streamed since the last "
+                         "consolidation")
     args = ap.parse_args()
 
     from search_engine_spark.session import get_spark, ship_package
     from search_engine_spark.sources.catalog import IndexCatalog
-    from search_engine_spark.streaming.ingest import incremental_index
+    from search_engine_spark.streaming.ingest import (
+        consolidate_stream_incremental, incremental_index,
+    )
 
     spark = get_spark("stream-ingest")
     ship_package(spark)
@@ -45,14 +49,15 @@ def main() -> None:
     drained = time.perf_counter() - t0
 
     cat = IndexCatalog(spark, args.warehouse)
-    n_docs = cat.read("docmeta_stream").count() if cat.exists("docmeta_stream") else 0
+    # per-batch dynamic overwrites leave no table-level _SUCCESS marker,
+    # so cat.exists() never holds for docs_stream
+    n_docs = (cat.read("docs_stream").count()
+              if cat.path("docs_stream").exists() else 0)
 
     consolidated = None
     if args.consolidate:
-        from search_engine_spark.streaming.ingest import consolidate_stream
-
         t1 = time.perf_counter()
-        consolidate_stream(cat)
+        consolidate_stream_incremental(cat)
         consolidated = round(time.perf_counter() - t1, 3)
 
     print(json.dumps({

@@ -1,5 +1,7 @@
 """Deterministic dense 64-bit doc_id assignment + first-wins dedup,
-distributed and cache-free.
+distributed and cache-free — the one id assigner of every ingest path
+(``run_build``, ``run_append`` and both stream consolidators run these
+two passes over their extracted doc rows).
 
 The reference's docIDs are arrival-order uint32 per chunk
 (Indexer.hpp:418).  We need a *deterministic* global id (rank-identity
@@ -12,15 +14,14 @@ collects and without caching the shuffled corpus:
     their partition id and row-rank-within-partition as columns — the
     only state the id needs.
   pass B (``stamp_doc_ids``): per-partition row counts come from the
-    written parquet FOOTERS (file part-N ↔ shuffle partition N, a
-    driver-side metadata read); doc_id = offset[_pid] + _row_in_part is
-    then a pure column expression — a narrow map, no second shuffle, no
-    persist().
+    written parquet FOOTERS (``partition_offsets_from_footers``: file
+    part-N ↔ shuffle partition N, a driver-side metadata read);
+    doc_id = offset[_pid] + _row_in_part is then a pure column
+    expression — a narrow map, no second shuffle, no persist().
 
 doc_id is therefore the rank of ``url`` in lexicographic order — stable
-for a fixed corpus at any parallelism.  Caching the shuffled corpus
-(the previous design) thrashed executor storage memory at high task
-counts; footers made the counts free.
+for a fixed corpus at any parallelism (an append offsets its delta's
+ranks past the base corpus's max id).
 """
 
 from __future__ import annotations
@@ -137,64 +138,3 @@ def stamp_doc_ids(sorted_docs: DataFrame, offsets: dict[int, int]) -> DataFrame:
             *data_cols,
         )
     )
-
-
-def dense_ids_by_key(df: DataFrame, key: str = "url",
-                     num_partitions: int | None = None) -> DataFrame:
-    """Add ``new_id`` = dense 0-based rank of ``key`` (which must be
-    unique per row) — the generic re-key primitive the streaming
-    consolidation uses to converge on the batch pipeline's id space.
-    Distributed: one range shuffle + a counts pass over the slim
-    projection, then an in-partition stamp."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    parted = (
-        df.repartitionByRange(num_partitions, key)
-        .sortWithinPartitions(key)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in parted.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("new_id", T.LongType(), False)]
-    )
-
-    def stamp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = offsets[int(pdf["_pid"].iloc[0])] + seen
-            seen += len(pdf)
-            pdf = pdf.drop(columns=["_pid"])
-            pdf["new_id"] = range(base, base + len(pdf))
-            yield pdf
-
-    return parted.mapInPandas(stamp, schema=out_schema)
-
-
-def assign_doc_ids(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """One-shot (non-checkpointed) convenience path: dedup + stamp via a
-    temporary persist of the bookkeeping columns only.  The pipeline uses
-    the two-pass parquet route instead (operators/pipeline.py p2a/p2b)."""
-    dd = sorted_dedup(docs, num_partitions).persist()
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in dd.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    return stamp_doc_ids(dd, offsets)

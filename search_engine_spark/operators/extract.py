@@ -138,23 +138,6 @@ def text_invariant_violations(pages: DataFrame) -> DataFrame:
     )
 
 
-def dedup_first_wins(docs: DataFrame) -> DataFrame:
-    """URL dedup, first fetch wins (reference: URLTable.AddURL first-wins,
-    HashBlob.h:105-116; Bloom-filter S2 is replaced by exact dedup).
-
-    Scale: a window over url is a hash shuffle on url; AQE handles skewed
-    hosts. At 10^12 docs this is the standard dedup shuffle — no driver work.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").asc(), F.col("text").asc())
-    return (
-        docs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def drop_overlong_titles(docs: DataFrame) -> DataFrame:
     """Docs with >=40 title words are never indexed (Indexer.hpp:404-406)."""
     return docs.filter(F.col("title_len") < 40)

@@ -17,6 +17,11 @@ Phases, each writing one catalog table and a lineage record:
   p6_packed    doclens + shuffle-merge into the
                term-sharded postings_packed          (see merge.py)
 
+streaming/ingest.py runs the same phases: its full consolidation runs
+p2a–p6 over the streamed doc rows, its incremental one run_append's
+a1–a2b and apply_delta — one dedup rule and one id assigner for every
+ingest path.
+
 The partials are the one postings table later passes read and write:
 appends add partial rows, deletes decode the tombstoned buckets' rows,
 and compaction decodes, masks, re-stamps and re-packs them
@@ -29,6 +34,8 @@ SURVEY.md §2.4 A6).
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,28 +56,10 @@ def run_build(
     force: bool = False,
     bucket_width: int | None = None,
 ) -> IndexCatalog:
-    import time
-
     cat = IndexCatalog(spark, warehouse)
 
     if force:
-        for t in ("docs_raw", "docs_sorted", "docs", "docmeta",
-                  "index_stats", "postings_partial", "doclens",
-                  "postings_packed", "postings_packed_next",
-                  "tombstones", "df_patch_deletes", "index_stats_next",
-                  "docmeta_next", "postings_partial_next"):
-            cat.drop(t)
-        # properties describe the dropped tables (layout params, append
-        # idempotence flags) — stale ones must not outlive a force rebuild
-        cat.clear_props()
-
-    def timed(phase: str, fn) -> None:
-        t0 = time.perf_counter()
-        table = fn()
-        cat.log_phase(
-            phase, cat.read(table),
-            {"seconds": round(time.perf_counter() - t0, 2)},
-        )
+        _drop_build(cat)
 
     if not cat.exists("docs_raw"):
         # extraction is a pure narrow map; materializing it FIRST means the
@@ -82,30 +71,67 @@ def run_build(
             cat.write("docs_raw", raw)
             return "docs_raw"
 
-        timed("p1_docs_raw", p1)
+        _timed(cat, "p1_docs_raw", p1)
 
+    _index_docs(cat, cat.read("docs_raw"), num_shards, salt_buckets,
+                merge_factor, bucket_width)
+    return cat
+
+
+_BUILD_TABLES = ("docs_raw", "docs_sorted", "docs", "docmeta",
+                 "index_stats", "postings_partial", "doclens",
+                 "postings_packed", "postings_packed_next", "tombstones",
+                 "df_patch_deletes", "index_stats_next", "docmeta_next",
+                 "postings_partial_next")
+
+
+def _drop_build(cat: IndexCatalog) -> None:
+    """Drop every table a build writes, and the properties describing
+    them (layout params, append idempotence flags) — stale ones must not
+    outlive a rebuild."""
+    for t in _BUILD_TABLES:
+        cat.drop(t)
+    cat.clear_props()
+
+
+def _timed(cat: IndexCatalog, phase: str, fn, **extra) -> None:
+    """Run ``fn`` (which returns the table it wrote) and log its lineage
+    record with the wall time."""
+    t0 = time.perf_counter()
+    table = fn()
+    cat.log_phase(
+        phase, cat.read(table),
+        {"seconds": round(time.perf_counter() - t0, 2), **extra},
+    )
+
+
+def _index_docs(cat: IndexCatalog, raw: DataFrame, num_shards: int,
+                salt_buckets: int, merge_factor: int | None,
+                bucket_width: int | None) -> None:
+    """Build phases p2a–p6 over ``raw`` (extracted doc rows, p1's
+    shape) — shared by ``run_build`` and the stream consolidator."""
     if not cat.exists("docs_sorted"):
         # pass A: the build's ONE corpus-wide shuffle (range by url) with
         # in-partition sort + first-wins dedup; bookkeeping columns carry
         # everything id assignment needs
         def p2a() -> str:
-            cat.write("docs_sorted", docids.sorted_dedup(cat.read("docs_raw")))
+            cat.write("docs_sorted", docids.sorted_dedup(raw))
             return "docs_sorted"
 
-        timed("p2a_docs_sorted", p2a)
+        _timed(cat, "p2a_docs_sorted", p2a)
 
     if not cat.exists("docs"):
         # pass B: narrow id stamp; offsets from parquet footers (no job)
         def p2b() -> str:
             offsets = docids.partition_offsets_from_footers(
-                cat.path("docs_sorted"), spark=spark
+                cat.path("docs_sorted"), spark=cat.spark
             )
             cat.write(
                 "docs", docids.stamp_doc_ids(cat.read("docs_sorted"), offsets)
             )
             return "docs"
 
-        timed("p2b_docs", p2b)
+        _timed(cat, "p2b_docs", p2b)
 
     docs = cat.read("docs")
 
@@ -114,7 +140,7 @@ def run_build(
             cat.write("docmeta", B.build_docmeta(docs))
             return "docmeta"
 
-        timed("p3_docmeta", p3)
+        _timed(cat, "p3_docmeta", p3)
 
     if not cat.exists("postings_partial"):
         # the docs' posting rows go straight into the salted pack: the
@@ -127,7 +153,7 @@ def run_build(
             )
             return "postings_partial"
 
-        timed("p4_postings", p4)
+        _timed(cat, "p4_postings", p4)
 
     if not cat.exists("index_stats"):
         def p5() -> str:
@@ -138,7 +164,7 @@ def run_build(
             )
             return "index_stats"
 
-        timed("p5_stats", p5)
+        _timed(cat, "p5_stats", p5)
 
     if not cat.exists("postings_packed"):
         def p6() -> str:
@@ -148,10 +174,9 @@ def run_build(
             )
             return "postings_packed"
 
-        timed("p6_packed", p6)
+        _timed(cat, "p6_packed", p6)
 
     cat.write_metrics_tables()
-    return cat
 
 
 def run_append(
@@ -173,10 +198,11 @@ def run_append(
     Layout (bucket_width / merge_factor / num_shards) is inherited from the
     base build's persisted catalog properties, so new partials land on the
     same doc-bucket grid.  Doc ids continue densely from the base build's
-    max (url-rank WITHIN the delta); urls already indexed are dropped
-    (first batch wins — the batch twin of the streaming consolidator's
-    first-wins rule).  Corpus stats (n_docs/avgdl) and doclens are
-    recomputed over the union, and the merge recomputes every block-max
+    max (url-rank WITHIN the delta); urls alive in the index are dropped
+    (first batch wins; the stream consolidator's incremental mode runs
+    these same phases over its new micro-batches).  Corpus stats
+    (n_docs/avgdl) and doclens are recomputed over the union, and the
+    merge recomputes every block-max
     header against the NEW avgdl — which is why an append converges
     bit-identically to a from-scratch build of the union corpus (asserted
     by tests/test_packed_index.py) whenever the delta's urls sort after the
@@ -224,36 +250,37 @@ def run_append(
     ``bound_inflation_limit`` — full compaction rewrites everything with
     exact headers and retires the manifest, resetting the debt to zero.
     """
-    import time
-
     cat = IndexCatalog(spark, warehouse)
     for t in ("docmeta", "postings_partial", "postings_packed"):
         if not cat.exists(t):
             raise ValueError(f"run_append needs an existing warehouse ({t} missing)")
-    applied_key = f"append_{label}_applied"
-    if cat.get_prop(applied_key):
-        return cat
+    raw = extract.drop_overlong_titles(extract.extract_docs(pages))
+    _append_docs(cat, raw, label, compaction=compaction,
+                 max_generations=max_generations,
+                 bound_inflation_limit=bound_inflation_limit)
+    return cat
+
+
+def _append_docs(cat: IndexCatalog, raw: DataFrame, label: str,
+                 **apply_kw) -> None:
+    """Append phases a1–a2b plus ``apply_delta`` (``apply_kw``: its
+    compaction options) over ``raw`` (extracted doc rows, p1's shape) —
+    shared by ``run_append`` and the stream consolidator's incremental
+    mode."""
+    spark = cat.spark
+    if cat.get_prop(f"append_{label}_applied"):
+        return
 
     # fail early if the base build never persisted its layout props
     for k in ("p6a_num_shards", "p6a_bucket_width", "p6a_merge_factor"):
         if cat.get_prop(k) is None:
             raise ValueError(f"run_append needs layout property {k}")
 
-    def timed(phase: str, fn) -> None:
-        t0 = time.perf_counter()
-        table = fn()
-        cat.log_phase(
-            phase, cat.read(table),
-            {"seconds": round(time.perf_counter() - t0, 2), "append": label},
-        )
-
     raw_t, sorted_t, docs_t = (f"{t}_{label}" for t in
                                ("docs_raw", "docs_sorted", "docs"))
 
     if not cat.exists(raw_t):
         def p1() -> str:
-            raw = extract.extract_docs(pages)
-            raw = extract.drop_overlong_titles(raw)
             # urls the base build (or an earlier append) already indexed
             # lose first-wins against the existing corpus — but a DELETED
             # url is re-indexable: the first-wins reference set is the
@@ -265,18 +292,18 @@ def run_append(
                     F.broadcast(cat.read("tombstones").select("doc_id")),
                     "doc_id", "left_anti",
                 )
-            raw = raw.join(indexed.select("url"), "url", "left_anti")
-            cat.write(raw_t, raw)
+            cat.write(raw_t, raw.join(indexed.select("url"), "url",
+                                      "left_anti"))
             return raw_t
 
-        timed(f"a1_{raw_t}", p1)
+        _timed(cat, f"a1_{raw_t}", p1, append=label)
 
     if not cat.exists(sorted_t):
         def p2a() -> str:
             cat.write(sorted_t, docids.sorted_dedup(cat.read(raw_t)))
             return sorted_t
 
-        timed(f"a2a_{sorted_t}", p2a)
+        _timed(cat, f"a2a_{sorted_t}", p2a, append=label)
 
     if not cat.exists(docs_t):
         def p2b() -> str:
@@ -292,15 +319,11 @@ def run_append(
                 "doc_id", F.col("doc_id") + F.lit(int(base))))
             return docs_t
 
-        timed(f"a2b_{docs_t}", p2b)
+        _timed(cat, f"a2b_{docs_t}", p2b, append=label)
 
     delta = cat.read(docs_t)
-    apply_delta(
-        spark, cat, B.build_docmeta(delta), B.build_postings(delta),
-        label=label, compaction=compaction, max_generations=max_generations,
-        bound_inflation_limit=bound_inflation_limit,
-    )
-    return cat
+    apply_delta(spark, cat, B.build_docmeta(delta), B.build_postings(delta),
+                label=label, **apply_kw)
 
 
 def apply_delta(
@@ -316,12 +339,9 @@ def apply_delta(
     """Apply a PRE-EXTRACTED delta (docmeta rows + posting rows of the
     build_postings shape, with doc ids already stamped densely after the
     base corpus's max) to an existing packed warehouse: marker-guarded
-    appends, stats/doclens refresh, one merge pass (full or tiered-manifest).  Shared by
-    ``run_append`` (crawl-refresh page batches) and the streaming
-    consolidator's incremental mode (stream micro-batches) — both delta
-    producers, one apply path."""
-    import time
-
+    appends, stats/doclens refresh, one merge pass (full or
+    tiered-manifest).  The last phase of every append — ``run_append``'s
+    page batches and the stream consolidator's micro-batches alike."""
     num_shards = int(cat.get_prop("p6a_num_shards"))
     bucket_width = int(cat.get_prop("p6a_bucket_width"))
     merge_factor = int(cat.get_prop("p6a_merge_factor"))
@@ -403,10 +423,15 @@ def apply_delta(
                 partition_by=["shard"],
             )
         if not cat.exists(patch_t):
+            # the delta's own partial rows (ids >= its first id; every base
+            # row sits below) already count its postings per term, so the
+            # posting explode is not run a second time
             cat.write(
                 patch_t,
-                delta_posts.groupBy("term").agg(
-                    F.count("*").cast("long").alias("df_add")),
+                cat.read("postings_partial")
+                .filter(F.col("first_docid") >= first_delta_id)
+                .groupBy("term").agg(
+                    F.sum("n_docs").cast("long").alias("df_add")),
             )
         if manifest is None:
             manifest = {"generations": [{
@@ -625,16 +650,18 @@ def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
     O(corpus) by design — this is the scheduled debt-retirement pass, as
     in any LSM.  Crash-safe: the filtered tables are written ASIDE and
     snapshot-swapped (the live warehouse stays queryable until each
-    swap), the packed rebuild reuses pack_and_merge's checkpointing, and
-    the tombstones are dropped LAST — a crash anywhere leaves a
-    consistent masked warehouse that a re-run finishes compacting.
+    swap), and the tombstones are dropped LAST.  The re-stamp commits a
+    catalog marker keyed by the tombstones' delete labels (a label is
+    applied once, so each compaction's key is new): a re-run after the
+    marker skips the re-stamp — re-stamping the survivors against the
+    old victim ids would drop live docs — swaps in whichever aside table
+    is left and finishes the rebuild.
     """
     cat = IndexCatalog(spark, warehouse)
     if not cat.exists("tombstones"):
         return cat
-    victim_ids = sorted(
-        r["doc_id"] for r in cat.read("tombstones").collect()
-    )
+    tomb_rows = cat.read("tombstones").collect()
+    victim_ids = sorted(r["doc_id"] for r in tomb_rows)
     if not victim_ids:  # every delete label was empty — nothing to compact
         cat.drop("tombstones")
         cat.drop("df_patch_deletes")
@@ -678,13 +705,18 @@ def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
             .drop("_vb", "_varr")
         )
 
-    cat.write("docmeta_next", restamp(cat.read("docmeta")))
-    merge.write_partials(
-        cat, restamp(merge.unpack_partials(cat.read("postings_partial"))),
-        layout, table="postings_partial_next",
-    )
-    cat.swap("docmeta_next", "docmeta")
-    cat.swap("postings_partial_next", "postings_partial")
+    restamped_key = "compact_{}_restamped".format(
+        "+".join(sorted({r["label"] for r in tomb_rows})))
+    if not cat.get_prop(restamped_key):
+        cat.write("docmeta_next", restamp(cat.read("docmeta")))
+        merge.write_partials(
+            cat, restamp(merge.unpack_partials(cat.read("postings_partial"))),
+            layout, table="postings_partial_next",
+        )
+        cat.set_prop(restamped_key, 1)
+    for t in ("docmeta", "postings_partial"):
+        if cat.exists(f"{t}_next"):
+            cat.swap(f"{t}_next", t)
 
     # survivor-only rebuild of everything derived: stats, doclens, packed
     # (pack_and_merge recomputes stats first because the table was

@@ -1,31 +1,32 @@
-"""Structured-streaming ingest: incremental pages → docs → stream postings.
+"""Structured-streaming ingest: incremental pages → extracted doc rows →
+the batch pipeline's own id, postings and merge phases.
 
 The reference's "streaming" is TCP frames into bounded queues
 (Parser.cpp:255-332, 203-246); the Spark-native equivalent is a file/table
 stream with checkpointed exactly-once micro-batches:
 
 * ``stream_docs``          — readStream over a pages directory → the same
-                             extraction UDF as the batch path (operator
-                             reuse: one extract_docs for both modes).
-* ``incremental_index``    — foreachBatch sink appending per-batch posting
-                             rows + docmeta to the warehouse's stream
-                             tables; ``consolidate_stream`` then packs them
-                             into partials and runs the multi-pass
-                             shuffle-merge (SURVEY.md A6).
+                             extraction UDF as the batch path.
+* ``incremental_index``    — foreachBatch sink writing each micro-batch's
+                             extracted doc rows (what p1 writes to
+                             ``docs_raw``) to ``docs_stream``, one
+                             ``batch_id`` partition per micro-batch.
                              Trigger availableNow => drain-and-stop, which
                              with the checkpoint dir gives resumable,
-                             exactly-once incremental builds.
+                             exactly-once incremental ingest.
+* ``consolidate_stream``   — the batch build's phases p2a–p6 over all of
+                             ``docs_stream``.
+* ``consolidate_stream_incremental`` — ``run_append``'s phases over the
+                             batches that arrived since the last
+                             consolidation.
 * ``ingest_metrics``       — event-time windowed ingest counts with a
                              watermark (late pages beyond 1 hour dropped),
                              the streaming metrics sidecar.
 
-doc_id note: batch builds assign dense url-rank ids (operators/docids.py);
-streaming appends cannot renumber, so incremental partials use a stable
-per-fetch 64-bit id xxhash64(url, warc_ts).  ``consolidate_stream`` then
-dedups first-wins across ALL batches, re-keys to dense url-rank ids
-(identical to what the batch pipeline would assign for the same corpus),
-packs the rows straight into partials and runs the standard merge — so a streamed-then-consolidated
-warehouse answers queries identically to a batch-built one.
+The stream keeps no ids of its own: the consolidators run the one
+first-wins dedup and dense url-rank id assigner (operators/docids.py) of
+the batch pipeline, so a streamed-then-consolidated warehouse is the
+warehouse ``run_build`` (then ``run_append``) writes for the same pages.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark import schemas
-from search_engine_spark.operators import extract
+from search_engine_spark.operators import extract, pipeline
 from search_engine_spark.sources.catalog import IndexCatalog
 
 
@@ -52,48 +53,31 @@ def stream_docs(spark: SparkSession, pages_dir: str,
 
 def write_stream_batch(cat: IndexCatalog, batch_df: DataFrame,
                        batch_id: int) -> None:
-    """IDEMPOTENT per-micro-batch sink: both stream tables are
-    hive-partitioned by batch_id and each micro-batch dynamically
-    OVERWRITES exactly its own partition.  A batch retried after a partial
-    append therefore replaces its previous rows instead of duplicating
-    them — this is what makes foreachBatch + checkpoint genuinely
-    exactly-once (batch_id is stable across retries because it comes from
-    the checkpointed offset log)."""
-    _dynamic = {"partitionOverwriteMode": "dynamic"}
-    batch = extract.drop_overlong_titles(batch_df)
-    batch = extract.dedup_first_wins(batch)
-    # per-FETCH stable id (url+ts+content): cross-batch refetches of a url
-    # stay distinct so the consolidation pass can pick the first-wins
-    # keeper; hashing the text too keeps two same-timestamp fetches with
-    # different content distinct (content tie-breaker).
-    batch = batch.withColumn("doc_id", F.xxhash64("url", "warc_ts", "text"))
-    from search_engine_spark.operators import build as B
-
-    # ``warc_ts`` and ``text`` ride along ONLY so consolidate_stream can run
-    # the batch pipeline's dedup_first_wins (keeper = earliest (warc_ts,
-    # text)) — keeping streamed-then-consolidated warehouses bit-identical
-    # to batch builds even when two fetches of a url share a warc_ts.
-    meta = B.build_docmeta(batch).join(
-        batch.select("doc_id", "warc_ts", "text"), "doc_id"
-    ).withColumn("batch_id", F.lit(batch_id))
-    cat.write("docmeta_stream", meta, partition_by=["batch_id"],
-              mode="overwrite", options=_dynamic)
-    posts = B.build_postings(batch).withColumn("batch_id", F.lit(batch_id))
-    cat.write("postings_stream", posts, partition_by=["batch_id"],
-              mode="overwrite", options=_dynamic)
+    """IDEMPOTENT per-micro-batch sink: ``docs_stream`` is hive-partitioned
+    by batch_id and each micro-batch dynamically OVERWRITES exactly its
+    own partition.  A batch retried after a partial write therefore
+    replaces its previous rows instead of duplicating them — this is what
+    makes foreachBatch + checkpoint genuinely exactly-once (batch_id is
+    stable across retries because it comes from the checkpointed offset
+    log)."""
+    cat.write("docs_stream",
+              extract.drop_overlong_titles(batch_df)
+              .withColumn("batch_id", F.lit(batch_id)),
+              partition_by=["batch_id"], mode="overwrite",
+              options={"partitionOverwriteMode": "dynamic"})
 
 
 def incremental_index(spark: SparkSession, pages_dir: str, warehouse: str,
                       checkpoint: str, max_files_per_trigger: int | None = None):
-    """Drain all currently-available page files into per-batch partial
-    tables; returns the finished StreamingQuery (awaitTermination'd)."""
+    """Drain all currently-available page files into ``docs_stream``;
+    returns the finished StreamingQuery (awaitTermination'd)."""
     cat = IndexCatalog(spark, warehouse)
     docs = stream_docs(spark, pages_dir, max_files_per_trigger)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         write_stream_batch(cat, batch_df, batch_id)
         cat.log_phase(
-            f"stream_batch_{batch_id}", cat.read("postings_stream"),
+            f"stream_batch_{batch_id}", cat.read("docs_stream"),
             {"batch_id": batch_id},
         )
 
@@ -110,37 +94,12 @@ def incremental_index(spark: SparkSession, pages_dir: str, warehouse: str,
 def consolidate_stream(cat: IndexCatalog, num_shards: int = 32,
                        salt_buckets: int = 16,
                        merge_factor: int | None = None) -> None:
-    """Turn the appended stream partials into the standard queryable
-    warehouse: first-wins dedup across all micro-batches, dense url-rank
-    re-key (bit-identical to the batch pipeline's ids for the same
-    corpus), then the regular checkpointed pack+merge."""
-    # keeper fetch per url: the batch pipeline's own first-wins rule, so
-    # the consolidated warehouse is bit-identical to a batch build even
-    # when two fetches of a url tie on warc_ts with different content
-    keepers = extract.dedup_first_wins(cat.read("docmeta_stream")).drop(
-        "warc_ts", "text", "batch_id")
-    # dense ids by url rank — same axis the batch pipeline uses
-    from search_engine_spark.operators.docids import dense_ids_by_key
-
-    mapping = dense_ids_by_key(keepers.select("url", "doc_id"), key="url")
-    remap = keepers.withColumnRenamed("doc_id", "_old").join(
-        mapping.withColumnRenamed("doc_id", "_old"), ["url", "_old"]
-    )
-    cat.write("docmeta", remap.drop("_old").withColumnRenamed("new_id", "doc_id")
-              .select("doc_id", "url", "title", "word_count", "title_len",
-                      "url_len", "english", "tld", "dl"))
-    post = cat.read("postings_stream").withColumnRenamed("doc_id", "_old").join(
-        mapping.withColumnRenamed("doc_id", "_old").select("_old", "new_id"),
-        "_old",  # inner join: loser fetches' postings drop out here
-    ).drop("_old").withColumnRenamed("new_id", "doc_id")
-    from search_engine_spark.operators import merge
-
-    for t in ("index_stats", "doclens", "postings_packed"):
-        cat.drop(t)
-    merge.write_partials(cat, post, merge.pack_layout(
-        cat.read("docmeta").count(), num_shards, salt_buckets, merge_factor))
-    merge.pack_and_merge(cat, num_shards=num_shards,
-                         salt_buckets=salt_buckets, merge_factor=merge_factor)
+    """(Re)build the queryable warehouse from every streamed micro-batch:
+    the tables and properties of any earlier build are dropped, then the
+    batch build's phases p2a–p6 run over ``docs_stream``."""
+    pipeline._drop_build(cat)
+    pipeline._index_docs(cat, cat.read("docs_stream").drop("batch_id"),
+                         num_shards, salt_buckets, merge_factor, None)
 
 
 def consolidate_stream_incremental(
@@ -151,91 +110,47 @@ def consolidate_stream_incremental(
     compaction: str = "full",
 ) -> str | None:
     """Consolidate ONLY the stream micro-batches that arrived since the
-    last consolidation, through the incremental-append path — so a
-    long-running crawl pays O(delta) per refresh instead of the full
-    re-key + repack ``consolidate_stream`` does over the whole corpus
-    every time.
+    last consolidation — so a long-running crawl pays O(delta) per
+    refresh instead of the full rebuild ``consolidate_stream`` does over
+    the whole corpus every time.
 
-    First call (no packed warehouse yet, or no watermark property):
-    delegates to the full ``consolidate_stream`` — the initial build must
-    re-key everything once.  Subsequent calls: new batches are first-wins
-    deduped among themselves, urls already in the consolidated corpus
-    lose against it (append semantics, the same rule as
-    ``run_append``), the survivors get dense url-rank ids continuing
-    after the base max, and ``operators.pipeline.apply_delta`` runs the
-    shared marker-guarded append + merge (``compaction`` may be
-    ``"tiered"`` for the metadata-only manifest commit).
+    First call (no packed warehouse yet, or no watermark property): the
+    full ``consolidate_stream``.  Subsequent calls run ``run_append``'s
+    phases over the new batches as one append labelled
+    ``stream_b<last batch id>``: the new fetches are first-wins deduped
+    among themselves, urls ALIVE in the consolidated corpus win against
+    them (a deleted url is re-indexable), the survivors get dense
+    url-rank ids continuing after the base max, and
+    ``operators.pipeline.apply_delta`` runs the marker-guarded append +
+    merge (``compaction`` may be ``"tiered"`` for the metadata-only
+    manifest commit).
 
-    Convergence contract (inherited from run_append): the consolidated
-    warehouse answers queries RANK-identically to a batch build of the
-    same corpus, and BIT-identically whenever each new batch's urls sort
+    Convergence contract (run_append's): the consolidated warehouse
+    answers queries RANK-identically to a batch build of the same
+    corpus, and BIT-identically whenever each new batch's urls sort
     after the already-consolidated corpus's.
 
     Returns the applied append label, ``"full"`` for a first/full
     consolidation, or ``None`` when no new batches exist."""
-    from search_engine_spark.operators.docids import dense_ids_by_key
-    from search_engine_spark.operators.pipeline import apply_delta
-
     wm_key = "stream_consolidated_through"
     last = cat.get_prop(wm_key)
-    if last is None or not cat.exists("postings_packed"):
+    full = last is None or not cat.exists("postings_packed")
+    new = cat.read("docs_stream")
+    if not full:
+        new = new.filter(F.col("batch_id") > int(last))
+    max_b = new.agg(F.max("batch_id")).collect()[0][0]
+    if full:
         consolidate_stream(cat, num_shards=num_shards,
                            salt_buckets=salt_buckets,
                            merge_factor=merge_factor)
-        max_b = cat.read("docmeta_stream").agg(
-            F.max("batch_id")).collect()[0][0]
         cat.set_prop(wm_key, int(max_b))
         return "full"
-
-    meta = cat.read("docmeta_stream").filter(F.col("batch_id") > int(last))
-    if meta.isEmpty():
+    if max_b is None:
         return None
-    max_b = int(meta.agg(F.max("batch_id")).collect()[0][0])
     label = f"stream_b{max_b}"
-
-    # first-wins among the NEW fetches (the batch pipeline's rule), then
-    # the existing corpus wins
-    keepers = (
-        extract.dedup_first_wins(meta)
-        .drop("warc_ts", "text", "batch_id")
-        .join(cat.read("docmeta").select("url"), "url", "left_anti")
-    )
-    base = cat.read("docmeta").agg(F.max("doc_id")).collect()[0][0] + 1
-    mapping = dense_ids_by_key(keepers.select("url", "doc_id"), key="url")
-    delta_meta = (
-        keepers.withColumnRenamed("doc_id", "_old")
-        .join(mapping.withColumnRenamed("doc_id", "_old"), ["url", "_old"])
-        .withColumn("doc_id", F.col("new_id") + F.lit(int(base)))
-        .select("doc_id", "url", "title", "word_count", "title_len",
-                "url_len", "english", "tld", "dl")
-    )
-    delta_posts = (
-        cat.read("postings_stream")
-        .filter(F.col("batch_id") > int(last))
-        .withColumnRenamed("doc_id", "_old")
-        # inner join: loser fetches' and already-indexed urls' postings
-        # drop out here
-        .join(mapping.withColumnRenamed("doc_id", "_old")
-              .select("_old", "new_id"), "_old")
-        .withColumn("doc_id", F.col("new_id") + F.lit(int(base)))
-        .select("term", "doc_id", "dl", "tf", "pos", "flags")
-    )
-    # MATERIALIZE the delta before applying: both plans anti-join against
-    # the live docmeta, so once apply_delta appends to it a lazy
-    # re-evaluation would see its own rows as already indexed and read
-    # empty.  The stage tables double as the checkpoint (crash-resume
-    # symmetry with run_append's staged docs table) and are reclaimed
-    # after the apply commits.
-    stage_meta, stage_posts = f"docmeta_delta_{label}", f"postings_delta_{label}"
-    if not cat.exists(stage_meta):
-        cat.write(stage_meta, delta_meta)
-    if not cat.exists(stage_posts):
-        cat.write(stage_posts, delta_posts)
-    apply_delta(cat.spark, cat, cat.read(stage_meta), cat.read(stage_posts),
-                label=label, compaction=compaction)
-    cat.set_prop(wm_key, max_b)
-    cat.drop(stage_meta)
-    cat.drop(stage_posts)
+    pipeline._append_docs(cat, new.drop("batch_id"), label,
+                          compaction=compaction)
+    cat.set_prop(wm_key, int(max_b))
     return label
 
 

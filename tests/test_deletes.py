@@ -137,6 +137,41 @@ def test_readd_deleted_url_via_append(spark, tmp_path):
     assert len(live) == 2 and len(live - tomb_ids) == 1
 
 
+def test_compact_deletes_resumes_after_crash(spark, tmp_path, monkeypatch):
+    """A compaction that crashes after swapping in the re-stamped docmeta
+    and partials must, when re-run, finish the rebuild without
+    re-stamping the survivors against the old victim ids."""
+    from search_engine_spark.operators import merge
+
+    batch = _batch(20)
+    victims = [batch[4][0], batch[13][0]]
+    wh = str(tmp_path / "wh")
+    layout = {"num_shards": 8, "salt_buckets": 4, "merge_factor": 2}
+    cat = run_build(spark, _mk_pages(spark, batch), wh, **layout)
+    width = int(cat.get_prop("p6a_bucket_width"))
+    run_delete(spark, _urls_df(spark, victims), wh)
+
+    real = merge.pack_and_merge
+
+    def crash(*args, **kwargs):
+        monkeypatch.setattr(merge, "pack_and_merge", real)
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(merge, "pack_and_merge", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_deletes(spark, wh)
+    compact_deletes(spark, wh)
+
+    scratch = run_build(
+        spark, _mk_pages(spark, [b for b in batch if b[0] not in victims]),
+        str(tmp_path / "wh_scratch"), bucket_width=width, **layout,
+    )
+    assert not cat.exists("tombstones")
+    assert _packed_fingerprint(cat) == _packed_fingerprint(scratch)
+    meta = sorted(tuple(r) for r in cat.read("docmeta").collect())
+    assert meta == sorted(tuple(r) for r in scratch.read("docmeta").collect())
+
+
 def test_compact_deletes_is_bit_identical_to_scratch(deleted_wh, spark):
     """Compaction re-stamps survivor ids densely (url order preserved),
     so the compacted warehouse must be BIT-identical to the from-scratch

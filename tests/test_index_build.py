@@ -97,15 +97,19 @@ def test_lineage_written(catalog):
         assert r["total_rows"] == sum(p["rows"] for p in r["partitions"])
 
 
-def test_doc_id_stamp_scales_to_1000_partitions(spark):
+def test_doc_id_stamp_scales_to_1000_partitions(spark, tmp_path):
     """The pid→offset lookup is a broadcast join, so a build with 10³
     shuffle partitions (the 100-TB shape) must stamp dense url-rank ids
-    without a giant literal expression."""
+    without a giant literal expression — through the pipeline's own
+    passes: sorted_dedup → write → footer offsets → stamp."""
     from search_engine_spark.operators import docids
 
     rows = [(f"u{i:05d}", i % 7, f"txt{i}") for i in range(3000)]
     docs = spark.createDataFrame(rows, "url string, warc_ts long, text string")
-    out = docids.assign_doc_ids(docs, num_partitions=1000)
+    d = str(tmp_path / "sorted")
+    docids.sorted_dedup(docs, num_partitions=1000).write.parquet(d)
+    offsets = docids.partition_offsets_from_footers(d)
+    out = docids.stamp_doc_ids(spark.read.parquet(d), offsets)
     got = sorted((r["doc_id"], r["url"]) for r in out.collect())
     assert [d for d, _ in got] == list(range(3000))  # dense 0..n-1
     urls = [u for _, u in got]

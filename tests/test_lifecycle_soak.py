@@ -144,12 +144,19 @@ def test_lifecycle_soak(spark, tmp_path):
         tables = _tables(cat)
         assert CORE <= tables, (step, CORE - tables)
         assert not tables & ASIDE, (step, tables & ASIDE)
+        # the stream writes its doc rows to docs_stream and nothing else:
+        # no stream-side docmeta/postings, no staged delta tables (listed
+        # by directory: per-batch overwrites leave no _SUCCESS marker)
+        dirs = {p.name for p in cat.warehouse.iterdir() if p.is_dir()}
+        assert not [t for t in dirs
+                    if (t.endswith("_stream") and t != "docs_stream")
+                    or "_delta_" in t], (step, dirs)
         # a lifecycle warehouse holds a logical postings table exactly
         # when a from-scratch build writes one
         assert ("postings" in tables) == logical, step
         _check_oracle(cat, live, step)
 
-    # 1. stream-ingest the base, consolidate (first call: full re-key)
+    # 1. stream-ingest the base, consolidate (first call: full build)
     src = tmp_path / "pages_in"
     src.mkdir()
     pq.write_table(pa.Table.from_pylist(base), src / "b0.parquet")

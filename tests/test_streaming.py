@@ -1,6 +1,7 @@
-"""Structured-streaming ingest: checkpointed availableNow micro-batches,
-incremental partial postings, exactly-once on restart (SURVEY-extras;
-replaces the reference's TCP/queue plumbing, Parser.cpp:255-332)."""
+"""Structured-streaming ingest: checkpointed availableNow micro-batches of
+extracted doc rows, exactly-once on restart, consolidated by the batch
+pipeline's own phases (SURVEY-extras; replaces the reference's TCP/queue
+plumbing, Parser.cpp:255-332)."""
 
 import shutil
 
@@ -10,6 +11,8 @@ from pyspark.sql import functions as F
 from search_engine_spark.sources.catalog import IndexCatalog
 from search_engine_spark.sources.pages import write_pages_parquet
 from search_engine_spark.streaming import ingest
+
+from tests.helpers import _mk_pages, _packed_fingerprint
 
 
 @pytest.fixture()
@@ -22,32 +25,35 @@ def stream_dirs(tmp_path):
     shutil.rmtree(tmp_path, ignore_errors=True)
 
 
+def _drop_file(df, dest):
+    """Write ``df`` as the single parquet FILE ``dest`` (the stream source
+    reads files; Spark writes directories — stage, move the part file)."""
+    stage = dest.with_name(dest.name + ".stage")
+    df.repartition(1).write.parquet(str(stage))
+    shutil.move(str(next(stage.glob("part-*.parquet"))), dest)
+    shutil.rmtree(stage)
+
+
 def test_incremental_index_drains_and_resumes(spark, stream_dirs):
     src, wh, ckpt = stream_dirs
     write_pages_parquet(src / "batch0.parquet", 40)
 
     ingest.incremental_index(spark, str(src), str(wh), str(ckpt))
     cat = IndexCatalog(spark, wh)
-    n0 = cat.read("postings_stream").count()
-    docs0 = cat.read("docmeta_stream").count()
-    assert n0 > 0 and docs0 > 0
+    docs0 = cat.read("docs_stream").count()
+    assert docs0 > 0
 
     # second drain with NO new files: checkpoint must prevent reprocessing
     ingest.incremental_index(spark, str(src), str(wh), str(ckpt))
-    assert cat.read("postings_stream").count() == n0
+    assert cat.read("docs_stream").count() == docs0
 
     # new file appears (disjoint corpus via a different seed) → only the
-    # increment is processed
+    # increment is processed, as a new batch partition
     write_pages_parquet(src / "batch1.parquet", 60, seed=43)
     ingest.incremental_index(spark, str(src), str(wh), str(ckpt))
-    docs1 = cat.read("docmeta_stream").count()
-    assert docs1 > docs0
-    # stable ids: stream doc_id = xxhash64(url, warc_ts), 1:1 with fetches
-    meta = cat.read("docmeta_stream")
-    assert (
-        meta.select("doc_id").distinct().count()
-        == meta.select("url", "warc_ts").distinct().count()
-    )
+    docs = cat.read("docs_stream")
+    assert docs.count() > docs0
+    assert docs.filter(F.col("batch_id") == 0).count() == docs0
 
 
 def test_retried_batch_does_not_duplicate(spark, stream_dirs):
@@ -58,9 +64,8 @@ def test_retried_batch_does_not_duplicate(spark, stream_dirs):
     write_pages_parquet(src / "b0.parquet", 40)
     ingest.incremental_index(spark, str(src), str(wh), str(ckpt))
     cat = IndexCatalog(spark, wh)
-    n0 = cat.read("postings_stream").count()
-    d0 = cat.read("docmeta_stream").count()
-    assert n0 > 0
+    d0 = cat.read("docs_stream").count()
+    assert d0 > 0
 
     # replay batch_id=0 against the already-written output, exactly what a
     # restarted query does when the commit marker never landed
@@ -68,16 +73,15 @@ def test_retried_batch_does_not_duplicate(spark, stream_dirs):
 
     docs = extract.extract_docs(spark.read.parquet(str(src / "b0.parquet")))
     ingest.write_stream_batch(cat, docs, batch_id=0)
-    assert cat.read("postings_stream").count() == n0
-    assert cat.read("docmeta_stream").count() == d0
-    # and the rows themselves are unique per (term, doc_id) / doc_id
-    posts = cat.read("postings_stream")
-    assert posts.count() == posts.select("term", "doc_id").distinct().count()
+    assert cat.read("docs_stream").count() == d0
+    # and the rows themselves are unique per fetch (url, warc_ts)
+    rows = cat.read("docs_stream")
+    assert rows.count() == rows.select("url", "warc_ts").distinct().count()
     # a batch with a NEW id still appends alongside
     write_pages_parquet(src / "more.parquet", 30, seed=43)
     more = extract.extract_docs(spark.read.parquet(str(src / "more.parquet")))
     ingest.write_stream_batch(cat, more, batch_id=1)
-    assert cat.read("postings_stream").count() > n0
+    assert cat.read("docs_stream").count() > d0
 
 
 def test_merge_resume_layout_mismatch_fails_loudly(spark, tmp_path):
@@ -100,41 +104,11 @@ def test_merge_resume_layout_mismatch_fails_loudly(spark, tmp_path):
     assert cat.exists("postings_packed")
 
 
-def test_stream_postings_match_batch_semantics(spark, stream_dirs):
-    """The streaming path must produce the same (term, tf) postings as the
-    batch build over the same pages (ids differ: hash vs dense rank)."""
-    src, wh, ckpt = stream_dirs
-    write_pages_parquet(src / "b.parquet", 40)
-    ingest.incremental_index(spark, str(src), str(wh), str(ckpt))
-    cat = IndexCatalog(spark, wh)
-
-    from search_engine_spark.operators import build as B, docids, extract
-
-    pages = spark.read.parquet(str(src / "b.parquet"))
-    docs = docids.assign_doc_ids(
-        extract.dedup_first_wins(extract.drop_overlong_titles(
-            extract.extract_docs(pages)))
-    )
-    batch = (
-        B.build_postings(docs).groupBy("term")
-        .agg(F.sum("tf").alias("cf_b"), F.count("*").alias("df_b"))
-    )
-    stream = (
-        cat.read("postings_stream").groupBy("term")
-        .agg(F.sum("tf").alias("cf_s"), F.count("*").alias("df_s"))
-    )
-    diff = batch.join(stream, "term", "full_outer").filter(
-        F.col("cf_b").isNull() | F.col("cf_s").isNull()
-        | (F.col("cf_b") != F.col("cf_s")) | (F.col("df_b") != F.col("df_s"))
-    )
-    assert diff.count() == 0
-
-
 def test_consolidated_stream_equals_batch_build(spark, tmp_path):
     """Stream pages in two micro-batch drains, consolidate, query — the
-    result must be IDENTICAL (ids and scores) to a batch build over the
-    same corpus: the consolidation re-keys to the batch pipeline's dense
-    url-rank id space and reuses the same pack+merge."""
+    warehouse must be IDENTICAL (packed bytes, docmeta, ids and scores) to
+    a batch build over the same corpus: the consolidation runs the batch
+    build's own dedup, id, postings and merge phases."""
     from search_engine_spark.operators.pipeline import run_build
     from search_engine_spark.plans.wand import PackedQueryEngine
     from search_engine_spark.sources.pages import write_pages_parquet
@@ -159,6 +133,9 @@ def test_consolidated_stream_equals_batch_build(spark, tmp_path):
     bcat = run_build(spark, both, str(bwh), num_shards=8, salt_buckets=4,
                      merge_factor=2)
 
+    assert _packed_fingerprint(scat) == _packed_fingerprint(bcat)
+    meta = sorted(tuple(r) for r in scat.read("docmeta").collect())
+    assert meta == sorted(tuple(r) for r in bcat.read("docmeta").collect())
     seng = PackedQueryEngine.from_catalog(scat)
     beng = PackedQueryEngine.from_catalog(bcat)
     for q in ("search", "search engine", "w1 | w2", '"search engine"'):
@@ -439,24 +416,11 @@ def test_incremental_consolidation_equals_batch_build(spark, tmp_path):
     queries IDENTICALLY (ids and scores) to a batch build of the same
     corpus.  Delta urls sort after the base's (zzz > aaa), the same
     bit-identity precondition run_append documents."""
-    import datetime as dt
-
-    from search_engine_spark import schemas
     from search_engine_spark.operators.pipeline import run_build
     from search_engine_spark.plans.wand import PackedQueryEngine
     from search_engine_spark.streaming.ingest import (
         consolidate_stream_incremental, incremental_index,
     )
-
-    def mk_pages(specs):
-        rows = []
-        for url, words in specs:
-            h = sum(url.encode())
-            html = (f"<html><head><title>alpha t{h % 5}</title></head>"
-                    f"<body>{words}</body></html>")
-            rows.append((url, dt.datetime(2026, 1, 1) + dt.timedelta(seconds=h),
-                         html.encode(), "", "en"))
-        return spark.createDataFrame(rows, schemas.PAGES)
 
     words = lambda i: " ".join(  # noqa: E731
         ["common engine"] + [f"word{j}" for j in (i % 7, i % 11, i % 13)]
@@ -464,25 +428,14 @@ def test_incremental_consolidation_equals_batch_build(spark, tmp_path):
     batch1 = [(f"http://aaa{i:03d}.com/p", words(i)) for i in range(58)]
     batch2 = [(f"http://zzz{i:03d}.com/p", words(100 + i)) for i in range(30)]
 
-    def drop_file(df, dest):
-        # the stream source reads single parquet FILES; Spark writes
-        # directories — stage to a tmp dir and move the lone part file in
-        import shutil
-
-        stage = tmp_path / (dest.name + ".stage")
-        df.repartition(1).write.parquet(str(stage))
-        part = next(stage.glob("part-*.parquet"))
-        shutil.move(str(part), dest)
-        shutil.rmtree(stage)
-
     src = tmp_path / "pages_in"
     src.mkdir()
     swh, ckpt = tmp_path / "wh_stream", tmp_path / "ck"
-    drop_file(mk_pages(batch1), src / "b0.parquet")
+    _drop_file(_mk_pages(spark, batch1), src / "b0.parquet")
     incremental_index(spark, str(src), str(swh), str(ckpt))
     scat = IndexCatalog(spark, swh)
 
-    # first consolidation: the full re-key path, watermark recorded
+    # first consolidation: the full build path, watermark recorded
     assert consolidate_stream_incremental(
         scat, num_shards=8, salt_buckets=4, merge_factor=2) == "full"
     wm0 = int(scat.get_prop("stream_consolidated_through"))
@@ -491,7 +444,7 @@ def test_incremental_consolidation_equals_batch_build(spark, tmp_path):
 
     # second drain brings a new micro-batch; consolidate INCREMENTALLY
     # with the tiered metadata-only commit
-    drop_file(mk_pages(batch2), src / "b1.parquet")
+    _drop_file(_mk_pages(spark, batch2), src / "b1.parquet")
     incremental_index(spark, str(src), str(swh), str(ckpt))
     base_files = {
         p: p.stat().st_mtime
@@ -509,7 +462,7 @@ def test_incremental_consolidation_equals_batch_build(spark, tmp_path):
     # batch build of the SAME corpus answers identically
     bwh = tmp_path / "wh_batch"
     width = int(scat.get_prop("p6a_bucket_width"))
-    bcat = run_build(spark, mk_pages(batch1 + batch2), str(bwh),
+    bcat = run_build(spark, _mk_pages(spark, batch1 + batch2), str(bwh),
                      num_shards=8, salt_buckets=4, merge_factor=2,
                      bucket_width=width)
     seng = PackedQueryEngine.from_catalog(scat)
@@ -521,3 +474,49 @@ def test_incremental_consolidation_equals_batch_build(spark, tmp_path):
         want = [(r["doc_id"], r["url"], round(r["score"], 9))
                 for r in beng.search(q, k=10).collect()]
         assert got == want, q
+
+
+def test_recrawl_after_delete_is_reindexed(spark, tmp_path):
+    """A url deleted and then recrawled is indexed again by incremental
+    stream consolidation, as ``run_append`` indexes it
+    (test_deletes.py::test_readd_deleted_url_via_append): the first-wins
+    reference set is the ALIVE docmeta, the recrawl gets a fresh doc id,
+    and queries equal the oracle over the live pages."""
+    from search_engine_spark.operators.pipeline import run_delete
+    from search_engine_spark.oracle.bm25_oracle import OracleIndex
+    from search_engine_spark.plans.wand import PackedQueryEngine
+    from search_engine_spark.streaming.ingest import (
+        consolidate_stream_incremental, incremental_index,
+    )
+
+    base = [(f"http://a{i:03d}.com/p", f"common engine word{i % 5}")
+            for i in range(20)]
+    victim = base[3][0]
+    recrawl = [(victim, "common zebra")]
+
+    src = tmp_path / "pages_in"
+    src.mkdir()
+    swh, ckpt = tmp_path / "wh_stream", tmp_path / "ck"
+    _drop_file(_mk_pages(spark, base), src / "b0.parquet")
+    incremental_index(spark, str(src), str(swh), str(ckpt))
+    cat = IndexCatalog(spark, swh)
+    assert consolidate_stream_incremental(
+        cat, num_shards=4, salt_buckets=4, merge_factor=2) == "full"
+    run_delete(spark, spark.createDataFrame([(victim,)], "url string"),
+               str(swh))
+    _drop_file(_mk_pages(spark, recrawl), src / "b1.parquet")
+    incremental_index(spark, str(src), str(swh), str(ckpt))
+    assert consolidate_stream_incremental(cat).startswith("stream_b")
+
+    eng = PackedQueryEngine.from_catalog(cat)
+    got = eng.search("zebra", k=5).collect()
+    assert [(r["doc_id"], r["url"]) for r in got] == [(len(base), victim)]
+    live = [r.asDict() for r in _mk_pages(
+        spark, [b for b in base if b[0] != victim] + recrawl).collect()]
+    oracle = OracleIndex(live)
+    for q in ("zebra", "common", "common engine"):
+        got = [(r["url"], r["score"]) for r in eng.search(q, k=25).collect()]
+        want = [(u, s) for _d, s, u, _t in oracle.topk(q, k=25)]
+        assert [u for u, _ in got] == [u for u, _ in want], q
+        assert [s for _, s in got] == pytest.approx(
+            [s for _, s in want], rel=1e-9, abs=1e-12), q
