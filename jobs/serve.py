@@ -165,6 +165,10 @@ def make_handler(engine, n_docs: int):
                 return
             try:
                 k = max(1, min(100, int(qs.get("k", ["10"])[0])))
+            except ValueError:
+                self._send(400, {"error": "k must be an integer"})
+                return
+            try:
                 synonyms = qs.get("synonyms", ["0"])[0] in ("1", "true")
                 mode = qs.get("mode", ["bm25"])[0]
                 kwargs = {}

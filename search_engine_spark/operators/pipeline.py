@@ -83,13 +83,21 @@ _BUILD_TABLES = ("docs_raw", "docs_sorted", "docs", "docmeta",
                  "postings_packed", "postings_packed_next", "tombstones",
                  "df_patch_deletes", "index_stats_next", "docmeta_next",
                  "postings_partial_next")
+# name prefixes of the per-label tables appends write: the stages
+# docs_raw_<label>, docs_sorted_<label> and docs_<label>, the tiered tail
+# and df patch.  docs_stream (the stream sink's doc rows) is not one.
+_LABEL_PREFIXES = ("docs_", "postings_packed_tail_", "postings_df_patch_")
 
 
 def _drop_build(cat: IndexCatalog) -> None:
-    """Drop every table a build writes, and the properties describing
-    them (layout params, append idempotence flags) — stale ones must not
-    outlive a rebuild."""
-    for t in _BUILD_TABLES:
+    """Drop every table a build or an append writes, and the properties
+    describing them (layout params, append idempotence flags) — stale
+    ones must not outlive a rebuild: once the flags are cleared, a
+    leftover stage of an append label would be applied again."""
+    labelled = [p.name for p in cat.warehouse.iterdir()
+                if p.name.startswith(_LABEL_PREFIXES)
+                and p.name != "docs_stream"]
+    for t in (*_BUILD_TABLES, *labelled):
         cat.drop(t)
     cat.clear_props()
 
@@ -324,6 +332,9 @@ def _append_docs(cat: IndexCatalog, raw: DataFrame, label: str,
     delta = cat.read(docs_t)
     apply_delta(spark, cat, B.build_docmeta(delta), B.build_postings(delta),
                 label=label, **apply_kw)
+    # apply_delta commits append_<label>_applied last: the stages are spent
+    for t in (raw_t, sorted_t, docs_t):
+        cat.drop(t)
 
 
 def apply_delta(
@@ -454,21 +465,14 @@ def apply_delta(
             cat.read("postings_partial"), merge_factor, avgdl
         )
         # write aside + snapshot-swap: a crash mid-write leaves the live
-        # table untouched; after the swap the manifest's referenced
-        # generations (if any) are dead files and are reclaimed
+        # table untouched; the swap retires the manifest (if any) and
+        # reclaims the generations it referenced
         cat.write(
             "postings_packed_next",
             merged.repartition(num_shards, "shard"),
             partition_by=["shard"],
         )
-        cat.drop_manifest("postings_packed")
         cat.swap("postings_packed_next", "postings_packed")
-        if manifest is not None:
-            for g in manifest["generations"]:
-                if g["dir"] != "postings_packed":
-                    cat.drop(g["dir"])
-                for t in g.get("patches") or []:
-                    cat.drop(t)
         log_table = "postings_packed"
     cat.set_prop("packed_avgdl", repr(avgdl))
     cat.log_phase(
@@ -720,8 +724,8 @@ def compact_deletes(spark: SparkSession, warehouse: str) -> IndexCatalog:
 
     # survivor-only rebuild of everything derived: stats, doclens, packed
     # (pack_and_merge recomputes stats first because the table was
-    # dropped; the layout props keep the original grid)
-    cat.drop_manifest("postings_packed")
+    # dropped, its manifest generations with it; the layout props keep
+    # the original grid)
     for t in ("index_stats", "doclens", "postings_packed"):
         cat.drop(t)
     merge.pack_and_merge(

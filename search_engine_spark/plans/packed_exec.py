@@ -3,8 +3,9 @@ NEAR — every query shape the engine supports — served from the
 varbyte/block-header physical layout with shard pruning, plus the
 heuristic parity modes' match sets.
 
-How it works (batch_general_candidates; ``PackedQueryEngine.search`` runs
-a single non-flat query as a batch of one):
+How it works (batch_general_candidates — the general-kernel pass of the
+engine's one query planner, ``PackedQueryEngine._candidates``, which
+``search`` runs as a batch of one):
 
 * Each AST is compiled to a SLOT SPEC.  Maximal phrase-free subtrees
   become *word slots*: the kernel evaluates them to a final float per doc
@@ -14,8 +15,8 @@ a single non-flat query as a batch of one):
   leaves become *ptf slot pairs* (body, '@'-title): their per-doc phrase
   term frequency is bucket-computable, but their BM25 idf needs the GLOBAL
   phrase df — which no single bucket knows.
-* The kernel (mapInPandas over the engine's bucket rows — one shuffle on
-  ``bucket``, shared with the flat kernels, see plans/wand.py
+* The kernel (mapInPandas over the planner's bucket rows — one shuffle
+  on ``bucket``, shared with the flat kernel, see plans/wand.py
   _bucket_rows) emits per (query, doc) matching the whole tree the summed
   word-slot score plus sparse (phrase slot, ptf) pairs.
 * When phrase slots exist, a count kernel over the same bucket rows (the
@@ -48,7 +49,7 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.plans import bm25
 from search_engine_spark.plans.query_ast import (
-    And, Expr, Not, Or, OrSyn, Phrase, Word, collect_keys,
+    And, Expr, Not, Or, OrSyn, Phrase, Word,
 )
 from search_engine_spark.plans.wand import (
     _bucket_allow, _bucket_tombs, _decode_rows, _weights,
@@ -137,11 +138,11 @@ class _BucketEval:
 
     def __init__(self, decoded: dict[str, dict], start: int, width: int,
                  dls: np.ndarray, n_docs: int, avgdl: float,
-                 k1: float, b: float, tombs: np.ndarray | None = None,
+                 tombs: np.ndarray | None = None,
                  allow: np.ndarray | None = None):
         self.d = decoded
         self.start, self.width, self.dls = start, width, dls
-        self.n_docs, self.avgdl, self.k1, self.b = n_docs, avgdl, k1, b
+        self.n_docs, self.avgdl = n_docs, avgdl
         self.tombs = tombs  # deleted doc ids; excluded from complements
         self.allow = allow  # site-scoped allow-list; bounds complements
         self._score_cache: dict[str, tuple] = {}
@@ -156,7 +157,7 @@ class _BucketEval:
                 c = (np.empty(0, np.int64), np.empty(0))
             else:
                 w = _weights(t["tfs"], self.dls[t["ids"] - self.start],
-                             self.avgdl, self.k1, self.b)
+                             self.avgdl, bm25.K1, bm25.B)
                 c = (t["ids"], bm25.idf(t["df"], self.n_docs) * w)
             self._score_cache[key] = c
         return c
@@ -391,11 +392,11 @@ class _BucketEval:
 # ---------------------------------------------------------------------------
 
 def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
-                             k: int | None = 10,
-                             rows: DataFrame | None = None) -> DataFrame:
+                             k: int | None, rows: DataFrame) -> DataFrame:
     """(query, doc_id, score) candidate rows for MANY arbitrary ASTs —
     phrases, NOT, synonyms, mixed — in ONE kernel pass over the packed
-    index, the general-AST twin of search_batch's flat dense kernel.
+    index, the general-AST twin of the planner's flat kernel (plans/wand.py
+    _flat_kernel).
 
     Per bucket the postings are decoded ONCE and one shared _BucketEval
     (term-score + phrase-match caches) serves every query's slot spec, so
@@ -414,23 +415,17 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
     bucket's complement; ``k=None`` keeps the whole match set (the parity
     modes re-rank it).
 
-    ``engine`` is a plans.wand.PackedQueryEngine; ``rows`` are its bucket
-    rows (_bucket_rows) when the caller shares them with another kernel —
-    they must hold every key of ``items``, with ``pos`` if a tree has a
-    phrase and every bucket if a tree matches zero-posting docs.  Both the
-    main kernel and the phrase-df subplan read the one shuffle (the second
-    read reuses the exchange).
+    ``engine`` is a plans.wand.PackedQueryEngine; ``rows`` are the bucket
+    rows (_bucket_rows) its planner reads for the whole batch — they hold
+    every key of ``items``, with ``pos`` if a tree has a phrase and every
+    bucket if a tree matches zero-posting docs.  Both the main kernel and
+    the phrase-df subplan read the one shuffle (the second read reuses the
+    exchange).
 
     Rows still need the caller's per-query global rank window — this
-    returns candidates, exactly like the flat kernel path."""
+    returns candidates, exactly like the flat kernel."""
     specs = [Spec(ast) for _, ast in items]
     need_pos = any(has_phrase(ast) for _, ast in items)
-    if rows is None:
-        rows = engine._bucket_rows(
-            sorted({key for _, ast in items for key in collect_keys(ast)}),
-            ["term", "df", "doc_ids", "tfs"] + (["pos"] if need_pos else []),
-            outer=any(sp.zero_match for sp in specs),
-        )
 
     # global df-slot table: one entry per distinct (stems, decorated)
     # phrase variant across the WHOLE batch; per-query local slot j maps to
@@ -446,7 +441,6 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
     np_l = [len(sp.pslots) for sp in specs]
     zm_l = [sp.zero_match for sp in specs]
     n_docs, avgdl = engine.n_docs, engine.avgdl
-    k1, b = engine.k1, engine.b
     kk = k
     nq = len(items)
 
@@ -460,7 +454,7 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                 allow = _bucket_allow(brow)
                 decoded = _decode_rows(brow.trows, need_pos, tombs, allow)
                 ev = _BucketEval(decoded, start, dls.size, dls, n_docs,
-                                 avgdl, k1, b, tombs, allow)
+                                 avgdl, tombs, allow)
                 for qi in range(nq):
                     if not decoded and not zm_l[qi]:
                         continue
@@ -526,7 +520,7 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                         [r for r in brow.trows if r["term"] in pkeys],
                         True, tombs)
                     ev = _BucketEval(decoded, int(brow.start), dls.size, dls,
-                                     n_docs, avgdl, k1, b, tombs)
+                                     n_docs, avgdl, tombs)
                     out.append([int(ev.phrase_match(stems, deco, w)[0].size)
                                 for stems, deco, w in gs_list])
                 yield pd.DataFrame({"c": pd.Series(out, dtype="object")})
@@ -553,7 +547,7 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                 lambda i, t: bm25.idf_col(
                     F.element_at("_pdfs", i + F.lit(1)), n_docs
                 ) * bm25.weight_col(
-                    t.cast("double"), F.col("dl").cast("double"), avgdl, k1, b
+                    t.cast("double"), F.col("dl").cast("double"), avgdl
                 ),
             ),
             F.lit(0.0), lambda acc, x: acc + x,
@@ -589,7 +583,7 @@ def dynamic_scores(engine, ast: Expr, meta: DataFrame) -> DataFrame:
         ["term", "df", "doc_ids", "tfs", "pos", "flags"],
         outer=zero_match(ast),
     )
-    n_docs, avgdl, k1, b = engine.n_docs, engine.avgdl, engine.k1, engine.b
+    n_docs, avgdl = engine.n_docs, engine.avgdl
 
     def kernel(batches):
         for pdf in batches:
@@ -600,7 +594,7 @@ def dynamic_scores(engine, ast: Expr, meta: DataFrame) -> DataFrame:
                 decoded = _decode_rows(brow.trows, True, tombs,
                                        need_flags=True)
                 ev = _BucketEval(decoded, int(brow.start), dls.size, dls,
-                                 n_docs, avgdl, k1, b, tombs)
+                                 n_docs, avgdl, tombs)
                 cand = ev.member(ast)
                 for term, e in decoded.items():
                     at = np.searchsorted(e["ids"], cand)

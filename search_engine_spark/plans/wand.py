@@ -4,21 +4,33 @@ The packed layout (operators/merge.py) buckets every term's posting list by
 doc-id range, so query-time top-k distributes the way the reference's
 per-chunk ISR trees + k-way merge did (csolver.cpp:135-152): each bucket is
 an independent, exact top-k; the global merge is Spark's
-TakeOrderedAndProject.
+TakeOrderedAndProject (``search``) or a per-query rank window
+(``search_batch``).
 
-Every kernel — flat WAND here, the dense batch kernel, the general kernel
-of plans/packed_exec.py — reads the same bucket-row plan (_bucket_rows):
-the query keys' shard-pruned packed rows, the doclens rows and any
-tombstone / site-allow rows reach the kernel through ONE shuffle on
-``bucket``, and each kernel decodes and masks them through _decode_rows.
-A served query then costs a fixed handful of Spark jobs: the
-shuffle's map stage and the kernel + top-k stage (AQE runs each as a job),
-one ``doc_id IN (k ids)`` docmeta lookup for url and title (_with_meta),
-plus one range-pruned dictionary job for prefix queries (_prefix_table)
-and a phrase-df aggregate for phrase queries.  The answer comes back as a
-driver-local relation.
+One planner (PackedQueryEngine._candidates) answers every query, and
+``search`` is a batch of one: the batch's prefix leaves are expanded by
+one range-pruned dictionary job (_prefix_table), the trees are routed,
+and ONE bucket-row plan (_bucket_rows) carries every query key's
+shard-pruned packed rows, the doclens rows and any tombstone / site-allow
+rows to the kernels through one shuffle on ``bucket``.  Two kernels read
+those rows, and each decodes and masks them through _decode_rows:
 
-Within a bucket the kernel is a *vectorized*
+* flat AND/OR word trees run on the flat kernel (_flat_kernel) — the
+  block-max WAND kernels below (topk_or/topk_and) for a lone flat query,
+  the dense kernels (topk_or_dense/topk_and_dense) over per-bucket shared
+  weights for a batch of them; their scores are bit-identical;
+* every other tree — phrases (positions decoded from the packed ``pos``
+  column), NOT (bucket-local complements), synonym trees (weighted OR
+  folds), NEAR — runs on the packed GENERAL kernel (plans/packed_exec.py),
+  exhaustive within the bucket.
+
+A served query then costs a fixed handful of Spark jobs: the shuffle's map
+stage and the kernel + top-k stage (AQE runs each as a job), one
+``doc_id IN (k ids)`` docmeta lookup for url and title (_with_meta), plus
+the dictionary job for prefix queries and a phrase-df aggregate for phrase
+queries.  The answer comes back as a driver-local relation.
+
+Within a bucket the WAND kernel is a *vectorized*
 block-max evaluation — instead of the textbook document-at-a-time pointer
 walk (which would be per-row Python), doc space is cut at the union of the
 terms' 128-doc block boundaries, each interval gets the exact block-max
@@ -34,19 +46,16 @@ df-ascending term order, the Spark analogue of the ranker's
 min-tf-term-drives heuristic (Ranker.cpp:79-92) — then exact scoring of
 the surviving candidates.
 
-Anything outside flat AND/OR word queries — phrases (positions decoded
-from the packed ``pos`` column), NOT (bucket-local complements), synonym
-trees (weighted OR folds) — runs on the packed GENERAL kernel
-(plans/packed_exec.py): same bucket rows, exhaustive within the bucket;
-``search`` runs such a tree as a batch of one.  The heuristic parity
-modes (static/dynamic) rank the general kernel's exhaustive match set
-(_parity_topk).
+The heuristic parity modes (static/dynamic) rank the general kernel's
+exhaustive match set (_parity_topk): the static mode through the planner
+with ``k=None``, the dynamic mode through packed_exec.dynamic_scores.
 """
 
 from __future__ import annotations
 
 import functools
 import operator
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -198,7 +207,7 @@ def _topk_select(ids: np.ndarray, scores: np.ndarray, k: int):
 
 
 def topk_or(terms: list[dict], dls: np.ndarray, start: int, k: int,
-            avgdl: float, k1: float = bm25.K1, b: float = bm25.B):
+            avgdl: float):
     """Disjunctive block-max top-k for one bucket.
 
     terms: [{ids, tfs, block_last, block_maxw, idf}] — processed in
@@ -232,7 +241,8 @@ def topk_or(terms: list[dict], dls: np.ndarray, start: int, k: int,
             if lo == hi:
                 continue
             ids = t["ids"][lo:hi]
-            w = _weights(t["tfs"][lo:hi], dls[ids - start], avgdl, k1, b)
+            w = _weights(t["tfs"][lo:hi], dls[ids - start], avgdl,
+                         bm25.K1, bm25.B)
             cand_ids.append(ids)
             cand_sc.append(t["idf"] * w)
         if not cand_ids:
@@ -251,8 +261,7 @@ def topk_or(terms: list[dict], dls: np.ndarray, start: int, k: int,
 
 
 def topk_and(stems: list[str], by_key: dict[str, dict], dls: np.ndarray,
-             start: int, k: int, avgdl: float,
-             k1: float = bm25.K1, b: float = bm25.B):
+             start: int, k: int, avgdl: float):
     """Conjunctive top-k: rarest-first intersection of per-stem (body ∪
     title) match sets, then exact scoring of survivors."""
     stem_sets = []
@@ -280,7 +289,8 @@ def topk_and(stems: list[str], by_key: dict[str, dict], dls: np.ndarray,
             continue
         tf = t["tfs"][pos_c[present]]
         ids = cand[present]
-        scores[present] += t["idf"] * _weights(tf, dls[ids - start], avgdl, k1, b)
+        scores[present] += t["idf"] * _weights(tf, dls[ids - start], avgdl,
+                                               bm25.K1, bm25.B)
     return _topk_select(cand, scores, k)
 
 
@@ -371,7 +381,7 @@ def route(ast: Expr | None) -> tuple[str, list[str]] | None:
 
 # packed-row columns each kernel reads
 _SCORE_COLS = ["term", "df", "doc_ids", "tfs"]
-_WAND_COLS = _SCORE_COLS + ["block_last", "block_maxw"]
+_BLOCK_COLS = ["block_last", "block_maxw"]
 # arrow types of search()'s and search_batch()'s result columns
 _RESULT_FIELDS = {"doc_id": "int64", "score": "double", "url": "string",
                   "title": "string"}
@@ -407,6 +417,81 @@ def _successor(prefix: str) -> str | None:
     return stem[:-1] + chr(nxt)
 
 
+def _flat_kernel(plans: list[tuple[str, str, list[str]]], k: int,
+                 n_docs: int, avgdl: float):
+    """The mapInPandas kernel of the flat queries ``plans`` — (query,
+    'and'|'or', stems) — over bucket rows: per bucket it decodes the
+    plans' keys once and emits every query's bucket-exact top-k as
+    (query, doc_id, score) rows.
+
+    A lone flat query runs the block-max WAND kernels (topk_or/topk_and
+    over the rows' block headers); a batch scores every query densely
+    over idf-free weights computed once per (term, bucket) and shared by
+    the whole batch (topk_or_dense/topk_and_dense).  Their scores are
+    bit-identical, so the batch's shape picks the kernel.  No
+    driver-side df collect: every packed row carries its term's GLOBAL
+    df, so idf is computed here, and a bucket where an AND-stem is absent
+    emits nothing — exactly the conjunctive semantics (all of a doc's
+    postings share its bucket)."""
+    wand = len(plans) == 1
+    keys = {key for _, _, stems in plans for s in stems
+            for key in (s, "@" + s)}
+    # a stem repeated in a query ('apple | apples' → appl twice) scores
+    # multiply, matching the general kernel's per-leaf evaluation — the
+    # multiplicity folds into the per-key idf scale
+    shapes = [(q, mode, list(dict.fromkeys(stems)), Counter(stems))
+              for q, mode, stems in plans]
+
+    def kernel(batches):
+        for pdf in batches:
+            out_q, out_d, out_s = [], [], []
+            for brow in pdf.itertuples(index=False):
+                start = int(brow.start)
+                dls = np.asarray(brow.dls, dtype=np.float64)
+                # keys only the general kernel reads stay packed
+                trows = [r for r in brow.trows if r["term"] in keys]
+                decoded = _decode_rows(trows, False, _bucket_tombs(brow),
+                                       _bucket_allow(brow))
+                for r in trows:
+                    e = decoded[r["term"]]
+                    e["base_idf"] = bm25.idf(e["df"], n_docs)
+                    if wand:
+                        e["block_last"] = np.asarray(r["block_last"],
+                                                     dtype=np.int64)
+                        e["block_maxw"] = np.asarray(r["block_maxw"],
+                                                     dtype=np.float64)
+                    else:
+                        e["w"] = _weights(e["tfs"], dls[e["ids"] - start],
+                                          avgdl, bm25.K1, bm25.B)
+                for q, mode, stems, mult in shapes:
+                    by_key = {
+                        key: {**decoded[key],
+                              "idf": decoded[key]["base_idf"] * mult[s]}
+                        for s in stems for key in (s, "@" + s)
+                        if key in decoded
+                    }
+                    if mode == "and":
+                        ids, scores = (
+                            topk_and(stems, by_key, dls, start, k, avgdl)
+                            if wand else
+                            topk_and_dense(stems, by_key, start, dls.size, k))
+                    else:
+                        terms = [by_key[key] for key in sorted(by_key)]
+                        ids, scores = (
+                            topk_or(terms, dls, start, k, avgdl) if wand
+                            else topk_or_dense(terms, start, dls.size, k))
+                    out_q.extend([q] * ids.size)
+                    out_d.extend(ids.tolist())
+                    out_s.extend(scores.tolist())
+            yield pd.DataFrame({
+                "query": pd.Series(out_q, dtype="object"),
+                "doc_id": pd.Series(out_d, dtype="int64"),
+                "score": pd.Series(out_s, dtype="float64"),
+            })
+
+    return kernel
+
+
 class PackedQueryEngine:
     """BM25 top-k, and the heuristic parity modes, over postings_packed."""
 
@@ -414,9 +499,7 @@ class PackedQueryEngine:
 
     def __init__(self, spark: SparkSession, packed: DataFrame, doclens: DataFrame,
                  docmeta: DataFrame, n_docs: int, avgdl: float, num_shards: int,
-                 k1: float = bm25.K1, b: float = bm25.B,
-                 mwidth: int | None = None,
-                 tombstones: DataFrame | None = None):
+                 mwidth: int, tombstones: DataFrame | None = None):
         self.spark = spark
         self.packed = packed
         self.doclens = doclens
@@ -424,8 +507,7 @@ class PackedQueryEngine:
         self.n_docs = int(n_docs)
         self.avgdl = float(avgdl)
         self.num_shards = int(num_shards)
-        self.k1, self.b = k1, b
-        self.mwidth = mwidth  # merged bucket width; enables site scoping
+        self.mwidth = mwidth  # the merged bucket width doclens is cut by
         # (bucket, tombs) / (bucket, allow) doc-id rows that reach the
         # kernels as per-bucket sorted arrays (_bucket_rows): deleted docs,
         # and on a site-scoped clone (_site_scoped) the docs the site allows
@@ -436,8 +518,9 @@ class PackedQueryEngine:
     def from_catalog(cls, cat) -> "PackedQueryEngine":
         stats = cat.read("index_stats").collect()[0]
         packed = cat.read("postings_packed")
-        mwidth = cat.get_prop("bucket_width")
-        mwidth = int(mwidth) if mwidth is not None else None
+        # the "bucket_width" prop IS the merged width build_doclens
+        # bucketed by (pack_and_merge persists it)
+        mwidth = int(cat.get_prop("bucket_width"))
         tombstones = None
         if cat.exists("tombstones"):
             # delete support (operators/pipeline.run_delete): postings of
@@ -461,8 +544,6 @@ class PackedQueryEngine:
                     )
                     .drop("_dfsub")
                 )
-            # the "bucket_width" prop IS the merged width build_doclens
-            # bucketed by (pack_and_merge persists it)
             tombstones = cls._bucketed(cat.read("tombstones"), mwidth,
                                        "tombs")
         return cls(
@@ -509,16 +590,14 @@ class PackedQueryEngine:
             functools.reduce(operator.or_, ranges)
         ).select("term", "df")
 
-    def _prefix_table(self, prefixes: list[str],
-                      max_expansions: int | None = None
-                      ) -> dict[str, list[str]]:
+    def _prefix_table(self, prefixes: list[str]) -> dict[str, list[str]]:
         """ONE range-pruned Spark job (_prefix_rows): for every prefix, the
-        top-``max_expansions`` matching dictionary terms by global df
+        top-MAX_PREFIX_EXPANSIONS matching dictionary terms by global df
         (term-asc tiebreak) — Lucene's MultiTermQuery rewrite cap, so a
         1-character prefix can never explode into a vocabulary-sized OR.
         The cut happens on the driver over the collected range rows: no
         join, window or shuffle."""
-        cap = max_expansions or self.MAX_PREFIX_EXPANSIONS
+        cap = self.MAX_PREFIX_EXPANSIONS
         scan = self._prefix_rows(prefixes)
         dfs: dict[str, dict[str, int]] = {}
         for r in scan.collect() if scan is not None else []:
@@ -532,17 +611,21 @@ class PackedQueryEngine:
             for p, seen in dfs.items()
         }
 
-    def _rewrite_prefixes(self, ast: Expr | None,
-                          max_expansions: int | None = None) -> Expr | None:
-        """Expand every Prefix leaf against the index dictionary; a no-op
-        (and no Spark job) when the tree has none."""
-        acc: set[str] = set()
-        _collect_prefixes(ast, acc)
-        if not acc:
-            return ast
-        return _substitute_prefixes(
-            ast, self._prefix_table(sorted(acc), max_expansions)
-        )
+    def _expand_prefixes(self, items: list[tuple[str, Expr]]
+                         ) -> list[tuple[str, Expr]]:
+        """``items`` — (query, tree) pairs — with every Prefix leaf
+        expanded against the index dictionary: ONE _prefix_table job over
+        all the items' prefixes, and no job when they have none.  A tree
+        the expansion leaves empty drops out (defined-empty result)."""
+        pref: set[str] = set()
+        for _, ast in items:
+            _collect_prefixes(ast, pref)
+        if not pref:
+            return items
+        table = self._prefix_table(sorted(pref))
+        return [(q, ast2) for q, ast in items
+                for ast2 in (_substitute_prefixes(ast, table),)
+                if ast2 is not None]
 
     def _bucket_rows(self, keys: list[str], cols: list[str],
                      outer: bool = False) -> DataFrame:
@@ -607,145 +690,82 @@ class PackedQueryEngine:
             return rows
         return rows.filter(F.size("allow") > 0)
 
+    def _candidates(self, items: list[tuple[str, Expr]],
+                    k: int | None) -> DataFrame | None:
+        """The query planner: (query, doc_id, score) candidate rows of the
+        compiled (query, tree) ``items`` — every bucket's exact top-k per
+        query, still to be ranked per query by the caller — or None when
+        no tree is left to evaluate.  ``search`` runs as a batch of one.
+
+        In order: the prefix expansion (_expand_prefixes, one job over
+        the whole batch), the route split, ONE bucket-row read
+        (_bucket_rows) over every item's keys, then one flat-kernel pass
+        (_flat_kernel: block-max WAND for a lone flat query, the dense
+        shared-weight kernels for more) and one general-kernel pass
+        (packed_exec.batch_general_candidates, with its one phrase-df
+        subplan) for every other tree.  Both kernels read the same bucket
+        rows, so the batch shuffles the packed rows once.  ``k=None``
+        sends every tree to the general kernel, uncut: the exhaustive
+        match set the static parity mode re-ranks."""
+        from search_engine_spark.plans import packed_exec
+
+        flat: list[tuple[str, str, list[str]]] = []  # (query, mode, stems)
+        general: list[tuple[str, Expr]] = []
+        for q, ast in self._expand_prefixes(items):
+            r = route(ast) if k is not None else None
+            if r is None:
+                general.append((q, ast))
+            else:
+                flat.append((q, *r))
+        if not flat and not general:
+            return None
+        flat_keys = {key for _, _, stems in flat for s in stems
+                     for key in (s, "@" + s)}
+        need_pos = any(packed_exec.has_phrase(a) for _, a in general)
+        rows = self._bucket_rows(
+            sorted(flat_keys.union(*(collect_keys(a) for _, a in general))),
+            _SCORE_COLS + (_BLOCK_COLS if len(flat) == 1 else [])
+            + (["pos"] if need_pos else []),
+            outer=any(packed_exec.zero_match(a) for _, a in general),
+        )
+        parts: list[DataFrame] = []
+        if flat:
+            parts.append(self._in_scope(rows).mapInPandas(
+                _flat_kernel(flat, k, self.n_docs, self.avgdl),
+                schema="query string, doc_id long, score double",
+            ))
+        if general:
+            parts.append(
+                packed_exec.batch_general_candidates(self, general, k, rows))
+        return functools.reduce(DataFrame.unionByName, parts)
+
     def search_batch(self, queries: list[str], k: int = 10,
                      synonyms: bool = False) -> DataFrame:
         """Evaluate MANY queries with O(1) Spark jobs → (query, doc_id,
         score, rank ≤ k).
 
         This is the throughput shape for offline/batch retrieval at
-        cluster scale: one bucket-row plan (_bucket_rows) over the union
-        of the queries' keys, one kernel task per group of doc buckets
-        evaluating every query against the buckets' decoded postings, then
-        a per-query windowed top-k.  Flat AND/OR queries share the dense
-        kernel, and ALL non-flat queries (phrases/NOT/synonyms) share ONE
-        general-kernel pass (packed_exec.batch_general_candidates — with
-        its one phrase-df subplan); both read the same bucket rows, so the
-        batch shuffles the packed rows once.  The batch is total, nothing
-        is silently dropped.
-        """
-        from search_engine_spark.plans import packed_exec
-
-        asts: list[tuple[str, Expr]] = []
-        for q in queries:
-            ast = compile_query(q, synonyms=synonyms)
-            if ast is None:
-                continue  # empty/stopword-only query: defined-empty result
-            asts.append((q, ast))
-        # prefix (trailing-wildcard) leaves: ONE shared dictionary-lookup
-        # job expands every prefix in the whole batch, keeping the O(1)
-        # jobs-per-batch contract
-        pref: set[str] = set()
-        for _, a in asts:
-            _collect_prefixes(a, pref)
-        if pref:
-            table = self._prefix_table(sorted(pref))
-            asts = [
-                (q, a2)
-                for q, a in asts
-                for a2 in (_substitute_prefixes(a, table),)
-                if a2 is not None
-            ]
-        plans: list[tuple[str, str, list[str]]] = []  # (query, mode, stems)
-        nonflat: list[tuple[str, Expr]] = []
-        for q, ast in asts:
-            r = route(ast)
-            if r is not None:
-                plans.append((q, r[0], r[1]))
-            else:
-                nonflat.append((q, ast))
-        if not plans and not nonflat:
-            return _local_frame(self.spark, _BATCH_FIELDS)
-
-        from collections import Counter
-
-        flat_keys = {
-            key for _, _, stems in plans for s in stems for key in (s, "@" + s)
-        }
-        parts: list[DataFrame] = []
-        need_pos = any(packed_exec.has_phrase(a) for _, a in nonflat)
-        rows = self._bucket_rows(
-            sorted(flat_keys.union(*(collect_keys(a) for _, a in nonflat))),
-            _SCORE_COLS + (["pos"] if need_pos else []),
-            outer=any(packed_exec.zero_match(a) for _, a in nonflat),
-        )
-
-        n_docs = self.n_docs
-        avgdl, k1, b, kk = self.avgdl, self.k1, self.b, k
-        plans_ = plans
-
-        def kernel(batches):
-            for pdf in batches:
-                out_q, out_d, out_s = [], [], []
-                for brow in pdf.itertuples(index=False):
-                    start = int(brow.start)
-                    dls = np.asarray(brow.dls, dtype=np.float64)
-                    width = dls.size
-                    # keys only the general kernel reads stay packed
-                    trows = [r for r in brow.trows if r["term"] in flat_keys]
-                    decoded: dict[str, dict] = {}
-                    for term, e in _decode_rows(trows, False,
-                                                _bucket_tombs(brow),
-                                                _bucket_allow(brow)).items():
-                        decoded[term] = {
-                            "ids": e["ids"],
-                            # idf-free weights computed ONCE per (term,
-                            # bucket) and SHARED by every query in the
-                            # batch — this amortization is what makes the
-                            # one-job batch path beat per-query WAND
-                            "w": _weights(e["tfs"], dls[e["ids"] - start],
-                                          avgdl, k1, b),
-                            # every packed row carries the term's GLOBAL df
-                            "base_idf": bm25.idf(e["df"], n_docs),
-                        }
-                    for q, mode, stems in plans_:
-                        mult = Counter(stems)
-                        uniq = list(dict.fromkeys(stems))
-                        by_key = {}
-                        for s in uniq:
-                            for key in (s, "@" + s):
-                                if key in decoded:
-                                    by_key[key] = {
-                                        **decoded[key],
-                                        "idf": decoded[key]["base_idf"] * mult[s],
-                                    }
-                        if mode == "and":
-                            if any(
-                                s not in by_key and ("@" + s) not in by_key
-                                for s in uniq
-                            ):
-                                continue
-                            ids, scores = topk_and_dense(uniq, by_key, start,
-                                                         width, kk)
-                        else:
-                            terms = [by_key[key] for key in sorted(by_key)]
-                            ids, scores = topk_or_dense(terms, start, width, kk)
-                        out_q.extend([q] * len(ids))
-                        out_d.extend(ids.tolist())
-                        out_s.extend(scores.tolist())
-                yield pd.DataFrame(
-                    {"query": out_q, "doc_id": out_d, "score": out_s}
-                )
-
+        cluster scale: the planner's (_candidates) one bucket-row plan
+        over the union of the queries' keys and one pass per kernel, then
+        a per-query windowed top-k.  The batch is total, nothing is
+        silently dropped; an empty or stopword-only query has a
+        defined-empty result.  A repeated query string is one query (its
+        candidates would otherwise rank twice under one key)."""
         from pyspark.sql import Window
 
-        if plans:
-            parts.append(self._in_scope(rows).mapInPandas(
-                kernel, schema="query string, doc_id long, score double"
-            ))
-        # non-flat queries: ONE shared general-kernel pass for every AST
-        # the packed path can serve (phrases/NOT/synonyms), over the same
-        # bucket rows (one exchange); unioned pre-rank so the whole batch
-        # ranks through one window
-        if nonflat:
-            parts.append(
-                packed_exec.batch_general_candidates(self, nonflat, k, rows)
-            )
-        candidates = functools.reduce(DataFrame.unionByName, parts)
+        cand = self._candidates(
+            [(q, ast) for q in dict.fromkeys(queries)
+             for ast in (compile_query(q, synonyms=synonyms),)
+             if ast is not None],
+            k,
+        )
+        if cand is None:
+            return _local_frame(self.spark, _BATCH_FIELDS)
         w = Window.partitionBy("query").orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
         )
         return (
-            candidates.withColumn("rank", F.row_number().over(w))
+            cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query", "doc_id", "score", "rank")
         )
@@ -788,11 +808,6 @@ class PackedQueryEngine:
         tombstones (a deleted doc stays dead inside a site filter)."""
         import copy
 
-        if self.mwidth is None:
-            raise ValueError(
-                "site-scoped search needs the bucket_width catalog "
-                "property (engine not built from_catalog?)"
-            )
         clone = copy.copy(self)
         clone.allow = self._bucketed(
             self.docmeta.filter(F.col("url").contains(site)), self.mwidth,
@@ -807,10 +822,11 @@ class PackedQueryEngine:
         """Top-k (doc_id, score, url, title), best first (score DESC,
         doc_id ASC).
 
-        The BM25 paths run their Spark jobs here and return a driver-local
-        relation, so collecting the result launches none.  Per query: an
-        optional prefix lookup (_prefix_table), the bucket-row shuffle and
-        the kernel's top-k, plus the phrase-df subplan when the tree has
+        The BM25 path is the planner (_candidates) on a batch of one: it
+        runs its Spark jobs here and returns a driver-local relation, so
+        collecting the result launches none.  Per query: an optional
+        prefix lookup (_prefix_table), the bucket-row shuffle and the
+        kernel's top-k, plus the phrase-df subplan when the tree has
         phrases, then the docmeta lookup (_with_meta); an empty or
         stopword-only query launches no job at all."""
         if site is not None:
@@ -820,12 +836,16 @@ class PackedQueryEngine:
                 query, k=k, synonyms=synonyms
             )
         ast = compile_query(query, synonyms=synonyms)
-        ast = self._rewrite_prefixes(ast)
         if ast is None:
             return self._empty()
         if static_mode or dynamic_mode:
             return self._parity_topk(query, ast, k, dynamic_mode)
-        return self._with_meta(self._topk(query, ast, k).collect())
+        cand = self._candidates([(query, ast)], k)
+        if cand is None:
+            return self._empty()
+        return self._with_meta(cand.orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(k).collect())
 
     def _parity_topk(self, query: str, ast: Expr, k: int,
                      dynamic: bool) -> DataFrame:
@@ -840,6 +860,10 @@ class PackedQueryEngine:
         from search_engine_spark.plans import packed_exec
         from search_engine_spark.plans import static_score as S
 
+        items = self._expand_prefixes([(query, ast)])
+        if not items:
+            return self._empty()
+        ast = items[0][1]
         meta = self.docmeta.withColumn(
             "_static",
             S.static_score_col(S.is_utility_query(ordered_stems(ast))))
@@ -847,8 +871,7 @@ class PackedQueryEngine:
             ranked = packed_exec.dynamic_scores(self, ast, meta)
         else:
             ranked = (
-                packed_exec.batch_general_candidates(self, [(query, ast)],
-                                                     k=None)
+                self._candidates(items, None)
                 .join(meta, "doc_id")
                 .filter(F.col("_static") >= S.STATIC_THRESHOLD)
                 .select(
@@ -862,80 +885,3 @@ class PackedQueryEngine:
                              F.col("doc_id").asc()).limit(k).collect()
         return _local_frame(self.spark, _RESULT_FIELDS,
                             {c: [r[c] for r in top] for c in _RESULT_FIELDS})
-
-    def _topk(self, query: str, ast: Expr, k: int) -> DataFrame:
-        """The top-k plan — rows with doc_id and score — of one compiled
-        query: flat trees on the block-max WAND kernels, every other tree
-        as a batch of one on the general kernel."""
-        r = route(ast)
-        if r is None:
-            from search_engine_spark.plans import packed_exec
-
-            cand = packed_exec.batch_general_candidates(self, [(query, ast)], k)
-        else:
-            cand = self._wand_candidates(*r, k)
-        return cand.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(k)
-
-    def _wand_candidates(self, mode: str, stems_all: list[str],
-                         k: int) -> DataFrame:
-        """(doc_id, score) rows of every bucket's exact top-k for a flat
-        AND/OR query, by the block-max WAND kernels."""
-        # duplicate stems in the query ('apple | apples' → appl twice) score
-        # multiply, matching the general kernel's per-leaf evaluation —
-        # fold the multiplicity into the per-key idf scale.
-        from collections import Counter
-
-        mult = Counter(stems_all)
-        stems = list(dict.fromkeys(stems_all))
-        keys = [key for s in stems for key in (s, "@" + s)]
-
-        # no driver-side df collect: every packed row carries its term's
-        # GLOBAL df, so idf is computed inside the kernel.  A bucket where
-        # an AND-stem is absent emits nothing, which is exactly the
-        # conjunctive semantics (all of a doc's postings share its bucket).
-        n_docs = self.n_docs
-        avgdl, k1, b = self.avgdl, self.k1, self.b
-        kk = k
-        mode_ = mode
-        stems_ = stems
-        mult_ = dict(mult)
-
-        def kernel(batches):
-            for pdf in batches:
-                all_ids, all_scores = [], []
-                for brow in pdf.itertuples(index=False):
-                    start = int(brow.start)
-                    dls = np.asarray(brow.dls, dtype=np.float64)
-                    decoded = _decode_rows(brow.trows, False,
-                                           _bucket_tombs(brow),
-                                           _bucket_allow(brow))
-                    by_key: dict[str, dict] = {}
-                    for r in brow.trows:
-                        e = decoded[r["term"]]
-                        by_key[r["term"]] = {
-                            "ids": e["ids"],
-                            "tfs": e["tfs"],
-                            "block_last": np.asarray(r["block_last"], dtype=np.int64),
-                            "block_maxw": np.asarray(r["block_maxw"], dtype=np.float64),
-                            "idf": bm25.idf(e["df"], n_docs)
-                            * mult_[r["term"].removeprefix("@")],
-                        }
-                    if mode_ == "and":
-                        ids, scores = topk_and(stems_, by_key, dls, start,
-                                               kk, avgdl, k1, b)
-                    else:
-                        terms = [by_key[key] for key in sorted(by_key)]
-                        ids, scores = topk_or(terms, dls, start, kk, avgdl, k1, b)
-                    all_ids.append(ids)
-                    all_scores.append(scores)
-                yield pd.DataFrame({
-                    "doc_id": np.concatenate(all_ids) if all_ids
-                    else np.empty(0, np.int64),
-                    "score": np.concatenate(all_scores) if all_scores
-                    else np.empty(0),
-                })
-
-        rows = self._in_scope(self._bucket_rows(keys, _WAND_COLS))
-        return rows.mapInPandas(kernel, schema="doc_id long, score double")

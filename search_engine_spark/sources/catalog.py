@@ -142,18 +142,23 @@ class IndexCatalog:
         w.parquet(str(self.path(table)))
 
     def drop(self, table: str) -> None:
-        man = self.read_manifest(table)
-        if man is not None:
-            # a manifest table owns its generation dirs and patch tables:
-            # unlink the manifest FIRST (atomic — readers immediately stop
-            # resolving through it), then reclaim the files it referenced
-            self.drop_manifest(table)
-            for g in man["generations"]:
-                if g["dir"] != table:
-                    shutil.rmtree(self.path(g["dir"]), ignore_errors=True)
-                for t in g.get("patches") or []:
-                    shutil.rmtree(self.path(t), ignore_errors=True)
+        self._retire_manifest(table)
         shutil.rmtree(self.path(table), ignore_errors=True)
+
+    def _retire_manifest(self, table: str) -> None:
+        """A manifest table owns its generation dirs and patch tables:
+        unlink the manifest FIRST (atomic — readers immediately stop
+        resolving through it), then reclaim the files it referenced
+        besides ``table``'s own directory."""
+        man = self.read_manifest(table)
+        if man is None:
+            return
+        self.drop_manifest(table)
+        for g in man["generations"]:
+            if g["dir"] != table:
+                shutil.rmtree(self.path(g["dir"]), ignore_errors=True)
+            for t in g.get("patches") or []:
+                shutil.rmtree(self.path(t), ignore_errors=True)
 
     def swap(self, tmp_table: str, table: str) -> None:
         """Replace ``table`` with the fully-written ``tmp_table`` (the
@@ -168,9 +173,14 @@ class IndexCatalog:
         — every intermediate state keeps a recoverable copy on disk (a
         crash after step 1 leaves ``<table>__old`` + the complete
         ``tmp_table``; after step 2 the live table is already the new
-        generation).  The rename into place is the commit point."""
+        generation).  The rename into place is the commit point.
+
+        The swap replaces the whole table, so a manifest on ``table``
+        retires first, its generations and patch tables reclaimed as by
+        ``drop``."""
         if not self.exists(tmp_table):
             raise ValueError(f"swap source {tmp_table} incomplete (no _SUCCESS)")
+        self._retire_manifest(table)
         old = self.path(f"{table}__old")
         shutil.rmtree(old, ignore_errors=True)   # leftover from a prior crash
         if self.path(table).exists():

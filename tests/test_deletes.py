@@ -190,3 +190,30 @@ def test_compact_deletes_is_bit_identical_to_scratch(deleted_wh, spark):
     assert not any(
         r["url"] in set(victims) for r in cat.read("docmeta").collect()
     )
+
+
+def test_no_label_table_outlives_compaction_or_rebuild(spark, tmp_path):
+    """An append's per-label tables (its docs stages, tiered tail and df
+    patch) are reclaimed once they are spent: none is left after a tiered
+    append, a delete and a compaction, and a forced rebuild followed by an
+    append under the same label indexes the new pages, not leftovers."""
+    wh = str(tmp_path / "wh")
+    layout = dict(num_shards=4, salt_buckets=2, merge_factor=2)
+    pages = _batch(30)
+    run_build(spark, _mk_pages(spark, pages[:20]), wh, **layout)
+    cat = run_append(spark, _mk_pages(spark, pages[20:]), wh,
+                     compaction="tiered")
+    assert cat.read_manifest("postings_packed") is not None  # a tail exists
+    run_delete(spark, _urls_df(spark, [pages[0][0]]), wh)
+    compact_deletes(spark, wh)
+    assert sorted(p.name for p in cat.warehouse.iterdir()
+                  if "delta1" in p.name) == []
+
+    run_build(spark, _mk_pages(spark, pages[:10]), wh, force=True, **layout)
+    new = [(f"http://new{i}.com/p", "yyyword common engine")
+           for i in range(5)]
+    run_append(spark, _mk_pages(spark, new), wh, compaction="tiered")
+    eng = PackedQueryEngine.from_catalog(cat)
+    assert eng.n_docs == 15
+    assert sorted(r["url"] for r in eng.search("yyyword", k=10).collect()) \
+        == [u for u, _ in new]

@@ -10,12 +10,13 @@ from tests.helpers import _explain
 
 
 def _topk_plan(eng, query: str, synonyms: bool = False) -> str:
-    """The plan search() collects for ``query`` (its result is a local
-    relation, so the Spark plan is read from the top-k stage)."""
+    """The candidate plan search() ranks for ``query`` — the query planner
+    on a batch of one (its result is a local relation, so the Spark plan
+    is read from the planner)."""
     from search_engine_spark.plans.query_ast import compile_query
 
-    return _explain(
-        eng._topk(query, compile_query(query, synonyms=synonyms), 10))
+    return _explain(eng._candidates(
+        [(query, compile_query(query, synonyms=synonyms))], 10))
 
 
 def test_packed_scan_prunes_shard_partitions(catalog, packed_engine):

@@ -66,9 +66,10 @@ def test_prefix_scan_pushes_the_term_range(pfx_engine):
         assert op not in plan, (op, plan)
 
 
-def test_prefix_expansion_cap_picks_highest_df(pfx_engine):
+def test_prefix_expansion_cap_picks_highest_df(pfx_engine, monkeypatch):
     full = pfx_engine._prefix_table(["word"])["word"]
-    capped = pfx_engine._prefix_table(["word"], max_expansions=2)["word"]
+    monkeypatch.setattr(pfx_engine, "MAX_PREFIX_EXPANSIONS", 2)
+    capped = pfx_engine._prefix_table(["word"])["word"]
     assert len(capped) == 2
     # the cap keeps the expansion's head by global df: word0..word6 hit
     # ~2x the docs of word7..word10 (both i%7 and i%11 emit them)

@@ -86,6 +86,8 @@ def test_errors(server):
     base, _ = server
     assert _get(f"{base}/search")[0] == 400
     assert _get(f"{base}/search?q=x&mode=wat")[0] == 400
+    assert _get(f"{base}/search?q=x&k=abc") == (
+        400, {"error": "k must be an integer"})
     assert _get(f"{base}/nope")[0] == 404
 
 

@@ -125,24 +125,48 @@ def test_search_batch_matches_per_query(packed_engine):
         assert by_q.get(q, []) == want, q
 
 
+def _batch_rows(engine, queries, **kw) -> dict[str, list]:
+    """search_batch's rows per query, in rank order."""
+    batch = engine.search_batch(queries, k=10, **kw).collect()
+    by_q: dict[str, list] = {}
+    for r in sorted(batch, key=lambda r: (r["query"], r["rank"])):
+        by_q.setdefault(r["query"], []).append((r["doc_id"], round(r["score"], 9)))
+    return by_q
+
+
 def test_search_batch_is_total_over_mixed_queries(packed_engine):
-    """A batch mixing flat, phrase, NOT and stopword-only queries must
-    return per-query results equal to search() — nothing silently dropped."""
+    """A batch mixing flat, phrase, NOT, NEAR, stopword-only and repeated
+    queries must return per-query results equal to search() — nothing
+    silently dropped, nothing ranked twice; so must a synonym batch."""
     mixed = [
         "search engine",               # flat AND
         "crawler | parser",            # flat OR
         '"search engine"',             # phrase → general kernel
         "search - engine",             # NOT → general kernel
+        '"engine search"~8',           # NEAR → general kernel
         "the of and",                  # stopword-only → defined-empty
+        "search engine",               # repeated → ranked once
     ]
-    batch = packed_engine.search_batch(mixed, k=10).collect()
-    by_q: dict[str, list] = {}
-    for r in sorted(batch, key=lambda r: (r["query"], r["rank"])):
-        by_q.setdefault(r["query"], []).append((r["doc_id"], round(r["score"], 9)))
-    for q in mixed[:4]:
+    by_q = _batch_rows(packed_engine, mixed)
+    for q in mixed[:5]:
         want = _rows(packed_engine.search(q, k=10))
         assert by_q.get(q, []) == want, q
+    assert by_q['"engine search"~8']
     assert "the of and" not in by_q  # defined-empty, not an error
+    synonym = ["connection", "search connection", "crawler | connection"]
+    by_q = _batch_rows(packed_engine, synonym, synonyms=True)
+    for q in synonym:
+        want = _rows(packed_engine.search(q, k=10, synonyms=True))
+        assert by_q.get(q, []) == want and want, q
+
+
+@pytest.mark.parametrize("query", ["search engine", "crawler | parser"])
+def test_search_batch_of_one_flat_query_equals_search(packed_engine, query):
+    """A batch holding one flat query runs the planner's block-max WAND
+    branch, as search() does: same rows, same order, same scores."""
+    want = _rows(packed_engine.search(query, k=10))
+    assert _batch_rows(packed_engine, [query]) == {query: want}
+    assert want
 
 
 def test_packed_engine_fallback_paths(oracle, packed_engine):
