@@ -24,8 +24,11 @@ startup.
   GET /logo.svg → the logo (MagicPath parity, RootPlugin.h:41-43)
   GET /healthz  → {"status": "ok", "n_docs": N}
 
-An engine error answers 500 with the fixed body {"error": "internal
-error"}; the exception is logged on the server ("serve" logger).
+Input limits: a ``q`` longer than MAX_QUERY_CHARS answers 400 {"error":
+"query too long"}, and one whose compiled tree (synonyms expanded) has
+more than MAX_QUERY_LEAVES leaves answers 400 {"error": "query too
+complex"}.  An engine error answers 500 with the fixed body {"error":
+"internal error"}; the exception is logged on the server ("serve" logger).
 """
 
 from __future__ import annotations
@@ -42,6 +45,13 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 log = logging.getLogger("serve")
+
+# Input limits, far above every benchmark and reference query (those have
+# at most 39 characters, and a synonym-expanded word compiles to at most
+# 65 leaves).  The character limit also bounds a tree's depth, so every
+# accepted query compiles and ships to the kernels without deep recursion.
+MAX_QUERY_CHARS = 256
+MAX_QUERY_LEAVES = 256
 
 # Page styling shared by the home and results pages, condensed from the
 # reference's inline CSS (index.html / RootPlugin.h:126-195): centered
@@ -117,6 +127,20 @@ def render_results_html(results: list[dict]) -> str:
     )
 
 
+def query_leaves(ast) -> int:
+    """Leaves (words, phrases, prefixes) of a compiled query tree."""
+    from search_engine_spark.plans.query_ast import And, Not, Or, OrSyn
+
+    if isinstance(ast, (And, Or)):
+        return query_leaves(ast.left) + query_leaves(ast.right)
+    if isinstance(ast, Not):
+        return query_leaves(ast.child)
+    if isinstance(ast, OrSyn):
+        return query_leaves(ast.original) + sum(
+            query_leaves(s) for s in ast.synonyms)
+    return 0 if ast is None else 1
+
+
 def make_handler(engine, n_docs: int):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, fmt, *args):  # quiet
@@ -163,13 +187,22 @@ def make_handler(engine, n_docs: int):
             if not query:
                 self._send(400, {"error": "missing q"})
                 return
+            if len(query) > MAX_QUERY_CHARS:
+                self._send(400, {"error": "query too long"})
+                return
             try:
                 k = max(1, min(100, int(qs.get("k", ["10"])[0])))
             except ValueError:
                 self._send(400, {"error": "k must be an integer"})
                 return
             try:
+                from search_engine_spark.plans.query_ast import compile_query
+
                 synonyms = qs.get("synonyms", ["0"])[0] in ("1", "true")
+                if query_leaves(compile_query(query, synonyms=synonyms)) \
+                        > MAX_QUERY_LEAVES:
+                    self._send(400, {"error": "query too complex"})
+                    return
                 mode = qs.get("mode", ["bm25"])[0]
                 kwargs = {}
                 if mode == "static":

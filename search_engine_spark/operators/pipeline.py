@@ -416,8 +416,9 @@ def apply_delta(
         # only touch packed buckets >= m0; everything below stays ON DISK
         # untouched — this append writes only the re-merged tail and a
         # df-patch table, then commits a new generation to the manifest
-        # (metadata-only; the reader applies the df patch and the
-        # lossless bound scaling, see sources/catalog.py)
+        # (metadata-only; the reader applies the lossless bound scaling,
+        # and IndexCatalog.query_view folds the df patch into the
+        # engine's per-generation df delta, see sources/catalog.py)
         first_delta_id = int(
             delta_meta.agg(F.min("doc_id")).collect()[0][0])
         m0 = (first_delta_id // bucket_width) // merge_factor
@@ -533,8 +534,10 @@ def run_delete(
       (plans/wand.py ``_decode_rows``, plans/packed_exec.py);
     * ``df_patch_deletes`` (term, df_sub, label) — per-term df
       decrements, counted from the decoded partial rows of the victims'
-      doc buckets only; the packed reader subtracts them so idf matches a
-      survivor-only corpus exactly;
+      doc buckets only; ``IndexCatalog.query_view`` folds them into the
+      engine's df delta when it opens, and the kernels subtract them
+      from the packed rows' df, so idf matches a survivor-only corpus
+      exactly;
     * ``index_stats`` recomputed over survivors (n_docs, avgdl), written
       aside and snapshot-swapped.
 

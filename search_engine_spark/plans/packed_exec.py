@@ -52,7 +52,7 @@ from search_engine_spark.plans.query_ast import (
     And, Expr, Not, Or, OrSyn, Phrase, Word,
 )
 from search_engine_spark.plans.wand import (
-    _bucket_allow, _bucket_tombs, _decode_rows, _weights,
+    _bucket_allow, _bucket_df_delta, _bucket_tombs, _decode_rows, _weights,
 )
 
 
@@ -392,7 +392,8 @@ class _BucketEval:
 # ---------------------------------------------------------------------------
 
 def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
-                             k: int | None, rows: DataFrame) -> DataFrame:
+                             k: int | None, rows: DataFrame,
+                             df_delta=None) -> DataFrame:
     """(query, doc_id, score) candidate rows for MANY arbitrary ASTs —
     phrases, NOT, synonyms, mixed — in ONE kernel pass over the packed
     index, the general-AST twin of the planner's flat kernel (plans/wand.py
@@ -418,9 +419,10 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
     ``engine`` is a plans.wand.PackedQueryEngine; ``rows`` are the bucket
     rows (_bucket_rows) its planner reads for the whole batch — they hold
     every key of ``items``, with ``pos`` if a tree has a phrase and every
-    bucket if a tree matches zero-posting docs.  Both the main kernel and
-    the phrase-df subplan read the one shuffle (the second read reuses the
-    exchange).
+    bucket if a tree matches zero-posting docs; ``df_delta`` holds the
+    engine's df corrections of those keys (PackedQueryEngine._delta_of).
+    Both the main kernel and the phrase-df subplan read the one shuffle
+    (the second read reuses the exchange).
 
     Rows still need the caller's per-query global rank window — this
     returns candidates, exactly like the flat kernel."""
@@ -452,7 +454,9 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                 dls = np.asarray(brow.dls, dtype=np.float64)
                 tombs = _bucket_tombs(brow)
                 allow = _bucket_allow(brow)
-                decoded = _decode_rows(brow.trows, need_pos, tombs, allow)
+                decoded = _decode_rows(
+                    brow.trows, need_pos, tombs, allow,
+                    df_delta=_bucket_df_delta(brow, df_delta))
                 ev = _BucketEval(decoded, start, dls.size, dls, n_docs,
                                  avgdl, tombs, allow)
                 for qi in range(nq):
@@ -464,14 +468,15 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                     ids, wmat, pmat = ev.keval(roots[qi], nw_l[qi], np_l[qi])
                     if ids.size == 0:
                         continue
-                    if np_l[qi] == 0 and kk is not None and ids.size > kk:
-                        # phrase-free ⇒ one word slot whose value IS the
-                        # score: bucket-exact top-k suffices
-                        order = np.lexsort((ids, -wmat[:, 0]))[:kk]
-                        order.sort()
-                        ids, wmat, pmat = ids[order], wmat[order], pmat[order]
-                    gm = gmaps[qi]
                     ws = wmat.sum(axis=1)
+                    if np_l[qi] == 0 and kk is not None and ids.size > kk:
+                        # no phrase slot ⇒ the summed word slots ARE the
+                        # score (a NOT over a phrase has no slot at all):
+                        # bucket-exact top-k suffices
+                        order = np.lexsort((ids, -ws))[:kk]
+                        order.sort()
+                        ids, ws, pmat = ids[order], ws[order], pmat[order]
+                    gm = gmaps[qi]
                     o_qi.extend([qi] * ids.size)
                     o_id.extend(ids.tolist())
                     o_dl.extend(dls[ids - start].astype(np.int64).tolist())
@@ -518,7 +523,8 @@ def batch_general_candidates(engine, items: list[tuple[str, "Expr"]],
                     tombs = _bucket_tombs(brow)
                     decoded = _decode_rows(
                         [r for r in brow.trows if r["term"] in pkeys],
-                        True, tombs)
+                        True, tombs,
+                        df_delta=_bucket_df_delta(brow, df_delta))
                     ev = _BucketEval(decoded, int(brow.start), dls.size, dls,
                                      n_docs, avgdl, tombs)
                     out.append([int(ev.phrase_match(stems, deco, w)[0].size)
@@ -578,8 +584,10 @@ def dynamic_scores(engine, ast: Expr, meta: DataFrame) -> DataFrame:
     from search_engine_spark.plans import dynamic_score as D
 
     groups = D.term_groups_from_ast(ast)
+    keys = sorted(groups.all_keys())
+    df_delta = engine._delta_of(keys)
     rows = engine._bucket_rows(
-        sorted(groups.all_keys()),
+        keys,
         ["term", "df", "doc_ids", "tfs", "pos", "flags"],
         outer=zero_match(ast),
     )
@@ -591,8 +599,9 @@ def dynamic_scores(engine, ast: Expr, meta: DataFrame) -> DataFrame:
             for brow in pdf.itertuples(index=False):
                 dls = np.asarray(brow.dls, dtype=np.float64)
                 tombs = _bucket_tombs(brow)
-                decoded = _decode_rows(brow.trows, True, tombs,
-                                       need_flags=True)
+                decoded = _decode_rows(
+                    brow.trows, True, tombs, need_flags=True,
+                    df_delta=_bucket_df_delta(brow, df_delta))
                 ev = _BucketEval(decoded, int(brow.start), dls.size, dls,
                                  n_docs, avgdl, tombs)
                 cand = ev.member(ast)

@@ -67,6 +67,7 @@ from search_engine_spark.plans.query_ast import (
     And, Expr, Not, Or, OrSyn, Prefix, Word, collect_keys, compile_query,
     ordered_stems,
 )
+from search_engine_spark.sources.catalog import bucketed
 
 
 def _collect_prefixes(ast: Expr | None, acc: set[str]) -> None:
@@ -147,20 +148,29 @@ def _bucket_allow(brow) -> np.ndarray | None:
     return np.asarray(a, dtype=np.int64)
 
 
+def _bucket_df_delta(brow, delta) -> dict[str, int] | None:
+    """The signed df corrections (sources/catalog.DfDelta) of the bucket
+    row's generation, or None when the engine's stored df is current."""
+    return None if delta is None else delta.at(int(brow.bucket))
+
+
 def _decode_rows(trows, need_pos: bool, tombs: np.ndarray | None = None,
                  allow: np.ndarray | None = None,
-                 need_flags: bool = False) -> dict[str, dict]:
+                 need_flags: bool = False,
+                 df_delta: dict[str, int] | None = None) -> dict[str, dict]:
     """Decode one bucket's packed rows → {term: {ids, tfs, df[, flatpos,
-    offs][, flatflags]}}, with tombstoned (and, when site-scoped,
-    disallowed) docs masked out of every posting — for scoring, membership
-    AND positions and flags (the run mask drops each masked doc's
-    occurrence run from the flat streams).  Every kernel decodes through
-    here, so this is the one masking rule.  Masking decoded arrays is
-    exactly 'the doc was never indexed' for scoring: block_last boundaries
-    are doc-id VALUES consumed via searchsorted (still aligned after
-    removal) and block_maxw stays a valid upper bound when docs are
-    removed — WAND pruning remains lossless, merely a little looser until
-    the next compaction physically drops the postings.  Filtering INSIDE
+    offs][, flatflags]}}, each df corrected to the current corpus by the
+    bucket's ``df_delta`` (_bucket_df_delta), with tombstoned (and, when
+    site-scoped, disallowed) docs masked out of every posting — for
+    scoring, membership AND positions and flags (the run mask drops each
+    masked doc's occurrence run from the flat streams).  Every kernel
+    decodes through here, so this is the one masking and df rule.
+    Masking decoded arrays is exactly 'the doc was never indexed' for
+    scoring: block_last boundaries are doc-id VALUES consumed via
+    searchsorted (still aligned after removal) and block_maxw stays a
+    valid upper bound when docs are removed — WAND pruning remains
+    lossless, merely a little looser until the next compaction
+    physically drops the postings.  Filtering INSIDE
     the kernel, before the per-bucket top-k cut, is what keeps a filtered
     top-k exact (a post-cut filter could starve a bucket whose winners
     were filtered).  ``need_flags`` needs ``need_pos`` (the flag runs
@@ -185,7 +195,10 @@ def _decode_rows(trows, need_pos: bool, tombs: np.ndarray | None = None,
                 run = np.repeat(keep, tfs)
                 occ = {name: a[run] for name, a in occ.items()}
                 ids, tfs = ids[keep], tfs[keep]
-        e = {"ids": ids, "tfs": tfs, "df": int(r["df"]), **occ}
+        df = int(r["df"])
+        if df_delta:
+            df += df_delta.get(r["term"], 0)
+        e = {"ids": ids, "tfs": tfs, "df": df, **occ}
         if need_pos:
             offs = np.zeros(tfs.size, dtype=np.int64)
             np.cumsum(tfs[:-1], out=offs[1:])
@@ -418,7 +431,7 @@ def _successor(prefix: str) -> str | None:
 
 
 def _flat_kernel(plans: list[tuple[str, str, list[str]]], k: int,
-                 n_docs: int, avgdl: float):
+                 n_docs: int, avgdl: float, df_delta=None):
     """The mapInPandas kernel of the flat queries ``plans`` — (query,
     'and'|'or', stems) — over bucket rows: per bucket it decodes the
     plans' keys once and emits every query's bucket-exact top-k as
@@ -430,7 +443,8 @@ def _flat_kernel(plans: list[tuple[str, str, list[str]]], k: int,
     the whole batch (topk_or_dense/topk_and_dense).  Their scores are
     bit-identical, so the batch's shape picks the kernel.  No
     driver-side df collect: every packed row carries its term's GLOBAL
-    df, so idf is computed here, and a bucket where an AND-stem is absent
+    df (plus ``df_delta``, the engine's corrections of the plans' keys),
+    so idf is computed here, and a bucket where an AND-stem is absent
     emits nothing — exactly the conjunctive semantics (all of a doc's
     postings share its bucket)."""
     wand = len(plans) == 1
@@ -450,8 +464,9 @@ def _flat_kernel(plans: list[tuple[str, str, list[str]]], k: int,
                 dls = np.asarray(brow.dls, dtype=np.float64)
                 # keys only the general kernel reads stay packed
                 trows = [r for r in brow.trows if r["term"] in keys]
-                decoded = _decode_rows(trows, False, _bucket_tombs(brow),
-                                       _bucket_allow(brow))
+                decoded = _decode_rows(
+                    trows, False, _bucket_tombs(brow), _bucket_allow(brow),
+                    df_delta=_bucket_df_delta(brow, df_delta))
                 for r in trows:
                     e = decoded[r["term"]]
                     e["base_idf"] = bm25.idf(e["df"], n_docs)
@@ -499,7 +514,8 @@ class PackedQueryEngine:
 
     def __init__(self, spark: SparkSession, packed: DataFrame, doclens: DataFrame,
                  docmeta: DataFrame, n_docs: int, avgdl: float, num_shards: int,
-                 mwidth: int, tombstones: DataFrame | None = None):
+                 mwidth: int, tombstones: DataFrame | None = None,
+                 df_delta=None):
         self.spark = spark
         self.packed = packed
         self.doclens = doclens
@@ -513,68 +529,48 @@ class PackedQueryEngine:
         # and on a site-scoped clone (_site_scoped) the docs the site allows
         self.tombstones = tombstones
         self.allow: DataFrame | None = None
+        # the signed df corrections of appends and deletes
+        # (sources/catalog.DfDelta, None on a base index): each query's
+        # keys' share rides to the kernels (_delta_of), which add it to
+        # the df of the packed rows they decode
+        self.df_delta = df_delta
 
     @classmethod
     def from_catalog(cls, cat) -> "PackedQueryEngine":
+        """An engine over the warehouse's query view (catalog.query_view):
+        the packed generations, their df corrections and the tombstones
+        are resolved here, once, so no query plan joins a patch table.
+        index_stats already holds the live corpus's n_docs and avgdl."""
         stats = cat.read("index_stats").collect()[0]
-        packed = cat.read("postings_packed")
-        # the "bucket_width" prop IS the merged width build_doclens
-        # bucketed by (pack_and_merge persists it)
-        mwidth = int(cat.get_prop("bucket_width"))
-        tombstones = None
-        if cat.exists("tombstones"):
-            # delete support (operators/pipeline.run_delete): postings of
-            # tombstoned docs are masked inside the kernels, df is patched
-            # down per term, and index_stats was already recomputed over
-            # survivors at delete time.  The patch is delta-proportional
-            # between compactions, hence broadcastable.
-            if cat.exists("df_patch_deletes"):
-                patch = (
-                    cat.read("df_patch_deletes")
-                    .groupBy("term")
-                    .agg(F.sum("df_sub").alias("_dfsub"))
-                )
-                packed = (
-                    packed.join(F.broadcast(patch), "term", "left")
-                    .withColumn(
-                        "df",
-                        (F.col("df")
-                         - F.coalesce(F.col("_dfsub"), F.lit(0)))
-                        .cast("long"),
-                    )
-                    .drop("_dfsub")
-                )
-            tombstones = cls._bucketed(cat.read("tombstones"), mwidth,
-                                       "tombs")
+        view = cat.query_view()
         return cls(
             cat.spark,
-            packed,
+            view.packed,
             cat.read("doclens"),
             cat.read("docmeta"),
             stats["n_docs"],
             stats["avgdl"],
             num_shards=int(cat.get_prop("num_shards", 32)),
-            mwidth=mwidth,
-            tombstones=tombstones,
+            # the "bucket_width" prop IS the merged width build_doclens
+            # bucketed by (pack_and_merge persists it)
+            mwidth=int(cat.get_prop("bucket_width")),
+            tombstones=view.tombstones,
+            df_delta=view.df_delta,
         )
 
-    @staticmethod
-    def _bucketed(docs: DataFrame, mwidth: int, name: str) -> DataFrame:
-        """(bucket, ``name`` = doc_id) rows of ``docs`` on the merged bucket
-        grid."""
-        return docs.select(
-            (F.col("doc_id") / F.lit(mwidth)).cast("int").alias("bucket"),
-            F.col("doc_id").alias(name),
-        )
+    def _delta_of(self, keys):
+        """The df corrections of ``keys`` the kernels apply, or None."""
+        return (self.df_delta.restrict(keys)
+                if self.df_delta is not None else None)
 
     def _empty(self) -> DataFrame:
         return _local_frame(self.spark, _RESULT_FIELDS)
 
     def _prefix_rows(self, prefixes: list[str]) -> DataFrame | None:
-        """The (term, df) dictionary rows inside the prefixes' term ranges
-        ``p <= term < succ(p)`` — a filter the packed parquet scan pushes
-        down, so term-sorted row groups skip on the term column's min/max
-        (the Spark analogue of the reference dictionary's ordered-scan
+        """The (term, bucket, df) dictionary rows inside the prefixes' term
+        ranges ``p <= term < succ(p)`` — a filter the packed parquet scan
+        pushes down, so term-sorted row groups skip on the term column's
+        min/max (the Spark analogue of the reference dictionary's ordered-scan
         range lookup, SURVEY §2 A4).  One row per (term, bucket); None when
         no prefix can match (title '@' keys never match a word prefix)."""
         ranges = []
@@ -588,23 +584,28 @@ class PackedQueryEngine:
             return None
         return self.packed.filter(
             functools.reduce(operator.or_, ranges)
-        ).select("term", "df")
+        ).select("term", "bucket", "df")
 
     def _prefix_table(self, prefixes: list[str]) -> dict[str, list[str]]:
         """ONE range-pruned Spark job (_prefix_rows): for every prefix, the
         top-MAX_PREFIX_EXPANSIONS matching dictionary terms by global df
         (term-asc tiebreak) — Lucene's MultiTermQuery rewrite cap, so a
         1-character prefix can never explode into a vocabulary-sized OR.
-        The cut happens on the driver over the collected range rows: no
-        join, window or shuffle."""
+        The cut happens on the driver over the collected range rows, each
+        df corrected by the engine's df_delta first: no join, window or
+        shuffle.  A term whose every doc is deleted (df 0) is not in the
+        dictionary."""
         cap = self.MAX_PREFIX_EXPANSIONS
         scan = self._prefix_rows(prefixes)
         dfs: dict[str, dict[str, int]] = {}
         for r in scan.collect() if scan is not None else []:
+            df = r["df"] + (_bucket_df_delta(r, self.df_delta) or {}).get(
+                r["term"], 0)
+            if df <= 0:
+                continue
             for p in prefixes:
                 if r["term"].startswith(p):
-                    seen = dfs.setdefault(p, {})
-                    seen[r["term"]] = max(seen.get(r["term"], 0), r["df"])
+                    dfs.setdefault(p, {})[r["term"]] = df
         return {
             p: [t for t, _ in sorted(seen.items(),
                                      key=lambda kv: (-kv[1], kv[0]))[:cap]]
@@ -721,9 +722,11 @@ class PackedQueryEngine:
             return None
         flat_keys = {key for _, _, stems in flat for s in stems
                      for key in (s, "@" + s)}
+        keys = sorted(flat_keys.union(*(collect_keys(a) for _, a in general)))
+        df_delta = self._delta_of(keys)
         need_pos = any(packed_exec.has_phrase(a) for _, a in general)
         rows = self._bucket_rows(
-            sorted(flat_keys.union(*(collect_keys(a) for _, a in general))),
+            keys,
             _SCORE_COLS + (_BLOCK_COLS if len(flat) == 1 else [])
             + (["pos"] if need_pos else []),
             outer=any(packed_exec.zero_match(a) for _, a in general),
@@ -731,12 +734,13 @@ class PackedQueryEngine:
         parts: list[DataFrame] = []
         if flat:
             parts.append(self._in_scope(rows).mapInPandas(
-                _flat_kernel(flat, k, self.n_docs, self.avgdl),
+                _flat_kernel(flat, k, self.n_docs, self.avgdl, df_delta),
                 schema="query string, doc_id long, score double",
             ))
         if general:
             parts.append(
-                packed_exec.batch_general_candidates(self, general, k, rows))
+                packed_exec.batch_general_candidates(self, general, k, rows,
+                                                     df_delta))
         return functools.reduce(DataFrame.unionByName, parts)
 
     def search_batch(self, queries: list[str], k: int = 10,
@@ -809,7 +813,7 @@ class PackedQueryEngine:
         import copy
 
         clone = copy.copy(self)
-        clone.allow = self._bucketed(
+        clone.allow = bucketed(
             self.docmeta.filter(F.col("url").contains(site)), self.mwidth,
             "allow",
         )

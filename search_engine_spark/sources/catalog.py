@@ -12,14 +12,56 @@ interface, so swapping the backend for Iceberg is a one-module change.
 
 from __future__ import annotations
 
+import bisect
 import datetime as dt
 import json
 import os
 import shutil
 from functools import reduce
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+class DfDelta:
+    """The signed df corrections of the packed index: for a packed row of
+    generation ``g``, the current df is ``df + terms[g].get(term, 0)``
+    (every later append's ``df_add`` minus every delete's ``df_sub``).
+    Each generation owns a contiguous merged-bucket range, cut at the
+    manifest's ``bucket_hi`` points, so a row's bucket names its
+    generation (``at``).  Plain values: kernel closures ship it."""
+
+    def __init__(self, cuts: list[int], terms: list[dict[str, int]]):
+        self.cuts = cuts    # bucket_hi of every generation but the last
+        self.terms = terms  # per generation: term -> signed df delta
+
+    def at(self, bucket: int) -> dict[str, int]:
+        """The corrections of the generation holding ``bucket``."""
+        return self.terms[bisect.bisect_right(self.cuts, bucket)]
+
+    def restrict(self, keys) -> "DfDelta | None":
+        """The corrections of ``keys`` only, or None when none applies."""
+        terms = [{t: g[t] for t in keys if t in g} for g in self.terms]
+        return DfDelta(self.cuts, terms) if any(terms) else None
+
+
+class QueryView(NamedTuple):
+    """The packed index as queries read it (IndexCatalog.query_view)."""
+
+    packed: DataFrame               # the live rows of every generation
+    df_delta: DfDelta | None        # None: stored df is current
+    tombstones: DataFrame | None    # (bucket, tombs) deleted doc ids
+
+
+def bucketed(docs: DataFrame, mwidth: int, name: str) -> DataFrame:
+    """(bucket, ``name`` = doc_id) rows of ``docs`` on the merged bucket
+    grid of width ``mwidth``."""
+    return docs.select(
+        (F.col("doc_id") / F.lit(mwidth)).cast("int").alias("bucket"),
+        F.col("doc_id").alias(name),
+    )
 
 
 class IndexCatalog:
@@ -64,11 +106,12 @@ class IndexCatalog:
     #              correction (w is monotone in avgdl with ratio at most
     #              avgdl_now/avgdl_gen), so WAND pruning stays lossless
     #   patches    df-delta tables (term → df_add) from appends AFTER this
-    #              generation; the reader adds them so stored df always
-    #              reflects the union corpus.  Patch tables are
+    #              generation.  query_view sums them, less the deletes'
+    #              df_patch_deletes, into the generation's signed df delta
+    #              (DfDelta) when an engine opens; the engine adds it to the
+    #              df of the rows each query decodes.  Patch tables are
     #              delta-vocab-sized (bounded by the append batch, not the
-    #              corpus vocabulary) and carry no broadcast hint — the
-    #              planner broadcasts them when their file-size stats say so.
+    #              corpus vocabulary), so pyarrow reads them, no Spark job.
 
     def manifest_path(self, table: str) -> Path:
         return self.warehouse / f"{table}.manifest.json"
@@ -91,8 +134,9 @@ class IndexCatalog:
         self.manifest_path(table).unlink(missing_ok=True)
 
     def _read_from_manifest(self, table: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
+        """The union of the manifest's generations: each one filtered to
+        its live buckets, its block-max headers bound-scaled.  Stored df
+        is left as written (query_view carries its corrections)."""
         man = self.read_manifest(table)
         gens = man["generations"]
         avgdl_now = float(gens[-1]["avgdl"])
@@ -107,24 +151,52 @@ class IndexCatalog:
                     "block_maxw",
                     F.transform("block_maxw", lambda x: x * F.lit(scale)),
                 )
-            patch_tables = g.get("patches") or []
-            if patch_tables:
-                patch = reduce(
-                    DataFrame.unionByName,
-                    [self.spark.read.parquet(str(self.path(t)))
-                     for t in patch_tables],
-                ).groupBy("term").agg(F.sum("df_add").alias("_df_add"))
-                df_g = (
-                    df_g.join(patch, "term", "left")
-                    .withColumn(
-                        "df",
-                        (F.col("df") + F.coalesce(F.col("_df_add"), F.lit(0)))
-                        .cast("long"),
-                    )
-                    .drop("_df_add")
-                )
             parts.append(df_g)
         return reduce(DataFrame.unionByName, parts)
+
+    def query_view(self) -> QueryView:
+        """The warehouse's packed index as queries read it, resolved when
+        an engine opens: the generations' union (``read``), one signed df
+        delta per generation, and the bucketed tombstones.
+
+        A row of generation g currently has df = stored df + Σ df_add of
+        g's ``patches`` − Σ df_sub of ``df_patch_deletes``: the only place
+        that arithmetic is done.  The patch tables are summed with pyarrow
+        on the driver — no Spark job — and a base warehouse (no manifest,
+        no deletes) reads nothing beyond the packed table."""
+        man = self.read_manifest("postings_packed")
+        gens = man["generations"] if man is not None else [{}]
+        sums: dict[str, dict[str, int]] = {}
+
+        def term_sums(table: str, col: str) -> dict[str, int]:
+            if table not in sums:
+                import pyarrow.parquet as pq
+
+                t = (pq.read_table(self.path(table), columns=["term", col])
+                     .group_by("term").aggregate([(col, "sum")]))
+                sums[table] = dict(zip(t.column("term").to_pylist(),
+                                       t.column(f"{col}_sum").to_pylist()))
+            return sums[table]
+
+        sub = (term_sums("df_patch_deletes", "df_sub")
+               if self.exists("df_patch_deletes") else {})
+        terms = []
+        for g in gens:
+            delta = {t: -v for t, v in sub.items()}
+            for p in g.get("patches") or []:
+                for t, v in term_sums(p, "df_add").items():
+                    delta[t] = delta.get(t, 0) + v
+            terms.append({t: v for t, v in delta.items() if v})
+        tombstones = None
+        if self.exists("tombstones"):
+            tombstones = bucketed(self.read("tombstones"),
+                                  int(self.get_prop("bucket_width")), "tombs")
+        return QueryView(
+            self.read("postings_packed"),
+            DfDelta([int(g["bucket_hi"]) for g in gens[:-1]], terms)
+            if any(terms) else None,
+            tombstones,
+        )
 
     def write(
         self,

@@ -13,7 +13,6 @@ densely and the bit-identity contract of ``run_append`` and the stream
 consolidator applies.  Per-step wall times are printed as one JSON line
 (``lifecycle_soak_steps``)."""
 
-import datetime as dt
 import json
 import math
 import time
@@ -22,19 +21,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from search_engine_spark import schemas
 from search_engine_spark.oracle.bm25_oracle import OracleIndex
 from search_engine_spark.sources.catalog import IndexCatalog
 from search_engine_spark.sources.queryset import QUERY_STRINGS
 
-from tests.helpers import _packed_fingerprint
+from tests.helpers import LAYOUT, _batch, _frame, _packed_fingerprint
 
-LAYOUT = {"num_shards": 8, "salt_buckets": 4, "merge_factor": 2}
 MAX_GENERATIONS = 4          # base + 3 tiered tails; the 4th append promotes
-POOL = ["search", "engine", "connection", "link", "joining", "index",
-        "crawler", "parser", "news", "signal", "apple", "union", "ranking",
-        "document", "query", "w0", "w1", "w2", "w3", "w4"]
-HEADS = ["search engine", "engine search", "crawler search", "news link"]
 # (query, synonyms, mode) — one per class the oracle answers
 ORACLE_QUERIES = [
     ("search", False, None),                # word
@@ -49,31 +42,8 @@ ORACLE_QUERIES = [
 # no step may leave behind
 CORE = {"docmeta", "index_stats", "doclens", "postings_partial",
         "postings_packed"}
-ASIDE = {"postings_next", "docmeta_next", "index_stats_next",
-         "postings_packed_next", "postings_partial_next"}
-
-
-def _doc(prefix: str, i: int) -> dict:
-    url = f"http://{prefix}{i:03d}.com/p"
-    words = [HEADS[i % len(HEADS)]] + [
-        POOL[(i * (j + 3) + j * j) % len(POOL)] for j in range(8 + i % 3)
-    ]
-    h = sum(url.encode())
-    html = (f"<html><head><title>alpha t{h % 5}</title></head>"
-            f"<body>{' '.join(words)}</body></html>")
-    return {"url": url,
-            "warc_ts": dt.datetime(2026, 1, 1) + dt.timedelta(seconds=h),
-            "html": html.encode(), "text": "", "lang": "en"}
-
-
-def _batch(prefix: str, n: int) -> list[dict]:
-    return [_doc(prefix, i) for i in range(n)]
-
-
-def _frame(spark, rows):
-    return spark.createDataFrame(
-        [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
-         for r in rows], schemas.PAGES)
+ASIDE = {"docmeta_next", "index_stats_next", "postings_packed_next",
+         "postings_partial_next"}
 
 
 def _tables(cat) -> set[str]:
@@ -133,7 +103,6 @@ def test_lifecycle_soak(spark, tmp_path):
     scratch = run_build(spark, _frame(spark, survivors),
                         str(tmp_path / "wh_scratch"), bucket_width=width,
                         **LAYOUT)
-    logical = "postings" in _tables(scratch)
 
     steps: dict[str, float] = {}
     live: list[dict] = []
@@ -151,9 +120,9 @@ def test_lifecycle_soak(spark, tmp_path):
         assert not [t for t in dirs
                     if (t.endswith("_stream") and t != "docs_stream")
                     or "_delta_" in t], (step, dirs)
-        # a lifecycle warehouse holds a logical postings table exactly
-        # when a from-scratch build writes one
-        assert ("postings" in tables) == logical, step
+        # no step writes a logical postings table: the packed partials
+        # are the one postings table
+        assert "postings" not in tables, step
         _check_oracle(cat, live, step)
 
     # 1. stream-ingest the base, consolidate (first call: full build)

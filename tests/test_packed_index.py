@@ -500,9 +500,12 @@ def test_three_tiered_appends_reuse_files_and_match_scratch(spark, tmp_path):
         num_shards=8, salt_buckets=4, merge_factor=2, bucket_width=width,
     )
     assert _search_sig(cat) == _search_sig(scratch)
-    # df seen through the manifest counts the union corpus everywhere
-    df_man = {(r["term"], r["bucket"]): r["df"]
-              for r in cat.read("postings_packed").collect()}
+    # df seen through the query view (stored df + the generation's df
+    # delta) counts the union corpus everywhere
+    view = cat.query_view()
+    df_man = {(r["term"], r["bucket"]):
+              r["df"] + view.df_delta.at(r["bucket"]).get(r["term"], 0)
+              for r in view.packed.collect()}
     df_scr = {(r["term"], r["bucket"]): r["df"]
               for r in scratch.read("postings_packed").collect()}
     assert df_man == df_scr

@@ -91,6 +91,31 @@ def test_errors(server):
     assert _get(f"{base}/nope")[0] == 404
 
 
+def test_query_too_long(server):
+    from jobs.serve import MAX_QUERY_CHARS
+
+    base, _ = server
+    q = "search" + " w" * (MAX_QUERY_CHARS // 2)
+    assert len(q) > MAX_QUERY_CHARS
+    assert _get(f"{base}/search?q={q.replace(' ', '+')}") == (
+        400, {"error": "query too long"})
+
+
+def test_query_too_complex(server):
+    """A short query whose synonym expansion exceeds the leaf limit."""
+    from jobs.serve import MAX_QUERY_CHARS, MAX_QUERY_LEAVES, query_leaves
+    from search_engine_spark.plans.query_ast import compile_query
+
+    base, _ = server
+    per_word = query_leaves(compile_query("lin", synonyms=True))
+    q = " ".join(["lin"] * (MAX_QUERY_LEAVES // per_word + 1))
+    assert len(q) <= MAX_QUERY_CHARS
+    url = f"{base}/search?q={q.replace(' ', '+')}"
+    assert _get(url + "&synonyms=1") == (400, {"error": "query too complex"})
+    # the same words without synonyms are a plain AND query
+    assert _get(url)[0] == 200
+
+
 def _get_raw(url: str, accept: str = "*/*") -> tuple[int, str, str]:
     req = urllib.request.Request(url, headers={"Accept": accept})
     with urllib.request.urlopen(req, timeout=120) as r:

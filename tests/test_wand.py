@@ -9,6 +9,8 @@ from search_engine_spark.plans import bm25, wand
 from search_engine_spark.plans.query_ast import compile_query
 from search_engine_spark.sources.queryset import QUERY_STRINGS
 
+from tests.helpers import JOB_BUDGETS, _jobs_for
+
 
 # ---------------------------------------------------------------------------
 # pure-kernel unit tests (no Spark)
@@ -179,18 +181,6 @@ def test_packed_engine_fallback_paths(oracle, packed_engine):
             [s for _, s in got], [s for _, s in want], rtol=1e-9)
 
 
-def _jobs_for(spark, group: str, fn) -> int:
-    """Run fn() under a job group and return how many Spark jobs it
-    submitted (statusTracker is the public API for this in local mode)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_search_batch_job_count_is_constant_in_queries(packed_engine):
     """The scale contract of batch retrieval: a mixed batch (flat +
     phrases + NOT + synonyms) must submit O(1) Spark jobs regardless of
@@ -222,21 +212,6 @@ def test_search_batch_job_count_is_constant_in_queries(packed_engine):
     # rank window), NOT O(|queries|): 40 mixed queries at ~3 jobs each
     # would be 100+
     assert small <= 20, small
-
-
-# Spark jobs one served query may launch, per query class: the bucket-row
-# shuffle and the kernel + top-k stage (two jobs under AQE) and the docmeta
-# lookup, plus the dictionary range scan for a prefix and the phrase-df
-# aggregate and its broadcast for a phrase.
-JOB_BUDGETS = [
-    ("search", {}, 3),                      # word
-    ("search engine", {}, 3),               # AND
-    ("crawler | parser", {}, 3),            # OR
-    ("search - engine", {}, 3),             # NOT
-    ("connection", {"synonyms": True}, 3),  # synonym
-    ("sear*", {}, 4),                       # prefix
-    ('"index the documents"', {}, 5),       # phrase
-]
 
 
 @pytest.mark.parametrize("query,kw,budget", JOB_BUDGETS)
